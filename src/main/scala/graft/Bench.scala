@@ -1,63 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE: coalesce shuffle partitions toward the advisory size
-      // instead of maximizing parallelism — avoids per-task scheduling
-      // overhead dominating small-SF runs while staying correct at
-      // scale (Spark performance-tuning guidance)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm-up: JIT/codegen paths and parquet footers, so per-query
-    // numbers reflect steady state rather than first-query startup.
-    // The full catalog runs once at the smallest SF: generated codegen
-    // sources are SF-independent, so the compiled-class cache carries
-    // over to the measured run.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    graft.sources.Tables.all.foreach { t =>
-      try graft.sources.Tables.load(spark, sfDir, t).schema
-      catch { case _: Throwable => }
-    }
+    val spark = GraftSession.local()
     // optional args = query-name prefixes: bench only the matching
     // queries (single-query investigation); no args = the full
     // catalog (the driver's invocation — unchanged)
-    def wanted(name: String): Boolean =
-      args.isEmpty || args.exists(name.startsWith)
-    val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => wanted(n) }
-      .foreach { case (_, fn) =>
-        try fn(spark, warmDir).count()
-        catch { case _: Throwable => }
-      }
+    val picked = select(args.toSeq)
+    warmUp(spark, sfDir, picked)
     // best-of-3 per query: single-pass numbers on a shared box swing
     // 2x on scheduler/GC noise — and two rounds running, a single
     // query has shown a phantom 16-20x outlier that reproduces nowhere
     // (SCALE.md "Bench protocol"); the min of three passes is the
     // steady-state cost of the plan (every pass runs the full query —
     // no result caching between them, Spark actions recompute).
-    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // drop caches left by a previous pass of the same query (the
-      // eager dedup operators persist their results): each timed pass
-      // must rebuild the full pipeline, not read a warm cache
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+    val results = picked.map { case (name, fn) =>
+      name -> Seq.fill(3)(timeOnce(spark, sfDir, fn)).min
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => wanted(n) }
-      .map { case (name, fn) =>
-        name -> Seq.fill(3)(timeOnce(fn)).min
-      }
     // keep the one-line JSON small so the harness's tail capture holds
     // the WHOLE line (round 7's full-name/full-precision line was
     // truncated head-first and never parsed): keys shrink to the
@@ -73,5 +35,41 @@ object Bench {
     val total = f"${results.map(_._2).sum}%.3f"
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** Catalog queries whose name starts with one of `prefixes` (all of
+    * them when `prefixes` is empty), sorted by name. */
+  def select(prefixes: Seq[String]): Seq[(String, Query)] =
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => prefixes.isEmpty || prefixes.exists(n.startsWith) }
+
+  /** Warm-up: JIT/codegen paths and parquet footers, so per-query
+    * numbers reflect steady state rather than first-query startup.
+    * `picked` runs once at the smallest SF: generated codegen sources
+    * are SF-independent, so the compiled-class cache carries over to
+    * the measured run. */
+  def warmUp(spark: SparkSession, sfDir: String,
+      picked: Seq[(String, Query)]): Unit = {
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    graft.sources.Tables.all.foreach { t =>
+      try graft.sources.Tables.load(spark, sfDir, t).schema
+      catch { case _: Throwable => }
+    }
+    picked.foreach { case (_, fn) =>
+      try fn(spark, "/root/testdata/sf0.001").count()
+      catch { case _: Throwable => }
+    }
+  }
+
+  /** One timed pass of `fn` at `sfDir`, in seconds (a failing query
+    * reports the time until it threw). */
+  def timeOnce(spark: SparkSession, sfDir: String, fn: Query): Double = {
+    // drop caches left by a previous pass of the same query (the
+    // eager dedup operators persist their results): each timed pass
+    // must rebuild the full pipeline, not read a warm cache
+    spark.catalog.clearCache()
+    val t0 = System.nanoTime()
+    try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+    (System.nanoTime() - t0) / 1e9
   }
 }

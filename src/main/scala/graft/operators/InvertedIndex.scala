@@ -878,8 +878,13 @@ final case class InvertedIndex(path: String, buckets: Int = 64,
     * already-accumulated docs are scored. Candidates then re-rank
     * through [[Retrieval.bm25Rank]] verbatim (df from the FULL live
     * slice), so the answer is bit-identical to the unpruned
-    * [[bm25TopK]] — the pruning is answer-invisible by construction,
-    * and the spec pins that strictly fewer postings are SCORED.
+    * [[bm25TopK]] — the pruning is answer-invisible by construction.
+    * Pruning is NOT guaranteed: the skip test runs only at geometric
+    * window starts, so a flip can come up to one window late, and a
+    * short query may prune nothing — then the SCORED count (walk plus
+    * re-rank, which re-counts candidate postings) can equal or exceed
+    * the unpruned total. The spec pins fewer scored postings only on
+    * corpora whose flip lands at a window start.
     * Output `(doc_id, score, rank)`, rank 1..k by (score desc,
     * doc_id). */
   def bm25TopKPruned(spark: SparkSession, terms: Seq[String], k: Int,
@@ -958,7 +963,7 @@ final case class InvertedIndex(path: String, buckets: Int = 64,
     // ONE action, so the driver loop runs O(log #terms) actions
     // instead of one per term — the skip test fires (only) at window
     // boundaries, which can delay a flip by at most the window width:
-    // strictly less pruning, never a changed answer (every candidate
+    // less pruning, possibly none, never a changed answer (every candidate
     // still enters during a full-outer merge and re-ranks exactly).
     // Once a window start IS non-essential, every later term is too
     // (θ only grows, the suffix only shrinks), so the ENTIRE
@@ -1043,7 +1048,10 @@ final case class InvertedIndex(path: String, buckets: Int = 64,
     * are each candidate's EXACT score (see the in-body argument), so
     * the rounded ranking equals [[bm25TopK]]'s with no re-scoring
     * pass — the [[InvertedIndex.PruneMargin]] and hard-rule-9
-    * rounding arguments together. Output contract = [[bm25TopK]]:
+    * rounding arguments together. As in [[bm25TopKPruned]], depths are
+    * tested only at geometric window starts: a query can flip up to
+    * one window late and may prune nothing, so fewer scored postings
+    * is likely, not guaranteed. Output contract = [[bm25TopK]]:
     * `(query_id, cand_id, score, rank)`, rank 1..k per query by
     * (score desc, cand_id). */
   def bm25TopKPrunedBatch(queries: DataFrame, idCol: String,
@@ -1145,8 +1153,8 @@ final case class InvertedIndex(path: String, buckets: Int = 64,
     // deeper), an essential query full-merges its whole window in the
     // one grouped `adds` pass (a doc contributes the sum of its
     // matched window terms — same rows, same exactness argument), and
-    // a flip can arrive at most a window late: strictly less pruning,
-    // never a changed answer.
+    // a flip can arrive at most a window late: less pruning, possibly
+    // none, never a changed answer.
     var d = 2
     var width = 1
     var stillEssential = true

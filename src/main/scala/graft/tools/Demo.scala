@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 
 import graft.sources.RtsCsv
 import graft.streaming.IngestPipeline
@@ -11,14 +10,9 @@ import graft.streaming.IngestPipeline
   * `sbt "runMain graft.tools.Demo"`. */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder()
       .withExtensions(new graft.GraftExtensions)
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     // 0. session extensions: custom expression from plain SQL
     val sic = spark.sql(

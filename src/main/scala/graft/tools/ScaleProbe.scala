@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   * near-linear total per step is the evidence that the operator's
   * shuffle/partition strategy survives scale-up; superlinear growth
   * flags an operator that would fall over at 100 TB.
-  * Run: `sbt "runMain graft.tools.ScaleProbe [sfDir [mults [opFilter]]]"`
+  * Run: `SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.ScaleProbe [sfDir [mults [opFilter]]]"`
   * — e.g. `ScaleProbe /root/testdata/sf0.1 16,32 jaccard` probes one
-  * operator at deeper multipliers without paying for the rest. */
+  * operator at deeper multipliers without paying for the rest.
+  * SCALE.md's runs used 32 cores; the session default is 4. */
 object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
@@ -20,15 +21,7 @@ object ScaleProbe {
     val mults = args.drop(1).headOption
       .map(_.split(",").map(_.toInt).toSeq).getOrElse(Seq(1, 2, 4))
     val opFilter = args.drop(2).headOption
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
 
     val base = graft.sources.Tables.load(spark, sfDir, "events")
     val docsBase = graft.sources.Tables.load(spark, sfDir, "documents")

@@ -100,4 +100,10 @@ object Bridge {
       .queryExecution.analyzed.collect {
         case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
       }.foreach(_.unpersist(blocking = false))
+
+  /** Block until every listener has seen every event posted so far
+    * (the listener bus is `private[spark]`), so a listener added or
+    * read right after an action sees exactly that action's events. */
+  def drainListeners(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }
