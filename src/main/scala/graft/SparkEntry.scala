@@ -1,200 +1,21 @@
 package graft
 
-import java.sql.Timestamp
-import java.time.Instant
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
-import graft.operators._
-import graft.functions.TextFunctions
-import graft.streaming.IngestPipeline.BatchWriter
+import graft.catalog._
+import graft.catalog.Shared.{t, tbl}
+import graft.operators.SeriesScan
 
-/** Driver contract (SURVEY.md §7): one `queries` entry per implemented
+/** Driver contract (SURVEY.md §7): one catalog [[Gate]] per implemented
   * operator from SURVEY.md §2 plus the corpus-pipeline operators, each
   * with an ANSI-SQL oracle the driver runs in DuckDB over the same
   * parquet tables. Column names are aliased identically on both sides
-  * (the driver's compare hashes values under sorted column names).
+  * (the driver's compare hashes values under sorted column names). The
+  * gates live in `graft.catalog`, one object per family; `queries` and
+  * `oracleSql` are views of them by name.
   */
 object SparkEntry {
-
-  private def t(iso: String): Timestamp = Timestamp.from(Instant.parse(iso))
-
-  private def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Collision-resistant scratch-path suffix: full md5 hex of the
-    * testdata dir (abs(hashCode) can stay negative at Int.MinValue
-    * and two dirs colliding would race each other's
-    * delete-and-rewrite). */
-  private def md5Hex(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  /** The q187/q188 incremental view: per (supplier, ship-month)
-    * count + exact LONG unit/cent sums, signed for retractions. ONE
-    * definition so the batch and streaming gates maintain the
-    * identical view. */
-  private def aggViewOf(path: String): graft.streaming.AggView =
-    graft.streaming.AggView(path, Seq("l_suppkey", "ship_month"),
-      Seq("sum_qty" -> round(col("l_quantity")).cast("long"),
-        "rev_cents" -> round(col("l_extendedprice")
-          * (lit(1.0) - col("l_discount")) * 100).cast("long")),
-      signCol = Some("sig"), buckets = 16)
-
-  /** The simhash near-dup PAIR SET feeds four catalog queries (q63
-    * pairs, q96 clusters, q131 streaming CC, q137 graph shape) with
-    * identical parameters — memoize the persisted result per
-    * (session, dir) so one Verify/Bench process computes the
-    * shingle→fingerprint→band pipeline once. `simhashNearDup64`
-    * returns an eager MEMORY_AND_DISK-persisted frame (caller-owned);
-    * the memo takes ownership and holds it for the process lifetime —
-    * consumers must NOT unpersist it. */
-  private val simhashPairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def simhashPairs(s: SparkSession, dir: String): DataFrame =
-    // Synchronized: concurrent callers racing get-then-put would each
-    // run the expensive pipeline and leak the loser's persisted frame.
-    simhashPairsMemo.synchronized {
-      val key = (s, dir)
-      val cur = simhashPairsMemo.get(key)
-      // Bench clearCache()s between timed passes, which unpersists the
-      // memoized frame; handing it out unpersisted would re-run the
-      // whole pipeline once PER consumer inside a query — recompute and
-      // re-persist instead (one run, honest per-pass timing).
-      if (cur != null &&
-          cur.storageLevel != org.apache.spark.storage.StorageLevel.NONE) cur
-      else {
-        val fresh = Dedup.simhashNearDup64(tbl(s, dir, "documents"),
-          "doc_id", "text", maxHamming = 3)
-        simhashPairsMemo.put(key, fresh)
-        fresh
-      }
-    }
-
-  /** q138 and q141 replay the SAME clicks/buys split of `events`
-    * (different arrival batching, identical underlying frames) — write
-    * the two filtered projections to scratch parquet ONCE per
-    * (session, dir) so each query's appendBatchTo calls read a tiny
-    * scratch instead of re-scanning the full events table per batch
-    * (2 queries × ~5 batch writes = ~10 full scans otherwise). Scratch
-    * parquet survives Bench's clearCache, so only the first timed run
-    * pays the write (r10-verdict advice item 4). */
-  private val clickBuyScratchMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      (String, String)]()
-  private def clickBuyScratch(s: SparkSession, dir: String)
-      : (String, String) =
-    clickBuyScratchMemo.synchronized {
-      val key = (s, dir)
-      val cur = clickBuyScratchMemo.get(key)
-      if (cur != null) cur
-      else {
-        val base = s"/tmp/graft_clickbuy_${md5Hex(dir)}"
-        val fs = org.apache.hadoop.fs.FileSystem
-          .get(s.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(base), true)
-        val ev = tbl(s, dir, "events")
-          .select("event_id", "user_id", "event_type", "ts")
-        val cp = s"$base/clicks"; val bp = s"$base/buys"
-        ev.where(col("event_type") === "click")
-          .select(col("user_id"), col("ts").as("cts"),
-            col("event_id").as("click_id"))
-          .write.mode("overwrite").parquet(cp)
-        ev.where(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts").as("bts"),
-            col("event_id").as("buy_id"))
-          .write.mode("overwrite").parquet(bp)
-        val v = (cp, bp)
-        clickBuyScratchMemo.put(key, v)
-        v
-      }
-    }
-
-  /** q136/q185's shared estimator body: per-type-pair KMV set
-    * operations (union estimate (k-1)·2^52 / kth of the merged
-    * sketch, intersection by overlap fraction) next to the exact
-    * answers — `sk` is (event_type, sk) with sk the k smallest
-    * distinct hashes, whether sketched directly (q136) or re-merged
-    * from stored day-level states (q185; bit-identical by the
-    * k-smallest-of-union argument in that entry's comment). */
-  private def kmvSetOps(ev: DataFrame, sk: DataFrame, k: Int): DataFrame = {
-    val pairs = sk.as("a")
-      .join(sk.as("b"), col("a.event_type") < col("b.event_type"))
-      .select(col("a.event_type").as("type_a"),
-        col("b.event_type").as("type_b"),
-        col("a.sk").as("ska"), col("b.sk").as("skb"))
-      .withColumn("us",
-        slice(array_sort(array_distinct(concat(col("ska"), col("skb")))), 1, k))
-      .withColumn("est_union",
-        when(size(col("us")) < k, size(col("us")).cast("double"))
-          .otherwise(lit((k - 1).toDouble) *
-            lit(graft.expressions.KmvSketch.HashSpace) /
-            element_at(col("us"), k)))
-      .withColumn("est_inter",
-        (size(array_intersect(col("us"),
-            array_intersect(col("ska"), col("skb")))).cast("double") /
-          size(col("us")).cast("double")) * col("est_union"))
-    val du = ev.select(col("event_type").as("g"), col("user_id").as("u"))
-      .distinct()
-    val sizes = du.groupBy("g").agg(count(lit(1)).as("n"))
-    val xinter = du.as("x")
-      .join(du.as("y"), col("x.u") === col("y.u") && col("x.g") < col("y.g"))
-      .groupBy(col("x.g").as("type_a"), col("y.g").as("type_b"))
-      .agg(count(lit(1)).as("exact_inter"))
-    pairs
-      .join(broadcast(sizes.select(col("g").as("type_a"), col("n").as("na"))),
-        "type_a")
-      .join(broadcast(sizes.select(col("g").as("type_b"), col("n").as("nb"))),
-        "type_b")
-      .join(xinter, Seq("type_a", "type_b"), "left")
-      .select(col("type_a"), col("type_b"), col("est_union"), col("est_inter"),
-        (col("na") + col("nb") - coalesce(col("exact_inter"), lit(0L)))
-          .as("exact_union"),
-        coalesce(col("exact_inter"), lit(0L)).as("exact_inter"))
-  }
-
-  /** Exact integer view of a fixed-decimal double column: value*10^d
-    * rounded to the nearest long. The per-row double multiply and round
-    * are bit-identical on Spark and DuckDB (same IEEE ops on the same
-    * input), and the integer SUM is associativity-free — so any ratio
-    * or average derived from it with a fixed op sequence is hash-stable
-    * with NO rounding (hard rule 9's exact-arithmetic variant; rounding
-    * a quotient instead can land exactly on a half-way point — q31 did). */
-  private def scaledLong(c: Column, digits: Int): Column =
-    round(c * math.pow(10, digits), 0).cast("long")
-
-  /** q216/q219's shared OLS fold over a `(user_id, day, y)` daily
-    * table: exact integer moments (n, Σx, Σy, Σxx, Σxy as longs),
-    * slope = ONE division of exact ints, intercept the identical
-    * 3-op IEEE sequence both engines run — deterministic without a
-    * rounding contract (the q201 discipline). */
-  private def olsFitFromDaily(daily: DataFrame): DataFrame = {
-    val withX = daily.withColumn("x",
-      datediff(col("day"), lit("2024-01-01").cast("date")).cast("long"))
-    val m = withX.groupBy("user_id").agg(
-      count(lit(1)).as("n"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(col("x") * col("x")).as("sxx"),
-      sum(col("x") * col("y")).as("sxy"))
-    m.where(m("n") * m("sxx") - m("sx") * m("sx") > 0)
-      .withColumn("slope",
-        (col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-          / (col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
-      .select(col("user_id"), col("n").cast("long").as("n_days"),
-        col("slope"),
-        ((col("sy").cast("double") - col("slope") * col("sx").cast("double"))
-          / col("n").cast("double")).as("intercept"))
-  }
-
-  /** Language-ID marker words (shared between Spark impl and oracle). */
-  val langMarkers: Map[String, Seq[String]] = Map(
-    "de" -> Seq("customer", "vector", "big"),
-    "en" -> Seq("order", "table", "window"),
-    "es" -> Seq("slow", "agg", "merge"),
-    "fr" -> Seq("scan", "data", "batch"),
-    "zh" -> Seq("join", "small", "row"))
 
   /** Flagship query (reference README "Trades count for given interval",
     * `marketdb-iteratee/.../MarketIteratees.scala:7-21` counter fold):
@@ -206,6 +27,11 @@ object SparkEntry {
         t("2024-01-01T00:00:00Z"), t("2024-01-31T00:00:00Z"))
       .agg(count("*").as("trades_count"))
   }
+
+  /** Every catalog gate, family by family. */
+  def gates: Seq[Gate] =
+    MarketDb.gates ++ Relational.gates ++ Graph.gates ++ TextDedup.gates ++
+      Sketches.gates ++ Streams.gates ++ SearchStores.gates
 
   /** Pin `spark.sql.shuffle.partitions` around `body`, restoring the
     * prior value. The streaming replay gates run under it: every
@@ -225,11050 +51,18 @@ object SparkEntry {
     try body finally s.conf.set(key, old)
   }
 
-  /** The AvailableNow replay gates (micro-batch streaming with
-    * checkpointed state) — wrapped by [[queries]] in
+  /** Each gate's plan by name; the `streaming` gates (AvailableNow
+    * replays with checkpointed state) run under
     * [[withStatePartitions]]. */
-  private val streamingGates: Set[String] = Set(
-    "q88_stream_ingest", "q89_stream_heavy_hitters",
-    "q93_stream_decontaminate", "q95_stream_bars", "q110_stream_gaps",
-    "q113_stream_neardup", "q114_stream_minhash", "q115_stream_embed",
-    "q125_stream_asof", "q131_stream_components", "q134_stream_hll",
-    "q135_stream_countmin", "q138_stream_interval_join",
-    "q141_stream_outer_join", "q142_stream_dedup", "q143_stream_sessions",
-    "q161_stream_scd2", "q165_stream_ddsketch",
-    "q175_stream_fingerprint", "q181_stream_merge_into",
-    "q182_stream_leaderboard", "q186_stream_stratified",
-    "q188_stream_agg_view", "q209_stream_lang_jsd",
-    "q212_stream_adversarial_view",
-    "q215_stream_ivf_append", "q219_stream_trend",
-    "q224_stream_rolling_mau", "q231_indexed_ingest",
-    "q233_schema_evolution", "q235_watermark_dedup_view",
-    "q241_stream_search_index", "q252_stream_co_deletes",
-    "q259_stream_autocomplete", "q260_dict_co_deletes")
-
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    rawQueries.map { case (name, fn) =>
-      name -> (if (streamingGates(name))
+    gates.map { g =>
+      g.name -> (if (g.streaming)
         ((s: SparkSession, dir: String) =>
-          withStatePartitions(s, 4)(fn(s, dir)))
-      else fn)
-    }
-
-  private def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ── relational breadth (lineitem/orders/dims) ───────────────────
-    "q01_pricing_summary" -> ((s, dir) => {
-      // Money sums rounded identically on both engines (hard rule 9):
-      // the true sums sit on the 2-dp (price) / 4-dp (price*(1-disc))
-      // decimal grid, so rounding AT the grid precision is boundary-safe
-      // while erasing partition-order ulp drift. avg_qty is exact
-      // (integer-valued sum, one division).
-      tbl(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum("l_quantity").as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_base"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4).as("sum_disc"),
-          avg("l_quantity").as("avg_qty"),
-          count("*").as("n"))
-    }),
-    "q02_filter_project" -> ((s, dir) => {
-      tbl(s, dir, "lineitem")
-        .where(col("l_shipdate") >= to_timestamp(lit("1996-01-01 00:00:00")) &&
-          col("l_shipdate") < to_timestamp(lit("1997-01-01 00:00:00")) &&
-          col("l_discount") > 0.05)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("net_price"))
-    }),
-    "q03_join_agg" -> ((s, dir) => {
-      val li = tbl(s, dir, "lineitem")
-      val o = tbl(s, dir, "orders")
-      val c = tbl(s, dir, "customer")
-      val n = tbl(s, dir, "nation")
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .groupBy("n_name", "o_orderstatus")
-        .agg(count("*").as("n_items"),
-          // 4-dp grid sum, rounded per hard rule 9
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4).as("revenue"))
-    }),
-    "q04_broadcast_region" -> ((s, dir) => {
-      tbl(s, dir, "supplier")
-        .join(broadcast(tbl(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(tbl(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name")
-        // acctbal is 2-dp; round at the grid (hard rule 9 — this one
-        // actually flipped the strict check at sf0.001)
-        .agg(count("*").as("n_suppliers"), round(sum("s_acctbal"), 2).as("total_bal"))
-    }),
-    "q05_window_topn" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      tbl(s, dir, "orders")
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .where(col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-    }),
-    "q06_rollup" -> ((s, dir) => {
-      tbl(s, dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(count("*").as("n"), sum("l_quantity").as("sum_qty"))
-    }),
-    "q07_cube" -> ((s, dir) => {
-      tbl(s, dir, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(count("*").as("n"), round(sum("o_totalprice"), 2).as("total"))
-    }),
-    "q08_anti_join" -> ((s, dir) => {
-      tbl(s, dir, "customer")
-        .join(tbl(s, dir, "orders").where(col("o_totalprice") > 300000.0),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .select("c_custkey", "c_name")
-    }),
-    "q09_semi_join" -> ((s, dir) => {
-      tbl(s, dir, "customer")
-        .join(tbl(s, dir, "orders").where(col("o_orderstatus") === "F"),
-          col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey")
-    }),
-    "q10_set_ops" -> ((s, dir) => {
-      val ev = tbl(s, dir, "events")
-      def ids(tpe: String) = ev.where(col("event_type") === tpe).select("user_id")
-      val heavyError = ev.where(col("event_type") === "error")
-        .groupBy("user_id").agg(count("*").as("c"))
-        .where(col("c") > 20).select("user_id")
-      ids("purchase").intersect(ids("signup")).except(heavyError)
-    }),
-    // ── time-series surface (reference parity, events table) ────────
-    "q11_series_scan" -> ((s, dir) => {
-      SeriesScan.scan(tbl(s, dir, "events"),
-          Map("user_id" -> 7L, "event_type" -> "view"), "ts",
-          t("2024-01-05T00:00:00Z"), t("2024-01-20T00:00:00Z"))
-        .select("event_id", "ts", "user_id", "value")
-    }),
-    "q12_series_count" -> ((s, dir) => {
-      SeriesScan.scan(tbl(s, dir, "events"),
-          Map("user_id" -> 42L, "event_type" -> "click"), "ts",
-          t("2024-01-01T00:00:00Z"), t("2024-01-31T00:00:00Z"))
-        .agg(count("*").as("trades_count"),
-          min("ts").as("first_ts"), max("ts").as("last_ts"))
-    }),
-    "q13_merge_streams" -> ((s, dir) => {
-      // custom SortedMergeUnion operator: k-way merge of pre-sorted
-      // series, no re-sort (falls back to Union+Sort on big inputs)
-      val ev = tbl(s, dir, "events").where(col("user_id") < 20)
-      def series(tpe: String) = ev.where(col("event_type") === tpe)
-        .withColumn("stream", lit(tpe))
-        .select("stream", "event_id", "ts", "user_id", "value")
-      OrderedMerge.mergeSorted("ts", series("click"), series("view"))
-    }),
-    "q14_hour_bars" -> ((s, dir) => {
-      tbl(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("bucket"))
-        .agg(count("*").as("n"), round(sum("value"), 4).as("volume"),
-          min("value").as("low"), max("value").as("high"),
-          // unique (ts, event_id) tiebreak (hard rule 4)
-          min_by(col("value"), struct(col("ts"), col("event_id"))).as("open"),
-          max_by(col("value"), struct(col("ts"), col("event_id"))).as("close"))
-    }),
-    "q15_dedup_first" -> ((s, dir) => {
-      val ev = tbl(s, dir, "events").withColumn("day", to_date(col("ts")))
-      Dedup.firstByKey(ev, Seq("user_id", "event_type", "day"), Seq("ts", "event_id"))
-        .select("event_id", "user_id", "event_type", "day", "ts")
-    }),
-    "q16_gap_detect" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      tbl(s, dir, "events")
-        .select(col("user_id"),
-          (unix_micros(col("ts").cast("timestamp")) -
-            lag(unix_micros(col("ts").cast("timestamp")), 1).over(w)).as("gap_us"))
-        .where(col("gap_us") > 21600000000L)
-        .groupBy("user_id")
-        .agg(count("*").as("n_gaps"))
-    }),
-    "q17_active_days" -> ((s, dir) => {
-      tbl(s, dir, "events")
-        .groupBy("user_id")
-        .agg(min(to_date(col("ts"))).as("d0"), max(to_date(col("ts"))).as("d1"))
-        .select(col("user_id"),
-          explode(sequence(col("d0"), col("d1"), expr("interval 1 day"))).as("day"))
-    }),
-    "q18_time_parts" -> ((s, dir) => {
-      tbl(s, dir, "events")
-        .where(col("user_id") < 5)
-        .select(col("event_id"),
-          year(col("ts")).cast("long").as("yr"),
-          dayofyear(col("ts")).cast("long").as("doy"),
-          (hour(col("ts")) * 60 + minute(col("ts"))).cast("long").as("minute_of_day"),
-          unix_millis(col("ts").cast("timestamp")).as("ts_ms"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm").as("label"))
-    }),
-    "q19_uid_dict" -> ((s, dir) => {
-      val ev = tbl(s, dir, "events")
-      val dict = UidDictionary.build(ev, "event_type")
-      UidDictionary.encode(ev, dict, "event_type", "uid")
-        .groupBy("event_type", "uid")
-        .agg(count("*").as("n"))
-    }),
-    "q30_sorted_limit" -> ((s, dir) => {
-      tbl(s, dir, "events")
-        .orderBy(col("ts"), col("event_id"))
-        .limit(100)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-    }),
-    "q106_uid_decode" -> ((s, dir) => {
-      // the FULL UID lifecycle under one oracle (SURVEY §2 J2/A-row
-      // upgrade): build a dictionary from half the corpus, extend it
-      // with the rest (existing ids immutable, new ids dense after the
-      // old max — the reference's no-renumber guarantee), encode the
-      // facts, aggregate per uid, then REVERSE-decode the uid-only
-      // aggregate back to names. Dict always broadcasts (tiny dim);
-      // the fact side is never shuffled by the joins.
-      val ev = tbl(s, dir, "events")
-      val dict = UidDictionary.extend(
-        UidDictionary.build(ev.where(pmod(col("user_id"), lit(2L)) === 0),
-          "event_type"),
-        ev.where(pmod(col("user_id"), lit(2L)) =!= 0), "event_type")
-      val agg = UidDictionary.encode(ev, dict, "event_type", "uid")
-        .groupBy("uid").agg(count(lit(1)).as("n"))
-      UidDictionary.decode(agg, dict, "uid", "event_type_name")
-        .select("uid", "event_type_name", "n")
-    }),
-    // ── corpus pipeline: text analysis ──────────────────────────────
-    "q20_token_stats" -> ((s, dir) => {
-      val toks = TextFunctions.tokens(col("text"))
-      tbl(s, dir, "documents").select(col("doc_id"),
-        size(toks).cast("long").as("n_tokens"),
-        size(array_distinct(toks)).cast("long").as("n_uniq"),
-        TextFunctions.uniqueTokenRatio(col("text")).as("uniq_ratio"),
-        col("n_chars"))
-    }),
-    "q41_rolling_24h" -> ((s, dir) => {
-      // RANGE-frame rolling window: trailing 24h per user on event time
-      val w = Window.partitionBy("user_id")
-        .orderBy(unix_micros(col("ts").cast("timestamp")))
-        .rangeBetween(-86399999999L, 0L)
-      tbl(s, dir, "events")
-        .where(col("user_id") < 30)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          count("*").over(w).as("n_24h"),
-          // exact windowed avg: integer-cent sum over the window (both
-          // engines sum BIGINT exactly), then a fixed divide sequence
-          (sum(scaledLong(col("value"), 2)).over(w).cast("double")
-            / lit(100.0) / count("*").over(w)).as("avg_24h"))
-    }),
-    "q39_percentiles" -> ((s, dir) => {
-      // exact interpolated quantiles (matches DuckDB quantile_cont)
-      tbl(s, dir, "events")
-        .groupBy("event_type")
-        .agg(expr("percentile(value, 0.5)").as("p50"),
-          expr("percentile(value, 0.95)").as("p95"),
-          expr("percentile(value, 0.99)").as("p99"),
-          count("*").as("n"))
-    }),
-    "q37_token_count" -> ((s, dir) => {
-      // token counting two ways: whitespace and a BPE-ish regex
-      // (letter runs / digit runs / single punctuation) — same regex
-      // semantics in Java (Spark) and RE2 (DuckDB)
-      tbl(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("ws_tokens"),
-        size(regexp_extract_all(lower(col("text")),
-          lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0))).cast("long").as("bpe_tokens"))
-    }),
-    "q21_lang_id" -> ((s, dir) => {
-      tbl(s, dir, "documents").select(col("doc_id"), col("lang"),
-          TextFunctions.langId(col("text"), langMarkers).as("guess"))
-        .withColumn("correct", col("lang") === col("guess"))
-    }),
-    "q22_quality_score" -> ((s, dir) => {
-      tbl(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("n_tokens"),
-        TextFunctions.punctRatio(col("text")).as("punct_ratio"),
-        TextFunctions.uniqueTokenRatio(col("text")).as("uniq_ratio"),
-        TextFunctions.qualityScore(col("text")).as("quality"))
-    }),
-    // ── corpus pipeline: dedup family ───────────────────────────────
-    "q23_minhash_buckets" -> ((s, dir) => {
-      Dedup.minhashBuckets(tbl(s, dir, "documents"), "doc_id", "text",
-        k = 2, nHashes = 2, bandSize = 1)
-    }),
-    "q67_tfidf" -> ((s, dir) => {
-      // TF-IDF term weighting — the classic corpus-relevance operator:
-      // two hash aggregates (term-in-doc counts, then document
-      // frequency), idf joined back broadcast-small (vocab-sized).
-      // No ranking on the double (a sub-ulp libm difference could flip
-      // a rank); tfidf itself is rounded per hard rule 9 (ln may
-      // differ in the last ulp across engines).
-      val docs = tbl(s, dir, "documents")
-      // corpus size stays IN the plan (1-row broadcast cross join) —
-      // no driver-side count job per query construction
-      val nDf = docs.agg(count("*").cast("double").as("__n"))
-      val tf = docs
-        .select(col("doc_id"), explode(TextFunctions.tokens(col("text"))).as("term"))
-        .groupBy("doc_id", "term").agg(count("*").as("tf"))
-      // document frequency as a window over tf — ONE tokenize lineage
-      // (a groupBy-then-join formulation would re-run the explode
-      // subtree per consumer; ReuseExchange does not cover it)
-      val withDf = tf.withColumn("df",
-        count("*").over(Window.partitionBy("term")).cast("long"))
-      withDf
-        .crossJoin(broadcast(nDf))
-        .select(col("doc_id"), col("term"), col("tf"),
-          col("df"),
-          round(col("tf") *
-            (log((col("__n") + 1.0) / (col("df") + lit(1.0))) + lit(1.0)),
-            9).as("tfidf"))
-    }),
-    "q68_partition_prune" -> ((s, dir) => {
-      // directory/partition pruning UNDER THE ORACLE GATE: driver
-      // testdata is one file per table, so no stock query exercises
-      // hive-layout pruning — this one writes events in the ingest
-      // layout the engine prescribes at 100 TB (event_type/day
-      // directories) and reads it back filtered; the scan must plan
-      // PartitionFilters and touch only the matching directories
-      // (PlanPropertiesSpec guards the plan shape + file count).
-      // 'd'-prefixed day keeps the partition value a plain string on
-      // BOTH engines (bare yyyyMMdd would be type-inferred int by
-      // Spark but read VARCHAR by DuckDB's hive_partitioning).
-      val path = Tables.scratchPartitionedPath
-      tbl(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("value"),
-          col("event_type"), date_format(col("ts"), "'d'yyyyMMdd").as("day"))
-        // one task per output directory (the SCALE.md ingest-layout
-        // rule): without this every shuffle partition appends a file
-        // to every directory — ~150 dirs × nShuffle small files
-        .repartition(col("event_type"), col("day"))
-        .write.mode("overwrite").partitionBy("event_type", "day").parquet(path)
-      s.read.parquet(path)
-        .where(col("event_type") === "click" &&
-          col("day") >= "d20240108" && col("day") <= "d20240121")
-        .groupBy("day")
-        .agg(count(lit(1)).as("n"),
-          sum(scaledLong(col("value"), 2)).as("cents"),
-          min("event_id").as("min_event"))
-    }),
-    "q69_bucketed_join" -> ((s, dir) => {
-      // co-located join via bucketed layout UNDER THE ORACLE GATE: at
-      // 100 TB the fact-fact join (lineitem ⋈ orders) is the recurring
-      // shuffle — writing both sides bucketed by the join key pays that
-      // shuffle ONCE at ingest, then every subsequent join (and any
-      // aggregation keyed on the same column) consumes the bucket
-      // layout directly: the whole read-join-aggregate pipeline below
-      // plans ZERO exchanges (PlanPropertiesSpec guards it). The
-      // repartition before each write aligns task == bucket (same
-      // murmur3 pmod as the bucket spec), so every bucket is exactly
-      // one sorted file and the scan keeps the sortBy order — no
-      // re-sort under the join either. DuckDB reads the bucketed
-      // output as plain parquet (bucketing is only file layout).
-      val base = Tables.scratchBucketedBase
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      def writeBucketed(df: DataFrame, table: String, sub: String, key: String): Unit = {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        fs.delete(new org.apache.hadoop.fs.Path(s"$base/$sub"), true)
-        df.repartition(8, col(key))
-          .write.bucketBy(8, key).sortBy(key)
-          .option("path", s"$base/$sub").saveAsTable(table)
-      }
-      writeBucketed(tbl(s, dir, "lineitem")
-          .select("l_orderkey", "l_extendedprice", "l_discount"),
-        "graft_q69_li", "li", "l_orderkey")
-      writeBucketed(tbl(s, dir, "orders")
-          .select("o_orderkey", "o_orderstatus"),
-        "graft_q69_ord", "ord", "o_orderkey")
-      // hint("merge") pins the sort-merge strategy (a broadcast join
-      // would be legal at test SF but wouldn't exercise co-location)
-      s.table("graft_q69_li").hint("merge")
-        .join(s.table("graft_q69_ord").hint("merge"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderkey", "o_orderstatus")
-        .agg(count(lit(1)).as("n_items"),
-          // 4-dp grid → exact long units (hard rule 9's exact variant)
-          sum(scaledLong(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4))
-            .as("revenue"))
-    }),
-    "q70_session_window" -> ((s, dir) => {
-      // native session windows (the Structured-Streaming-shared
-      // sessionizer) under the oracle gate: session_window merges
-      // events whose [ts, ts+gap) windows overlap — a new session
-      // starts iff the gap STRICTLY exceeds 30 min (verified: two
-      // events exactly 30 min apart merge), i.e. the same boundary as
-      // q36's lag/cumsum formulation, which is how the DuckDB twin
-      // re-derives the sessions. sess_end = last event ts + gap.
-      tbl(s, dir, "events")
-        .groupBy(col("user_id"),
-          session_window(col("ts"), "30 minutes").as("sess"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id"), col("sess.start").as("sess_start"),
-          col("sess.end").as("sess_end"), col("n_events"))
-    }),
-    "q72_langid_ngram" -> ((s, dir) => {
-      // character-n-gram-profile language ID (q21's word-marker twin,
-      // Cavnar–Trenkle-style) in the RELATIONAL shape that scales:
-      // trigrams evaluated ONCE per doc (explode), profile joined
-      // broadcast (vocab-sized), argmax via max-count with a
-      // deterministic min(lang) tiebreak (hard rule 4) — docs with no
-      // profile hit fall back to the lexicographically first language
-      // (every language ties at zero). A per-row score-column
-      // formulation would re-evaluate the trigram extraction once per
-      // language (Catalyst inlines aliased projections).
-      import s.implicits._
-      val docs = tbl(s, dir, "documents")
-      val defaultLang = langMarkers.keys.min
-      val tri = docs.select(col("doc_id"),
-        explode(TextFunctions.charTrigrams(col("text"))).as("g"))
-      val prof = TextFunctions.trigramProfile(langMarkers).toDF("lang_p", "g")
-      val scores = tri.join(broadcast(prof), "g")
-        .groupBy("doc_id", "lang_p").agg(count(lit(1)).as("cnt"))
-      // argmax as a window over the one scores lineage (a
-      // groupBy-max + join-back would re-run the explode/join subtree
-      // per consumer, q67's note); the window and the groupBy share
-      // the doc_id partitioning — no extra exchange
-      val guess = scores
-        .withColumn("mx", max("cnt").over(Window.partitionBy("doc_id")))
-        .where(col("cnt") === col("mx"))
-        .groupBy("doc_id").agg(min("lang_p").as("g_raw"))
-      docs.select("doc_id", "lang")
-        .join(guess, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("lang"),
-          coalesce(col("g_raw"), lit(defaultLang)).as("guess"),
-          (col("lang") === coalesce(col("g_raw"), lit(defaultLang))).as("correct"))
-    }),
-    "q73_minhash_screen" -> ((s, dir) => {
-      // incremental ingest screen: the newest fifth of the corpus
-      // screened against the rest via cross-side banded collisions
-      // only — the admit-a-batch-into-100TB shape. The id-boundary
-      // split makes the oracle exact: the symmetric estimator's pairs
-      // restricted to doc_a < 400 <= doc_b are precisely the cross
-      // pairs this operator emits.
-      val docs = tbl(s, dir, "documents")
-      Dedup.minhashScreen(
-        docs.where(col("doc_id") < 400), docs.where(col("doc_id") >= 400),
-        "doc_id", "text", k = 2, nHashes = 16, bandSize = 4)
-    }),
-    "q74_token_topk" -> ((s, dir) => {
-      // corpus vocabulary heavy hitters, exact: explode -> two-phase
-      // hash agg (the shuffle carries (token, partial count), never
-      // raw text) -> TakeOrderedAndProject (per-partition top-k heaps
-      // merged on the driver, NO global sort — the only scalable
-      // top-k shape). Tie at the boundary broken by token
-      // (hard rule 4). The streaming twin is
-      // StreamingHeavyHitters (Space-Saving: overestimates only,
-      // true <= est <= true + err, spec-bounded).
-      tbl(s, dir, "documents")
-        .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("tok"))
-        .limit(100)
-    }),
-    "q71_hash_split" -> ((s, dir) => {
-      // deterministic train/val/test assignment (Splits.hashSplit):
-      // a pure function of doc_id — stable across re-runs, partition
-      // counts and engines; the oracle re-derives every label from
-      // the same md5 arithmetic. Zero-shuffle projection + one agg.
-      Splits.hashSplit(tbl(s, dir, "documents"), "doc_id", "s42",
-          Seq(("train", 90), ("val", 5), ("test", 5)))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextFunctions.tokenCount(col("text")).cast("long")).as("n_tokens"),
-          min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
-    }),
-    "q78_stratified_sample" -> ((s, dir) => {
-      // deterministic data-MIXTURE sampling (Splits.stratifiedSample):
-      // per-stratum keep rates as a pure function of event_id — the
-      // "50% web, 100% code" composition step of a training mix,
-      // stable across re-runs/partitioning/engines (df.sample is
-      // none of these). signup is absent from the map -> dropped.
-      // Zero-shuffle codegen filter; the oracle re-derives membership
-      // from the same md5 arithmetic.
-      Splits.stratifiedSample(tbl(s, dir, "events"), "event_type",
-          "event_id", "mix1",
-          Map("click" -> 50, "view" -> 10, "purchase" -> 100, "error" -> 25))
-        .select(col("event_id"), col("event_type"), col("user_id"))
-    }),
-    "q79_sequence_pack" -> ((s, dir) => {
-      // concat-and-chunk sequence packing (Packing.concatChunk):
-      // md5-sharded, doc-id-ordered token spans cut every 512 tokens —
-      // per-shard window over integer running sums, no global sort.
-      Packing.concatChunk(tbl(s, dir, "documents"), "doc_id",
-        TextFunctions.tokenCount(col("text")), seqLen = 512, shards = 8,
-        salt = "p1")
-    }),
-    "q92_pack_bins" -> ((s, dir) => {
-      // the consumer-side inverse of q79: per training bin, the
-      // ordered (doc, doc_off, len) slices that fill it — proves the
-      // cut arithmetic from the loader's side (slices tile every bin).
-      // Same integer math, no shuffle beyond q79's one exchange.
-      Packing.binSlices(
-        Packing.concatChunk(tbl(s, dir, "documents"), "doc_id",
-          TextFunctions.tokenCount(col("text")), seqLen = 512, shards = 8,
-          salt = "p1"),
-        "doc_id", seqLen = 512)
-    }),
-    "q80_decontaminate" -> ((s, dir) => {
-      // exact-overlap decontamination (Dedup.decontaminate): train
-      // docs sharing any distinct 4-shingle with the doc_id%97==0
-      // "benchmark" slice are flagged with shared-shingle evidence —
-      // the eval side broadcasts, the corpus is never shuffled
-      val docs = tbl(s, dir, "documents")
-      Dedup.decontaminate(
-        docs.where(pmod(col("doc_id"), lit(97)) =!= 0),
-        docs.where(pmod(col("doc_id"), lit(97)) === 0),
-        "doc_id", "text", k = 4)
-    }),
-    "q66_minhash_estimate" -> ((s, dir) => {
-      // Broder minhash estimator over LSH-banded candidates: the
-      // verification-free scale path (fixed-width signatures, no
-      // shingle sets shipped); est = n_agree/16 is an exact rational
-      Dedup.minhashJaccardEstimate(tbl(s, dir, "documents"), "doc_id",
-        "text", k = 2, nHashes = 16, bandSize = 4)
-    }),
-    "q24_fingerprint" -> ((s, dir) => {
-      // explode-then-agg: one md5 per shingle, map-side partial min
-      tbl(s, dir, "documents")
-        .select(col("doc_id"),
-          explode(TextFunctions.shingles(col("text"), 3)).as("s"))
-        .groupBy("doc_id")
-        .agg(min(md5(col("s"))).as("fingerprint"),
-          countDistinct(col("s")).as("n_shingles"))
-    }),
-    "q25_jaccard_pairs" -> ((s, dir) => {
-      Dedup.jaccardPairs(tbl(s, dir, "documents"), "doc_id", "text",
-        k = 2, threshold = 0.8)
-    }),
-    "q28_simhash" -> ((s, dir) => {
-      Dedup.simhash(tbl(s, dir, "documents"), "doc_id", "text")
-    }),
-    "q42_rolling_fingerprint" -> ((s, dir) => {
-      // single-pass Rabin-Karp fingerprint (custom codegen expression;
-      // oracle replicates the mod-2^61-1 Horner scheme in HUGEINT)
-      tbl(s, dir, "documents").select(col("doc_id"),
-        graft.expressions.RollingHashMin(col("text"), lit(16)).as("fp"))
-    }),
-    // ── corpus pipeline: similarity search ──────────────────────────
-    "q26_cosine_topk" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      Similarity.cosineTopK(emb.where(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 5)
-    }),
-    "q27_ann_lsh" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      Similarity.annTopK(emb.where(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 5, nBits = 4, dim = 64)
-    }),
-    "q40_ivf_ann" -> ((s, dir) => {
-      // IVF ANN: coarse-quantizer cells + multi-probe exact re-rank.
-      // iters=0 keeps the quantizer a pure function of the first 16
-      // vectors, so the DuckDB oracle can replicate the cells exactly
-      // (the k-means path, iters>0, is covered by SimilaritySpec).
-      val emb = tbl(s, dir, "embeddings")
-      Similarity.ivfTopK(emb.where(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 5, nCentroids = 16, nProbe = 4,
-        iters = 0)
-    }),
-    // ── finance-style aggregates & windows ──────────────────────────
-    "q31_vwap" -> ((s, dir) => {
-      // VWAP per part per order-year: sum(p*q)/sum(q) where
-      // l_extendedprice is already price*qty in TPC-H convention
-      tbl(s, dir, "lineitem")
-        .join(tbl(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("l_partkey"), year(col("o_orderdate")).cast("long").as("yr"))
-        // exact-cent numerator (see scaledLong): the quotient of a 2-dp
-        // sum by an integer quantity lands exactly on round-boundary
-        // half-way points, so rounding is NOT hash-safe here
-        .agg((sum(scaledLong(col("l_extendedprice"), 2)).cast("double")
-            / lit(100.0) / sum("l_quantity")).as("vwap"),
-          sum("l_quantity").as("volume"))
-    }),
-    "q32_running_sum" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      // Rounded identically on both engines: DuckDB evaluates windowed
-      // sums with a segment tree, Spark with a linear scan — different
-      // association, last-ulp drift (values ~1e3, diff ~5e-13 at sf0.01;
-      // 6 dp boundary is 1e6x above the noise).
-      tbl(s, dir, "events")
-        .where(col("user_id") < 10)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          round(sum("value").over(w), 6).as("running_value"))
-    }),
-    "q34_grouping_sets" -> ((s, dir) => {
-      // SQL surface: GROUPING SETS (DataFrame API exposes only
-      // rollup/cube); exercised through a registered view
-      tbl(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-      s.sql(
-        """SELECT l_returnflag, l_linestatus, count(*) AS n,
-          |  sum(l_quantity) AS sum_qty
-          |FROM lineitem
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin)
-    }),
-    "q33_ohlc_fold" -> ((s, dir) => {
-      // custom typed Aggregator (single-pass OHLC fold, §2.10)
-      val ohlc = udaf(graft.functions.OhlcAggregator.agg)
-      tbl(s, dir, "events")
-        .where(col("event_type") === "purchase")
-        .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-        .agg(ohlc(unix_micros(col("ts").cast("timestamp")), col("event_id"),
-          col("value")).as("o"))
-        .select(col("user_id"), col("day"),
-          col("o.open").as("open"), col("o.high").as("high"),
-          col("o.low").as("low"), col("o.close").as("close"),
-          // volume is a double sum folded in merge order — round
-          // identically on both engines (values ~1e2, 6 dp margin 1e9x)
-          round(col("o.volume"), 6).as("volume"), col("o.n").as("n"))
-    }),
-    "q35_knn_label" -> ((s, dir) => {
-      // k-NN majority-vote classification over embedding space
-      val emb = tbl(s, dir, "embeddings")
-      val topk = Similarity.cosineTopK(emb.where(col("vec_id") < 100), emb,
-        "vec_id", "embedding", k = 5)
-      val votes = topk
-        .join(emb.select(col("vec_id").as("cand_id"), col("label").as("cand_label")),
-          "cand_id")
-        .groupBy("query_id", "cand_label")
-        .agg(count("*").as("votes"))
-      val w = Window.partitionBy("query_id")
-        .orderBy(col("votes").desc, col("cand_label"))
-      votes.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-        .join(emb.select(col("vec_id").as("query_id"), col("label").as("true_label")),
-          "query_id")
-        .select(col("query_id"), col("cand_label").as("pred_label"),
-          col("votes"), col("true_label"),
-          (col("cand_label") === col("true_label")).as("correct"))
-    }),
-    "q36_sessionize" -> ((s, dir) => {
-      // 30-minute-inactivity sessionization: flag + running sum + agg
-      val wOrd = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val tsUs = unix_micros(col("ts").cast("timestamp"))
-      tbl(s, dir, "events")
-        .select(col("user_id"), col("event_id"), col("ts"),
-          (tsUs - lag(tsUs, 1).over(wOrd)).as("gap_us"))
-        .withColumn("new_sess",
-          when(col("gap_us").isNull || col("gap_us") > 1800000000L, 1L).otherwise(0L))
-        .withColumn("sess_idx", sum("new_sess").over(
-          wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .groupBy("user_id", "sess_idx")
-        .agg(count("*").as("n_events"), min("ts").as("start_ts"), max("ts").as("end_ts"))
-    }),
-    "q38_multimodal_meta" -> ((s, dir) => {
-      // multimodal metadata under the oracle gate: the fake corpus
-      // (incl. four reject blobs) is written to parquet, then the
-      // 15-byte header is parsed with codegen'd binary expressions
-      // (no codec, no mapPartitions) — DuckDB slices the SAME parquet
-      // bytes via hex-string arithmetic. avg is an exact integer sum
-      // over an exact count with ONE double division (hard rule 9's
-      // exact-arithmetic variant; int sums are associativity-free).
-      val path = Multimodal.scratchCorpusPath
-      Multimodal.fakeCorpusWithRejects(s, 300).repartition(2)
-        .write.mode("overwrite").parquet(path)
-      Multimodal.decodeMetaExpr(s.read.parquet(path), "media_id", "content")
-        .groupBy("kind")
-        .agg(count(lit(1)).as("n"), sum("byteSize").as("total_bytes"),
-          (sum("width").cast("double") / count(lit(1))).as("avg_width"))
-    }),
-    // ── as-of join ──────────────────────────────────────────────────
-    "q29_asof_join" -> ((s, dir) => {
-      // Right side pre-deduped to one row per (user_id, ts) with an
-      // explicit max_by(event_id) winner: DuckDB ASOF JOIN has no
-      // defined tie-break among equal right timestamps, so the tie is
-      // pinned BEFORE the join on both engines (hard rule 4).
-      val ev = tbl(s, dir, "events")
-      val clicks = ev.where(col("event_type") === "click")
-        .groupBy("user_id", "ts")
-        .agg(max_by(col("value"), col("event_id")).as("value"))
-      AsOfJoin.asOf(
-          left = ev.where(col("event_type") === "purchase"),
-          right = clicks,
-          keyCols = Seq("user_id"),
-          leftTime = "ts", rightTime = "ts",
-          rightVals = Seq("ts" -> "last_click_ts", "value" -> "last_click_value"))
-        .select("event_id", "user_id", "ts", "value",
-          "last_click_ts", "last_click_value")
-    }),
-    "q61_asof_forward" -> ((s, dir) => {
-      // forward as-of: each signup matched to the user's first
-      // subsequent purchase (earliest right at or after left time)
-      // right side pre-deduped per (user_id, ts) — see q29 rationale
-      val ev = tbl(s, dir, "events")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .groupBy("user_id", "ts")
-        .agg(max_by(col("value"), col("event_id")).as("value"))
-      AsOfJoin.asOf(
-          left = ev.where(col("event_type") === "signup"),
-          right = purchases,
-          keyCols = Seq("user_id"),
-          leftTime = "ts", rightTime = "ts",
-          rightVals = Seq("ts" -> "first_purchase_ts",
-            "value" -> "first_purchase_value"),
-          forward = true)
-        .select("event_id", "user_id", "ts",
-          "first_purchase_ts", "first_purchase_value")
-    }),
-    // ── round-2 breadth: dedup, joins, windows, strings, subqueries ──
-    "q43_exact_dedup" -> ((s, dir) => {
-      // exact content dedup: md5-hash groups with deterministic keeper
-      Dedup.exactGroups(tbl(s, dir, "documents"), "doc_id", "text")
-    }),
-    "q44_embed_near_dup" -> ((s, dir) => {
-      // embedding-cosine near-dup pairs via LSH bucketing (dedup family)
-      Similarity.cosineNearDupPairs(tbl(s, dir, "embeddings"),
-        "vec_id", "embedding", threshold = 0.3, nBits = 4, dim = 64)
-    }),
-    "q75_embed_screen" -> ((s, dir) => {
-      // embedding-side ingest screen: newest fifth of the vectors
-      // checked against the rest — cross-side bucket collisions only,
-      // incoming side broadcast (q73's pattern for vector columns);
-      // id-boundary split makes the oracle the symmetric near-dup
-      // restricted to id_a < 400 <= id_b
-      val emb = tbl(s, dir, "embeddings")
-      Similarity.cosineScreen(
-        emb.where(col("vec_id") < 400), emb.where(col("vec_id") >= 400),
-        "vec_id", "embedding", threshold = 0.3, nBits = 4, dim = 64)
-    }),
-    "q45_stats_agg" -> ((s, dir) => {
-      // Moments are rounded identically on both engines: Spark merges
-      // per-partition co-moments in partition order while DuckDB folds a
-      // single stream, so the raw doubles differ in the last ~2 ulps.
-      // Digits are chosen per column magnitude so the rounding boundary
-      // sits many orders of magnitude above the ulp noise (corr ~1e-3 →
-      // 9 dp, covar ~3e3 → 6 dp, sd ~14 → 9 dp, var ~9e8 → 2 dp).
-      tbl(s, dir, "lineitem").groupBy("l_returnflag")
-        .agg(round(corr(col("l_quantity"), col("l_extendedprice")), 9).as("qty_price_corr"),
-          round(covar_samp(col("l_quantity"), col("l_extendedprice")), 6).as("qty_price_covar"),
-          round(stddev_samp(col("l_quantity")), 9).as("qty_sd"),
-          round(var_samp(col("l_extendedprice")), 2).as("price_var"),
-          count("*").as("n"))
-    }),
-    "q46_pivot" -> ((s, dir) => {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      tbl(s, dir, "events").groupBy("user_id")
-        .pivot("event_type", types).agg(count(lit(1)))
-        .select(col("user_id") +: types.map(t => coalesce(col(t), lit(0L)).as(t)): _*)
-    }),
-    "q47_outer_join" -> ((s, dir) => {
-      val c = tbl(s, dir, "customer").where(col("c_nationkey") === 3)
-        .select("c_custkey", "c_name")
-      val o = tbl(s, dir, "orders").where(col("o_totalprice") > 350000.0)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      c.join(o, col("c_custkey") === col("o_custkey"), "full_outer")
-        .select(coalesce(col("c_custkey"), col("o_custkey")).as("custkey"),
-          col("c_name"), col("o_orderkey"), col("o_totalprice"))
-    }),
-    "q48_window_family" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_orderdate"), col("o_orderkey"))
-      tbl(s, dir, "orders").where(col("o_custkey") < 300)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-          lag(col("o_totalprice"), 1).over(w).as("prev_price"),
-          lead(col("o_totalprice"), 1).over(w).as("next_price"),
-          dense_rank().over(w).cast("long").as("drank"),
-          ntile(4).over(w).cast("long").as("quartile"),
-          percent_rank().over(w).as("prank"),
-          cume_dist().over(w).as("cdist"))
-    }),
-    "q49_salted_join" -> ((s, dir) => {
-      // skew-safe salted join; result row-identical to the plain join
-      val ev = tbl(s, dir, "events")
-      // type_avg is exact (integer-cent sum / fixed divide sequence), so
-      // both it and the derived delta are hash-stable with no rounding
-      val dim = ev.groupBy("event_type").agg(
-        (sum(scaledLong(col("value"), 2)).cast("double")
-          / lit(100.0) / count(lit(1))).as("type_avg"))
-      SkewJoin.salted(
-          ev.where(col("user_id") < 50).select("event_id", "event_type", "value"),
-          dim, Seq("event_type"), saltBy = col("event_id"), nSalt = 8)
-        .select(col("event_id"), col("event_type"), col("value"),
-          col("type_avg"), (col("value") - col("type_avg")).as("delta"))
-    }),
-    "q50_time_buckets" -> ((s, dir) => {
-      // batch tumbling windows (reference's per-minute row-key bucketing
-      // generalized, `model/Trade.scala:24-28`); epoch-aligned 6h grid
-      tbl(s, dir, "events")
-        .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))
-        .agg(count("*").as("n"),
-          (sum(scaledLong(col("value"), 2)).cast("double")
-            / lit(100.0) / count(lit(1))).as("avg_value"))
-        .select(col("w.start").as("w_start"), col("w.end").as("w_end"),
-          col("event_type"), col("n"), col("avg_value"))
-    }),
-    "q51_string_funcs" -> ((s, dir) => {
-      tbl(s, dir, "documents").select(col("doc_id"),
-        levenshtein(lower(substring(col("text"), 1, 12)), lit("data pipeline"))
-          .cast("long").as("lev"),
-        translate(lower(substring(col("text"), 1, 20)), "aeiou", "AEIOU").as("tr"),
-        reverse(substring(col("text"), 1, 10)).as("rev"),
-        lpad(col("lang"), 5, "_").as("padded"))
-    }),
-    "q52_scalar_subquery" -> ((s, dir) => {
-      tbl(s, dir, "orders").createOrReplaceTempView("orders")
-      tbl(s, dir, "customer").createOrReplaceTempView("customer")
-      s.sql(
-        """SELECT c_custkey,
-          |  (SELECT count(*) FROM orders WHERE o_custkey = c_custkey) AS n_orders,
-          |  round((SELECT coalesce(sum(o_totalprice), 0.0) FROM orders
-          |     WHERE o_custkey = c_custkey), 2) AS spend
-          |FROM customer WHERE c_custkey < 200""".stripMargin)
-    }),
-    "q53_distinct_agg" -> ((s, dir) => {
-      tbl(s, dir, "lineitem").groupBy("l_returnflag")
-        .agg(countDistinct(col("l_partkey")).as("n_parts"),
-          countDistinct(col("l_suppkey")).as("n_supps"),
-          sum_distinct(col("l_quantity")).as("qty_distinct_sum"),
-          count("*").as("n"))
-    }),
-    "q54_simhash_pairs" -> ((s, dir) => {
-      // banded SimHash near-dup join (exact for hamming <= 1 via
-      // 2 bands x 8 bits — buckets stay ~n/256)
-      Dedup.simhashNearDup(tbl(s, dir, "documents"), "doc_id", "text",
-        maxHamming = 1)
-    }),
-    "q55_range_join" -> ((s, dir) => {
-      // point-in-interval join via time bucketing: clicks inside each
-      // user's daily purchase span
-      val ev = tbl(s, dir, "events")
-      val tsUs = unix_micros(col("ts").cast("timestamp"))
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("user_id"), tsUs.as("t_us"))
-      val spans = ev.where(col("event_type") === "purchase")
-        .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-        .agg(unix_micros(min(col("ts")).cast("timestamp")).as("s_us"),
-          unix_micros(max(col("ts")).cast("timestamp")).as("e_us"))
-      RangeJoin.pointInInterval(clicks, spans, Seq("user_id"),
-          "t_us", "s_us", "e_us", bucketUs = 6L * 3600 * 1000000)
-        .groupBy("user_id", "day")
-        .agg(count("*").as("n_clicks"))
-    }),
-    "q56_json_props" -> ((s, dir) => {
-      // semi-structured column: JSON path extraction + aggregation
-      val k = get_json_object(col("props"), "$.k").cast("long")
-      tbl(s, dir, "events")
-        .select(col("event_type"), k.as("k"))
-        .groupBy("event_type")
-        .agg(count("*").as("n"), avg("k").as("avg_k"),
-          sum("k").as("sum_k"), max("k").as("max_k"))
-    }),
-    "q60_order_book" -> ((s, dir) => {
-      // order-book reconstruction (custom typed Aggregator, §2.10):
-      // click=bid view=ask deltas on a floored price grid, every 7th
-      // event a cancel; top-of-book per user
-      val book = udaf(graft.functions.OrderBookAggregator.agg)
-      val ev = tbl(s, dir, "events")
-        .where(col("event_type").isin("click", "view") && col("user_id") < 20)
-        .select(col("user_id"),
-          when(col("event_type") === "click", 1).otherwise(2)
-            .cast("smallint").as("bdir"),
-          (floor(col("value") * 10) / 10.0).as("price"),
-          when(col("event_id") % 7 === 0, -1L).otherwise(1L).as("qty"))
-      ev.groupBy("user_id")
-        .agg(book(col("bdir"), col("price"), col("qty")).as("b"))
-        .select(col("user_id"),
-          col("b.bestBid").as("best_bid"), col("b.bidDepth").as("bid_depth"),
-          col("b.bestAsk").as("best_ask"), col("b.askDepth").as("ask_depth"),
-          col("b.nLevels").as("n_levels"))
-    }),
-    "q59_promo_share" -> ((s, dir) => {
-      // TPC-H Q14 flavor: promo revenue share per month (part dim join
-      // + conditional aggregation)
-      val li = tbl(s, dir, "lineitem")
-        .where(col("l_shipdate") >= to_timestamp(lit("1996-01-01 00:00:00")) &&
-          col("l_shipdate") < to_timestamp(lit("1996-07-01 00:00:00")))
-      val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      li.join(broadcast(tbl(s, dir, "part")), col("l_partkey") === col("p_partkey"))
-        .groupBy(trunc(col("l_shipdate"), "month").as("month")) // DateType, matches DuckDB date_trunc
-        .agg(
-          // exact 4-dp integer sums (price 2dp x (1-disc) 2dp), fixed
-          // op sequence: 100.0 * pn / pd — no rounding needed
-          (lit(100.0) * sum(scaledLong(when(col("p_type") === "PROMO", rev).otherwise(0.0), 4)).cast("double")
-            / sum(scaledLong(rev, 4)).cast("double")).as("promo_share"),
-          count("*").as("n"))
-    }),
-    "q58_multimodal_pipeline" -> ((s, dir) => {
-      // full multimodal pipeline: decode -> quarantine invalids ->
-      // resize-normalize images to a canonical 16x10 -> feature-extract
-      // -> ANN top-3 per query blob (stub codec, real operator shapes).
-      // FULLY ORACLED end-to-end via the q38 scratch-parquet trick: the
-      // input corpus (rejects + a degenerate image included) is written
-      // to parquet and DuckDB re-derives every stage from the same
-      // bytes — header decode via hex slicing, nearest-neighbor resize
-      // via generate_series byte arithmetic, the float32 pseudo-
-      // embedding via a list_reduce fold with per-step FLOAT casts
-      // (bit-equal to Java float accumulation), and cosine in double
-      // via list_dot_product (same index-order accumulation as
-      // FloatDotProduct — the q26 precedent).
-      val path = Multimodal.scratchPipelinePath
-      Multimodal.pipelineCorpus(s).repartition(2)
-        .write.mode("overwrite").parquet(path)
-      val corpus = s.read.parquet(path)
-      val decoded = Multimodal.decode(corpus, "media_id", "content")
-      val validIds = decoded.where(col("meta.valid")).select(col("id"))
-      val valid = corpus.join(validIds, corpus("media_id") === validIds("id"))
-        .select("media_id", "content")
-      // only images resize will actually emit (positive dims) take the
-      // resize path — a valid-but-degenerate header must flow through
-      // unresized rather than silently losing its embedding
-      val imageIds = decoded
-        .where(col("meta.valid") && col("meta.kind") === "image" &&
-          col("meta.width") > 0 && col("meta.height") > 0)
-        .select(col("id"))
-      val resizedImages = Multimodal.resize(
-          valid.join(imageIds, valid("media_id") === imageIds("id"))
-            .select("media_id", "content"),
-          "media_id", "content", 16, 10)
-        .select(col("id").as("media_id"), col("content"))
-      val normalized = valid
-        .join(imageIds, valid("media_id") === imageIds("id"), "left_anti")
-        .unionByName(resizedImages)
-      val feats = Multimodal.features(normalized, "media_id", "content", dim = 16)
-        .select(col("id").as("vec_id"), col("embedding"))
-      Similarity.cosineTopK(feats.where(col("vec_id") < 5), feats,
-        "vec_id", "embedding", k = 3)
-    }),
-    "q76_resize_oracle" -> ((s, dir) => {
-      // resize stage in isolation, byte-exact under the oracle: every
-      // resizable image's re-encoded 16x10 blob compared as its full
-      // hex string (header + nearest-neighbor payload) — DuckDB rebuilds
-      // the identical string from the source bytes with generate_series
-      // index arithmetic. q58 verifies resize only through the
-      // embeddings it feeds; this pins the bytes themselves.
-      val path = Multimodal.scratchResizePath
-      Multimodal.pipelineCorpus(s).repartition(2)
-        .write.mode("overwrite").parquet(path)
-      val corpus = s.read.parquet(path)
-      val decoded = Multimodal.decode(corpus, "media_id", "content")
-      val imageIds = decoded
-        .where(col("meta.valid") && col("meta.kind") === "image" &&
-          col("meta.width") > 0 && col("meta.height") > 0)
-        .select(col("id"))
-      Multimodal.resize(
-          corpus.join(imageIds, corpus("media_id") === imageIds("id"))
-            .select("media_id", "content"),
-          "media_id", "content", 16, 10)
-        .select(col("id").as("media_id"),
-          col("width").cast("long").as("width"),
-          col("height").cast("long").as("height"),
-          hex(col("content")).as("blob_hex"))
-    }),
-    "q111_price_trend" -> ((s, dir) => {
-      // per-user linear price drift: closed-form OLS over EXACT
-      // integer sums — seconds since the corpus epoch × integer cents
-      // keep every Σ a lossless long (nothing partition-order-noisy
-      // to round away); each long converts to double once
-      // (deterministic nearest) and slope/intercept fall out of a
-      // fixed single-op IEEE sequence, identical on both engines.
-      // One hash aggregate with map-side partials, no window. At
-      // multi-year spans re-origin x per key before summing (the
-      // bound that keeps Σx² a lossless long is span²·rows < 2^63).
-      val x = expr("unix_micros(cast(ts as timestamp)) div 1000000") -
-        lit(1704067200L) // 2024-01-01, the corpus epoch
-      tbl(s, dir, "events")
-        .select(col("user_id"), x.as("x"), scaledLong(col("value"), 2).as("y"))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("x") * col("y")).as("sxy"))
-        .where(col("n") >= 2)
-        .withColumn("slope_cents_per_sec",
-          (col("n").cast("double") * col("sxy").cast("double")
-            - col("sx").cast("double") * col("sy").cast("double"))
-          / (col("n").cast("double") * col("sxx").cast("double")
-            - col("sx").cast("double") * col("sx").cast("double")))
-        .withColumn("intercept_cents",
-          (col("sy").cast("double")
-            - col("slope_cents_per_sec") * col("sx").cast("double"))
-            / col("n").cast("double"))
-        .select("user_id", "n", "slope_cents_per_sec", "intercept_cents")
-    }),
-    "q108_realized_vol" -> ((s, dir) => {
-      // realized volatility per (user, day): sqrt of the sum of
-      // squared log returns over consecutive observations (realized
-      // variance, Andersen & Bollerslev 1998). ln is last-ulp noisy
-      // across engines and the sum merges in partition order → round
-      // the VARIANCE at 4 (rule 9); sqrt of the pinned sum is then
-      // one deterministic IEEE op. One window exchange + map-side
-      // partial agg; zero-value prints (6 rows at sf0.1) are dropped
-      // before the log on both engines.
-      val w = Window.partitionBy("user_id", "day")
-        .orderBy(col("ts"), col("event_id"))
-      tbl(s, dir, "events")
-        .where(col("value") > 0)
-        .withColumn("day", to_date(col("ts")))
-        .withColumn("prev", lag("value", 1).over(w))
-        .where(col("prev").isNotNull)
-        .withColumn("r", log(col("value") / col("prev")))
-        .groupBy("user_id", "day")
-        .agg(count(lit(1)).as("n_ret"),
-          round(sum(col("r") * col("r")), 4).as("realized_var"))
-        .withColumn("realized_vol", sqrt(col("realized_var")))
-    }),
-    "q109_max_drawdown" -> ((s, dir) => {
-      // maximum drawdown per user: running peak via cumulative-max
-      // window, per-row drawdown = value/peak − 1 (exact parquet
-      // doubles through one IEEE division — bit-identical on both
-      // engines), max drawdown = min over those (order-free; no
-      // rounding anywhere). One window exchange reused by the agg.
-      val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      tbl(s, dir, "events")
-        .where(col("value") > 0)
-        .withColumn("peak", max("value").over(w))
-        .withColumn("dd", col("value") / col("peak") - lit(1.0))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_obs"), max("value").as("high"),
-          min(col("dd")).as("max_drawdown"))
-    }),
-    "q87_twap" -> ((s, dir) => {
-      // TWAP per (user, day) — q31's sibling with TIME weights: each
-      // observation weighted by how long it remained current (seconds
-      // until the next event in the day; the day's last event carries
-      // no weight). Exact arithmetic throughout: integer-cent value ×
-      // integer-second duration sums (both associativity-free), ONE
-      // double division sequence at the end — no rounding needed.
-      // Whole-second truncation of the duration is deterministic on
-      // both engines (floor of a positive integer division).
-      val w = Window.partitionBy("user_id", "day")
-        .orderBy(col("ts"), col("event_id"))
-      val us = unix_micros(col("ts").cast("timestamp"))
-      tbl(s, dir, "events")
-        .withColumn("day", to_date(col("ts")))
-        // integer `div`, NOT `/`: Spark's / on longs returns double
-        .withColumn("dur_us", lead(us, 1).over(w) - us)
-        .withColumn("dur_sec", expr("dur_us div 1000000"))
-        .where(col("dur_sec").isNotNull)
-        .groupBy("user_id", "day")
-        .agg(
-          (sum(scaledLong(col("value"), 2) * col("dur_sec")).cast("double")
-            / sum(col("dur_sec")).cast("double") / lit(100.0)).as("twap"),
-          sum(col("dur_sec")).as("active_sec"),
-          count(lit(1)).as("n_weighted"))
-    }),
-    "q85_resample_ffill" -> ((s, dir) => {
-      // regular-grid RESAMPLING with forward fill — the TSDB
-      // downsample/align operation (chart feeds, feature grids): per
-      // user an hourly grid spanning their activity, each point
-      // carrying the last event value at or before it. Composed from
-      // existing pieces: grid explode (sequence) + AsOfJoin — resample
-      // IS an as-of join against a generated axis. Right side
-      // pre-deduped per (user, ts) with a max_by(event_id) winner
-      // (hard rule 4, q29's rationale); grid points before a user's
-      // first event carry nulls on both engines (ASOF LEFT JOIN).
-      val ev = tbl(s, dir, "events").where(col("user_id") < 5)
-      val dedup = ev.groupBy("user_id", "ts")
-        .agg(max_by(col("value"), col("event_id")).as("value"))
-      Resample.ffill(Resample.grid(ev, "user_id", "ts", "hour", "1 hour"),
-          dedup, "user_id", "ts", "value")
-        .select("user_id", "grid_ts", "src_ts", "value")
-    }),
-    "q86_resample_lerp" -> ((s, dir) => {
-      // linear interpolation on the same grid: one backward + one
-      // forward as-of, then a fixed per-row lerp over exact integer
-      // micros — bit-equal across engines with NO rounding (ratio and
-      // multiply-add are single deterministic double ops). Exactly-on-
-      // a-point and one-sided grid points degrade to the neighbor.
-      val ev = tbl(s, dir, "events").where(col("user_id") < 5)
-      val dedup = ev.groupBy("user_id", "ts")
-        .agg(max_by(col("value"), col("event_id")).as("value"))
-      Resample.lerp(Resample.grid(ev, "user_id", "ts", "hour", "1 hour"),
-          dedup, "user_id", "ts", "value")
-        .select("user_id", "grid_ts", "prev_ts", "next_ts", "value")
-    }),
-    "q84_char_entropy" -> ((s, dir) => {
-      // character-entropy quality signal — the standard gibberish /
-      // encoded-blob filter of a web-corpus pipeline: H = -sum_c p_c
-      // log2 p_c over each doc's CODE POINTS. Per-char terms are
-      // bit-identical on both engines; only the SUM order differs, so
-      // H is rounded at 9 dp (hard rule 9; H is in [0, ~6.6] for
-      // text, the boundary sits ~1e6 ulps above the noise).
-      // `CharCounts` (native one-pass codepoint histogram) makes the
-      // char unit a code point on BOTH engines by construction —
-      // DuckDB's string_split('') and length() already count code
-      // points — and emits one row per DISTINCT char, not per char
-      // (q91 re-runs this exact shape on a supplementary-plane
-      // corpus; Spark's `length` is UTF8String.numChars = code
-      // points, so `len` needs no change).
-      // + 0.0 on BOTH engines: a uniform-character doc yields -0.0
-      // (every term is +0.0, negated) — Spark's round normalizes the
-      // sign, DuckDB's preserves it, and the driver hash is byte-exact
-      // on doubles; adding +0.0 canonicalizes signed zero identically
-      // (x + 0.0 == x for every other value)
-      tbl(s, dir, "documents")
-        .select(col("doc_id"), length(col("text")).cast("double").as("len"),
-          explode(graft.expressions.CharCounts(col("text"))).as(Seq("ch", "n")))
-        .groupBy("doc_id", "len")
-        .agg(count(lit(1)).as("n_distinct_chars"),
-          (round(-sum((col("n") / col("len")) * log2(col("n") / col("len"))), 9)
-            + lit(0.0)).as("entropy"))
-        .select("doc_id", "n_distinct_chars", "entropy")
-    }),
-    "q105_ccnet_perplexity" -> ((s, dir) => {
-      // CCNet perplexity filter (Wenzek et al. 2020): docs scored by
-      // log-perplexity under a hashed-bigram LM trained on the target
-      // slice (%13 docs), then head/middle/tail terciles computed
-      // SHARD-PARALLEL (a global ntile would funnel the corpus through
-      // one ranking partition). One hash exchange for (doc,bucket)
-      // counts, the 256-row LM broadcasts, integer tercile math.
-      val docs = tbl(s, dir, "documents")
-      Importance.ccnetPerplexity(
-        docs.where(pmod(col("doc_id"), lit(13L)) =!= 0),
-        docs.where(pmod(col("doc_id"), lit(13L)) === 0),
-        "doc_id", "text")
-    }),
-    "q104_gopher_rules" -> ((s, dir) => {
-      // Gopher rule-based quality gate (Rae et al. 2021): fixed-order
-      // rules with a per-doc quarantine reason; thresholds chosen to
-      // split this corpus on every rule. Zero-exchange codegen scan —
-      // exact integer/single-division arithmetic, no rounding.
-      tbl(s, dir, "documents")
-        .select(col("doc_id"), TextFunctions.gopherRules(col("text"),
-          Seq("the", "a", "of", "to", "and"),
-          minTokens = 20L, maxTokens = 90L,
-          minMeanLen = 4.25, maxMeanLen = 4.75,
-          minStopHits = 2L, minDistinctRatio = 0.35).as("g"))
-        .select(col("doc_id"), col("g.n_tokens").as("n_tokens"),
-          col("g.mean_word_len").as("mean_word_len"),
-          col("g.stop_hits").as("stop_hits"),
-          col("g.distinct_ratio").as("distinct_ratio"),
-          col("g.reason").as("reason"),
-          (col("g.reason") === "pass").as("pass"))
-    }),
-    "q112_winnow_fingerprints" -> ((s, dir) => {
-      // WINNOWING (Schleimer, Wilkerson & Aiken, SIGMOD 2003): the
-      // full local fingerprinting algorithm behind MOSS — every
-      // window of 4 consecutive 3-gram hashes contributes its minimum
-      // (rightmost on ties, the paper's robust-winnowing rule, via a
-      // (hash, -pos) struct min), and the distinct selections are the
-      // doc's fingerprint set (density 2/(w+1)) with positions — the
-      // guarantee q42's single global min cannot give: any shared
-      // substring ≥ w+k-1 tokens shares a fingerprint. One posexplode
-      // lineage, one window exchange, distinct on the same keys.
-      Dedup.winnowFingerprints(tbl(s, dir, "documents"),
-        "doc_id", "text", k = 3, w = 4)
-    }),
-    "q103_repeated_spans" -> ((s, dir) => {
-      // intra-corpus exact-substring dedup (Lee et al. 2022): 4-gram
-      // occurrences counted corpus-wide on ONE posexplode lineage
-      // (window over the shingle, q67 trick), positions of repeated
-      // 4-grams merged into maximal spans per doc via gaps-and-islands
-      // — two exchanges, no self-join, no suffix sort.
-      Dedup.repeatedSpans(tbl(s, dir, "documents"), "doc_id", "text", k = 4)
-    }),
-    "q102_dsir_sampling" -> ((s, dir) => {
-      // DSIR importance sampling (Xie et al. 2023): raw docs scored by
-      // a hashed-bigram log-likelihood ratio against a target-domain
-      // sample (%13 docs), selection shard-parallel (md5 deal — a
-      // global rank would funnel the corpus through one partition).
-      // One hash exchange for the (doc,bucket) counts, the 256-row
-      // log-ratio table broadcasts, same md5 buckets on both engines.
-      val docs = tbl(s, dir, "documents")
-      Importance.dsirWeights(
-        docs.where(pmod(col("doc_id"), lit(13L)) =!= 0),
-        docs.where(pmod(col("doc_id"), lit(13L)) === 0),
-        "doc_id", "text")
-    }),
-    "q101_semdedup" -> ((s, dir) => {
-      // SEMANTIC DEDUP (SemDeDup, Abbas et al. 2023): quantize the
-      // embedding space with the distributed Lloyd pass (bit-identical
-      // centroids under any partitioning), then within each cell drop
-      // every vector with a higher-priority cosine>=tau neighbor,
-      // priority = closest-to-centroid (tie: id). Centroids land in
-      // scratch parquet (own path — q101 never depends on q90), and
-      // DuckDB re-derives assignment, priorities and the dropped set
-      // from the same bytes — every float→double step exact, no
-      // rounding anywhere.
-      val path = Similarity.scratchSemCentroidsPath
-      val emb = tbl(s, dir, "embeddings")
-      val centroids = Similarity.quantizeDistributed(
-        emb, "vec_id", "embedding", nCentroids = 16, iters = 3)
-      import s.implicits._
-      centroids.toSeq.zipWithIndex.map { case (c, j) => (j, c) }
-        .toDF("cell", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(path)
-      Similarity.semDedup(emb, "vec_id", "embedding", centroids, tau = 0.3)
-    }),
-    "q107_hybrid_rrf" -> ((s, dir) => {
-      // hybrid retrieval (sparse + dense): BM25 top-20 and cosine
-      // top-20 for the same %101 queries, fused by Reciprocal Rank
-      // Fusion (Retrieval.rrfFuse). The fusion never touches the
-      // corpus — it joins two ≤ q·k rank frames and re-ranks; every
-      // score term is 1/(60+rank), bit-deterministic unrounded.
-      val docs = tbl(s, dir, "documents")
-      val emb = tbl(s, dir, "embeddings")
-      val bm = Retrieval.bm25TopK(
-        docs.where(pmod(col("doc_id"), lit(101L)) === 0), docs,
-        "doc_id", "text", k = 20, excludeSelf = true)
-      val cos = Similarity.cosineTopK(
-        emb.where(pmod(col("vec_id"), lit(101L)) === 0), emb,
-        "vec_id", "embedding", k = 20)
-      Retrieval.rrfFuse(Seq(
-        bm.select("query_id", "cand_id", "rank"),
-        cos.select("query_id", "cand_id", "rank")), k = 10)
-    }),
-    "q100_bm25_retrieval" -> ((s, dir) => {
-      // sparse lexical retrieval — BM25 ranked search as an
-      // inverted-index posting-list join (Retrieval.bm25TopK): the
-      // corpus becomes (term, doc, tf) postings once, df rides a
-      // window over the same lineage, N/avgdl stay in-plan as a 1-row
-      // broadcast, and the (always small) query side broadcasts into
-      // a term equi-join. Doc-as-query retrieval here: every %101 doc
-      // searches for its 5 nearest neighbors by BM25, self excluded.
-      val docs = tbl(s, dir, "documents")
-      Retrieval.bm25TopK(
-        docs.where(pmod(col("doc_id"), lit(101L)) === 0), docs,
-        "doc_id", "text", k = 5, excludeSelf = true)
-    }),
-    "q99_bloom_decontaminate" -> ((s, dir) => {
-      // q80's decontamination in the TOO-BIG-TO-BROADCAST regime: a
-      // Bloom filter over the eval shingle hashes pre-filters the
-      // train explode before a SHUFFLE join (pinned sort-merge — the
-      // shape the operator models); the exact join kills the filter's
-      // false positives, so the answer is bit-equal to q80 and the
-      // oracle is the same SQL. The 100 TB claim under gate: the
-      // shuffle carries ~fpp × train shingles + true matches, never
-      // the whole explode, and the filter broadcasts at ANY eval size.
-      val docs = tbl(s, dir, "documents")
-      Dedup.decontaminateBloom(
-        docs.where(pmod(col("doc_id"), lit(97L)) =!= 0),
-        docs.where(pmod(col("doc_id"), lit(97L)) === 0),
-        "doc_id", "text", k = 4)
-    }),
-    "q98_pii_scrub" -> ((s, dir) => {
-      // the FULL PII cleanup pass a public-corpus release runs (q77's
-      // scrub + phone + IPv4 masks): deterministic dirtying on both
-      // engines, fixed mask order (email/URL before phone/IP — an URL
-      // carries digit runs the IP pattern would bite into), counts
-      // taken pre-masking on the normalized text (ints → long).
-      val raw = concat(col("text"),
-        when(pmod(col("doc_id"), lit(7)) === 0,
-          concat(lit("  Contact USER"), col("doc_id").cast("string"),
-            lit("@Example.COM now"))).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(5)) === 0,
-          concat(lit(" call (555) 123-"),
-            lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0")))
-          .otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(9)) === 0,
-          concat(lit(" from 10.0."), pmod(col("doc_id"), lit(256)).cast("string"),
-            lit("."), pmod(col("doc_id") * 7, lit(256)).cast("string"),
-            lit(" today"))).otherwise(lit("")))
-      val norm = lower(TextFunctions.nfc(raw))
-      tbl(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.scrubPii(raw).as("clean"),
-        size(regexp_extract_all(norm, lit(TextFunctions.PhoneRe), lit(0)))
-          .cast("long").as("n_phones"),
-        size(regexp_extract_all(norm, lit(TextFunctions.Ipv4Re), lit(0)))
-          .cast("long").as("n_ips"))
-    }),
-    "q97_domain_cap" -> ((s, dir) => {
-      // per-domain frequency-cap sampling — the C4/RefinedWeb-style
-      // guard against one host dominating the corpus: extract each
-      // doc's (injected, deterministic) URL host, count docs per
-      // domain, and keep at most 12 per domain chosen by md5 hash
-      // order (a deterministic "random" subsample both engines rank
-      // identically; doc_id tiebreak, hard rule 4). Two window
-      // functions over ONE domain exchange — no self-join (the q83
-      // keeper trick).
-      val url = when(pmod(col("doc_id"), lit(3)) === 0,
-        concat(lit(" see https://h"), pmod(col("doc_id"), lit(10)).cast("string"),
-          lit(".example.com/p?id="), col("doc_id").cast("string")))
-        .otherwise(lit(""))
-      val w = Window.partitionBy("domain")
-      tbl(s, dir, "documents")
-        .select(col("doc_id"),
-          regexp_extract(concat(col("text"), url),
-            "https?://([a-z0-9.-]+)", 1).as("domain"))
-        .where(col("domain") =!= "")
-        .withColumn("n_domain_docs", count(lit(1)).over(w).cast("long"))
-        .withColumn("rk", row_number().over(
-          w.orderBy(md5(col("doc_id").cast("string")), col("doc_id"))))
-        .select(col("doc_id"), col("domain"), col("n_domain_docs"),
-          (col("rk") <= 12).as("kept"))
-    }),
-    "q96_near_dup_clusters" -> ((s, dir) => {
-      // PAIRS → CLUSTERS: the step every near-dup family feeds — q63's
-      // simhash pairs become dedup groups via distributed connected
-      // components (large-star/small-star contraction, O(log n) rounds
-      // at any diameter; see Components scaladoc), then every doc gets
-      // (cluster_id = component min, cluster_size, is_keeper) with
-      // singletons clustering to themselves. The fixpoint is unique,
-      // so the labeling is deterministic under any partitioning — what
-      // lets DuckDB re-derive it by recursive min-reachability over
-      // the same pair SQL.
-      val docs = tbl(s, dir, "documents")
-      val pairs = simhashPairs(s, dir)
-      val comp = Components.connectedComponents(pairs, "doc_a", "doc_b")
-      val lab = docs.select(col("doc_id"))
-        .join(comp, col("doc_id") === col("node"), "left")
-        .select(col("doc_id"),
-          coalesce(col("component"), col("doc_id")).as("cluster_id"))
-      val sizes = lab.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
-      // materialize BEFORE releasing the operator-owned caches (the
-      // label frame is a localCheckpoint — dropping its blocks while
-      // `out` is still lazy would strand the lineage)
-      val out = lab.join(sizes, "cluster_id")
-        .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-          (col("doc_id") === col("cluster_id")).as("is_keeper"))
-        .localCheckpoint()
-      comp.unpersist() // pairs stays persisted (memo-owned)
-      out
-    }),
-    "q171_kcore" -> ((s, dir) => {
-      // 5-CORE of the supplier↔customer trade graph (q156's edges,
-      // undirected): iterative peeling deletes every party whose
-      // current partner count drops below 5 until the fixpoint —
-      // thin-fringe customers peel first, their suppliers' degrees
-      // cascade down, and what survives is the densely-interconnected
-      // trading core. The k-core is the unique maximal
-      // min-degree-≥-k subgraph (peel-order independent), all-integer
-      // rounds, so the oracle replays the capped peel as a generated
-      // CTE chain; idempotence past the fixpoint keeps the
-      // fixed-block replay exact even when Spark's loop exits early.
-      val edges = tbl(s, dir, "lineitem")
-        .join(tbl(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_suppkey").as("src"),
-          (col("o_custkey") + 1000000L).as("dst"))
-      KCore.run(edges, "src", "dst", k = 5, maxRounds = 10)
-    }),
-    "q167_label_propagation" -> ((s, dir) => {
-      // COMMUNITY DETECTION over the shared near-dup pair graph
-      // (q63/q96/q131/q137's fifth consumer): 4 synchronous
-      // label-propagation rounds, every node adopting its neighbors'
-      // most frequent label with ties to the LOWEST — all-integer
-      // arithmetic under total-order tiebreaks, so the oracle replays
-      // the trajectory as a generated CTE chain with no rounding
-      // contract. Communities refine q96's components (a community
-      // never crosses a component wall); singleton docs label
-      // themselves, like q96.
-      val docs = tbl(s, dir, "documents")
-      val pairs = simhashPairs(s, dir)
-      val lp = LabelPropagation.run(pairs, "doc_a", "doc_b", iters = 4)
-      val lab = docs.select(col("doc_id"))
-        .join(lp, col("doc_id") === col("node"), "left")
-        .select(col("doc_id"),
-          coalesce(col("lbl"), col("doc_id")).as("community_id"))
-      val sizes = lab.groupBy("community_id")
-        .agg(count(lit(1)).as("community_size"))
-      // materialize before releasing the checkpointed label frame
-      val out = lab.join(sizes, "community_id")
-        .select(col("doc_id"), col("community_id"), col("community_size"))
-        .localCheckpoint()
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(lp)
-      out
-    }),
-    "q94_repetition_signals" -> ((s, dir) => {
-      // Gopher-style repetition quality filters (Rae et al. '21 §A1.1
-      // — the standard web-corpus gibberish/boilerplate screens),
-      // token-level for these single-line docs: coverage of the most
-      // frequent 2-gram, fraction of 2-gram instances that are
-      // duplicates, and the repeated-token fraction. The signal is
-      // purely doc-local, so it's ONE native expression pass inside
-      // codegen — a ZERO-exchange scan (plan-guarded), not an
-      // explode+groupBy (which also re-evaluates the interpreted
-      // size/array_distinct HOFs per exploded row — see
-      // RepetitionStats scaladoc). Every ratio is ONE double division
-      // of exactly-representable integer counts — bit-equal across
-      // engines, no rounding needed (hard rule 9's exact-arithmetic
-      // variant). Docs under 2 tokens have no 2-grams and are
-      // screened out (null stats) identically on both sides.
-      tbl(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.expressions.RepetitionStats(col("text"), lit(2)).as("r"))
-        .where(col("r").isNotNull)
-        .select(col("doc_id"), col("r.n_tokens").as("n_tokens"),
-          ((col("r.mx") * 2).cast("double") / col("r.n_tokens").cast("double"))
-            .as("top2_frac"),
-          (col("r.dup").cast("double") / col("r.tot").cast("double"))
-            .as("dup2_frac"),
-          ((col("r.n_tokens") - col("r.n_dtoks")).cast("double")
-            / col("r.n_tokens").cast("double")).as("dup_tok_frac"))
-    }),
-    "q91_unicode_planes" -> ((s, dir) => {
-      // the supplementary-plane gate for the whole text family: the
-      // corpus is deterministically salted with non-BMP code points
-      // (emoji U+1F600/U+1F680/U+1F916, CJK ext B U+20000/U+20001 —
-      // all TWO UTF-16 units each) plus a decomposed e+U+0301, written
-      // to scratch parquet, and BOTH engines re-derive codepoint
-      // length, the q84 entropy shape (CharCounts) and the q72
-      // char-trigram count from the same bytes. Before CharCounts /
-      // codepoint substr, Spark's UTF-16 splits would shear every
-      // emoji into two lone surrogates here — this entry is what
-      // proves the caveat is retired by construction, not by an
-      // ASCII-only corpus.
-      val path = TextFunctions.scratchUnicodePath
-      val salted = concat(col("text"),
-        when(pmod(col("doc_id"), lit(3)) === 0,
-          lit(" 😀😀🚀 emoji")).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(5)) === 0,
-          lit(" 𠀀𠀁𠀀")).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(7)) === 0,
-          lit(" 🤖bots🤖 café")).otherwise(lit("")))
-      tbl(s, dir, "documents").where(col("doc_id") < 500)
-        .select(col("doc_id"), salted.as("text"))
-        .write.mode("overwrite").parquet(path)
-      val src = s.read.parquet(path)
-      src.select(col("doc_id"),
-          length(col("text")).cast("long").as("n_cp"),
-          length(col("text")).cast("double").as("len"),
-          size(TextFunctions.charTrigrams(col("text"))).cast("long")
-            .as("n_trigrams"),
-          explode(graft.expressions.CharCounts(col("text"))).as(Seq("ch", "n")))
-        .groupBy("doc_id", "n_cp", "len", "n_trigrams")
-        .agg(count(lit(1)).as("n_distinct_chars"),
-          (round(-sum((col("n") / col("len")) * log2(col("n") / col("len"))), 9)
-            + lit(0.0)).as("entropy"))
-        .select("doc_id", "n_cp", "n_trigrams", "n_distinct_chars", "entropy")
-    }),
-    "q90_ivf_distributed" -> ((s, dir) => {
-      // THE 100 TB ANN ROUTING PATH end-to-end under the oracle: the
-      // distributed quantizer (executor-side Lloyd, exact BigDecimal
-      // cell sums — bit-identical centroids under ANY partitioning,
-      // `IvfQuantizerSpec`) trains on the full embeddings table, the
-      // centroids land in scratch parquet, and `ivfTopKWithCentroids`
-      // routes + re-ranks with them. DuckDB re-derives assignment,
-      // probes and the exact cosine top-k from the SAME centroid bytes
-      // (q40's SQL shape) — every float→double step is exact and both
-      // engines fold dot products in index order, so the gate is
-      // hash-exact, not approximate.
-      val path = Similarity.scratchCentroidsPath
-      val emb = tbl(s, dir, "embeddings")
-      val centroids = Similarity.quantizeDistributed(
-        emb, "vec_id", "embedding", nCentroids = 16, iters = 3)
-      import s.implicits._
-      centroids.toSeq.zipWithIndex.map { case (c, j) => (j, c) }
-        .toDF("cell", "cv")
-        .coalesce(1).write.mode("overwrite").parquet(path)
-      Similarity.ivfTopKWithCentroids(emb.where(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 5, centroids, nProbe = 4)
-    }),
-    // ── streaming family under the oracle (AvailableNow replay) ─────
-    "q88_stream_ingest" -> ((s, dir) => {
-      // THE STREAMING INGEST PATH ITSELF under the DuckDB oracle: a
-      // deterministic arrival log (base slice + in-batch duplicates +
-      // a cross-batch redelivery) is written to scratch parquet, the
-      // REAL `IngestPipeline` micro-batch pipeline replays it with
-      // Trigger.AvailableNow (maxFilesPerTrigger=1 → one micro-batch
-      // per arrival file), and the compacted table is returned. The
-      // oracle re-derives the end state from the same arrival bytes
-      // with the min-rule (earliest (ts, value) per event_id wins) —
-      // the reference's idempotent qualifier-overwrite semantics
-      // (`install/create_tables.sh:37`, `MarketLoader.scala:119`).
-      // Batch boundaries don't affect the answer (min is commutative
-      // across batches: in-batch dedup + compaction = global min),
-      // which is exactly the at-least-once + idempotent-sink contract.
-      val base = graft.streaming.IngestPipeline.scratchIngestBase
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      // stale checkpoints would make AvailableNow a no-op: full reset
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val ev = tbl(s, dir, "events").where(col("user_id") < 20)
-        .select("event_id", "user_id", "event_type", "value", "ts")
-      // arrival file 1: base slice + IN-batch duplicates (ids%5==0
-      // redelivered 2h later, value bumped — lose inside one batch)
-      val dup5 = ev.where(pmod(col("event_id"), lit(5)) === 0)
-        .withColumn("ts", col("ts") + expr("INTERVAL 2 HOURS"))
-        .withColumn("value", col("value") + lit(1000.0))
-      ev.unionByName(dup5).appendBatchTo(in, 0)
-      // arrival file 2: CROSS-batch redelivery (ids%3==0, 1h later) —
-      // lands in the append-only table, compaction must retire it
-      ev.where(pmod(col("event_id"), lit(3)) === 0)
-        .withColumn("ts", col("ts") + expr("INTERVAL 1 HOUR"))
-        .withColumn("value", col("value") + lit(500.0))
-        .appendBatchTo(in, 1)
-      val q = graft.streaming.IngestPipeline.startIngest(
-        graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1),
-        out, ckpt, "event_id", "ts")
-      q.awaitTermination()
-      graft.streaming.IngestPipeline.compact(s, out, "event_id",
-        Seq("ts", "value"))
-    }),
-    "q93_stream_decontaminate" -> ((s, dir) => {
-      // INGEST-TIME DECONTAMINATION under the oracle, cross-gating
-      // streaming == batch: the q80 train slice arrives as a 2-batch
-      // stream, `startDecontaminate` screens each micro-batch against
-      // the broadcast eval shingle set, and the oracle is q80's SQL
-      // VERBATIM — a train doc's shingles all live in the batch it
-      // arrives in, so the appended per-batch answers union to the
-      // global batch answer exactly (operator scaladoc). The
-      // dropDuplicates is the documented at-least-once compaction
-      // step (duplicate appends are bit-identical rows).
-      val base = graft.streaming.IngestPipeline.scratchDecontamBase
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val docs = tbl(s, dir, "documents")
-      val train = docs.where(pmod(col("doc_id"), lit(97L)) =!= 0)
-        .select("doc_id", "text")
-      train.where(col("doc_id") < 250)
-        .appendBatchTo(in, 0)
-      train.where(col("doc_id") >= 250)
-        .appendBatchTo(in, 1)
-      val q = graft.streaming.IngestPipeline.startDecontaminate(
-        graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1),
-        docs.where(pmod(col("doc_id"), lit(97L)) === 0),
-        "doc_id", "text", k = 4, out, ckpt)
-      q.awaitTermination()
-      s.read.parquet(out).dropDuplicates("train_id", "eval_id")
-    }),
-    "q116_ewma_scan" -> ((s, dir) => {
-      // Per-user EWMA y_i = 0.2 x_i + 0.8 y_(i-1) via the two-phase
-      // parallel affine scan (Scan.linearRecurrence) — the distributed
-      // re-expression of a sequential fold (NO single-partition
-      // window). Seam composition re-associates double math at the
-      // ulp level, so output is rounded per hard rule 9: values are
-      // <= ~500 with composition noise ~1e-11 abs; d=4 puts the round
-      // boundary (5e-5) ~5e6x above it. Oracle replays the fold
-      // per-row with list_reduce over the rn-prefix.
-      Scan.linearRecurrence(tbl(s, dir, "events"), "user_id",
-          Seq(("ts", true), ("event_id", true)), "value", a = 0.2, b = 0.8)
-        .select(col("user_id"), col("event_id"),
-          round(col("y"), 4).as("ewma"))
-    }),
-    "q117_cumsum_scan" -> ((s, dir) => {
-      // GLOBAL running total (ONE logical sequence — no partition key
-      // to hide behind) through the same parallel scan with a constant
-      // key: range partitioning preserves global order, per-partition
-      // carries compose on the driver, so the 100 TB shape is two
-      // linear passes instead of a single-task window. Exact, no
-      // rounding: cents are integers (< 2^53 summed) under a = b = 1,
-      // and the final /100.0 is one deterministic IEEE op per row on
-      // an exact integer — identical bits on both engines.
-      tbl(s, dir, "events")
-        .withColumn("g", lit(1))
-        .withColumn("cents", round(col("value") * 100, 0))
-        .transform(df => Scan.linearRecurrence(df, "g",
-          Seq(("ts", true), ("event_id", true)), "cents", a = 1.0, b = 1.0))
-        .select(col("event_id"), (col("y") / 100.0).as("cum_value"))
-    }),
-    "q118_pq_ann" -> ((s, dir) => {
-      // Product-quantization ADC ANN: 8 subspaces x 16 codes over
-      // dim=64 — candidates scanned as 8-code rows, never as raw
-      // vectors. iters=0 keeps the codebooks a pure function of the
-      // first 16 vectors (the q40 trick), so the DuckDB oracle
-      // re-derives codes, distance tables and the j-ordered ADC folds
-      // bit-exactly; the trained path (iters>0) is spec-covered.
-      val emb = tbl(s, dir, "embeddings")
-      Similarity.pqTopK(emb.where(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 5, m = 8, ksub = 16, iters = 0)
-    }),
-    "q170_sq8_ann" -> ((s, dir) => {
-      // SQ8 scalar-quantization ANN (completing the quantizer family
-      // LSH/IVF/PQ/IVF-PQ): one byte per DIMENSION against per-dim
-      // corpus min/max, queries scored on the dequantized floats.
-      // Everything — min/max, scales, codes, dequantized values, the
-      // index-ordered dot folds — is exact or single-rounded IEEE
-      // arithmetic, so the oracle re-derives the whole index from the
-      // table with no rounding contract.
-      val emb = tbl(s, dir, "embeddings")
-      Similarity.sq8TopK(emb.where(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 5)
-    }),
-    "q164_ivfpq_ann" -> ((s, dir) => {
-      // IVF-PQ / IVFADC (q40's coarse cells + q118's PQ codes,
-      // combined the Jégou-2011 way): vectors are stored as 8
-      // RESIDUAL codes in their coarse cell; a query probes its 2
-      // nearest cells with a per-cell residual distance table and
-      // scans only those cells' codes. Residuals make ADC scores
-      // comparable across probed cells (‖q−v‖ = ‖(q−c)−(v−c)‖) and
-      // are one float rounding of exact double subtractions —
-      // replayed verbatim by the oracle, which re-derives the entire
-      // index (coarse centroids AND residual codebooks) from the
-      // table itself via the iters=0 zero-literal trick.
-      val emb = tbl(s, dir, "embeddings")
-      Similarity.ivfPqTopK(emb.where(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 5, nCentroids = 16, nProbe = 2,
-        m = 8, ksub = 16)
-    }),
-    "q184_ivfpq_refined" -> ((s, dir) => {
-      // IVFADC+R (q164 + the q119 exact refinement INSIDE the probed
-      // cells — the configuration you'd actually ship): residual-ADC
-      // shortlists 50 candidates per query from 4 probed cells' codes
-      // alone, then only those 50 rows join back to raw vectors for
-      // an exact L2 re-rank to top-5. Recall recovers from pure ADC's
-      // honest 0.06 floor to >= 0.8 at nProbe=8 (IvfPqSpec); the
-      // oracle re-derives the whole index (iters=0 zero-literal
-      // trick) and replays shortlist + re-rank bit-exactly.
-      val emb = tbl(s, dir, "embeddings")
-      Similarity.ivfPqTopKRefined(emb.where(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 5, shortlist = 50, nCentroids = 16,
-        nProbe = 4, m = 8, ksub = 16)
-    }),
-    "q141_stream_outer_join" -> ((s, dir) => {
-      // LEFT-OUTER stream-stream join: q138's attribution, but every
-      // unmatched purchase must ALSO emit (with null click) — which
-      // the engine can only do once the watermark proves no matching
-      // click can still arrive. Sentinels on BOTH streams push the
-      // final watermark past every purchase so the null rows drain
-      // (join watermark = min of the sides); the buy-side sentinel
-      // necessarily emits as its own unmatched row and is filtered on
-      // readback by its reserved id. Oracle = the batch LEFT interval
-      // join, exact ids and timestamps.
-      val base = s"/tmp/graft_q141_ssouter_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val cin = s"$base/clicks"; val bin = s"$base/buys"
-      val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val (cScratch, bScratch) = clickBuyScratch(s, dir)
-      val clicks = s.read.parquet(cScratch)
-      val buys = s.read.parquet(bScratch)
-      val cut = lit("2024-01-15 00:00:00").cast("timestamp_ntz")
-      val far = lit("2024-03-01 00:00:00").cast("timestamp_ntz")
-      clicks.where(col("cts") < cut).appendBatchTo(cin, 0)
-      clicks.where(col("cts") >= cut).appendBatchTo(cin, 1)
-      // literal one-row frames: a limit(1) sentinel would silently
-      // vanish if the filtered side were empty, leaving the null rows
-      // undrained
-      s.range(1).select(lit(-1L).as("user_id"), far.as("cts"),
-        lit(-1L).as("click_id")).appendBatchTo(cin, 2)
-      buys.where(col("bts") < cut).appendBatchTo(bin, 0)
-      buys.where(col("bts") >= cut).appendBatchTo(bin, 1)
-      s.range(1).select(lit(-2L).as("user_id"), far.as("bts"),
-        lit(-2L).as("buy_id")).appendBatchTo(bin, 2)
-      val cStream = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(cin).schema, cin, maxFilesPerTrigger = 1)
-        .withColumn("cts", col("cts").cast("timestamp"))
-        .withWatermark("cts", "2 days")
-      val bStream = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(bin).schema, bin, maxFilesPerTrigger = 1)
-        .withColumn("bts", col("bts").cast("timestamp"))
-        .withWatermark("bts", "2 days")
-      val q = bStream.as("b").join(cStream.as("c"),
-          expr("""b.user_id = c.user_id AND
-                  bts >= cts AND bts <= cts + interval 1 hour"""),
-          "left_outer")
-        .select(col("buy_id"), col("click_id"),
-          col("b.user_id").as("user_id"), col("bts"), col("cts"))
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out).where(col("buy_id") =!= -2L)
-        .select(col("buy_id"), col("click_id"), col("user_id"),
-          col("bts").cast("timestamp_ntz").as("b_ts"),
-          col("cts").cast("timestamp_ntz").as("c_ts"))
-    }),
-    "q143_stream_sessions" -> ((s, dir) => {
-      // NATIVE streaming sessionization under the oracle, with
-      // ADVERSARIAL INTERLEAVING: the arrival batches split by event
-      // id PARITY, not time — every session's member rows are
-      // scattered across both micro-batches in arbitrary event-time
-      // order, so the session state store must merge partial sessions
-      // cross-batch and out of order (a 40-day watermark declares the
-      // whole replay in-order-tolerant; real deployments pick the
-      // lateness they pay state for). Each session emits exactly once
-      // when the watermark passes its close (the far sentinel drives
-      // the final watermark past every real session); the result
-      // equals the batch sessions, so q70's lag/cumsum SQL is the
-      // oracle verbatim.
-      val base = s"/tmp/graft_q143_sessions_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val ev = tbl(s, dir, "events").select("user_id", "ts", "event_id")
-      ev.where(pmod(col("event_id"), lit(2)) === 0)
-        .select("user_id", "ts").appendBatchTo(in, 0)
-      ev.where(pmod(col("event_id"), lit(2)) === 1)
-        .select("user_id", "ts").appendBatchTo(in, 1)
-      s.range(1).select(lit(-1L).as("user_id"),
-          lit("2024-03-15 00:00:00").cast("timestamp_ntz").as("ts"))
-        .appendBatchTo(in, 2)
-      val q = graft.streaming.Sessionize.sessions(
-          graft.streaming.IngestPipeline.fileSource(
-              s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-            .withColumn("ts", col("ts").cast("timestamp")),
-          "user_id", "ts", "30 minutes", watermarkDelay = Some("40 days"))
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out).where(col("user_id") =!= -1L)
-        .select(col("user_id"),
-          col("sess_start").cast("timestamp_ntz").as("sess_start"),
-          col("sess_end").cast("timestamp_ntz").as("sess_end"),
-          col("n_events"))
-    }),
-    "q142_stream_dedup" -> ((s, dir) => {
-      // NATIVE streaming dedup under the oracle: exact duplicate event
-      // rows are injected into BOTH arrival batches (in-batch and
-      // cross-batch redelivery) and dropDuplicatesWithinWatermark on
-      // the event id must collapse them — duplicates are bit-identical
-      // rows, so the survivor is unique regardless of arrival order
-      // and the oracle is SELECT DISTINCT over the same union. This
-      // gates the ENGINE's dedup state machinery, complementing the
-      // custom screens (q113-q115) and the idempotent sink (q88).
-      val base = s"/tmp/graft_q142_sdedup_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val ev = tbl(s, dir, "events")
-        .select("event_id", "user_id", "event_type", "value", "ts")
-      val cut = lit("2024-01-15 00:00:00").cast("timestamp_ntz")
-      val b1 = ev.where(col("ts") < cut)
-      val dupIn = b1.where(pmod(col("event_id"), lit(5)) === 0)
-      // batch 1 carries in-batch duplicates; batch 2 redelivers a
-      // slice of batch 1 (cross-batch, within the 20-day watermark)
-      b1.unionByName(dupIn).appendBatchTo(in, 0)
-      ev.where(col("ts") >= cut)
-        .unionByName(b1.where(pmod(col("event_id"), lit(3)) === 0))
-        .appendBatchTo(in, 1)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .withColumn("ts", col("ts").cast("timestamp"))
-        .withWatermark("ts", "20 days")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out).select(col("event_id"), col("user_id"),
-        col("event_type"), col("value"),
-        col("ts").cast("timestamp_ntz").as("ts"))
-    }),
-    "q140_snapshot_diff" -> ((s, dir) => {
-      // DATASET VERSIONING: diff two corpus releases (v2 deletes
-      // %13 ids, revises %7 texts, adds %11 ids under new ids) into
-      // per-id added/removed/changed/unchanged verdicts. Each side
-      // reduces to (id, md5) in its own scan; one full-outer hash
-      // join moves digests, never documents. Exact strings + the
-      // shared md5 make the oracle literal.
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      val v2 = docs.where(pmod(col("doc_id"), lit(13L)) =!= 0)
-        .withColumn("text",
-          when(pmod(col("doc_id"), lit(7L)) === 0,
-            concat(col("text"), lit(" rev2"))).otherwise(col("text")))
-        .unionByName(docs.where(pmod(col("doc_id"), lit(11L)) === 0)
-          .select((col("doc_id") + lit(1000000L)).as("doc_id"),
-            concat(col("text"), lit(" new")).as("text")))
-      SnapshotDiff.diff(docs, v2, "doc_id", "text")
-    }),
-    "q139_quality_model" -> ((s, dir) => {
-      // BROADCAST-MODEL INFERENCE: a linear quality classifier scored
-      // as one zero-shuffle codegen projection — weights are plan
-      // literals, features exact arithmetic, the logit a fixed-order
-      // double chain (publish the logit, never the sigmoid — exp is
-      // libm-sensitive). The same weights live in the oracle SQL.
-      Scoring.linearQualityScore(tbl(s, dir, "documents"),
-        "doc_id", "text", Array(-3.75, 2.0, 2.0, 8.0, 0.25))
-    }),
-    "q138_stream_interval_join" -> ((s, dir) => {
-      // STREAM-STREAM interval join under the oracle: purchases
-      // attributed to every click by the same user in the preceding
-      // hour, BOTH sides live watermarked streams. Adversarial
-      // arrival: the last pre-cut day of clicks is withheld to batch
-      // 2 — purchases buffered in join state still match them when
-      // they arrive (2-day watermark covers the 1-day withholding),
-      // so the replay equals the batch interval join and plain SQL is
-      // the oracle. Inner-join semantics: pairs emit in the batch
-      // where the second side arrives; no flush sentinel needed.
-      val base = s"/tmp/graft_q138_ssjoin_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val cin = s"$base/clicks"; val bin = s"$base/buys"
-      val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val (cScratch, bScratch) = clickBuyScratch(s, dir)
-      val clicks = s.read.parquet(cScratch)
-      val buys = s.read.parquet(bScratch)
-      val cut = lit("2024-01-15 00:00:00").cast("timestamp_ntz")
-      val lateFrom = lit("2024-01-14 00:00:00").cast("timestamp_ntz")
-      clicks.where(col("cts") < lateFrom).appendBatchTo(cin, 0)
-      clicks.where(col("cts") >= lateFrom).appendBatchTo(cin, 1)
-      buys.where(col("bts") < cut).appendBatchTo(bin, 0)
-      buys.where(col("bts") >= cut).appendBatchTo(bin, 1)
-      val cStream = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(cin).schema, cin, maxFilesPerTrigger = 1)
-        .withColumn("cts", col("cts").cast("timestamp"))
-        .withWatermark("cts", "2 days")
-      val bStream = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(bin).schema, bin, maxFilesPerTrigger = 1)
-        .withColumn("bts", col("bts").cast("timestamp"))
-        .withWatermark("bts", "2 days")
-      val q = bStream.as("b").join(cStream.as("c"),
-          expr("""b.user_id = c.user_id AND
-                  bts >= cts AND bts <= cts + interval 1 hour"""))
-        .select(col("buy_id"), col("click_id"), col("b.user_id").as("user_id"),
-          col("bts"), col("cts"))
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out).select(col("buy_id"), col("click_id"),
-        col("user_id"), col("bts").cast("timestamp_ntz").as("b_ts"),
-        col("cts").cast("timestamp_ntz").as("c_ts"))
-    }),
-    "q136_kmv_setops" -> ((s, dir) => {
-      // KMV sketch SET OPERATIONS — what HLL cannot do: per event
-      // type the k=64 smallest distinct user-hashes, then per type
-      // pair the union estimate ((k-1)*2^52 / kth of the merged
-      // sketch) and the intersection estimate (overlap fraction of
-      // the union sketch x est_union), next to the exact answers.
-      // Every estimator input is an exact integer and every double op
-      // appears once in a fixed order — hash-exact, no rounding.
-      val k = 64
-      val ev = tbl(s, dir, "events")
-      val sk = ev.groupBy("event_type")
-        .agg(graft.expressions.KmvSketch(
-          col("user_id").cast("string"), k).as("sk"))
-      kmvSetOps(ev, sk, k)
-    }),
-    "q185_kmv_rollup" -> ((s, dir) => {
-      // KMV SKETCH TABLE (completing the sketch-table quartet
-      // q176/q179/q180): per-(event_type, day) k=64 KMV states are
-      // computed once and PERSISTED, then q136's per-type-pair set
-      // operations are answered by MERGING the stored states to type
-      // level — KMV merge is distinct-union + sort + take-k, and any
-      // hash among the global k smallest is among its own day's k
-      // smallest, so the rollup is BIT-IDENTICAL to sketching the
-      // raw data: q136's SQL is the oracle verbatim, and coarser
-      // grains (or the set ops themselves) never re-read raw rows —
-      // O(groups × k × 8 B), the one sketch whose stored states
-      // also compose under union/intersection estimation.
-      val k = 64
-      val scratch = s"/tmp/graft_q185_kmv_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-      val ev = tbl(s, dir, "events")
-      ev.withColumn("day", to_date(col("ts")))
-        .groupBy("event_type", "day")
-        .agg(graft.expressions.KmvSketch(
-          col("user_id").cast("string"), k).as("sk"))
-        .write.parquet(scratch)
-      val sk = s.read.parquet(scratch)
-        .select(col("event_type"), explode(col("sk")).as("h"))
-        .groupBy("event_type")
-        .agg(slice(array_sort(collect_set(col("h"))), 1, k).as("sk"))
-      kmvSetOps(ev, sk, k)
-    }),
-    "q137_triangles" -> ((s, dir) => {
-      // GRAPH SHAPE of the near-dup pair set: exact edge, wedge and
-      // triangle counts + global clustering coefficient over q63's
-      // simhash graph. Triangles by DEGREE-ORIENTED join (Chiba–
-      // Nishizeki / MR node-iterator++): orient every edge from the
-      // (degree, id)-smaller endpoint to the larger, then wedge-join
-      // oriented edges and close against the oriented edge set. The
-      // total order makes the orientation acyclic, so each triangle
-      // matches the pattern u→v, v→w, u→w exactly once — and oriented
-      // out-degree is O(sqrt(m)), so the wedge intermediate is
-      // O(m^1.5) worst-case instead of the O(sum deg²) an id-oriented
-      // join pays on hub-skewed graphs. Wedges from the degree sum —
-      // exact integers; the one division is a fixed-order double op.
-      val pairs = simhashPairs(s, dir)
-      val e = pairs.select("doc_a", "doc_b")
-      val deg = e.select(col("doc_a").as("n"))
-        .unionByName(e.select(col("doc_b").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-      val withDeg = e
-        .join(deg.select(col("n").as("doc_a"), col("d").as("da")), "doc_a")
-        .join(deg.select(col("n").as("doc_b"), col("d").as("db")), "doc_b")
-      val oriented = withDeg.select(
-        when(col("da") < col("db") ||
-            (col("da") === col("db") && col("doc_a") < col("doc_b")),
-          col("doc_a")).otherwise(col("doc_b")).as("u"),
-        when(col("da") < col("db") ||
-            (col("da") === col("db") && col("doc_a") < col("doc_b")),
-          col("doc_b")).otherwise(col("doc_a")).as("v"))
-        .localCheckpoint() // three consumers of one small edge list
-      val tri = oriented.as("e1")
-        .join(oriented.as("e2"), col("e1.v") === col("e2.u"))
-        .join(oriented.as("e3"),
-          col("e3.u") === col("e1.u") && col("e3.v") === col("e2.v"))
-        .agg(count(lit(1)).as("n_triangles"))
-      val wedges = deg.agg(
-        // sum exact longs FIRST, halve once (product is even, sum
-        // < 2^53 -> the double halving is exact) — never sum doubles
-        (sum(col("d") * (col("d") - 1)) / lit(2)).cast("long").as("n_wedges"))
-      val edges = e.agg(count(lit(1)).as("n_edges"))
-      val out = edges.crossJoin(wedges).crossJoin(tri)
-        .select(col("n_edges"), col("n_wedges"), col("n_triangles"),
-          when(col("n_wedges") === 0, lit(0.0))
-            .otherwise(lit(3.0) * col("n_triangles") / col("n_wedges"))
-            .as("global_clustering"))
-        .localCheckpoint()
-      oriented.unpersist() // pairs stays persisted (memo-owned)
-      out
-    }),
-    "q135_stream_countmin" -> ((s, dir) => {
-      // STREAMING Count-Min under the oracle: the token counter
-      // matrix accumulates across two arrival batches through the
-      // state store (matrix addition is order-free), and the final
-      // snapshot answers the same top-20 point queries as batch
-      // q132 — whose SQL is the oracle verbatim.
-      val base = s"/tmp/graft_q135_stream_cms_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val d = 4; val w = 256
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      docs.where(col("doc_id") < 250).appendBatchTo(in, 0)
-      docs.where(col("doc_id") >= 250).appendBatchTo(in, 1)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-        .agg(graft.expressions.CountMin(col("tok"), d, w).as("m"))
-        .writeStream
-        .outputMode("complete")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("overwrite").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      val cms = s.read.parquet(out)
-      val probes = docs
-        .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("exact_count"))
-        .orderBy(col("exact_count").desc, col("tok")).limit(20)
-      val cellEsts = (0 until d).map(i => element_at(col("m"),
-        (graft.expressions.CountMin.cellCol(col("tok"), i, w)
-          + lit(i * w) + lit(1)).cast("int")))
-      probes.crossJoin(broadcast(cms))
-        .select(col("tok").as("token"), col("exact_count"),
-          least(cellEsts: _*).as("est_count"))
-    }),
-    "q175_stream_fingerprint" -> ((s, dir) => {
-      // STREAMING CONTENT FINGERPRINTS: q173's per-day digests
-      // maintained LIVE through the state store across two
-      // event-id-parity arrival batches — the anti-entropy monitor a
-      // replica runs continuously instead of re-scanning 100 TB.
-      // XOR / bounded sum / count are commutative and
-      // arrival-order-free, so the replay snapshot equals the batch
-      // digest table and q173's SQL is the oracle verbatim.
-      val base = s"/tmp/graft_q175_stream_fp_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val ev = tbl(s, dir, "events")
-        .select("event_id", "user_id", "event_type", "ts", "value")
-      ev.where(pmod(col("event_id"), lit(2)) === 0).appendBatchTo(in, 0)
-      ev.where(pmod(col("event_id"), lit(2)) === 1).appendBatchTo(in, 1)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .withColumn("day", to_date(col("ts")).cast("string"))
-        .withColumn("us", unix_micros(col("ts").cast("timestamp")))
-        .withColumn("cents", scaledLong(col("value"), 2))
-        .withColumn("h", Fingerprint.rowHash(Seq(col("event_id"),
-          col("user_id"), col("event_type"), col("us"), col("cents"))))
-        .groupBy("day")
-        .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("xor_fp"),
-          sum(pmod(col("h"), lit(4294967296L))).as("sum_lo"))
-        .writeStream
-        .outputMode("complete")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("overwrite").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out)
-    }),
-    "q165_stream_ddsketch" -> ((s, dir) => {
-      // STREAMING DDSketch under the oracle — completing the
-      // state-store sketch trio (q134 HLL distinct, q135 CMS
-      // frequency, this one quantiles): the per-group bucket
-      // histogram accumulates across two l_orderkey-parity arrival
-      // batches through the state store (bucket-count addition is
-      // order-free, so the snapshot is a pure function of the
-      // multiset), and the final complete-mode snapshot answers the
-      // same p50/p90/p99 as batch q130 — whose SQL is the oracle
-      // verbatim.
-      val base = s"/tmp/graft_q165_stream_dd_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val li = tbl(s, dir, "lineitem")
-        .select("l_orderkey", "l_returnflag", "l_extendedprice")
-      li.where(pmod(col("l_orderkey"), lit(2)) === 0).appendBatchTo(in, 0)
-      li.where(pmod(col("l_orderkey"), lit(2)) === 1).appendBatchTo(in, 1)
-      val bounds = graft.expressions.DdSketch.boundaries(0.01, 1.0, 2e5)
-      val qs = Array(0.5, 0.9, 0.99)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .groupBy("l_returnflag")
-        .agg(graft.expressions.DdSketchAggregate(
-          col("l_extendedprice"), bounds, qs).as("ests"))
-        .writeStream
-        .outputMode("complete")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("overwrite").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out)
-        .select(col("l_returnflag"),
-          posexplode(col("ests")).as(Seq("qi", "est")))
-        .select(col("l_returnflag"),
-          element_at(lit(qs), col("qi") + 1).as("q"), col("est"))
-    }),
-    "q134_stream_hll" -> ((s, dir) => {
-      // STREAMING HLL under the oracle: the same per-group distinct
-      // sketch as q133, but computed by a streaming aggregation whose
-      // TypedImperativeAggregate REGISTERS live in the state store
-      // across micro-batches (serialize/deserialize exercised on the
-      // real state path). Two event-time-split arrival batches; the
-      // complete-mode snapshot after the replay must equal the batch
-      // sketch over all events — register max is order-free, so the
-      // oracle is q133's register rebuild minus the exact column.
-      val base = s"/tmp/graft_q134_stream_hll_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val ev = tbl(s, dir, "events")
-        .select("event_type", "user_id", "ts")
-      val cut = lit("2024-01-15 00:00:00").cast("timestamp_ntz")
-      ev.where(col("ts") < cut).appendBatchTo(in, 0)
-      ev.where(col("ts") >= cut).appendBatchTo(in, 1)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .groupBy("event_type")
-        .agg(round(graft.expressions.HllSketch(
-          col("user_id").cast("string"), p = 9), 4).as("approx_distinct"))
-        .writeStream
-        .outputMode("complete")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("overwrite").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out)
-    }),
-    "q133_hll_distinct" -> ((s, dir) => {
-      // HyperLogLog distinct users per event type NEXT TO the exact
-      // answer: 512 byte registers per group instead of the exact
-      // count_distinct expand — the 100 TB distinct-count path.
-      // Register-exact oracle: same md5-52-bit hash, same
-      // floor(log2) rank, same index-ordered harmonic fold; the one
-      // libm-sensitive op (the linear-counting ln) is covered by
-      // rounding the estimate (hard rule 9).
-      tbl(s, dir, "events")
-        .groupBy("event_type")
-        .agg(
-          round(graft.expressions.HllSketch(
-            col("user_id").cast("string"), p = 9), 4).as("approx_distinct"),
-          count_distinct(col("user_id")).as("exact_distinct"))
-    }),
-    "q132_countmin_freq" -> ((s, dir) => {
-      // Count-Min frequency sketch: a 4x256 long-counter matrix
-      // replaces the vocabulary-sized histogram (constant memory per
-      // group at any corpus size; merge = matrix addition, a pure
-      // function of the multiset). Point estimates for the exact
-      // top-20 tokens are the min over the 4 hashed cells —
-      // overestimate-only, and hash-EXACT against the oracle because
-      // the md5-derived hash family and every counter are identical
-      // integer arithmetic on both engines.
-      val d = 4; val w = 256
-      val toks = tbl(s, dir, "documents")
-        .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-      val cms = toks.agg(graft.expressions.CountMin(col("tok"), d, w).as("m"))
-      val probes = toks.groupBy("tok").agg(count(lit(1)).as("exact_count"))
-        .orderBy(col("exact_count").desc, col("tok")).limit(20)
-      val cellEsts = (0 until d).map(i => element_at(col("m"),
-        (graft.expressions.CountMin.cellCol(col("tok"), i, w)
-          + lit(i * w) + lit(1)).cast("int")))
-      probes.crossJoin(broadcast(cms))
-        .select(col("tok").as("token"), col("exact_count"),
-          least(cellEsts: _*).as("est_count"))
-    }),
-    "q131_stream_components" -> ((s, dir) => {
-      // INCREMENTAL CONNECTED COMPONENTS under the oracle: q96's
-      // simhash pairs arrive in two micro-batches (split so clusters
-      // SPAN the boundary) and StreamingComponents folds each batch
-      // into the labels table via star-edge contraction — labels after
-      // the replay must equal batch CC over all pairs, so q96's
-      // recursive min-reachability SQL is the oracle VERBATIM. This
-      // closes the last batch-only step in the streaming dedup story:
-      // screen (q113/q114/q115) -> pairs -> clusters, all incremental.
-      val base = graft.streaming.StreamingComponents.scratchBase
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val labels = s"$base/labels"
-      val ckpt = s"$base/ckpt"
-      val docs = tbl(s, dir, "documents")
-      val pairs = simhashPairs(s, dir)
-      pairs.select("doc_a", "doc_b")
-        .where(col("doc_a") < 250).appendBatchTo(in, 0)
-      pairs.select("doc_a", "doc_b")
-        .where(col("doc_a") >= 250).appendBatchTo(in, 1)
-      val q = graft.streaming.StreamingComponents.start(
-        graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1),
-        "doc_a", "doc_b", labels, ckpt)
-      q.awaitTermination()
-      val comp = graft.streaming.StreamingComponents.readLabels(s, labels)
-      val lab = docs.select(col("doc_id"))
-        .join(comp, col("doc_id") === col("node"), "left")
-        .select(col("doc_id"),
-          coalesce(col("component"), col("doc_id")).as("cluster_id"))
-      val sizes = lab.groupBy("cluster_id")
-        .agg(count(lit(1)).as("cluster_size"))
-      lab.join(sizes, "cluster_id")
-        .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-          (col("doc_id") === col("cluster_id")).as("is_keeper"))
-    }),
-    "q157_personalized_pagerank" -> ((s, dir) => {
-      // PERSONALIZED PageRank (random walk with restart) over q156's
-      // trade graph: the teleport vector concentrates on every tenth
-      // supplier — proximity-to-seeds importance, the graph-retrieval
-      // / recommendation variant. Same determinism contract as q156
-      // (per-iteration 12-dp rounding); the oracle replays all 10
-      // seeded iterations from generated materialized CTE blocks.
-      val edges = tbl(s, dir, "lineitem")
-        .join(tbl(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_suppkey").as("src"),
-          (col("o_custkey") + 1000000L).as("dst"))
-      // seeds from the supplier TABLE, not from `edges` — a
-      // seeds-from-edges frame would re-run the lineitem⋈orders join
-      // a second time at init (the r11 q157-vs-q156 +1.1 s gap).
-      // Identical seed set: FK gives l_suppkey ⊆ s_suppkey, dst ids
-      // live in a disjoint +1000000 space, and PageRank drops seeds
-      // absent from the graph via the nodes join anyway.
-      val seeds = tbl(s, dir, "supplier")
-        .select(col("s_suppkey").cast("long").as("node"))
-        .where(col("node") % 10 === 0)
-      PageRank.personalized(edges, "src", "dst", seeds,
-        iters = 10, damping = 0.85)
-    }),
-    "q156_pagerank" -> ((s, dir) => {
-      // PAGERANK over the supplier→customer trade graph (who do the
-      // important buyers buy from): 10 fixed power iterations at
-      // d=0.85, each iteration ROUNDED to 12 dp on both engines —
-      // rank mass sums are order-sensitive doubles (hard rule 9), and
-      // per-iteration rounding pins the trajectory exactly (values
-      // ~1e-3, ulp noise ~1e-18, a million-fold margin). Dangling
-      // nodes (customers, no out-edges) simply leak mass — the
-      // documented simple variant, identical on both engines. Each
-      // round is one join + one aggregate; lineage cut per round
-      // (localCheckpoint — the iterative-DataFrame discipline of
-      // Components). The oracle replays all 10 iterations from
-      // generated k-block SQL, every CTE materialized (rule 11).
-      val edges = tbl(s, dir, "lineitem")
-        .join(tbl(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_suppkey").as("src"),
-          (col("o_custkey") + 1000000L).as("dst"))
-      PageRank.run(edges, "src", "dst", iters = 10, damping = 0.85)
-    }),
-    "q162_weighted_pagerank" -> ((s, dir) => {
-      // WEIGHTED PageRank over the nation-level trade graph (buyer
-      // nation → supplier nation): a contribution is the edge's share
-      // of the source's total out-FLOW (`w / Σ_src w`), so rank
-      // follows trade volume, not link count — the "rank suppliers by
-      // flow" variant. Weights are l_quantity sums: integer-valued
-      // doubles, so every weight and out-weight total is EXACT under
-      // any partitioning (order-invariant integer sums); the mass sum
-      // stays order-sensitive and the q156 per-iteration 12-dp
-      // rounding pins the trajectory. Oracle: the same generated
-      // materialized k-block replay, with `r * w / wsum` mass.
-      val edges = tbl(s, dir, "lineitem")
-        .join(tbl(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(tbl(s, dir, "customer"),
-          col("o_custkey") === col("c_custkey"))
-        .join(tbl(s, dir, "supplier"),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("c_nationkey").as("src"),
-          col("s_nationkey").as("dst"),
-          col("l_quantity").as("w"))
-      PageRank.weighted(edges, "src", "dst", "w",
-        iters = 10, damping = 0.85)
-    }),
-    "q163_converged_pagerank" -> ((s, dir) => {
-      // CONVERGENCE-STOPPED weighted PageRank (residual early stop
-      // with a fixed cap): iterate until `max |r_i - r_{i-1}| <
-      // 1e-9`, cap 15, over q162's weighted nation flow graph. The
-      // residual is the MAX-norm over per-node diffs of 12-dp-rounded
-      // ranks — max is order-INVARIANT, so the stop iteration is
-      // deterministic with no extra rounding, and the static oracle
-      // replays it: all 15 blocks materialized, one residual row per
-      // step, `min(i) FILTER (d < eps)` picks the same iteration the
-      // Spark loop stopped at. The dense weighted graph mixes at the
-      // weight-fluctuation scale (|λ2| ≪ damping), so the early stop
-      // genuinely engages at a non-trivial iteration (unweighted
-      // would be degenerate here: the complete nation graph reaches
-      // its stationary point in one step).
-      val edges = tbl(s, dir, "lineitem")
-        .join(tbl(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(tbl(s, dir, "customer"),
-          col("o_custkey") === col("c_custkey"))
-        .join(tbl(s, dir, "supplier"),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("c_nationkey").as("src"),
-          col("s_nationkey").as("dst"),
-          col("l_quantity").as("w"))
-      PageRank.converged(edges, "src", "dst",
-        maxIters = 15, eps = 1e-9, damping = 0.85,
-        weightCol = Some("w"))
-    }),
-    "q155_asof_nearest" -> ((s, dir) => {
-      // NEAREST as-of (merge_asof direction='nearest'), completing
-      // the family (backward q29, forward q61, tolerance q129): each
-      // purchase takes whichever click is closer in time — backward
-      // on exact ties. Distance compares are exact integer micros;
-      // the oracle re-derives it from one backward + one forward
-      // DuckDB ASOF join with the identical CASE.
-      val ev = tbl(s, dir, "events")
-      val clicks = ev.where(col("event_type") === "click")
-        .groupBy("user_id", "ts")
-        .agg(max_by(col("value"), col("event_id")).as("value"))
-      AsOfJoin.asOfNearest(
-          left = ev.where(col("event_type") === "purchase"),
-          right = clicks,
-          keyCols = Seq("user_id"), leftTime = "ts", rightTime = "ts",
-          rightVals = Seq("ts" -> "nearest_click_ts",
-            "value" -> "nearest_click_value"))
-        .select(col("event_id"), col("user_id"), col("ts"), col("value"),
-          col("nearest_click_ts"), col("nearest_click_value"))
-    }),
-    "q153_sequence_packing" -> ((s, dir) => {
-      // SEQUENCE PACKING for LLM pretraining: documents concatenate
-      // in a deterministic order and split at fixed context-window
-      // boundaries (L=512 tokens) — GPT-style pack-and-split. The
-      // global token cumsum runs through the two-phase parallel scan
-      // (q116/q117's operator: range partitioning + driver-composed
-      // carries), never a single-partition window. Output per doc:
-      // token count, first/last window index, straddle flag. Exact
-      // integers (double cumsum of ints < 2^53, truncating division
-      // of non-negatives == floor == DuckDB's //).
-      val L = 512
-      val toks = tbl(s, dir, "documents")
-        .select(col("doc_id"),
-          size(TextFunctions.tokens(col("text"))).cast("double").as("ntok"))
-        .withColumn("g", lit(1))
-      Scan.linearRecurrence(toks, "g", Seq(("doc_id", true)), "ntok",
-          a = 1.0, b = 1.0)
-        .where(col("ntok") > 0)
-        .select(col("doc_id"), col("ntok").cast("long").as("n_tokens"),
-          ((col("y") - col("ntok")) / L).cast("long").as("seq_start"),
-          ((col("y") - 1) / L).cast("long").as("seq_end"))
-        .withColumn("straddles", col("seq_end") > col("seq_start"))
-    }),
-    "q154_chunking" -> ((s, dir) => {
-      // RAG CHUNKER: sliding token windows (size 64, stride 48 — 16
-      // overlap) per document, re-joined to text — the indexing-side
-      // twin of the retrieval family (q100/q107 consume such chunks).
-      // One explode per chunk start; slice clamps at the tail on both
-      // engines. Deterministic strings and exact integers.
-      val size64 = 64; val stride = 48
-      tbl(s, dir, "documents")
-        .select(col("doc_id"), TextFunctions.tokens(col("text")).as("tk"))
-        .withColumn("n", size(col("tk")))
-        .where(col("n") > 0)
-        .select(col("doc_id"), col("tk"), col("n"),
-          explode(sequence(lit(0), col("n") - 1, lit(stride))).as("start"))
-        .select(col("doc_id"),
-          (col("start") / stride).cast("long").as("chunk_idx"),
-          slice(col("tk"), col("start") + 1, lit(size64)).as("chunk"))
-        .select(col("doc_id"), col("chunk_idx"),
-          size(col("chunk")).cast("long").as("n_chunk_tokens"),
-          array_join(col("chunk"), " ").as("chunk_text"))
-    }),
-    "q151_profile" -> ((s, dir) => {
-      // COLUMN PROFILER (the Deequ/TFDV-style table summary every
-      // ingest pipeline runs before training): per numeric column —
-      // row count, null count, exact distinct, min, max — computed in
-      // ONE scan (a single multi-aggregate; the distinct counts share
-      // Spark's expand) and emitted long-format. Counts are exact
-      // longs, min/max are exactly-representable parquet doubles.
-      val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val aggs = cols.flatMap(c => Seq(
-        count(lit(1)).as(s"n_$c"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"),
-        count_distinct(col(c)).as(s"distinct_$c"),
-        min(col(c)).cast("double").as(s"min_$c"),
-        max(col(c)).cast("double").as(s"max_$c")))
-      tbl(s, dir, "lineitem")
-        .agg(aggs.head, aggs.tail: _*)
-        .select(explode(array(cols.map(c => struct(
-          lit(c).as("col_name"),
-          col(s"n_$c").as("n"),
-          col(s"nulls_$c").as("nulls"),
-          col(s"distinct_$c").as("n_distinct"),
-          col(s"min_$c").as("min_v"),
-          col(s"max_$c").as("max_v"))): _*)).as("m"))
-        .select(col("m.col_name"), col("m.n"), col("m.nulls"),
-          col("m.n_distinct"), col("m.min_v"), col("m.max_v"))
-    }),
-    "q159_unigram_train" -> ((s, dir) => {
-      // Unigram-LM (SentencePiece-family) tokenizer TRAINING under
-      // the oracle — the Llama/T5-class tokenizer completing the
-      // BPE (q123) / WordPiece (q145) family. Hard-EM over the
-      // Heaps'-bounded word histogram: substring seeding, 3 Viterbi-
-      // EM iterations, frequency prune — all exact-long counts; the
-      // only doubles are the per-iteration log-probs, rounded 7dp
-      // (rule 9), so DuckDB re-trains bit-for-bit: the EM chain is a
-      // generated materialized-CTE pipeline (q123's k-block trick)
-      // whose per-position DP blocks replay the identical Viterbi.
-      UnigramLm.trainVocab(tbl(s, dir, "documents"), "text")
-    }),
-    "q160_unigram_encode" -> ((s, dir) => {
-      // The encode half: per histogram word, the max-likelihood
-      // Viterbi segmentation under the pruned vocab — (w, freq,
-      // pieces, n_pieces). DuckDB re-trains AND re-encodes via one
-      // more generated DP pass under the final log-prob table.
-      UnigramLm.encodeHistogram(tbl(s, dir, "documents"), "text")
-    }),
-    "q158_profile_sketch" -> ((s, dir) => {
-      // SKETCH-MODE column profiler — q151's summary, 100 TB shape:
-      // exact count_distinct over k columns EXPANDs every scanned row
-      // k-fold before the shuffle; the sparse-HLL aggregate (q146)
-      // profiles all k columns in ONE pass with NO Expand node
-      // (plan-guarded) and O(min(distinct, 2^p)) state per column.
-      // Hash input is the scaled-integer view of each fixed-decimal
-      // column (injective at 2 decimals; integer-to-string renders
-      // identically on both engines, unlike float-to-string), so
-      // q133's register-rebuild oracle applies per column.
-      val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-      val aggs = cols.flatMap(c => Seq(
-        count(lit(1)).as(s"n_$c"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nulls_$c"),
-        round(graft.expressions.HllSketch.sparse(
-          scaledLong(col(c), 2).cast("string"), p = 9), 4).as(s"adist_$c"),
-        min(col(c)).cast("double").as(s"min_$c"),
-        max(col(c)).cast("double").as(s"max_$c")))
-      tbl(s, dir, "lineitem")
-        .agg(aggs.head, aggs.tail: _*)
-        .select(explode(array(cols.map(c => struct(
-          lit(c).as("col_name"),
-          col(s"n_$c").as("n"),
-          col(s"nulls_$c").as("nulls"),
-          col(s"adist_$c").as("approx_distinct"),
-          col(s"min_$c").as("min_v"),
-          col(s"max_$c").as("max_v"))): _*)).as("m"))
-        .select(col("m.col_name"), col("m.n"), col("m.nulls"),
-          col("m.approx_distinct"), col("m.min_v"), col("m.max_v"))
-    }),
-    "q152_expectations" -> ((s, dir) => {
-      // CONSTRAINT EXPECTATIONS (data-quality gate): declarative
-      // rules validated in bulk — range checks, non-null, key
-      // uniqueness, and referential integrity (lineitem→orders FK via
-      // anti-join) — each reported as (rule, violations, total,
-      // pass). Exact integer counts only.
-      val li = tbl(s, dir, "lineitem")
-      val ord = tbl(s, dir, "orders")
-      def rule(name: String, violations: Column, total: Column,
-          src: DataFrame): DataFrame =
-        src.agg(violations.cast("long").as("violations"),
-            total.cast("long").as("total"))
-          .select(lit(name).as("rule"), col("violations"), col("total"),
-            (col("violations") === 0L).as("pass"))
-      val quantityRange = rule("l_quantity_in_1_50",
-        sum(when(col("l_quantity") < 1 || col("l_quantity") > 50, 1L)
-          .otherwise(0L)), count(lit(1)), li)
-      val discountRange = rule("l_discount_in_0_0_1",
-        sum(when(col("l_discount") < 0 || col("l_discount") > 0.1, 1L)
-          .otherwise(0L)), count(lit(1)), li)
-      val shipdateNotNull = rule("l_shipdate_not_null",
-        sum(when(col("l_shipdate").isNull, 1L).otherwise(0L)),
-        count(lit(1)), li)
-      val orderkeyUnique = rule("o_orderkey_unique",
-        count(lit(1)) - count_distinct(col("o_orderkey")),
-        count(lit(1)), ord)
-      val fk = rule("l_orderkey_fk_orders",
-        count(lit(1)), count(lit(1)),
-        li.join(ord, col("l_orderkey") === col("o_orderkey"), "left_anti"))
-      // FK total should be the lineitem total, not the anti-join's
-      val fkFixed = fk.crossJoin(li.agg(count(lit(1)).as("li_n")))
-        .select(col("rule"), col("violations"),
-          col("li_n").cast("long").as("total"), col("pass"))
-      quantityRange.unionByName(discountRange)
-        .unionByName(shipdateNotNull).unionByName(orderkeyUnique)
-        .unionByName(fkFixed)
-    }),
-    "q148_text_clean" -> ((s, dir) => {
-      // Text-cleaning scrub — the pre-tokenization pass every corpus
-      // pipeline runs before dedup/quality/tokenize: casefold, mask
-      // emails and URLs, strip non-printable-ASCII, collapse
-      // whitespace runs, trim. Pure deterministic regex rewrites
-      // (DuckDB needs the 'g' flag for the same replace-all, hard
-      // rule 8); the synthetic corpus exercises mainly the casefold/
-      // whitespace rules, the masks are the production surface.
-      val cleaned = regexp_replace(regexp_replace(regexp_replace(
-        regexp_replace(lower(col("text")),
-          "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}", "<email>"),
-        "https?://[^ ]+", "<url>"),
-        "[^ -~]", ""),
-        "  +", " ")
-      tbl(s, dir, "documents")
-        .select(col("doc_id"), trim(cleaned).as("clean_text"))
-        .withColumn("clean_len", length(col("clean_text")).cast("long"))
-    }),
-    "q149_scd2_intervals" -> ((s, dir) => {
-      // SCD TYPE-2 dimension build from the event stream: per user,
-      // event_type is a type-2 slowly-changing attribute — a validity
-      // interval opens at each CHANGE (consecutive repeats collapse),
-      // valid_to = the next change's timestamp, null while current.
-      // Exact timestamps; (ts, event_id) totally orders each user's
-      // history (hard rule 4).
-      val wAll = Window.partitionBy("user_id")
-        .orderBy(col("ts"), col("event_id"))
-      val changes = tbl(s, dir, "events")
-        .where(col("user_id") < 100)
-        .withColumn("prev_type", lag("event_type", 1).over(wAll))
-        .where(col("prev_type").isNull ||
-          col("prev_type") =!= col("event_type"))
-      changes
-        .withColumn("valid_to", lead("ts", 1).over(wAll))
-        .select(col("user_id"), col("event_type"),
-          col("ts").as("valid_from"), col("valid_to"))
-    }),
-    "q161_stream_scd2" -> ((s, dir) => {
-      // STREAMING SCD-2 / CDC-apply under the oracle: q149's type-2
-      // intervals built live through the state store, with
-      // ADVERSARIAL INTERLEAVING — arrival batches split by event-id
-      // PARITY, so every user's change history is scattered across
-      // both micro-batches in arbitrary event-time order; buffered
-      // events repair ordering inside the 40-day lateness window
-      // before anything is emitted (closed intervals only when final,
-      // open intervals published once the watermark passes the
-      // horizon). The far sentinel drives the final watermark past
-      // every real event; result == the batch window build, so q149's
-      // SQL is the oracle verbatim.
-      val base = graft.streaming.Scd2.scratchBase
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val ev = tbl(s, dir, "events").where(col("user_id") < 100)
-        .select("event_id", "user_id", "event_type", "ts")
-      // Replay-lossless precondition, asserted LOUDLY: the parity
-      // split is only equivalent to the batch build if no batch-1
-      // event falls behind the watermark set by batch 0 (max batch-0
-      // ts − delay). span(ts) < delay is sufficient; a future testdata
-      // round with a wider ts range must fail here, not silently
-      // certify a lossy replay.
-      val spanUs = ev.agg(
-          (max(unix_micros(col("ts").cast("timestamp"))) -
-           min(unix_micros(col("ts").cast("timestamp")))).as("us"))
-        .head.getLong(0)
-      require(spanUs < 40L * 86400L * 1000000L,
-        s"q161 precondition violated: event span ${spanUs / 86400000000L}d" +
-          " >= the 40-day watermark delay; late-data filtering would" +
-          " drop parity-split rows and diverge from the batch oracle")
-      ev.where(pmod(col("event_id"), lit(2)) === 0).appendBatchTo(in, 0)
-      ev.where(pmod(col("event_id"), lit(2)) === 1).appendBatchTo(in, 1)
-      s.range(1).select(lit(-1L).as("event_id"), lit(-1L).as("user_id"),
-          lit("x").as("event_type"),
-          lit("2024-03-15 00:00:00").cast("timestamp_ntz").as("ts"))
-        .appendBatchTo(in, 2)
-      val stream = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .withColumn("ts", col("ts").cast("timestamp"))
-      val q = graft.streaming.Scd2.intervals(stream,
-          "user_id", "ts", "event_id", "event_type", "40 days",
-          java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out).where(col("user_id") =!= -1L)
-        .select(col("user_id"), col("event_type"),
-          col("valid_from").cast("timestamp_ntz").as("valid_from"),
-          col("valid_to").cast("timestamp_ntz").as("valid_to"))
-    }),
-    "q150_fuzzy_linkage" -> ((s, dir) => {
-      // RECORD-LINKAGE fuzzy key join: near-identical short keys (the
-      // doc's first 24 chars) matched by blocked Levenshtein —
-      // (language, length-band) blocking prunes candidates (an edit
-      // distance <= k forces |len(a) - len(b)| <= k, so the longer
-      // side explodes only k+1 candidate lengths), exact
-      // levenshtein() verifies. Each unordered pair is enumerated
-      // once: unequal lengths via the longer side's explode, ties by
-      // id order. The dim side BROADCASTS, so the join inherits the
-      // probe side's partitioning — and a small parquet is ONE input
-      // split, which would run every Levenshtein in a single task
-      // (measured: 14.7 s single-task vs ~2 s spread). The explicit
-      // probe-side repartition spreads the verify across the cluster;
-      // at corpus scale the probe side has many native splits and the
-      // repartition is a no-op to keep. Tighter screens (q-gram
-      // prefix filtering, LSH) stack in front exactly like the
-      // jaccard/simhash families.
-      val k = 3
-      val docs = tbl(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          substring(col("text"), 1, 24).as("key"))
-        .withColumn("klen", length(col("key")))
-      val probes = docs.withColumn("blen",
-          explode(sequence(col("klen") - k, col("klen"))))
-        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
-      probes.join(
-          docs.select(col("doc_id").as("idb"), col("lang"),
-            col("key").as("kb"), col("klen").as("blen")),
-          Seq("lang", "blen"))
-        .where(col("klen") > col("blen") || col("doc_id") < col("idb"))
-        .where(levenshtein(col("key"), col("kb")) <= k)
-        .select(least(col("doc_id"), col("idb")).as("doc_a"),
-          greatest(col("doc_id"), col("idb")).as("doc_b"),
-          levenshtein(col("key"), col("kb")).cast("long").as("dist"))
-    }),
-    "q147_incr_bloom_index" -> ((s, dir) => {
-      // INCREMENTALLY-MAINTAINED BLOOM SHARD INDEX: q192's skipping
-      // index kept CURRENT under an appending table through the
-      // BucketedLog commit machinery — the last one-shot index build
-      // in the lakehouse family made incremental. The table arrives
-      // as three append batches; each refresh OR-merges ≤ one
-      // (shard, bitset) partial per touched shard and rewrites only
-      // those shards' log buckets: O(batch + touched index rows),
-      // never O(table) (`bloom_index_batch` probe pins the flat
-      // refresh). OR-merge is idempotent, so replay is safe even
-      // without the #batch= guard (the q195 HLL argument). The gate
-      // pins BIT-EXACT equality of the maintained index against the
-      // one-shot build driver-side, then serves a point lookup from
-      // it: only index-matched shard DIRECTORIES are read before the
-      // exact residual semi join. Oracle = the plain filter — the
-      // index buys IO skipping, never answers (q192's contract).
-      val base = s"/tmp/graft_q147_incbloom_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      // six consumers (table write, 3 index commits, one-shot pin,
-      // probe set) of one scan — materialize it once
-      val orders = tbl(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .localCheckpoint()
-      val idx = IncrementalBloomIndex(s"$base/idx", nShards = 64,
-        buckets = 16)
-      // the table itself lands in the same stable shard layout the
-      // index units name, so matched shards prune to directories
-      orders.withColumn("shard", idx.shardOf(col("o_orderkey")))
-        .write.mode("overwrite").partitionBy("shard").parquet(s"$base/tbl")
-      idx.init(s)
-      Seq(0, 1, 2).foreach { p =>
-        idx.applyBatch(orders.where(pmod(col("o_orderkey"), lit(3)) === p),
-          "o_orderkey", p.toLong)
-      }
-      // bit-exactness: maintained index == one-shot build
-      val stored = idx.read(s).collect()
-        .map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
-      val oneShot = orders
-        .groupBy(idx.shardOf(col("o_orderkey")).as("shard"))
-        .agg(graft.expressions.BloomAggregate(
-          xxhash64(col("o_orderkey")), 1024, 7).as("bloom_bits"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
-      require(stored == oneShot,
-        "incrementally-maintained Bloom index diverged from one-shot build")
-      val probes = tbl(s, dir, "orders")
-        .where(col("o_orderkey") % 11 === 4)
-        .orderBy(col("o_orderkey")).limit(5).select("o_orderkey")
-      val shards = idx.matchingShards(s, probes, "o_orderkey")
-      require(shards.nonEmpty && shards.size < 64,
-        s"probe should prune some of 64 shards: ${shards.size}")
-      // serve through readWhere: the table is shard-laid, so the
-      // Bloom attachment names the layout column and matched shards
-      // prune to DIRECTORIES before the exact residual semi-join
-      graft.operators.IndexedTable(s"$base/tbl",
-          blooms = Seq(graft.operators.BloomAttachment("o_orderkey", idx,
-            shardCol = Some("shard"))))
-        .readWhere(s, Seq(graft.operators.IndexedTable.KeyIn(
-          "o_orderkey", probes)))
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    }),
-    "q146_hll_sparse" -> ((s, dir) => {
-      // SPARSE-mode HLL over a MANY-GROUP rollup: distinct users per
-      // (event_type, day) — the long-tail shape where dense per-group
-      // registers waste 2^p bytes on mostly-small groups. The sparse
-      // form stores the identical (bucket, max rho) maxima until an
-      // upgrade, so registers — and the estimate — are bit-identical
-      // to the dense sketch under any partitioning and any
-      // sparse/dense partial mix; q133's register-rebuild oracle
-      // applies verbatim per composite group. Groups here straddle
-      // the upgrade threshold, so BOTH representations execute.
-      tbl(s, dir, "events")
-        .groupBy(col("event_type"),
-          date_format(col("ts"), "yyyy-MM-dd").as("day"))
-        .agg(
-          round(graft.expressions.HllSketch.sparse(
-            col("user_id").cast("string"), p = 9), 4).as("approx_distinct"),
-          count_distinct(col("user_id")).as("exact_distinct"))
-    }),
-    "q145_wordpiece" -> ((s, dir) => {
-      // WordPiece greedy longest-match tokenizer (the BERT encode
-      // loop) with a frequency-built vocab: top-160 substrings per
-      // position class (word-initial vs ##-continuation) + all single
-      // chars for coverage, then per-word longest-match segmentation
-      // over the Heaps'-bounded word histogram. Counts are exact
-      // longs and the longest match at a position is unique, so
-      // DuckDB re-trains the vocab AND re-encodes the corpus
-      // verbatim (recursive CTE, one row per emitted piece).
-      WordPiece.encodeHistogram(tbl(s, dir, "documents"), "text")
-    }),
-    "q144_ddsketch_collapsed" -> ((s, dir) => {
-      // DDSketch "collapsing lowest" BOUNDED store under the oracle:
-      // with maxBuckets=24, all but the 24 highest occupied buckets
-      // fold into the cut bucket. The collapse runs ONCE, at eval, on
-      // the exact merged histogram (never per-partial), so the bounded
-      // answer is a pure function of the multiset for ALL quantiles
-      // under any partitioning — which is why the oracle can replay
-      // the collapse itself: histogram by boundary comparisons, cut =
-      // 24th-largest occupied index, fold, cumulative rank. Upper
-      // quantiles (p90/p99 sit well inside the kept range) equal the
-      // unbounded sketch; p50 sits ~35 buckets down and lands on the
-      // cut's representative — probed and replayed exactly.
-      val bounds = graft.expressions.DdSketch.boundaries(0.01, 1.0, 2e5)
-      val qs = Array(0.5, 0.9, 0.99)
-      tbl(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(graft.expressions.DdSketchAggregate(
-          col("l_extendedprice"), bounds, qs, maxBuckets = 24).as("ests"))
-        .select(col("l_returnflag"),
-          posexplode(col("ests")).as(Seq("qi", "est")))
-        .select(col("l_returnflag"),
-          element_at(lit(qs), col("qi") + 1).as("q"), col("est"))
-    }),
-    "q181_stream_merge_into" -> ((s, dir) => {
-      // STREAMING MERGE INTO over a LOG-STRUCTURED versioned snapshot
-      // (SnapshotStore): q177's change stream arrives in TWO
-      // ADVERSARIALLY INTERLEAVED micro-batches — split by change-id
-      // PARITY, so most keys' histories are scattered across both
-      // batches in arbitrary event-time order (an OLDER change
-      // routinely lands in the LATER batch). The store carries each
-      // key's winning (ts, id) version plus delete tombstones, so
-      // stale cross-batch changes are discarded and sequential apply
-      // equals the one-shot merge UNCONDITIONALLY — q177's SQL is the
-      // oracle verbatim. Per batch only the buckets the change keys
-      // hash to are rewritten under a monotone versioned manifest
-      // (O(batch + touched buckets), never O(base) — the
-      // stream_merge_batch probe pins this flat vs a 1x/2x/4x base).
-      val base0 = s"/tmp/graft_q181_smerge_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base0), true)
-      val in = s"$base0/in"; val ckpt = s"$base0/ckpt"
-      val changes = tbl(s, dir, "orders").select(
-        when(col("o_custkey") % 13 === 0, col("o_custkey") + 1000000L)
-          .otherwise(col("o_custkey")).as("c_custkey"),
-        when(col("o_custkey") % 11 === 0, lit("D")).otherwise(lit("U"))
-          .as("op"),
-        col("o_orderpriority").as("c_mktsegment"),
-        col("o_totalprice").as("c_acctbal"),
-        col("o_orderdate").as("ts"), col("o_orderkey").as("id"))
-      changes.where(pmod(col("id"), lit(2)) === 0).appendBatchTo(in, 0)
-      changes.where(pmod(col("id"), lit(2)) === 1).appendBatchTo(in, 1)
-      // 16 buckets at gate scale (bucket count scales with the corpus
-      // in production — hold bucket SIZE constant, SnapshotStore doc)
-      val snap = graft.streaming.SnapshotStore(s"$base0/snap",
-        "c_custkey", "ts", "id", "op",
-        Seq("c_mktsegment", "c_acctbal"), buckets = 16)
-      snap.init(tbl(s, dir, "customer")
-          .select("c_custkey", "c_mktsegment", "c_acctbal"),
-        changes.schema("ts").dataType, changes.schema("id").dataType)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .writeStream
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          snap.applyBatch(b, batchId)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      snap.read(s)
-    }),
-    "q233_schema_evolution" -> ((s, dir) => {
-      // ADD-COLUMN SCHEMA EVOLUTION MID-REPLAY: q181's streamed CDC
-      // merge, but the dimension GROWS a payload column between
-      // micro-batches — batch 0 (even ids) applies under the original
-      // (c_mktsegment, c_acctbal) shape; the store then evolves
-      // (zero-IO anchor re-commit, data dirs untouched) and batch 1
-      // (odd ids) carries the new c_status attribute. Pre-evolution
-      // rows read back null-filled, so the final snapshot equals the
-      // ONE-SHOT merge over the union schema in which even-id changes
-      // never observed c_status; time travel BELOW the evolution
-      // still serves the old column set (require-guarded), and that
-      // pre-evolution snapshot is also emitted under the oracle
-      // (snap=0 rows) — the q189 time-travel discipline applied
-      // across a schema boundary.
-      val base0 = s"/tmp/graft_q233_evo_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base0), true)
-      val in = s"$base0/in"; val ckpt = s"$base0/ckpt"
-      val changes = tbl(s, dir, "orders").select(
-        when(col("o_custkey") % 13 === 0, col("o_custkey") + 1000000L)
-          .otherwise(col("o_custkey")).as("c_custkey"),
-        when(col("o_custkey") % 11 === 0, lit("D")).otherwise(lit("U"))
-          .as("op"),
-        col("o_orderpriority").as("c_mktsegment"),
-        col("o_totalprice").as("c_acctbal"),
-        col("o_orderstatus").as("c_status"),
-        col("o_orderdate").as("ts"), col("o_orderkey").as("id"))
-      // the SOURCE feed is union-schema'd (one parquet stream schema);
-      // the STORE starts narrow and widens mid-replay
-      changes.where(pmod(col("id"), lit(2)) === 0).appendBatchTo(in, 0)
-      changes.where(pmod(col("id"), lit(2)) === 1).appendBatchTo(in, 1)
-      var snap = graft.streaming.SnapshotStore(s"$base0/snap",
-        "c_custkey", "ts", "id", "op",
-        Seq("c_mktsegment", "c_acctbal"), buckets = 16, retain = true)
-      snap.init(tbl(s, dir, "customer")
-          .select("c_custkey", "c_mktsegment", "c_acctbal"),
-        changes.schema("ts").dataType, changes.schema("id").dataType)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .writeStream
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          if (batchId == 0L) snap.applyBatch(b.drop("c_status"), batchId)
-          else {
-            // the evolution is a DDL, caller-coordinated like Delta's
-            // ALTER TABLE — guard so a foreachBatch retry cannot
-            // double-add the column
-            if (!snap.payloadCols.contains("c_status"))
-              snap = snap.evolvePayload(s, Seq("c_status" -> "string"))
-            snap.applyBatch(b, batchId)
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      // version 1 = batch 0's commit, BELOW the evolution commit: the
-      // versioned anchor must serve the pre-evolution column set
-      val pre = snap.readAt(s, 1L)
-      require(!pre.columns.contains("c_status"),
-        "pre-evolution readAt must serve the old shape")
-      pre.withColumn("c_status", lit(null).cast("string"))
-        .withColumn("snap", lit(0L))
-        .unionByName(snap.read(s).withColumn("snap", lit(1L)))
-    }),
-    "q177_merge_into" -> ((s, dir) => {
-      // CDC MERGE INTO (the lakehouse upsert): an order-driven change
-      // batch folds into the customer snapshot — latest change per
-      // key by (o_orderdate, o_orderkey) wins; % 11 keys delete,
-      // % 13 keys shift to unseen ids (inserts), the rest update
-      // segment/balance; untouched customers pass through. The
-      // change side pre-reduces map-side with max_by, then ONE
-      // full-outer join — base is never windowed or sorted.
-      val base = tbl(s, dir, "customer")
-        .select("c_custkey", "c_mktsegment", "c_acctbal")
-      val changes = tbl(s, dir, "orders").select(
-        when(col("o_custkey") % 13 === 0, col("o_custkey") + 1000000L)
-          .otherwise(col("o_custkey")).as("c_custkey"),
-        when(col("o_custkey") % 11 === 0, lit("D")).otherwise(lit("U"))
-          .as("op"),
-        col("o_orderpriority").as("c_mktsegment"),
-        col("o_totalprice").as("c_acctbal"),
-        col("o_orderdate").as("ts"), col("o_orderkey").as("id"))
-      MergeInto(base, changes, "c_custkey", "ts", "id", "op",
-        Seq("c_mktsegment", "c_acctbal"))
-    }),
-    "q180_countmin_rollup" -> ((s, dir) => {
-      // FREQUENCY SKETCH TABLE (completing the sketch-table trio
-      // q176/q179/this): per-doc-bucket Count-Min matrices persisted,
-      // then the corpus-wide point estimates answered by ELEMENT-WISE
-      // SUMMING the stored matrices (posexplode + per-cell sum — CMS
-      // merge is matrix addition, plain column algebra, no custom
-      // reader needed) and probing the summed cells. Equals the
-      // direct sketch over all tokens, so q132's SQL is the oracle
-      // verbatim.
-      val scratch = s"/tmp/graft_q180_cms_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-      val d = 4; val w = 256
-      val docs = tbl(s, dir, "documents")
-      docs.withColumn("grp", pmod(col("doc_id"), lit(4)))
-        .select(col("grp"),
-          explode(TextFunctions.tokens(col("text"))).as("tok"))
-        .groupBy("grp")
-        .agg(graft.expressions.CountMin(col("tok"), d, w).as("m"))
-        .write.parquet(scratch)
-      val cells = s.read.parquet(scratch)
-        .select(posexplode(col("m")).as(Seq("pos", "cnt")))
-        .groupBy("pos").agg(sum(col("cnt")).as("cell_n"))
-      val toks = docs
-        .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-      val probes = toks.groupBy("tok").agg(count(lit(1)).as("exact_count"))
-        .orderBy(col("exact_count").desc, col("tok")).limit(20)
-      val lu = probes.withColumn("pos", explode(array((0 until d).map(j =>
-        (graft.expressions.CountMin.cellCol(col("tok"), j, w)
-          + lit(j * w)).cast("long")): _*)))
-      lu.join(cells, "pos")
-        .groupBy(col("tok").as("token"), col("exact_count"))
-        .agg(min(col("cell_n")).as("est_count"))
-    }),
-    "q179_ddsketch_rollup" -> ((s, dir) => {
-      // QUANTILE SKETCH TABLE (q176's play for percentiles):
-      // per-(returnflag, month) DDSketch histograms persisted as
-      // binary states, then p50/p90/p99 per returnflag answered by
-      // merging the stored states — exact count addition, so the
-      // rollup equals sketching raw data and q130's SQL is the
-      // oracle verbatim. The stored-state read is O(groups ×
-      // occupied buckets), never the lineitem scan.
-      val scratch = s"/tmp/graft_q179_ddsketches_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-      val bounds = graft.expressions.DdSketch.boundaries(0.01, 1.0, 2e5)
-      val qs = Array(0.5, 0.9, 0.99)
-      tbl(s, dir, "lineitem")
-        .withColumn("month", date_trunc("month", col("l_shipdate")))
-        .groupBy("l_returnflag", "month")
-        .agg(graft.expressions.DdSketchState.state(
-          col("l_extendedprice"), bounds).as("sk"))
-        .write.parquet(scratch)
-      s.read.parquet(scratch)
-        .groupBy("l_returnflag")
-        .agg(graft.expressions.DdSketchState.mergeStates(
-          col("sk"), bounds, qs).as("ests"))
-        .select(col("l_returnflag"),
-          posexplode(col("ests")).as(Seq("qi", "est")))
-        .select(col("l_returnflag"),
-          element_at(lit(qs), col("qi") + 1).as("q"), col("est"))
-    }),
-    "q176_sketch_rollup" -> ((s, dir) => {
-      // SKETCH TABLE + re-aggregation (the 100 TB rollup play):
-      // per-(event_type, day) HLL REGISTER VECTORS are computed once
-      // and PERSISTED (scratch parquet — the stored sketch table),
-      // then the per-type distinct-user estimate is answered by
-      // merging the stored registers — O(groups × 512 B) read, raw
-      // data never touched again. Register max is associative and
-      // idempotent, so the rollup equals sketching the raw data
-      // directly, and q133's register-rebuild SQL (minus the exact
-      // column) is the oracle verbatim.
-      val scratch = s"/tmp/graft_q176_sketches_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-      tbl(s, dir, "events")
-        .withColumn("day", to_date(col("ts")))
-        .groupBy("event_type", "day")
-        .agg(graft.expressions.HllSketch.registers(
-          col("user_id").cast("string"), p = 9).as("sk"))
-        .write.parquet(scratch)
-      s.read.parquet(scratch)
-        .groupBy("event_type")
-        .agg(round(graft.expressions.HllSketch.mergeRegisters(
-          col("sk"), p = 9), 4).as("approx_distinct"))
-    }),
-    "q182_stream_leaderboard" -> ((s, dir) => {
-      // STREAMING LEADERBOARD: q174's bounded-heap top-k maintained
-      // LIVE — the CollectTopK heap lives in the state store across
-      // two event-id-parity arrival batches (k rows per group of
-      // state, not the history), and the complete-mode snapshot
-      // after the replay equals the batch heap — q174's window SQL
-      // is the oracle verbatim (heap content is a pure function of
-      // the input set under the DESC/DESC total order).
-      val base = s"/tmp/graft_q182_leader_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val ev = tbl(s, dir, "events")
-        .select("event_id", "event_type", "value")
-      ev.where(pmod(col("event_id"), lit(2)) === 0).appendBatchTo(in, 0)
-      ev.where(pmod(col("event_id"), lit(2)) === 1).appendBatchTo(in, 1)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .groupBy("event_type")
-        .agg(org.apache.spark.sql.graft.Bridge.collectTopK(
-          struct(col("value"), col("event_id")), 3, reverse = false)
-          .as("top"))
-        .writeStream
-        .outputMode("complete")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("overwrite").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out)
-        .select(col("event_type"),
-          posexplode(col("top")).as(Seq("pos", "row")))
-        .select(col("event_type"),
-          (col("pos") + 1).cast("long").as("rank"),
-          col("row.value").as("value"), col("row.event_id").as("event_id"))
-    }),
-    "q174_group_topk" -> ((s, dir) => {
-      // TOP-K PER GROUP WITHOUT A WINDOW SORT: the engine's bounded-
-      // heap CollectTopK aggregate (via the Bridge shim) keeps 3 rows
-      // per event_type map-side — only k-row partial heaps shuffle,
-      // no Sort/Window anywhere in the plan (spec-guarded). The
-      // struct ordering is lexicographic with ALL fields descending,
-      // so ties in value break by larger event_id (unique — rule 4);
-      // the oracle is the classic window formulation with the same
-      // DESC/DESC order.
-      GroupTopK.topK(tbl(s, dir, "events"), Seq("event_type"),
-        struct(col("value"), col("event_id")), k = 3)
-        .select(col("event_type"), col("rank"), col("value"),
-          col("event_id"))
-    }),
-    "q173_fingerprint" -> ((s, dir) => {
-      // DATASET CONTENT FINGERPRINT per day (anti-entropy): 60-bit
-      // row hashes folded with commutative XOR + bounded additive
-      // sum — a pure function of each day's row multiset under any
-      // partitioning/order/engine, which is exactly what lets the
-      // DuckDB twin serve as the "other replica" here. Rows hash on
-      // canonical integers (epoch micros, exact centi-value), never
-      // float formatting.
-      val ev = tbl(s, dir, "events")
-      Fingerprint.grouped(
-        ev.withColumn("day", to_date(col("ts")).cast("string"))
-          .withColumn("us", unix_micros(col("ts").cast("timestamp")))
-          .withColumn("cents", scaledLong(col("value"), 2)),
-        Seq("day"),
-        Seq(col("event_id"), col("user_id"), col("event_type"),
-          col("us"), col("cents")))
-    }),
-    "q172_psi_drift" -> ((s, dir) => {
-      // SNAPSHOT DRIFT MONITORING: population stability index of the
-      // per-type value distribution, first half-month vs the rest —
-      // the data-contract alarm a pipeline runs before retraining on
-      // a new corpus snapshot. Fixed-width bins (10 × 60), exact
-      // counts, add-one smoothing; the one libm op (ln) is absorbed
-      // by rounding the summed PSI to 6 dp on both engines (rule 9).
-      val ev = tbl(s, dir, "events")
-      val cut = lit("2024-01-15 00:00:00").cast("timestamp_ntz")
-      Drift.psi(ev.where(col("ts") < cut), ev.where(col("ts") >= cut),
-          "event_type", "value", binWidth = 60.0, nBins = 10)
-        .select(col("grp").as("event_type"), col("psi"),
-          col("n_a"), col("n_b"))
-    }),
-    "q169_zorder_layout" -> ((s, dir) => {
-      // Z-ORDER LAYOUT CLUSTERING (the OPTIMIZE ZORDER step): events
-      // keyed by the 16-bit interleave of (user_id, centi-value),
-      // sliced into 16 equal-depth z-ranges; the gate emits each
-      // slice's ZONE MAP (count + min/max of BOTH dimensions) — the
-      // rectangles a z-ordered file layout would advertise for
-      // data skipping. Bit interleave is exact integer arithmetic,
-      // generated once in Scala for both engines; the production
-      // repartitionByRange path is documented in ZOrder (its sampled
-      // boundaries are scale-correct but not replayable — the gate's
-      // ntile over the exact (z, event_id) order is).
-      val ev = tbl(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          floor(col("value") * lit(100.0)).cast("long").as("vq"))
-      ZOrder.layoutStats(ev, "user_id", "vq", "event_id",
-        bits = 16, nBuckets = 16)
-    }),
-    "q183_zorder_skipping" -> ((s, dir) => {
-      // Z-ORDER READ PATH (completes q169's write-side story): events
-      // are written z-clustered by (minute-of-day, centi-value) into
-      // 64 zone-mapped bucket dirs — the Delta/Iceberg
-      // stats-in-transaction-log shape — and a 2-D box predicate is
-      // answered through driver-side zone-map FILE PRUNING plus the
-      // exact residual filter. The result is exactly the filtered
-      // rows (trivially SQL-oracled); the SKIPPING claim — the
-      // z-layout's scan plans strictly fewer files than a
-      // single-column-sort layout for the same box, via the scan's
-      // own numFiles metric — is pinned by ZOrderSpec. Both dims are
-      // sf-invariant (minute 0..1439; centi-value well under the
-      // 16-bit interleave range).
-      val scratch = s"/tmp/graft_q183_zread_${md5Hex(dir)}"
-      val ev = tbl(s, dir, "events").select(
-        col("event_id"),
-        (hour(col("ts")) * 60 + minute(col("ts"))).cast("long").as("mofd"),
-        floor(col("value") * lit(100.0)).cast("long").as("vq"))
-      val z = ZOrder.zValue(col("mofd"), col("vq"), 16)
-      ZOrder.writeBucketed(ev, Seq(z, col("event_id")), "mofd", "vq",
-        nBuckets = 64, scratch)
-      ZOrder.readBox(s, scratch, "mofd", "vq", 0L, 719L, 5000L, 8000L)
-    }),
-    "q178_temperature_mix" -> ((s, dir) => {
-      // TEMPERATURE-SCALED DOMAIN MIX (α = 0.5, the sqrt-rebalance
-      // recipe for upweighting small domains in a training mixture):
-      // 200 docs apportioned by largest remainder over integer-
-      // quantized √n weights, drawn by the same md5-deal prefix as
-      // q168 — small languages get a larger share than their
-      // proportional quota, large ones shrink, and the whole draw
-      // stays a pure function of the table (exact integer
-      // apportionment; √ is IEEE-exact on both engines).
-      val docs = tbl(s, dir, "documents")
-      Sampling.temperatureMix(docs, "lang", "doc_id", 200L, alpha = 0.5)
-        .select(col("id").as("doc_id"), col("stratum").as("lang"))
-    }),
-    "q168_stratified_sample" -> ((s, dir) => {
-      // DETERMINISTIC STRATIFIED SAMPLING for corpus curation, both
-      // mixes in one gate: 'prop' draws EXACTLY 200 docs apportioned
-      // across languages by largest-remainder (floor quotas + one
-      // leftover each to the largest remainders, ties by language),
-      // 'bal' draws min(25, n) per language. Selection within a
-      // stratum is the md5-deal prefix (hash-rank by (md5(id), id))
-      // — no RNG anywhere, the drawn set is a pure function of the
-      // table, and the oracle replays allocation and draw with
-      // integer arithmetic only.
-      val docs = tbl(s, dir, "documents")
-      val prop = Sampling.stratified(docs, "lang", "doc_id", 200L)
-        .withColumn("sel", lit("prop"))
-      val bal = Sampling.balanced(docs, "lang", "doc_id", 25L)
-        .withColumn("sel", lit("bal"))
-      prop.unionByName(bal)
-        .select(col("id").as("doc_id"), col("stratum").as("lang"),
-          col("sel"))
-    }),
-    "q186_stream_stratified" -> ((s, dir) => {
-      // STREAMING STRATIFIED SAMPLING: q168's two-mix curation draw
-      // maintained LIVE with BOUNDED state — per language the state
-      // store holds only (count, the 200 smallest (md5, id) pairs)
-      // via the CollectTopK heap: O(strata × targetN) state at any
-      // corpus size, never the documents themselves. The md5-rank
-      // prefix obeys the k-smallest-of-union property (any row in
-      // the final prefix is in its arrival batch's prefix), so after
-      // the id-parity replay the stored heaps equal the batch
-      // prefixes; the horizon snapshot re-derives the EXACT
-      // largest-remainder apportionment from the final counts and
-      // slices each quota prefix from the stored heap — equal to the
-      // one-shot q168 draw, whose SQL is the oracle verbatim (heap
-      // capacity 200 bounds every possible quota: prop ≤ 200 total,
-      // bal = 25).
-      val base = s"/tmp/graft_q186_sstrat_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val docs = tbl(s, dir, "documents").select("doc_id", "lang")
-      docs.where(pmod(col("doc_id"), lit(2)) === 0).appendBatchTo(in, 0)
-      docs.where(pmod(col("doc_id"), lit(2)) === 1).appendBatchTo(in, 1)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .select(col("lang").cast("string").as("stratum"),
-          col("doc_id").cast("long").as("id"))
-        .withColumn("h", md5(col("id").cast("string")))
-        .groupBy("stratum")
-        .agg(count(lit(1)).as("n"),
-          org.apache.spark.sql.graft.Bridge.collectTopK(
-            struct(col("h"), col("id")), 200, reverse = true).as("top"))
-        .writeStream
-        .outputMode("complete")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("overwrite").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      val state = s.read.parquet(out)
-      val prop = Sampling.stratifiedFromState(state, 200L)
-        .withColumn("sel", lit("prop"))
-      val bal = Sampling.balancedFromState(state, 25L)
-        .withColumn("sel", lit("bal"))
-      prop.unionByName(bal)
-        .select(col("id").as("doc_id"), col("stratum").as("lang"),
-          col("sel"))
-    }),
-    "q166_heavy_hitters" -> ((s, dir) => {
-      // EXACT heavy hitters (tokens above 1/200 of the corpus) via
-      // Misra–Gries candidate pruning: pass 1 is a zero-shuffle scan
-      // folding 200 bounded counters per partition (a guaranteed
-      // SUPERSET of the heavy set survives), pass 2 exactly counts
-      // only candidate rows through a broadcast semi-join — the
-      // full-vocabulary shuffle never happens. The output is exact,
-      // so MG's arrival-order sensitivity never reaches it and the
-      // oracle is a plain GROUP BY/HAVING with integer arithmetic.
-      val toks = tbl(s, dir, "documents")
-        .select(explode(TextFunctions.tokens(col("text"))).as("tok"))
-      HeavyHitters.exact(toks, "tok", 200)
-        .select(col("k").as("token"), col("cnt"))
-    }),
-    "q130_ddsketch_quantiles" -> ((s, dir) => {
-      // Mergeable relative-error quantile sketch (DDSketch): per-group
-      // p50/p90/p99 of l_extendedprice from a bucket-count histogram —
-      // merge is count addition, so the state is a pure function of
-      // the multiset (partitioning-independent) and the shuffle moves
-      // one O(buckets) buffer per group instead of a per-group sort.
-      // Boundaries are Scala-generated literals on BOTH engines; the
-      // oracle answers by order statistic + comparison count (the
-      // bucket containing the r-th value is the first with cum >= r).
-      val bounds = graft.expressions.DdSketch.boundaries(0.01, 1.0, 2e5)
-      val qs = Array(0.5, 0.9, 0.99)
-      tbl(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(graft.expressions.DdSketchAggregate(
-          col("l_extendedprice"), bounds, qs).as("ests"))
-        .select(col("l_returnflag"),
-          posexplode(col("ests")).as(Seq("qi", "est")))
-        .select(col("l_returnflag"),
-          element_at(lit(qs), col("qi") + 1).as("q"), col("est"))
-    }),
-    "q129_asof_tolerance" -> ((s, dir) => {
-      // q29's as-of enrichment with a 1-hour staleness bound
-      // (merge_asof tolerance semantics): a click older than an hour
-      // is nulled on the SAME matched row, never replaced by an even
-      // older one. Freshness compares exact integer micros.
-      val ev = tbl(s, dir, "events")
-      val clicks = ev.where(col("event_type") === "click")
-        .groupBy("user_id", "ts")
-        .agg(max_by(col("value"), col("event_id")).as("value"))
-      AsOfJoin.asOfWithin(
-          left = ev.where(col("event_type") === "purchase"),
-          right = clicks,
-          keyCols = Seq("user_id"),
-          leftTime = "ts", rightTime = "ts",
-          rightVals = Seq("ts" -> "last_click_ts", "value" -> "last_click_value"),
-          tolUs = 3600L * 1000000L)
-        .select("event_id", "user_id", "ts", "value",
-          "last_click_ts", "last_click_value")
-    }),
-    "q126_funnel" -> ((s, dir) => {
-      // ordered conversion funnel view -> click -> purchase: per user
-      // the FIRST view, the first click strictly after it, the first
-      // purchase strictly after that — min() timestamps are exact and
-      // deterministic, stage joins shuffle on the user key only.
-      val ev = tbl(s, dir, "events")
-      def stage(t: String) = ev.where(col("event_type") === t)
-        .select(col("user_id"), col("ts"))
-      val v = stage("view").groupBy("user_id").agg(min("ts").as("v_ts"))
-      val c = stage("click").join(v, "user_id")
-        .where(col("ts") > col("v_ts"))
-        .groupBy("user_id", "v_ts").agg(min("ts").as("c_ts"))
-      val p = stage("purchase").join(c, "user_id")
-        .where(col("ts") > col("c_ts"))
-        .groupBy("user_id", "v_ts", "c_ts").agg(min("ts").as("p_ts"))
-      v.join(c.select("user_id", "c_ts"), Seq("user_id"), "left")
-        .join(p.select("user_id", "p_ts"), Seq("user_id"), "left")
-        .select("user_id", "v_ts", "c_ts", "p_ts")
-    }),
-    "q127_cohort" -> ((s, dir) => {
-      // weekly cohort retention: cohort = ISO week of first activity;
-      // k = whole weeks since cohort week; exact distinct-user counts
-      // per (cohort_week, k) — the classic retention triangle.
-      val ev = tbl(s, dir, "events")
-      val weeks = ev.select(col("user_id"),
-        date_trunc("week", col("ts")).cast("date").as("wk")).distinct()
-      val cohort = weeks.groupBy("user_id").agg(min("wk").as("cohort_week"))
-      weeks.join(cohort, "user_id")
-        .withColumn("k",
-          (datediff(col("wk"), col("cohort_week")) / 7).cast("long"))
-        .groupBy("cohort_week", "k")
-        .agg(count_distinct(col("user_id")).as("n_users"))
-    }),
-    "q128_bigram_lm" -> ((s, dir) => {
-      // count-based bigram LM with add-1 smoothing: p(w2|w1) =
-      // (c2 + 1) / (c1 + V) — every term an exact integer, ONE
-      // deterministic division per row (rule 9's exact variant).
-      // The q123 word-order trick: per-doc token arrays, adjacent
-      // pairs via one projected transform.
-      val toks = tbl(s, dir, "documents")
-        .select(split(lower(col("text")), "[^a-z]+").as("ws"))
-        .select(filter(col("ws"), w => length(w) > 0).as("ws"))
-        .where(size(col("ws")) >= 2)
-      val pairs = toks
-        .select(explode(expr(
-          "transform(sequence(0, size(ws) - 2), " +
-            "j -> struct(ws[j] AS w1, ws[j + 1] AS w2))")).as("p"))
-        .groupBy(col("p.w1").as("w1"), col("p.w2").as("w2"))
-        .agg(count(lit(1)).as("c2"))
-      val uni = pairs.groupBy("w1").agg(sum("c2").as("c1"))
-      val vocab = tbl(s, dir, "documents")
-        .select(explode(split(lower(col("text")), "[^a-z]+")).as("w"))
-        .where(length(col("w")) > 0)
-        .agg(count_distinct(col("w")).as("v"))
-      pairs.join(uni, "w1").crossJoin(broadcast(vocab))
-        .select(col("w1"), col("w2"), col("c2"),
-          ((col("c2") + lit(1)) / (col("c1") + col("v"))).as("p_smooth"))
-    }),
-    "q125_stream_asof" -> ((s, dir) => {
-      // STREAMING AS-OF ENRICHMENT under the oracle, with ADVERSARIAL
-      // LATE ARRIVAL: the reference rows of the last pre-cut day are
-      // withheld from batch 1 and arrive in batch 2 — AFTER the probes
-      // they must match. enrichExact's watermark-buffered probes (2-day
-      // delay covers the 1-day withholding) still produce exactly the
-      // batch ASOF join, so q29's SQL shape stays the oracle verbatim;
-      // the immediate-emit mode would mis-enrich every probe in the
-      // withheld window. A max-ts flush sentinel (batch 3) pushes the
-      // final watermark past the last probe so AvailableNow's closing
-      // timeout batch drains the buffer. The ref side is pre-deduped
-      // per (user, ts) by max_by(value, event_id) so the stream's
-      // equal-ts tie rule never fires.
-      val base = graft.streaming.StreamingAsOf.scratchBase
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val ev = tbl(s, dir, "events")
-      val ref = ev.where(col("event_type") === "click")
-        .groupBy("user_id", "ts")
-        .agg(max_by(col("value"), col("event_id")).as("value"))
-        .withColumn("side", lit("ref"))
-        .select("user_id", "ts", "side", "value")
-      val probe = ev.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), lit("probe").as("side"),
-          col("value"))
-      val all = ref.unionByName(probe)
-      val cut = lit("2024-01-15 00:00:00").cast("timestamp_ntz")
-      val lateFrom = lit("2024-01-14 00:00:00").cast("timestamp_ntz")
-      val lateRef = col("side") === "ref" && col("ts") >= lateFrom
-      all.where(col("ts") < cut && !lateRef).appendBatchTo(in, 0)
-      all.where(col("ts") >= cut || (col("ts") < cut && lateRef))
-        .appendBatchTo(in, 1)
-      // literal one-row flush frame (a limit(1) would vanish on an
-      // empty source and leave the buffered probes undrained)
-      s.range(1).select(lit(-1L).cast(all.schema("user_id").dataType).as("user_id"),
-          lit("2024-02-15 00:00:00").cast("timestamp_ntz").as("ts"),
-          lit("flush").as("side"), lit(0.0).as("value"))
-        .appendBatchTo(in, 2)
-      val q = graft.streaming.StreamingAsOf.enrichExact(
-          graft.streaming.IngestPipeline.fileSource(
-            s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1),
-          "user_id", "ts", "side", "value", probe = "probe", ref = "ref",
-          delay = "2 days")
-        .toDF()
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out).select(col("key"),
-        col("ts").cast("timestamp_ntz").as("ts"), col("value"),
-        col("refTs").cast("timestamp_ntz").as("ref_ts"),
-        col("refValue").as("ref_value"))
-    }),
-    "q124_bpe_encode" -> ((s, dir) => {
-      // the trained tokenizer APPLIED: 60 learned merges rewrite the
-      // word histogram via the broadcast-ranks lowest-rank-first
-      // encode loop, and the final (token, cnt) table is the corpus
-      // token histogram — exact counts, the oracle replays training
-      // AND encoding from the same generated SQL
-      Bpe.encodeHistogram(tbl(s, dir, "documents"), "text", k = 60)
-    }),
-    "q123_bpe_train" -> ((s, dir) => {
-      // BPE tokenizer training over the documents corpus: 60 merge
-      // rules learned from the word histogram (the ONE corpus-sized
-      // shuffle; the k-merge fold then runs driver-side over the
-      // Heaps'-bounded histogram — zero per-merge jobs, wall flat in
-      // k). DuckDB replays training exactly: same histogram, same
-      // greedy left-to-right fold, same (cnt desc, l, r) argmax.
-      Bpe.trainMerges(tbl(s, dir, "documents"), "text", k = 60)
-    }),
-    "q120_rolling_median" -> ((s, dir) => {
-      // Exact trailing-25-row median over integer cents: the type-7
-      // position 0.5*(n-1) is dyadic for n <= 25, so interpolation
-      // lands on .0/.5 exactly — both engines produce the identical
-      // double, no rounding (hard rule 9's exact-arithmetic variant).
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts"), col("event_id"))
-        .rowsBetween(-24, Window.currentRow)
-      tbl(s, dir, "events")
-        .withColumn("cents", round(col("value") * 100, 0))
-        .select(col("user_id"), col("event_id"),
-          (percentile(col("cents"), lit(0.5)).over(w) / 100.0).as("med"))
-    }),
-    "q121_winsorize" -> ((s, dir) => {
-      // Winsorized robust stats per event_type WITHOUT built-in
-      // percentile interpolation (whose near-integer positions are
-      // engine-sensitive): the clip bounds are k-th ORDER STATISTICS
-      // with k = ceil(p*n) computed identically on both engines —
-      // integer cents in, integer bounds out, exact integer sum of
-      // the clamped values, one deterministic division at the end.
-      val ev = tbl(s, dir, "events")
-        .withColumn("cents", round(col("value") * 100, 0).cast("long"))
-      val wOrd = Window.partitionBy("event_type")
-        .orderBy(col("cents"), col("event_id"))
-      val wAll = Window.partitionBy("event_type")
-      val ranked = ev
-        .withColumn("rn", row_number().over(wOrd))
-        .withColumn("n", count(lit(1)).over(wAll))
-      val bounds = ranked
-        .groupBy("event_type")
-        .agg(
-          max(when(col("rn") === ceil(lit(0.05) * col("n")), col("cents")))
-            .as("lo_cents"),
-          max(when(col("rn") === ceil(lit(0.95) * col("n")), col("cents")))
-            .as("hi_cents"))
-      ev.join(bounds, "event_type")
-        .groupBy("event_type")
-        .agg(
-          (max(col("lo_cents")) / 100.0).as("lo"),
-          (max(col("hi_cents")) / 100.0).as("hi"),
-          (sum(greatest(col("lo_cents"), least(col("hi_cents"), col("cents"))))
-            / count(lit(1)) / 100.0).as("wmean"),
-          count(lit(1)).as("n"))
-    }),
-    "q122_cooccurrence" -> ((s, dir) => {
-      // Event-type co-occurrence (market-basket over (user, day)
-      // baskets): distinct types per basket self-joined a < b — the
-      // join keys are the baskets, so pair cost is Σ basket_types²,
-      // never corpus². Exact counts; support = integer ratio of two
-      // exact longs (single deterministic division).
-      val baskets = tbl(s, dir, "events")
-        .select(col("user_id"), to_date(col("ts")).as("day"),
-          col("event_type"))
-        .distinct()
-      val a = baskets.select(col("user_id"), col("day"),
-        col("event_type").as("type_a"))
-      val b = baskets.select(col("user_id"), col("day"),
-        col("event_type").as("type_b"))
-      val nb = baskets.select("user_id", "day").distinct()
-        .agg(count(lit(1)).as("n_total")) // 1-row broadcast, q67 trick
-      a.join(b, Seq("user_id", "day"))
-        .where(col("type_a") < col("type_b"))
-        .groupBy("type_a", "type_b")
-        .agg(count(lit(1)).as("n_baskets"))
-        .crossJoin(broadcast(nb))
-        .select(col("type_a"), col("type_b"), col("n_baskets"),
-          (col("n_baskets") / col("n_total")).as("support"))
-    }),
-    "q119_pq_refined" -> ((s, dir) => {
-      // ADC shortlist (top 50 by codes) -> exact L2 re-rank to top-5:
-      // the PQ accuracy path. Only shortlist rows ever read raw
-      // vectors; the oracle replays shortlist and re-rank with the
-      // same index-ordered double folds — bit-exact, no rounding.
-      val emb = tbl(s, dir, "embeddings")
-      Similarity.pqTopKRefined(emb.where(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 5, shortlist = 50, m = 8, ksub = 16,
-        iters = 0)
-    }),
-    "q115_stream_embed" -> ((s, dir) => {
-      // STREAMING EMBEDDING SCREEN under the oracle (T2's vector
-      // fingerprint): 2-batch replay through the LSH-bucket state
-      // machine; one bucket per vector means exactly one emission per
-      // qualifying pair, the comparator replays FloatDotProduct's
-      // index-order fold bit-exactly, so the replay equals the batch
-      // cosineNearDupPairs answer — q44's SQL verbatim is the oracle.
-      val base = graft.streaming.StreamingEmbedScreen.scratchBase
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val emb = tbl(s, dir, "embeddings").select("vec_id", "embedding")
-      emb.where(col("vec_id") < 250)
-        .appendBatchTo(in, 0)
-      emb.where(col("vec_id") >= 250)
-        .appendBatchTo(in, 1)
-      val q = graft.streaming.StreamingEmbedScreen.pairs(
-          graft.streaming.IngestPipeline.fileSource(
-            s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1),
-          "vec_id", "embedding", threshold = 0.3, nBits = 4, dim = 64)
-        .toDF()
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out).select("id_a", "id_b", "cosine")
-    }),
-    "q114_stream_minhash" -> ((s, dir) => {
-      // STREAMING MINHASH SCREEN under the oracle (T2's second
-      // fingerprint family): same 2-batch replay shape as q113 —
-      // banded signature buckets screen arrivals against all earlier
-      // members, canonical pairs + dropDuplicates == the batch Broder
-      // estimator's candidate set with identical n_agree/est_jaccard
-      // (exact rationals over 16), so q66's SQL verbatim is the
-      // oracle.
-      val base = graft.streaming.StreamingMinHash.scratchBase
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      docs.where(col("doc_id") < 250)
-        .appendBatchTo(in, 0)
-      docs.where(col("doc_id") >= 250)
-        .appendBatchTo(in, 1)
-      val q = graft.streaming.StreamingMinHash.pairs(
-          graft.streaming.IngestPipeline.fileSource(
-            s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1),
-          "doc_id", "text", k = 2, nHashes = 16, bandSize = 4)
-        .toDF()
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out)
-        .dropDuplicates("doc_a", "doc_b")
-        .select(col("doc_a"), col("doc_b"), col("n_agree").cast("long"),
-          col("est_jaccard"))
-    }),
-    "q113_stream_neardup" -> ((s, dir) => {
-      // STREAMING NEAR-DUP SCREEN under the oracle (SURVEY §2 T2): a
-      // 2-batch AvailableNow replay through StreamingNearDup.pairs —
-      // per-(band, value) bucket state screens every arrival against
-      // all earlier members (unbounded variant), pairs canonicalized
-      // (min, max), so the union of emissions after the per-band
-      // dropDuplicates equals Dedup.simhashNearDup64's batch answer
-      // on the same corpus — q63's SQL verbatim is the oracle, gating
-      // the stream-batch parity the specs pin, now via DuckDB.
-      val base = graft.streaming.StreamingNearDup.scratchBase
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val docs = tbl(s, dir, "documents").select("doc_id", "text")
-      docs.where(col("doc_id") < 250)
-        .appendBatchTo(in, 0)
-      docs.where(col("doc_id") >= 250)
-        .appendBatchTo(in, 1)
-      val q = graft.streaming.StreamingNearDup.pairs(
-          graft.streaming.IngestPipeline.fileSource(
-            s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1),
-          "doc_id", "text", maxHamming = 3)
-        .toDF()
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out)
-        .dropDuplicates("doc_a", "doc_b")
-        .select(col("doc_a"), col("doc_b"), col("hamming").cast("long"))
-    }),
-    "q110_stream_gaps" -> ((s, dir) => {
-      // STATEFUL GAP MONITOR under the oracle (SURVEY §2 T4): a
-      // 2-batch AvailableNow replay of the tick stream through
-      // GapMonitor.monitor — per-key state carries the last event
-      // time ACROSS the batch boundary, so the union of emitted gaps
-      // equals the batch lag-over-(ts, key) computation DuckDB runs
-      // on the same parquet bytes (batch 2's events are all later
-      // than batch 1's, so batch-transparency is exact, and the
-      // emitted timestamps are millisecond-floored — Timestamp
-      // .getTime — which the oracle mirrors with epoch_ms).
-      val base = graft.streaming.GapMonitor.scratchBase
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val ev = tbl(s, dir, "events").where(col("user_id") < 20)
-        .select("user_id", "ts")
-      ev.where(dayofmonth(col("ts")) <= 15)
-        .appendBatchTo(in, 0)
-      ev.where(dayofmonth(col("ts")) > 15)
-        .appendBatchTo(in, 1)
-      val q = graft.streaming.GapMonitor.monitor(
-          graft.streaming.IngestPipeline.fileSource(
-            s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1),
-          "user_id", "ts", gapMs = 7200000L)
-        .toDF()
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out).select(col("key"),
-        col("prevTs").cast("timestamp_ntz").as("prev_ts"),
-        col("curTs").cast("timestamp_ntz").as("cur_ts"),
-        col("gapMs").as("gap_ms"))
-    }),
-    "q95_stream_bars" -> ((s, dir) => {
-      // STREAMING OHLC BARS under the oracle: `LiveBars` folds a
-      // 2-batch tick replay per (user, hour) bucket, emitting the
-      // RUNNING bar each batch (Append of amendments — the documented
-      // contract); `n` grows with every amendment, so keep-last ==
-      // max-by-n, and the final bars equal the batch OHLC DuckDB
-      // computes over the same arrival bytes. Ticks are pre-deduped
-      // per (user, ts) — with unique timestamps inside each bucket the
-      // open/close tie rules can't depend on batch boundaries (hard
-      // rule 4 applied to the stream).
-      val base = graft.streaming.LiveBars.scratchBase
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val ticks = tbl(s, dir, "events").where(col("user_id") < 30)
-        .groupBy("user_id", "ts")
-        .agg(max_by(col("value"), col("event_id")).as("value"))
-      ticks.where(dayofmonth(col("ts")) <= 15)
-        .appendBatchTo(in, 0)
-      ticks.where(dayofmonth(col("ts")) > 15)
-        .appendBatchTo(in, 1)
-      val q = graft.streaming.LiveBars.bars(
-          graft.streaming.IngestPipeline.fileSource(
-            s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1),
-          "user_id", "ts", "value", widthMs = 3600000L)
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out).groupBy("key", "bucket")
-        .agg(max_by(
-          struct(col("open"), col("high"), col("low"), col("close"),
-            col("n")), col("n")).as("b"))
-        .select(col("key"), col("bucket").cast("timestamp_ntz").as("bucket"),
-          col("b.open").as("open"), col("b.high").as("high"),
-          col("b.low").as("low"), col("b.close").as("close"),
-          col("b.n").as("n"))
-    }),
-    "q89_stream_heavy_hitters" -> ((s, dir) => {
-      // STREAMING FREQUENCY ANALYSIS under the oracle: the shard-
-      // partitioned Space-Saving summary replays a 3-batch document
-      // stream; with capacity ≥ per-shard distinct tokens the
-      // estimates are EXACT and err = 0, so DuckDB's plain token
-      // count over the same arrival bytes is the precise end state.
-      // Emission is changed-only and monotone (class contract), so
-      // max(est) per token across emitted snapshots IS the final
-      // summary value — the downstream-consumer contract, gated here.
-      val base = graft.streaming.StreamingHeavyHitters.scratchBase
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val docs = tbl(s, dir, "documents").where(col("doc_id") < 500)
-        .select("doc_id", "text")
-      docs.where(col("doc_id") < 200)
-        .appendBatchTo(in, 0)
-      docs.where(col("doc_id") >= 200 && col("doc_id") < 350)
-        .appendBatchTo(in, 1)
-      docs.where(col("doc_id") >= 350)
-        .appendBatchTo(in, 2)
-      val q = graft.streaming.StreamingHeavyHitters.tokenCounts(
-          graft.streaming.IngestPipeline.fileSource(
-            s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1),
-          "text", shards = 8, capacity = 1 << 16)
-        .writeStream.format("parquet").option("path", out)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      s.read.parquet(out).groupBy("token")
-        .agg(max("est").as("n"), max("err").as("err"))
-    }),
-    "q83_corpus_pipeline" -> ((s, dir) => {
-      // END-TO-END pipeline composition under ONE oracle — the stages
-      // users actually chain: dirty corpus (q77's deterministic email
-      // injection) -> scrub -> EXACT DEDUP ON THE CLEANED TEXT (docs
-      // differing only in contact strings collapse once masked — the
-      // reason scrub runs before dedup) -> deterministic split ->
-      // per-split corpus stats, duplicates attributed to their
-      // keeper's split.
-      val raw = concat(col("text"),
-        when(pmod(col("doc_id"), lit(7)) === 0,
-          concat(lit("  Contact USER"), col("doc_id").cast("string"),
-            lit("@Example.COM now"))).otherwise(lit("")))
-      // keeper selection via windows, NOT agg + self-join: the join
-      // formulation re-evaluates the whole NFC/regex scrub lineage on
-      // the probe side (CLAUDE.md's multi-consumer note) — two window
-      // functions over ONE hash exchange evaluate it once
-      val cleaned = tbl(s, dir, "documents")
-        .select(col("doc_id"), TextFunctions.scrub(raw).as("clean"))
-      val byHash = Window.partitionBy(md5(col("clean")))
-      val keepers = cleaned
-        .withColumn("rn", row_number().over(byHash.orderBy(col("doc_id"))))
-        .withColumn("n_copies", count(lit(1)).over(byHash).cast("long"))
-        .where(col("rn") === 1)
-      Splits.hashSplit(keepers, "doc_id", "s42",
-          Seq(("train", 90), ("val", 5), ("test", 5)))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextFunctions.tokenCount(col("clean")).cast("long")).as("n_tokens"),
-          (sum(col("n_copies")) - count(lit(1))).as("dupes_removed"))
-    }),
-    "q82_rts_csv_parse" -> ((s, dir) => {
-      // the RTS archive parse (S4/F2/F5) under the oracle: the golden
-      // fixture is written to scratch and both engines re-parse the
-      // SAME bytes — Spark via the declarative csv reader +
-      // try_cast/try_to_timestamp, DuckDB via read_csv + TRY_CAST +
-      // try_strptime ('%g' = milliseconds, matching SSS). Valid AND
-      // quarantined rows ship with their reject reasons; time is cast
-      // NTZ so both engines compare the same wall-clock (UTC session).
-      val path = graft.sources.RtsCsv.writeGoldenFixture()
-      graft.sources.RtsCsv.parse(graft.sources.RtsCsv.readRaw(s, Seq(path)))
-        .select(col("market"), col("security"),
-          col("tradeId").as("trade_id"), col("price"),
-          col("amount").cast("long").as("amount"),
-          col("time").cast("timestamp_ntz").as("time"),
-          col("nosystem"), col("reject_reason"))
-    }),
-    "q81_frame_sample" -> ((s, dir) => {
-      // video frame sampling under the oracle (the q58/q76 scratch
-      // trick): every 2nd fixed-size frame of each valid video blob,
-      // one row per sampled frame, the frame bytes compared as hex —
-      // DuckDB re-derives frame boundaries with integer division over
-      // the same parquet bytes. Partial tail frames are dropped on
-      // both engines (nFrames = payload // frameBytes).
-      val path = Multimodal.scratchFramesPath
-      Multimodal.pipelineCorpus(s).repartition(2)
-        .write.mode("overwrite").parquet(path)
-      Multimodal.sampleFrames(s.read.parquet(path), "media_id", "content",
-          frameBytes = 16, stride = 2)
-        .select(col("id").as("media_id"),
-          col("frameIdx").cast("long").as("frame_idx"),
-          hex(col("frame")).as("frame_hex"))
-    }),
-    "q77_text_scrub" -> ((s, dir) => {
-      // normalize/scrub cleanup stage (runs before dedup in a corpus
-      // pipeline) under the oracle: the text is deterministically
-      // "dirtied" identically on both engines (mixed-case contact
-      // email, URL, an NFC-DECOMPOSED e+U+0301, whitespace runs), then
-      // NFC (custom codegen NfcNormalize) -> lower -> mask -> collapse.
-      // Mask counts are taken pre-masking on the normalized text; int
-      // sizes cast to long (hard rule 5).
-      val raw = concat(col("text"),
-        when(pmod(col("doc_id"), lit(7)) === 0,
-          concat(lit("  Contact USER"), col("doc_id").cast("string"),
-            lit("@Example.COM now"))).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(11)) === 0,
-          lit(" see https://graft.example.com/docs?id=1 page")).otherwise(lit("")),
-        when(pmod(col("doc_id"), lit(13)) === 0,
-          // "e" + U+0301 COMBINING ACUTE (decomposed): NFC must precompose
-          lit(" café   bar")).otherwise(lit("")))
-      val norm = lower(TextFunctions.nfc(raw))
-      tbl(s, dir, "documents").select(col("doc_id"),
-        TextFunctions.scrub(raw).as("clean"),
-        size(regexp_extract_all(norm, lit(TextFunctions.EmailRe), lit(0)))
-          .cast("long").as("n_emails"),
-        size(regexp_extract_all(norm, lit(TextFunctions.UrlRe), lit(0)))
-          .cast("long").as("n_urls"))
-    }),
-    "q65_merge_limit" -> ((s, dir) => {
-      // tied merge + limit: the custom SortedMergeUnion with explicit
-      // tiebreak columns — the pushed per-child top-n sorts by
-      // (ts, event_id), so the earliest-100 row SET is deterministic
-      // even where equal timestamps straddle the boundary (hard rule 4)
-      val ev = tbl(s, dir, "events").where(col("user_id") < 40)
-      def series(tpe: String) = ev.where(col("event_type") === tpe)
-        .withColumn("stream", lit(tpe))
-        .select("stream", "event_id", "ts", "user_id", "value")
-      OrderedMerge.mergeSortedTied("ts", Seq("event_id"),
-          series("click"), series("view"), series("purchase"))
-        .limit(100)
-    }),
-    "q64_ann_multiprobe" -> ((s, dir) => {
-      // multi-probe LSH: own bucket + 2 smallest-margin bit-flip
-      // buckets per query (Lv et al. VLDB'07) — recovers neighbors lost
-      // across bucket walls at the cost of 3 probes on the small side
-      val emb = tbl(s, dir, "embeddings")
-      Similarity.annTopKMultiProbe(emb.where(col("vec_id") < 10), emb,
-        "vec_id", "embedding", k = 5, nBits = 8, dim = 64, nProbe = 3)
-    }),
-    "q63_simhash64_pairs" -> ((s, dir) => {
-      // 64-bit SimHash near-dup pairs: wider fingerprint kills the
-      // ~3.5% coincidental 16-bit collisions; maxHamming=3 banding is
-      // 4 bands x 16 bits -> buckets ~n/65536 (pigeonhole-exact)
-      simhashPairs(s, dir)
-    }),
-    "q62_hetero_merge" -> ((s, dir) => {
-      // heterogeneous series merge with superset-schema null-fill and a
-      // stream discriminator — the reference's signature trades⋈orders
-      // read path (MultipleTimeSeriesEnumeratorTest.scala:262-311):
-      // the purchase stream carries a trade-like `value` payload, the
-      // click stream an order-like `k` attribute; the merged stream has
-      // BOTH columns, null-filled where the source lacks them.
-      val ev = tbl(s, dir, "events")
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-      OrderedMerge.mergeTagged("ts", "purchase" -> purchases, "click" -> clicks)
-    }),
-    "q57_sliding_windows" -> ((s, dir) => {
-      // overlapping (hopping) windows in batch: 6h window, 3h slide —
-      // every event lands in exactly two windows. avg_value is computed
-      // from an exact integer-cent sum (see scaledLong) so both engines
-      // agree bit-for-bit without rounding.
-      tbl(s, dir, "events")
-        .groupBy(window(col("ts"), "6 hours", "3 hours").as("w"))
-        .agg(count("*").as("n"),
-          (sum(scaledLong(col("value"), 2)).cast("double")
-            / lit(100.0) / count(lit(1))).as("avg_value"))
-        .select(col("w.start").as("w_start"), col("w.end").as("w_end"),
-          col("n"), col("avg_value"))
-    }),
-    "q187_agg_view" -> ((s, dir) => {
-      // INCREMENTAL MATERIALIZED AGGREGATE VIEW (IVM): a per-
-      // (supplier, ship-month) revenue/quantity GROUP BY maintained by
-      // folding per-batch PARTIAL aggregates into stored group rows
-      // (AggView over the BucketedLog machine) — never re-aggregating
-      // the fact history. Measures are exact LONG cents/units, so the
-      // folded state equals the one-shot aggregate for ANY batch
-      // split, in any order, at any parallelism. Three adversarial
-      // commits: facts parts {0,1}, then part 2, then a full
-      // RETRACTION of part 1 (sign −1) — retracted groups shrink
-      // exactly and fully-retracted groups leave the state. Oracle =
-      // the direct GROUP BY over parts {0,2}.
-      val base = s"/tmp/graft_q187_aggview_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val facts = tbl(s, dir, "lineitem").select(col("l_suppkey"),
-        date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"),
-        col("l_quantity"), col("l_extendedprice"), col("l_discount"),
-        pmod(col("l_orderkey"), lit(3)).as("part"))
-      val view = aggViewOf(s"$base/view")
-      val ins = facts.withColumn("sig", lit(1L))
-      view.init(ins.where(lit(false)))
-      view.applyBatch(ins.where(col("part") < 2), 0L)
-      view.applyBatch(ins.where(col("part") === 2), 1L)
-      view.applyBatch(facts.where(col("part") === 1)
-        .withColumn("sig", lit(-1L)), 2L)
-      view.read(s)
-    }),
-    "q188_stream_agg_view" -> ((s, dir) => {
-      // STREAMING IVM: q187's view maintained LIVE — the same three
-      // commits arrive as micro-batches (inserts, more inserts, then
-      // the part-1 retraction) through foreachBatch into the same
-      // log-structured store: O(batch + touched buckets) per commit,
-      // never O(fact history). Folded LONG state is exact under any
-      // batching, so q187's one-shot SQL is the oracle verbatim.
-      val base = s"/tmp/graft_q188_saggview_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val ckpt = s"$base/ckpt"
-      val facts = tbl(s, dir, "lineitem").select(col("l_suppkey"),
-        date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"),
-        col("l_quantity"), col("l_extendedprice"), col("l_discount"),
-        pmod(col("l_orderkey"), lit(3)).as("part"))
-      val ins = facts.withColumn("sig", lit(1L))
-      ins.where(col("part") < 2).drop("part").appendBatchTo(in, 0)
-      ins.where(col("part") === 2).drop("part").appendBatchTo(in, 1)
-      facts.where(col("part") === 1).withColumn("sig", lit(-1L))
-        .drop("part").appendBatchTo(in, 2)
-      val view = aggViewOf(s"$base/view")
-      view.init(ins.drop("part").where(lit(false)))
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .writeStream
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          view.applyBatch(b, batchId)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      view.read(s)
-    }),
-    "q189_time_travel" -> ((s, dir) => {
-      // TIME TRAVEL over the versioned snapshot store: with
-      // `retain = true` every batch's manifest survives, and because
-      // untouched buckets point BACKWARD at older version dirs,
-      // manifest j IS the full snapshot as of version j — historical
-      // reads cost zero storage beyond the per-batch deltas already
-      // written (the Delta/Iceberg contract). q177's change feed
-      // applies as two id-parity batches; the query reads the
-      // snapshot AS OF v0 (the base), v1 (even-id changes applied)
-      // and v2 (all) — each oracled by the one-shot merge SQL over
-      // the corresponding change prefix.
-      val base = s"/tmp/graft_q189_ttravel_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val changes = tbl(s, dir, "orders").select(
-        when(col("o_custkey") % 13 === 0, col("o_custkey") + 1000000L)
-          .otherwise(col("o_custkey")).as("c_custkey"),
-        when(col("o_custkey") % 11 === 0, lit("D")).otherwise(lit("U"))
-          .as("op"),
-        col("o_orderpriority").as("c_mktsegment"),
-        col("o_totalprice").as("c_acctbal"),
-        col("o_orderdate").as("ts"), col("o_orderkey").as("id"))
-      val snap = graft.streaming.SnapshotStore(s"$base/snap",
-        "c_custkey", "ts", "id", "op",
-        Seq("c_mktsegment", "c_acctbal"), buckets = 16, retain = true)
-      snap.init(tbl(s, dir, "customer")
-          .select("c_custkey", "c_mktsegment", "c_acctbal"),
-        changes.schema("ts").dataType, changes.schema("id").dataType)
-      snap.applyBatch(changes.where(pmod(col("id"), lit(2)) === 0), 0L)
-      snap.applyBatch(changes.where(pmod(col("id"), lit(2)) === 1), 1L)
-      Seq(0L, 1L, 2L).map(v =>
-          snap.readAt(s, v).withColumn("ver", lit(v)))
-        .reduce(_.unionByName(_))
-        .select("ver", "c_custkey", "c_mktsegment", "c_acctbal")
-    }),
-    "q190_bfs_distances" -> ((s, dir) => {
-      // MULTI-SOURCE BFS: exact hop distance from the nearest seeded
-      // supplier over the undirected supplier↔customer trade graph
-      // (q156's edges) — the graph-proximity primitive (blast radius,
-      // "within k hops of a flagged account"). Level-synchronous
-      // frontier expansion capped at 4 hops; pure set algebra, so the
-      // result is deterministic at any parallelism and DuckDB replays
-      // it as a recursive CTE with min-distance folding. Edge list
-      // checkpointed SHUFFLED once (the PageRank discipline) — each
-      // round moves only the frontier.
-      val edges = tbl(s, dir, "lineitem")
-        .join(tbl(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_suppkey").as("src"),
-          (col("o_custkey") + 1000000L).as("dst"))
-      val seeds = tbl(s, dir, "supplier")
-        .select(col("s_suppkey").cast("long").as("node"))
-        .where(col("node") % 10 === 0)
-      Bfs.distances(edges, "src", "dst", seeds, maxDist = 4)
-    }),
-    "q191_exact_quantiles" -> ((s, dir) => {
-      // EXACT order statistics WITHOUT a global sort (two-pass
-      // histogram prune): one scan builds stats + a 1024-bin
-      // histogram, the driver maps each target rank ⌈q·n⌉ to (bin,
-      // residual rank) by exact integer prefix sums, and a second
-      // scan ranks ONLY the rows of needed bins (~n/1024 per target).
-      // The value at rank k is deterministic even under ties, and is
-      // a raw data value — no arithmetic — so the rank-based oracle
-      // hash-compares exactly. The one plan shape that cannot scale
-      // (a total sort of the column) never appears.
-      Quantiles.exact(tbl(s, dir, "lineitem"), "l_extendedprice",
-        Seq(("p25", 1L, 4L), ("p50", 1L, 2L), ("p75", 3L, 4L),
-          ("p90", 9L, 10L), ("p99", 99L, 100L)))
-    }),
-    "q192_bloom_file_index" -> ((s, dir) => {
-      // FILE-LEVEL BLOOM INDEX point lookup: orders lands in 64
-      // custkey-hashed files (orderkeys scatter across ALL of them,
-      // so min/max zone maps prune nothing for an orderkey probe);
-      // one scan builds a KB-scale Bloom bitset per file, and the
-      // lookup reads ONLY index-matched files (≤ probes + false
-      // positives, 5-ish of 64 at ANY table size — BloomIndexSpec
-      // pins the skip) before the exact residual semi join. Oracle =
-      // the plain filter; the index buys IO skipping, never answers.
-      val base = s"/tmp/graft_q192_bloomidx_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      tbl(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .repartition(64, col("o_custkey"))
-        .write.parquet(s"$base/tbl")
-      val table = s.read.parquet(s"$base/tbl")
-      val index = BloomIndex.build(table, "o_orderkey")
-      val probes = tbl(s, dir, "orders")
-        .where(col("o_orderkey") % 7 === 3)
-        .orderBy(col("o_orderkey")).limit(5)
-        .select("o_orderkey")
-      BloomIndex.lookup(s, index, probes, "o_orderkey")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    }),
-    "q193_dedup_keep_best" -> ((s, dir) => {
-      // CANONICAL-DOC SELECTION: the curation step after near-dup
-      // clustering — per q96 cluster keep the HIGHEST-QUALITY member
-      // (q22's quality score; doc_id tiebreak per hard rule 4), drop
-      // the rest. Clusters come from the memoized simhash pair set +
-      // connected components; the keep decision is one window over
-      // the (tiny) labeled frame. The oracle replays CC by recursive
-      // min-reachability and re-derives the same per-doc quality.
-      val docs = tbl(s, dir, "documents")
-      val comp = Components.connectedComponents(
-        simhashPairs(s, dir), "doc_a", "doc_b")
-      val lab = docs.select(col("doc_id"))
-        .join(comp, col("doc_id") === col("node"), "left")
-        .select(col("doc_id"),
-          coalesce(col("component"), col("doc_id")).as("cluster_id"))
-      val qual = docs.select(col("doc_id"),
-        TextFunctions.qualityScore(col("text")).as("quality"))
-      val w = Window.partitionBy("cluster_id")
-        .orderBy(col("quality").desc, col("doc_id"))
-      val out = lab.join(qual, "doc_id")
-        .withColumn("rn", row_number().over(w))
-        .withColumn("cluster_size",
-          count(lit(1)).over(Window.partitionBy("cluster_id")))
-        .where(col("rn") === 1)
-        .select(col("cluster_id"), col("doc_id").as("kept_doc"),
-          col("quality").as("kept_quality"),
-          col("cluster_size").cast("long").as("cluster_size"),
-          (col("cluster_size") - 1).cast("long").as("n_dropped"))
-        .localCheckpoint()
-      comp.unpersist() // pairs stays persisted (memo-owned)
-      out
-    }),
-    "q194_jsonl_roundtrip" -> ((s, dir) => {
-      // JSONL CORPUS ROUND TRIP — the lingua-franca training-data
-      // interchange format: documents export to line-delimited JSON
-      // shards (`to_json` + text sink, one doc per line — embedded
-      // newlines are escaped by JSON), re-import via `from_json`
-      // with an explicit schema, and the per-language checksum
-      // aggregate (exact LONG sums incl. a 52-bit md5 text hash)
-      // proves the round trip byte-lossless: the oracle computes the
-      // same sums from the ORIGINAL parquet. Byte counts, not char
-      // counts (octet_length ↔ strlen) — grapheme semantics differ
-      // across engines.
-      val base = s"/tmp/graft_q194_jsonl_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      tbl(s, dir, "documents")
-        .select(to_json(struct(col("doc_id"), col("lang"), col("text")))
-          .as("value"))
-        .repartition(8)
-        .write.text(s"$base/jsonl")
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("lang",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      s.read.text(s"$base/jsonl")
-        .select(from_json(col("value"), schema).as("d"))
-        .select("d.*")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).as("sum_ids"),
-          sum(octet_length(col("text")).cast("long")).as("sum_bytes"),
-          sum(conv(substring(md5(col("text")), 1, 13), 16, 10)
-            .cast("long")).as("sum_text_hash"))
-    }),
-    "q195_hll_view" -> ((s, dir) => {
-      // INCREMENTAL SKETCH VIEW — IVM for the aggregate class AggView
-      // excludes by design: distinct counts are not additive, but
-      // their HLL states are MERGEABLE (register-wise max —
-      // associative, commutative, idempotent), so the per-event-type
-      // distinct-user view folds through the SAME BucketedLog machine
-      // as q187: stored registers ⊔ batch partial → next stored
-      // registers. Idempotent max makes the fold exact under any
-      // batch split AND any replay — the end state equals sketching
-      // the raw stream once, so q176's rollup SQL (q133's register
-      // rebuild) is the oracle verbatim. State is O(groups × 2^p);
-      // per commit only the touched buckets rewrite.
-      val base = s"/tmp/graft_q195_hllview_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val log = graft.streaming.BucketedLog(s"$base/view",
-        Seq("event_type"), buckets = 8)
-      val ev = tbl(s, dir, "events").select(col("event_type"),
-        col("user_id"), pmod(col("event_id"), lit(3)).as("part"))
-      def partial(b: DataFrame): DataFrame =
-        b.groupBy("event_type")
-          .agg(graft.expressions.HllSketch.registers(
-            col("user_id").cast("string"), p = 9).as("sk"))
-      def fold(cur: Option[DataFrame], b: DataFrame): DataFrame = {
-        val pp = partial(b)
-        cur.map(_.unionByName(pp)).getOrElse(pp)
-          .groupBy("event_type")
-          .agg(graft.expressions.HllSketch.mergeRegistersVec(
-            col("sk"), p = 9).as("sk"))
-      }
-      log.init(partial(ev.where(lit(false))))
-      (0 until 3).foreach(i =>
-        log.applyBatch(ev.where(col("part") === i), i.toLong)(fold))
-      log.read(s).groupBy("event_type")
-        .agg(round(graft.expressions.HllSketch.mergeRegisters(
-          col("sk"), p = 9), 4).as("approx_distinct"))
-    }),
-    "q196_shortest_paths" -> ((s, dir) => {
-      // WEIGHTED SHORTEST PATHS (capped Bellman–Ford, 4 legs): the
-      // min-COST companion to q190's min-HOP BFS over the same
-      // undirected trade graph — edge weight = the lineitem quantity
-      // (parallel edges pre-min'd), so dist = the cheapest ≤4-leg
-      // route from any seeded supplier. Integer min/add rounds are
-      // exact and order-free; the oracle replays every round as a
-      // materialized CTE block (the LPA pattern). Edge list
-      // checkpointed SHUFFLED once; each round moves only the
-      // distance frame.
-      val edges = tbl(s, dir, "lineitem")
-        .join(tbl(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_suppkey").as("src"),
-          (col("o_custkey") + 1000000L).as("dst"),
-          round(col("l_quantity")).cast("long").as("w"))
-      val seeds = tbl(s, dir, "supplier")
-        .select(col("s_suppkey").cast("long").as("node"))
-        .where(col("node") % 10 === 0)
-      Sssp.distances(edges, "src", "dst", "w", seeds, rounds = 4)
-    }),
-    "q197_changelog" -> ((s, dir) => {
-      // CHANGELOG READ (CDC OUT — the table_changes API): time travel
-      // in, diff out. The retained store serves any two committed
-      // versions (q189), and SnapshotDiff classifies every key
-      // added/removed/changed/unchanged between v1 (even-id changes
-      // applied) and v2 (all) — digests move, not rows. Content is a
-      // canonical string with the balance as EXACT cents (double
-      // formatting never crosses engines); the oracle full-outer
-      // joins the two one-shot merge prefixes. Together with q177/
-      // q181/q189 this closes the CDC loop: changes → snapshot →
-      // versions → changes.
-      val base = s"/tmp/graft_q197_changelog_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val changes = tbl(s, dir, "orders").select(
-        when(col("o_custkey") % 13 === 0, col("o_custkey") + 1000000L)
-          .otherwise(col("o_custkey")).as("c_custkey"),
-        when(col("o_custkey") % 11 === 0, lit("D")).otherwise(lit("U"))
-          .as("op"),
-        col("o_orderpriority").as("c_mktsegment"),
-        col("o_totalprice").as("c_acctbal"),
-        col("o_orderdate").as("ts"), col("o_orderkey").as("id"))
-      val snap = graft.streaming.SnapshotStore(s"$base/snap",
-        "c_custkey", "ts", "id", "op",
-        Seq("c_mktsegment", "c_acctbal"), buckets = 16, retain = true)
-      snap.init(tbl(s, dir, "customer")
-          .select("c_custkey", "c_mktsegment", "c_acctbal"),
-        changes.schema("ts").dataType, changes.schema("id").dataType)
-      snap.applyBatch(changes.where(pmod(col("id"), lit(2)) === 0), 0L)
-      snap.applyBatch(changes.where(pmod(col("id"), lit(2)) === 1), 1L)
-      def content(df: DataFrame): DataFrame =
-        df.select(col("c_custkey"),
-          concat_ws("|", col("c_mktsegment"),
-            round(col("c_acctbal") * 100).cast("long").cast("string"))
-            .as("content"))
-      SnapshotDiff.diff(content(snap.readAt(s, 1L)),
-        content(snap.readAt(s, 2L)), "c_custkey", "content")
-    }),
-    "q198_skew_profile" -> ((s, dir) => {
-      // JOIN-KEY SKEW PROFILE — the "should I salt?" diagnostic that
-      // decides between q49's salted join and a plain shuffle: per
-      // heaviest key, its exact count, corpus share, and skew factor
-      // (count ÷ mean per-key count). One partial-agg count per key,
-      // one O(1)-row stats frame broadcast back, global top-10 by
-      // the (cnt, key) total order. Counts are exact longs; each
-      // ratio is ONE division of exact integers — deterministic on
-      // both engines with no rounding contract needed. At 100 TB
-      // the profile costs one count shuffle — the cheapest possible
-      // question to ask before a multi-TB join.
-      val counts = tbl(s, dir, "orders")
-        .groupBy(col("o_custkey").as("key"))
-        .agg(count(lit(1)).as("cnt"))
-      val stats = counts.agg(sum(col("cnt")).as("total"),
-        count(lit(1)).as("nkeys"))
-      counts.crossJoin(broadcast(stats))
-        .select(col("key"), col("cnt"),
-          (col("cnt").cast("double") / col("total").cast("double"))
-            .as("share"),
-          ((col("cnt") * col("nkeys")).cast("double")
-            / col("total").cast("double")).as("skew_x"))
-        .orderBy(col("cnt").desc, col("key")).limit(10)
-    }),
-    "q199_ddsketch_view" -> ((s, dir) => {
-      // INCREMENTAL QUANTILE VIEW: q195's fold for the sketch whose
-      // merge is NOT idempotent — DDSketch states ADD, so a replayed
-      // batch would double every bucket count; this gate leans on the
-      // BucketedLog `#batch=` exactly-once guard (spec-pinned), the
-      // piece that makes additive sketch views safe under
-      // at-least-once delivery. Per-returnflag price quantiles folded
-      // over three orderkey-split batches: exact count addition is
-      // associative + commutative, so the stored state equals the
-      // one-shot sketch and q130's SQL is the oracle verbatim.
-      val base = s"/tmp/graft_q199_ddview_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val bounds = graft.expressions.DdSketch.boundaries(0.01, 1.0, 2e5)
-      val qs = Array(0.5, 0.9, 0.99)
-      val log = graft.streaming.BucketedLog(s"$base/view",
-        Seq("l_returnflag"), buckets = 4)
-      val li = tbl(s, dir, "lineitem").select(col("l_returnflag"),
-        col("l_extendedprice"), pmod(col("l_orderkey"), lit(3)).as("part"))
-      def partial(b: DataFrame): DataFrame =
-        b.groupBy("l_returnflag")
-          .agg(graft.expressions.DdSketchState.state(
-            col("l_extendedprice"), bounds).as("sk"))
-      def fold(cur: Option[DataFrame], b: DataFrame): DataFrame = {
-        val pp = partial(b)
-        cur.map(_.unionByName(pp)).getOrElse(pp)
-          .groupBy("l_returnflag")
-          .agg(graft.expressions.DdSketchState.mergeStatesVec(
-            col("sk"), bounds).as("sk"))
-      }
-      log.init(partial(li.where(lit(false))))
-      (0 until 3).foreach(i =>
-        log.applyBatch(li.where(col("part") === i), i.toLong)(fold))
-      log.read(s).groupBy("l_returnflag")
-        .agg(graft.expressions.DdSketchState.mergeStates(
-          col("sk"), bounds, qs).as("ests"))
-        .select(col("l_returnflag"),
-          posexplode(col("ests")).as(Seq("qi", "est")))
-        .select(col("l_returnflag"),
-          element_at(lit(qs), col("qi") + 1).as("q"), col("est"))
-    }),
-    "q200_orc_roundtrip" -> ((s, dir) => {
-      // ORC SOURCE/SINK round trip — the second columnar format the
-      // lakehouse speaks (q194's JSONL discipline for binary
-      // columnar): lineitem exports to ORC partitioned by returnflag
-      // (directory pruning works the same as parquet's), re-imports
-      // with a date-range predicate that reaches the ORC reader as
-      // a pushed filter, and the per-flag exact checksum aggregate
-      // (LONG counts/cents/epoch-micros sums) proves the trip
-      // value-lossless against the original parquet, which is what
-      // the oracle reads. Doubles and timestamps are stored binary in
-      // ORC — no text formatting anywhere.
-      val base = s"/tmp/graft_q200_orc_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      tbl(s, dir, "lineitem")
-        .select("l_returnflag", "l_quantity", "l_extendedprice",
-          "l_discount", "l_shipdate")
-        .write.partitionBy("l_returnflag").orc(s"$base/orc")
-      s.read.orc(s"$base/orc")
-        .where(col("l_shipdate") >= to_timestamp(lit("1995-01-01 00:00:00")))
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("l_quantity")).cast("long")).as("sum_qty"),
-          sum(round(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * 100).cast("long")).as("rev_cents"),
-          // DAY offsets, not epoch micros: ~8e14 µs per row overflows
-          // a LONG sum past ~11k rows per flag (caught by the sf0.01
-          // cert run); day numbers (<3000) keep the checksum exact at
-          // any corpus size
-          sum(datediff(to_date(col("l_shipdate")),
-            lit("1992-01-01").cast("date")).cast("long"))
-            .as("sum_ship_days"))
-    }),
-    "q201_rolling_corr" -> ((s, dir) => {
-      // EXACT rolling correlation — Pearson over a trailing 7-day
-      // window of the daily click/purchase cent sums, computed from
-      // INTEGER MOMENTS (n, Σx, Σy, Σx², Σy², Σxy as exact longs):
-      // the one float expression is the final
-      // (n·Σxy − ΣxΣy) / (√(n·Σx²−Σx²̂)·√(n·Σy²−Σy²̂)) — identical
-      // integer inputs on both engines, and sqrt/division are
-      // correctly-rounded IEEE ops, so NO rounding contract is needed
-      // (contrast rule 9: corr() over raw doubles is partial-order-
-      // sensitive and needs one). Overflow headroom: daily cent sums
-      // ~1e8 at sf0.1, moments ≤1e18 < 2^63; at true corpus scale the
-      // window is per-key (per instrument), which keeps the daily
-      // sums in the same band — documented bound, not a silent cap.
-      // Full windows only (rn ≥ 7); zero-variance windows drop on
-      // both engines by the same integer predicate.
-      val daily = tbl(s, dir, "events")
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(
-          sum(when(col("event_type") === "click",
-            scaledLong(col("value"), 2)).otherwise(0L)).as("x"),
-          sum(when(col("event_type") === "purchase",
-            scaledLong(col("value"), 2)).otherwise(0L)).as("y"))
-      val win = Window.orderBy("day").rowsBetween(-6, 0)
-      val ord = Window.orderBy("day")
-      val m = daily.select(col("day"),
-        count(lit(1)).over(win).as("n"),
-        sum(col("x")).over(win).as("sx"),
-        sum(col("y")).over(win).as("sy"),
-        sum(col("x") * col("x")).over(win).as("sxx"),
-        sum(col("y") * col("y")).over(win).as("syy"),
-        sum(col("x") * col("y")).over(win).as("sxy"),
-        row_number().over(ord).as("rn"))
-      m.where(col("rn") >= 7 &&
-          (col("n") * col("sxx") - col("sx") * col("sx")) > 0 &&
-          (col("n") * col("syy") - col("sy") * col("sy")) > 0)
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          ((col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
-            / (sqrt((col("n") * col("sxx") - col("sx") * col("sx"))
-                .cast("double"))
-              * sqrt((col("n") * col("syy") - col("sy") * col("sy"))
-                .cast("double")))).as("corr"))
-    }),
-    "q202_anomaly_days" -> ((s, dir) => {
-      // ANOMALY FLAGS WITH ZERO FLOATS: a day is anomalous when its
-      // cent sum deviates from the trailing-14-day mean by more than
-      // 3σ — and the 3σ test folds into PURE INTEGER algebra:
-      // (x − Σx/n)² > 9·(n·Σx² − Σx²̂)/n²  ⇔  (n·x − Σx)² > 9·(n·Σx² − Σx²̂).
-      // Exact long moments (the q201 discipline), one integer
-      // comparison, no epsilon, no rounding contract, bit-identical
-      // on any engine — monitoring thresholds that cannot drift.
-      // Window excludes the current day (13 preceding .. 1 preceding)
-      // so a spike does not mask itself.
-      val daily = tbl(s, dir, "events")
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(sum(scaledLong(col("value"), 2)).as("x"))
-      val win = Window.orderBy("day").rowsBetween(-13, -1)
-      val ord = Window.orderBy("day")
-      daily.select(col("day"), col("x"),
-          count(lit(1)).over(win).as("n"),
-          sum(col("x")).over(win).as("sx"),
-          sum(col("x") * col("x")).over(win).as("sxx"),
-          row_number().over(ord).as("rn"))
-        .where(col("rn") >= 14)
-        .select(date_format(col("day"), "yyyy-MM-dd").as("day"),
-          col("x").as("cents"),
-          ((col("n") * col("x") - col("sx"))
-            * (col("n") * col("x") - col("sx")) >
-            lit(9L) * (col("n") * col("sxx") - col("sx") * col("sx")))
-            .as("is_anomaly"))
-    }),
-    "q203_weighted_sample" -> ((s, dir) => {
-      // DETERMINISTIC WEIGHTED SAMPLING (lottery-ticket draw): each
-      // doc gets w integer tickets (w = 1 + n_chars/500 — longer docs
-      // upweighted), every ticket hashes md5(doc_id:ticket), and the
-      // 100 docs holding the smallest best-ticket win — selection
-      // probability strictly increasing in w, no RNG anywhere, fully
-      // SQL-replayable (the md5-deal discipline of q168, extended to
-      // per-row weights via integer ticket replication). Shape: Σw
-      // exploded tickets (a bounded small multiple of the corpus),
-      // map-side min per doc, then a bounded top-k — never a global
-      // sort of the corpus.
-      val weighted = tbl(s, dir, "documents")
-        .select(col("doc_id"),
-          (lit(1L) + (col("n_chars") / 500).cast("long")).as("w"))
-      weighted
-        .withColumn("g", explode(sequence(lit(1L), col("w"))))
-        .select(col("doc_id"), col("w"),
-          md5(concat(col("doc_id").cast("string"), lit(":"),
-            col("g").cast("string"))).as("h"))
-        .groupBy("doc_id", "w").agg(min(col("h")).as("ticket"))
-        .orderBy(col("ticket"), col("doc_id")).limit(100)
-    }),
-    "q204_equidepth_bins" -> ((s, dir) => {
-      // EQUI-DEPTH FEATURE BINNING — the ML-pipeline discretizer:
-      // quartile boundaries come from the EXACT two-pass selection
-      // (q191's Quantiles, so no global sort materializes them), and
-      // each row lands in bucket 1 + |{boundary < v}| — boundary
-      // values are raw data points, comparisons are exact, ties
-      // break LEFT identically on both engines. Per-bucket audit
-      // stats are exact longs. At 100 TB: two O(bins)-state scans
-      // for the boundaries, one codegen comparison scan for the
-      // assignment — the discretizer never sorts the corpus.
-      val bounds = Quantiles.exact(tbl(s, dir, "lineitem"),
-          "l_extendedprice",
-          Seq(("p25", 1L, 4L), ("p50", 1L, 2L), ("p75", 3L, 4L)))
-        .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
-      val (b1, b2, b3) = (bounds("p25"), bounds("p50"), bounds("p75"))
-      val v = col("l_extendedprice")
-      tbl(s, dir, "lineitem")
-        .select(v.as("v"),
-          (lit(1L) + when(lit(b1) < v, 1L).otherwise(0L)
-            + when(lit(b2) < v, 1L).otherwise(0L)
-            + when(lit(b3) < v, 1L).otherwise(0L)).as("bucket"),
-          scaledLong(v, 2).as("cents"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n"), min(col("v")).as("lo"),
-          max(col("v")).as("hi"), sum(col("cents")).as("sum_cents"))
-    }),
-    "q205_perplexity" -> ((s, dir) => {
-      // CCNet-STYLE LM QUALITY SCORING: train an add-one-smoothed
-      // bigram LM on the corpus itself, score every doc by average
-      // negative log-likelihood (nats/bigram) — the filter that drops
-      // the gibberish/boilerplate tail. Every probability is a ratio
-      // of exact integer counts (smoothing makes zero-counts
-      // well-defined); both engines derive V from the same bigram
-      // stream; the per-doc sum of ln-terms is rounded at 6 dp
-      // (rule 9). 100 TB: two Zipf-bounded count shuffles + a scoring
-      // join over ONE persisted bigram pass (eager, caller-owned) —
-      // corpus size stays on the streams, never in state.
-      NgramLm.score(tbl(s, dir, "documents"), "doc_id", "text")
-    }),
-    "q206_hrw_sharding" -> ((s, dir) => {
-      // RENDEZVOUS-HASH SHARD GROWTH: assign every doc its
-      // highest-random-weight shard under n=8 and n=9 and report, per
-      // new shard, how many docs moved. The HRW guarantee — checked
-      // exactly by the oracle and pinned by RendezvousSpec — is that
-      // n_moved = 0 for every pre-existing shard (movers land ONLY on
-      // the new shard 8, an expected 1/9 of the corpus): the layout
-      // property that lets a 100 TB corpus grow its shard count
-      // without re-dealing ~8/9 of it (what mod-n would do). Shape:
-      // zero-shuffle codegen projection + one count aggregate.
-      tbl(s, dir, "documents")
-        .select(col("doc_id"),
-          Splits.rendezvousShard(col("doc_id"), "v1", 8).as("shard_old"),
-          Splits.rendezvousShard(col("doc_id"), "v1", 9).as("shard"))
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("shard_old") =!= col("shard"), 1L).otherwise(0L))
-            .as("n_moved"))
-    }),
-    "q207_lang_jsd" -> ((s, dir) => {
-      // PAIRWISE JENSEN–SHANNON DIVERGENCE between per-language
-      // unigram distributions — the symmetric, ln2-bounded slice
-      // divergence used to pick mixing weights / flag vocabulary
-      // drift. Singleton-vocabulary tails fold into closed form from
-      // INTEGER coverage sums, so an inner self-join on word
-      // suffices (see Drift.unigramJsd); float term sums rounded at
-      // 6 dp (rule 9). 100 TB: the join shuffles Heaps-bounded count
-      // tables, never the corpus.
-      val counts = tbl(s, dir, "documents")
-        .select(col("lang"),
-          explode(TextFunctions.tokens(col("text"))).as("w"))
-        .groupBy("lang", "w").agg(count(lit(1)).as("c"))
-      Drift.unigramJsd(counts, "lang", "w", "c")
-        .select(col("slice_a").as("lang_a"), col("slice_b").as("lang_b"),
-          col("jsd"), col("n_a"), col("n_b"))
-    }),
-    "q208_epoch_shuffle" -> ((s, dir) => {
-      // DETERMINISTIC EPOCH SHUFFLE into fixed-size training batches:
-      // order = md5(salt:epoch:id), rank via GlobalRank's CONTENT-
-      // BUCKETED two-level rank (bucket = leading hex nibbles of the
-      // key, so membership is a pure function of the data and the
-      // corpus crosses ONE exchange — no single-partition window
-      // funnel, plan-guarded in GlobalRankSpec), batch/pos by integer
-      // div/mod. The oracle replays the order with one row_number.
-      GlobalRank.epochShuffle(tbl(s, dir, "documents"), "doc_id",
-        "ep", epoch = 1, batchSize = 64)
-    }),
-    "q209_stream_lang_jsd" -> ((s, dir) => {
-      // STREAMING VOCABULARY-DRIFT MONITOR: q207's per-language
-      // unigram count table maintained LIVE through the state store
-      // across two doc_id-parity arrival batches — the monitor that
-      // watches slice divergence as a corpus streams in, instead of
-      // re-tokenizing 100 TB per check. Count addition is commutative
-      // and order-free, so the complete-mode snapshot is a pure
-      // function of the document multiset and equals the batch count
-      // table; the final JSD fold (Drift.unigramJsd over the
-      // snapshot) matches q207's SQL verbatim. State = one row per
-      // (lang, word) — Heaps-bounded vocabulary, never corpus-sized.
-      val base = s"/tmp/graft_q209_stream_jsd_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val docs = tbl(s, dir, "documents").select("doc_id", "lang", "text")
-      docs.where(pmod(col("doc_id"), lit(2)) === 0).appendBatchTo(in, 0)
-      docs.where(pmod(col("doc_id"), lit(2)) === 1).appendBatchTo(in, 1)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .select(col("lang"),
-          explode(TextFunctions.tokens(col("text"))).as("w"))
-        .groupBy("lang", "w").agg(count(lit(1)).as("c"))
-        .writeStream
-        .outputMode("complete")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("overwrite").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      Drift.unigramJsd(s.read.parquet(out), "lang", "w", "c")
-        .select(col("slice_a").as("lang_a"), col("slice_b").as("lang_b"),
-          col("jsd"), col("n_a"), col("n_b"))
-    }),
-    "q210_ivf_index_table" -> ((s, dir) => {
-      // PERSISTED IVF INDEX TABLE — build once, query many: the
-      // trained centroid table and the cell-PARTITIONED postings land
-      // in parquet, and the lookup path reads ONLY the probed cells'
-      // directories back (a literal isin partition filter — the
-      // probed set is ≤ nCentroids ints — statically prunes the scan,
-      // IvfIndexSpec) before the exact cosine re-rank. This is the
-      // serving layout at 100 TB: q40 re-trains and re-assigns per
-      // query run (fine for one-shot analytics); an index SERVING
-      // corpus builds once and answers every subsequent query batch
-      // from ~nProbe/nCentroids of the index. DuckDB replays probe +
-      // re-rank from the persisted bytes alone (float32 round-trips
-      // parquet exactly; both engines fold dot products in index
-      // order), so the gate also proves the stored postings equal the
-      // live assignment.
-      val path = Similarity.scratchIvfIndexPath
-      val emb = tbl(s, dir, "embeddings")
-      Similarity.ivfIndexWrite(emb, "vec_id", "embedding", path,
-        nCentroids = 16, sampleSize = 2000, iters = 3)
-      Similarity.ivfIndexTopK(s, emb.where(col("vec_id") < 10),
-        "vec_id", "embedding", path, k = 5, nProbe = 4)
-    }),
-    "q211_vacuum_retention" -> ((s, dir) => {
-      // VACUUM/RETENTION under the oracle gate — the last un-oracled
-      // edge of the time-travel contract (q189): a RETAINED snapshot
-      // store takes three change commits (id mod 3 split of q177's
-      // feed -> versions 1..3), then VACUUMS history below version 2
-      // mid-history. The gate proves all three retention properties
-      // in one query: (a) surviving versions still answer the
-      // one-shot merge SQL verbatim (the output rows, hash-compared),
-      // (b) storage actually SHRANK (strict file-count assertion —
-      // vacuumed manifests and unreferenced version dirs are gone),
-      // (c) reads below the floor fail LOUDLY (readAt(0)/readAt(1)
-      // error rather than silently serving a newer snapshot). At
-      // 100 TB this is the Delta/Iceberg VACUUM contract: retention
-      // is a floor-version delete of manifests + unreferenced dirs,
-      // never a rewrite of surviving state.
-      val base = s"/tmp/graft_q211_vacuum_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val changes = tbl(s, dir, "orders").select(
-        when(col("o_custkey") % 13 === 0, col("o_custkey") + 1000000L)
-          .otherwise(col("o_custkey")).as("c_custkey"),
-        when(col("o_custkey") % 11 === 0, lit("D")).otherwise(lit("U"))
-          .as("op"),
-        col("o_orderpriority").as("c_mktsegment"),
-        col("o_totalprice").as("c_acctbal"),
-        col("o_orderdate").as("ts"), col("o_orderkey").as("id"))
-      val snap = graft.streaming.SnapshotStore(s"$base/snap",
-        "c_custkey", "ts", "id", "op",
-        Seq("c_mktsegment", "c_acctbal"), buckets = 16, retain = true)
-      snap.init(tbl(s, dir, "customer")
-          .select("c_custkey", "c_mktsegment", "c_acctbal"),
-        changes.schema("ts").dataType, changes.schema("id").dataType)
-      Seq(0, 1, 2).foreach { k =>
-        snap.applyBatch(changes.where(pmod(col("id"), lit(3)) === k),
-          k.toLong)
-      }
-      def fileCount: Int = {
-        def rec(p: org.apache.hadoop.fs.Path): Int =
-          fs.listStatus(p).map(st =>
-            if (st.isDirectory) rec(st.getPath) else 1).sum
-        rec(new org.apache.hadoop.fs.Path(s"$base/snap"))
-      }
-      val before = fileCount
-      snap.vacuum(s, keepFrom = 2L)
-      require(fileCount < before,
-        s"vacuum must shrink storage: $before -> $fileCount files")
-      Seq(0L, 1L).foreach { v =>
-        val failed = try { snap.readAt(s, v).collect(); false }
-          catch { case _: RuntimeException => true }
-        require(failed, s"readAt($v) below the vacuum floor must error")
-      }
-      Seq(2L, 3L).map(v => snap.readAt(s, v).withColumn("ver", lit(v)))
-        .reduce(_.unionByName(_))
-        .select("ver", "c_custkey", "c_mktsegment", "c_acctbal")
-    }),
-    "q212_stream_adversarial_view" -> ((s, dir) => {
-      // STREAMING IVM UNDER ADVERSARIAL DELIVERY — q188 widened to
-      // the arrival orders a real fact stream produces, the additive
-      // analog of q181's id-parity split:
-      //   b0  part-1 RETRACTIONS (before their inserts — the state
-      //       goes transiently negative; addition commutes, so the
-      //       fold still converges),
-      //   b1  parts {0,1} inserts (part-1-ONLY groups now cancel to
-      //       zero and must LEAVE the state — including buckets they
-      //       emptied, the r12 stale-manifest fix at gate level),
-      //   b2  part-2 inserts,
-      //   b3  EXACT DUPLICATE redelivery of b2 under a LATER batch id
-      //       — the one failure the view's #batch= guard CANNOT
-      //       absorb (it only skips same-id replays). Dedup
-      //       responsibility for re-delivered facts sits with the
-      //       SOURCE: the stream runs engine dropDuplicates on the
-      //       fact identity (l_orderkey, l_linenumber, occ, sig)
-      //       ahead of the view, so b3 reaches applyBatch empty
-      //       (UNBOUNDED dedup state — q235 is the watermark-bounded
-      //       production form; SCALE.md states the contract),
-      //   b4  full retraction of ONE group, whose log bucket it
-      //       occupies ALONE (asserted) — the merge output for that
-      //       bucket is EMPTY and its manifest entry must drop.
-      // Oracle = the one-shot GROUP BY over parts {0,2} minus the
-      // retracted group. The view groups by (returnflag, linestatus)
-      // at buckets=64 so bucket isolation is checkable.
-      val base = s"/tmp/graft_q212_advview_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val ckpt = s"$base/ckpt"
-      // (l_orderkey, l_linenumber) is NOT unique in this corpus —
-      // the fact identity needs a deterministic occurrence index or
-      // source dedup would collapse legitimate duplicate facts (rows
-      // identical in every ordering column tie arbitrarily, but both
-      // survive — the multiset is preserved, and the b3 redelivery
-      // re-derives the identical identity set)
-      val occW = Window
-        .partitionBy(col("l_orderkey"), col("l_linenumber"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"),
-          col("l_quantity"), col("l_extendedprice"), col("l_discount"))
-      // SIX consumers (isolation check + 5 batch writes) of one
-      // scan+window lineage — materialize it once (the iterative-
-      // DataFrame discipline; blocks freed when the session drops it)
-      // even-orderkey half: the gate's test is the adversarial batch
-      // STRUCTURE (5 batches, dedup state, bucket-emptying retract),
-      // not data volume — the half keeps the stream cost in line with
-      // the other replay gates (the oracle filters identically)
-      val facts = tbl(s, dir, "lineitem")
-        .where(pmod(col("l_orderkey"), lit(2)) === 0)
-        .select(
-          col("l_returnflag"), col("l_linestatus"),
-          col("l_quantity"), col("l_extendedprice"), col("l_discount"),
-          col("l_orderkey"), col("l_linenumber"),
-          pmod(col("l_orderkey"), lit(3)).as("part"))
-        .withColumn("occ", row_number().over(occW))
-        .localCheckpoint()
-      val isG = col("l_returnflag") === "R" && col("l_linestatus") === "F"
-      // bucket isolation precondition: the retracted group must sit
-      // ALONE in its bucket or the empty-bucket path isn't exercised
-      val grpBkt = facts.where(col("part") =!= 1)
-        .select(col("l_returnflag"), col("l_linestatus")).distinct()
-        .select(col("l_returnflag"), col("l_linestatus"),
-          pmod(xxhash64(col("l_returnflag"), col("l_linestatus")), lit(64L))
-            .as("b"))
-        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      val gB = grpBkt.collectFirst { case ("R", "F", b) => b }
-        .getOrElse(sys.error("group (R,F) absent from parts {0,2}"))
-      require(grpBkt.count(_._3 == gB) == 1,
-        s"group (R,F) must occupy bucket $gB alone: $grpBkt")
-      def batch(df: DataFrame, sig: Long) =
-        df.withColumn("sig", lit(sig)).drop("part")
-      batch(facts.where(col("part") === 1), -1L).appendBatchTo(in, 0)
-      batch(facts.where(col("part") < 2), 1L).appendBatchTo(in, 1)
-      batch(facts.where(col("part") === 2), 1L).appendBatchTo(in, 2)
-      batch(facts.where(col("part") === 2), 1L).appendBatchTo(in, 3)
-      batch(facts.where(col("part") =!= 1 && isG), -1L).appendBatchTo(in, 4)
-      val view = graft.streaming.AggView(s"$base/view",
-        Seq("l_returnflag", "l_linestatus"),
-        Seq("sum_qty" -> round(col("l_quantity")).cast("long"),
-          "rev_cents" -> round(col("l_extendedprice")
-            * (lit(1.0) - col("l_discount")) * 100).cast("long")),
-        signCol = Some("sig"), buckets = 64)
-      view.init(batch(facts, 1L).where(lit(false)))
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        // SOURCE-side exactly-once for re-delivered facts: state-store
-        // dedup on the fact identity, upstream of the view
-        .dropDuplicates(Seq("l_orderkey", "l_linenumber", "occ", "sig"))
-        .writeStream
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          view.applyBatch(b, batchId)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      view.read(s)
-    }),
-    "q235_watermark_dedup_view" -> ((s, dir) => {
-      // WATERMARK-BOUNDED SOURCE DEDUP IN FRONT OF THE VIEW — q212's
-      // source-side dedup contract made FINITE. q212 screens
-      // redelivered facts with engine dropDuplicates, whose state is
-      // every identity EVER seen (the lateness contract that form
-      // leaves with the source: redelivery may arrive arbitrarily
-      // late, so nothing is evictable — see SCALE.md). Here the
-      // source declares its lateness bound (220 days of event time)
-      // and the screen is dropDuplicatesWithinWatermark: the
-      // duplicate redelivery arrives INSIDE the window (dropped — the
-      // view never double-counts), and once the watermark passes an
-      // identity's ts + delay its dedup row is EVICTED — state is
-      // O(identities within the lateness window), never O(stream
-      // history). Require-pinned: eviction happened (numRowsRemoved
-      // > 0 after the 1998 watermark jump clears the 1996 keys) and
-      // the final dedup state is strictly smaller than the full
-      // identity set. Oracle = the one-shot GROUP BY over the
-      // distinct fact multiset.
-      val base = s"/tmp/graft_q235_wmview_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val ckpt = s"$base/ckpt"
-      val occW = Window
-        .partitionBy(col("l_orderkey"), col("l_linenumber"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"),
-          col("l_quantity"), col("l_extendedprice"), col("l_discount"))
-      val facts = tbl(s, dir, "lineitem")
-        .where(pmod(col("l_orderkey"), lit(2)) === 0 &&
-          year(col("l_shipdate")).isin(1996, 1998))
-        .select(col("l_returnflag"), col("l_linestatus"),
-          col("l_quantity"), col("l_extendedprice"), col("l_discount"),
-          col("l_orderkey"), col("l_linenumber"),
-          col("l_shipdate").cast("timestamp").as("ts"))
-        .withColumn("occ", row_number().over(occW))
-        .withColumn("sig", lit(1L))
-        .localCheckpoint()
-      val y96 = year(col("ts")) === 1996
-      facts.where(y96 && month(col("ts")) <= 6).appendBatchTo(in, 0)
-      // Jul–Dec 1996 plus an EXACT duplicate redelivery of the
-      // May–Jun slice — late, but inside the 220-day lateness window
-      facts.where(y96 && month(col("ts")) > 6)
-        .unionByName(facts.where(y96 && month(col("ts")).isin(5, 6)))
-        .appendBatchTo(in, 1)
-      // the 1998 facts advance the watermark far enough to EVICT
-      // every 1996 identity's dedup row
-      facts.where(year(col("ts")) === 1998).appendBatchTo(in, 2)
-      val view = graft.streaming.AggView(s"$base/view",
-        Seq("l_returnflag", "l_linestatus"),
-        Seq("sum_qty" -> round(col("l_quantity")).cast("long"),
-          "rev_cents" -> round(col("l_extendedprice")
-            * (lit(1.0) - col("l_discount")) * 100).cast("long")),
-        signCol = Some("sig"), buckets = 64)
-      view.init(facts.where(lit(false)))
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .withWatermark("ts", "220 days")
-        .dropDuplicatesWithinWatermark("l_orderkey", "l_linenumber", "occ")
-        .writeStream
-        .foreachBatch { (b: DataFrame, batchId: Long) =>
-          view.applyBatch(b, batchId)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      val st = q.recentProgress.toSeq.filter(_.stateOperators.nonEmpty)
-      val removed = st.flatMap(_.stateOperators.toSeq.map(_.numRowsRemoved)).sum
-      val finalRows = st.last.stateOperators.head.numRowsTotal
-      val idents = facts.count()
-      require(removed > 0L,
-        "the watermark jump must evict expired dedup state")
-      require(finalRows > 0L && finalRows < idents,
-        s"dedup state must stay bounded by the window: $finalRows vs $idents")
-      view.read(s)
-    }),
-    "q213_vocab_coverage" -> ((s, dir) => {
-      // VOCABULARY COVERAGE CURVE for tokenizer/vocab-size planning:
-      // the smallest top-k word prefix (by count desc, word asc)
-      // whose cumulative token coverage reaches each target percent.
-      // The threshold test is EXACT integer math (100·cum ≥ pct·total
-      // — no float boundary), and min(struct(k, cum)) picks the
-      // frontier row deterministically. The rank window is
-      // single-partition but runs over the Heaps-bounded VOCAB table
-      // (the q159 stance), never the corpus; the corpus itself folds
-      // through one (w)-keyed count shuffle.
-      val counts = tbl(s, dir, "documents")
-        .select(explode(TextFunctions.tokens(col("text"))).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("c"))
-      val w = Window.orderBy(col("c").desc, col("w"))
-      val cum = counts
-        .withColumn("k", row_number().over(w).cast("long"))
-        .withColumn("cum", sum(col("c")).over(
-          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      val tot = cum.agg(sum(col("c")).as("tot"))
-      import s.implicits._
-      val targets = Seq(50L, 75L, 90L, 95L, 99L).toDF("target_pct")
-      cum.crossJoin(broadcast(tot)).crossJoin(broadcast(targets))
-        .where(lit(100L) * col("cum") >= col("target_pct") * col("tot"))
-        .groupBy("target_pct")
-        .agg(min(struct(col("k"), col("cum"))).as("m"),
-          min(col("tot")).as("total_tokens"))
-        .select(col("target_pct"), col("m.k").as("k_words"),
-          col("m.cum").as("cum_tokens"), col("total_tokens"))
-    }),
-    "q214_containment" -> ((s, dir) => {
-      // DIRECTED SHINGLE CONTAINMENT (|A∩B|/|A| ≥ 7/10): the
-      // asymmetric dedup measure that flags a short document quoted
-      // wholesale inside a long one — Jaccard's union denominator
-      // structurally hides that case. Rational threshold ⇒ every
-      // bound is exact integer math (tDen·inter ≥ tNum·n_a); A's
-      // rarest-shingle prefix probes B's full inverted list
-      // (containment can't length-bound B), verification is
-      // AND+popcount on dictionary-encoded int sets. k=3: trigram
-      // shingles keep prefix entries GENUINELY rare (bigram vocab on
-      // this corpus is ~1k with df~275 — prefix filtering needs a
-      // Zipf tail to bite; measured 36× fewer candidates at k=3).
-      Dedup.containmentPairs(tbl(s, dir, "documents"), "doc_id", "text",
-        k = 3, tNum = 7, tDen = 10)
-    }),
-    "q215_stream_ivf_append" -> ((s, dir) => {
-      // STREAMING IVF INDEX MAINTENANCE: the serving index of q210
-      // built INCREMENTALLY — the router (centroid table) is fixed
-      // up front, then embedding batches arrive through a micro-batch
-      // stream and each is assigned with the STORED centroids and
-      // appended to the cell-partitioned postings. Assignment is a
-      // pure per-row function of the fixed router, so the final index
-      // is a pure function of the posting multiset — batching-free —
-      // and lookups against it answer exactly the one-shot build's
-      // oracle (q210's SQL shape over this gate's scratch paths).
-      // This is how a 100 TB vector corpus keeps its ANN index live:
-      // O(batch) assignment + append per arrival, never a rebuild.
-      val base = graft.operators.Similarity.scratchIvfStreamPath
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val idx = s"$base/idx"; val ckpt = s"$base/ckpt"
-      val emb = tbl(s, dir, "embeddings")
-      Similarity.ivfCentWrite(emb, "vec_id", "embedding", idx,
-        nCentroids = 16, sampleSize = 2000, iters = 3)
-      emb.where(pmod(col("vec_id"), lit(2)) === 0).appendBatchTo(in, 0)
-      emb.where(pmod(col("vec_id"), lit(2)) === 1).appendBatchTo(in, 1)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          // batchId keys the posting directory: a crash-replayed
-          // micro-batch overwrites its OWN dir (exactly-once), it
-          // cannot append a duplicate posting copy
-          Similarity.ivfIndexAppend(b, "vec_id", "embedding", idx, bid)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      Similarity.ivfIndexTopK(s, emb.where(col("vec_id") < 10),
-        "vec_id", "embedding", idx, k = 5, nProbe = 4)
-    }),
-    "q216_trend_fit" -> ((s, dir) => {
-      // PER-SERIES OLS TREND from INTEGER MOMENTS (the q201
-      // discipline): daily purchase cent sums per user regressed on
-      // the day index; n, Σx, Σy, Σxx, Σxy are exact longs, slope is
-      // ONE division of exact ints and intercept is the identical
-      // 3-op IEEE sequence on both engines — no rounding contract
-      // needed. Degenerate series (one distinct day) drop by the same
-      // integer predicate. 100 TB: one (user, day) aggregate + one
-      // per-user moment aggregate, both partial-aggregated map-side.
-      olsFitFromDaily(tbl(s, dir, "events")
-        .where(col("event_type") === "purchase")
-        .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-        .agg(sum(scaledLong(col("value"), 2)).as("y")))
-    }),
-    "q217_cusum" -> ((s, dir) => {
-      // CUSUM CHANGEPOINT SCORE, all-integer: per user the maximum
-      // deviation of the running cent-sum from the straight line to
-      // the total — D = max_k |n·S_k − k·S_n| — is exact long math
-      // (no division inside the max, so no float boundary can move
-      // the argmax); the changepoint day is the earliest maximizer
-      // (hard rule 4 tiebreak). The per-user window runs over DAILY
-      // rows (series-length-bounded), never raw events. */
-      val daily = tbl(s, dir, "events")
-        .where(col("event_type") === "click")
-        .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-        .agg(sum(scaledLong(col("value"), 2)).as("y"))
-      val ord = Window.partitionBy("user_id").orderBy("day")
-      val all = Window.partitionBy("user_id")
-      val dev = daily.select(col("user_id"), col("day"),
-          row_number().over(ord).cast("long").as("k"),
-          sum(col("y")).over(
-            ord.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .as("sk"),
-          count(lit(1)).over(all).as("n"),
-          sum(col("y")).over(all).as("sn"))
-        .withColumn("dev", abs(col("n") * col("sk") - col("k") * col("sn")))
-      val pick = Window.partitionBy("user_id")
-        .orderBy(col("dev").desc, col("day"))
-      dev.withColumn("rn", row_number().over(pick))
-        .where(col("rn") === 1 && col("n") >= 2)
-        .select(col("user_id"), col("n").cast("long").as("n_days"),
-          date_format(col("day"), "yyyy-MM-dd").as("cp_day"),
-          col("dev").cast("long").as("d_stat"))
-    }),
-    "q218_ann_recall" -> ((s, dir) => {
-      // ANN QUALITY AUDIT under the oracle: recall@5 of the IVF route
-      // against the exact cosine top-5, swept over nProbe ∈ {1,2,4,8}
-      // — the measurement that decides an index's probe budget before
-      // it ships (IvfPqSpec pins recall floors in tests; this makes
-      // the audit a first-class catalog query). Hit counts are exact
-      // ints, recall is ONE division. iters=0 keeps the quantizer a
-      // pure function of the first 16 vectors (the q40 trick) so the
-      // oracle replays every probe sweep exactly. At 100 TB the audit
-      // runs on a query SAMPLE against the STORED assignment (q210's
-      // index); recomputing here keeps the gate self-contained.
-      val emb = tbl(s, dir, "embeddings")
-      val qs = emb.where(col("vec_id") < 10)
-      val cents: Array[Array[Float]] = emb
-        .select(col("vec_id"), col("embedding"))
-        .orderBy("vec_id").limit(16).collect()
-        .map(_.getAs[scala.collection.Seq[Float]](1).toArray)
-      val exact = Similarity.cosineTopK(qs, emb, "vec_id", "embedding",
-        k = 5).select("query_id", "cand_id")
-      val ivf = Seq(1, 2, 4, 8).map { np =>
-        Similarity.ivfTopKWithCentroids(qs, emb, "vec_id", "embedding",
-            k = 5, cents, nProbe = np)
-          .select(col("query_id"), col("cand_id"))
-          .withColumn("n_probe", lit(np.toLong))
-      }.reduce(_.unionByName(_))
-      val tot = exact.agg(count(lit(1)).as("total"))
-      ivf.join(exact, Seq("query_id", "cand_id"))
-        .groupBy("n_probe")
-        .agg(count(lit(1)).cast("long").as("hits"))
-        .crossJoin(broadcast(tot))
-        .select(col("n_probe"), col("hits"),
-          col("total").cast("long").as("total"),
-          (col("hits").cast("double") / col("total").cast("double"))
-            .as("recall"))
-    }),
-    "q219_stream_trend" -> ((s, dir) => {
-      // STREAMING TREND MONITOR: q216's per-(user, day) cent-sum
-      // table maintained LIVE through the state store across two
-      // event-id-parity arrival batches — LONG addition is
-      // commutative, so the complete-mode snapshot is a pure function
-      // of the event multiset, and the batch OLS fold over it answers
-      // q216's SQL verbatim. State = one long per (user, day) —
-      // series-grid-bounded, never event-count-bounded.
-      val base = s"/tmp/graft_q219_stream_trend_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val ev = tbl(s, dir, "events")
-        .where(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts", "value")
-      ev.where(pmod(col("event_id"), lit(2)) === 0).appendBatchTo(in, 0)
-      ev.where(pmod(col("event_id"), lit(2)) === 1).appendBatchTo(in, 1)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .groupBy(col("user_id"), to_date(col("ts")).as("day"))
-        .agg(sum(scaledLong(col("value"), 2)).as("y"))
-        .writeStream
-        .outputMode("complete")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("overwrite").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      olsFitFromDaily(s.read.parquet(out))
-    }),
-    "q220_maxsim" -> ((s, dir) => {
-      // LATE-INTERACTION (ColBERT-style) MaxSim retrieval: documents
-      // are SETS of token vectors (here vec_id div 8 groups 8 tokens
-      // per doc) and score(Q, D) = Σ_q max_d cosine(q, d) — the
-      // multi-vector ranking that beats single-vector retrieval on
-      // fine-grained matches. max over identical doubles is
-      // order-free (exact); only the 8-term sum is order-sensitive →
-      // round 6 (rule 9), ranked with a cand tiebreak. 100 TB shape:
-      // the token×token join broadcasts the query tokens; a corpus-
-      // scale run prefilters candidates per query TOKEN via ANN
-      // (q27/q210) and runs this exact MaxSim only on the union of
-      // token-level candidates.
-      val emb = tbl(s, dir, "embeddings")
-      val tok = Similarity.withNorm(
-        emb.select(floor(col("vec_id") / 8).cast("long").as("doc"),
-          pmod(col("vec_id"), lit(8)).as("pos"),
-          col("embedding").as("v")), "v", "nm")
-      val qtok = tok.where(col("doc") < 2)
-        .select(col("doc").as("qd"), col("pos").as("qpos"),
-          col("v").as("qv"), col("nm").as("qn"))
-      val mx = tok.join(broadcast(qtok), col("qd") =!= col("doc"))
-        .groupBy(col("qd"), col("qpos"), col("doc").as("cd"))
-        .agg(max(graft.expressions.FloatDotProduct(col("qv"), col("v"))
-          / (col("qn") * col("nm"))).as("m"))
-      val sc = mx.groupBy(col("qd").as("query_doc"), col("cd").as("cand_doc"))
-        .agg(round(sum(col("m")), 6).as("maxsim"))
-      val w = Window.partitionBy(col("query_doc"))
-        .orderBy(col("maxsim").desc, col("cand_doc"))
-      sc.withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= 5)
-    }),
-    "q221_proximity" -> ((s, dir) => {
-      // PHRASE-PROXIMITY RANKING: docs containing BOTH query terms,
-      // ranked by the minimum token-position distance between any
-      // occurrence pair — the retrieval feature that separates
-      // "terms co-occur" (BM25, q100) from "terms occur TOGETHER".
-      // Positions are exact ints from one posexplode; the per-doc
-      // pair fan-out is occurrences(a)×occurrences(b), bounded by
-      // per-doc term frequency, and the join is doc-keyed (posting
-      // lists, never a corpus cross join). proximity = ONE division
-      // of exact ints; (mindist, doc_id) rank per hard rule 4.
-      val toks = tbl(s, dir, "documents")
-        .select(col("doc_id"),
-          posexplode(TextFunctions.tokens(col("text"))).as(Seq("pos", "w")))
-      def side(term: String, p: String) =
-        toks.where(col("w") === term)
-          .select(col("doc_id"), col("pos").as(p))
-      side("order", "pa").join(side("table", "pb"), Seq("doc_id"))
-        .groupBy("doc_id")
-        .agg(min(abs(col("pa") - col("pb"))).cast("long").as("min_dist"),
-          countDistinct(col("pa")).cast("long").as("n_a"),
-          countDistinct(col("pb")).cast("long").as("n_b"))
-        .withColumn("proximity",
-          lit(1.0) / (lit(1.0) + col("min_dist").cast("double")))
-        // TakeOrderedAndProject does the top-20 DISTRIBUTED; the rank
-        // window then runs over ≤20 rows, never the match set
-        .orderBy(col("min_dist"), col("doc_id")).limit(20)
-        .withColumn("rank", row_number().over(
-          Window.orderBy(col("min_dist"), col("doc_id"))).cast("long"))
-    }),
-    "q222_rolling_distinct" -> ((s, dir) => {
-      // ROLLING 7-DAY DISTINCT USERS from DAILY HLL STATES — the
-      // production rolling-MAU pattern: one pass sketches each day's
-      // users into a 512-register vector; every trailing window is
-      // then answered by MERGING ≤7 stored states (register max is
-      // associative + idempotent, so the merged estimate is
-      // bit-identical to sketching the raw window — the q176
-      // guarantee, applied per sliding window). Raw events are read
-      // ONCE; the window fan-out is O(days × 7 × 512 B) states. An
-      // exact rolling distinct would re-scan ~7× the corpus (distinct
-      // doesn't decompose); the sketch table is what makes the daily
-      // report affordable at 100 TB.
-      val daily = tbl(s, dir, "events")
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(graft.expressions.HllSketch.registers(
-          col("user_id").cast("string"), p = 9).as("sk"))
-      val days = daily.select(col("day").as("d"))
-      days.join(daily,
-          col("day").between(date_sub(col("d"), 6), col("d")))
-        .groupBy(col("d"))
-        .agg(count(lit(1)).cast("long").as("n_days"),
-          round(graft.expressions.HllSketch.mergeRegisters(
-            col("sk"), p = 9), 4).as("rolling_mau"))
-        .select(date_format(col("d"), "yyyy-MM-dd").as("day"),
-          col("n_days"), col("rolling_mau"))
-    }),
-    "q223_rolling_p95" -> ((s, dir) => {
-      // ROLLING 7-DAY p95 from DAILY DDSketch STATES — q222's play
-      // for percentiles (rolling latency/size SLO reporting): one
-      // pass histograms each day's values, every trailing window is
-      // answered by merging ≤7 stored bucket histograms (count
-      // addition is exact and order-free, so the merged sketch IS
-      // the sketch of the raw window, and the estimate is a pure
-      // function of the window multiset — the q130 contract per
-      // sliding window). Raw events read once; window fan-out is
-      // O(days × 7 × occupied buckets).
-      val bounds = graft.expressions.DdSketch.boundaries(0.01, 1.0, 2e5)
-      val qs = Array(0.95)
-      val daily = tbl(s, dir, "events")
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(graft.expressions.DdSketchState.state(
-          col("value"), bounds).as("sk"))
-      val days = daily.select(col("day").as("d"))
-      days.join(daily,
-          col("day").between(date_sub(col("d"), 6), col("d")))
-        .groupBy(col("d"))
-        .agg(count(lit(1)).cast("long").as("n_days"),
-          graft.expressions.DdSketchState.mergeStates(
-            col("sk"), bounds, qs).as("ests"))
-        .select(date_format(col("d"), "yyyy-MM-dd").as("day"),
-          col("n_days"), element_at(col("ests"), 1).as("p95"))
-    }),
-    "q224_stream_rolling_mau" -> ((s, dir) => {
-      // STREAMING ROLLING-MAU: q222's daily HLL registers maintained
-      // LIVE through the state store across two event-id-parity
-      // arrival batches — register max is commutative and idempotent,
-      // so the complete-mode register snapshot is a pure function of
-      // the event multiset and equals the batch daily states; the
-      // trailing-window merge over the snapshot answers q222's SQL
-      // verbatim. State = 512 registers per day — O(days), never
-      // O(users).
-      val base = s"/tmp/graft_q224_stream_mau_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-      val ev = tbl(s, dir, "events").select("event_id", "user_id", "ts")
-      ev.where(pmod(col("event_id"), lit(2)) === 0).appendBatchTo(in, 0)
-      ev.where(pmod(col("event_id"), lit(2)) === 1).appendBatchTo(in, 1)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .groupBy(to_date(col("ts")).as("day"))
-        .agg(graft.expressions.HllSketch.registers(
-          col("user_id").cast("string"), p = 9).as("sk"))
-        .writeStream
-        .outputMode("complete")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("overwrite").parquet(out)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      val daily = s.read.parquet(out)
-      val days = daily.select(col("day").as("d"))
-      days.join(daily,
-          col("day").between(date_sub(col("d"), 6), col("d")))
-        .groupBy(col("d"))
-        .agg(count(lit(1)).cast("long").as("n_days"),
-          round(graft.expressions.HllSketch.mergeRegisters(
-            col("sk"), p = 9), 4).as("rolling_mau"))
-        .select(date_format(col("d"), "yyyy-MM-dd").as("day"),
-          col("n_days"), col("rolling_mau"))
-    }),
-    "q225_weighted_median" -> ((s, dir) => {
-      // EXACT WEIGHTED QUANTILES without a global sort: the smallest
-      // price whose cumulative QUANTITY reaches ⌈W·q⌉ — the
-      // volume-weighted median/p90 a market report wants (q191's
-      // two-pass histogram-prune, generalized to integer row
-      // weights). Pass 1 histograms weight SUMS (exact longs); pass 2
-      // sorts only the needed-bin sliver; the answer is a raw data
-      // value, hash-exact against the rank-based oracle. Duplicate
-      // prices cannot move it (crossing-row value is tie-invariant).
-      Quantiles.weightedExact(
-        tbl(s, dir, "lineitem")
-          .select(col("l_extendedprice"),
-            round(col("l_quantity")).cast("long").as("qty")),
-        "l_extendedprice", "qty",
-        Seq(("p50", 1L, 2L), ("p90", 9L, 10L)))
-    }),
-    "q226_gini" -> ((s, dir) => {
-      // GINI CONCENTRATION of customer revenue — the inequality
-      // measure a mixture/curation pipeline tracks to spot corpus
-      // domination. G = (2·Σ i·xᵢ − (n+1)·Σx) / (n·Σx) over the
-      // ascending revenue order: every term is an EXACT long (cents,
-      // ranks), the final expression ONE division — no rounding
-      // contract. The global rank is TWO-LEVEL (equi-width cent bins
-      // → per-bin window + broadcast prefix offsets), so no
-      // single-partition funnel over the customer table — the
-      // GlobalRank discipline for a skewed, non-hash order.
-      val cust = tbl(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(scaledLong(col("o_totalprice"), 2)).as("x"))
-      val r0 = cust.agg(min(col("x")), max(col("x")), count(lit(1))).head()
-      val (mn, mx, n) = (r0.getLong(0), r0.getLong(1), r0.getLong(2))
-      // every downstream product (2·Σi·x, (n+1)·Σx, n·Σx) is bounded
-      // by n·(n+1)·max(x); non-ANSI LONG math WRAPS silently past
-      // 2^63 while DuckDB's HUGEINT sum errors loudly — guard the
-      // bound here so a too-large corpus fails fast instead of
-      // returning a silently wrong Gini (SCALE.md concentration note)
-      require(BigInt(2) * BigInt(n) * BigInt(n + 1) * BigInt(mx)
-          <= BigInt(Long.MaxValue),
-        s"gini LONG bound exceeded: n=$n max_cents=$mx — " +
-          "rescale the measure or switch s1 to DECIMAL")
-      val width = math.max(1L, (mx - mn) / 1024 + 1)
-      val binned = cust.withColumn("bin", ((col("x") - lit(mn)) / lit(width))
-        .cast("long"))
-      val offsets = binned.groupBy("bin").agg(count(lit(1)).as("c"))
-        .withColumn("off", coalesce(sum(col("c")).over(
-          Window.orderBy(col("bin"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .drop("c")
-      binned.join(broadcast(offsets), Seq("bin"))
-        .withColumn("i", col("off") + row_number().over(
-          Window.partitionBy(col("bin"))
-            .orderBy(col("x"), col("o_custkey"))).cast("long"))
-        .agg(sum(col("i") * col("x")).as("s1"),
-          sum(col("x")).as("sx"), count(lit(1)).as("nn"))
-        .select(col("nn").cast("long").as("n_customers"),
-          col("sx").cast("long").as("total_cents"),
-          ((lit(2L) * col("s1") - (col("nn") + lit(1L)) * col("sx"))
-            .cast("double")
-            / (col("nn") * col("sx")).cast("double")).as("gini"))
-    }),
-    "q227_decile_share" -> ((s, dir) => {
-      // REVENUE DECILE SHARES (the Lorenz-curve table behind q226's
-      // scalar): customers bucketed into ascending-revenue deciles by
-      // EXACT integer rank math (decile = (10·(i−1)) div n), per-
-      // decile cents summed exactly, share = ONE division. Same
-      // two-level rank as q226 — equi-width cent bins, per-bin
-      // window, broadcast prefix offsets — no single-partition
-      // funnel. The table a curation pipeline reads to decide domain
-      // caps (q97): how much of the corpus the top slice owns.
-      val cust = tbl(s, dir, "orders")
-        .groupBy(col("o_custkey"))
-        .agg(sum(scaledLong(col("o_totalprice"), 2)).as("x"))
-      val r0 = cust.agg(min(col("x")), max(col("x")), count(lit(1))).head()
-      val (mn, n) = (r0.getLong(0), r0.getLong(2))
-      val width = math.max(1L, (r0.getLong(1) - mn) / 1024 + 1)
-      val binned = cust.withColumn("bin",
-        ((col("x") - lit(mn)) / lit(width)).cast("long"))
-      val offsets = binned.groupBy("bin").agg(count(lit(1)).as("c"))
-        .withColumn("off", coalesce(sum(col("c")).over(
-          Window.orderBy(col("bin"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .drop("c")
-      val tot = cust.agg(sum(col("x")).as("sx"))
-      binned.join(broadcast(offsets), Seq("bin"))
-        .withColumn("i", col("off") + row_number().over(
-          Window.partitionBy(col("bin"))
-            .orderBy(col("x"), col("o_custkey"))).cast("long"))
-        .withColumn("decile", (lit(10L) * (col("i") - 1L) / lit(n))
-          .cast("long"))
-        .groupBy("decile")
-        .agg(count(lit(1)).cast("long").as("n_cust"),
-          sum(col("x")).as("cents"))
-        .crossJoin(broadcast(tot))
-        .select(col("decile"), col("n_cust"),
-          col("cents").cast("long").as("cents"),
-          (col("cents").cast("double") / col("sx").cast("double"))
-            .as("share"))
-    }),
-    "q228_target_encoding" -> ((s, dir) => {
-      // TARGET ENCODING with additive smoothing — the feature-
-      // engineering op that replaces a categorical with its smoothed
-      // target mean: enc(c) = (Σ_c y + m·ȳ) / (n_c + m), m = 10,
-      // shrinking rare categories toward the global mean. Sums are
-      // exact cents; ȳ and enc are one FIXED mul-add-div IEEE
-      // sequence on exact ints, written identically in the SQL — no
-      // rounding contract. Shape: one category aggregate (map-side
-      // partials) + a broadcast one-row global frame.
-      val ev = tbl(s, dir, "events")
-      val g = ev.agg(sum(scaledLong(col("value"), 2)).as("gx"),
-        count(lit(1)).as("gn"))
-      ev.groupBy("event_type")
-        .agg(sum(scaledLong(col("value"), 2)).as("cx"),
-          count(lit(1)).as("n"))
-        .crossJoin(broadcast(g))
-        .select(col("event_type"), col("n").cast("long").as("n"),
-          col("cx").cast("long").as("sum_cents"),
-          ((col("cx").cast("double")
-            + lit(10.0) * (col("gx").cast("double") / col("gn").cast("double")))
-            / (col("n").cast("double") + lit(10.0))).as("enc_cents"))
-    }),
-    "q229_repair_targets" -> ((s, dir) => {
-      // MERKLE-STYLE REPAIR TARGETING — q173's digests made
-      // ACTIONABLE: replica B is replica A with a deterministic
-      // deletion (event_id ≡ 0 mod 499) and a deterministic update
-      // (value+1.0 where event_id ≡ 0 mod 503); the anti-entropy pass
-      // joins the two per-bucket digest tables and emits ONLY the
-      // buckets needing re-sync. The repair loop reads O(buckets)
-      // digest rows to locate divergence in a 100 TB table — the rows
-      // themselves ship only for flagged buckets. Digest folds are
-      // order-free (XOR / bounded sums), bucket = event_id mod 64.
-      val ev = tbl(s, dir, "events")
-        .select("event_id", "user_id", "event_type", "ts", "value")
-      val b = ev.where(pmod(col("event_id"), lit(499)) =!= 0)
-        .withColumn("value",
-          when(pmod(col("event_id"), lit(503)) === 0, col("value") + lit(1.0))
-            .otherwise(col("value")))
-      def bucketed(d: DataFrame) =
-        d.withColumn("bucket", pmod(col("event_id"), lit(64)).cast("long"))
-      Fingerprint.divergence(bucketed(ev), bucketed(b),
-        Seq("bucket"), Seq(col("event_id"), col("user_id"),
-          col("event_type"), unix_micros(col("ts").cast("timestamp")),
-          scaledLong(col("value"), 2)))
-    }),
-    "q231_indexed_ingest" -> ((s, dir) => {
-      // INDEXED INGEST — the composition the freshness fence exists
-      // for: a micro-batch stream of appends maintains BOTH the
-      // unit-partitioned data layout AND its zone-map skipping index
-      // in ONE foreachBatch loop. Each batch (a) lands its rows in an
-      // idempotent per-batch data dir (`__bid=<id>` overwrite — the
-      // q215 discipline, so a replayed batch replaces itself) and
-      // (b) folds per-unit stats through the #batch=-guarded index
-      // commit. After the drain the gate CHECKS THE FENCE — the
-      // index's coverage receipt equals the last appended batch id,
-      // so pruning with it is sound for every landed row — then
-      // serves a range lookup reading only index-matched unit
-      // directories + the exact residual. This is how a 100 TB
-      // ingest keeps its skipping index live: O(batch) data write +
-      // O(batch + touched index rows) refresh per arrival, never a
-      // rescan, never an unsound prune. Oracle = the plain range
-      // filter (the index buys IO skipping, never answers).
-      val base = s"/tmp/graft_q231_ingidx_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val ckpt = s"$base/ckpt"
-      val orders = tbl(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      val mx = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-      val w = mx / 8 + 1
-      val withUnit = orders
-        .withColumn("unit", expr(s"o_orderkey div $w").cast("int"))
-        .localCheckpoint()
-      // four arrival batches of two consecutive units each (the
-      // append pattern: contiguous key windows per ingest batch)
-      Seq(0, 1, 2, 3).foreach { k =>
-        withUnit
-          .where(col("unit") === 2 * k || col("unit") === 2 * k + 1)
-          .appendBatchTo(in, k)
-      }
-      val idx = ZoneMapIndex(s"$base/idx")
-      idx.init(s, "int", "long")
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          b.write.mode("overwrite").partitionBy("unit")
-            .parquet(s"$base/tbl/__bid=$bid")
-          idx.applyBatch(b, "unit", "o_orderkey", bid)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      // the fence: every landed batch is covered -> pruning is sound
-      require(idx.coveredBatch(s) == 3L,
-        s"index coverage receipt must equal the last appended batch: " +
-          s"${idx.coveredBatch(s)}")
-      val (lo, hi) = (mx / 3, mx / 3 + mx / 12)
-      val units = idx.matchingUnits(s, lit(lo), lit(hi))
-      require(units.nonEmpty && units.size < 8,
-        s"range probe should prune some of 8 units: $units")
-      s.read.parquet(s"$base/tbl")
-        .where(col("unit").isin(units.map(u => Integer.valueOf(u.toInt)): _*))
-        .where(col("o_orderkey") >= lo && col("o_orderkey") <= hi)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    }),
-    "q232_optimize_compact" -> ((s, dir) => {
-      // OPTIMIZE — small-file compaction closing the lakehouse loop
-      // (ingest q231 -> optimize HERE -> serve): the per-batch
-      // `__bid=` append dirs that make ingest idempotent accumulate
-      // small files; compaction rewrites them into ONE file per unit
-      // (repartition on unit — the ivfIndexAppend write discipline)
-      // WITHOUT touching the index, because the index is keyed on
-      // LOGICAL units, not file names: the rewrite preserves each
-      // unit's row multiset, so per-unit (min, max, rows) stats are
-      // unchanged and the maintained index serves the compacted
-      // layout as-is. This is the q147/q230 design argument made
-      // operational — a file-keyed index (Delta's add-file stats)
-      // must be rewritten on OPTIMIZE; a unit-keyed one survives
-      // physical re-layout. The gate builds the q231 ingest layout,
-      // compacts, proves the file count strictly shrank while the
-      // stored index still pins bit-exact against one-shot stats
-      // over the COMPACTED table, then serves the same pruned range
-      // lookup from the new layout. Oracle = the plain range filter.
-      val base = s"/tmp/graft_q232_optimize_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val orders = tbl(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      val mx = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-      val w = mx / 8 + 1
-      val withUnit = orders
-        .withColumn("unit", expr(s"o_orderkey div $w").cast("int"))
-        .localCheckpoint()
-      val idx = ZoneMapIndex(s"$base/idx")
-      idx.init(s, "int", "long")
-      // KEY-INTERLEAVED arrival (stragglers for old units in every
-      // batch): each of the 4 batches touches EVERY unit, so the
-      // __bid= layout holds 4 small files per unit — exactly the
-      // small-file accumulation OPTIMIZE exists for (the index folds
-      // per-unit stats correctly under any batching)
-      Seq(0, 1, 2, 3).foreach { k =>
-        val b = withUnit.where(pmod(col("o_orderkey"), lit(4)) === k)
-        b.write.mode("overwrite").partitionBy("unit")
-          .parquet(s"$base/tbl/__bid=$k")
-        idx.applyBatch(b, "unit", "o_orderkey", k.toLong)
-      }
-      def files(p: String): Long = {
-        def rec(q: org.apache.hadoop.fs.Path): Long =
-          fs.listStatus(q).map(st =>
-            if (st.isDirectory) rec(st.getPath)
-            else if (st.getPath.getName.endsWith(".parquet")) 1L else 0L).sum
-        rec(new org.apache.hadoop.fs.Path(p))
-      }
-      val before = files(s"$base/tbl")
-      // OPTIMIZE: one file per unit, unit dirs written by one task
-      s.read.parquet(s"$base/tbl")
-        .select("o_orderkey", "o_custkey", "o_totalprice", "unit")
-        .repartition(col("unit"))
-        .write.mode("overwrite").partitionBy("unit")
-        .parquet(s"$base/opt")
-      require(files(s"$base/opt") < before,
-        s"compaction must shrink files: $before -> ${files(s"$base/opt")}")
-      // the unit-keyed index survives the re-layout bit-exactly
-      val stored = idx.read(s).collect()
-        .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toMap
-      val oneShot = s.read.parquet(s"$base/opt").groupBy("unit")
-        .agg(min(col("o_orderkey")).as("mn"), max(col("o_orderkey")).as("mx"),
-          count(lit(1)).as("rows"))
-        .collect()
-        .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toMap
-      require(stored == oneShot,
-        "unit-keyed index must survive compaction unchanged")
-      val (lo, hi) = (mx / 4, mx / 4 + mx / 10)
-      val units = idx.matchingUnits(s, lit(lo), lit(hi))
-      require(units.nonEmpty && units.size < stored.size,
-        s"range probe should prune some of ${stored.size} units: $units")
-      s.read.parquet(s"$base/opt")
-        .where(col("unit").isin(units.map(u => Integer.valueOf(u.toInt)): _*))
-        .where(col("o_orderkey") >= lo && col("o_orderkey") <= hi)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    }),
-    "q230_incr_zone_map" -> ((s, dir) => {
-      // INCREMENTALLY-MAINTAINED ZONE-MAP INDEX — the RANGE-predicate
-      // sibling of q147, i.e. the Delta/Iceberg add-file-stats
-      // discipline as an operator: per-UNIT (min, max, rows) stats
-      // over an ordered key, collected AT APPEND TIME through the
-      // BucketedLog machine, O(batch + touched index rows) per
-      // refresh, never a table rescan. Units are contiguous orderkey
-      // ranges (the append pattern: auto-increment PK / log-offset
-      // windows per ingest batch), which is what makes per-unit
-      // ranges TIGHT — a hash shard would span the domain and prune
-      // nothing (exactly why q147 hashes and this one must not).
-      // min/max fold idempotently; rows is ADDITIVE and exact only
-      // under the #batch= replay guard (the q199 argument, spec-
-      // pinned). Gate pins stored == one-shot stats driver-side,
-      // then serves a RANGE scan reading only index-matched unit
-      // DIRECTORIES + the exact residual predicate. Oracle = the
-      // plain range filter (q192's contract: the index buys IO
-      // skipping, never answers).
-      val base = s"/tmp/graft_q230_zonemap_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val orders = tbl(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      val mx = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-      val w = mx / 8 + 1
-      // seven consumers (table write, 4 index commits, one-shot pin,
-      // lookup) of one scan — materialize it once
-      val withUnit = orders
-        .withColumn("unit", expr(s"o_orderkey div $w").cast("int"))
-        .localCheckpoint()
-      withUnit.write.mode("overwrite").partitionBy("unit")
-        .parquet(s"$base/tbl")
-      val idx = ZoneMapIndex(s"$base/idx")
-      idx.init(s, "int", "long")
-      // four arrival batches of two consecutive units each
-      Seq(0, 1, 2, 3).foreach { k =>
-        idx.applyBatch(
-          withUnit.where(col("unit") === 2 * k || col("unit") === 2 * k + 1),
-          "unit", "o_orderkey", k.toLong)
-      }
-      val stored = idx.read(s).collect()
-        .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toMap
-      val oneShot = withUnit.groupBy("unit")
-        .agg(min(col("o_orderkey")).as("mn"), max(col("o_orderkey")).as("mx"),
-          count(lit(1)).as("rows"))
-        .collect()
-        .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toMap
-      require(stored == oneShot,
-        "incrementally-maintained zone map diverged from one-shot stats")
-      val (lo, hi) = (mx / 5, mx / 5 + mx / 10)
-      val units = idx.matchingUnits(s, lit(lo), lit(hi))
-      require(units.nonEmpty && units.size < stored.size,
-        s"range probe should prune some of ${stored.size} units: $units")
-      // serve through the readWhere facade: the attached index prunes
-      // unit directories by default, the exact range runs as residual
-      graft.operators.IndexedTable(s"$base/tbl",
-          zoneMaps = Map("o_orderkey" -> idx))
-        .readWhere(s, Seq(graft.operators.IndexedTable.Range(
-          "o_orderkey", lit(lo), lit(hi))))
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    }),
-    "q234_optimize_retighten" -> ((s, dir) => {
-      // DELETE-PATH INDEX RE-TIGHTENING AT OPTIMIZE — the missing
-      // maintenance hook on the q147/q230 skipping indexes: deletes
-      // leave zone-map stats stale-WIDE (sound, coarser pruning) and
-      // Bloom bits CANNOT unlearn (fpp decays). The OPTIMIZE pass
-      // that rewrites the survivors also recomputes the TOUCHED
-      // units' stats and rebuilds the TOUCHED shards' bitsets —
-      // touched-bucket maintenance rewrites (O(touched index rows),
-      // never O(index)) that carry the coverage receipt (#batch=)
-      // UNCHANGED, because a rebuild rewrites covered state, it is
-      // not new coverage. Gate: delete each doomed unit's LOW key
-      // span, OPTIMIZE, rebuild, then require-pin (a) unit 2's min
-      // rose STRICTLY, (b) a probe range inside the deleted span no
-      // longer matches, (c) deleted keys' Bloom matches collapse
-      // (fresh fpp). Serve a pruned range lookup + Bloom point
-      // lookups from the compacted layout; oracle = the plain
-      // post-delete filters.
-      val base = s"/tmp/graft_q234_retighten_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val orders = tbl(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      val mx = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-      val w = mx / 8 + 1
-      val cut = 2 * w / 5
-      val withUnit = orders
-        .withColumn("unit", expr(s"o_orderkey div $w").cast("int"))
-        .localCheckpoint()
-      withUnit.write.mode("overwrite").partitionBy("unit")
-        .parquet(s"$base/tbl")
-      val idx = ZoneMapIndex(s"$base/idx")
-      idx.init(s, "int", "long")
-      idx.applyBatch(withUnit, "unit", "o_orderkey", 0L)
-      val bloom = graft.operators.IncrementalBloomIndex(s"$base/bidx",
-        nShards = 64, words = 1024)
-      bloom.init(s)
-      bloom.applyBatch(withUnit, "o_orderkey", 0L)
-      // DELETE the low 40% of units 2 and 3's key spans, then
-      // OPTIMIZE: compact the survivors (one file per unit)
-      val doomed = col("unit").isin(2, 3) && (col("o_orderkey") % w) < cut
-      s.read.parquet(s"$base/tbl").where(!doomed)
-        .repartition(col("unit"))
-        .write.mode("overwrite").partitionBy("unit")
-        .parquet(s"$base/opt")
-      val opt = s.read.parquet(s"$base/opt")
-      // stale-wide: a probe inside the DELETED span still matches
-      def mn2: Long = idx.read(s).where(col("unit") === 2)
-        .head().getLong(1)
-      val mnBefore = mn2
-      val probeBefore = idx.matchingUnits(s, lit(2 * w), lit(2 * w + cut / 2))
-      require(probeBefore.contains(2L),
-        "stale-wide stats must still match the deleted span")
-      // deleted keys still Bloom-match their shards (bits can't unlearn)
-      import graft.expressions.BloomMightContainCol
-      val deletedProbes = withUnit.where(doomed)
-        .select("o_orderkey").orderBy("o_orderkey").limit(40)
-        .localCheckpoint()
-      def bloomPairs: Long = bloom.read(s).join(broadcast(
-          deletedProbes.select(xxhash64(col("o_orderkey")).as("__h"))
-            .distinct()))
-        .where(BloomMightContainCol(col("__h"), col("bloom_bits"), 7))
-        .count()
-      val pairsBefore = bloomPairs
-      require(pairsBefore >= 40L, "pre-rebuild bits must cover deleted keys")
-      // the OPTIMIZE pass re-tightens BOTH indexes for the touched
-      // units/shards in the same rewrite. The zone rebuild reads ONLY
-      // the touched units' directories (static literal pruning — at
-      // 100 TB a rebuild must never rescan the table); the Bloom
-      // rebuild scans here because THIS table is unit-laid — in the
-      // q147 shard layout the same call prunes by shard directory
-      val touchedUnits = Seq(2, 3)
-      idx.rebuildUnits(
-        opt.where(col("unit")
-          .isin(touchedUnits.map(Integer.valueOf(_)): _*)),
-        "unit", "o_orderkey",
-        withUnit.where(doomed).select("unit").distinct())
-      bloom.rebuildShards(opt, "o_orderkey",
-        withUnit.where(doomed)
-          .select(bloom.shardOf(col("o_orderkey")).as("shard")).distinct())
-      require(mn2 > mnBefore, "unit 2's min must rise strictly")
-      val probeAfter = idx.matchingUnits(s, lit(2 * w), lit(2 * w + cut / 2))
-      require(!probeAfter.contains(2L) && probeAfter.size < probeBefore.size,
-        s"re-tightened stats must stop matching the deleted span: " +
-          s"$probeBefore -> $probeAfter")
-      val pairsAfter = bloomPairs
-      require(pairsAfter * 4 <= pairsBefore,
-        s"rebuilt shards must shed deleted keys: $pairsBefore -> $pairsAfter")
-      // serve from the compacted layout: a pruned range lookup over
-      // the surviving half-span + Bloom point lookups (pre-delete
-      // probe set; survivors answer, deleted keys die in the exact
-      // residual)
-      val (lo2, hi2) = (2 * w + cut, 2 * w + cut + w / 5)
-      // both serves through the readWhere facade over the compacted
-      // layout: the re-tightened zone map prunes the range's unit
-      // dirs, the rebuilt Bloom's shard filter + exact semi-join
-      // answer the point lookups (this table is unit-laid, so the
-      // shard filter is row-group skipping, not a directory prune —
-      // BloomAttachment doc)
-      val table234 = graft.operators.IndexedTable(s"$base/opt",
-        zoneMaps = Map("o_orderkey" -> idx),
-        blooms = Seq(graft.operators.BloomAttachment("o_orderkey", bloom)))
-      val rangeRows = table234.readWhere(s, Seq(
-          graft.operators.IndexedTable.Range("o_orderkey",
-            lit(lo2), lit(hi2))))
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .withColumn("src", lit("range"))
-      val probes = withUnit.where(col("o_orderkey") % 97 === 0)
-        .select("o_orderkey")
-      val pointRows = table234.readWhere(s, Seq(
-          graft.operators.IndexedTable.KeyIn("o_orderkey", probes)))
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-        .withColumn("src", lit("point"))
-      rangeRows.unionByName(pointRows)
-    }),
-    "q236_multicol_zonemap" -> ((s, dir) => {
-      // MULTI-COLUMN ZONE MAP over a Z-ORDERED layout — ZoneMapIndex
-      // generalized to the full Delta add-file-stats shape: per-unit
-      // (mn, mx) for EVERY indexed column, folded incrementally
-      // through the same BucketedLog machine, pruning on
-      // CONJUNCTIONS. The layout is 16 equal-depth slices of the
-      // z-order over (custkey, orderday) scaled to a common 8-bit
-      // grid — contiguous z-slices are rectangles in value space
-      // (q169/q183), so BOTH columns' per-unit ranges are tight and
-      // the two-predicate box reads STRICTLY fewer units than either
-      // single-column predicate allows (require-pinned — the whole
-      // point of N-column stats). Stats fold over any batching ==
-      // one-shot (require-pinned); oracle = the plain box filter
-      // (the index buys IO skipping, never answers).
-      val base = s"/tmp/graft_q236_mczm_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val t = tbl(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-          col("o_custkey").as("ck"),
-          datediff(col("o_orderdate"), lit("1995-01-01")).cast("long")
-            .as("dd"))
-      val (ckMax, ddMax) = {
-        val r = t.agg(max(col("ck")), max(col("dd"))).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      // normalize both dims to one 8-bit grid before interleaving so
-      // neither dominates the slice order (raw widths differ: ck is
-      // dense, dd spans ~2400 days)
-      val z = graft.operators.ZOrder.zValue(
-        col("ck") * 256L / (ckMax + 1L), col("dd") * 256L / (ddMax + 1L), 8)
-      val withUnit = t.withColumn("unit",
-          ntile(16).over(Window.orderBy(z, col("o_orderkey"))).cast("int"))
-        .localCheckpoint()
-      withUnit.write.mode("overwrite").partitionBy("unit")
-        .parquet(s"$base/tbl")
-      val idx = graft.operators.MultiColZoneMapIndex(s"$base/idx",
-        Seq("ck", "dd"))
-      idx.init(s, "int", Seq("long", "long"))
-      Seq(0, 1, 2, 3).foreach { k =>
-        idx.applyBatch(
-          withUnit.where(pmod(col("o_orderkey"), lit(4)) === k),
-          "unit", k.toLong)
-      }
-      val stored = idx.read(s).collect()
-        .map(r => r.getInt(0) -> r.toSeq.drop(1)).toMap
-      val oneShot = withUnit.groupBy("unit")
-        .agg(count(lit(1)).cast("long").as("rows"),
-          min("ck").as("mn_ck"), max("ck").as("mx_ck"),
-          min("dd").as("mn_dd"), max("dd").as("mx_dd"))
-        .collect().map(r => r.getInt(0) -> r.toSeq.drop(1)).toMap
-      require(stored == oneShot,
-        "incrementally-folded multi-column stats diverged from one-shot")
-      val (ckLo, ckHi) = (ckMax / 4, ckMax / 2)
-      val (ddLo, ddHi) = (ddMax / 4, ddMax / 2)
-      val ckOnly = idx.matchingUnits(s,
-        Seq(("ck", lit(ckLo), lit(ckHi))))
-      val ddOnly = idx.matchingUnits(s,
-        Seq(("dd", lit(ddLo), lit(ddHi))))
-      val both = idx.matchingUnits(s,
-        Seq(("ck", lit(ckLo), lit(ckHi)), ("dd", lit(ddLo), lit(ddHi))))
-      require(both.nonEmpty && both.size < ckOnly.size &&
-        both.size < ddOnly.size,
-        s"conjunction must out-prune both single predicates: " +
-          s"ck=${ckOnly.size} dd=${ddOnly.size} both=${both.size}")
-      // serve through readWhere: both ranges reach the multi-column
-      // index as ONE conjunction probe, residual box exact
-      graft.operators.IndexedTable(s"$base/tbl", multiCol = Some(idx))
-        .readWhere(s, Seq(
-          graft.operators.IndexedTable.Range("ck", lit(ckLo), lit(ckHi)),
-          graft.operators.IndexedTable.Range("dd", lit(ddLo), lit(ddHi))))
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    }),
-    "q263_maxscore_batch" -> ((s, dir) => {
-      // BATCHED MaxScore — q253's pruned walk promoted to the
-      // serving shape q240 has: the WHOLE %101 query frame through
-      // one pruned evaluation, per-query bounds / walk order /
-      // suffix sums / θ all in-plan (windows), the driver looping
-      // over WALK DEPTHS only. A query whose remaining bound-sum
-      // falls below its θ flips non-essential and STAYS so (partials
-      // only grow, suffixes only shrink), so its whole stopword tail
-      // folds in one aggregated join scoring only accumulated docs —
-      // require-pinned strictly fewer postings scored than the
-      // unpruned path across the batch. The accumulated partials are
-      // exact scores (monotone non-essential-ness ⇒ every candidate
-      // entered during its full-outer essential prefix), so the
-      // rounded ranking equals q240's — its oracle (q100's SQL)
-      // verbatim.
-      val base = s"/tmp/graft_q263_msbatch_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base)
-      idx.init(s)
-      (0 until 2).foreach { b =>
-        idx.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      val queries = docs.where(pmod(col("doc_id"), lit(101L)) === 0)
-        .localCheckpoint()
-      val report = idx.bm25TopKPrunedBatchReport(queries, "doc_id",
-        "text", k = 5, excludeSelf = true)
-      require(report.scoredPostings < report.totalPostings,
-        s"the batch walk must score strictly fewer postings than " +
-          s"the unpruned path: ${report.scoredPostings} of " +
-          s"${report.totalPostings}")
-      report.result
-    }),
-    "q262_fwd_audit_repair" -> ((s, dir) => {
-      // FORWARD-STATE AUDIT → REPAIR → OPTIMIZE — closing the
-      // maintenance loop q255/q258 built for postings over the
-      // doc-keyed state they left out: forward rot (a drifted stored
-      // dl) is INVISIBLE to the postings audit yet silently skews
-      // every deleteByIds (n, sumdl) decrement and moreLikeThis
-      // score. The gate plants all three rot kinds by raw state
-      // surgery (%17 docs' forward rows DROPPED, surviving %13≡1
-      // docs' stored dl DOUBLED in place, five phantom doc rows
-      // above max(doc_id)); the postings audit is require-pinned
-      // still CLEAN (the rot is forward-only), auditForward
-      // localizes exactly the planted docs per kind, and
-      // repairDocsForward rebuilds ONLY those docs' buckets with the
-      // re-audit require-pinned EMPTY. optimizeSegments then
-      // collapses BOTH states to one dir/bucket (require-pinned —
-      // the forward state is maintenance-covered, not just the
-      // postings), and a deleteByIds afterwards decrements by the
-      // REPAIRED dl — oracle = q100's SQL over the %10-reduced
-      // corpus, which only matches if every stored dl is corpus-true
-      // again.
-      val base = s"/tmp/graft_q262_fwdrepair_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base, withForward = true)
-      idx.init(s)
-      (0 until 4).foreach { b =>
-        idx.ingest(docs.where(pmod(col("doc_id"), lit(4L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      // segments accumulated on BOTH states (the optimize pin's
-      // precondition — taken before any touched-bucket rewrite
-      // collapses lists)
-      require(idx.postingsSegmentCounts(s).values.max > 1 &&
-        idx.fwdSegmentCounts(s).values.max > 1,
-        "corpus shape: segments must have accumulated on both states")
-      import s.implicits._
-      val maxId = docs.agg(max("doc_id")).head().getLong(0)
-      val rot = graft.streaming.BucketedLog(s"$base/fwd",
-        Seq("cand_id"), 32)
-      val phantoms = (1 to 5).map(i => (maxId + i, "ghost", 3.0, 1L))
-        .toDF("cand_id", "term", "dl", "tf")
-      val touched = docs.where(pmod(col("doc_id"), lit(17L)) === 0 ||
-          pmod(col("doc_id"), lit(13L)) === 1)
-        .select(col("doc_id").as("cand_id"))
-        .unionByName(phantoms.select("cand_id"))
-      rot.rewriteBuckets(touched) { (cur, _) =>
-        cur.get.where(pmod(col("cand_id"), lit(17L)) =!= 0)
-          .withColumn("dl", when(pmod(col("cand_id"), lit(13L)) === 1,
-            col("dl") * 2.0).otherwise(col("dl")))
-          .unionByName(phantoms)
-      }
-      require(idx.audit(docs, "doc_id", "text").count() == 0L,
-        "the postings audit must stay clean — the rot is forward-only")
-      val a1 = idx.auditForward(docs, "doc_id", "text").collect()
-        .map(r => r.getLong(0) ->
-          (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-      val missingExp = docs.where(pmod(col("doc_id"), lit(17L)) === 0)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      val driftExp = docs.where(pmod(col("doc_id"), lit(13L)) === 1 &&
-          pmod(col("doc_id"), lit(17L)) =!= 0)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      val phantomExp = (1 to 5).map(maxId + _).toSet
-      require(a1.keySet == missingExp ++ driftExp ++ phantomExp,
-        s"forward audit must localize exactly the planted docs: " +
-          s"${a1.keySet.size} vs ${(missingExp ++ driftExp ++
-            phantomExp).size}")
-      require(missingExp.forall(d => a1(d)._1 > 0 && a1(d)._2 == 0 &&
-        a1(d)._3 == 0), "dropped docs must read as missing")
-      require(driftExp.forall(d => a1(d)._3 > 0 && a1(d)._1 == 0 &&
-        a1(d)._2 == 0), "dl-doubled docs must read as drift")
-      require(phantomExp.forall(d => a1(d) == ((0L, 1L, 0L))),
-        "planted phantom rows must read as phantom")
-      idx.repairDocsForward(docs, "doc_id", "text",
-        a1.keySet.toSeq.toDF("cand_id"))
-      require(idx.auditForward(docs, "doc_id", "text").count() == 0L,
-        "the re-audit after a targeted forward repair must be EMPTY")
-      idx.optimizeSegments(s)
-      require(idx.postingsSegmentCounts(s).values.forall(_ == 1) &&
-        idx.fwdSegmentCounts(s).values.forall(_ == 1),
-        "post-OPTIMIZE reads must touch one dir/bucket on BOTH states")
-      // the repaired dl is exactly what deleteByIds decrements by
-      idx.deleteByIds(docs.where(pmod(col("doc_id"), lit(10L)) === 0)
-        .select("doc_id"), "doc_id", 0L)
-      val queries = docs.where(pmod(col("doc_id"), lit(101L)) === 0 &&
-        pmod(col("doc_id"), lit(10L)) =!= 0).localCheckpoint()
-      idx.bm25TopK(queries, "doc_id", "text", k = 5, excludeSelf = true)
-    }),
-    "q261_named_delete_streams" -> ((s, dir) => {
-      // NAMED DELETE STREAMS — two INDEPENDENT delete feeds (GDPR
-      // erasure %5, TTL expiry %9) race on ONE index from real
-      // threads, each with its own batch-id sequence and
-      // #txn.<writer>= watermark in both delete states: a single
-      // hardwired writer id would collide the two feeds on one
-      // scalar mark and silently swallow the trailing stream's lower
-      // batch ids (the q238 failure class, delete-side). The %45
-      // overlap is the sharp edge: both streams doom those docs, and
-      // the tombstone CLAIM fold (existing claims win, re-evaluated
-      // on every rebase) makes exactly one stream own each doc's
-      // (n, sumdl) decrement. Poisoned crash-replays per stream are
-      // no-ops by each writer's own marks; the purge then drops the
-      // doomed postings with the served answer require-pinned
-      // bit-identical. Oracle = q100's SQL over the doubly-reduced
-      // corpus — double decrement or a lost batch would skew
-      // N/avgdl and flip it.
-      val base = s"/tmp/graft_q261_namedel_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base)
-      idx.init(s)
-      (0 until 2).foreach { b =>
-        idx.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      val failures = java.util.Collections.synchronizedList(
-        new java.util.ArrayList[Throwable]())
-      val start = new java.util.concurrent.CountDownLatch(1)
-      val threads = Seq(("gdpr", 5L), ("ttl", 9L)).map { case (w, m) =>
-        new Thread(() => {
-          start.await()
-          try {
-            idx.deleteDocsDeferred(
-              docs.where(pmod(col("doc_id"), lit(m)) === 0),
-              "doc_id", "text", 0L, w)
-            // poisoned crash-replay of THIS stream's batch: doubled
-            // text would double the decrement — screened by ITS mark
-            idx.deleteDocsDeferred(
-              docs.where(pmod(col("doc_id"), lit(m)) === 0)
-                .withColumn("text",
-                  concat(col("text"), lit(" "), col("text"))),
-              "doc_id", "text", 0L, w)
-          } catch { case e: Throwable => failures.add(e) }
-        })
-      }
-      threads.foreach(_.start()); start.countDown()
-      threads.foreach(_.join())
-      import scala.jdk.CollectionConverters._
-      require(failures.asScala.isEmpty,
-        s"both delete streams must land via retry: " +
-          s"${failures.asScala.toList}")
-      require(idx.coveredDeletes(s, "gdpr") == 0L &&
-        idx.coveredDeletes(s, "ttl") == 0L,
-        "each delete stream must be fenced by its own watermark")
-      val queries = docs.where(pmod(col("doc_id"), lit(101L)) === 0 &&
-        pmod(col("doc_id"), lit(5L)) =!= 0 &&
-        pmod(col("doc_id"), lit(9L)) =!= 0).localCheckpoint()
-      def answer() = idx.bm25TopK(queries, "doc_id", "text", k = 5,
-        excludeSelf = true)
-      val before = answer().orderBy("query_id", "rank").collect().toSeq
-      idx.purgeDeletes(s)
-      require(idx.tombstoneCount(s) == 0L, "purge must drain tombstones")
-      require(before == answer().orderBy("query_id", "rank").collect()
-        .toSeq, "served answer must be bit-identical across the purge")
-      answer()
-    }),
-    "q260_dict_co_deletes" -> ((s, dir) => {
-      // DELETE-AWARE DICTIONARY, STREAMING CO-MAINTAINED — the
-      // composition hole q259 left open: once q252-class deletes
-      // flow on the corpus, an ingest-only dictionary silently
-      // serves the UN-deleted (df, cf) forever. ONE foreachBatch
-      // drain carries BOTH streams against the dictionary: each
-      // micro-batch folds its new docs' term counts (#batch=-
-      // screened) AND deletes the previous slice's %7 docs — a
-      // doc-id CLAIM commit (existing claims win; cross-batch
-      // repeats and racing writers decrement once) followed by the
-      // claim-derived negative (df, cf) fold under the delete
-      // writer's own watermark. Fences are per-stream; poisoned
-      // replays of BOTH streams are no-ops by their own marks; the
-      // amortized purgeClaims drains covered claims with the served
-      // lookup require-pinned identical. Oracle = q254's LIKE
-      // aggregation over (ingested − deleted) verbatim — a live
-      // dictionary must be indistinguishable from one built one-shot
-      // on the reduced corpus.
-      val base = s"/tmp/graft_q260_dictdel_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val ckpt = s"$base/ckpt"
-      val docs = tbl(s, dir, "documents")
-        .select("doc_id", "text").localCheckpoint()
-      (0 until 4).foreach { k =>
-        val ins = docs.where(pmod(col("doc_id"), lit(4L)) === k)
-          .withColumn("op", lit("ins"))
-        val del =
-          if (k == 0) ins.limit(0)
-          else docs.where(pmod(col("doc_id"), lit(4L)) === (k - 1) &&
-              pmod(col("doc_id"), lit(7L)) === 0)
-            .withColumn("op", lit("del"))
-        ins.unionByName(del).appendBatchTo(in, k)
-      }
-      val dict = graft.operators.TermDictionary(s"$base/dict")
-      dict.init(s)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          dict.ingest(b.where(col("op") === "ins"), "doc_id", "text", bid)
-          dict.delete(b.where(col("op") === "del"), "doc_id", "text", bid)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      require(dict.coveredBatch(s) == 3L && dict.coveredDeletes(s) == 3L,
-        s"both streams must be fenced at the last micro-batch: " +
-          s"ingest=${dict.coveredBatch(s)} " +
-          s"deletes=${dict.coveredDeletes(s)}")
-      require(dict.claimCount(s) > 0L, "delete claims must be pending")
-      // poisoned crash-replays of BOTH streams: doubled text would
-      // double every count — no-ops by each stream's own mark
-      dict.ingest(docs.where(pmod(col("doc_id"), lit(4L)) === 2)
-          .withColumn("text", concat(col("text"), lit(" "), col("text"))),
-        "doc_id", "text", 2L)
-      dict.delete(docs.where(pmod(col("doc_id"), lit(4L)) === 1 &&
-            pmod(col("doc_id"), lit(7L)) === 0)
-          .withColumn("text", concat(col("text"), lit(" "), col("text"))),
-        "doc_id", "text", 2L)
-      def answer() = dict.prefixTopK(s, "s", k = 10)
-      val before = answer().orderBy("rank").collect().toSeq
-      dict.purgeClaims(s)
-      require(dict.claimCount(s) == 0L,
-        "purgeClaims must drain the covered claims")
-      require(before == answer().orderBy("rank").collect().toSeq,
-        "served lookup must be identical across the claim drain")
-      answer()
-    }),
-    "q259_stream_autocomplete" -> ((s, dir) => {
-      // STREAMING CO-MAINTAINED DICTIONARY — q241's co-maintenance
-      // discipline applied to the autocomplete state: each
-      // micro-batch folds its term (df, cf) deltas into the
-      // letter-bucketed dictionary (touched first-letter buckets
-      // only), replay-screened by #batch=. After the drain the gate
-      // fences coveredBatch at the last arrival, replays a poisoned
-      // batch (doubled text would double every count — a no-op by
-      // the watermark), and serves the prefix lookup FROM THE STORE:
-      // one letter bucket read, exact startswith residual,
-      // all-integer ranking. Oracle = q254's LIKE aggregation
-      // verbatim — a dictionary kept live against the firehose must
-      // be indistinguishable from one built one-shot.
-      val base = s"/tmp/graft_q259_sdict_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val ckpt = s"$base/ckpt"
-      val docs = tbl(s, dir, "documents")
-        .select("doc_id", "text").localCheckpoint()
-      (0 until 4).foreach { k =>
-        docs.where(pmod(col("doc_id"), lit(4L)) === k)
-          .appendBatchTo(in, k)
-      }
-      val dict = graft.operators.TermDictionary(s"$base/dict")
-      dict.init(s)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          dict.ingest(b, "doc_id", "text", bid)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      require(dict.coveredBatch(s) == 3L,
-        s"dictionary coverage must reach the last arrival: " +
-          s"${dict.coveredBatch(s)}")
-      // poisoned crash-replay of the last batch: screened
-      dict.ingest(docs.where(pmod(col("doc_id"), lit(4L)) === 3)
-          .withColumn("text", concat(col("text"), lit(" "), col("text"))),
-        "doc_id", "text", 3L)
-      dict.prefixTopK(s, "s", k = 10)
-    }),
-    "q258_audit_repair" -> ((s, dir) => {
-      // AUDIT → TARGETED REPAIR, the closed integrity loop: plant
-      // all three kinds of postings rot by raw state surgery (term
-      // 'scan' rows DROPPED, term 'order' tf DOUBLED in place, five
-      // phantom fake-doc rows added under term 'big' — stats
-      // untouched, exactly what bit rot / a bad maintenance rewrite
-      // looks like), let the audit localize the damage per term
-      // (require-pinned: exactly those three terms, with the planted
-      // shape), then repairTerms rebuilds ONLY those terms' postings
-      // from the corpus (touched buckets, never a whole-index
-      // rebuild) and the re-audit is require-pinned EMPTY. The
-      // served BM25 afterwards must equal the pristine from-scratch
-      // answer — q100's SQL is the oracle verbatim.
-      val base = s"/tmp/graft_q258_repair_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base)
-      idx.init(s)
-      (0 until 2).foreach { b =>
-        idx.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      // raw surgery on the postings state (same path a buggy
-      // maintenance pass would take)
-      import s.implicits._
-      val rot = graft.streaming.BucketedLog(s"$base/post",
-        Seq("term"), 64)
-      // phantom ids sit strictly above max(doc_id) so they stay
-      // phantom at any scale factor
-      val maxId = docs.agg(max("doc_id")).head().getLong(0)
-      val phantoms = (1 to 5).map(i =>
-          ("big", maxId + i, 5.0, 1L, Seq(0)))
-        .toDF("term", "cand_id", "dl", "tf", "positions")
-      rot.rewriteBuckets(Seq("scan", "order", "big").toDF("term")) {
-        (cur, _) =>
-          cur.get.where(col("term") =!= "scan")
-            .withColumn("tf", when(col("term") === "order",
-              col("tf") * 2L).otherwise(col("tf")))
-            .unionByName(phantoms)
-      }
-      val a1 = idx.audit(docs, "doc_id", "text").collect()
-        .map(r => r.getString(0) ->
-          (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-      require(a1.keySet == Set("scan", "order", "big"),
-        s"audit must localize exactly the three rotted terms: " +
-          s"${a1.keySet}")
-      require(a1("scan")._1 > 0 && a1("scan")._2 == 0 &&
-        a1("scan")._3 == 0, s"scan must read as missing: ${a1("scan")}")
-      require(a1("order")._3 > 0 && a1("order")._1 == 0 &&
-        a1("order")._2 == 0, s"order must read as drift: ${a1("order")}")
-      require(a1("big") == ((0L, 5L, 0L)),
-        s"big must carry exactly the 5 phantoms: ${a1("big")}")
-      // the audit is already collected: feed ITS term set to the
-      // repair — a second full O(index + corpus-tokenize) audit pass
-      // just to re-derive the same bounded set would be pure waste
-      idx.repairTerms(docs, "doc_id", "text",
-        a1.keySet.toSeq.toDF("term"))
-      require(idx.audit(docs, "doc_id", "text").count() == 0L,
-        "the re-audit after a targeted repair must be EMPTY")
-      idx.bm25TopK(docs.where(pmod(col("doc_id"), lit(101L)) === 0),
-        "doc_id", "text", k = 5, excludeSelf = true)
-    }),
-    "q257_more_like_this" -> ((s, dir) => {
-      // MORE-LIKE-THIS FROM THE STORE — doc-as-query BM25 where the
-      // query doc's term vector comes from the FORWARD index (a
-      // doc-id point lookup on the postings transposed, q256's
-      // state), never from re-tokenizing text: the full query path
-      // is store-only — forward slice for the query terms, postings
-      // slice for the candidates, stats row for N/avgdl. Scoring is
-      // Retrieval.bm25Rank verbatim, so the oracle is q100's SQL
-      // with doc 101 as the one query.
-      val base = s"/tmp/graft_q257_mlt_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base, withForward = true)
-      idx.init(s)
-      (0 until 2).foreach { b =>
-        idx.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      idx.moreLikeThis(s, docId = 101L, k = 5)
-    }),
-    "q256_delete_by_id" -> ((s, dir) => {
-      // DELETE BY ID — the erasure-request shape: the deployment
-      // holds doomed doc IDS, not their text, so the index must
-      // supply everything a delete needs from its own state. The
-      // FORWARD index (postings transposed, doc-keyed) makes that a
-      // point lookup: ids' stored (dl) drive the exact (n, sumdl)
-      // decrement, never-ingested ids are naturally absent and
-      // SKIPPED (the gate passes phantom ids to prove it), an
-      // already-tombstoned id is anti-joined out (the cross-batch
-      // repeat is require-pinned stats-neutral via a second delete
-      // call), and a poisoned same-batch replay is screened. The
-      // purge drops postings AND forward rows together (else a
-      // purged doc would be re-found and double-decremented), with
-      // the served answer require-pinned bit-identical across it.
-      // Oracle = q100's SQL over the reduced (%6 removed) corpus.
-      val base = s"/tmp/graft_q256_delbyid_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base, withForward = true)
-      idx.init(s)
-      (0 until 2).foreach { b =>
-        idx.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      // doomed ids + phantom ids the corpus never contained — the
-      // delete must skip phantoms without skewing (n, sumdl).
-      // Phantoms sit strictly ABOVE max(doc_id) (an absolute offset
-      // would collide with real docs at a larger scale factor and
-      // silently tombstone live ones); deterministic pick via orderBy
-      val doomed = docs.where(pmod(col("doc_id"), lit(6L)) === 0)
-        .select("doc_id")
-      val maxId = docs.agg(max("doc_id")).head().getLong(0)
-      val withPhantoms = doomed.unionByName(
-        docs.select((col("doc_id") + lit(maxId + 1L)).as("doc_id"))
-          .orderBy("doc_id").limit(5))
-      idx.deleteByIds(withPhantoms, "doc_id", 0L)
-      // same-batch replay: screened by the #batch= watermark
-      idx.deleteByIds(withPhantoms, "doc_id", 0L)
-      // cross-batch repeat: already-tombstoned ids are anti-joined
-      // out — stats-neutral by construction
-      idx.deleteByIds(doomed, "doc_id", 1L)
-      val queries = docs.where(pmod(col("doc_id"), lit(101L)) === 0 &&
-        pmod(col("doc_id"), lit(6L)) =!= 0).localCheckpoint()
-      def answer() = idx.bm25TopK(queries, "doc_id", "text", k = 5,
-        excludeSelf = true)
-      val before = answer().orderBy("query_id", "rank").collect().toSeq
-      idx.purgeDeletes(s)
-      require(idx.tombstoneCount(s) == 0L, "purge must drain tombstones")
-      require(before == answer().orderBy("query_id", "rank").collect()
-        .toSeq, "served answer must be bit-identical across the purge")
-      // post-purge: a repeat delete of purged ids finds no forward
-      // rows — nothing re-tombstoned, stats untouched
-      idx.deleteByIds(doomed, "doc_id", 2L)
-      require(idx.tombstoneCount(s) == 0L,
-        "purged ids must not re-tombstone (forward rows are gone)")
-      require(before == answer().orderBy("query_id", "rank").collect()
-        .toSeq, "a post-purge repeat delete must be answer-neutral")
-      answer()
-    }),
-    "q255_index_audit" -> ((s, dir) => {
-      // INDEX INTEGRITY AUDIT — the q229 divergence-localization
-      // discipline applied to search state: re-derive postings from
-      // a reference corpus, full-outer compare against the stored
-      // LIVE postings per (term, doc), and report per-TERM counts of
-      // missing / phantom / tf-drifted pairs, so a detected
-      // divergence names exactly which terms to rebuild (touched
-      // buckets only), never the whole index. The gate plants all
-      // three divergence kinds deliberately: %7 docs are tombstone-
-      // deleted from the INDEX (audit sees them missing — and via
-      // the un-purged tombstone subtraction, exactly what queries
-      // serve), %11 docs are dropped from the AUDIT corpus (their
-      // stored postings become phantom), %13≡1 docs get doubled
-      // text in the audit corpus (every shared pair tf-drifts).
-      // Oracle = the same per-term arithmetic over the tokenized
-      // corpus — exact longs, no floats anywhere.
-      val base = s"/tmp/graft_q255_audit_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base)
-      idx.init(s)
-      (0 until 2).foreach { b =>
-        idx.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      idx.deleteDocsDeferred(docs.where(pmod(col("doc_id"), lit(7L)) === 0),
-        "doc_id", "text", 0L)
-      val auditCorpus = docs.where(pmod(col("doc_id"), lit(11L)) =!= 0)
-        .withColumn("text", when(pmod(col("doc_id"), lit(13L)) === 1,
-          concat(col("text"), lit(" "), col("text")))
-          .otherwise(col("text")))
-      idx.audit(auditCorpus, "doc_id", "text")
-    }),
-    "q254_term_autocomplete" -> ((s, dir) => {
-      // TERM DICTIONARY / AUTOCOMPLETE — prefix search by document
-      // frequency, the query shape a hash-bucketed postings store
-      // cannot serve (a prefix is a RANGE of terms; hashing scatters
-      // it over every bucket). The dictionary state co-locates terms
-      // by FIRST CHARACTER (BucketedLog hash-keyed on the prefix
-      // char), so the lookup reads ONE letter bucket (readFor
-      // directory prune) with the exact startswith as residual;
-      // (df, cf) counts fold additively per ingest batch and a
-      // poisoned replay is a no-op by the #batch= watermark.
-      // All-integer ranking (df desc, term). Oracle = the plain
-      // LIKE 's%' term aggregation.
-      val base = s"/tmp/graft_q254_dict_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val dict = graft.operators.TermDictionary(base)
-      dict.init(s)
-      (0 until 2).foreach { b =>
-        dict.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      // poisoned crash-replay of batch 1: doubled text would double
-      // every count — a no-op by the #batch= watermark
-      dict.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === 1)
-          .withColumn("text", concat(col("text"), lit(" "), col("text"))),
-        "doc_id", "text", 1L)
-      require(dict.coveredBatch(s) == 1L,
-        s"dictionary must be fenced at batch 1: ${dict.coveredBatch(s)}")
-      dict.prefixTopK(s, "s", k = 10)
-    }),
-    "q253_maxscore_bm25" -> ((s, dir) => {
-      // TOP-K PRUNED BM25 (MaxScore) — the classic serving
-      // optimization the segment store makes possible: per-term
-      // score upper bounds (idf · max tf-weight, derived from the
-      // stored postings) let the document-at-a-time walk SKIP
-      // scoring docs that cannot enter the top-k. Query = one rare
-      // term ('dup', ~5% df) + two stopword-class terms ('the',
-      // 'scan', ~78% df): the rare term's candidates fix θ, the
-      // stopwords' summed bounds fall below it, and their postings
-      // score ONLY for accumulated docs — require-pinned strictly
-      // fewer postings scored than the unpruned path (the q248
-      // rarest-first discipline generalized to ranked OR). The
-      // pruning is answer-invisible BY CONSTRUCTION (candidates
-      // re-rank through Retrieval.bm25Rank with full-slice df), so
-      // the oracle is the plain exhaustive BM25 for the same terms.
-      val base = s"/tmp/graft_q253_maxscore_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base)
-      idx.init(s)
-      (0 until 2).foreach { b =>
-        idx.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      val report = idx.bm25TopKPrunedReport(s,
-        Seq("dup", "the", "scan"), k = 10)
-      require(report.scoredPostings < report.totalPostings,
-        s"MaxScore must score strictly fewer postings than the " +
-          s"unpruned path: ${report.scoredPostings} of " +
-          s"${report.totalPostings}")
-      report.result
-    }),
-    "q252_stream_co_deletes" -> ((s, dir) => {
-      // STREAMING CO-MAINTAINED DELETES — the missing lifecycle leg
-      // of q241's search-ingest loop: ONE foreachBatch drain carries
-      // BOTH an ingest stream and a delete stream against the same
-      // index. Each micro-batch lands its new docs (segment append +
-      // stats fold, #batch=-screened) AND tombstones the previous
-      // slice's %7 docs (deleteDocsDeferred — O(batch) tombstone
-      // union + the deletes-writer's watermark-screened stats
-      // decrement), so deletes arrive interleaved with ingest like a
-      // real CDC feed. Fences are per-stream: coveredBatch (min of
-      // postings/stats #batch=) AND coveredDeletes (min of the
-      // delete writer's #txn.deletes= marks in the tombstone and
-      // stats states) must both equal the last micro-batch. Poisoned
-      // streams are no-ops by their own marks; one amortized
-      // purgeDeletes then drops the doomed postings with the served
-      // answer require-pinned bit-identical across the purge.
-      // Oracle = q100's SQL over (ingested − deleted).
-      val base = s"/tmp/graft_q252_codel_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val ckpt = s"$base/ckpt"
-      val docs = tbl(s, dir, "documents")
-        .select("doc_id", "text").localCheckpoint()
-      (0 until 4).foreach { k =>
-        val ins = docs.where(pmod(col("doc_id"), lit(4L)) === k)
-          .withColumn("op", lit("ins"))
-        val del =
-          if (k == 0) ins.limit(0)
-          else docs.where(pmod(col("doc_id"), lit(4L)) === (k - 1) &&
-              pmod(col("doc_id"), lit(7L)) === 0)
-            .withColumn("op", lit("del"))
-        ins.unionByName(del).appendBatchTo(in, k)
-      }
-      val idx = graft.operators.InvertedIndex(s"$base/idx")
-      idx.init(s)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          idx.ingest(b.where(col("op") === "ins"), "doc_id", "text", bid)
-          idx.deleteDocsDeferred(b.where(col("op") === "del"),
-            "doc_id", "text", bid)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      require(idx.coveredBatch(s) == 3L && idx.coveredDeletes(s) == 3L,
-        s"both streams must be fenced at the last micro-batch: " +
-          s"ingest=${idx.coveredBatch(s)} deletes=${idx.coveredDeletes(s)}")
-      require(idx.tombstoneCount(s) > 0L, "tombstones must be pending")
-      // poisoned crash-replays of BOTH streams: doubled text would
-      // double tf / the stats decrement — no-ops by each stream's mark
-      idx.ingest(docs.where(pmod(col("doc_id"), lit(4L)) === 2)
-          .withColumn("text", concat(col("text"), lit(" "), col("text"))),
-        "doc_id", "text", 2L)
-      idx.deleteDocsDeferred(
-        docs.where(pmod(col("doc_id"), lit(4L)) === 1 &&
-            pmod(col("doc_id"), lit(7L)) === 0)
-          .withColumn("text", concat(col("text"), lit(" "), col("text"))),
-        "doc_id", "text", 2L)
-      // live = ingested minus deleted: %7 docs of slices 0..2 are gone
-      val live = col("doc_id") % 7 =!= 0 || col("doc_id") % 4 === 3
-      val queries = docs.where(pmod(col("doc_id"), lit(101L)) === 0 &&
-        live).localCheckpoint()
-      def answer() = idx.bm25TopK(queries, "doc_id", "text", k = 5,
-        excludeSelf = true)
-      val before = answer().orderBy("query_id", "rank").collect().toSeq
-      idx.purgeDeletes(s)
-      require(idx.tombstoneCount(s) == 0L, "purge must drain tombstones")
-      require(before == answer().orderBy("query_id", "rank").collect()
-        .toSeq, "served answer must be bit-identical across the purge")
-      answer()
-    }),
-    "q251_multiwriter_search_ingest" -> ((s, dir) => {
-      // CONCURRENT MULTI-WRITER SEARCH INGEST — q238's txn machinery
-      // in the inverted index's natural deployment: TWO independent
-      // ingest streams (own batch-id sequences, real threads) fold
-      // disjoint halves of the corpus into ONE shared index, every
-      // postings append and stats fold racing through optimistic
-      // concurrency with rebase-on-loss (a lost segment append just
-      // re-appends against the new head — segment rows are version-
-      // independent). Each writer then crash-REPLAYS a poisoned
-      // batch (doubled text — would double tf and the stats), a
-      // no-op by ITS OWN #txn watermark regardless of how far the
-      // other advanced the chain. Fences are per-stream (coveredTxn
-      // = min of both states' marks). The served BM25 must equal
-      // q100's from-scratch form bit-exactly — the index cannot
-      // tell which writer landed which half. Oracle = q100's SQL.
-      val base = s"/tmp/graft_q251_mwsi_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base)
-      idx.init(s)
-      val failures = java.util.Collections.synchronizedList(
-        new java.util.ArrayList[Throwable]())
-      val threads = (0 until 2).map { w =>
-        new Thread(() => {
-          try {
-            (0 until 2).foreach { b =>
-              idx.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === w &&
-                  pmod(expr("doc_id div 2"), lit(2L)) === b),
-                "doc_id", "text", b.toLong, s"ing$w")
-            }
-            // poisoned crash-replay of this writer's batch 1
-            idx.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === w &&
-                  pmod(expr("doc_id div 2"), lit(2L)) === 1)
-                .withColumn("text",
-                  concat(col("text"), lit(" "), col("text"))),
-              "doc_id", "text", 1L, s"ing$w")
-          } catch { case e: Throwable => failures.add(e) }
-        })
-      }
-      threads.foreach(_.start()); threads.foreach(_.join())
-      import scala.jdk.CollectionConverters._
-      require(failures.asScala.isEmpty,
-        s"every ingest stream must land via retry: " +
-          s"${failures.asScala.toList}")
-      (0 until 2).foreach { w =>
-        require(idx.coveredTxn(s, s"ing$w") == 1L,
-          s"stream ing$w must be fenced at batch 1")
-      }
-      idx.bm25TopK(docs.where(pmod(col("doc_id"), lit(101L)) === 0),
-        "doc_id", "text", k = 5, excludeSelf = true)
-    }),
-    "q250_tombstone_delete" -> ((s, dir) => {
-      // DEFERRED (TOMBSTONED) INDEX DELETE — the merge-on-read dual
-      // of q247's eager purge: q247's touched-bucket rewrite hits
-      // every bucket the doomed docs' terms hash to (~O(index) for
-      // real text — the same amplification segment ingest removed),
-      // while a tombstone delete commits only the doomed ids
-      // (O(batch)) plus the watermark-screened stats decrement.
-      // Every query subtracts the tombstone set BEFORE df, so the
-      // answer is bit-identical to an index never containing the
-      // docs; ONE amortized purgeDeletes pass (Lucene's delete-then-
-      // merge) then physically drops the postings, drains the
-      // tombstones, and the gate require-pins the served answer
-      // IDENTICAL across the purge. A poisoned replay of the delete
-      // batch is a no-op (idempotent tombstone union by #batch=,
-      // stats screened by the deletes-writer's txn watermark).
-      // Oracle = q100's SQL over the reduced (%7 removed) corpus.
-      val base = s"/tmp/graft_q250_tombdel_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base)
-      idx.init(s)
-      (0 until 2).foreach { b =>
-        idx.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      val doomed = docs.where(pmod(col("doc_id"), lit(7L)) === 0)
-      idx.deleteDocsDeferred(doomed, "doc_id", "text", 0L)
-      // poisoned replay: doubled text would double the stats decrement
-      idx.deleteDocsDeferred(doomed
-          .withColumn("text", concat(col("text"), lit(" "), col("text"))),
-        "doc_id", "text", 0L)
-      require(idx.tombstoneCount(s) > 0L, "tombstones must be pending")
-      val queries = docs.where(pmod(col("doc_id"), lit(101L)) === 0 &&
-        pmod(col("doc_id"), lit(7L)) =!= 0).localCheckpoint()
-      def answer() = idx.bm25TopK(queries, "doc_id", "text", k = 5,
-        excludeSelf = true)
-      val before = answer().orderBy("query_id", "rank").collect().toSeq
-      idx.purgeDeletes(s)
-      require(idx.tombstoneCount(s) == 0L, "purge must drain tombstones")
-      val after = answer().orderBy("query_id", "rank").collect().toSeq
-      require(before == after,
-        "served answer must be bit-identical across the purge")
-      answer()
-    }),
-    "q249_phrase_search" -> ((s, dir) => {
-      // EXACT PHRASE SEARCH FROM THE STORE — the quoted-string query
-      // ("big order scan"), completing the stored-search surface:
-      // BM25 (q240, OR), proximity (q242, near), AND (q248),
-      // adjacency (this). Term i's stored positions shift by −i so a
-      // phrase occurrence is one shared anchor; the intersection is
-      // the rarest-first document-at-a-time walk on (doc, anchor) —
-      // k−1 equi-joins bounded by the rarest term's postings, the
-      // corpus never re-tokenized. Counts/positions exact integers
-      // (0-based anchors, overlapping occurrences each count).
-      // Oracle = the plain 3-gram scan.
-      val base = s"/tmp/graft_q249_phrase_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base)
-      idx.init(s)
-      (0 until 2).foreach { b =>
-        idx.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      idx.phraseTopK(s, Seq("big", "order", "scan"), k = 20)
-    }),
-    "q248_conjunctive_search" -> ((s, dir) => {
-      // CONJUNCTIVE (AND) SEARCH FROM THE STORE — the multi-term
-      // filter next to BM25 (OR) and proximity: docs containing ALL
-      // of {order, table, the}, answered from stored postings by the
-      // classic document-at-a-time walk — posting lists intersect
-      // SMALLEST-FIRST (k−1 equi-joins ordered by ascending df, each
-      // bounded by the rarest list's only-shrinking candidate set;
-      // spec-pinned in InvertedIndexSpec), never a groupBy-count
-      // that would shuffle the most common term's full postings.
-      // Reads only the three terms' buckets (readFor point lookup);
-      // ranking is exact integer math (total_tf desc, doc_id).
-      // Oracle = the plain multi-term HAVING-count filter.
-      val base = s"/tmp/graft_q248_conj_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base)
-      idx.init(s)
-      (0 until 2).foreach { b =>
-        idx.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      idx.conjunctiveTopK(s, Seq("order", "table", "the"), k = 20)
-    }),
-    "q247_index_delete" -> ((s, dir) => {
-      // INDEX DELETE — the lifecycle step an append-only postings
-      // store lacks: after two ingest batches, every %9 doc is
-      // DELETED from the stored index — postings purged by a
-      // touched-bucket maintenance rewrite (only the buckets the
-      // docs' terms hash to, never O(index)) and the corpus stats
-      // decremented by the NAMED WRITER 'deletes' (its own batch-id
-      // sequence and txn watermark, independent of the ingest
-      // stream's — the multi-writer machinery in its natural
-      // deployment). A poisoned full replay of the delete batch is a
-      // no-op: the posting purge is idempotent, the stats decrement
-      // is screened by the deletes-writer's watermark. The surviving
-      // queries must then answer the REDUCED corpus bit-exactly —
-      // df, N and avgdl all shrink, indistinguishable from an index
-      // that never contained the docs. Oracle = q100's SQL over the
-      // filtered corpus.
-      val base = s"/tmp/graft_q247_idxdel_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base)
-      idx.init(s)
-      (0 until 2).foreach { b =>
-        idx.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      val doomed = docs.where(pmod(col("doc_id"), lit(9L)) === 0)
-      idx.deleteDocs(doomed, "doc_id", "text", 0L)
-      // poisoned replay: same delete batch id, doubled text (would
-      // double the stats decrement) — watermark-screened
-      idx.deleteDocs(doomed
-          .withColumn("text", concat(col("text"), lit(" "), col("text"))),
-        "doc_id", "text", 0L)
-      idx.bm25TopK(docs.where(pmod(col("doc_id"), lit(101L)) === 0 &&
-          pmod(col("doc_id"), lit(9L)) =!= 0),
-        "doc_id", "text", k = 5, excludeSelf = true)
-    }),
-    "q246_rag_chunking" -> ((s, dir) => {
-      // RAG CHUNKING — overlapping token windows (size 32, stride
-      // 24), the retrieval-corpus preparation step between raw docs
-      // and the embedding/ANN family: each chunk carries its doc,
-      // index, bounds and an md5 content fingerprint (the chunk-level
-      // dedup key). Window count and slices are exact integer math on
-      // ONE tokenize; the fan-out is explode(sequence) — zero joins,
-      // zero shuffles before the final ordering, linear in total
-      // tokens at any corpus size.
-      val docs = tbl(s, dir, "documents")
-        .where(pmod(col("doc_id"), lit(5L)) === 0)
-        .select(col("doc_id"), TextFunctions.tokens(col("text")).as("t"))
-        .withColumn("n", size(col("t")))
-        .where(col("n") > 0)
-        .withColumn("k",
-          expr("1 + (greatest(n - 32, 0) + 23) div 24").cast("int"))
-      docs.select(col("doc_id"), col("t"), col("n"),
-          explode(sequence(lit(0), col("k") - 1)).as("i"))
-        .withColumn("chunk", slice(col("t"), col("i") * 24 + 1, lit(32)))
-        .select(col("doc_id"), col("i").cast("long").as("chunk_idx"),
-          size(col("chunk")).cast("long").as("n_tokens"),
-          element_at(col("chunk"), 1).as("first_tok"),
-          element_at(col("chunk"), -1).as("last_tok"),
-          md5(concat_ws(" ", col("chunk")).cast("binary")).as("fp"))
-    }),
-    "q245_ingest_expectations" -> ((s, dir) => {
-      // INGEST EXPECTATIONS — declarative constraints screened at the
-      // lakehouse door (the Delta Live Tables EXPECT discipline):
-      // three arrival batches carry five deterministic corruption
-      // classes — null keys (%13), range violations (%17 negative
-      // cents), FK violations (%23 unknown custkey), within-batch
-      // duplicates (%11 copies), and re-ingests of keys already
-      // landed (%19 batch-0 keys replayed into batch 2). Every row
-      // either passes ALL checks or lands in quarantine tagged with
-      // the FIRST violated check (fixed precedence) — violations are
-      // data, never silent drops. The unique-vs-store check probes
-      // the key store through BucketedLog.readFor — O(batch-touched
-      // buckets), never O(store), which is what makes PK enforcement
-      // affordable against a 100 TB history. Oracle = the same
-      // injections + precedence as one SQL CASE chain.
-      val base = s"/tmp/graft_q245_expect_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      import graft.operators.Expectations
-      val o = tbl(s, dir, "orders").select(
-        col("o_orderkey").as("okey"), col("o_custkey").as("ck0"),
-        round(col("o_totalprice") * 100).cast("long").as("cents0"))
-      val baseRows = o.select(col("okey"),
-          pmod(col("okey"), lit(3L)).cast("int").as("b"), lit(0).as("seq"),
-          when(col("okey") % 13 === 0, lit(null).cast("long"))
-            .otherwise(col("okey")).as("k"),
-          when(col("okey") % 23 === 0, col("ck0") + 1000000000L)
-            .otherwise(col("ck0")).as("ck"),
-          when(col("okey") % 17 === 0, -col("cents0") - 1)
-            .otherwise(col("cents0")).as("cents"))
-      val dupInBatch = baseRows.where(col("okey") % 11 === 0)
-        .withColumn("seq", lit(1))
-        .withColumn("cents", col("cents") + 7L)
-      val dupVsStore = baseRows.where(col("okey") % 19 === 0 &&
-          col("b") === 0 && col("okey") % 13 =!= 0 &&
-          col("okey") % 17 =!= 0 && col("okey") % 23 =!= 0)
-        .withColumn("b", lit(2)).withColumn("seq", lit(2))
-      val rows = baseRows.unionByName(dupInBatch).unionByName(dupVsStore)
-        .localCheckpoint()
-      val custKeys = tbl(s, dir, "customer")
-        .select(col("c_custkey").as("ck")).distinct()
-      val store = graft.streaming.BucketedLog(s"$base/keys", Seq("k"),
-        buckets = 32)
-      store.init(rows.select("k").limit(0))
-      val parts = (0 until 3).map { b =>
-        val batch = rows.where(col("b") === b)
-          .join(broadcast(custKeys.withColumn("__fk", lit(1))),
-            Seq("ck"), "left")
-        var sc = Expectations.screen(batch, Seq(
-          "null_key" -> col("k").isNotNull,
-          "range" -> (col("cents") >= 0),
-          "fk" -> (col("__fk") === 1)))
-        sc = Expectations.dedupInBatch(sc, Seq("k"), "seq", "dup_in_batch")
-        sc = Expectations.dedupVsStore(sc, store, "k", "dup_vs_store")
-        val out = sc.localCheckpoint()
-        store.applyBatch(
-          Expectations.accepted(out).select("k"), b.toLong) { (cur, bb) =>
-          cur.map(_.unionByName(bb)).getOrElse(bb).distinct()
-        }
-        out
-      }
-      parts.reduce(_ unionByName _)
-        .withColumn("reason",
-          coalesce(col(Expectations.ReasonCol), lit("accepted")))
-        .groupBy("reason")
-        .agg(count(lit(1)).cast("long").as("n"),
-          sum("cents").cast("long").as("cents"))
-    }),
-    "q243_deep_clone" -> ((s, dir) => {
-      // DEEP CLONE — fork-for-experiment on the log-structured store
-      // (the Delta CLONE discipline): an additive store is cloned at
-      // a snapshot (verbatim bucket file copy, O(current state), no
-      // history, watermarks RESET), then the SOURCE ingests one more
-      // batch and the CLONE ingests a DIFFERENT one — reusing batch
-      // id 0 the source already consumed, legal precisely because a
-      // clone is a new store with fresh stream identities. Each side
-      // must equal its own one-shot fold: the snapshot plus only its
-      // own post-fork batch — full isolation both ways. Long-exact
-      // measures; oracle = the two folds in SQL, side-tagged.
-      val base = s"/tmp/graft_q243_clone_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val facts = tbl(s, dir, "orders").select(
-          col("o_orderkey"),
-          pmod(col("o_custkey"), lit(128L)).as("g"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .localCheckpoint()
-      def agg(d: DataFrame): DataFrame = d.groupBy("g")
-        .agg(count(lit(1)).cast("long").as("cnt"),
-          sum("cents").cast("long").as("cents"))
-      def add(cur: Option[DataFrame], b: DataFrame): DataFrame =
-        cur.map(_.unionByName(b)).getOrElse(b).groupBy("g")
-          .agg(sum("cnt").cast("long").as("cnt"),
-            sum("cents").cast("long").as("cents"))
-      val src = graft.streaming.BucketedLog(s"$base/src", Seq("g"),
-        buckets = 16)
-      src.init(agg(facts).limit(0))
-      (0 until 2).foreach { b =>
-        src.applyBatch(
-          agg(facts.where(pmod(col("o_orderkey"), lit(2L)) === b)),
-          b.toLong)(add)
-      }
-      val clone = src.cloneTo(s, s"$base/clone")
-      // the fork: source and clone each take a DIFFERENT extra batch;
-      // the clone reuses id 0 (fresh watermarks by contract)
-      src.applyBatch(
-        agg(facts.where(col("o_orderkey") % 5 === 0)), 2L)(add)
-      clone.applyBatch(
-        agg(facts.where(col("o_orderkey") % 7 === 0)), 0L)(add)
-      src.read(s).withColumn("side", lit("src"))
-        .unionByName(clone.read(s).withColumn("side", lit("clone")))
-    }),
-    "q244_ewma" -> ((s, dir) => {
-      // EWMA SMOOTHING per (user, day) — the classic recursive
-      // time-series filter s_i = (1-α)·s_{i-1} + α·x_i, which no
-      // distributive aggregate expresses: the fold is ORDER-EXACT, so
-      // the engine sorts each group's bounded event list once
-      // (sort_array over (ts, event_id, cents) — unique tiebreak,
-      // hard rule 4) and replays the recursion as ONE IEEE fold.
-      // α = 0.25 and the cents inputs are exactly representable, and
-      // DuckDB's list_reduce replays the IDENTICAL operation sequence
-      // (the list_prepend-seed trick, CLAUDE.md rule 11) — so both
-      // engines agree BIT-FOR-BIT with no rounding contract at all.
-      // 100 TB shape: one hash shuffle on (user, day); per-group
-      // state is the day's bounded event list, never a global sort.
-      val evs = tbl(s, dir, "events")
-        .select(col("user_id"),
-          date_format(col("ts"), "yyyy-MM-dd").as("day"),
-          struct(col("ts"), col("event_id"),
-            round(col("value") * 100).as("cents")).as("e"))
-        .groupBy("user_id", "day")
-        .agg(sort_array(collect_list(col("e"))).as("xs"))
-      evs.select(col("user_id"), col("day"),
-          size(col("xs")).cast("long").as("n"),
-          aggregate(col("xs"), lit(0.0),
-            (acc, x) => acc * lit(0.75) + x.getField("cents") * lit(0.25))
-            .as("ewma_cents"))
-        .where(col("n") >= 3)
-    }),
-    "q242_stored_proximity" -> ((s, dir) => {
-      // POSITIONAL POSTINGS — q221's phrase-proximity ranking
-      // answered FROM THE STORE: the index keeps per-(term, doc)
-      // token positions (the Lucene positional-postings discipline —
-      // what separates "can do BM25" from "can do phrases"), so the
-      // query reads ONLY the two terms' buckets (readFor point
-      // lookup), explodes their stored position lists and ranks by
-      // minimum pair distance — O(two posting lists), the corpus is
-      // never re-tokenized. min-dist is shift-invariant, so the
-      // store's 0-based positions agree with the oracle's 1-based
-      // numbering. Oracle = q221's SQL verbatim.
-      val base = s"/tmp/graft_q242_prox_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base)
-      idx.init(s)
-      (0 until 2).foreach { b =>
-        idx.ingest(docs.where(pmod(col("doc_id"), lit(2L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      idx.proximityTopK(s, "order", "table", k = 20)
-    }),
-    "q241_stream_search_index" -> ((s, dir) => {
-      // STREAMING SEARCH INGEST — the q231 co-maintenance discipline
-      // applied to retrieval: one foreachBatch loop lands each
-      // micro-batch of documents in an idempotent `__bid=` data dir
-      // AND folds its postings + corpus stats into the stored
-      // inverted index (term-keyed touched-bucket commits, replay-
-      // screened per state). After the drain the gate checks the
-      // fence — coveredBatch (the MIN of the two states' #batch=
-      // receipts: postings commit first, so min is sound) equals the
-      // last arrived batch — then answers q100's BM25 FROM THE STORE,
-      // never re-tokenizing the landed corpus. This is how a search
-      // deployment keeps its index live against a 100 TB firehose:
-      // O(batch) data write + O(batch postings + touched buckets)
-      // index refresh per arrival. Oracle = q100's SQL verbatim.
-      val base = s"/tmp/graft_q241_ssi_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val in = s"$base/in"; val ckpt = s"$base/ckpt"
-      val docs = tbl(s, dir, "documents")
-        .select("doc_id", "text").localCheckpoint()
-      (0 until 4).foreach { k =>
-        docs.where(pmod(col("doc_id"), lit(4L)) === k)
-          .appendBatchTo(in, k)
-      }
-      val idx = graft.operators.InvertedIndex(s"$base/idx")
-      idx.init(s)
-      val q = graft.streaming.IngestPipeline.fileSource(
-          s, s.read.parquet(in).schema, in, maxFilesPerTrigger = 1)
-        .writeStream
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          b.write.mode("overwrite").parquet(s"$base/tbl/__bid=$bid")
-          idx.ingest(b, "doc_id", "text", bid)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt).start()
-      q.awaitTermination()
-      require(idx.coveredBatch(s) == 3L,
-        s"index coverage receipt must equal the last arrived batch: " +
-          s"${idx.coveredBatch(s)}")
-      // queries drawn from the LANDED corpus (the __bid dirs), the
-      // answer from the stored index alone
-      val landed = s.read.parquet(s"$base/tbl")
-      require(landed.count() == docs.count(), "every doc must land")
-      idx.bm25TopK(landed.where(pmod(col("doc_id"), lit(101L)) === 0),
-        "doc_id", "text", k = 5, excludeSelf = true)
-    }),
-    "q240_incr_inverted_index" -> ((s, dir) => {
-      // INCREMENTALLY-MAINTAINED INVERTED INDEX — q100's BM25
-      // answered FROM STORED STATE: the corpus arrives in four
-      // ingest batches, each folding its postings into a TERM-keyed
-      // BucketedLog (touched buckets only) and its (n, sumdl) into an
-      // additive stats row; a poisoned replay of batch 2 is screened
-      // by the #batch= watermark. The query path never re-tokenizes
-      // the corpus: it reads ONLY the buckets the query's terms hash
-      // to (BucketedLog.readFor — a directory-pruned point lookup,
-      // O(query-term postings), never O(index)), derives df exactly
-      // within the slice (a term's postings live wholly in its
-      // bucket), and reuses Retrieval.bm25Rank verbatim — so the
-      // stored-index answer is bit-identical to q100's from-scratch
-      // form and q100's SQL is the oracle, unchanged.
-      val base = s"/tmp/graft_q240_invidx_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val docs = tbl(s, dir, "documents").localCheckpoint()
-      val idx = graft.operators.InvertedIndex(base)
-      idx.init(s)
-      (0 until 4).foreach { b =>
-        idx.ingest(docs.where(pmod(col("doc_id"), lit(4L)) === b),
-          "doc_id", "text", b.toLong)
-      }
-      // poisoned crash-replay: batch 2 re-delivered with doubled text
-      // (would double every tf) — a no-op by the #batch= watermark
-      idx.ingest(docs.where(pmod(col("doc_id"), lit(4L)) === 2)
-          .withColumn("text", concat(col("text"), lit(" "), col("text"))),
-        "doc_id", "text", 2L)
-      idx.bm25TopK(docs.where(pmod(col("doc_id"), lit(101L)) === 0),
-        "doc_id", "text", k = 5, excludeSelf = true)
-    }),
-    "q239_deletion_vectors" -> ((s, dir) => {
-      // DELETE WITHOUT REWRITE — equality deletion vectors, merge-on-
-      // read (the Iceberg equality-delete / Delta DV discipline; the
-      // copy-on-write sibling is q234). Three delete batches land as
-      // O(|keys|) sidecar commits while the table's data files stay
-      // BYTE-UNTOUCHED (full recursive listing pinned identical —
-      // mtime and length of every file); a replayed delete batch is
-      // a no-op by the sidecar's #batch= watermark. The read path
-      // splits by the bounded dirty-unit set: clean units stream
-      // through VERBATIM (no join), only dirty units pay a broadcast
-      // anti-join. OPTIMIZE purge then rewrites ONLY the dirty units
-      // (require-pinned: clean units' files byte-identical across
-      // the purge, sidecar drained) and the served aggregate must be
-      // bit-identical before and after — the purge trades read-time
-      // work for storage hygiene, never answers. Oracle = the plain
-      // NOT-deleted filter, emitted once per phase.
-      val base = s"/tmp/graft_q239_dv_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val orders = tbl(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-      val mx = orders.agg(max(col("o_orderkey"))).head().getLong(0)
-      val w = mx / 8 + 1
-      val withUnit = orders
-        .withColumn("unit", expr(s"o_orderkey div $w").cast("int"))
-        .localCheckpoint()
-      withUnit.write.mode("overwrite").partitionBy("unit")
-        .parquet(s"$base/tbl")
-      val dv = graft.operators.DeletionVectors(s"$base/tbl", s"$base/dv",
-        keyCol = "o_orderkey")
-      dv.init(withUnit)
-      def listing(): Map[String, (Long, Long)] = {
-        val it = fs.listFiles(new org.apache.hadoop.fs.Path(s"$base/tbl"),
-          true)
-        val b = Map.newBuilder[String, (Long, Long)]
-        while (it.hasNext) { val f = it.next()
-          b += f.getPath.toString -> (f.getModificationTime, f.getLen) }
-        b.result()
-      }
-      val before = listing()
-      dv.delete(withUnit.where(col("unit").isin(2, 3) &&
-          col("o_orderkey") % 7 === 0)
-        .select("unit", "o_orderkey"), 0L)
-      dv.delete(withUnit.where(col("unit") === 5 &&
-          col("o_custkey") % 5 === 0)
-        .select("unit", "o_orderkey"), 1L)
-      dv.delete(withUnit.where(col("unit") === 2 &&
-          col("o_orderkey") % 11 === 3)
-        .select("unit", "o_orderkey"), 2L)
-      // crash-replay of batch 1 with a WIDER key set: screened
-      // outright by the sidecar's #batch= watermark
-      dv.delete(withUnit.where(col("unit") === 5)
-        .select("unit", "o_orderkey"), 1L)
-      require(listing() == before,
-        "a DV delete must not touch a single table data file")
-      require(dv.dirtyUnits(s) == Seq(2, 3, 5),
-        s"dirty units: ${dv.dirtyUnits(s)}")
-      def served: DataFrame = dv.read(s).groupBy("unit")
-        .agg(count(lit(1)).cast("long").as("cnt"),
-          sum(round(col("o_totalprice") * 100).cast("long")).as("cents"))
-      val mor = served.withColumn("phase", lit("mor")).localCheckpoint()
-      val rewritten = dv.purge(s)
-      require(rewritten == Seq(2, 3, 5), s"purged units: $rewritten")
-      require(dv.dirtyUnits(s).isEmpty, "sidecar must drain at purge")
-      val after = listing()
-      def clean(m: Map[String, (Long, Long)]) = m.view.filterKeys(p =>
-        !p.matches(""".*unit=(2|3|5)/.*""")).toMap
-      require(clean(after) == clean(before),
-        "purge must leave clean units' files byte-identical")
-      Seq(2, 3, 5).foreach { u =>
-        val files = after.keySet.filter(_.contains(s"unit=$u/"))
-          .filter(_.endsWith(".parquet"))
-        require(files.size == 1, s"unit $u must compact to one file")
-      }
-      mor.unionByName(served.withColumn("phase", lit("purged")))
-    }),
-    "q238_multiwriter_store" -> ((s, dir) => {
-      // CONCURRENT MULTI-WRITER INGEST — the Delta txn/appId
-      // discipline on the BucketedLog: THREE named writers with
-      // INDEPENDENT batch-id sequences (0,1,2 each — under the old
-      // scalar #batch= mark, whichever writer committed first would
-      // silently swallow the others' batches) fold additive facts
-      // into ONE store from three real threads, every commit racing
-      // through optimistic concurrency with rebase-on-loss
-      // (applyBatchWithRetry: a lost race re-reads the winner's
-      // state and re-merges — the merge is a pure function of what
-      // it read, so the retry IS the rebase). After landing, each
-      // writer crash-REPLAYS a batch with poisoned values (×999):
-      // a no-op by ITS OWN txn watermark even though the other
-      // writers advanced the version chain arbitrarily far past it.
-      // The final state must equal the one-shot GROUP BY over all
-      // nine batches — exactly-once per writer, no interleave
-      // dependence, no coordination. Long-exact measures (cents)
-      // so the additive fold is order-independent bit-for-bit.
-      val base = s"/tmp/graft_q238_multi_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val facts = tbl(s, dir, "orders").select(
-          col("o_orderkey"),
-          pmod(col("o_custkey"), lit(256L)).as("g"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .localCheckpoint()
-      def batchOf(w: Int, b: Int): DataFrame = facts
-        .where(pmod(col("o_orderkey"), lit(3L)) === w &&
-          pmod(expr("o_orderkey div 3"), lit(3L)) === b)
-        .groupBy("g").agg(count(lit(1)).cast("long").as("cnt"),
-          sum("cents").cast("long").as("cents"))
-      def add(cur: Option[DataFrame], b: DataFrame): DataFrame =
-        cur.map(_.unionByName(b)).getOrElse(b).groupBy("g")
-          .agg(sum("cnt").cast("long").as("cnt"),
-            sum("cents").cast("long").as("cents"))
-      val log = graft.streaming.BucketedLog(s"$base/log", Seq("g"),
-        buckets = 32)
-      log.init(batchOf(0, 0).limit(0))
-      val failures = java.util.Collections.synchronizedList(
-        new java.util.ArrayList[Throwable]())
-      val threads = (0 until 3).map { w =>
-        new Thread(() => {
-          try {
-            (0 until 3).foreach { b =>
-              log.applyBatchWithRetry(batchOf(w, b), b.toLong,
-                s"w$w", maxAttempts = 64)(add)
-            }
-            // poisoned crash-replay: the writer's own mark screens it
-            log.applyBatchWithRetry(
-              batchOf(w, 1).withColumn("cents", col("cents") * 999L),
-              1L, s"w$w", maxAttempts = 64)(add)
-          } catch { case e: Throwable => failures.add(e) }
-        })
-      }
-      threads.foreach(_.start()); threads.foreach(_.join())
-      import scala.jdk.CollectionConverters._
-      require(failures.asScala.isEmpty,
-        s"every writer must land via retry: ${failures.asScala.toList}")
-      (0 until 3).foreach { w =>
-        require(log.txnWatermark(s, s"w$w") == 2L,
-          s"writer w$w watermark must be 2")
-      }
-      log.read(s)
-    }),
-    "q237_optimize_zorder" -> ((s, dir) => {
-      // OPTIMIZE ZORDER BY — RE-CLUSTERING, the layout-CHANGING
-      // maintenance pass (q232 compacts within units; this one
-      // replaces the unit scheme entirely): the table starts in the
-      // q230 arrival layout (linear orderkey ranges), where a
-      // (custkey, orderday) box prunes NOTHING — neither column
-      // correlates with arrival, so every unit's stats span the
-      // domain. The pass rewrites into z-order slices over the two
-      // query columns and the multi-column index is REBUILT RIDING
-      // THE REWRITE (stats collected from the data the pass already
-      // moves — Delta's ZORDER recomputes file stats the same way;
-      // an index keyed on the OLD units cannot survive a
-      // re-clustering, which is exactly the difference from q232).
-      // Require-pinned: the same box reads at most HALF the rows
-      // under the new layout's index that it read under the old
-      // one's. Oracle = the plain box filter.
-      val base = s"/tmp/graft_q237_zopt_${md5Hex(dir)}"
-      val fs = org.apache.hadoop.fs.FileSystem
-        .get(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true)
-      val t = tbl(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-          col("o_custkey").as("ck"),
-          datediff(col("o_orderdate"), lit("1995-01-01")).cast("long")
-            .as("dd"))
-      val r0 = t.agg(max(col("o_orderkey")), max(col("ck")),
-        max(col("dd"))).head()
-      val (okMax, ckMax, ddMax) = (r0.getLong(0), r0.getLong(1),
-        r0.getLong(2))
-      val w = okMax / 8 + 1
-      // BEFORE: arrival layout + its multi-column index
-      val arrival = t
-        .withColumn("unit", expr(s"o_orderkey div $w").cast("int"))
-        .localCheckpoint()
-      arrival.write.mode("overwrite").partitionBy("unit")
-        .parquet(s"$base/tbl0")
-      val idx0 = graft.operators.MultiColZoneMapIndex(s"$base/idx0",
-        Seq("ck", "dd"))
-      idx0.init(s, "int", Seq("long", "long"))
-      idx0.applyBatch(arrival, "unit", 0L)
-      val (ckLo, ckHi) = (ckMax / 8, ckMax / 4)
-      val (ddLo, ddHi) = (ddMax / 2, 3 * ddMax / 4)
-      val box = Seq(("ck", lit(ckLo), lit(ckHi)),
-        ("dd", lit(ddLo), lit(ddHi)))
-      def rowsRead(idx: graft.operators.MultiColZoneMapIndex): Long = {
-        val units = idx.matchingUnits(s, box)
-        idx.read(s).where(col("unit").cast("long")
-            .isin(units.map(Long.box): _*))
-          .agg(sum(col("rows"))).head().getLong(0)
-      }
-      val before = rowsRead(idx0)
-      // OPTIMIZE ZORDER BY (ck, dd): one pass rewrites the layout
-      // AND rebuilds the index from the rows it already moves
-      val z = graft.operators.ZOrder.zValue(
-        col("ck") * 256L / (ckMax + 1L), col("dd") * 256L / (ddMax + 1L), 8)
-      val zed = s.read.parquet(s"$base/tbl0").drop("unit")
-        .withColumn("unit",
-          ntile(16).over(Window.orderBy(z, col("o_orderkey"))).cast("int"))
-        .localCheckpoint()
-      zed.repartition(col("unit"))
-        .write.mode("overwrite").partitionBy("unit")
-        .parquet(s"$base/tbl1")
-      val idx1 = graft.operators.MultiColZoneMapIndex(s"$base/idx1",
-        Seq("ck", "dd"))
-      idx1.init(s, "int", Seq("long", "long"))
-      idx1.applyBatch(zed, "unit", 0L)
-      val after = rowsRead(idx1)
-      require(after * 2 <= before,
-        s"re-clustering must at least halve the box's read set: " +
-          s"$before -> $after rows")
-      // serve the box from the re-clustered layout through readWhere
-      // (the rebuilt multi-column index prunes by default)
-      graft.operators.IndexedTable(s"$base/tbl1", multiCol = Some(idx1))
-        .readWhere(s, Seq(
-          graft.operators.IndexedTable.Range("ck", lit(ckLo), lit(ckHi)),
-          graft.operators.IndexedTable.Range("dd", lit(ddLo), lit(ddHi))))
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    })
-  )
-
-  // ── DuckDB oracle SQL (identical aliases; see class doc) ──────────
-
-  /** Shared DuckDB CTE prefix for the media scratch corpora: hex view,
-    * header decode, quarantine — q58/q76/q81 interpolate it with their
-    * own scratch path, so the decode twin can never drift between
-    * them (it mirrors Multimodal.decodeOne / decodeMetaExpr). */
-  private def mediaDecodeCte(path: String): String =
-    s"""raw AS (
-       |  SELECT media_id, content, hex(content) AS hx,
-       |    octet_length(content) AS len
-       |  FROM read_parquet('$path/*.parquet')),
-       |dec AS (
-       |  SELECT media_id, hx, len,
-       |    (content IS NOT NULL AND len >= 15 AND substr(hx,1,4) = '4752') AS magic_ok,
-       |    CASE WHEN content IS NOT NULL AND len >= 15 AND substr(hx,1,4) = '4752'
-       |         THEN ('0x' || substr(hx,5,2))::INT END AS kind_code,
-       |    CASE WHEN len >= 15 THEN ('0x' || substr(hx,7,8))::BIGINT END AS w,
-       |    CASE WHEN len >= 15 THEN ('0x' || substr(hx,15,8))::BIGINT END AS h
-       |  FROM raw),
-       |valid AS (SELECT * FROM dec WHERE magic_ok AND kind_code BETWEEN 0 AND 2)""".stripMargin
-
-  /** q96's (and q131's) oracle: components re-derived by recursive
-    * min-reachability over the SAME pair SQL as q63 — reach
-    * accumulates (node, reachable node) pairs to a fixpoint
-    * (recursive UNION is distinct, so it terminates), cluster = min
-    * reachable; singletons label themselves via the LEFT join. */
-  private def componentsSql: String =
-    s"""WITH RECURSIVE pairs AS ($simhash64PairsSql),
-       |e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-       |  UNION SELECT doc_b, doc_a FROM pairs),
-       |reach(n, m) AS (
-       |  SELECT u, u FROM e
-       |  UNION
-       |  SELECT e.u, r.m FROM e JOIN reach r ON e.v = r.n),
-       |comp AS (SELECT n, min(m) AS cluster_id FROM reach GROUP BY n),
-       |lab AS (SELECT d.doc_id,
-       |    coalesce(c.cluster_id, d.doc_id) AS cluster_id
-       |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.n),
-       |sz AS (SELECT cluster_id, count(*) AS n FROM lab GROUP BY cluster_id)
-       |SELECT l.doc_id, l.cluster_id, sz.n::BIGINT AS cluster_size,
-       |  l.doc_id = l.cluster_id AS is_keeper
-       |FROM lab l JOIN sz USING (cluster_id)""".stripMargin
-
-  /** q167's oracle: the 4-round synchronous LPA trajectory replayed
-    * as a generated CTE chain over the SAME pair SQL — per round,
-    * each node's neighbor-label histogram picked by (count DESC,
-    * label ASC) row_number; all-integer, no rounding contract.
-    * Singletons label themselves via the LEFT join, as q96. */
-  private def labelPropSql: String = {
-    val k = 4
-    val header =
-      s"""WITH pairs AS MATERIALIZED ($simhash64PairsSql),
-         |e AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |  UNION SELECT doc_b, doc_a FROM pairs),
-         |l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS lbl FROM e)""".stripMargin
-    val blocks = (1 to k).map { i =>
-      s"""l$i AS MATERIALIZED (
-         |  SELECT node, lbl FROM (
-         |    SELECT e.u AS node, l.lbl, count(*) AS c,
-         |      row_number() OVER (PARTITION BY e.u
-         |        ORDER BY count(*) DESC, l.lbl) AS rn
-         |    FROM e JOIN l${i - 1} l ON e.v = l.node
-         |    GROUP BY e.u, l.lbl) WHERE rn = 1)""".stripMargin
-    }
-    val tail =
-      s"""lab AS MATERIALIZED (
-         |  SELECT d.doc_id, coalesce(l.lbl, d.doc_id) AS community_id
-         |  FROM documents d LEFT JOIN l$k l ON d.doc_id = l.node),
-         |sz AS (SELECT community_id, count(*) AS n FROM lab
-         |  GROUP BY community_id)
-         |SELECT lab.doc_id, lab.community_id, sz.n::BIGINT AS community_size
-         |FROM lab JOIN sz USING (community_id)""".stripMargin
-    (header +: blocks).mkString(",\n") + ",\n" + tail
-  }
-
-  /** q171's oracle: the capped k-core peel (k = 5, the `k` constant
-    * below — keep this doc and that tuple in sync) replayed as a generated
-    * CTE chain over the SAME pair SQL — each round keeps nodes with
-    * degree ≥ k and edges whose BOTH endpoints survive; idempotent
-    * past the fixpoint, so the fixed block count matches Spark's
-    * early-exit loop. */
-  private def kCoreSql: String = {
-    val (k, rounds) = (5, 10)
-    val header =
-      s"""WITH pairs AS MATERIALIZED (
-         |  SELECT DISTINCT l_suppkey AS src, o_custkey + 1000000 AS dst
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-         |e0 AS MATERIALIZED (SELECT src AS u, dst AS v FROM pairs
-         |  UNION SELECT dst, src FROM pairs)""".stripMargin
-    val blocks = (1 to rounds).map { i =>
-      s"""k$i AS MATERIALIZED (SELECT u FROM e${i - 1}
-         |  GROUP BY u HAVING count(*) >= $k),
-         |e$i AS MATERIALIZED (SELECT a.u, a.v FROM e${i - 1} a
-         |  JOIN k$i x ON a.u = x.u JOIN k$i y ON a.v = y.u)""".stripMargin
-    }
-    (header +: blocks).mkString(",\n") +
-      s"\nSELECT u AS node, count(*)::BIGINT AS core_degree" +
-      s"\nFROM e$rounds GROUP BY u"
-  }
-
-  /** q173's (and q175's) oracle: the per-day digest table rebuilt
-    * from the same canonical-integer row hashes — commutative folds,
-    * so the DuckDB run stands in for the "other replica". */
-  /** q168's (and q186's) oracle: the exact largest-remainder
-    * apportionment + md5-deal prefix draw, both mixes. q186 replays
-    * it through bounded streaming state — identical by the
-    * k-smallest-of-union prefix argument, so the SAME SQL oracles
-    * both. */
-  private def stratifiedSampleSql: String =
-    """WITH d AS MATERIALIZED (SELECT doc_id AS id, lang AS stratum,
-      |    md5(doc_id::VARCHAR) AS h FROM documents),
-      |rk AS MATERIALIZED (SELECT id, stratum, row_number() OVER (
-      |    PARTITION BY stratum ORDER BY h, id) AS rn FROM d),
-      |cnt AS (SELECT stratum, count(*)::BIGINT AS n FROM d
-      |  GROUP BY stratum),
-      |quo AS MATERIALIZED (SELECT stratum, n,
-      |    (200 * n) // sum(n) OVER () AS fl,
-      |    (200 * n) % sum(n) OVER () AS rem FROM cnt),
-      |alloc AS (SELECT stratum,
-      |    fl + CASE WHEN row_number() OVER (ORDER BY rem DESC, stratum)
-      |      <= 200 - sum(fl) OVER () THEN 1 ELSE 0 END AS quota
-      |  FROM quo),
-      |prop AS (SELECT r.id, r.stratum FROM rk r
-      |  JOIN alloc a USING (stratum) WHERE r.rn <= a.quota),
-      |bal AS (SELECT id, stratum FROM rk WHERE rn <= 25)
-      |SELECT id AS doc_id, stratum AS lang, 'prop' AS sel FROM prop
-      |UNION ALL
-      |SELECT id AS doc_id, stratum AS lang, 'bal' AS sel FROM bal""".stripMargin
-
-  /** q136's (and q185's) oracle: KMV sketch + per-type-pair set ops,
-    * re-derived from the raw table under the `DISTINCT hash ORDER BY
-    * hash LIMIT k` state contract. q185 re-merges stored day-level
-    * states instead — bit-identical by the k-smallest-of-union
-    * argument, so the SAME SQL oracles both. */
-  private def kmvSetopsSql: String =
-    """WITH vals AS (SELECT DISTINCT event_type AS g, user_id AS u FROM events),
-      |hx AS (SELECT DISTINCT g,
-      |    ('0x' || substr(md5(CAST(u AS VARCHAR)), 1, 13))::BIGINT AS h
-      |  FROM vals),
-      |sk AS (SELECT g, list_sort(list(h)) AS sk FROM (
-      |    SELECT g, h FROM (SELECT g, h,
-      |        row_number() OVER (PARTITION BY g ORDER BY h) AS rn FROM hx)
-      |    WHERE rn <= 64) t GROUP BY g),
-      |p AS (SELECT a.g AS type_a, b.g AS type_b, a.sk AS ska, b.sk AS skb
-      |  FROM sk a JOIN sk b ON a.g < b.g),
-      |wu AS (SELECT *, list_sort(list_distinct(list_concat(ska, skb)))[1:64] AS us
-      |  FROM p),
-      |eu AS (SELECT type_a, type_b, ska, skb, us,
-      |    CASE WHEN len(us) < 64 THEN CAST(len(us) AS DOUBLE)
-      |         ELSE 63.0::DOUBLE * 4503599627370496.0::DOUBLE / us[64]
-      |    END AS est_union
-      |  FROM wu),
-      |ei AS (SELECT type_a, type_b, est_union,
-      |    (CAST(len(list_filter(us,
-      |        x -> list_contains(ska, x) AND list_contains(skb, x))) AS DOUBLE)
-      |      / CAST(len(us) AS DOUBLE)) * est_union AS est_inter
-      |  FROM eu),
-      |sizes AS (SELECT g, count(*)::BIGINT AS n FROM vals GROUP BY g),
-      |xinter AS (SELECT x.g AS type_a, y.g AS type_b,
-      |    count(*)::BIGINT AS exact_inter
-      |  FROM vals x JOIN vals y ON x.u = y.u AND x.g < y.g GROUP BY 1, 2)
-      |SELECT ei.type_a, ei.type_b, ei.est_union, ei.est_inter,
-      |  (sa.n + sb.n - coalesce(xi.exact_inter, 0))::BIGINT AS exact_union,
-      |  coalesce(xi.exact_inter, 0)::BIGINT AS exact_inter
-      |FROM ei
-      |JOIN sizes sa ON sa.g = ei.type_a
-      |JOIN sizes sb ON sb.g = ei.type_b
-      |LEFT JOIN xinter xi ON xi.type_a = ei.type_a AND xi.type_b = ei.type_b""".stripMargin
-
-  private def fingerprintSql: String =
-    """WITH h AS (SELECT strftime(ts, '%Y-%m-%d') AS day,
-      |    ('0x' || substr(md5(event_id::VARCHAR || '|' ||
-      |      user_id::VARCHAR || '|' || event_type || '|' ||
-      |      epoch_us(ts)::VARCHAR || '|' ||
-      |      CAST(round(value * 100, 0) AS BIGINT)::VARCHAR),
-      |      1, 15))::BIGINT AS hv
-      |  FROM events)
-      |SELECT day, count(*)::BIGINT AS n, bit_xor(hv) AS xor_fp,
-      |  CAST(sum(hv % 4294967296) AS BIGINT) AS sum_lo
-      |FROM h GROUP BY day""".stripMargin
-
-  /** q174's (and q182's) oracle: the classic window top-k with the
-    * same DESC/DESC total order the heap keeps. */
-  private def groupTopKSql: String =
-    """SELECT event_type, rank, value, event_id FROM (
-      |  SELECT event_type, row_number() OVER (PARTITION BY event_type
-      |      ORDER BY value DESC, event_id DESC)::BIGINT AS rank,
-      |    value, event_id
-      |  FROM events) WHERE rank <= 3""".stripMargin
-
-  /** q177's (and q181's) oracle: latest-change-wins under the
-    * (ts, id) total order over the WHOLE change set — equal to the
-    * streamed sequential apply because the arrival batches are
-    * event-time ordered. */
-  private def mergeIntoSql: String = mergeIntoSqlWhere("TRUE")
-
-  /** The one-shot CDC merge with the change feed restricted to
-    * `pred` (on orders columns) — "TRUE" = the full q177 merge;
-    * prefixes oracle [[q189]]'s time-travel reads. */
-  private def mergeIntoSqlWhere(pred: String): String =
-    s"""WITH ch AS (SELECT
-      |    CASE WHEN o_custkey % 13 = 0 THEN o_custkey + 1000000
-      |         ELSE o_custkey END AS c_custkey,
-      |    CASE WHEN o_custkey % 11 = 0 THEN 'D' ELSE 'U' END AS op,
-      |    o_orderpriority AS c_mktsegment, o_totalprice AS c_acctbal,
-      |    o_orderdate AS ts, o_orderkey AS id
-      |  FROM orders WHERE $pred),
-      |latest AS (SELECT c_custkey, op, c_mktsegment, c_acctbal FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY c_custkey
-      |    ORDER BY ts DESC, id DESC) AS rn FROM ch) WHERE rn = 1),
-      |m AS (SELECT coalesce(b.c_custkey, l.c_custkey) AS c_custkey,
-      |    CASE WHEN l.c_custkey IS NOT NULL THEN l.c_mktsegment
-      |         ELSE b.c_mktsegment END AS c_mktsegment,
-      |    CASE WHEN l.c_custkey IS NOT NULL THEN l.c_acctbal
-      |         ELSE b.c_acctbal END AS c_acctbal,
-      |    l.op AS op
-      |  FROM customer b FULL JOIN latest l ON b.c_custkey = l.c_custkey)
-      |SELECT c_custkey, c_mktsegment, c_acctbal FROM m
-      |WHERE op IS NULL OR op <> 'D'""".stripMargin
-
-  /** q233's oracle: snap 0 = the one-shot merge over the even-id
-    * change prefix in the PRE-evolution shape (c_status never
-    * observed — NULL), snap 1 = the one-shot merge over ALL changes
-    * in the union schema where only odd-id changes carry c_status
-    * (they arrived after the evolution; a key whose winning change is
-    * even-id keeps c_status NULL even in the final snapshot). */
-  private def schemaEvolutionSql: String =
-    """WITH ch AS (SELECT
-      |    CASE WHEN o_custkey % 13 = 0 THEN o_custkey + 1000000
-      |         ELSE o_custkey END AS c_custkey,
-      |    CASE WHEN o_custkey % 11 = 0 THEN 'D' ELSE 'U' END AS op,
-      |    o_orderpriority AS c_mktsegment, o_totalprice AS c_acctbal,
-      |    CASE WHEN o_orderkey % 2 = 1 THEN o_orderstatus END AS c_status,
-      |    o_orderdate AS ts, o_orderkey AS id
-      |  FROM orders),
-      |l0 AS (SELECT c_custkey, op, c_mktsegment, c_acctbal FROM (
-      |  SELECT *, row_number() OVER (PARTITION BY c_custkey
-      |    ORDER BY ts DESC, id DESC) AS rn FROM ch WHERE id % 2 = 0)
-      |  WHERE rn = 1),
-      |m0 AS (SELECT coalesce(b.c_custkey, l.c_custkey) AS c_custkey,
-      |    CASE WHEN l.c_custkey IS NOT NULL THEN l.c_mktsegment
-      |         ELSE b.c_mktsegment END AS c_mktsegment,
-      |    CASE WHEN l.c_custkey IS NOT NULL THEN l.c_acctbal
-      |         ELSE b.c_acctbal END AS c_acctbal,
-      |    l.op AS op
-      |  FROM customer b FULL JOIN l0 l ON b.c_custkey = l.c_custkey),
-      |l1 AS (SELECT c_custkey, op, c_mktsegment, c_acctbal, c_status
-      |  FROM (SELECT *, row_number() OVER (PARTITION BY c_custkey
-      |    ORDER BY ts DESC, id DESC) AS rn FROM ch) WHERE rn = 1),
-      |m1 AS (SELECT coalesce(b.c_custkey, l.c_custkey) AS c_custkey,
-      |    CASE WHEN l.c_custkey IS NOT NULL THEN l.c_mktsegment
-      |         ELSE b.c_mktsegment END AS c_mktsegment,
-      |    CASE WHEN l.c_custkey IS NOT NULL THEN l.c_acctbal
-      |         ELSE b.c_acctbal END AS c_acctbal,
-      |    CASE WHEN l.c_custkey IS NOT NULL THEN l.c_status END AS c_status,
-      |    l.op AS op
-      |  FROM customer b FULL JOIN l1 l ON b.c_custkey = l.c_custkey)
-      |SELECT 0::BIGINT AS snap, c_custkey, c_mktsegment, c_acctbal,
-      |  NULL AS c_status
-      |FROM m0 WHERE op IS NULL OR op <> 'D'
-      |UNION ALL
-      |SELECT 1::BIGINT AS snap, c_custkey, c_mktsegment, c_acctbal, c_status
-      |FROM m1 WHERE op IS NULL OR op <> 'D'""".stripMargin
-
-  /** q234's oracle: the post-DELETE table filters, plain — the
-    * re-tightened indexes buy IO skipping, never answers (q192's
-    * contract). `w`/`cut` re-derive the gate's unit math from the
-    * data (max orderkey // 8 + 1), so the SQL holds at every sf. */
-  private def optimizeRetightenSql: String =
-    """WITH mw AS (SELECT max(o_orderkey) // 8 + 1 AS w FROM orders),
-      |alive AS (SELECT o_orderkey, o_custkey, o_totalprice
-      |  FROM orders, mw
-      |  WHERE NOT ((o_orderkey // w) IN (2, 3)
-      |    AND (o_orderkey % w) < (2 * w // 5)))
-      |SELECT o_orderkey, o_custkey, o_totalprice, 'range' AS src
-      |FROM alive, mw
-      |WHERE o_orderkey >= 2 * w + (2 * w // 5)
-      |  AND o_orderkey <= 2 * w + (2 * w // 5) + w // 5
-      |UNION ALL
-      |SELECT o_orderkey, o_custkey, o_totalprice, 'point' AS src
-      |FROM alive WHERE o_orderkey % 97 = 0""".stripMargin
-
-  /** q187's (and q188's) oracle: the one-shot GROUP BY over the
-    * facts that survive the insert/insert/retract commit sequence
-    * (parts {0, 2}) — the incrementally-folded LONG state equals it
-    * exactly for any batching, so one SQL oracles both gates. */
-  private def aggViewSql: String =
-    """SELECT l_suppkey, strftime(l_shipdate, '%Y-%m') AS ship_month,
-      |  count(*)::BIGINT AS cnt,
-      |  sum(round(l_quantity)::BIGINT)::BIGINT AS sum_qty,
-      |  sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT
-      |    AS rev_cents
-      |FROM lineitem WHERE l_orderkey % 3 <> 1
-      |GROUP BY 1, 2""".stripMargin
-
-  /** q189's oracle: each retained version IS the one-shot merge over
-    * its change prefix — v0 the untouched base, v1 the even-id half,
-    * v2 everything (q177's merge). */
-  private def timeTravelSql: String =
-    s"""SELECT 0::BIGINT AS ver, c_custkey, c_mktsegment, c_acctbal
-       |FROM customer
-       |UNION ALL
-       |SELECT 1::BIGINT AS ver, m1.*
-       |FROM (${mergeIntoSqlWhere("o_orderkey % 2 = 0")}) m1
-       |UNION ALL
-       |SELECT 2::BIGINT AS ver, m2.*
-       |FROM (${mergeIntoSqlWhere("TRUE")}) m2""".stripMargin
-
-  /** q190's oracle: BFS distance = min level at which recursive
-    * expansion (capped at 4 hops — the recursion guard mirrors the
-    * operator's round cap) reaches the node; UNION dedups (node,
-    * level) pairs so the recursion terminates. */
-  private def bfsSql: String =
-    """WITH RECURSIVE ch AS (SELECT l_suppkey AS src,
-      |    o_custkey + 1000000 AS dst
-      |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-      |e AS (SELECT DISTINCT src, dst FROM (
-      |  SELECT src, dst FROM ch UNION ALL SELECT dst, src FROM ch)),
-      |seeds AS (SELECT s_suppkey AS node FROM supplier
-      |  WHERE s_suppkey % 10 = 0),
-      |bfs(node, d) AS (
-      |  SELECT node, 0 FROM seeds
-      |  UNION
-      |  SELECT e.dst, b.d + 1 FROM bfs b JOIN e ON e.src = b.node
-      |  WHERE b.d < 4)
-      |SELECT node, min(d)::BIGINT AS dist FROM bfs GROUP BY node""".stripMargin
-
-  /** q191's oracle: the DEFINITION — the value at rank ⌈q·n⌉ of the
-    * totally-ordered column. row_number over ties is arbitrary but
-    * the VALUE at a fixed rank is unique (documented exception to
-    * hard rule 4: only the value is projected). */
-  private def quantilesSql: String =
-    """WITH v AS (SELECT l_extendedprice AS v FROM lineitem
-      |  WHERE l_extendedprice IS NOT NULL),
-      |n AS (SELECT count(*)::BIGINT AS n FROM v),
-      |q AS (SELECT * FROM (VALUES ('p25', 1, 4), ('p50', 1, 2),
-      |  ('p75', 3, 4), ('p90', 9, 10), ('p99', 99, 100))
-      |  AS t(q_label, num, den)),
-      |k AS (SELECT q_label, ((n.n * num + den - 1) // den)::BIGINT AS rank
-      |  FROM q, n),
-      |r AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM v)
-      |SELECT k.q_label, k.rank, r.v AS value
-      |FROM k JOIN r ON r.rn = k.rank""".stripMargin
-
-  /** q192's oracle: the plain filter — the Bloom index only decides
-    * which FILES are read; the residual semi join makes the answer
-    * independent of false positives. */
-  private def bloomIndexSql: String =
-    """WITH p AS (SELECT o_orderkey FROM orders WHERE o_orderkey % 7 = 3
-      |  ORDER BY o_orderkey LIMIT 5)
-      |SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-      |FROM orders o JOIN p USING (o_orderkey)""".stripMargin
-
-  /** q193's oracle: q96's recursive min-reachability clustering +
-    * q22's per-doc quality, argmax per cluster by (quality DESC,
-    * doc_id) — all expressions verbatim from their green oracles. */
-  private def keepBestSql: String = {
-    val qualityExpr =
-      """least(len(t)::DOUBLE / 20.0, 1.0) * 0.4
-        |    + (1.0 - least(((length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')))::DOUBLE
-        |        / greatest(length(text), 1)::DOUBLE) * 4.0, 1.0)) * 0.2
-        |    + (len(list_distinct(t))::DOUBLE / greatest(len(t), 1)::DOUBLE) * 0.4""".stripMargin
-    s"""WITH RECURSIVE pairs AS ($simhash64PairsSql),
-       |e AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-       |  UNION SELECT doc_b, doc_a FROM pairs),
-       |reach(n, m) AS (
-       |  SELECT u, u FROM e
-       |  UNION
-       |  SELECT e.u, r.m FROM e JOIN reach r ON e.v = r.n),
-       |comp AS (SELECT n, min(m) AS cluster_id FROM reach GROUP BY n),
-       |lab AS (SELECT d.doc_id,
-       |    coalesce(c.cluster_id, d.doc_id) AS cluster_id
-       |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.n),
-       |toks AS ($toksCte),
-       |qual AS (SELECT doc_id, $qualityExpr AS quality FROM toks),
-       |j AS (SELECT l.doc_id, l.cluster_id, q.quality
-       |  FROM lab l JOIN qual q USING (doc_id)),
-       |rk AS (SELECT *, row_number() OVER (PARTITION BY cluster_id
-       |    ORDER BY quality DESC, doc_id) AS rn,
-       |    count(*) OVER (PARTITION BY cluster_id) AS csize FROM j)
-       |SELECT cluster_id, doc_id AS kept_doc, quality AS kept_quality,
-       |  csize::BIGINT AS cluster_size, (csize - 1)::BIGINT AS n_dropped
-       |FROM rk WHERE rn = 1""".stripMargin
-  }
-
-  /** q196's oracle: the 4-round Bellman–Ford trajectory replayed as
-    * a materialized CTE chain (each round references its predecessor
-    * TWICE — hard rule 11) — integer min/add, exact. */
-  private def ssspSql: String = {
-    val k = 4
-    val header =
-      """WITH ch AS MATERIALIZED (SELECT l_suppkey AS s0,
-        |    o_custkey + 1000000 AS d0, round(l_quantity)::BIGINT AS w0
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |e AS MATERIALIZED (SELECT src, dst, min(w) AS w FROM (
-        |  SELECT s0 AS src, d0 AS dst, w0 AS w FROM ch
-        |  UNION ALL SELECT d0, s0, w0 FROM ch) GROUP BY src, dst),
-        |d0 AS MATERIALIZED (SELECT s_suppkey AS node, 0::BIGINT AS dist
-        |  FROM supplier WHERE s_suppkey % 10 = 0)""".stripMargin
-    val blocks = (1 to k).map { i =>
-      s"""d$i AS MATERIALIZED (SELECT node, min(dist)::BIGINT AS dist
-         |  FROM (
-         |    SELECT node, dist FROM d${i - 1}
-         |    UNION ALL
-         |    SELECT e.dst AS node, d.dist + e.w AS dist
-         |    FROM d${i - 1} d JOIN e ON e.src = d.node)
-         |  GROUP BY node)""".stripMargin
-    }
-    (header +: blocks).mkString(",\n") +
-      s"\nSELECT node, dist FROM d$k"
-  }
-
-  /** q197's oracle: full-outer verdict join of the two one-shot
-    * merge prefixes — balance compared as exact integer cents (no
-    * double-to-string formatting crosses engines). */
-  private def changelogSql: String =
-    s"""WITH v1 AS MATERIALIZED (${mergeIntoSqlWhere("o_orderkey % 2 = 0")}),
-       |v2 AS MATERIALIZED (${mergeIntoSqlWhere("TRUE")}),
-       |a AS (SELECT c_custkey AS id, c_mktsegment || '|' ||
-       |    (round(c_acctbal * 100)::BIGINT)::VARCHAR AS c1 FROM v1),
-       |b AS (SELECT c_custkey AS id, c_mktsegment || '|' ||
-       |    (round(c_acctbal * 100)::BIGINT)::VARCHAR AS c2 FROM v2)
-       |SELECT coalesce(a.id, b.id) AS c_custkey,
-       |  CASE WHEN a.id IS NULL THEN 'added'
-       |       WHEN b.id IS NULL THEN 'removed'
-       |       WHEN c1 <> c2 THEN 'changed'
-       |       ELSE 'unchanged' END AS status
-       |FROM a FULL JOIN b ON a.id = b.id""".stripMargin
-
-  /** q194's oracle: the same checksum aggregate over the ORIGINAL
-    * parquet — equality proves the JSONL export/import byte-lossless.
-    * Byte counts (strlen ↔ octet_length), never char counts
-    * (grapheme semantics differ across engines). */
-  private def jsonlSql: String =
-    """SELECT lang, count(*)::BIGINT AS n_docs,
-      |  sum(doc_id)::BIGINT AS sum_ids,
-      |  sum(strlen(text))::BIGINT AS sum_bytes,
-      |  sum(('0x' || substr(md5(text), 1, 13))::BIGINT)::BIGINT
-      |    AS sum_text_hash
-      |FROM documents GROUP BY lang""".stripMargin
-
-  /** q70's (and q143's) oracle: session_window re-derived via
-    * lag/cumsum — new session iff the gap STRICTLY exceeds 30 min
-    * (session_window merges at exactly the gap, boundary pinned by
-    * SessionizeSpec); sess_end = last event ts + gap. */
-  private def sessionSql: String =
-    """WITH g AS (SELECT user_id, event_id, ts,
-      |    epoch_us(ts) - lag(epoch_us(ts)) OVER (
-      |      PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-      |  FROM events),
-      |f AS (SELECT user_id, event_id, ts,
-      |    CASE WHEN gap_us IS NULL OR gap_us > 1800000000 THEN 1 ELSE 0 END AS new_sess
-      |  FROM g),
-      |s AS (SELECT user_id, ts, SUM(new_sess) OVER (
-      |    PARTITION BY user_id ORDER BY ts, event_id
-      |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_idx
-      |  FROM f)
-      |SELECT user_id, min(ts) AS sess_start,
-      |  max(ts) + INTERVAL 30 MINUTE AS sess_end, count(*)::BIGINT AS n_events
-      |FROM s GROUP BY user_id, sess_idx""".stripMargin
-
-  /** q132's (and q135's) oracle: the identical 4x256 Count-Min
-    * counter matrix rebuilt in SQL from the same md5-slice hash
-    * family, probed at the exact top-20 tokens. */
-  private def countMinSql: String =
-    s"""WITH toks AS ($toksCte),
-       |occ AS (SELECT unnest(t) AS tok FROM toks),
-       |rws AS (SELECT j FROM generate_series(0, 3) t(j)),
-       |cells AS (SELECT j,
-       |    ('0x' || substr(md5(tok), 8 * j + 1, 8))::BIGINT % 256 AS c,
-       |    count(*)::BIGINT AS n
-       |  FROM occ CROSS JOIN rws GROUP BY 1, 2),
-       |probes AS (SELECT tok, count(*)::BIGINT AS exact_count FROM occ
-       |  GROUP BY tok ORDER BY exact_count DESC, tok LIMIT 20),
-       |lu AS (SELECT p.tok, p.exact_count, r.j,
-       |    ('0x' || substr(md5(p.tok), 8 * r.j + 1, 8))::BIGINT % 256 AS c
-       |  FROM probes p CROSS JOIN rws r)
-       |SELECT lu.tok AS token, lu.exact_count, min(cells.n) AS est_count
-       |FROM lu JOIN cells ON cells.j = lu.j AND cells.c = lu.c
-       |GROUP BY 1, 2""".stripMargin
-
-  /** q133's (and q134's, minus the non-streamable exact column)
-    * DuckDB twin: rebuild all 512 HLL registers from the same
-    * md5-52-bit hash (bucket = top 9 bits, rho = 43 - floor(log2
-    * tail); exact — see HllSketchAggregate scaladoc), left-fold the
-    * exact 2^-M terms in register order, apply the same alpha literal
-    * and linear-counting branch, round at 4 dp. */
-  /** q156's oracle: all 10 PageRank iterations replayed as generated
-    * materialized CTE blocks (the bpeSql pattern). Every float
-    * literal carries ::DOUBLE (rule 11), every iteration rounds to
-    * 12 dp exactly like the Spark loop — the order-sensitive mass
-    * sums sit a million-fold inside the rounding boundary. */
-  private def pageRankSql: String = {
-    val header =
-      """WITH e AS MATERIALIZED (
-        |  SELECT DISTINCT l_suppkey AS src, o_custkey + 1000000 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |nodes AS MATERIALIZED (SELECT DISTINCT node FROM (
-        |  SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-        |st AS MATERIALIZED (SELECT count(*)::DOUBLE AS n FROM nodes),
-        |od AS MATERIALIZED (SELECT src, count(*)::DOUBLE AS deg
-        |  FROM e GROUP BY src),
-        |pr0 AS MATERIALIZED (SELECT node, round(1.0::DOUBLE / st.n, 12) AS r
-        |  FROM nodes CROSS JOIN st)""".stripMargin
-    val blocks = (1 to 10).map { i =>
-      s"""pr$i AS MATERIALIZED (
-         |  SELECT nd.node, round(0.15::DOUBLE / st.n +
-         |      0.85::DOUBLE * coalesce(c.mass, 0.0::DOUBLE), 12) AS r
-         |  FROM nodes nd CROSS JOIN st LEFT JOIN (
-         |    SELECT e.dst AS node, sum(p.r / od.deg) AS mass
-         |    FROM e JOIN pr${i - 1} p ON e.src = p.node
-         |    JOIN od ON od.src = e.src GROUP BY e.dst) c
-         |    ON c.node = nd.node)""".stripMargin
-    }
-    (header +: blocks).mkString(",\n") + "\nSELECT node, r FROM pr10"
-  }
-
-  /** q157's oracle: the seeded (personalized) replay — teleport mass
-    * concentrates on `src % 10 = 0` suppliers, denominator = seed
-    * count, non-seed base term 0. Same materialized k-block shape. */
-  private def pprSql: String = {
-    val header =
-      """WITH e AS MATERIALIZED (
-        |  SELECT DISTINCT l_suppkey AS src, o_custkey + 1000000 AS dst
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |nodes AS MATERIALIZED (SELECT node,
-        |    max(CASE WHEN node % 10 = 0 AND is_src THEN 1 ELSE 0 END) = 1
-        |      AS is_seed
-        |  FROM (SELECT src AS node, true AS is_src FROM e
-        |        UNION ALL SELECT dst, false FROM e) GROUP BY node),
-        |st AS MATERIALIZED (
-        |  SELECT sum(CASE WHEN is_seed THEN 1 ELSE 0 END)::DOUBLE AS n
-        |  FROM nodes),
-        |od AS MATERIALIZED (SELECT src, count(*)::DOUBLE AS deg
-        |  FROM e GROUP BY src),
-        |pr0 AS MATERIALIZED (SELECT node, is_seed,
-        |    round(CASE WHEN is_seed THEN 1.0::DOUBLE / st.n
-        |               ELSE 0.0::DOUBLE END, 12) AS r
-        |  FROM nodes CROSS JOIN st)""".stripMargin
-    val blocks = (1 to 10).map { i =>
-      s"""pr$i AS MATERIALIZED (
-         |  SELECT nd.node, nd.is_seed,
-         |    round(CASE WHEN nd.is_seed THEN 0.15::DOUBLE / st.n
-         |               ELSE 0.0::DOUBLE END +
-         |      0.85::DOUBLE * coalesce(c.mass, 0.0::DOUBLE), 12) AS r
-         |  FROM nodes nd CROSS JOIN st LEFT JOIN (
-         |    SELECT e.dst AS node, sum(p.r / od.deg) AS mass
-         |    FROM e JOIN pr${i - 1} p ON e.src = p.node
-         |    JOIN od ON od.src = e.src GROUP BY e.dst) c
-         |    ON c.node = nd.node)""".stripMargin
-    }
-    (header +: blocks).mkString(",\n") + "\nSELECT node, r FROM pr10"
-  }
-
-  /** q162's oracle: the weighted replay — mass = `r * w / wsum` over
-    * the nation trade graph, weights = l_quantity sums (exact
-    * integer-valued doubles). Same materialized k-block shape. */
-  private def weightedPrSql: String = {
-    val header =
-      """WITH e AS MATERIALIZED (
-        |  SELECT c_nationkey AS src, s_nationkey AS dst,
-        |    sum(l_quantity) AS w
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  GROUP BY 1, 2),
-        |nodes AS MATERIALIZED (SELECT DISTINCT node FROM (
-        |  SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-        |st AS MATERIALIZED (SELECT count(*)::DOUBLE AS n FROM nodes),
-        |ow AS MATERIALIZED (SELECT src, sum(w) AS wsum
-        |  FROM e GROUP BY src),
-        |pr0 AS MATERIALIZED (SELECT node, round(1.0::DOUBLE / st.n, 12) AS r
-        |  FROM nodes CROSS JOIN st)""".stripMargin
-    val blocks = (1 to 10).map { i =>
-      s"""pr$i AS MATERIALIZED (
-         |  SELECT nd.node, round(0.15::DOUBLE / st.n +
-         |      0.85::DOUBLE * coalesce(c.mass, 0.0::DOUBLE), 12) AS r
-         |  FROM nodes nd CROSS JOIN st LEFT JOIN (
-         |    SELECT e.dst AS node, sum(p.r * e.w / ow.wsum) AS mass
-         |    FROM e JOIN pr${i - 1} p ON e.src = p.node
-         |    JOIN ow ON ow.src = e.src GROUP BY e.dst) c
-         |    ON c.node = nd.node)""".stripMargin
-    }
-    (header +: blocks).mkString(",\n") + "\nSELECT node, r FROM pr10"
-  }
-
-  /** q163's oracle: all `maxIters` WEIGHTED blocks materialized (the
-    * q162 mass), one MAX-norm residual row per step (max of per-node
-    * |diff| of 12-dp-rounded ranks — order-invariant, no extra
-    * rounding), then `min(i) FILTER (d < eps)` picks the same
-    * iteration the Spark loop stopped at (cap if none clears). */
-  private def convergedPrSql: String = {
-    val k = 15
-    val header =
-      """WITH e AS MATERIALIZED (
-        |  SELECT c_nationkey AS src, s_nationkey AS dst,
-        |    sum(l_quantity) AS w
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  GROUP BY 1, 2),
-        |nodes AS MATERIALIZED (SELECT DISTINCT node FROM (
-        |  SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-        |st AS MATERIALIZED (SELECT count(*)::DOUBLE AS n FROM nodes),
-        |ow AS MATERIALIZED (SELECT src, sum(w) AS wsum
-        |  FROM e GROUP BY src),
-        |pr0 AS MATERIALIZED (SELECT node, round(1.0::DOUBLE / st.n, 12) AS r
-        |  FROM nodes CROSS JOIN st)""".stripMargin
-    val blocks = (1 to k).map { i =>
-      s"""pr$i AS MATERIALIZED (
-         |  SELECT nd.node, round(0.15::DOUBLE / st.n +
-         |      0.85::DOUBLE * coalesce(c.mass, 0.0::DOUBLE), 12) AS r
-         |  FROM nodes nd CROSS JOIN st LEFT JOIN (
-         |    SELECT e.dst AS node, sum(p.r * e.w / ow.wsum) AS mass
-         |    FROM e JOIN pr${i - 1} p ON e.src = p.node
-         |    JOIN ow ON ow.src = e.src GROUP BY e.dst) c
-         |    ON c.node = nd.node)""".stripMargin
-    }
-    val resid =
-      "dd AS MATERIALIZED (\n" + (1 to k).map { i =>
-        s"""  SELECT $i AS i, max(abs(a.r - b.r)) AS d
-           |  FROM pr$i a JOIN pr${i - 1} b ON a.node = b.node""".stripMargin
-      }.mkString("\n  UNION ALL\n") + ")"
-    val chosen =
-      s"""ch AS MATERIALIZED (SELECT coalesce(
-         |  min(i) FILTER (WHERE d < (1e-9)::DOUBLE), $k) AS k FROM dd)""".stripMargin
-    val allp =
-      "ap AS (\n" + (1 to k).map(i =>
-        s"  SELECT $i AS i, node, r FROM pr$i").mkString("\n  UNION ALL\n") + ")"
-    (header +: blocks :+ resid :+ chosen :+ allp).mkString(",\n") +
-      "\nSELECT ap.node, ap.r, ch.k::BIGINT AS iters_run" +
-      "\nFROM ap JOIN ch ON ap.i = ch.k"
-  }
-
-  private def hllSql: String = hllSql(includeExact = true)
-
-  /** q146's twin: q133's register rebuild over the (event_type, day)
-    * composite group — sparse mode is lossless, so the same SQL
-    * answers. */
-  private def hllSparseSql: String = {
-    val alpha = java.lang.Double.toString(graft.expressions.HllSketch.alpha(512))
-    s"""WITH vals AS (SELECT event_type, strftime(ts, '%Y-%m-%d') AS day,
-       |    CAST(user_id AS VARCHAR) AS s, user_id FROM events),
-       |h AS (SELECT event_type, day, user_id,
-       |    ('0x' || substr(md5(s), 1, 13))::BIGINT AS h FROM vals),
-       |rr AS (SELECT event_type, day, h >> 43 AS b,
-       |    CASE WHEN (h & ((1::BIGINT << 43) - 1)) = 0 THEN 44
-       |         ELSE 43 - CAST(floor(log2(h & ((1::BIGINT << 43) - 1))) AS BIGINT)
-       |    END AS r
-       |  FROM h),
-       |mx AS (SELECT event_type, day, b, max(r) AS mr FROM rr GROUP BY 1, 2, 3),
-       |grid AS (SELECT gg.event_type, gg.day, t.j
-       |  FROM (SELECT DISTINCT event_type, day FROM vals) gg
-       |  CROSS JOIN generate_series(0, 511) t(j)),
-       |regs AS (SELECT grid.event_type, grid.day, grid.j, coalesce(mx.mr, 0) AS mr
-       |  FROM grid LEFT JOIN mx ON mx.event_type = grid.event_type
-       |    AND mx.day = grid.day AND mx.b = grid.j),
-       |sm AS (SELECT event_type, day,
-       |    list_reduce(list_prepend(0.0, list(1.0 / (1::BIGINT << mr) ORDER BY j)),
-       |      (a, x) -> a + x) AS s,
-       |    sum(CASE WHEN mr = 0 THEN 1 ELSE 0 END) AS v
-       |  FROM regs GROUP BY 1, 2),
-       |ex AS (SELECT event_type, day, count(DISTINCT user_id)::BIGINT AS exact_distinct
-       |  FROM vals GROUP BY 1, 2),
-       |est AS (SELECT event_type, day,
-       |    $alpha::DOUBLE * 512.0 * 512.0 / s AS raw, v FROM sm)
-       |SELECT est.event_type, est.day,
-       |  round(CASE WHEN raw <= 1280.0 AND v > 0
-       |             THEN 512.0 * ln(512.0 / v) ELSE raw END, 4) AS approx_distinct,
-       |  ex.exact_distinct
-       |FROM est JOIN ex USING (event_type, day)""".stripMargin
-  }
-
-  /** q158's twin: one self-contained q133-style register rebuild per
-    * profiled column (hash input = the scaled-integer view, rendered
-    * as an integer string — identical on both engines), unioned
-    * long-format with the exact count/null/min/max block. */
-  private def hllProfileSql(cols: Seq[String]): String = {
-    val alpha = java.lang.Double.toString(graft.expressions.HllSketch.alpha(512))
-    cols.map { c =>
-      s"""SELECT '$c' AS col_name, base.n, base.nulls,
-         |  round(CASE WHEN raw <= 1280.0 AND v > 0
-         |             THEN 512.0 * ln(512.0 / v) ELSE raw END, 4) AS approx_distinct,
-         |  base.min_v, base.max_v
-         |FROM (SELECT count(*) AS n,
-         |    CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls,
-         |    CAST(min($c) AS DOUBLE) AS min_v, CAST(max($c) AS DOUBLE) AS max_v
-         |  FROM lineitem) base
-         |CROSS JOIN (
-         |  SELECT $alpha::DOUBLE * 512.0 * 512.0 / s AS raw, v FROM (
-         |    SELECT list_reduce(list_prepend(0.0,
-         |        list(1.0 / (1::BIGINT << mr) ORDER BY j)), (a, x) -> a + x) AS s,
-         |      sum(CASE WHEN mr = 0 THEN 1 ELSE 0 END) AS v
-         |    FROM (
-         |      SELECT t.j, coalesce(mx.mr, 0) AS mr
-         |      FROM generate_series(0, 511) t(j)
-         |      LEFT JOIN (
-         |        SELECT h >> 43 AS b,
-         |          max(CASE WHEN (h & ((1::BIGINT << 43) - 1)) = 0 THEN 44
-         |              ELSE 43 - CAST(floor(log2(h & ((1::BIGINT << 43) - 1))) AS BIGINT)
-         |          END) AS mr
-         |        FROM (SELECT ('0x' || substr(md5(
-         |            CAST(CAST(round($c * 100, 0) AS BIGINT) AS VARCHAR)), 1, 13))::BIGINT AS h
-         |          FROM lineitem WHERE $c IS NOT NULL) hh
-         |        GROUP BY 1) mx ON mx.b = t.j) regs) sums) est""".stripMargin
-    }.mkString("\nUNION ALL\n")
-  }
-
-  private def hllSql(includeExact: Boolean): String = {
-    val alpha = java.lang.Double.toString(graft.expressions.HllSketch.alpha(512))
-    val exactCol = if (includeExact) ",\n  ex.exact_distinct" else ""
-    val exactJoin = if (includeExact) "\nFROM est JOIN ex USING (g)" else "\nFROM est"
-    s"""WITH vals AS (SELECT event_type AS g, CAST(user_id AS VARCHAR) AS s,
-       |    user_id FROM events),
-       |h AS (SELECT g, user_id, ('0x' || substr(md5(s), 1, 13))::BIGINT AS h
-       |  FROM vals),
-       |rr AS (SELECT g, h >> 43 AS b,
-       |    CASE WHEN (h & ((1::BIGINT << 43) - 1)) = 0 THEN 44
-       |         ELSE 43 - CAST(floor(log2(h & ((1::BIGINT << 43) - 1))) AS BIGINT)
-       |    END AS r
-       |  FROM h),
-       |mx AS (SELECT g, b, max(r) AS mr FROM rr GROUP BY g, b),
-       |grid AS (SELECT gg.g, t.j FROM (SELECT DISTINCT g FROM vals) gg
-       |  CROSS JOIN generate_series(0, 511) t(j)),
-       |regs AS (SELECT grid.g, grid.j, coalesce(mx.mr, 0) AS mr
-       |  FROM grid LEFT JOIN mx ON mx.g = grid.g AND mx.b = grid.j),
-       |sm AS (SELECT g,
-       |    list_reduce(list_prepend(0.0, list(1.0 / (1::BIGINT << mr) ORDER BY j)),
-       |      (a, x) -> a + x) AS s,
-       |    sum(CASE WHEN mr = 0 THEN 1 ELSE 0 END) AS v
-       |  FROM regs GROUP BY g),
-       |ex AS (SELECT g, count(DISTINCT user_id)::BIGINT AS exact_distinct
-       |  FROM vals GROUP BY g),
-       |est AS (SELECT g, $alpha::DOUBLE * 512.0 * 512.0 / s AS raw, v FROM sm)
-       |SELECT est.g AS event_type,
-       |  round(CASE WHEN raw <= 1280.0 AND v > 0
-       |             THEN 512.0 * ln(512.0 / v) ELSE raw END, 4) AS approx_distinct$exactCol$exactJoin""".stripMargin
-  }
-
-  /** q130's DuckDB twin: the DDSketch estimate for rank r equals the
-    * bucket representative of the r-th order statistic, so the SQL
-    * needs ONE bucketing (comparison count against the shared
-    * Scala-generated boundary literals) per (group, quantile), not a
-    * histogram replay. Rank rule and representative math are the
-    * identical double expressions as `DdSketchAggregate.eval`. */
-  private def ddSketchSql(quantiles: Seq[Double]): String = {
-    val bounds = graft.expressions.DdSketch.boundaries(0.01, 1.0, 2e5)
-    val bl = graft.expressions.DdSketch.sqlList(bounds)
-    val nb = bounds.length
-    val ql = quantiles.mkString("[", ", ", "]")
-    s"""WITH vals AS (SELECT l_returnflag AS g, l_extendedprice AS x FROM lineitem),
-       |n AS (SELECT g, count(*) AS n FROM vals GROUP BY g),
-       |qs AS (SELECT unnest($ql::DOUBLE[]) AS q),
-       |rk AS (SELECT g, q, greatest(1, CAST(ceil(q * n) AS BIGINT)) AS r
-       |  FROM n CROSS JOIN qs),
-       |ord AS (SELECT g, x, row_number() OVER (PARTITION BY g ORDER BY x) AS rn
-       |  FROM vals),
-       |xr AS (SELECT rk.g, rk.q, ord.x
-       |  FROM rk JOIN ord ON ord.g = rk.g AND ord.rn = rk.r),
-       |bl AS (SELECT $bl::DOUBLE[] AS bs),
-       |idx AS (SELECT g, q, len(list_filter(bs, b -> b <= x)) AS i
-       |  FROM xr CROSS JOIN bl)
-       |SELECT g AS l_returnflag, q,
-       |  CASE WHEN i <= 0 THEN bs[1]
-       |       WHEN i >= $nb THEN bs[$nb]
-       |       ELSE 2.0 * bs[i] * bs[i + 1] / (bs[i] + bs[i + 1]) END AS est
-       |FROM idx CROSS JOIN bl""".stripMargin
-  }
-
-  /** q144's oracle: replay the BOUNDED sketch exactly. The collapse
-    * runs once at eval on the exact merged histogram (DdSketchAggregate
-    * eval-only collapse), so SQL can reproduce it: per-group occupied-
-    * bucket histogram by boundary comparisons, cut = maxBuckets-th
-    * largest occupied index (no collapse when fewer), mass below the
-    * cut folds into it, then the rank-r answer is the first collapsed
-    * bucket with cumulative count >= r — ALL quantiles, not just the
-    * provably-untouched upper ones. */
-  private def ddSketchCollapsedSql(quantiles: Seq[Double],
-      maxBuckets: Int): String = {
-    val bounds = graft.expressions.DdSketch.boundaries(0.01, 1.0, 2e5)
-    val bl = graft.expressions.DdSketch.sqlList(bounds)
-    val nb = bounds.length
-    val ql = quantiles.mkString("[", ", ", "]")
-    s"""WITH vals AS (SELECT l_returnflag AS g, l_extendedprice AS x FROM lineitem),
-       |n AS (SELECT g, count(*) AS n FROM vals GROUP BY g),
-       |qs AS (SELECT unnest($ql::DOUBLE[]) AS q),
-       |rk AS (SELECT g, q, greatest(1, CAST(ceil(q * n) AS BIGINT)) AS r
-       |  FROM n CROSS JOIN qs),
-       |bl AS (SELECT $bl::DOUBLE[] AS bs),
-       |idx AS (SELECT g, len(list_filter(bs, b -> b <= x)) AS i
-       |  FROM vals CROSS JOIN bl),
-       |hist AS (SELECT g, i, count(*) AS c FROM idx GROUP BY g, i),
-       |rnk AS (SELECT g, i, c,
-       |    row_number() OVER (PARTITION BY g ORDER BY i DESC) AS rn
-       |  FROM hist),
-       |cut AS (SELECT g,
-       |    CASE WHEN max(rn) > $maxBuckets
-       |      THEN max(CASE WHEN rn = $maxBuckets THEN i END)
-       |      ELSE min(i) END AS cuti
-       |  FROM rnk GROUP BY g),
-       |coll AS (SELECT rnk.g,
-       |    CASE WHEN rnk.i < cut.cuti THEN cut.cuti ELSE rnk.i END AS i,
-       |    sum(c) AS c
-       |  FROM rnk JOIN cut ON rnk.g = cut.g GROUP BY 1, 2),
-       |cum AS (SELECT g, i, sum(c) OVER (PARTITION BY g ORDER BY i) AS cum
-       |  FROM coll),
-       |pick AS (SELECT rk.g, rk.q, min(cum.i) AS i
-       |  FROM rk JOIN cum ON cum.g = rk.g AND cum.cum >= rk.r
-       |  GROUP BY 1, 2)
-       |SELECT g AS l_returnflag, q,
-       |  CASE WHEN i <= 0 THEN bs[1]
-       |       WHEN i >= $nb THEN bs[$nb]
-       |       ELSE 2.0 * bs[i] * bs[i + 1] / (bs[i] + bs[i + 1]) END AS est
-       |FROM pick CROSS JOIN bl""".stripMargin
-  }
-
-  /** Nearest-neighbor 16x10 resize blob hex, shared by q58 and q76:
-    * re-encoded header + string_agg of source bytes at the rebuilt
-    * per-pixel index (Multimodal.resize's exact arithmetic). */
-  private val resizeHexSql: String =
-    """'475200' || '00000010' || '0000000A' || substr(hx, 23, 8) ||
-      |  string_agg(
-      |    CASE WHEN (((k//16) * h) // 10) * w + ((k%16) * w) // 16 < len - 15
-      |         THEN substr(hx, 31 + ((((k//16) * h) // 10) * w + ((k%16) * w) // 16)*2, 2)
-      |         ELSE '00' END, '' ORDER BY k)""".stripMargin
-
-  private val toksCte =
-    "SELECT doc_id, lang, n_chars, text, list_filter(string_split(lower(text), ' '), x -> x <> '') AS t FROM documents"
-
-  /** q221's AND q242's oracle: docs containing BOTH query terms
-    * ranked by minimum token-position distance (counts/dist exact
-    * ints; proximity one IEEE division). q242 answers it from the
-    * stored positional postings. */
-  private def proximitySql: String =
-    s"""WITH toks AS ($toksCte),
-       |p AS (SELECT doc_id, t[i] AS w, i AS pos
-       |  FROM toks, unnest(generate_series(1, len(t))) AS g(i)),
-       |a AS (SELECT doc_id, pos AS pa FROM p WHERE w = 'order'),
-       |b AS (SELECT doc_id, pos AS pb FROM p WHERE w = 'table'),
-       |m AS (SELECT doc_id, min(abs(pa - pb))::BIGINT AS min_dist,
-       |    count(DISTINCT pa)::BIGINT AS n_a,
-       |    count(DISTINCT pb)::BIGINT AS n_b
-       |  FROM a JOIN b USING (doc_id) GROUP BY 1)
-       |SELECT doc_id, min_dist, n_a, n_b,
-       |  1.0::DOUBLE / (1.0::DOUBLE + min_dist::DOUBLE) AS proximity,
-       |  rank
-       |FROM (SELECT *, row_number() OVER (ORDER BY min_dist, doc_id)
-       |    AS rank FROM m)
-       |WHERE rank <= 20""".stripMargin
-
-  /** q100's AND q240's oracle: the full inverted-index BM25
-    * derivation — postings + df + corpus stats from ONE tokenize,
-    * Lucene-variant idf, identical round(·,6) on the per-(query,cand)
-    * sum (rule 9), (score desc, cand_id) rank with rank <= 5; %101
-    * docs as queries, self excluded. q240 answers it from the
-    * incrementally-maintained stored index, which must be
-    * bit-identical to this from-scratch form. */
-  private def bm25RetrievalSql: String =
-    bm25RetrievalSqlFor("TRUE", "doc_id % 101 = 0")
-
-  /** [[bm25RetrievalSql]] with corpus/query filters — q247 grades the
-    * post-delete index against the REDUCED corpus (df/N/avgdl all
-    * shrink, bit-identical to an index never containing the docs). */
-  private def bm25RetrievalSqlFor(corpusCond: String,
-      queryCond: String): String =
-    s"""WITH toks AS (SELECT * FROM ($toksCte) WHERE $corpusCond),
-       |stats AS (SELECT count(*)::DOUBLE AS n,
-       |    coalesce(sum(len(t)), 0)::DOUBLE AS sumdl FROM toks),
-       |terms AS (SELECT doc_id AS cand_id, len(t)::DOUBLE AS dl,
-       |    unnest(t) AS term FROM toks),
-       |tfc AS (SELECT cand_id, term, dl, count(*) AS tf
-       |  FROM terms GROUP BY cand_id, term, dl),
-       |dfc AS (SELECT term, count(*) AS df FROM tfc GROUP BY term),
-       |q AS (SELECT doc_id AS query_id, unnest(list_distinct(t)) AS term
-       |  FROM toks WHERE $queryCond),
-       |scored AS (SELECT query_id, cand_id,
-       |    round(sum(ln(1.0 + (s.n - df + 0.5) / (df + 0.5))
-       |      * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / (s.sumdl / s.n)))), 6) AS score
-       |  FROM tfc JOIN dfc USING (term) JOIN q USING (term), stats s
-       |  WHERE query_id <> cand_id
-       |  GROUP BY query_id, cand_id)
-       |SELECT query_id, cand_id, score, rank FROM (
-       |  SELECT query_id, cand_id, score, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY score DESC, cand_id) AS rank
-       |  FROM scored) WHERE rank <= 5""".stripMargin
-
-  /** q254/q259's oracle: the plain LIKE-prefix term aggregation —
-    * exact long counts, (df desc, term) rank. */
-  private def autocompleteSql: String = autocompleteSqlFor("TRUE")
-
-  /** [[autocompleteSql]] over a filtered corpus — q260 grades the
-    * delete-aware dictionary against (ingested − deleted). */
-  private def autocompleteSqlFor(corpusCond: String): String =
-    s"""WITH toks AS (SELECT * FROM ($toksCte) WHERE $corpusCond),
-       |pairs AS (SELECT doc_id, unnest(t) AS term FROM toks),
-       |ptf AS (SELECT doc_id, term, count(*) AS tf
-       |  FROM pairs GROUP BY doc_id, term),
-       |d AS (SELECT term, CAST(count(*) AS BIGINT) AS df,
-       |    CAST(sum(tf) AS BIGINT) AS cf
-       |  FROM ptf WHERE term LIKE 's%' GROUP BY term)
-       |SELECT term, df, cf, rank FROM (
-       |  SELECT term, df, cf, row_number() OVER (
-       |    ORDER BY df DESC, term) AS rank FROM d)
-       |WHERE rank <= 10""".stripMargin
-
-  /** q253's oracle: exhaustive single-query BM25 for the fixed term
-    * set — MaxScore pruning must be answer-invisible, so the SQL
-    * knows nothing about bounds or skipping. Same idf/tf-weight/
-    * round(·,6)/(score desc, doc_id) contract as [[bm25RetrievalSql]],
-    * one query, top 10. */
-  private def maxscoreBm25Sql: String =
-    s"""WITH toks AS ($toksCte),
-       |stats AS (SELECT count(*)::DOUBLE AS n,
-       |    coalesce(sum(len(t)), 0)::DOUBLE AS sumdl FROM toks),
-       |terms AS (SELECT doc_id AS cand_id, len(t)::DOUBLE AS dl,
-       |    unnest(t) AS term FROM toks),
-       |tfc AS (SELECT cand_id, term, dl, count(*) AS tf
-       |  FROM terms GROUP BY cand_id, term, dl),
-       |dfc AS (SELECT term, count(*) AS df FROM tfc GROUP BY term),
-       |q AS (SELECT unnest(['dup', 'the', 'scan']) AS term),
-       |scored AS (SELECT cand_id AS doc_id,
-       |    round(sum(ln(1.0 + (s.n - df + 0.5) / (df + 0.5))
-       |      * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / (s.sumdl / s.n)))), 6) AS score
-       |  FROM tfc JOIN dfc USING (term) JOIN q USING (term), stats s
-       |  GROUP BY cand_id)
-       |SELECT doc_id, score, rank FROM (
-       |  SELECT doc_id, score, row_number() OVER (
-       |    ORDER BY score DESC, doc_id) AS rank
-       |  FROM scored) WHERE rank <= 10""".stripMargin
-
-  /** q159/q160's oracle: replay the WHOLE unigram-LM hard-EM training
-    * ([[graft.operators.UnigramLm]]) in DuckDB — substring seeding,
-    * `iters` Viterbi-EM rounds, frequency prune, final encode. Each
-    * Viterbi pass is `maxWordLen` chained MATERIALIZED DP blocks
-    * (cell J = best predecessor among piece lengths 1..maxPieceLen,
-    * ORDER BY score DESC, len DESC — the identical total order);
-    * every count is an exact long and the log-prob tables round ln()
-    * at 7dp (rule 9), so scores add the same doubles in the same
-    * order on both engines. maxWordLen is the shared trainer
-    * parameter, never a silent data bound. */
-  private def unigramSql(encode: Boolean): String = {
-    val maxPieceLen = 5; val seedSize = 300; val vocabSize = 200
-    val iters = 3; val maxWordLen = 24
-    val sb = new StringBuilder
-    sb ++= s"""WITH words AS MATERIALIZED (
-      |  SELECT w, count(*) AS freq FROM (
-      |    SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
-      |    FROM documents)
-      |  WHERE len(w) BETWEEN 1 AND $maxWordLen GROUP BY w),
-      |subs AS (
-      |  SELECT substr(w, pos, l) AS p, sum(freq) AS cnt
-      |  FROM words
-      |  CROSS JOIN generate_series(1, $maxPieceLen) ls(l)
-      |  CROSS JOIN (SELECT unnest(generate_series(1,
-      |    (SELECT max(len(w)) FROM words))) AS pos) ps
-      |  WHERE len(w) >= l AND pos <= len(w) - l + 1
-      |  GROUP BY 1),
-      |v0 AS MATERIALIZED (
-      |  SELECT p, CAST(cnt AS BIGINT) AS cnt FROM (
-      |    SELECT p, cnt, row_number() OVER (ORDER BY cnt DESC, p) AS rk
-      |    FROM subs)
-      |  WHERE rk <= $seedSize OR len(p) = 1)""".stripMargin
-    // one Viterbi DP pass under log-prob table `lp`: blocks pre_0..pre_N
-    def dpBlocks(pre: String, lp: String): String = {
-      val blocks = new StringBuilder
-      blocks ++= s""",
-        |${pre}_0 AS MATERIALIZED (
-        |  SELECT w, freq, CAST(0.0 AS DOUBLE) AS score, '' AS path
-        |  FROM words)""".stripMargin
-      for (j <- 1 to maxWordLen) {
-        val cands = (1 to math.min(maxPieceLen, j)).map { l =>
-          s"""      SELECT prev.w, prev.freq, prev.score, prev.path,
-             |        t.p, t.lp, $l AS l
-             |      FROM ${pre}_${j - l} prev JOIN $lp t
-             |        ON len(prev.w) >= $j AND t.pl = $l
-             |        AND t.p = substr(prev.w, ${j - l + 1}, $l)""".stripMargin
-        }.mkString("\n      UNION ALL\n")
-        blocks ++= s""",
-          |${pre}_$j AS MATERIALIZED (
-          |  SELECT w, freq, score, path FROM (
-          |    SELECT c.w, c.freq, c.score + c.lp AS score,
-          |      CASE WHEN c.path = '' THEN c.p
-          |           ELSE c.path || ' ' || c.p END AS path,
-          |      row_number() OVER (PARTITION BY c.w
-          |        ORDER BY c.score + c.lp DESC, c.l DESC) AS rn
-          |    FROM (
-          |$cands
-          |    ) c) WHERE rn = 1)""".stripMargin
-      }
-      blocks ++= s""",
-        |${pre}_seg AS MATERIALIZED (
-        |${(1 to maxWordLen).map(j =>
-            s"  SELECT w, freq, path FROM ${pre}_$j WHERE len(w) = $j")
-            .mkString("\n  UNION ALL\n")})""".stripMargin
-      blocks.result()
-    }
-    for (i <- 1 to iters) {
-      sb ++= s""",
-        |lp$i AS MATERIALIZED (
-        |  SELECT p, len(p) AS pl,
-        |    round(ln(CAST(cnt AS DOUBLE) / t.total), 7) AS lp
-        |  FROM v${i - 1}, (SELECT CAST(sum(cnt) AS DOUBLE) AS total
-        |    FROM v${i - 1}) t)""".stripMargin
-      sb ++= dpBlocks(s"d$i", s"lp$i")
-      sb ++= s""",
-        |us$i AS (
-        |  SELECT p, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-        |    SELECT freq, unnest(string_split(path, ' ')) AS p
-        |    FROM d${i}_seg) GROUP BY p),
-        |v$i AS MATERIALIZED (
-        |  SELECT p, cnt FROM (
-        |    SELECT v.p,
-        |      CASE WHEN len(v.p) = 1 THEN greatest(coalesce(u.cnt, 0), 1)
-        |           ELSE coalesce(u.cnt, 0) END AS cnt
-        |    FROM v${i - 1} v LEFT JOIN us$i u USING (p))
-        |  WHERE cnt > 0)""".stripMargin
-    }
-    sb ++= s""",
-      |vp AS MATERIALIZED (
-      |  SELECT p, cnt FROM (
-      |    SELECT p, cnt, row_number() OVER (ORDER BY cnt DESC, p) AS rk
-      |    FROM v$iters)
-      |  WHERE rk <= $vocabSize OR len(p) = 1),
-      |lpf AS MATERIALIZED (
-      |  SELECT p, len(p) AS pl,
-      |    round(ln(CAST(cnt AS DOUBLE) / t.total), 7) AS lp
-      |  FROM vp, (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM vp) t)""".stripMargin
-    if (!encode) {
-      sb ++= """
-        |SELECT vp.p AS piece, vp.cnt, lpf.lp AS logp
-        |FROM vp JOIN lpf ON vp.p = lpf.p""".stripMargin
-    } else {
-      sb ++= dpBlocks("df", "lpf")
-      sb ++= """
-        |SELECT w, freq, path AS pieces,
-        |  CAST(len(string_split(path, ' ')) AS BIGINT) AS n_pieces
-        |FROM df_seg""".stripMargin
-    }
-    sb.result()
-  }
-
-  /** q123's oracle: k chained merge blocks generated from the same
-    * constants as [[graft.operators.Bpe.trainMerges]] — DuckDB
-    * re-trains BPE from scratch: word histogram, per-iteration pair
-    * counts (vocabulary-sized, like the Spark side), the (cnt desc,
-    * l, r) argmax, and the identical greedy left-to-right
-    * string-accumulator fold (chr(1) = Bpe.SEP). */
-  private def bpeSql(k: Int): String = {
-    // every w_i is referenced twice (by p_{i+1} and w_{i+1}); without
-    // MATERIALIZED, DuckDB's CTE inlining doubles the tree per block —
-    // 2^k expansion, which at k=60 exhausts file handles re-opening
-    // the documents parquet. Materializing makes the plan linear in k.
-    val header =
-      """WITH words AS MATERIALIZED (SELECT w, count(*) AS freq FROM (
-        |    SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
-        |    FROM documents) t
-        |  WHERE length(w) > 0 GROUP BY w),
-        |w0 AS MATERIALIZED (SELECT freq,
-        |    array_to_string(string_split(w, ''), chr(1)) AS syms FROM words)""".stripMargin
-    val blocks = (1 to k).map { i =>
-      s"""p$i AS (SELECT pr[1] AS l, pr[2] AS r, CAST(sum(freq) AS BIGINT) AS cnt
-         |  FROM (SELECT freq, unnest(list_transform(
-         |      generate_series(1, len(ls) - 1), i -> [ls[i], ls[i + 1]])) AS pr
-         |    FROM (SELECT freq, string_split(syms, chr(1)) AS ls
-         |      FROM w${i - 1}) t) u
-         |  GROUP BY 1, 2),
-         |b$i AS MATERIALIZED (SELECT l, r, cnt FROM p$i ORDER BY cnt DESC, l, r LIMIT 1),
-         |w$i AS MATERIALIZED (SELECT freq, substr(list_reduce(
-         |    list_prepend('', string_split(w.syms, chr(1))),
-         |    (acc, x) -> CASE
-         |      WHEN right(acc, 1 + length(b.l)) = chr(1) || b.l AND x = b.r
-         |      THEN left(acc, length(acc) - 1 - length(b.l)) || chr(1) || b.l || b.r
-         |      ELSE acc || chr(1) || x END), 2) AS syms
-         |  FROM w${i - 1} w, b$i b)""".stripMargin
-    }
-    val union = (1 to k).map(i =>
-      s"""SELECT CAST($i AS BIGINT) AS it, l AS "left", r AS "right", cnt FROM b$i""")
-      .mkString("\n", "\nUNION ALL\n", "")
-    (header +: blocks).mkString(",\n") + union
-  }
-
-  /** q124's oracle: the same k merge blocks, then the token histogram
-    * of the fully-merged symbol strings (what a tokenizer consumer
-    * reads) — weighted by word frequency, exact counts. */
-  private def bpeEncodeSql(k: Int): String =
-    bpeSql(k).split("\nSELECT CAST\\(1 AS BIGINT\\)").head +
-      s"""
-         |SELECT token, CAST(sum(freq) AS BIGINT) AS cnt FROM (
-         |  SELECT freq, unnest(string_split(syms, chr(1))) AS token
-         |  FROM w$k) t
-         |GROUP BY token""".stripMargin
-
-  private def langIdSql: String = {
-    val langs = langMarkers.keys.toSeq.sorted
-    def score(l: String) = {
-      val lst = langMarkers(l).map(w => s"'$w'").mkString("[", ", ", "]")
-      s"len(list_filter(t, x -> list_contains($lst, x)))::DOUBLE / greatest(len(t), 1)::DOUBLE AS s_$l"
-    }
-    val cases = langs.init.zipWithIndex.map { case (l, i) =>
-      val rest = langs.drop(i + 1).map(o => s"s_$l >= s_$o").mkString(" AND ")
-      s"WHEN $rest THEN '$l'"
-    }.mkString(" ")
-    s"""WITH toks AS ($toksCte),
-       |scores AS (SELECT doc_id, lang, ${langs.map(score).mkString(", ")} FROM toks)
-       |SELECT doc_id, lang,
-       |  CASE $cases ELSE '${langs.last}' END AS guess,
-       |  lang = (CASE $cases ELSE '${langs.last}' END) AS correct
-       |FROM scores""".stripMargin
-  }
-
-  /** q72's trigram-profile twin: profiles generated by the SAME
-    * `TextFunctions.trigramProfile` call the Spark broadcast side
-    * uses, emitted as VALUES literals; same argmax + min(lang)
-    * tiebreak + default-language fallback. */
-  /** q80's decontamination oracle — also q93's (the streaming replay
-    * screens the same train slice; per-batch union == batch answer).
-    * Same distinct 4-shingle explode on both sides, same %97 split. */
-  private def decontaminateSql: String =
-    s"""WITH toks AS ($toksCte),
-       |sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-       |    generate_series(1, len(t) - 3),
-       |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS s
-       |  FROM toks),
-       |tr AS (SELECT doc_id AS train_id, s FROM sh WHERE doc_id % 97 <> 0),
-       |ev AS (SELECT doc_id AS eval_id, s FROM sh WHERE doc_id % 97 = 0)
-       |SELECT train_id, eval_id, count(*)::BIGINT AS n_shared
-       |FROM tr JOIN ev USING (s)
-       |GROUP BY train_id, eval_id""".stripMargin
-
-  private def langIdNgramSql: String = {
-    val values = TextFunctions.trigramProfile(langMarkers)
-      .map { case (l, g) => s"('$l', '$g')" }.mkString(", ")
-    val dflt = langMarkers.keys.min
-    s"""WITH toks AS ($toksCte),
-       |tri AS (SELECT doc_id, unnest(list_distinct(flatten(list_transform(
-       |    list_filter(t, w -> len(w) >= 3), w ->
-       |    list_transform(generate_series(1, len(w) - 2), i -> substr(w, i, 3)))))) AS g
-       |  FROM toks),
-       |prof AS (SELECT * FROM (VALUES $values) v(lang_p, g)),
-       |scores AS (SELECT doc_id, lang_p, count(*) AS cnt
-       |  FROM tri JOIN prof USING (g) GROUP BY doc_id, lang_p),
-       |best AS (SELECT doc_id, max(cnt) AS mx FROM scores GROUP BY doc_id),
-       |g2 AS (SELECT s.doc_id, min(s.lang_p) AS guess
-       |  FROM scores s JOIN best b ON s.doc_id = b.doc_id AND s.cnt = b.mx
-       |  GROUP BY s.doc_id)
-       |SELECT d.doc_id, d.lang, coalesce(g2.guess, '$dflt') AS guess,
-       |  d.lang = coalesce(g2.guess, '$dflt') AS correct
-       |FROM documents d LEFT JOIN g2 ON d.doc_id = g2.doc_id""".stripMargin
-  }
-
-  /** Random-hyperplane LSH bucket as DuckDB SQL over a DOUBLE[] column —
-    * generated from the SAME `Similarity.planeSigns` the Spark plan
-    * uses, so buckets agree bit-for-bit (each float→double product is
-    * exact; both sides accumulate in index order). */
-  private def lshBucketSqlExpr(vecExpr: String, nBits: Int, dim: Int): String =
-    operators.Similarity.planeSigns(nBits, dim).zipWithIndex.map { case (p, b) =>
-      val arr = p.map(v => if (v > 0) "1.0" else "-1.0").mkString("[", ", ", "]")
-      s"(CASE WHEN list_dot_product($vecExpr, $arr) > 0 THEN ${1L << b} ELSE 0 END)"
-    }.mkString(" + ")
-
-  private def annLshSql: String =
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |b AS (SELECT vec_id, v, ${lshBucketSqlExpr("v", 4, 64)} AS bucket FROM base),
-       |q AS (SELECT vec_id AS query_id, v AS qv, bucket FROM b WHERE vec_id < 10),
-       |c AS (SELECT vec_id AS cand_id, v AS cv, bucket FROM b),
-       |scored AS (SELECT query_id, cand_id,
-       |  list_dot_product(qv, cv)
-       |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-       |  FROM c JOIN q USING (bucket) WHERE query_id <> cand_id)
-       |SELECT query_id, cand_id, cosine, rank FROM (
-       |  SELECT query_id, cand_id, cosine, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
-       |  FROM scored) WHERE rank <= 5""".stripMargin
-
-  /** q64 oracle: multi-probe LSH replicated in SQL — same plane
-    * literals, same (|margin|, bit) sort (struct comparison is
-    * field-lexicographic in both engines, bit index breaks margin
-    * ties), same own-bucket + 2 bit-flip probe set. Projections are
-    * bit-identical across engines (q27-established FloatDotProduct ↔
-    * list_dot_product parity), so the probe sets coincide exactly. */
-  private def annMultiProbeSql: String = {
-    val nBits = 8; val dim = 64; val nProbe = 3; val k = 5
-    val planes = operators.Similarity.planeSigns(nBits, dim)
-    val projDefs = planes.zipWithIndex.map { case (p, b) =>
-      val arr = p.map(v => if (v > 0) "1.0" else "-1.0").mkString("[", ", ", "]")
-      s"list_dot_product(v, $arr) AS p$b"
-    }.mkString(", ")
-    val bucket = (0 until nBits)
-      .map(b => s"(CASE WHEN p$b > 0 THEN ${1L << b} ELSE 0 END)").mkString(" + ")
-    val margins = (0 until nBits)
-      .map(b => s"struct_pack(m := abs(p$b), b := $b)").mkString("[", ", ", "]")
-    val probeList = ("bucket0" +: (1 until nProbe).map(i =>
-      s"xor(bucket0, 1 << flips[$i])")).mkString(", ")
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |proj AS (SELECT vec_id, v, $projDefs FROM base),
-       |bkt AS (SELECT vec_id, v, $bucket AS bucket0,
-       |  list_transform(list_sort($margins), x -> x.b) AS flips FROM proj),
-       |c AS (SELECT vec_id AS cand_id, v AS cv, bucket0 AS bucket FROM bkt),
-       |q AS (SELECT vec_id AS query_id, v AS qv,
-       |  unnest([$probeList]) AS bucket
-       |  FROM bkt WHERE vec_id < 10),
-       |scored AS (SELECT DISTINCT query_id, cand_id,
-       |  list_dot_product(qv, cv)
-       |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-       |  FROM c JOIN q USING (bucket) WHERE query_id <> cand_id)
-       |SELECT query_id, cand_id, cosine, rank FROM (
-       |  SELECT query_id, cand_id, cosine, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
-       |  FROM scored) WHERE rank <= $k""".stripMargin
-  }
-
-  private def embedNearDupSql: String =
-    s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |b AS (SELECT vec_id, v, ${lshBucketSqlExpr("v", 4, 64)} AS bucket,
-       |  sqrt(list_dot_product(v, v)) AS nrm FROM base)
-       |SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
-       |  list_dot_product(a.v, bb.v) / (a.nrm * bb.nrm) AS cosine
-       |FROM b a JOIN b bb ON a.bucket = bb.bucket AND a.vec_id < bb.vec_id
-       |WHERE list_dot_product(a.v, bb.v) / (a.nrm * bb.nrm) >= 0.3""".stripMargin
-
-  /** CTE chain ending in `sims(doc_id, simhash)` — shared by q28 and
-    * the q54 banded near-dup pair oracle. */
-  private def simhashCteSql: String = {
-    val sums = (0 until 16).map(i =>
-      s"sum(CASE WHEN strpos('89abcdef', substr(md5(tok), ${i + 1}, 1)) > 0 THEN 1 ELSE -1 END) AS p$i")
-      .mkString(", ")
-    val bits = (0 until 16).map(i =>
-      s"CASE WHEN p$i > 0 THEN ${1L << (15 - i)} ELSE 0 END").mkString(" + ")
-    s"""toks AS (SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS tok FROM documents),
-       |sums AS (SELECT doc_id, $sums FROM toks GROUP BY doc_id),
-       |sims AS (SELECT doc_id, CAST($bits AS BIGINT) AS simhash FROM sums)""".stripMargin
-  }
-
-  private def simhashSql: String =
-    s"WITH $simhashCteSql\nSELECT doc_id, simhash FROM sims"
-
-  private def simhashPairsSql: String =
-    s"""WITH $simhashCteSql
-       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-       |FROM sims a JOIN sims b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.simhash, b.simhash)) <= 1""".stripMargin
-
-  /** q66 oracle: Broder minhash estimator replicated in SQL — same
-    * shingle hash (md5(s || seed)), same band buckets
-    * (md5(s_i || '|' || ...) = Spark's md5(concat_ws("|", ...))),
-    * same n_agree/16 exact rational. */
-  private def minhashEstimateSql: String = {
-    val nH = 16; val bs = 4
-    // component i = 8-hex slice (i%4) of md5(s || group i/4) — matches
-    // Dedup.minhashSignatures' 4-components-per-md5 scheme
-    val sigDefs = (0 until nH).map(i =>
-      s"min(substr(md5(s || '${i / 4}'), ${(i % 4) * 8 + 1}, 8)) AS s$i").mkString(", ")
-    val bandSelects = (0 until nH / bs).map { b =>
-      val keys = (b * bs until (b + 1) * bs).map(i => s"s$i").mkString(" || '|' || ")
-      s"SELECT doc_id, $b AS band, md5($keys) AS bucket FROM sigs"
-    }.mkString(" UNION ALL ")
-    val agree = (0 until nH)
-      .map(i => s"(CASE WHEN sa.s$i = sb.s$i THEN 1 ELSE 0 END)").mkString(" + ")
-    s"""WITH toks AS ($toksCte),
-       |sh AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(t) - 1),
-       |  i -> t[i] || ' ' || t[i + 1])) AS s FROM toks),
-       |sigs AS (SELECT doc_id, $sigDefs FROM sh GROUP BY doc_id),
-       |bands AS ($bandSelects),
-       |cands AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b ON a.band = b.band AND a.bucket = b.bucket
-       |    AND a.doc_id < b.doc_id)
-       |SELECT doc_a, doc_b,
-       |  CAST($agree AS BIGINT) AS n_agree,
-       |  CAST($agree AS DOUBLE) / 16.0 AS est_jaccard
-       |FROM cands JOIN sigs sa ON doc_a = sa.doc_id
-       |JOIN sigs sb ON doc_b = sb.doc_id""".stripMargin
-  }
-
-  /** 64-bit variant of [[simhashCteSql]]: bit b votes on bit (3 - b%4)
-    * of md5 hex nibble b/4 (strpos hex decode mirrors the Spark side's
-    * instr formulation). The oracle verifies pairs brute-force — the
-    * banding is the Spark side's scale optimization, proven equivalent
-    * by pigeonhole (and by SimhashNearDupSpec). */
-  private def simhash64PairsSql: String = {
-    val sums = (0 until 64).map { b =>
-      val mask = 8 >> (b % 4)
-      s"sum(CASE WHEN ((strpos('0123456789abcdef', substr(md5(tok), ${b / 4 + 1}, 1)) - 1) & $mask) > 0 THEN 1 ELSE -1 END) AS p$b"
-    }.mkString(", ")
-    val bits = (0 until 64).map(i =>
-      s"CASE WHEN p$i > 0 THEN CAST(${1L << (63 - i)} AS BIGINT) ELSE CAST(0 AS BIGINT) END")
-      .mkString(" + ")
-    s"""WITH toks AS (SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS tok FROM documents),
-       |sums AS (SELECT doc_id, $sums FROM toks GROUP BY doc_id),
-       |sims AS (SELECT doc_id, CAST($bits AS BIGINT) AS simhash FROM sums)
-       |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-       |FROM sims a JOIN sims b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS sum_disc,
-        |  avg(l_quantity) AS avg_qty, count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_filter_project" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  l_extendedprice * (1.0 - l_discount) AS net_price
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_discount > 0.05""".stripMargin,
-    "q03_join_agg" ->
-      """SELECT n_name, o_orderstatus, count(*) AS n_items,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name, o_orderstatus""".stripMargin,
-    "q04_broadcast_region" ->
-      """SELECT r_name, count(*) AS n_suppliers, round(sum(s_acctbal), 2) AS total_bal
-        |FROM supplier
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name""".stripMargin,
-    "q05_window_topn" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |  FROM orders) WHERE rn <= 3""".stripMargin,
-    "q06_rollup" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n, sum(l_quantity) AS sum_qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "q07_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n, round(sum(o_totalprice), 2) AS total
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin,
-    "q08_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_totalprice > 300000.0)""".stripMargin,
-    "q09_semi_join" ->
-      """SELECT c_custkey FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_orderstatus = 'F')""".stripMargin,
-    "q10_set_ops" ->
-      """SELECT user_id FROM events WHERE event_type = 'purchase'
-        |INTERSECT
-        |SELECT user_id FROM events WHERE event_type = 'signup'
-        |EXCEPT
-        |SELECT user_id FROM events WHERE event_type = 'error'
-        |  GROUP BY user_id HAVING count(*) > 20""".stripMargin,
-    "q11_series_scan" ->
-      """SELECT event_id, ts, user_id, value FROM events
-        |WHERE user_id = 7 AND event_type = 'view'
-        |  AND ts >= TIMESTAMP '2024-01-05 00:00:00'
-        |  AND ts <= TIMESTAMP '2024-01-20 00:00:00'""".stripMargin,
-    "q12_series_count" ->
-      """SELECT count(*) AS trades_count, min(ts) AS first_ts, max(ts) AS last_ts
-        |FROM events
-        |WHERE user_id = 42 AND event_type = 'click'
-        |  AND ts >= TIMESTAMP '2024-01-01 00:00:00'
-        |  AND ts <= TIMESTAMP '2024-01-31 00:00:00'""".stripMargin,
-    "q13_merge_streams" ->
-      """SELECT 'click' AS stream, event_id, ts, user_id, value FROM events
-        |WHERE event_type = 'click' AND user_id < 20
-        |UNION ALL
-        |SELECT 'view' AS stream, event_id, ts, user_id, value FROM events
-        |WHERE event_type = 'view' AND user_id < 20""".stripMargin,
-    "q14_hour_bars" ->
-      """SELECT event_type, date_trunc('hour', ts) AS bucket, count(*) AS n,
-        |  round(sum(value), 4) AS volume, min(value) AS low, max(value) AS high,
-        |  first(value ORDER BY ts, event_id) AS open,
-        |  last(value ORDER BY ts, event_id) AS close
-        |FROM events GROUP BY event_type, date_trunc('hour', ts)""".stripMargin,
-    "q15_dedup_first" ->
-      """SELECT event_id, user_id, event_type, day, ts FROM (
-        |  SELECT event_id, user_id, event_type, CAST(ts AS DATE) AS day, ts,
-        |    row_number() OVER (PARTITION BY user_id, event_type, CAST(ts AS DATE)
-        |      ORDER BY ts, event_id) AS rn
-        |  FROM events) WHERE rn = 1""".stripMargin,
-    "q16_gap_detect" ->
-      """SELECT user_id, count(*) AS n_gaps FROM (
-        |  SELECT user_id, epoch_us(ts) - lag(epoch_us(ts)) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-        |  FROM events) WHERE gap_us > 21600000000 GROUP BY user_id""".stripMargin,
-    "q17_active_days" ->
-      """WITH spans AS (SELECT user_id, min(CAST(ts AS DATE)) AS d0,
-        |    max(CAST(ts AS DATE)) AS d1 FROM events GROUP BY user_id)
-        |SELECT user_id,
-        |  unnest(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS day
-        |FROM spans""".stripMargin,
-    "q18_time_parts" ->
-      """SELECT event_id, CAST(year(ts) AS BIGINT) AS yr,
-        |  CAST(dayofyear(ts) AS BIGINT) AS doy,
-        |  CAST(hour(ts) * 60 + minute(ts) AS BIGINT) AS minute_of_day,
-        |  epoch_ms(ts) AS ts_ms,
-        |  strftime(ts, '%Y-%m-%d %H:%M') AS label
-        |FROM events WHERE user_id < 5""".stripMargin,
-    "q19_uid_dict" ->
-      """WITH dict AS (SELECT name, row_number() OVER (ORDER BY name) AS uid
-        |  FROM (SELECT DISTINCT event_type AS name FROM events))
-        |SELECT e.event_type, d.uid, count(*) AS n
-        |FROM events e JOIN dict d ON e.event_type = d.name
-        |GROUP BY e.event_type, d.uid""".stripMargin,
-    "q30_sorted_limit" ->
-      """SELECT event_id, ts, user_id, event_type, value FROM events
-        |ORDER BY ts, event_id LIMIT 100""".stripMargin,
-    "q106_uid_decode" ->
-      // same two-phase allocation: row_number over sorted distinct
-      // names (unique tiebreak by construction), fresh ids offset by
-      // the base max, anti-join keeps base ids immutable; decode is a
-      // left join back from the uid-only aggregate.
-      """WITH base AS (SELECT DISTINCT event_type AS name FROM events
-        |  WHERE user_id % 2 = 0),
-        |d0 AS (SELECT name, row_number() OVER (ORDER BY name) AS uid FROM base),
-        |mx AS (SELECT coalesce(max(uid), 0) AS m FROM d0),
-        |fresh AS (SELECT name, row_number() OVER (ORDER BY name) + m AS uid
-        |  FROM (SELECT DISTINCT event_type AS name FROM events
-        |        WHERE user_id % 2 <> 0
-        |          AND event_type NOT IN (SELECT name FROM base)), mx),
-        |dict AS (SELECT name, uid FROM d0 UNION ALL SELECT name, uid FROM fresh),
-        |agg AS (SELECT d.uid AS uid, count(*) AS n
-        |  FROM events e JOIN dict d ON e.event_type = d.name
-        |  GROUP BY d.uid)
-        |SELECT a.uid, d.name AS event_type_name, a.n
-        |FROM agg a LEFT JOIN dict d USING (uid)""".stripMargin,
-    "q20_token_stats" ->
-      s"""WITH toks AS ($toksCte)
-         |SELECT doc_id, len(t) AS n_tokens, len(list_distinct(t)) AS n_uniq,
-         |  len(list_distinct(t))::DOUBLE / greatest(len(t), 1)::DOUBLE AS uniq_ratio,
-         |  n_chars
-         |FROM toks""".stripMargin,
-    "q21_lang_id" -> langIdSql,
-    "q72_langid_ngram" -> langIdNgramSql,
-    "q74_token_topk" ->
-      s"""WITH toks AS ($toksCte),
-         |t2 AS (SELECT unnest(t) AS tok FROM toks)
-         |SELECT tok, count(*)::BIGINT AS n FROM t2 GROUP BY tok
-         |ORDER BY n DESC, tok LIMIT 100""".stripMargin,
-    "q41_rolling_24h" ->
-      """SELECT user_id, event_id, ts,
-        |  count(*) OVER w AS n_24h,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) OVER w AS DOUBLE)
-        |    / 100.0 / count(*) OVER w AS avg_24h
-        |FROM events WHERE user_id < 30
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |  RANGE BETWEEN 86399999999 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "q38_multimodal_meta" ->
-      // Twin of Multimodal.decodeMetaExpr over the parquet the Spark
-      // query just wrote (content is deterministic and sf-independent).
-      // DuckDB 1.0 cannot slice BLOBs, so the header is sliced as the
-      // hex STRING (hex() is uppercase on both engines) and parsed via
-      // the '0x'||…::INT/::BIGINT casts — same bytes, same integer
-      // values (dims are BIGINT on both sides: an 8-nibble field can
-      // exceed INT32, see Multimodal.decodeMetaExpr).
-      s"""WITH h AS (
-         |  SELECT media_id, content, hex(content) AS hx,
-         |    (content IS NOT NULL AND octet_length(content) >= 15) AS len_ok
-         |  FROM read_parquet('${operators.Multimodal.scratchCorpusPath}/*.parquet')),
-         |k AS (
-         |  SELECT media_id, content, hx,
-         |    (len_ok AND substr(hx, 1, 4) = '4752') AS magic_ok,
-         |    CASE WHEN len_ok AND substr(hx, 1, 4) = '4752'
-         |         THEN ('0x' || substr(hx, 5, 2))::INT END AS kind_code
-         |  FROM h),
-         |m AS (
-         |  SELECT media_id,
-         |    CASE kind_code WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-         |         WHEN 2 THEN 'video' ELSE 'unknown' END AS kind,
-         |    CASE WHEN magic_ok AND kind_code BETWEEN 0 AND 2
-         |         THEN ('0x' || substr(hx, 7, 8))::BIGINT ELSE 0 END AS width,
-         |    COALESCE(octet_length(content), 0)::BIGINT AS byte_size
-         |  FROM k)
-         |SELECT kind, count(*)::BIGINT AS n,
-         |  sum(byte_size)::BIGINT AS total_bytes,
-         |  sum(width)::BIGINT::DOUBLE / count(*) AS avg_width
-         |FROM m GROUP BY kind""".stripMargin,
-    "q58_multimodal_pipeline" ->
-      // End-to-end twin of the whole multimodal pipeline over the
-      // scratch parquet q58 just wrote. Stage parity, bit-for-bit:
-      //  * decode/quarantine — hex-string header slicing (q38 pattern);
-      //  * resize — nearest-neighbor source index rebuilt per output
-      //    pixel k (y=k//16, x=k%16; py=y*h//10, px=x*w//16) with
-      //    string_agg(.. ORDER BY k) re-assembling the new blob hex,
-      //    out-of-payload pixels reading '00' (Multimodal.resize:150);
-      //  * features — the float32 accumulator v[c] += b/255.0f is
-      //    replayed exactly: per component c = p % 16, the byte stream
-      //    in position order folds through list_reduce with a FLOAT
-      //    cast after every add (DuckDB FLOAT ops are IEEE binary32,
-      //    same as Java float — verified bit-equal vs numpy float32);
-      //  * cosine — list_dot_product over DOUBLE[] accumulates in index
-      //    order exactly like FloatDotProduct (q26/q35 precedent), and
-      //    the norm product divides identically, so the raw doubles
-      //    hash-match with no rounding.
-      s"""WITH ${mediaDecodeCte(operators.Multimodal.scratchPipelinePath)},
-         |resz AS (
-         |  SELECT media_id, $resizeHexSql AS hx2
-         |  FROM (SELECT media_id, hx, len, w, h, unnest(range(0, 160)) AS k
-         |        FROM valid WHERE kind_code = 0 AND w > 0 AND h > 0)
-         |  GROUP BY media_id, hx),
-         |normalized AS (
-         |  SELECT media_id, hx FROM valid WHERE NOT (kind_code = 0 AND w > 0 AND h > 0)
-         |  UNION ALL SELECT media_id, hx2 AS hx FROM resz),
-         |bytes AS (
-         |  SELECT media_id, unnest(range(0, length(hx)//2)) AS p, hx FROM normalized),
-         |comp AS (
-         |  SELECT media_id, p % 16 AS c,
-         |    list(CAST(('0x' || substr(hx, p*2+1, 2))::INT::FLOAT / 255.0::FLOAT AS FLOAT)
-         |         ORDER BY p) AS xs
-         |  FROM bytes GROUP BY media_id, p % 16),
-         |compv AS (
-         |  SELECT media_id, c,
-         |    list_reduce(list_prepend(0.0::FLOAT, xs), (a,x) -> CAST(a + x AS FLOAT))::DOUBLE AS val
-         |  FROM comp),
-         |emb AS (SELECT media_id, list(val ORDER BY c) AS v FROM compv GROUP BY media_id),
-         |q AS (SELECT media_id AS query_id, v AS qv FROM emb WHERE media_id < 5),
-         |c AS (SELECT media_id AS cand_id, v AS cv FROM emb),
-         |scored AS (
-         |  SELECT query_id, cand_id,
-         |    list_dot_product(qv, cv)
-         |      / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-         |  FROM c, q WHERE query_id <> cand_id)
-         |SELECT query_id, cand_id, cosine, rank FROM (
-         |  SELECT query_id, cand_id, cosine, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
-         |  FROM scored) WHERE rank <= 3""".stripMargin,
-    "q76_resize_oracle" ->
-      // Byte-exact twin of Multimodal.resize over the scratch parquet
-      // q76 just wrote: the full re-encoded blob hex (uppercase on both
-      // engines) rebuilt from source bytes — same decode + index math
-      // as q58's resz CTE, compared as the whole string.
-      s"""WITH ${mediaDecodeCte(operators.Multimodal.scratchResizePath)}
-         |SELECT media_id, 16::BIGINT AS width, 10::BIGINT AS height,
-         |  $resizeHexSql AS blob_hex
-         |FROM (SELECT media_id, hx, len, w, h, unnest(range(0, 160)) AS k
-         |      FROM valid WHERE kind_code = 0 AND w > 0 AND h > 0)
-         |GROUP BY media_id, hx""".stripMargin,
-    "q111_price_trend" ->
-      // same exact-integer sums (BIGINT-cast from HUGEINT — rule 5),
-      // same double-conversion points and operation order; the slope
-      // expression is repeated inside the intercept exactly as the
-      // Spark plan inlines it.
-      """WITH b AS (SELECT user_id,
-        |    epoch_us(ts) // 1000000 - 1704067200 AS x,
-        |    CAST(round(value * 100) AS BIGINT) AS y
-        |  FROM events),
-        |a AS (SELECT user_id, count(*)::BIGINT AS n,
-        |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        |    CAST(sum(x * x) AS BIGINT) AS sxx,
-        |    CAST(sum(x * y) AS BIGINT) AS sxy
-        |  FROM b GROUP BY user_id HAVING count(*) >= 2)
-        |SELECT user_id, n,
-        |  (n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
-        |    / (n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE)
-        |    AS slope_cents_per_sec,
-        |  (sy::DOUBLE - ((n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE)
-        |    / (n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE))
-        |    * sx::DOUBLE) / n::DOUBLE AS intercept_cents
-        |FROM a""".stripMargin,
-    "q108_realized_vol" ->
-      // same lag window with the event_id tiebreak, same round-then-
-      // sqrt sequence (the rounded variance pins the sqrt input)
-      """WITH r AS (SELECT user_id, CAST(ts AS DATE) AS day,
-        |    ln(value / lag(value) OVER (
-        |      PARTITION BY user_id, CAST(ts AS DATE)
-        |      ORDER BY ts, event_id)) AS r
-        |  FROM events WHERE value > 0)
-        |SELECT user_id, day, count(*)::BIGINT AS n_ret,
-        |  round(sum(r * r), 4) AS realized_var,
-        |  sqrt(round(sum(r * r), 4)) AS realized_vol
-        |FROM r WHERE r IS NOT NULL
-        |GROUP BY user_id, day""".stripMargin,
-    "q109_max_drawdown" ->
-      // same explicit ROWS frame for the running peak; the literal 1
-      // is cast to DOUBLE (a bare 1.0 is DECIMAL in DuckDB)
-      """WITH d AS (SELECT user_id, value,
-        |    max(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS peak
-        |  FROM events WHERE value > 0)
-        |SELECT user_id, count(*)::BIGINT AS n_obs, max(value) AS high,
-        |  min(value / peak - 1.0::DOUBLE) AS max_drawdown
-        |FROM d GROUP BY user_id""".stripMargin,
-    "q87_twap" ->
-      // same window, same integer-second truncation, same fixed
-      // division sequence over exact integer sums
-      """WITH d AS (SELECT user_id, CAST(ts AS DATE) AS day, value, ts, event_id,
-        |    (lead(epoch_us(ts)) OVER (PARTITION BY user_id, CAST(ts AS DATE)
-        |       ORDER BY ts, event_id) - epoch_us(ts)) // 1000000 AS dur_sec
-        |  FROM events)
-        |SELECT user_id, day,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT) * dur_sec) AS DOUBLE)
-        |    / CAST(sum(dur_sec) AS DOUBLE) / 100.0 AS twap,
-        |  CAST(sum(dur_sec) AS BIGINT) AS active_sec,
-        |  count(*)::BIGINT AS n_weighted
-        |FROM d WHERE dur_sec IS NOT NULL
-        |GROUP BY user_id, day""".stripMargin,
-    "q85_resample_ffill" ->
-      // same grid (generate_series is end-inclusive like sequence),
-      // same pre-dedup, DuckDB's native ASOF LEFT JOIN as the fill
-      """WITH e AS (SELECT user_id, ts, max_by(value, event_id) AS value
-        |  FROM events WHERE user_id < 5 GROUP BY user_id, ts),
-        |g AS (SELECT user_id,
-        |    unnest(generate_series(date_trunc('hour', min(ts)), max(ts),
-        |      INTERVAL 1 HOUR)) AS grid_ts
-        |  FROM events WHERE user_id < 5 GROUP BY user_id)
-        |SELECT g.user_id, g.grid_ts, e.ts AS src_ts, e.value
-        |FROM g ASOF LEFT JOIN e
-        |  ON g.user_id = e.user_id AND g.grid_ts >= e.ts""".stripMargin,
-    "q86_resample_lerp" ->
-      // backward + forward ASOF, then the identical per-row lerp op
-      // sequence over epoch micros — raw doubles, no rounding
-      """WITH e AS (SELECT user_id, ts, max_by(value, event_id) AS value
-        |  FROM events WHERE user_id < 5 GROUP BY user_id, ts),
-        |g AS (SELECT user_id,
-        |    unnest(generate_series(date_trunc('hour', min(ts)), max(ts),
-        |      INTERVAL 1 HOUR)) AS grid_ts
-        |  FROM events WHERE user_id < 5 GROUP BY user_id),
-        |p AS (SELECT g.user_id, g.grid_ts, e.ts AS prev_ts, e.value AS prev_v
-        |  FROM g ASOF LEFT JOIN e
-        |    ON g.user_id = e.user_id AND g.grid_ts >= e.ts),
-        |b AS (SELECT p.user_id, p.grid_ts, p.prev_ts, p.prev_v,
-        |    e.ts AS next_ts, e.value AS next_v
-        |  FROM p ASOF LEFT JOIN e
-        |    ON p.user_id = e.user_id AND p.grid_ts <= e.ts)
-        |SELECT user_id, grid_ts, prev_ts, next_ts,
-        |  CASE WHEN prev_ts IS NULL THEN next_v
-        |       WHEN next_ts IS NULL OR next_ts = prev_ts THEN prev_v
-        |       ELSE prev_v + (next_v - prev_v) *
-        |         ((epoch_us(grid_ts) - epoch_us(prev_ts))::DOUBLE
-        |           / (epoch_us(next_ts) - epoch_us(prev_ts))::DOUBLE)
-        |  END AS value
-        |FROM b""".stripMargin,
-    "q84_char_entropy" ->
-      // same per-char probability terms, same 9-dp rounding of the
-      // order-sensitive sum
-      """WITH ch AS (
-        |  SELECT doc_id, length(text)::DOUBLE AS len,
-        |    unnest(string_split(text, '')) AS ch
-        |  FROM documents),
-        |f AS (SELECT doc_id, len, ch, count(*) AS n
-        |  FROM ch GROUP BY doc_id, len, ch)
-        |SELECT doc_id, count(*)::BIGINT AS n_distinct_chars,
-        |  round(-sum((n / len) * log2(n / len)), 9) + 0.0 AS entropy
-        |FROM f GROUP BY doc_id""".stripMargin,
-    "q91_unicode_planes" ->
-      // Re-derives codepoint length, entropy, and the q72 trigram
-      // count from the SAME scratch parquet bytes the Spark query just
-      // salted with supplementary-plane text — DuckDB's length /
-      // string_split('') / substr are all codepoint-based, which is
-      // exactly what CharCounts and UTF8String.substringSQL give Spark.
-      s"""WITH src AS (SELECT doc_id, text
-         |  FROM read_parquet('${functions.TextFunctions.scratchUnicodePath}/*.parquet')),
-         |tri AS (SELECT doc_id, list_distinct(flatten(list_transform(
-         |    list_filter(list_filter(string_split(lower(text), ' '), x -> x <> ''),
-         |      w -> len(w) >= 3),
-         |    w -> list_transform(generate_series(1, len(w) - 2),
-         |      i -> substr(w, i, 3))))) AS gs
-         |  FROM src),
-         |ch AS (SELECT doc_id, length(text)::DOUBLE AS len,
-         |    unnest(string_split(text, '')) AS ch
-         |  FROM src),
-         |f AS (SELECT doc_id, len, ch, count(*) AS n
-         |  FROM ch GROUP BY doc_id, len, ch),
-         |ent AS (SELECT doc_id, count(*)::BIGINT AS n_distinct_chars,
-         |    round(-sum((n / len) * log2(n / len)), 9) + 0.0 AS entropy
-         |  FROM f GROUP BY doc_id)
-         |SELECT s.doc_id, length(s.text)::BIGINT AS n_cp,
-         |  len(t.gs)::BIGINT AS n_trigrams,
-         |  e.n_distinct_chars, e.entropy
-         |FROM src s JOIN tri t ON s.doc_id = t.doc_id
-         |JOIN ent e ON s.doc_id = e.doc_id""".stripMargin,
-    "q88_stream_ingest" ->
-      // End state of the streaming ingest+compact pipeline, re-derived
-      // from the same arrival parquet: earliest (ts, value) per
-      // event_id wins; __date is the hive partition the winner landed
-      // in. Independent of micro-batch boundaries by construction.
-      s"""WITH arr AS (SELECT * FROM
-         |    read_parquet('${graft.streaming.IngestPipeline.scratchIngestBase}/in/*.parquet')),
-         |r AS (SELECT *, row_number() OVER (
-         |    PARTITION BY event_id ORDER BY ts, value) AS rn
-         |  FROM arr)
-         |SELECT event_id, user_id, event_type, value, ts,
-         |  CAST(ts AS DATE) AS __date
-         |FROM r WHERE rn = 1""".stripMargin,
-    "q89_stream_heavy_hitters" ->
-      // Exact token counts over the same arrival bytes: with ample
-      // capacity the Space-Saving summary is exact (err = 0), so the
-      // streaming operator's final estimates equal the batch counts.
-      s"""WITH arr AS (SELECT * FROM
-         |    read_parquet('${graft.streaming.StreamingHeavyHitters.scratchBase}/in/*.parquet')),
-         |t AS (SELECT unnest(list_filter(string_split(lower(text), ' '),
-         |    x -> x <> '')) AS token
-         |  FROM arr)
-         |SELECT token, count(*)::BIGINT AS n, 0::BIGINT AS err
-         |FROM t GROUP BY token""".stripMargin,
-    "q110_stream_gaps" ->
-      // batch lag-over-(key, ms) gap detection from the same arrival
-      // bytes: epoch_ms mirrors Timestamp.getTime's millisecond floor,
-      // adjacent-diff pairs are tie-order-invariant (equal ms values
-      // yield identical pair multisets), threshold strict > 2 h.
-      s"""WITH arr AS (SELECT * FROM
-         |    read_parquet('${graft.streaming.GapMonitor.scratchBase}/in/*.parquet')),
-         |e AS (SELECT user_id::VARCHAR AS key, epoch_ms(ts) AS ms FROM arr),
-         |l AS (SELECT key, lag(ms) OVER (PARTITION BY key ORDER BY ms) AS prev_ms,
-         |    ms AS cur_ms FROM e)
-         |SELECT key, make_timestamp(prev_ms * 1000) AS prev_ts,
-         |  make_timestamp(cur_ms * 1000) AS cur_ts,
-         |  cur_ms - prev_ms AS gap_ms
-         |FROM l WHERE cur_ms - prev_ms > 7200000""".stripMargin,
-    "q95_stream_bars" ->
-      // batch OHLC per (user, hour) from the same arrival bytes:
-      // unique ts per bucket makes min_by/max_by deterministic; no
-      // sums, so doubles are selection-exact (no rounding needed)
-      s"""WITH arr AS (SELECT * FROM
-         |    read_parquet('${graft.streaming.LiveBars.scratchBase}/in/*.parquet')),
-         |b AS (SELECT user_id::VARCHAR AS key,
-         |    make_timestamp(epoch_us(ts) - epoch_us(ts) % 3600000000) AS bucket,
-         |    ts, value
-         |  FROM arr)
-         |SELECT key, bucket, min_by(value, ts) AS open, max(value) AS high,
-         |  min(value) AS low, max_by(value, ts) AS close,
-         |  count(*)::BIGINT AS n
-         |FROM b GROUP BY key, bucket""".stripMargin,
-    "q90_ivf_distributed" ->
-      // q40's assignment/probe/re-rank SQL, with the coarse quantizer
-      // read from the scratch centroids the distributed Lloyd pass
-      // just wrote (instead of iters=0 seed vectors) — same exact
-      // index-order double folds on both engines.
-      s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |cells AS (SELECT cell, cv::DOUBLE[] AS cv,
-         |    list_dot_product(cv::DOUBLE[], cv::DOUBLE[]) AS c2
-         |  FROM read_parquet('${operators.Similarity.scratchCentroidsPath}/*.parquet')),
-         |dist AS (SELECT b.vec_id, c.cell,
-         |    c.c2 - 2 * list_dot_product(b.v, c.cv) AS d
-         |  FROM base b CROSS JOIN cells c),
-         |assign AS (SELECT vec_id, cell FROM (
-         |  SELECT vec_id, cell, row_number() OVER (
-         |    PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dist)
-         |  WHERE rn = 1),
-         |probes AS (SELECT vec_id, cell FROM (
-         |  SELECT vec_id, cell, row_number() OVER (
-         |    PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dist
-         |  WHERE vec_id < 10) WHERE rn <= 4),
-         |c AS (SELECT b.vec_id AS cand_id, b.v AS cv2,
-         |    sqrt(list_dot_product(b.v, b.v)) AS cn, a.cell
-         |  FROM base b JOIN assign a USING (vec_id)),
-         |q AS (SELECT b.vec_id AS query_id, b.v AS qv,
-         |    sqrt(list_dot_product(b.v, b.v)) AS qn, p.cell
-         |  FROM base b JOIN probes p ON b.vec_id = p.vec_id),
-         |scored AS (SELECT query_id, cand_id,
-         |    list_dot_product(qv, cv2) / (qn * cn) AS cosine
-         |  FROM c JOIN q USING (cell) WHERE query_id <> cand_id)
-         |SELECT query_id, cand_id, cosine, rank FROM (
-         |  SELECT query_id, cand_id, cosine, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
-         |  FROM scored) WHERE rank <= 5""".stripMargin,
-    "q83_corpus_pipeline" ->
-      // the same chain as CTEs: dirty -> scrub -> md5 dedup (min-id
-      // keeper) -> md5 split label -> per-split stats
-      s"""WITH d AS (
-         |  SELECT doc_id, text ||
-         |    CASE WHEN doc_id % 7 = 0
-         |         THEN '  Contact USER' || doc_id::VARCHAR || '@Example.COM now'
-         |         ELSE '' END AS raw
-         |  FROM documents),
-         |c AS (SELECT doc_id,
-         |    trim(regexp_replace(regexp_replace(regexp_replace(lower(nfc_normalize(raw)),
-         |      '${TextFunctions.EmailRe}', '<email>', 'g'),
-         |      '${TextFunctions.UrlRe}', '<url>', 'g'),
-         |      '\\s+', ' ', 'g')) AS clean
-         |  FROM d),
-         |k AS (SELECT doc_id, clean,
-         |    row_number() OVER (PARTITION BY md5(clean) ORDER BY doc_id) AS rn,
-         |    count(*) OVER (PARTITION BY md5(clean)) AS n_copies
-         |  FROM c),
-         |l AS (SELECT doc_id, n_copies, clean,
-         |    CASE WHEN ('0x' || substr(md5(doc_id::VARCHAR || ':s42'), 1, 8))::BIGINT % 100 < 90 THEN 'train'
-         |         WHEN ('0x' || substr(md5(doc_id::VARCHAR || ':s42'), 1, 8))::BIGINT % 100 < 95 THEN 'val'
-         |         ELSE 'test' END AS split
-         |  FROM k WHERE rn = 1)
-         |SELECT split, count(*)::BIGINT AS n_docs,
-         |  CAST(sum(len(list_filter(string_split(clean, ' '), x -> x <> ''))) AS BIGINT) AS n_tokens,
-         |  (sum(n_copies) - count(*))::BIGINT AS dupes_removed
-         |FROM l GROUP BY split""".stripMargin,
-    "q82_rts_csv_parse" ->
-      // same bytes, DuckDB's own CSV reader and cast/strptime chain
-      s"""WITH raw AS (
-         |  SELECT * FROM read_csv('${sources.RtsCsv.scratchCsvDir}/*.csv',
-         |    header = true, delim = ';', all_varchar = true)
-         |  WHERE contract IS NOT NULL OR trade_id IS NOT NULL),
-         |p AS (SELECT
-         |  'RTS' AS market, contract AS security,
-         |  TRY_CAST(trade_id AS BIGINT) AS trade_id,
-         |  TRY_CAST(price AS DOUBLE) AS price,
-         |  TRY_CAST(amount AS INT)::BIGINT AS amount,
-         |  try_strptime(dat_time, '%Y-%m-%d %H:%M:%S.%g') AS "time",
-         |  (Nosystem = '1') AS nosystem
-         |  FROM raw)
-         |SELECT market, security, trade_id, price, amount, "time", nosystem,
-         |  CASE WHEN security IS NULL THEN 'missing security'
-         |       WHEN trade_id IS NULL THEN 'bad trade_id'
-         |       WHEN price IS NULL THEN 'bad price'
-         |       WHEN amount IS NULL THEN 'bad amount'
-         |       WHEN "time" IS NULL THEN 'bad dat_time' END AS reject_reason
-         |FROM p""".stripMargin,
-    "q81_frame_sample" ->
-      // frame boundaries re-derived with BIGINT floor division over
-      // the same hex bytes: nFrames = (len-15) // 16, indices
-      // 0,2,4,... , frame f = 32 hex chars at offset 30 + f*32
-      s"""WITH ${mediaDecodeCte(operators.Multimodal.scratchFramesPath)},
-         |v AS (SELECT media_id, hx, (len - 15) // 16 AS nf
-         |  FROM valid WHERE kind_code = 2),
-         |f AS (SELECT media_id, hx, unnest(range(0, nf, 2)) AS frame_idx FROM v)
-         |SELECT media_id, frame_idx::BIGINT AS frame_idx,
-         |  substr(hx, 31 + frame_idx * 32, 32) AS frame_hex
-         |FROM f""".stripMargin,
-    "q77_text_scrub" ->
-      // Same deterministic dirtying (chr(769) = U+0301 combining
-      // acute, decomposed), same NFC->lower->mask->collapse chain; the
-      // shared EmailRe/UrlRe constants are interpolated so both
-      // engines mask identical spans (Java regex and RE2 agree on
-      // this pattern subset).
-      s"""WITH d AS (
-         |  SELECT doc_id, text ||
-         |    CASE WHEN doc_id % 7 = 0
-         |         THEN '  Contact USER' || doc_id::VARCHAR || '@Example.COM now'
-         |         ELSE '' END ||
-         |    CASE WHEN doc_id % 11 = 0
-         |         THEN ' see https://graft.example.com/docs?id=1 page'
-         |         ELSE '' END ||
-         |    CASE WHEN doc_id % 13 = 0
-         |         THEN ' cafe' || chr(769) || '   bar'
-         |         ELSE '' END AS raw
-         |  FROM documents),
-         |n AS (SELECT doc_id, lower(nfc_normalize(raw)) AS t FROM d)
-         |SELECT doc_id,
-         |  trim(regexp_replace(regexp_replace(regexp_replace(t,
-         |    '${TextFunctions.EmailRe}', '<email>', 'g'),
-         |    '${TextFunctions.UrlRe}', '<url>', 'g'),
-         |    '\\s+', ' ', 'g')) AS clean,
-         |  len(regexp_extract_all(t, '${TextFunctions.EmailRe}'))::BIGINT AS n_emails,
-         |  len(regexp_extract_all(t, '${TextFunctions.UrlRe}'))::BIGINT AS n_urls
-         |FROM n""".stripMargin,
-    "q39_percentiles" ->
-      """SELECT event_type, quantile_cont(value, 0.5) AS p50,
-        |  quantile_cont(value, 0.95) AS p95,
-        |  quantile_cont(value, 0.99) AS p99, count(*) AS n
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q37_token_count" ->
-      s"""WITH toks AS ($toksCte)
-         |SELECT doc_id, len(t) AS ws_tokens,
-         |  len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS bpe_tokens
-         |FROM toks""".stripMargin,
-    "q22_quality_score" ->
-      s"""WITH toks AS ($toksCte)
-         |SELECT doc_id, len(t) AS n_tokens,
-         |  (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')))::DOUBLE
-         |    / greatest(length(text), 1)::DOUBLE AS punct_ratio,
-         |  len(list_distinct(t))::DOUBLE / greatest(len(t), 1)::DOUBLE AS uniq_ratio,
-         |  least(len(t)::DOUBLE / 20.0, 1.0) * 0.4
-         |    + (1.0 - least(((length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')))::DOUBLE
-         |        / greatest(length(text), 1)::DOUBLE) * 4.0, 1.0)) * 0.2
-         |    + (len(list_distinct(t))::DOUBLE / greatest(len(t), 1)::DOUBLE) * 0.4 AS quality
-         |FROM toks""".stripMargin,
-    "q23_minhash_buckets" ->
-      s"""WITH toks AS ($toksCte),
-         |sh AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(t) - 1),
-         |  i -> t[i] || ' ' || t[i + 1])) AS s FROM toks),
-         |sigs AS (SELECT doc_id, min(substr(md5(s || '0'), 1, 8)) AS s0,
-         |    min(substr(md5(s || '0'), 9, 8)) AS s1
-         |  FROM sh GROUP BY doc_id),
-         |bands AS (SELECT doc_id, 0 AS band_id, md5(s0) AS bucket FROM sigs
-         |  UNION ALL SELECT doc_id, 1 AS band_id, md5(s1) AS bucket FROM sigs)
-         |SELECT band_id, bucket, count(*) AS bucket_size, min(doc_id) AS min_doc
-         |FROM bands GROUP BY band_id, bucket HAVING count(*) > 1""".stripMargin,
-    "q24_fingerprint" ->
-      s"""WITH toks AS ($toksCte),
-         |sh AS (SELECT doc_id, unnest(list_transform(generate_series(1, len(t) - 2),
-         |  i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS s FROM toks)
-         |SELECT doc_id, min(md5(s)) AS fingerprint,
-         |  count(DISTINCT s) AS n_shingles
-         |FROM sh GROUP BY doc_id""".stripMargin,
-    "q25_jaccard_pairs" ->
-      s"""WITH toks AS ($toksCte),
-         |sh AS (SELECT DISTINCT doc_id, unnest(list_transform(generate_series(1, len(t) - 1),
-         |  i -> t[i] || ' ' || t[i + 1])) AS s FROM toks),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-         |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-         |  GROUP BY a.doc_id, b.doc_id)
-         |SELECT doc_a, doc_b,
-         |  inter::DOUBLE / (sa.n + sb.n - inter)::DOUBLE AS jaccard
-         |FROM inter
-         |JOIN sizes sa ON doc_a = sa.doc_id
-         |JOIN sizes sb ON doc_b = sb.doc_id
-         |WHERE inter::DOUBLE / (sa.n + sb.n - inter)::DOUBLE >= 0.8""".stripMargin,
-    "q28_simhash" -> simhashSql,
-    "q34_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |  sum(l_quantity) AS sum_qty
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin,
-    "q33_ohlc_fold" ->
-      """SELECT user_id, CAST(ts AS DATE) AS day,
-        |  first(value ORDER BY ts, event_id) AS open, max(value) AS high,
-        |  min(value) AS low, last(value ORDER BY ts, event_id) AS close,
-        |  round(sum(value), 6) AS volume, count(*) AS n
-        |FROM events WHERE event_type = 'purchase'
-        |GROUP BY user_id, CAST(ts AS DATE)""".stripMargin,
-    "q31_vwap" ->
-      """SELECT l_partkey, CAST(year(o_orderdate) AS BIGINT) AS yr,
-        |  CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 / sum(l_quantity) AS vwap,
-        |  sum(l_quantity) AS volume
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY l_partkey, CAST(year(o_orderdate) AS BIGINT)""".stripMargin,
-    "q32_running_sum" ->
-      """SELECT user_id, event_id, ts,
-        |  round(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) AS running_value
-        |FROM events WHERE user_id < 10""".stripMargin,
-    "q26_cosine_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-        |  FROM embeddings WHERE vec_id < 10),
-        |c AS (SELECT vec_id AS cand_id, embedding::DOUBLE[] AS cv FROM embeddings),
-        |scored AS (SELECT query_id, cand_id,
-        |  list_dot_product(qv, cv)
-        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-        |  FROM c, q WHERE query_id <> cand_id)
-        |SELECT query_id, cand_id, cosine, rank FROM (
-        |  SELECT query_id, cand_id, cosine, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
-        |  FROM scored) WHERE rank <= 5""".stripMargin,
-    "q35_knn_label" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-        |  FROM embeddings WHERE vec_id < 100),
-        |c AS (SELECT vec_id AS cand_id, embedding::DOUBLE[] AS cv FROM embeddings),
-        |scored AS (SELECT query_id, cand_id,
-        |  list_dot_product(qv, cv)
-        |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-        |  FROM c, q WHERE query_id <> cand_id),
-        |topk AS (SELECT query_id, cand_id FROM (
-        |  SELECT query_id, cand_id, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
-        |  FROM scored) WHERE rank <= 5),
-        |votes AS (SELECT t.query_id, e.label AS cand_label, count(*) AS votes
-        |  FROM topk t JOIN embeddings e ON t.cand_id = e.vec_id
-        |  GROUP BY t.query_id, e.label),
-        |pred AS (SELECT query_id, cand_label AS pred_label, votes FROM (
-        |  SELECT query_id, cand_label, votes, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY votes DESC, cand_label) AS rn
-        |  FROM votes) WHERE rn = 1)
-        |SELECT p.query_id, p.pred_label, p.votes, e.label AS true_label,
-        |  p.pred_label = e.label AS correct
-        |FROM pred p JOIN embeddings e ON p.query_id = e.vec_id""".stripMargin,
-    "q36_sessionize" ->
-      """WITH g AS (SELECT user_id, event_id, ts,
-        |    epoch_us(ts) - lag(epoch_us(ts)) OVER (
-        |      PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-        |  FROM events),
-        |f AS (SELECT user_id, event_id, ts,
-        |    CASE WHEN gap_us IS NULL OR gap_us > 1800000000 THEN 1 ELSE 0 END AS new_sess
-        |  FROM g),
-        |s AS (SELECT user_id, ts, CAST(SUM(new_sess) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess_idx
-        |  FROM f)
-        |SELECT user_id, sess_idx, count(*) AS n_events,
-        |  min(ts) AS start_ts, max(ts) AS end_ts
-        |FROM s GROUP BY user_id, sess_idx""".stripMargin,
-    "q27_ann_lsh" -> annLshSql,
-    "q64_ann_multiprobe" -> annMultiProbeSql,
-    // IVF with the deterministic sample quantizer: cells are the first
-    // 16 vectors (iters=0 on the Spark side), assignment/probing by
-    // argmin(||c||^2 - 2 v.c) with ties to the lowest cell — identical
-    // float->double accumulation on both engines
-    "q40_ivf_ann" ->
-      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |cells AS (SELECT vec_id AS cell, v AS cv, list_dot_product(v, v) AS c2
-        |  FROM (SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn
-        |    FROM base) WHERE rn <= 16),
-        |dist AS (SELECT b.vec_id, c.cell,
-        |    c.c2 - 2 * list_dot_product(b.v, c.cv) AS d
-        |  FROM base b CROSS JOIN cells c),
-        |assign AS (SELECT vec_id, cell FROM (
-        |  SELECT vec_id, cell, row_number() OVER (
-        |    PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dist)
-        |  WHERE rn = 1),
-        |probes AS (SELECT vec_id, cell FROM (
-        |  SELECT vec_id, cell, row_number() OVER (
-        |    PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dist
-        |  WHERE vec_id < 10) WHERE rn <= 4),
-        |c AS (SELECT b.vec_id AS cand_id, b.v AS cv2,
-        |    sqrt(list_dot_product(b.v, b.v)) AS cn, a.cell
-        |  FROM base b JOIN assign a USING (vec_id)),
-        |q AS (SELECT b.vec_id AS query_id, b.v AS qv,
-        |    sqrt(list_dot_product(b.v, b.v)) AS qn, p.cell
-        |  FROM base b JOIN probes p ON b.vec_id = p.vec_id),
-        |scored AS (SELECT query_id, cand_id,
-        |    list_dot_product(qv, cv2) / (qn * cn) AS cosine
-        |  FROM c JOIN q USING (cell) WHERE query_id <> cand_id)
-        |SELECT query_id, cand_id, cosine, rank FROM (
-        |  SELECT query_id, cand_id, cosine, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
-        |  FROM scored) WHERE rank <= 5""".stripMargin,
-    // EWMA replayed per-row: the rn-prefix of the per-user value list
-    // folded left with the same (0.2*x + 0.8*acc) op order Spark's
-    // scan uses; round(4) on both sides absorbs seam-composition ulps
-    "q116_ewma_scan" ->
-      """WITH ord AS (SELECT user_id, event_id, value,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |lists AS (SELECT user_id, list(value ORDER BY rn) AS xs
-        |  FROM ord GROUP BY user_id)
-        |SELECT o.user_id, o.event_id,
-        |  round(list_reduce(list_prepend(0.0, list_slice(l.xs, 1, o.rn)),
-        |    (acc, x) -> 0.2*x + 0.8*acc), 4) AS ewma
-        |FROM ord o JOIN lists l USING (user_id)""".stripMargin,
-    // exact integer-cent running total: any summation order is exact,
-    // so the windowed sum (segment tree) equals the scan's composed
-    // carries bit-for-bit; /100.0 is one IEEE op on an exact integer
-    "q117_cumsum_scan" ->
-      """SELECT event_id,
-        |  sum(round(value * 100)) OVER (ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / 100.0 AS cum_value
-        |FROM events""".stripMargin,
-    // PQ/ADC with the iters=0 codebooks (= subspace slices of the
-    // first 16 vectors): codes by argmin(||c||^2 - 2 v_j.c) with ties
-    // to the lowest code, ADC = j-ordered left fold of the per-query
-    // distance table — identical double folds on both engines
-    "q118_pq_ann" ->
-      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |js AS (SELECT j FROM generate_series(0, 7) t(j)),
-        |cb AS (SELECT vec_id, v FROM (SELECT vec_id, v,
-        |    row_number() OVER (ORDER BY vec_id) AS rn FROM base) WHERE rn <= 16),
-        |cells AS (SELECT cb.vec_id AS code, js.j,
-        |    list_slice(cb.v, js.j*8+1, js.j*8+8) AS cv
-        |  FROM cb CROSS JOIN js),
-        |cells2 AS (SELECT code, j, cv, list_dot_product(cv, cv) AS c2 FROM cells),
-        |enc AS (SELECT b.vec_id, c.j, c.code,
-        |    c.c2 - 2*list_dot_product(list_slice(b.v, c.j*8+1, c.j*8+8), c.cv) AS d
-        |  FROM base b CROSS JOIN cells2 c),
-        |codes AS (SELECT vec_id, j, code FROM (
-        |  SELECT vec_id, j, code, row_number() OVER (
-        |    PARTITION BY vec_id, j ORDER BY d, code) AS rn FROM enc)
-        |  WHERE rn = 1),
-        |qd AS (SELECT b.vec_id AS query_id, c.j, c.code,
-        |    c.c2 - 2*list_dot_product(list_slice(b.v, c.j*8+1, c.j*8+8), c.cv) AS qdist
-        |  FROM base b CROSS JOIN cells2 c WHERE b.vec_id < 10),
-        |terms AS (SELECT qd.query_id, co.vec_id AS cand_id, qd.j, qd.qdist
-        |  FROM qd JOIN codes co ON qd.j = co.j AND qd.code = co.code
-        |  WHERE qd.query_id <> co.vec_id),
-        |adcs AS (SELECT query_id, cand_id,
-        |    list_reduce(list_prepend(0.0, list(qdist ORDER BY j)),
-        |      (a, x) -> a + x) AS adc
-        |  FROM terms GROUP BY query_id, cand_id)
-        |SELECT query_id, cand_id, adc, rank FROM (
-        |  SELECT query_id, cand_id, adc, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY adc, cand_id) AS rank FROM adcs)
-        |WHERE rank <= 5""".stripMargin,
-    // SQ8: per-dim min/max → scale chain → clamped floor codes →
-    // float-rounded dequantize → index-ordered dot folds, all
-    // re-derived from the table (255.0 carries ::DOUBLE — rule 11)
-    "q170_sq8_ann" ->
-      """WITH base AS MATERIALIZED (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |dims AS (SELECT i FROM generate_series(1, 64) t(i)),
-        |mm AS (SELECT i, min(v[i]) AS mn, max(v[i]) AS mx
-        |  FROM base CROSS JOIN dims GROUP BY i),
-        |sc AS MATERIALIZED (SELECT i, mn,
-        |    CASE WHEN mx > mn THEN (mx - mn) / 255.0::DOUBLE
-        |         ELSE 0.0::DOUBLE END AS s
-        |  FROM mm),
-        |codes AS (SELECT b.vec_id, sc.i,
-        |    CASE WHEN sc.s > 0 THEN least(255, greatest(0,
-        |        CAST(floor((b.v[sc.i] - sc.mn) / sc.s) AS INT)))
-        |      ELSE 0 END AS c
-        |  FROM base b CROSS JOIN sc),
-        |vhat AS MATERIALIZED (SELECT vec_id,
-        |    list(CAST(CAST(sc.mn + c * sc.s AS FLOAT) AS DOUBLE)
-        |      ORDER BY codes.i) AS vh
-        |  FROM codes JOIN sc USING (i) GROUP BY vec_id),
-        |scored AS (SELECT q.vec_id AS query_id, h.vec_id AS cand_id,
-        |    list_dot_product(q.v, h.vh) AS score
-        |  FROM base q JOIN vhat h ON q.vec_id <> h.vec_id
-        |  WHERE q.vec_id < 10)
-        |SELECT query_id, cand_id, score, rank FROM (
-        |  SELECT query_id, cand_id, score, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY score DESC, cand_id) AS rank
-        |  FROM scored) WHERE rank <= 5""".stripMargin,
-    // IVFADC: coarse assignment (q40's rule), float-rounded residuals,
-    // residual codebooks from the first-16 residuals, per-probed-cell
-    // distance tables, j-ordered ADC folds — all re-derived from the
-    // table, bit-exact (multi-referenced CTEs materialized, rule 11)
-    "q164_ivfpq_ann" ->
-      """WITH base AS MATERIALIZED (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |cents AS MATERIALIZED (
-        |  SELECT rn - 1 AS cell, v AS cv, list_dot_product(v, v) AS c2
-        |  FROM (SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn
-        |    FROM base) WHERE rn <= 16),
-        |dist AS MATERIALIZED (SELECT b.vec_id, c.cell,
-        |    c.c2 - 2 * list_dot_product(b.v, c.cv) AS d
-        |  FROM base b CROSS JOIN cents c),
-        |assign AS (SELECT vec_id, cell FROM (
-        |  SELECT vec_id, cell, row_number() OVER (
-        |    PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dist)
-        |  WHERE rn = 1),
-        |probes AS (SELECT vec_id, cell FROM (
-        |  SELECT vec_id, cell, row_number() OVER (
-        |    PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dist
-        |  WHERE vec_id < 10) WHERE rn <= 2),
-        |resid AS MATERIALIZED (SELECT b.vec_id, a.cell,
-        |    list_transform(generate_series(1, 64),
-        |      i -> CAST(CAST(b.v[i] - c.cv[i] AS FLOAT) AS DOUBLE)) AS rv
-        |  FROM base b JOIN assign a USING (vec_id) JOIN cents c USING (cell)),
-        |qresid AS (SELECT b.vec_id AS query_id, p.cell,
-        |    list_transform(generate_series(1, 64),
-        |      i -> CAST(CAST(b.v[i] - c.cv[i] AS FLOAT) AS DOUBLE)) AS rv
-        |  FROM base b JOIN probes p ON b.vec_id = p.vec_id
-        |  JOIN cents c ON p.cell = c.cell),
-        |js AS (SELECT j FROM generate_series(0, 7) t(j)),
-        |cbsub AS MATERIALIZED (
-        |  SELECT code, j, scv, list_dot_product(scv, scv) AS sc2 FROM (
-        |    SELECT rn - 1 AS code, js.j,
-        |      list_slice(rv, js.j*8+1, js.j*8+8) AS scv
-        |    FROM (SELECT rv, row_number() OVER (ORDER BY vec_id) AS rn
-        |      FROM resid) r CROSS JOIN js WHERE rn <= 16)),
-        |enc AS (SELECT r.vec_id, r.cell, c.j, c.code,
-        |    c.sc2 - 2*list_dot_product(
-        |      list_slice(r.rv, c.j*8+1, c.j*8+8), c.scv) AS d
-        |  FROM resid r CROSS JOIN cbsub c),
-        |codes AS (SELECT vec_id, cell, j, code FROM (
-        |  SELECT vec_id, cell, j, code, row_number() OVER (
-        |    PARTITION BY vec_id, j ORDER BY d, code) AS rn FROM enc)
-        |  WHERE rn = 1),
-        |qd AS (SELECT q.query_id, q.cell, c.j, c.code,
-        |    c.sc2 - 2*list_dot_product(
-        |      list_slice(q.rv, c.j*8+1, c.j*8+8), c.scv) AS qdist
-        |  FROM qresid q CROSS JOIN cbsub c),
-        |terms AS (SELECT qd.query_id, co.vec_id AS cand_id, qd.j, qd.qdist
-        |  FROM qd JOIN codes co ON qd.cell = co.cell AND qd.j = co.j
-        |    AND qd.code = co.code
-        |  WHERE qd.query_id <> co.vec_id),
-        |adcs AS (SELECT query_id, cand_id,
-        |    list_reduce(list_prepend(0.0, list(qdist ORDER BY j)),
-        |      (a, x) -> a + x) AS adc
-        |  FROM terms GROUP BY query_id, cand_id)
-        |SELECT query_id, cand_id, adc, rank FROM (
-        |  SELECT query_id, cand_id, adc, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY adc, cand_id) AS rank FROM adcs)
-        |WHERE rank <= 5""".stripMargin,
-    // q164's full index chain + ADC shortlist (rn <= 50 over 4 probed
-    // cells) + the q119 exact re-rank block — d2 is the same
-    // index-ordered double fold on both engines, no rounding needed
-    "q184_ivfpq_refined" ->
-      """WITH base AS MATERIALIZED (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |cents AS MATERIALIZED (
-        |  SELECT rn - 1 AS cell, v AS cv, list_dot_product(v, v) AS c2
-        |  FROM (SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn
-        |    FROM base) WHERE rn <= 16),
-        |dist AS MATERIALIZED (SELECT b.vec_id, c.cell,
-        |    c.c2 - 2 * list_dot_product(b.v, c.cv) AS d
-        |  FROM base b CROSS JOIN cents c),
-        |assign AS (SELECT vec_id, cell FROM (
-        |  SELECT vec_id, cell, row_number() OVER (
-        |    PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dist)
-        |  WHERE rn = 1),
-        |probes AS (SELECT vec_id, cell FROM (
-        |  SELECT vec_id, cell, row_number() OVER (
-        |    PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dist
-        |  WHERE vec_id < 10) WHERE rn <= 4),
-        |resid AS MATERIALIZED (SELECT b.vec_id, a.cell,
-        |    list_transform(generate_series(1, 64),
-        |      i -> CAST(CAST(b.v[i] - c.cv[i] AS FLOAT) AS DOUBLE)) AS rv
-        |  FROM base b JOIN assign a USING (vec_id) JOIN cents c USING (cell)),
-        |qresid AS (SELECT b.vec_id AS query_id, p.cell,
-        |    list_transform(generate_series(1, 64),
-        |      i -> CAST(CAST(b.v[i] - c.cv[i] AS FLOAT) AS DOUBLE)) AS rv
-        |  FROM base b JOIN probes p ON b.vec_id = p.vec_id
-        |  JOIN cents c ON p.cell = c.cell),
-        |js AS (SELECT j FROM generate_series(0, 7) t(j)),
-        |cbsub AS MATERIALIZED (
-        |  SELECT code, j, scv, list_dot_product(scv, scv) AS sc2 FROM (
-        |    SELECT rn - 1 AS code, js.j,
-        |      list_slice(rv, js.j*8+1, js.j*8+8) AS scv
-        |    FROM (SELECT rv, row_number() OVER (ORDER BY vec_id) AS rn
-        |      FROM resid) r CROSS JOIN js WHERE rn <= 16)),
-        |enc AS (SELECT r.vec_id, r.cell, c.j, c.code,
-        |    c.sc2 - 2*list_dot_product(
-        |      list_slice(r.rv, c.j*8+1, c.j*8+8), c.scv) AS d
-        |  FROM resid r CROSS JOIN cbsub c),
-        |codes AS (SELECT vec_id, cell, j, code FROM (
-        |  SELECT vec_id, cell, j, code, row_number() OVER (
-        |    PARTITION BY vec_id, j ORDER BY d, code) AS rn FROM enc)
-        |  WHERE rn = 1),
-        |qd AS (SELECT q.query_id, q.cell, c.j, c.code,
-        |    c.sc2 - 2*list_dot_product(
-        |      list_slice(q.rv, c.j*8+1, c.j*8+8), c.scv) AS qdist
-        |  FROM qresid q CROSS JOIN cbsub c),
-        |terms AS (SELECT qd.query_id, co.vec_id AS cand_id, qd.j, qd.qdist
-        |  FROM qd JOIN codes co ON qd.cell = co.cell AND qd.j = co.j
-        |    AND qd.code = co.code
-        |  WHERE qd.query_id <> co.vec_id),
-        |adcs AS (SELECT query_id, cand_id,
-        |    list_reduce(list_prepend(0.0, list(qdist ORDER BY j)),
-        |      (a, x) -> a + x) AS adc
-        |  FROM terms GROUP BY query_id, cand_id),
-        |short AS (SELECT query_id, cand_id FROM (
-        |  SELECT query_id, cand_id, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY adc, cand_id) AS rn FROM adcs)
-        |  WHERE rn <= 50),
-        |rerank AS (SELECT s.query_id, s.cand_id,
-        |    list_dot_product(cb.v, cb.v)
-        |      - 2*list_dot_product(qb.v, cb.v) AS d2
-        |  FROM short s
-        |  JOIN base cb ON s.cand_id = cb.vec_id
-        |  JOIN base qb ON s.query_id = qb.vec_id)
-        |SELECT query_id, cand_id, d2, rank FROM (
-        |  SELECT query_id, cand_id, d2, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY d2, cand_id) AS rank FROM rerank)
-        |WHERE rank <= 5""".stripMargin,
-    "q123_bpe_train" -> bpeSql(60),
-    "q124_bpe_encode" -> bpeEncodeSql(60),
-    // DDSketch replay without the histogram: the sketch's rank-r
-    // answer is the bucket representative of the r-th order statistic
-    // (first bucket with cumulative count >= r in value order), and
-    // bucketing is pure <= comparisons against the shared
-    // Scala-generated boundary literals — no cross-engine log() ulps
-    "q130_ddsketch_quantiles" -> ddSketchSql(Seq(0.5, 0.9, 0.99)),
-    // the streaming state-store replay equals the batch sketch —
-    // bucket addition is order-free, so q130's SQL is the oracle
-    "q165_stream_ddsketch" -> ddSketchSql(Seq(0.5, 0.9, 0.99)),
-    // stored-state rollup: exact count addition over persisted
-    // histograms == sketching raw data — q130's SQL verbatim
-    "q179_ddsketch_rollup" -> ddSketchSql(Seq(0.5, 0.9, 0.99)),
-    // matrix addition over stored per-bucket matrices == the direct
-    // sketch — q132's SQL verbatim
-    "q180_countmin_rollup" -> countMinSql,
-    // the heap aggregate equals the window formulation exactly —
-    // same DESC/DESC total order (q182: the heap lives in streaming
-    // state; its replayed snapshot answers the same SQL)
-    "q182_stream_leaderboard" -> groupTopKSql,
-    "q174_group_topk" -> groupTopKSql,
-    // commutative folds over 60-bit row hashes of canonical integers
-    // — the DuckDB run IS the "other replica" whose digests must match
-    "q175_stream_fingerprint" -> fingerprintSql,
-    "q173_fingerprint" -> fingerprintSql,
-    // exact bin counts + add-one shares; ln's ≤1-ulp engine skew is
-    // absorbed by rounding the summed PSI (rule 9)
-    "q172_psi_drift" ->
-      """WITH a AS (SELECT event_type AS grp, least(9, greatest(0,
-        |    CAST(floor(value / 60.0::DOUBLE) AS INT))) AS bin
-        |  FROM events WHERE ts < TIMESTAMP '2024-01-15 00:00:00'
-        |    AND value IS NOT NULL),
-        |b AS (SELECT event_type AS grp, least(9, greatest(0,
-        |    CAST(floor(value / 60.0::DOUBLE) AS INT))) AS bin
-        |  FROM events WHERE ts >= TIMESTAMP '2024-01-15 00:00:00'
-        |    AND value IS NOT NULL),
-        |ca AS (SELECT grp, bin, count(*)::BIGINT AS cnt_a FROM a GROUP BY 1, 2),
-        |cb AS (SELECT grp, bin, count(*)::BIGINT AS cnt_b FROM b GROUP BY 1, 2),
-        |grps AS (SELECT DISTINCT grp FROM (
-        |  SELECT grp FROM ca UNION ALL SELECT grp FROM cb)),
-        |grid AS (SELECT grp, unnest(generate_series(0, 9)) AS bin FROM grps),
-        |j AS MATERIALIZED (SELECT g.grp, g.bin,
-        |    coalesce(ca.cnt_a, 0) AS cnt_a, coalesce(cb.cnt_b, 0) AS cnt_b
-        |  FROM grid g LEFT JOIN ca USING (grp, bin)
-        |  LEFT JOIN cb USING (grp, bin)),
-        |tot AS (SELECT grp, sum(cnt_a)::BIGINT AS n_a,
-        |    sum(cnt_b)::BIGINT AS n_b FROM j GROUP BY grp)
-        |SELECT j.grp AS event_type,
-        |  round(sum(((cnt_a + 1)::DOUBLE / (n_a + 10)::DOUBLE
-        |      - (cnt_b + 1)::DOUBLE / (n_b + 10)::DOUBLE)
-        |    * ln(((cnt_a + 1)::DOUBLE / (n_a + 10)::DOUBLE)
-        |      / ((cnt_b + 1)::DOUBLE / (n_b + 10)::DOUBLE))), 6) AS psi,
-        |  tot.n_a, tot.n_b
-        |FROM j JOIN tot USING (grp) GROUP BY 1, 3, 4""".stripMargin,
-    // same Scala-generated bit-interleave text on both engines; ntile
-    // over the exact (z, event_id) order; all-integer zone maps
-    "q169_zorder_layout" ->
-      s"""WITH e AS (SELECT event_id, user_id,
-         |    CAST(floor(value * 100.0) AS BIGINT) AS vq FROM events),
-         |z AS (SELECT event_id, user_id, vq,
-         |    ${graft.operators.ZOrder.zValueSqlExpr("user_id", "vq", 16)} AS z
-         |  FROM e),
-         |b AS (SELECT user_id, vq,
-         |    ntile(16) OVER (ORDER BY z, event_id) AS bucket FROM z)
-         |SELECT bucket::BIGINT AS bucket, count(*)::BIGINT AS n_rows,
-         |  min(user_id) AS min_a, max(user_id) AS max_a,
-         |  min(vq) AS min_b, max(vq) AS max_b
-         |FROM b GROUP BY bucket""".stripMargin,
-    // zone-map pruning is sound (rectangles are true bounds), so the
-    // pruned scan + residual filter returns EXACTLY the box rows
-    "q183_zorder_skipping" ->
-      """SELECT event_id,
-        |  (extract(hour FROM ts) * 60 + extract(minute FROM ts))::BIGINT
-        |    AS mofd,
-        |  CAST(floor(value * 100.0::DOUBLE) AS BIGINT) AS vq
-        |FROM events
-        |WHERE (extract(hour FROM ts) * 60 + extract(minute FROM ts))
-        |    BETWEEN 0 AND 719
-        |  AND CAST(floor(value * 100.0::DOUBLE) AS BIGINT)
-        |    BETWEEN 5000 AND 8000""".stripMargin,
-    // √n weights quantized to integers (×1000) → exact largest-
-    // remainder apportionment; same md5-deal draw as q168
-    "q178_temperature_mix" ->
-      """WITH d AS MATERIALIZED (SELECT doc_id AS id, lang AS stratum,
-        |    md5(doc_id::VARCHAR) AS h FROM documents),
-        |rk AS (SELECT id, stratum, row_number() OVER (
-        |    PARTITION BY stratum ORDER BY h, id) AS rn FROM d),
-        |cnt AS (SELECT stratum, count(*)::BIGINT AS n FROM d
-        |  GROUP BY stratum),
-        |wt AS (SELECT stratum,
-        |    CAST(floor(sqrt(n::DOUBLE) * 1000.0::DOUBLE) AS BIGINT) AS w
-        |  FROM cnt),
-        |quo AS MATERIALIZED (SELECT stratum,
-        |    (200 * w) // sum(w) OVER () AS fl,
-        |    (200 * w) % sum(w) OVER () AS rem FROM wt),
-        |alloc AS (SELECT stratum,
-        |    fl + CASE WHEN row_number() OVER (ORDER BY rem DESC, stratum)
-        |      <= 200 - sum(fl) OVER () THEN 1 ELSE 0 END AS quota
-        |  FROM quo)
-        |SELECT r.id AS doc_id, r.stratum AS lang FROM rk r
-        |JOIN alloc a USING (stratum) WHERE r.rn <= a.quota""".stripMargin,
-    // largest-remainder allocation + md5-deal prefix draw, all
-    // integer arithmetic (HUGEINT-safe: only comparisons and
-    // divisions, nothing emitted)
-    "q168_stratified_sample" -> stratifiedSampleSql,
-    // the replayed heaps hold exactly the batch md5-rank prefixes
-    // (k-smallest-of-union), and the horizon re-apportionment is the
-    // same exact integer arithmetic — q168's SQL verbatim
-    "q186_stream_stratified" -> stratifiedSampleSql,
-    // exact output: the MG pass only prunes candidates, so the oracle
-    // is the definition itself — strict integer threshold, no floats
-    "q166_heavy_hitters" ->
-      s"""WITH toks AS ($toksCte),
-         |occ AS MATERIALIZED (SELECT unnest(t) AS tok FROM toks),
-         |tot AS (SELECT count(*)::BIGINT AS n FROM occ)
-         |SELECT tok AS token, count(*)::BIGINT AS cnt
-         |FROM occ CROSS JOIN tot
-         |GROUP BY tok, tot.n HAVING count(*) * 200 > tot.n""".stripMargin,
-    // collapse-mode sketch: the eval-only collapse is a pure function
-    // of the multiset, so the oracle replays it bucket-for-bucket and
-    // probes ALL quantiles (incl. p50 below the cut)
-    "q144_ddsketch_collapsed" -> ddSketchCollapsedSql(Seq(0.5, 0.9, 0.99), 24),
-    // WordPiece: DuckDB re-trains the frequency vocab (substring
-    // explode via generate_series over the word histogram) and
-    // re-encodes with the same greedy longest-match as a recursive
-    // CTE. vlists MATERIALIZED: the recursive term would otherwise
-    // re-run the whole vocab pipeline every iteration (rule-11 class)
-    "q145_wordpiece" ->
-      """WITH RECURSIVE words AS MATERIALIZED (
-        |  SELECT w, count(*) AS freq FROM (
-        |    SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
-        |    FROM documents) WHERE len(w) > 0 GROUP BY w),
-        |subs AS (
-        |  SELECT substr(w, pos, l) AS p,
-        |    CASE WHEN pos = 1 THEN 'init' ELSE 'cont' END AS kind,
-        |    sum(freq) AS cnt
-        |  FROM words
-        |  CROSS JOIN generate_series(1, 5) ls(l)
-        |  -- position grid bound derived from the histogram itself (a
-        |  -- fixed literal would silently drop pieces of any word
-        |  -- longer than it on a future testdata round)
-        |  CROSS JOIN (SELECT unnest(generate_series(1,
-        |    (SELECT max(len(w)) FROM words))) AS pos) ps
-        |  WHERE len(w) >= l AND pos <= len(w) - l + 1
-        |  GROUP BY 1, 2),
-        |ranked AS (
-        |  SELECT p, kind,
-        |    row_number() OVER (PARTITION BY kind ORDER BY cnt DESC, p) AS rk
-        |  FROM subs),
-        |vlists AS MATERIALIZED (
-        |  SELECT list(p) FILTER (WHERE kind = 'init') AS iv,
-        |    list(p) FILTER (WHERE kind = 'cont') AS cv
-        |  FROM ranked WHERE rk <= 160 OR len(p) = 1),
-        |enc AS (
-        |  SELECT w, freq, 1 AS pos, CAST(NULL AS VARCHAR) AS token FROM words
-        |  UNION ALL
-        |  SELECT w, freq, pos + len(best),
-        |    CASE WHEN pos = 1 THEN best ELSE '##' || best END AS token
-        |  FROM (
-        |    SELECT e.w, e.freq, e.pos,
-        |      list_reduce(
-        |        list_filter(CASE WHEN e.pos = 1 THEN v.iv ELSE v.cv END,
-        |          x -> x = substr(e.w, e.pos, len(x))),
-        |        (a, x) -> CASE WHEN len(x) > len(a) THEN x ELSE a END) AS best
-        |    FROM enc e CROSS JOIN vlists v
-        |    WHERE e.pos <= len(e.w)))
-        |SELECT token, CAST(sum(freq) AS BIGINT) AS cnt
-        |FROM enc WHERE token IS NOT NULL GROUP BY token""".stripMargin,
-    // ASOF with a staleness bound: the CASE guards null out matches
-    // older than 1 h on the SAME matched row (exact micros compare)
-    "q129_asof_tolerance" ->
-      """WITH c AS (SELECT user_id, ts, max_by(value, event_id) AS value
-        |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts)
-        |SELECT p.event_id, p.user_id, p.ts, p.value,
-        |  CASE WHEN c.ts >= p.ts - INTERVAL 1 HOUR THEN c.ts END AS last_click_ts,
-        |  CASE WHEN c.ts >= p.ts - INTERVAL 1 HOUR THEN c.value END AS last_click_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin,
-    // ordered min-timestamp funnel — exact timestamps, no rounding
-    "q126_funnel" ->
-      """WITH v AS (SELECT user_id, min(ts) AS v_ts FROM events
-        |  WHERE event_type = 'view' GROUP BY user_id),
-        |c AS (SELECT e.user_id, v.v_ts, min(e.ts) AS c_ts
-        |  FROM events e JOIN v ON e.user_id = v.user_id
-        |  WHERE e.event_type = 'click' AND e.ts > v.v_ts
-        |  GROUP BY e.user_id, v.v_ts),
-        |p AS (SELECT e.user_id, c.v_ts, c.c_ts, min(e.ts) AS p_ts
-        |  FROM events e JOIN c ON e.user_id = c.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts > c.c_ts
-        |  GROUP BY e.user_id, c.v_ts, c.c_ts)
-        |SELECT v.user_id, v.v_ts, c.c_ts, p.p_ts
-        |FROM v LEFT JOIN c ON v.user_id = c.user_id
-        |LEFT JOIN p ON v.user_id = p.user_id""".stripMargin,
-    // ISO-week cohorts (both engines truncate to Monday); k and the
-    // distinct-user counts are exact integers
-    "q127_cohort" ->
-      """WITH weeks AS (SELECT DISTINCT user_id,
-        |    CAST(date_trunc('week', ts) AS DATE) AS wk FROM events),
-        |cohort AS (SELECT user_id, min(wk) AS cohort_week
-        |  FROM weeks GROUP BY user_id)
-        |SELECT c.cohort_week, CAST((w.wk - c.cohort_week) / 7 AS BIGINT) AS k,
-        |  count(DISTINCT w.user_id) AS n_users
-        |FROM weeks w JOIN cohort c ON w.user_id = c.user_id
-        |GROUP BY c.cohort_week, k""".stripMargin,
-    // add-1-smoothed bigram LM: every term an exact integer, one
-    // BIGINT/BIGINT division per row
-    "q128_bigram_lm" ->
-      """WITH toks AS (SELECT list_filter(
-        |    string_split_regex(lower(text), '[^a-z]+'),
-        |    w -> length(w) > 0) AS ws FROM documents),
-        |pairs AS (SELECT pr[1] AS w1, pr[2] AS w2,
-        |    CAST(count(*) AS BIGINT) AS c2
-        |  FROM (SELECT unnest(list_transform(
-        |      generate_series(1, len(ws) - 1), j -> [ws[j], ws[j + 1]])) AS pr
-        |    FROM toks WHERE len(ws) >= 2) t
-        |  GROUP BY 1, 2),
-        |uni AS (SELECT w1, CAST(sum(c2) AS BIGINT) AS c1
-        |  FROM pairs GROUP BY w1),
-        |vocab AS (SELECT count(DISTINCT w) AS v FROM (
-        |  SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
-        |  FROM documents) t WHERE length(w) > 0)
-        |SELECT p.w1, p.w2, p.c2,
-        |  (p.c2 + 1) / (u.c1 + (SELECT v FROM vocab)) AS p_smooth
-        |FROM pairs p JOIN uni u USING (w1)""".stripMargin,
-    // streaming as-of replayed to completion == the batch ASOF join
-    // (time-split batches keep refs never-late; ref side pre-deduped
-    // per (user, ts) identically on both engines)
-    "q125_stream_asof" ->
-      """WITH c AS (SELECT user_id, ts, max_by(value, event_id) AS value
-        |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts)
-        |SELECT CAST(p.user_id AS VARCHAR) AS key, p.ts, p.value,
-        |  c.ts AS ref_ts, c.value AS ref_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin,
-    // exact dyadic-position median over integer cents (n <= 25 ->
-    // type-7 interpolation lands on .0/.5 exactly on both engines)
-    "q120_rolling_median" ->
-      """SELECT user_id, event_id,
-        |  quantile_cont(round(value * 100), 0.5) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN 24 PRECEDING AND CURRENT ROW) / 100.0 AS med
-        |FROM events""".stripMargin,
-    // clip bounds as k-th order statistics (k = ceil(p*n), identical
-    // double product + ceil on both engines) — no engine-internal
-    // percentile interpolation anywhere; integer sums, one division
-    "q121_winsorize" ->
-      """WITH ev AS (SELECT event_type, event_id,
-        |    CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-        |ranked AS (SELECT event_type, cents,
-        |    row_number() OVER (PARTITION BY event_type
-        |      ORDER BY cents, event_id) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM ev),
-        |bounds AS (SELECT event_type,
-        |    max(CASE WHEN rn = CAST(ceil(0.05 * n) AS BIGINT)
-        |      THEN cents END) AS lo_cents,
-        |    max(CASE WHEN rn = CAST(ceil(0.95 * n) AS BIGINT)
-        |      THEN cents END) AS hi_cents
-        |  FROM ranked GROUP BY event_type)
-        |SELECT e.event_type,
-        |  max(b.lo_cents) / 100.0 AS lo,
-        |  max(b.hi_cents) / 100.0 AS hi,
-        |  CAST(sum(greatest(b.lo_cents, least(b.hi_cents, e.cents)))
-        |    AS BIGINT) / count(*) / 100.0 AS wmean,
-        |  count(*) AS n
-        |FROM ev e JOIN bounds b USING (event_type)
-        |GROUP BY e.event_type""".stripMargin,
-    // market-basket co-occurrence over (user, day) baskets — exact
-    // counts; support = one BIGINT/BIGINT division on both engines
-    "q122_cooccurrence" ->
-      """WITH baskets AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day,
-        |    event_type FROM events),
-        |tot AS (SELECT count(*) AS n_total FROM
-        |  (SELECT DISTINCT user_id, day FROM baskets)),
-        |pairs AS (SELECT a.event_type AS type_a, b.event_type AS type_b
-        |  FROM baskets a JOIN baskets b USING (user_id, day)
-        |  WHERE a.event_type < b.event_type)
-        |SELECT type_a, type_b, count(*) AS n_baskets,
-        |  count(*) / (SELECT n_total FROM tot) AS support
-        |FROM pairs GROUP BY type_a, type_b""".stripMargin,
-    // refined PQ: ADC shortlist (rank <= 50) then exact
-    // ||c||^2 - 2 q.c re-rank — every fold index-ordered on both
-    // engines, so no rounding anywhere
-    "q119_pq_refined" ->
-      """WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |js AS (SELECT j FROM generate_series(0, 7) t(j)),
-        |cb AS (SELECT vec_id, v FROM (SELECT vec_id, v,
-        |    row_number() OVER (ORDER BY vec_id) AS rn FROM base) WHERE rn <= 16),
-        |cells AS (SELECT cb.vec_id AS code, js.j,
-        |    list_slice(cb.v, js.j*8+1, js.j*8+8) AS cv
-        |  FROM cb CROSS JOIN js),
-        |cells2 AS (SELECT code, j, cv, list_dot_product(cv, cv) AS c2 FROM cells),
-        |enc AS (SELECT b.vec_id, c.j, c.code,
-        |    c.c2 - 2*list_dot_product(list_slice(b.v, c.j*8+1, c.j*8+8), c.cv) AS d
-        |  FROM base b CROSS JOIN cells2 c),
-        |codes AS (SELECT vec_id, j, code FROM (
-        |  SELECT vec_id, j, code, row_number() OVER (
-        |    PARTITION BY vec_id, j ORDER BY d, code) AS rn FROM enc)
-        |  WHERE rn = 1),
-        |qd AS (SELECT b.vec_id AS query_id, c.j, c.code,
-        |    c.c2 - 2*list_dot_product(list_slice(b.v, c.j*8+1, c.j*8+8), c.cv) AS qdist
-        |  FROM base b CROSS JOIN cells2 c WHERE b.vec_id < 10),
-        |terms AS (SELECT qd.query_id, co.vec_id AS cand_id, qd.j, qd.qdist
-        |  FROM qd JOIN codes co ON qd.j = co.j AND qd.code = co.code
-        |  WHERE qd.query_id <> co.vec_id),
-        |adcs AS (SELECT query_id, cand_id,
-        |    list_reduce(list_prepend(0.0, list(qdist ORDER BY j)),
-        |      (a, x) -> a + x) AS adc
-        |  FROM terms GROUP BY query_id, cand_id),
-        |short AS (SELECT query_id, cand_id FROM (
-        |  SELECT query_id, cand_id, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY adc, cand_id) AS rn FROM adcs)
-        |  WHERE rn <= 50),
-        |rerank AS (SELECT s.query_id, s.cand_id,
-        |    list_dot_product(cb.v, cb.v)
-        |      - 2*list_dot_product(qb.v, cb.v) AS d2
-        |  FROM short s
-        |  JOIN base cb ON s.cand_id = cb.vec_id
-        |  JOIN base qb ON s.query_id = qb.vec_id)
-        |SELECT query_id, cand_id, d2, rank FROM (
-        |  SELECT query_id, cand_id, d2, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY d2, cand_id) AS rank FROM rerank)
-        |WHERE rank <= 5""".stripMargin,
-    "q43_exact_dedup" ->
-      """SELECT md5(lower(text)) AS text_hash, count(*) AS n_copies,
-        |  min(doc_id) AS keeper_id
-        |FROM documents GROUP BY md5(lower(text))""".stripMargin,
-    "q44_embed_near_dup" -> embedNearDupSql,
-    // q115 is the STREAMING embed screen replayed to completion: one
-    // bucket per vector -> one emission per pair == the batch answer.
-    "q115_stream_embed" -> embedNearDupSql,
-    "q75_embed_screen" ->
-      s"""SELECT * FROM ($embedNearDupSql)
-         |WHERE id_a < 400 AND id_b >= 400""".stripMargin,
-    "q45_stats_agg" ->
-      """SELECT l_returnflag, round(corr(l_quantity, l_extendedprice), 9) AS qty_price_corr,
-        |  round(covar_samp(l_quantity, l_extendedprice), 6) AS qty_price_covar,
-        |  round(stddev_samp(l_quantity), 9) AS qty_sd,
-        |  round(var_samp(l_extendedprice), 2) AS price_var, count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    "q46_pivot" ->
-      """SELECT user_id,
-        |  count(*) FILTER (WHERE event_type = 'click') AS click,
-        |  count(*) FILTER (WHERE event_type = 'error') AS error,
-        |  count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-        |  count(*) FILTER (WHERE event_type = 'signup') AS signup,
-        |  count(*) FILTER (WHERE event_type = 'view') AS view
-        |FROM events GROUP BY user_id""".stripMargin,
-    "q47_outer_join" ->
-      """SELECT coalesce(c_custkey, o_custkey) AS custkey, c_name,
-        |  o_orderkey, o_totalprice
-        |FROM (SELECT c_custkey, c_name FROM customer WHERE c_nationkey = 3) c
-        |FULL JOIN (SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |  WHERE o_totalprice > 350000.0) o
-        |ON c_custkey = o_custkey""".stripMargin,
-    "q48_window_family" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice,
-        |  lag(o_totalprice) OVER w AS prev_price,
-        |  lead(o_totalprice) OVER w AS next_price,
-        |  CAST(dense_rank() OVER w AS BIGINT) AS drank,
-        |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-        |  percent_rank() OVER w AS prank,
-        |  cume_dist() OVER w AS cdist
-        |FROM orders WHERE o_custkey < 300
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)""".stripMargin,
-    "q49_salted_join" ->
-      """WITH dim AS (SELECT event_type,
-        |    CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-        |      / 100.0 / count(*) AS type_avg
-        |  FROM events GROUP BY event_type)
-        |SELECT event_id, e.event_type, value, type_avg,
-        |  value - type_avg AS delta
-        |FROM events e JOIN dim USING (event_type)
-        |WHERE user_id < 50""".stripMargin,
-    "q50_time_buckets" ->
-      """SELECT time_bucket(INTERVAL '6 hours', ts) AS w_start,
-        |  time_bucket(INTERVAL '6 hours', ts) + INTERVAL '6 hours' AS w_end,
-        |  event_type, count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 / count(*) AS avg_value
-        |FROM events GROUP BY 1, 2, 3""".stripMargin,
-    "q51_string_funcs" ->
-      """SELECT doc_id,
-        |  CAST(levenshtein(lower(substr(text, 1, 12)), 'data pipeline') AS BIGINT) AS lev,
-        |  translate(lower(substr(text, 1, 20)), 'aeiou', 'AEIOU') AS tr,
-        |  reverse(substr(text, 1, 10)) AS rev,
-        |  lpad(lang, 5, '_') AS padded
-        |FROM documents""".stripMargin,
-    "q52_scalar_subquery" ->
-      """SELECT c_custkey,
-        |  (SELECT count(*) FROM orders WHERE o_custkey = c_custkey) AS n_orders,
-        |  round((SELECT coalesce(sum(o_totalprice), 0.0) FROM orders
-        |     WHERE o_custkey = c_custkey), 2) AS spend
-        |FROM customer WHERE c_custkey < 200""".stripMargin,
-    "q53_distinct_agg" ->
-      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
-        |  count(DISTINCT l_suppkey) AS n_supps,
-        |  sum(DISTINCT l_quantity) AS qty_distinct_sum, count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-    // Rabin-Karp min rolling hash replicated with HUGEINT Horner
-    // reduction — same B=257, M=2^61-1, byte==codepoint (corpus is
-    // ASCII; RollingHashMin hashes UTF-8 bytes)
-    "q42_rolling_fingerprint" ->
-      """WITH docs AS (SELECT doc_id, text, length(text) AS n,
-        |    least(16, length(text)) AS kk FROM documents),
-        |w AS (SELECT doc_id, text, kk,
-        |    unnest(generate_series(1, n - kk + 1)) AS i
-        |  FROM docs WHERE n > 0),
-        |h AS (SELECT doc_id, list_reduce(
-        |    list_prepend(0::HUGEINT, list_transform(
-        |      generate_series(i, i + kk - 1),
-        |      j -> ord(substr(text, j, 1))::HUGEINT)),
-        |    (acc, c) -> (acc * 257 + c) % 2305843009213693951) AS hv
-        |  FROM w)
-        |SELECT doc_id, CAST(min(hv) AS BIGINT) AS fp FROM h GROUP BY doc_id
-        |UNION ALL SELECT doc_id, 0 AS fp FROM docs WHERE n = 0""".stripMargin,
-    "q54_simhash_pairs" -> simhashPairsSql,
-    "q63_simhash64_pairs" -> simhash64PairsSql,
-    // q113 is the STREAMING screen replayed to completion: canonical
-    // pairs + per-band dropDuplicates == the batch banded self-join,
-    // so q63's SQL verbatim gates stream-batch parity via DuckDB.
-    "q113_stream_neardup" -> simhash64PairsSql,
-    "q66_minhash_estimate" -> minhashEstimateSql,
-    // q114 is the STREAMING minhash screen replayed to completion:
-    // canonical pairs + dropDuplicates == the batch Broder estimator.
-    "q114_stream_minhash" -> minhashEstimateSql,
-    "q73_minhash_screen" ->
-      // the symmetric estimator restricted to cross pairs at the id
-      // boundary — exactly the screen's candidate set (see the query)
-      s"""SELECT * FROM ($minhashEstimateSql)
-         |WHERE doc_a < 400 AND doc_b >= 400""".stripMargin,
-    "q68_partition_prune" ->
-      // Twin over the hive-partitioned scratch layout the Spark query
-      // just wrote (read_parquet hive_partitioning re-derives the
-      // partition columns from the directory names, as VARCHAR — the
-      // 'd' prefix keeps Spark's read-back typing identical).
-      s"""SELECT day, count(*)::BIGINT AS n,
-         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents,
-         |  min(event_id) AS min_event
-         |FROM read_parquet('${Tables.scratchPartitionedPath}/*/*/*.parquet',
-         |                  hive_partitioning = 1)
-         |WHERE event_type = 'click' AND day >= 'd20240108' AND day <= 'd20240121'
-         |GROUP BY day""".stripMargin,
-    "q69_bucketed_join" ->
-      // Twin over the bucketed scratch layout the Spark query just
-      // wrote — bucket files are ordinary parquet; the co-location is
-      // invisible to DuckDB, which re-joins the same bytes.
-      s"""SELECT o_orderkey, o_orderstatus, count(*)::BIGINT AS n_items,
-         |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000, 0) AS BIGINT))
-         |       AS BIGINT) AS revenue
-         |FROM read_parquet('${Tables.scratchBucketedBase}/li/*.parquet') l
-         |JOIN read_parquet('${Tables.scratchBucketedBase}/ord/*.parquet') o
-         |  ON l.l_orderkey = o.o_orderkey
-         |GROUP BY o_orderkey, o_orderstatus""".stripMargin,
-    "q70_session_window" -> sessionSql,
-    // every session closes before the sentinel-driven final watermark,
-    // so the append-mode replay emits exactly the batch sessions —
-    // q70's lag/cumsum SQL verbatim
-    "q143_stream_sessions" -> sessionSql,
-    "q78_stratified_sample" ->
-      // mixture membership re-derived from the q71 md5 arithmetic:
-      // keep iff bucket(event_id, ':mix1') < the stratum's percent
-      """SELECT event_id, event_type, user_id FROM events
-        |WHERE ('0x' || substr(md5(event_id::VARCHAR || ':mix1'), 1, 8))::BIGINT % 100 <
-        |  CASE event_type WHEN 'click' THEN 50 WHEN 'view' THEN 10
-        |       WHEN 'purchase' THEN 100 WHEN 'error' THEN 25 ELSE 0 END""".stripMargin,
-    "q79_sequence_pack" ->
-      // spans re-derived with the same shard deal (md5 mod 8), the
-      // same doc-id-ordered exclusive running sum, and BIGINT floor
-      // division (both sides non-negative, so Spark's div == //)
-      s"""WITH toks AS ($toksCte),
-         |d AS (SELECT doc_id, len(t)::BIGINT AS n_tokens,
-         |    ('0x' || substr(md5(doc_id::VARCHAR || ':p1'), 1, 8))::BIGINT % 8 AS shard
-         |  FROM toks WHERE len(t) > 0),
-         |c AS (SELECT doc_id, n_tokens, shard,
-         |    COALESCE(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS tok_start
-         |  FROM d)
-         |SELECT doc_id, n_tokens, shard, tok_start,
-         |  tok_start // 512 AS first_bin,
-         |  (tok_start + n_tokens - 1) // 512 AS last_bin
-         |FROM c""".stripMargin,
-    "q92_pack_bins" ->
-      // q79's span CTE + generate_series over first_bin..last_bin;
-      // slice bounds by integer max/min against the bin walls
-      s"""WITH toks AS ($toksCte),
-         |d AS (SELECT doc_id, len(t)::BIGINT AS n_tokens,
-         |    ('0x' || substr(md5(doc_id::VARCHAR || ':p1'), 1, 8))::BIGINT % 8 AS shard
-         |  FROM toks WHERE len(t) > 0),
-         |c AS (SELECT doc_id, n_tokens, shard,
-         |    COALESCE(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS tok_start
-         |  FROM d),
-         |b AS (SELECT doc_id, n_tokens, shard, tok_start,
-         |    unnest(generate_series(tok_start // 512,
-         |      (tok_start + n_tokens - 1) // 512)) AS bin_id
-         |  FROM c),
-         |sl AS (SELECT shard, bin_id, doc_id,
-         |    greatest(bin_id * 512, tok_start) AS s,
-         |    least((bin_id + 1) * 512, tok_start + n_tokens) AS e,
-         |    tok_start
-         |  FROM b)
-         |SELECT shard, bin_id, doc_id,
-         |  (s - bin_id * 512)::BIGINT AS bin_off,
-         |  (s - tok_start)::BIGINT AS doc_off,
-         |  (e - s)::BIGINT AS len
-         |FROM sl""".stripMargin,
-    "q98_pii_scrub" ->
-      // same dirtying, same mask chain with the shared regex constants
-      s"""WITH d AS (
-         |  SELECT doc_id, text ||
-         |    CASE WHEN doc_id % 7 = 0
-         |         THEN '  Contact USER' || doc_id::VARCHAR || '@Example.COM now'
-         |         ELSE '' END ||
-         |    CASE WHEN doc_id % 5 = 0
-         |         THEN ' call (555) 123-' || lpad((doc_id % 10000)::VARCHAR, 4, '0')
-         |         ELSE '' END ||
-         |    CASE WHEN doc_id % 9 = 0
-         |         THEN ' from 10.0.' || (doc_id % 256)::VARCHAR || '.'
-         |           || ((doc_id * 7) % 256)::VARCHAR || ' today'
-         |         ELSE '' END AS raw
-         |  FROM documents),
-         |n AS (SELECT doc_id, lower(nfc_normalize(raw)) AS t FROM d)
-         |SELECT doc_id,
-         |  trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(t,
-         |    '${TextFunctions.EmailRe}', '<email>', 'g'),
-         |    '${TextFunctions.UrlRe}', '<url>', 'g'),
-         |    '${TextFunctions.PhoneRe}', '<phone>', 'g'),
-         |    '${TextFunctions.Ipv4Re}', '<ip>', 'g'),
-         |    '\\s+', ' ', 'g')) AS clean,
-         |  len(regexp_extract_all(t, '${TextFunctions.PhoneRe}'))::BIGINT AS n_phones,
-         |  len(regexp_extract_all(t, '${TextFunctions.Ipv4Re}'))::BIGINT AS n_ips
-         |FROM n""".stripMargin,
-    "q97_domain_cap" ->
-      // same injected URLs, same host regex, same md5-order cap rank
-      """WITH d AS (
-        |  SELECT doc_id, text ||
-        |    CASE WHEN doc_id % 3 = 0
-        |         THEN ' see https://h' || (doc_id % 10)::VARCHAR
-        |           || '.example.com/p?id=' || doc_id::VARCHAR
-        |         ELSE '' END AS t
-        |  FROM documents),
-        |h AS (SELECT doc_id,
-        |    regexp_extract(t, 'https?://([a-z0-9.-]+)', 1) AS domain
-        |  FROM d),
-        |r AS (SELECT doc_id, domain,
-        |    count(*) OVER (PARTITION BY domain) AS n_domain_docs,
-        |    row_number() OVER (PARTITION BY domain
-        |      ORDER BY md5(doc_id::VARCHAR), doc_id) AS rk
-        |  FROM h WHERE domain <> '')
-        |SELECT doc_id, domain, n_domain_docs::BIGINT AS n_domain_docs,
-        |  rk <= 12 AS kept
-        |FROM r""".stripMargin,
-    "q96_near_dup_clusters" -> componentsSql,
-    "q167_label_propagation" -> labelPropSql,
-    "q171_kcore" -> kCoreSql,
-    // HLL re-derived register by register (md5-52bit hash, floor(log2)
-    // rank, index-ordered harmonic fold, same alpha literal); ln in
-    // the linear-counting branch is the one engine-sensitive op ->
-    // round(, 4) on both engines
-    "q133_hll_distinct" -> hllSql,
-    "q146_hll_sparse" -> hllSparseSql,
-    "q158_profile_sketch" -> hllProfileSql(
-      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")),
-    "q159_unigram_train" -> unigramSql(encode = false),
-    "q160_unigram_encode" -> unigramSql(encode = true),
-    "q156_pagerank" -> pageRankSql,
-    "q157_personalized_pagerank" -> pprSql,
-    "q162_weighted_pagerank" -> weightedPrSql,
-    "q163_converged_pagerank" -> convergedPrSql,
-    "q155_asof_nearest" ->
-      """WITH c AS (SELECT user_id, ts, max_by(value, event_id) AS value
-        |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
-        |p AS (SELECT * FROM events WHERE event_type = 'purchase'),
-        |b AS (SELECT p.event_id, p.user_id, p.ts, p.value,
-        |    c.ts AS bt, c.value AS bv
-        |  FROM p ASOF LEFT JOIN c
-        |    ON p.user_id = c.user_id AND p.ts >= c.ts),
-        |f AS (SELECT p.event_id, c.ts AS ft, c.value AS fv
-        |  FROM p ASOF LEFT JOIN c
-        |    ON p.user_id = c.user_id AND p.ts <= c.ts)
-        |SELECT b.event_id, b.user_id, b.ts, b.value,
-        |  CASE WHEN ft IS NULL OR (bt IS NOT NULL AND
-        |      epoch_us(b.ts) - epoch_us(bt) <= epoch_us(ft) - epoch_us(b.ts))
-        |    THEN bt ELSE ft END AS nearest_click_ts,
-        |  CASE WHEN ft IS NULL OR (bt IS NOT NULL AND
-        |      epoch_us(b.ts) - epoch_us(bt) <= epoch_us(ft) - epoch_us(b.ts))
-        |    THEN bv ELSE fv END AS nearest_click_value
-        |FROM b JOIN f ON b.event_id = f.event_id""".stripMargin,
-    "q153_sequence_packing" ->
-      s"""WITH t AS ($toksCte),
-         |c AS (SELECT doc_id, len(t) AS ntok,
-         |    sum(len(t)) OVER (ORDER BY doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM t)
-         |SELECT doc_id, CAST(ntok AS BIGINT) AS n_tokens,
-         |  CAST((cum - ntok) // 512 AS BIGINT) AS seq_start,
-         |  CAST((cum - 1) // 512 AS BIGINT) AS seq_end,
-         |  (cum - 1) // 512 > (cum - ntok) // 512 AS straddles
-         |FROM c WHERE ntok > 0""".stripMargin,
-    "q154_chunking" ->
-      s"""WITH tt AS ($toksCte),
-         |s AS (SELECT doc_id, t AS tk, len(t) AS n FROM tt WHERE len(t) > 0)
-         |-- v1.0 generate_series can't correlate on n (no lateral
-         |-- column parameters): one shared grid sized from the CORPUS
-         |-- max doc length (not a literal — a longer doc on a future
-         |-- testdata round would silently lose chunks), WHERE-bounded
-         |-- per doc (same trick as q145's position grid)
-         |SELECT doc_id, CAST(st // 48 AS BIGINT) AS chunk_idx,
-         |  CAST(len(tk[st + 1 : least(st + 64, n)]) AS BIGINT) AS n_chunk_tokens,
-         |  array_to_string(tk[st + 1 : least(st + 64, n)], ' ') AS chunk_text
-         |FROM s CROSS JOIN (SELECT unnest(generate_series(0,
-         |  (SELECT ((max(n) - 1) // 48) * 48 FROM s), 48)) AS st) g
-         |WHERE st <= n - 1""".stripMargin,
-    "q151_profile" -> Seq("l_quantity", "l_extendedprice", "l_discount",
-      "l_tax").map(c =>
-        s"""SELECT '$c' AS col_name, count(*) AS n,
-           |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nulls,
-           |  CAST(count(DISTINCT $c) AS BIGINT) AS n_distinct,
-           |  CAST(min($c) AS DOUBLE) AS min_v,
-           |  CAST(max($c) AS DOUBLE) AS max_v FROM lineitem""".stripMargin)
-      .mkString("\nUNION ALL\n"),
-    "q152_expectations" ->
-      """SELECT 'l_quantity_in_1_50' AS rule,
-        |  CAST(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END) AS BIGINT) AS violations,
-        |  count(*) AS total,
-        |  sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END) = 0 AS pass
-        |FROM lineitem
-        |UNION ALL
-        |SELECT 'l_discount_in_0_0_1',
-        |  CAST(sum(CASE WHEN l_discount < 0 OR l_discount > 0.1 THEN 1 ELSE 0 END) AS BIGINT),
-        |  count(*),
-        |  sum(CASE WHEN l_discount < 0 OR l_discount > 0.1 THEN 1 ELSE 0 END) = 0
-        |FROM lineitem
-        |UNION ALL
-        |SELECT 'l_shipdate_not_null',
-        |  CAST(sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-        |  count(*),
-        |  sum(CASE WHEN l_shipdate IS NULL THEN 1 ELSE 0 END) = 0
-        |FROM lineitem
-        |UNION ALL
-        |SELECT 'o_orderkey_unique',
-        |  CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT),
-        |  count(*),
-        |  count(*) = count(DISTINCT o_orderkey)
-        |FROM orders
-        |UNION ALL
-        |SELECT 'l_orderkey_fk_orders',
-        |  (SELECT count(*) FROM lineitem l LEFT JOIN orders o
-        |    ON l.l_orderkey = o.o_orderkey WHERE o.o_orderkey IS NULL),
-        |  (SELECT count(*) FROM lineitem),
-        |  (SELECT count(*) FROM lineitem l LEFT JOIN orders o
-        |    ON l.l_orderkey = o.o_orderkey WHERE o.o_orderkey IS NULL) = 0""".stripMargin,
-    "q148_text_clean" ->
-      """SELECT doc_id,
-        |  trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |    lower(text),
-        |    '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<email>', 'g'),
-        |    'https?://[^ ]+', '<url>', 'g'),
-        |    '[^ -~]', '', 'g'),
-        |    '  +', ' ', 'g')) AS clean_text,
-        |  len(trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-        |    lower(text),
-        |    '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<email>', 'g'),
-        |    'https?://[^ ]+', '<url>', 'g'),
-        |    '[^ -~]', '', 'g'),
-        |    '  +', ' ', 'g'))) AS clean_len
-        |FROM documents""".stripMargin,
-    "q149_scd2_intervals" ->
-      """WITH o AS (SELECT user_id, event_type, ts, event_id,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev_type
-        |  FROM events WHERE user_id < 100),
-        |ch AS (SELECT user_id, event_type, ts, event_id FROM o
-        |  WHERE prev_type IS NULL OR prev_type <> event_type)
-        |SELECT user_id, event_type, ts AS valid_from,
-        |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to
-        |FROM ch""".stripMargin,
-    // the streaming CDC-apply replay equals the batch type-2 build —
-    // q149's SQL verbatim
-    "q161_stream_scd2" ->
-      """WITH o AS (SELECT user_id, event_type, ts, event_id,
-        |    lag(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev_type
-        |  FROM events WHERE user_id < 100),
-        |ch AS (SELECT user_id, event_type, ts, event_id FROM o
-        |  WHERE prev_type IS NULL OR prev_type <> event_type)
-        |SELECT user_id, event_type, ts AS valid_from,
-        |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to
-        |FROM ch""".stripMargin,
-    "q150_fuzzy_linkage" ->
-      """WITH d AS (SELECT doc_id, lang, substr(text, 1, 24) AS key,
-        |    len(substr(text, 1, 24)) AS klen FROM documents)
-        |SELECT least(a.doc_id, b.doc_id) AS doc_a,
-        |  greatest(a.doc_id, b.doc_id) AS doc_b,
-        |  CAST(levenshtein(a.key, b.key) AS BIGINT) AS dist
-        |FROM d a JOIN d b ON a.lang = b.lang
-        |  AND b.klen BETWEEN a.klen - 3 AND a.klen
-        |  AND (a.klen > b.klen OR a.doc_id < b.doc_id)
-        |WHERE levenshtein(a.key, b.key) <= 3""".stripMargin,
-    // register max is order-free, so the streamed snapshot equals the
-    // batch sketch — same SQL minus the exact column (count DISTINCT
-    // is not streamable, so q134 publishes the sketch alone)
-    "q134_stream_hll" -> hllSql(includeExact = false),
-    // register max is associative+idempotent: the stored-sketch
-    // rollup equals sketching raw data — q133's rebuild, minus exact
-    "q176_sketch_rollup" -> hllSql(includeExact = false),
-    // event-time-ordered batches make the sequential apply equal the
-    // one-shot merge — q177's SQL verbatim
-    "q181_stream_merge_into" -> mergeIntoSql,
-    "q233_schema_evolution" -> schemaEvolutionSql,
-    // latest-change-wins under the (ts, id) total order; D deletes,
-    // U upserts, untouched base keys pass through the full join
-    "q177_merge_into" -> mergeIntoSql,
-    // the identical 4x256 counter matrix rebuilt in SQL from the same
-    // md5 hash family — integer-exact, no floats anywhere
-    "q132_countmin_freq" -> countMinSql,
-    // matrix addition across micro-batches is order-free, so the
-    // streamed snapshot answers the identical point queries — batch
-    // q132's SQL verbatim
-    "q135_stream_countmin" -> countMinSql,
-    // the drained outer join equals the batch LEFT interval join —
-    // unmatched purchases surface with null click once the watermark
-    // proves no match can arrive
-    "q141_stream_outer_join" ->
-      """SELECT b.event_id AS buy_id, c.event_id AS click_id, b.user_id,
-        |  b.ts AS b_ts, c.ts AS c_ts
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') b
-        |LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON b.user_id = c.user_id
-        |  AND b.ts >= c.ts AND b.ts <= c.ts + INTERVAL 1 HOUR""".stripMargin,
-    // duplicates are bit-identical rows, so the engine's dedup output
-    // is exactly the distinct set
-    "q142_stream_dedup" ->
-      """SELECT DISTINCT event_id, user_id, event_type, value, ts
-        |FROM events""".stripMargin,
-    // same v2 construction, same md5 digests, same CASE ladder
-    "q140_snapshot_diff" ->
-      """WITH v1 AS (SELECT doc_id, text FROM documents),
-        |v2 AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0 THEN text || ' rev2' ELSE text END AS text
-        |  FROM v1 WHERE doc_id % 13 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text || ' new' FROM v1 WHERE doc_id % 11 = 0),
-        |a AS (SELECT doc_id AS id, md5(text) AS h1 FROM v1),
-        |b AS (SELECT doc_id AS id, md5(text) AS h2 FROM v2)
-        |SELECT coalesce(a.id, b.id) AS doc_id,
-        |  CASE WHEN a.id IS NULL THEN 'added'
-        |       WHEN b.id IS NULL THEN 'removed'
-        |       WHEN a.h1 <> b.h2 THEN 'changed'
-        |       ELSE 'unchanged' END AS status
-        |FROM a FULL OUTER JOIN b ON a.id = b.id""".stripMargin,
-    // the identical fixed-order logit chain over exact features; the
-    // stopword literal mirrors Scoring.stopwords
-    "q139_quality_model" ->
-      s"""WITH t AS (SELECT doc_id, text,
-         |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-         |  FROM documents),
-         |f AS (SELECT doc_id,
-         |    -3.75::DOUBLE
-         |      + 2.0::DOUBLE * (CAST(len(t) AS DOUBLE) / 100.0)
-         |      + 2.0::DOUBLE * (CAST(len(list_distinct(t)) AS DOUBLE)
-         |          / CAST(greatest(len(t), 1) AS DOUBLE))
-         |      + 8.0::DOUBLE * (CAST(len(list_filter(t,
-         |            x -> list_contains(['the','a','and','of','to','in'], x)))
-         |          AS DOUBLE) / CAST(greatest(len(t), 1) AS DOUBLE))
-         |      + 0.25::DOUBLE * (CAST(length(replace(text, ' ', '')) AS DOUBLE)
-         |          / CAST(greatest(len(t), 1) AS DOUBLE)) AS logit
-         |  FROM t)
-         |SELECT doc_id, logit, logit > 0.0 AS keep FROM f""".stripMargin,
-    // the replayed stream-stream join equals the batch interval join
-    // (buffered state matches late arrivals within the watermark) —
-    // exact ids and integer-micros timestamps, no floats
-    "q138_stream_interval_join" ->
-      """SELECT b.event_id AS buy_id, c.event_id AS click_id, b.user_id,
-        |  b.ts AS b_ts, c.ts AS c_ts
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') b
-        |JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |  ON b.user_id = c.user_id
-        |  AND b.ts >= c.ts AND b.ts <= c.ts + INTERVAL 1 HOUR""".stripMargin,
-    // the KMV sketch IS "distinct hashes ORDER BY hash LIMIT k" — the
-    // oracle rebuilds it verbatim; estimators are single fixed-order
-    // double ops over exact integers, so no rounding anywhere
-    "q136_kmv_setops" -> kmvSetopsSql,
-    // stored day-level KMV states re-merged to type level are
-    // BIT-IDENTICAL to the direct sketch (k-smallest-of-union
-    // argument), so the set-ops SQL is the oracle verbatim
-    "q185_kmv_rollup" -> kmvSetopsSql,
-    // exact triangle/wedge/edge counts over the same pair SQL; the
-    // lone division is a fixed-order double op of exact integers
-    "q137_triangles" ->
-      s"""WITH pairs AS ($simhash64PairsSql),
-         |e AS (SELECT doc_a, doc_b FROM pairs),
-         |tri AS (SELECT count(*)::BIGINT AS n_triangles FROM e e1
-         |  JOIN e e2 ON e1.doc_b = e2.doc_a
-         |  JOIN e e3 ON e3.doc_a = e1.doc_a AND e3.doc_b = e2.doc_b),
-         |deg AS (SELECT n, count(*)::BIGINT AS d FROM (
-         |  SELECT doc_a AS n FROM e UNION ALL SELECT doc_b FROM e) t
-         |  GROUP BY n),
-         |w AS (SELECT CAST(sum(d * (d - 1)) // 2 AS BIGINT) AS n_wedges FROM deg),
-         |ed AS (SELECT count(*)::BIGINT AS n_edges FROM e)
-         |SELECT ed.n_edges, w.n_wedges, tri.n_triangles,
-         |  CASE WHEN w.n_wedges = 0 THEN 0.0
-         |       ELSE 3.0 * tri.n_triangles / w.n_wedges END AS global_clustering
-         |FROM ed, w, tri""".stripMargin,
-    // the incremental replay must converge to the SAME labeling as
-    // batch CC over all pairs (star-edge contraction preserves
-    // connectivity exactly), so the oracle is q96's SQL verbatim
-    "q131_stream_components" -> componentsSql,
-    "q94_repetition_signals" ->
-      // same non-distinct 2-gram explode; each ratio is one division
-      // of exact integer counts — no rounding on either engine
-      s"""WITH toks AS ($toksCte),
-         |g AS (SELECT doc_id, len(t)::BIGINT AS n_tokens,
-         |    len(list_distinct(t))::BIGINT AS n_dtoks,
-         |    unnest(list_transform(generate_series(1, len(t) - 1),
-         |      i -> t[i] || ' ' || t[i+1])) AS g
-         |  FROM toks WHERE len(t) >= 2),
-         |pg AS (SELECT doc_id, n_tokens, n_dtoks, g, count(*) AS c
-         |  FROM g GROUP BY doc_id, n_tokens, n_dtoks, g)
-         |SELECT doc_id, n_tokens,
-         |  (max(c) * 2)::DOUBLE / n_tokens::DOUBLE AS top2_frac,
-         |  sum(CASE WHEN c > 1 THEN c ELSE 0 END)::DOUBLE
-         |    / sum(c)::DOUBLE AS dup2_frac,
-         |  (n_tokens - n_dtoks)::DOUBLE / n_tokens::DOUBLE AS dup_tok_frac
-         |FROM pg GROUP BY doc_id, n_tokens, n_dtoks""".stripMargin,
-    "q80_decontaminate" -> decontaminateSql,
-    // q93 re-runs the SAME screen as a 2-batch stream over the same
-    // train docs — per-batch answers union to the batch answer exactly
-    // (each train doc's shingles arrive together), so the oracle is
-    // q80's SQL verbatim: streaming == batch, gated by the driver.
-    "q93_stream_decontaminate" -> decontaminateSql,
-    // q99 is q80 with a Bloom pre-filter + shuffle join: false
-    // positives die in the exact join, so the answer — and the
-    // oracle — are identical. Bloom prefilter == exact, gated.
-    "q99_bloom_decontaminate" -> decontaminateSql,
-    "q105_ccnet_perplexity" ->
-      // same hashed-bigram target LM (md5 buckets, Laplace smoothing
-      // over a 0..255 spine), identical round(·,4) on the per-doc nll
-      // sum (rule 9) so the log_ppl division sees identical operands —
-      // and NO round after the division (its exact decimal half-ties,
-      // e.g. 215.7653/40, break round-half parity; the raw quotient is
-      // bit-identical by IEEE). md5 shard deal, explicit integer
-      // tercile arithmetic (no ntile remainder conventions to match).
-      s"""WITH toks AS ($toksCte),
-         |big AS (SELECT doc_id, unnest(list_transform(
-         |    generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1])) AS s
-         |  FROM toks),
-         |b AS (SELECT doc_id,
-         |    ('0x' || substr(md5(s || ':ccnet'), 1, 8))::BIGINT % 256 AS bucket
-         |  FROM big),
-         |tgt AS (SELECT bucket, count(*) AS tc FROM b
-         |  WHERE doc_id % 13 = 0 GROUP BY bucket),
-         |tots AS (SELECT (SELECT coalesce(sum(tc), 0) FROM tgt)::DOUBLE AS ttot),
-         |spine AS (SELECT unnest(generate_series(0, 255))::BIGINT AS bucket),
-         |lm AS (SELECT spine.bucket,
-         |    ln((coalesce(tc, 0) + 1.0) / (ttot + 256.0)) AS lnp
-         |  FROM spine LEFT JOIN tgt USING (bucket), tots),
-         |rawc AS (SELECT doc_id, bucket, count(*) AS cnt FROM b
-         |  WHERE doc_id % 13 <> 0 GROUP BY doc_id, bucket),
-         |pd AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_feats,
-         |    round(-sum(cnt * lnp), 4) AS nll
-         |  FROM rawc JOIN lm USING (bucket) GROUP BY doc_id),
-         |p2 AS (SELECT doc_id, n_feats, nll, nll / n_feats AS log_ppl
-         |  FROM pd),
-         |sh AS (SELECT doc_id, n_feats, nll, log_ppl,
-         |    ('0x' || substr(md5(doc_id::VARCHAR || ':ccnet:shard'), 1, 8))::BIGINT % 32 AS shard
-         |  FROM p2),
-         |rk AS (SELECT doc_id, n_feats, nll, log_ppl, shard,
-         |    CAST(row_number() OVER (
-         |      PARTITION BY shard ORDER BY log_ppl, doc_id) AS BIGINT) AS shard_rank,
-         |    CAST(count(*) OVER (PARTITION BY shard) AS BIGINT) AS shard_n
-         |  FROM sh)
-         |SELECT doc_id, n_feats, nll, log_ppl, shard, shard_rank, shard_n,
-         |  CAST((shard_rank - 1) * 3 // shard_n + 1 AS BIGINT) AS tercile,
-         |  CASE (shard_rank - 1) * 3 // shard_n + 1
-         |    WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS band
-         |FROM rk""".stripMargin,
-    "q104_gopher_rules" ->
-      // identical arithmetic: exact ints, two single divisions, same
-      // fixed rule order for the reason label.
-      s"""WITH toks AS ($toksCte),
-         |m AS (SELECT doc_id,
-         |    len(t)::BIGINT AS n_tokens,
-         |    len(array_to_string(t, ''))::DOUBLE / greatest(len(t), 1)::DOUBLE AS mean_word_len,
-         |    len(list_filter(t, x -> list_contains(['the','a','of','to','and'], x)))::BIGINT AS stop_hits,
-         |    len(list_distinct(t))::DOUBLE / greatest(len(t), 1)::DOUBLE AS distinct_ratio
-         |  FROM toks)
-         |SELECT doc_id, n_tokens, mean_word_len, stop_hits, distinct_ratio,
-         |  CASE WHEN n_tokens < 20 OR n_tokens > 90 THEN 'word_count'
-         |       WHEN mean_word_len < 4.25 OR mean_word_len > 4.75 THEN 'word_length'
-         |       WHEN stop_hits < 2 THEN 'stopwords'
-         |       WHEN distinct_ratio < 0.35 THEN 'repetition'
-         |       ELSE 'pass' END AS reason,
-         |  (CASE WHEN n_tokens < 20 OR n_tokens > 90 THEN 'word_count'
-         |       WHEN mean_word_len < 4.25 OR mean_word_len > 4.75 THEN 'word_length'
-         |       WHEN stop_hits < 2 THEN 'stopwords'
-         |       WHEN distinct_ratio < 0.35 THEN 'repetition'
-         |       ELSE 'pass' END) = 'pass' AS pass
-         |FROM m""".stripMargin,
-    "q112_winnow_fingerprints" ->
-      // same positional 3-grams, the same (hash, -pos) struct min
-      // over a 4-wide ROWS frame (struct comparison is lexicographic
-      // on both engines), same incomplete-window drop and distinct.
-      s"""WITH toks AS ($toksCte),
-         |sh AS (SELECT doc_id, unnest(list_transform(
-         |    generate_series(1, len(t) - 2),
-         |    i -> struct_pack(pos := i - 1,
-         |      s := t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS e
-         |  FROM toks),
-         |p AS (SELECT doc_id, CAST(e.pos AS BIGINT) AS pos, md5(e.s) AS h
-         |  FROM sh),
-         |m AS (SELECT doc_id, pos,
-         |    min(struct_pack(h := h, np := -pos)) OVER (
-         |      PARTITION BY doc_id ORDER BY pos
-         |      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS sel
-         |  FROM p)
-         |SELECT DISTINCT doc_id, -(sel.np) AS fp_pos, sel.h AS fp
-         |FROM m WHERE pos >= 3""".stripMargin,
-    "q103_repeated_spans" ->
-      // same derivation: positional 4-grams, corpus-wide occurrence
-      // window, islands by pos - row_number; end_tok = last marked
-      // position + 3 (the k-1 tail of the final shingle).
-      s"""WITH toks AS ($toksCte),
-         |sh AS (SELECT doc_id, unnest(list_transform(
-         |    generate_series(1, len(t) - 3),
-         |    i -> struct_pack(pos := i,
-         |      s := t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]))) AS e
-         |  FROM toks),
-         |p AS (SELECT doc_id, e.pos AS pos, e.s AS s FROM sh),
-         |m AS (SELECT doc_id, pos FROM (
-         |  SELECT doc_id, pos, count(*) OVER (PARTITION BY s) AS occ FROM p)
-         |  WHERE occ > 1),
-         |isl AS (SELECT doc_id, pos,
-         |    pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-         |  FROM m)
-         |SELECT doc_id, CAST(min(pos) AS BIGINT) AS start_tok,
-         |  CAST(max(pos) + 3 AS BIGINT) AS end_tok,
-         |  count(*)::BIGINT AS n_dup_shingles
-         |FROM isl GROUP BY doc_id, grp""".stripMargin,
-    "q102_dsir_sampling" ->
-      // same hashed-bigram models: md5-slice buckets, Laplace-smoothed
-      // target/raw distributions over a 0..255 spine, identical
-      // round(·,4) on the per-doc log-ratio sum (rule 9), md5 shard
-      // deal + (weight desc, doc_id) ranks, selected = top quarter
-      // per shard under integer floor semantics.
-      s"""WITH toks AS ($toksCte),
-         |big AS (SELECT doc_id, unnest(list_transform(
-         |    generate_series(1, len(t) - 1), i -> t[i] || ' ' || t[i+1])) AS s
-         |  FROM toks),
-         |b AS (SELECT doc_id,
-         |    ('0x' || substr(md5(s || ':dsir'), 1, 8))::BIGINT % 256 AS bucket
-         |  FROM big),
-         |tgt AS (SELECT bucket, count(*) AS tc FROM b
-         |  WHERE doc_id % 13 = 0 GROUP BY bucket),
-         |rawc AS (SELECT doc_id, bucket, count(*) AS cnt FROM b
-         |  WHERE doc_id % 13 <> 0 GROUP BY doc_id, bucket),
-         |rb AS (SELECT bucket, sum(cnt) AS rc FROM rawc GROUP BY bucket),
-         |tots AS (SELECT (SELECT coalesce(sum(tc), 0) FROM tgt)::DOUBLE AS ttot,
-         |    (SELECT coalesce(sum(rc), 0) FROM rb)::DOUBLE AS rtot),
-         |spine AS (SELECT unnest(generate_series(0, 255))::BIGINT AS bucket),
-         |lr AS (SELECT spine.bucket,
-         |    ln((coalesce(tc, 0) + 1.0) / (ttot + 256.0))
-         |      - ln((coalesce(rc, 0) + 1.0) / (rtot + 256.0)) AS lr
-         |  FROM spine LEFT JOIN tgt USING (bucket)
-         |    LEFT JOIN rb USING (bucket), tots),
-         |pd AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_feats,
-         |    round(sum(cnt * lr), 4) AS weight
-         |  FROM rawc JOIN lr USING (bucket) GROUP BY doc_id),
-         |sh AS (SELECT doc_id, n_feats, weight,
-         |    ('0x' || substr(md5(doc_id::VARCHAR || ':dsir:shard'), 1, 8))::BIGINT % 32 AS shard
-         |  FROM pd),
-         |rk AS (SELECT doc_id, n_feats, weight, shard,
-         |    CAST(row_number() OVER (
-         |      PARTITION BY shard ORDER BY weight DESC, doc_id) AS BIGINT) AS shard_rank,
-         |    CAST(count(*) OVER (PARTITION BY shard) AS BIGINT) AS shard_n
-         |  FROM sh)
-         |SELECT doc_id, n_feats, weight, shard, shard_rank, shard_n,
-         |  shard_rank * 4 <= shard_n AS selected
-         |FROM rk""".stripMargin,
-    "q101_semdedup" ->
-      // assignment re-derived from the scratch centroid bytes (q90's
-      // argmin shape, keeping d as the priority), then the dropped set
-      // = vectors with a higher-priority cosine>=0.3 neighbor in the
-      // same cell; all doubles bit-exact (index-order folds), the
-      // boolean falls out of a left join.
-      s"""WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         |cells AS (SELECT cell, cv::DOUBLE[] AS cv,
-         |    list_dot_product(cv::DOUBLE[], cv::DOUBLE[]) AS c2
-         |  FROM read_parquet('${operators.Similarity.scratchSemCentroidsPath}/*.parquet')),
-         |dist AS (SELECT b.vec_id, c.cell,
-         |    c.c2 - 2 * list_dot_product(b.v, c.cv) AS d
-         |  FROM base b CROSS JOIN cells c),
-         |assign AS (SELECT vec_id, cell, d AS cd FROM (
-         |  SELECT vec_id, cell, d, row_number() OVER (
-         |    PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dist)
-         |  WHERE rn = 1),
-         |m AS (SELECT a.vec_id, a.cell, a.cd, b.v,
-         |    sqrt(list_dot_product(b.v, b.v)) AS nrm
-         |  FROM assign a JOIN base b USING (vec_id)),
-         |dropped AS (SELECT DISTINCT y.vec_id
-         |  FROM m y JOIN m x ON y.cell = x.cell
-         |   AND (x.cd < y.cd OR (x.cd = y.cd AND x.vec_id < y.vec_id))
-         |   AND list_dot_product(x.v, y.v) / (x.nrm * y.nrm) >= 0.3)
-         |SELECT a.vec_id, CAST(a.cell AS BIGINT) AS cell, a.cd,
-         |  d.vec_id IS NULL AS kept
-         |FROM assign a LEFT JOIN dropped d ON a.vec_id = d.vec_id""".stripMargin,
-    "q107_hybrid_rrf" ->
-      // q100's bm25 CTEs at k=20 + q26's cosine shape for the same
-      // %101 queries, then the RRF join: each reciprocal is cast to
-      // DOUBLE explicitly (a bare 1.0 literal is DECIMAL in DuckDB —
-      // decimal division would break parity), summed in the same
-      // fixed list order as the Spark fold, no rounding (single IEEE
-      // ops of identical operands), (score desc, cand_id) tiebreak.
-      s"""WITH toks AS ($toksCte),
-         |stats AS (SELECT count(*)::DOUBLE AS n,
-         |    coalesce(sum(len(t)), 0)::DOUBLE AS sumdl FROM toks),
-         |terms AS (SELECT doc_id AS cand_id, len(t)::DOUBLE AS dl,
-         |    unnest(t) AS term FROM toks),
-         |tfc AS (SELECT cand_id, term, dl, count(*) AS tf
-         |  FROM terms GROUP BY cand_id, term, dl),
-         |dfc AS (SELECT term, count(*) AS df FROM tfc GROUP BY term),
-         |q AS (SELECT doc_id AS query_id, unnest(list_distinct(t)) AS term
-         |  FROM toks WHERE doc_id % 101 = 0),
-         |scored AS (SELECT query_id, cand_id,
-         |    round(sum(ln(1.0 + (s.n - df + 0.5) / (df + 0.5))
-         |      * (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / (s.sumdl / s.n)))), 6) AS score
-         |  FROM tfc JOIN dfc USING (term) JOIN q USING (term), stats s
-         |  WHERE query_id <> cand_id
-         |  GROUP BY query_id, cand_id),
-         |bm AS (SELECT query_id, cand_id, rank FROM (
-         |  SELECT query_id, cand_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY score DESC, cand_id) AS rank
-         |  FROM scored) WHERE rank <= 20),
-         |eq AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-         |  FROM embeddings WHERE vec_id % 101 = 0),
-         |ec AS (SELECT vec_id AS cand_id, embedding::DOUBLE[] AS cv FROM embeddings),
-         |escored AS (SELECT query_id, cand_id,
-         |  list_dot_product(qv, cv)
-         |    / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(cv, cv))) AS cosine
-         |  FROM ec, eq WHERE query_id <> cand_id),
-         |cosl AS (SELECT query_id, cand_id, rank FROM (
-         |  SELECT query_id, cand_id, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
-         |  FROM escored) WHERE rank <= 20),
-         |fused AS (SELECT
-         |    coalesce(b.query_id, v.query_id) AS query_id,
-         |    coalesce(b.cand_id, v.cand_id) AS cand_id,
-         |    coalesce(1.0::DOUBLE / (60 + b.rank)::DOUBLE, 0.0::DOUBLE)
-         |      + coalesce(1.0::DOUBLE / (60 + v.rank)::DOUBLE, 0.0::DOUBLE) AS rrf_score,
-         |    (b.rank IS NOT NULL)::BIGINT + (v.rank IS NOT NULL)::BIGINT AS n_lists
-         |  FROM bm b FULL OUTER JOIN cosl v
-         |    ON b.query_id = v.query_id AND b.cand_id = v.cand_id)
-         |SELECT query_id, cand_id, rrf_score, n_lists, rrf_rank FROM (
-         |  SELECT query_id, cand_id, rrf_score, n_lists, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY rrf_score DESC, cand_id) AS rrf_rank
-         |  FROM fused) WHERE rrf_rank <= 10""".stripMargin,
-    "q100_bm25_retrieval" ->
-      // same inverted-index derivation: postings + df + corpus stats
-      // from ONE tokenize, Lucene-variant idf, identical round(·,6)
-      // on the per-(query,cand) sum (rule 9), (score desc, cand_id)
-      // rank with rank <= 5; %101 docs as queries, self excluded.
-      bm25RetrievalSql,
-    // q240: the SAME retrieval answered from the incrementally-
-    // maintained index — the stored postings/stats must reproduce
-    // the from-scratch BM25 bit-identically, so q100's SQL is the
-    // oracle verbatim
-    "q240_incr_inverted_index" -> bm25RetrievalSql,
-    // q241: the streaming co-maintenance changes WHEN postings land
-    // (per ingest batch, fence-checked), not what a query answers
-    "q241_stream_search_index" -> bm25RetrievalSql,
-    // q252: interleaved ingest+delete streams — the index must equal
-    // one never containing the deleted docs (df/N/avgdl all shrink);
-    // deleted = %7 docs of micro-batch slices 0..2 (slice 3's %7 docs
-    // had no later batch to carry their tombstones)
-    "q252_stream_co_deletes" -> bm25RetrievalSqlFor(
-      "doc_id % 7 <> 0 OR doc_id % 4 = 3", "doc_id % 101 = 0"),
-    // q253: MaxScore pruning is answer-invisible — the oracle is the
-    // plain exhaustive BM25 for the same fixed query terms
-    "q253_maxscore_bm25" -> maxscoreBm25Sql,
-    // q258: after audit-localized rot and a targeted repair, the
-    // served index must be indistinguishable from pristine
-    "q258_audit_repair" -> bm25RetrievalSql,
-    // q256: delete-by-id must equal an index never containing the %6
-    // docs — same reduced-corpus discipline as q247/q250
-    "q256_delete_by_id" -> bm25RetrievalSqlFor("doc_id % 6 <> 0",
-      "doc_id % 101 = 0"),
-    // q257: more-like-this from the stored forward vector == the
-    // from-scratch BM25 with doc 101 as the one (self-excluded) query
-    "q257_more_like_this" -> bm25RetrievalSqlFor("TRUE", "doc_id = 101"),
-    // q254: prefix lookup from the letter-bucketed dictionary must
-    // equal the plain LIKE aggregation — exact long counts
-    "q254_term_autocomplete" -> autocompleteSql,
-    // q259: the streaming-maintained dictionary must be
-    // indistinguishable from the one-shot build — q254's oracle
-    // verbatim
-    "q259_stream_autocomplete" -> autocompleteSql,
-    // q260: the dictionary served (ingested − deleted) — slices 0..3
-    // all ingested, %7 docs of slices 0..2 deleted (q252's pattern)
-    "q260_dict_co_deletes" -> autocompleteSqlFor(
-      "doc_id % 7 <> 0 OR doc_id % 4 = 3"),
-    // q261: the doubly-reduced corpus after two named delete streams
-    // (GDPR %5 + TTL %9, overlap %45 decremented once)
-    "q261_named_delete_streams" -> bm25RetrievalSqlFor(
-      "doc_id % 5 <> 0 AND doc_id % 9 <> 0", "doc_id % 101 = 0"),
-    // q262: after forward rot, targeted repair and OPTIMIZE, the
-    // deleteByIds decrement must be corpus-true again — the index
-    // equals one never containing the %10 docs
-    "q262_fwd_audit_repair" -> bm25RetrievalSqlFor("doc_id % 10 <> 0",
-      "doc_id % 101 = 0"),
-    // q263: batched MaxScore is answer-invisible — q240's oracle
-    // (the plain exhaustive BM25 for the %101 query set) verbatim
-    "q263_maxscore_batch" -> bm25RetrievalSql,
-    // q255: the audit's three divergence kinds re-derived from the
-    // corpus arithmetic — missing = %7-deleted (still in the audit
-    // corpus), phantom = %11-dropped (still in the store), drift =
-    // %13≡1 doubled text on pairs present in both
-    "q255_index_audit" ->
-      s"""WITH toks AS ($toksCte),
-         |pairs AS (SELECT doc_id, unnest(t) AS term FROM toks),
-         |ptf AS (SELECT doc_id, term, count(*) AS tf
-         |  FROM pairs GROUP BY doc_id, term),
-         |agg AS (SELECT term,
-         |    CAST(sum(CASE WHEN doc_id % 7 = 0 AND doc_id % 11 <> 0
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS n_missing,
-         |    CAST(sum(CASE WHEN doc_id % 11 = 0 AND doc_id % 7 <> 0
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS n_phantom,
-         |    CAST(sum(CASE WHEN doc_id % 13 = 1 AND doc_id % 7 <> 0
-         |      AND doc_id % 11 <> 0 THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_drift
-         |  FROM ptf GROUP BY term)
-         |SELECT term, n_missing, n_phantom, n_drift FROM agg
-         |WHERE n_missing + n_phantom + n_drift > 0""".stripMargin,
-    "q71_hash_split" ->
-      // the split label re-derived from the same md5 arithmetic:
-      // first 8 hex chars of md5(doc_id || ':s42') as int, mod 100
-      s"""WITH toks AS ($toksCte),
-         |b AS (SELECT doc_id, len(t) AS n_toks,
-         |    ('0x' || substr(md5(doc_id::VARCHAR || ':s42'), 1, 8))::BIGINT % 100 AS bucket
-         |  FROM toks),
-         |l AS (SELECT doc_id, n_toks,
-         |    CASE WHEN bucket < 90 THEN 'train'
-         |         WHEN bucket < 95 THEN 'val' ELSE 'test' END AS split
-         |  FROM b)
-         |SELECT split, count(*)::BIGINT AS n_docs,
-         |  CAST(sum(n_toks) AS BIGINT) AS n_tokens,
-         |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         |FROM l GROUP BY split""".stripMargin,
-    "q67_tfidf" ->
-      s"""WITH toks AS ($toksCte),
-         |terms AS (SELECT doc_id, unnest(t) AS term FROM toks),
-         |tfc AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY doc_id, term),
-         |dfc AS (SELECT term, count(*) AS df FROM tfc GROUP BY term),
-         |n AS (SELECT count(*) AS n FROM documents)
-         |SELECT doc_id, term, tfc.tf AS tf, CAST(dfc.df AS BIGINT) AS df,
-         |  round(tfc.tf * (ln((n.n + 1.0) / (dfc.df + 1.0)) + 1.0), 9) AS tfidf
-         |FROM tfc JOIN dfc USING (term), n""".stripMargin,
-    "q56_json_props" ->
-      """SELECT event_type, count(*) AS n,
-        |  avg(json_extract(props, '$.k')::BIGINT) AS avg_k,
-        |  CAST(sum(json_extract(props, '$.k')::BIGINT) AS BIGINT) AS sum_k,
-        |  CAST(max(json_extract(props, '$.k')::BIGINT) AS BIGINT) AS max_k
-        |FROM events GROUP BY event_type""".stripMargin,
-    "q60_order_book" ->
-      """WITH d AS (SELECT user_id,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 2 END AS bdir,
-        |    floor(value * 10) / 10.0 AS price,
-        |    CASE WHEN event_id % 7 = 0 THEN -1 ELSE 1 END AS qty
-        |  FROM events
-        |  WHERE event_type IN ('click', 'view') AND user_id < 20),
-        |lv AS (SELECT user_id, bdir, price, CAST(sum(qty) AS BIGINT) AS q
-        |  FROM d GROUP BY user_id, bdir, price HAVING sum(qty) > 0),
-        |tops AS (SELECT user_id,
-        |    max(CASE WHEN bdir = 1 THEN price END) AS best_bid,
-        |    min(CASE WHEN bdir = 2 THEN price END) AS best_ask,
-        |    CAST(count(*) AS BIGINT) AS n_levels
-        |  FROM lv GROUP BY user_id)
-        |SELECT t.user_id, t.best_bid,
-        |  CAST(coalesce((SELECT sum(q) FROM lv
-        |    WHERE user_id = t.user_id AND bdir = 1 AND price = t.best_bid), 0)
-        |    AS BIGINT) AS bid_depth,
-        |  t.best_ask,
-        |  CAST(coalesce((SELECT sum(q) FROM lv
-        |    WHERE user_id = t.user_id AND bdir = 2 AND price = t.best_ask), 0)
-        |    AS BIGINT) AS ask_depth,
-        |  t.n_levels
-        |FROM tops t""".stripMargin,
-    "q59_promo_share" ->
-      """SELECT date_trunc('month', l_shipdate) AS month,
-        |  100.0 * CAST(sum(CAST(round((CASE WHEN p_type = 'PROMO'
-        |      THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END) * 10000)
-        |      AS BIGINT)) AS DOUBLE)
-        |    / CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000)
-        |      AS BIGINT)) AS DOUBLE) AS promo_share,
-        |  count(*) AS n
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1996-07-01 00:00:00'
-        |GROUP BY date_trunc('month', l_shipdate)""".stripMargin,
-    "q57_sliding_windows" ->
-      """WITH x AS (SELECT time_bucket(INTERVAL '3 hours', ts) AS s0, value
-        |  FROM events),
-        |w AS (SELECT s0 AS w_start, value FROM x
-        |  UNION ALL SELECT s0 - INTERVAL '3 hours' AS w_start, value FROM x)
-        |SELECT w_start, w_start + INTERVAL '6 hours' AS w_end,
-        |  count(*) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-        |    / 100.0 / count(*) AS avg_value
-        |FROM w GROUP BY w_start""".stripMargin,
-    "q55_range_join" ->
-      """WITH spans AS (SELECT user_id, CAST(ts AS DATE) AS day,
-        |    min(ts) AS s0, max(ts) AS e0
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |c AS (SELECT user_id, ts FROM events WHERE event_type = 'click')
-        |SELECT s.user_id, s.day, count(*) AS n_clicks
-        |FROM spans s JOIN c ON s.user_id = c.user_id
-        |  AND c.ts >= s.s0 AND c.ts <= s.e0
-        |GROUP BY s.user_id, s.day""".stripMargin,
-    "q61_asof_forward" ->
-      """SELECT s.event_id, s.user_id, s.ts,
-        |  p.ts AS first_purchase_ts, p.value AS first_purchase_value
-        |FROM (SELECT * FROM events WHERE event_type = 'signup') s
-        |ASOF LEFT JOIN (
-        |  SELECT user_id, ts, max_by(value, event_id) AS value
-        |  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts) p
-        |  ON s.user_id = p.user_id AND s.ts <= p.ts""".stripMargin,
-    "q65_merge_limit" ->
-      """SELECT * FROM (
-        |  SELECT event_type AS stream, event_id, ts, user_id, value
-        |  FROM events
-        |  WHERE user_id < 40 AND event_type IN ('click', 'view', 'purchase'))
-        |ORDER BY ts, event_id LIMIT 100""".stripMargin,
-    "q62_hetero_merge" ->
-      """SELECT event_id, ts, user_id, value, 'purchase' AS stream,
-        |  CAST(NULL AS BIGINT) AS k
-        |FROM events WHERE event_type = 'purchase'
-        |UNION ALL
-        |SELECT event_id, ts, user_id, CAST(NULL AS DOUBLE) AS value,
-        |  'click' AS stream, json_extract(props, '$.k')::BIGINT AS k
-        |FROM events WHERE event_type = 'click'""".stripMargin,
-    "q29_asof_join" ->
-      """SELECT p.event_id, p.user_id, p.ts, p.value,
-        |  c.ts AS last_click_ts, c.value AS last_click_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF LEFT JOIN (
-        |  SELECT user_id, ts, max_by(value, event_id) AS value
-        |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts) c
-        |  ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin,
-    // incrementally-folded LONG state == the one-shot GROUP BY for any
-    // batching — the same SQL oracles the batch and streaming gates
-    "q187_agg_view" -> aggViewSql,
-    "q188_stream_agg_view" -> aggViewSql,
-    // q212: surviving facts = parts {0,2} minus the fully-retracted
-    // group; the duplicate b3 delivery and the out-of-order b0
-    // retraction leave no trace in the folded LONG state
-    "q212_stream_adversarial_view" ->
-      """SELECT l_returnflag, l_linestatus, count(*)::BIGINT AS cnt,
-        |  sum(round(l_quantity)::BIGINT)::BIGINT AS sum_qty,
-        |  sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT
-        |    AS rev_cents
-        |FROM lineitem
-        |WHERE l_orderkey % 2 = 0 AND l_orderkey % 3 <> 1
-        |  AND NOT (l_returnflag = 'R' AND l_linestatus = 'F')
-        |GROUP BY 1, 2""".stripMargin,
-    // q235: the screened stream applies each distinct fact exactly
-    // once — duplicates die inside the lateness window, eviction and
-    // the state bound are pinned driver-side (requires, not SQL)
-    "q235_watermark_dedup_view" ->
-      """SELECT l_returnflag, l_linestatus, count(*)::BIGINT AS cnt,
-        |  sum(round(l_quantity)::BIGINT)::BIGINT AS sum_qty,
-        |  sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT
-        |    AS rev_cents
-        |FROM lineitem
-        |WHERE l_orderkey % 2 = 0 AND year(l_shipdate) IN (1996, 1998)
-        |GROUP BY 1, 2""".stripMargin,
-    "q189_time_travel" -> timeTravelSql,
-    // q211: the two SURVIVING versions after the vacuum are each the
-    // one-shot merge over their change prefix (q189's contract); the
-    // shrink and fail-loud-below-floor properties are pinned
-    // driver-side inside the query (requires, not SQL)
-    "q211_vacuum_retention" ->
-      s"""SELECT 2::BIGINT AS ver, m1.*
-         |FROM (${mergeIntoSqlWhere("o_orderkey % 3 < 2")}) m1
-         |UNION ALL
-         |SELECT 3::BIGINT AS ver, m2.*
-         |FROM (${mergeIntoSqlWhere("TRUE")}) m2""".stripMargin,
-    "q190_bfs_distances" -> bfsSql,
-    "q191_exact_quantiles" -> quantilesSql,
-    "q192_bloom_file_index" -> bloomIndexSql,
-    // q230: same contract as q192/q147 — the maintained zone map only
-    // decides which unit directories are READ; the residual range
-    // predicate makes the answer exact, so the oracle is the plain
-    // range filter (integer floor-div bounds on both engines)
-    "q230_incr_zone_map" ->
-      """WITH m AS (SELECT max(o_orderkey) AS mx FROM orders)
-        |SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-        |FROM orders o, m
-        |WHERE o.o_orderkey BETWEEN m.mx // 5 AND m.mx // 5 + m.mx // 10""".stripMargin,
-    // q231: the plain range filter again — streaming co-maintenance
-    // changes WHEN stats land (per ingest batch, fence-checked), not
-    // what a lookup answers
-    "q231_indexed_ingest" ->
-      """WITH m AS (SELECT max(o_orderkey) AS mx FROM orders)
-        |SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-        |FROM orders o, m
-        |WHERE o.o_orderkey BETWEEN m.mx // 3 AND m.mx // 3 + m.mx // 12""".stripMargin,
-    // q232: compaction changes the physical layout only — the lookup
-    // answers the identical plain range filter; shrink + index-
-    // survival are pinned driver-side (requires, not SQL)
-    "q232_optimize_compact" ->
-      """WITH m AS (SELECT max(o_orderkey) AS mx FROM orders)
-        |SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-        |FROM orders o, m
-        |WHERE o.o_orderkey BETWEEN m.mx // 4 AND m.mx // 4 + m.mx // 10""".stripMargin,
-    // q234: the DELETE-path sibling — re-tightening is pinned
-    // driver-side (strictly narrower min, probe stops matching,
-    // Bloom pairs collapse); the served lookups answer the plain
-    // post-delete filters
-    "q234_optimize_retighten" -> optimizeRetightenSql,
-    // q238: the nine per-writer batches PARTITION orders (3 writers ×
-    // 3 batches on o_orderkey residues), so the store's final additive
-    // state is the plain one-shot GROUP BY — exactly-once per writer
-    // (poisoned replays screened by each writer's own txn watermark)
-    // and interleave-independence are what the gate proves
-    // q247: the post-delete index must be indistinguishable from one
-    // never containing the docs — q100's derivation over the reduced
-    // corpus, surviving queries only
-    "q247_index_delete" -> bm25RetrievalSqlFor("doc_id % 9 <> 0",
-      "doc_id % 101 = 0 AND doc_id % 9 <> 0"),
-    // q251: two racing ingest streams must produce the identical
-    // index a single stream would — q100's SQL verbatim
-    "q251_multiwriter_search_ingest" -> bm25RetrievalSql,
-    // q250: a tombstoned-then-purged index must be indistinguishable
-    // from one never containing the docs — q100's derivation over
-    // the reduced corpus (the q247 contract, merge-on-read flavor)
-    "q250_tombstone_delete" -> bm25RetrievalSqlFor("doc_id % 7 <> 0",
-      "doc_id % 101 = 0 AND doc_id % 7 <> 0"),
-    // q249: exact phrase match is the plain 3-gram scan — each
-    // consecutive-token window tested literally; first_pos converts
-    // the oracle's 1-based token index to the store's 0-based
-    "q249_phrase_search" ->
-      s"""WITH toks AS ($toksCte),
-         |p AS (SELECT doc_id, t[i] AS w1, t[i+1] AS w2, t[i+2] AS w3, i
-         |  FROM toks, unnest(generate_series(1, len(t) - 2)) AS g(i)),
-         |m AS (SELECT doc_id, count(*)::BIGINT AS n_occurrences,
-         |    (min(i) - 1)::BIGINT AS first_pos
-         |  FROM p WHERE w1 = 'big' AND w2 = 'order' AND w3 = 'scan'
-         |  GROUP BY doc_id)
-         |SELECT doc_id, n_occurrences, first_pos, rank
-         |FROM (SELECT *, row_number() OVER (
-         |    ORDER BY n_occurrences DESC, doc_id) AS rank FROM m)
-         |WHERE rank <= 20""".stripMargin,
-    // q248: AND-retrieval is the plain multi-term filter — docs whose
-    // distinct matched terms count all 3, ranked by exact integer
-    // (total_tf desc, doc_id); the store's walk order (rarest-first
-    // intersection) is a plan property, invisible to the answer
-    "q248_conjunctive_search" ->
-      s"""WITH toks AS ($toksCte),
-         |tfc AS (SELECT doc_id, w, count(*) AS tf
-         |  FROM (SELECT doc_id, unnest(t) AS w FROM toks)
-         |  WHERE w IN ('order', 'table', 'the') GROUP BY doc_id, w),
-         |m AS (SELECT doc_id, sum(tf) AS total_tf, min(tf) AS min_tf
-         |  FROM tfc GROUP BY doc_id HAVING count(*) = 3)
-         |SELECT doc_id, CAST(total_tf AS BIGINT) AS total_tf,
-         |  CAST(min_tf AS BIGINT) AS min_tf, rank
-         |FROM (SELECT *, row_number() OVER (
-         |    ORDER BY total_tf DESC, doc_id) AS rank FROM m)
-         |WHERE rank <= 20""".stripMargin,
-    // q246: the identical window/slice integer math over the same
-    // tokenize; DuckDB list_slice clamps like Spark's slice
-    "q246_rag_chunking" ->
-      s"""WITH toks AS ($toksCte),
-         |d AS (SELECT doc_id, t, len(t) AS n,
-         |    1 + (greatest(len(t) - 32, 0) + 23) // 24 AS k
-         |  FROM toks WHERE doc_id % 5 = 0 AND len(t) > 0),
-         |c AS (SELECT doc_id, i AS chunk_idx,
-         |    t[i * 24 + 1 : i * 24 + 32] AS chunk
-         |  FROM d, unnest(generate_series(0, k - 1)) AS g(i))
-         |SELECT doc_id, chunk_idx::BIGINT AS chunk_idx,
-         |  len(chunk)::BIGINT AS n_tokens,
-         |  chunk[1] AS first_tok, chunk[-1] AS last_tok,
-         |  md5(array_to_string(chunk, ' ')) AS fp
-         |FROM c""".stripMargin,
-    // q245: same injections + precedence as one CASE chain; the
-    // dup-vs-store shortcut (seq=2 ⇒ replayed key) is valid because
-    // injected replays are exactly batch-0-accepted keys by
-    // construction — Spark runs the general readFor probe
-    "q245_ingest_expectations" ->
-      """WITH o AS (SELECT o_orderkey AS okey, o_custkey AS ck0,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents0
-        |  FROM orders),
-        |base AS (SELECT okey, (okey % 3)::INT AS b, 0 AS seq,
-        |    CASE WHEN okey % 13 = 0 THEN NULL ELSE okey END AS k,
-        |    CASE WHEN okey % 23 = 0 THEN ck0 + 1000000000 ELSE ck0 END
-        |      AS ck,
-        |    CASE WHEN okey % 17 = 0 THEN -cents0 - 1 ELSE cents0 END
-        |      AS cents
-        |  FROM o),
-        |dupb AS (SELECT okey, b, 1 AS seq, k, ck, cents + 7 AS cents
-        |  FROM base WHERE okey % 11 = 0),
-        |dups AS (SELECT okey, 2 AS b, 2 AS seq, k, ck, cents
-        |  FROM base WHERE okey % 19 = 0 AND b = 0 AND okey % 13 <> 0
-        |    AND okey % 17 <> 0 AND okey % 23 <> 0),
-        |rows_ AS (SELECT * FROM base UNION ALL SELECT * FROM dupb
-        |  UNION ALL SELECT * FROM dups),
-        |scr AS (SELECT *,
-        |    CASE WHEN k IS NULL THEN 'null_key'
-        |         WHEN cents < 0 THEN 'range'
-        |         WHEN ck NOT IN (SELECT c_custkey FROM customer)
-        |           THEN 'fk'
-        |    END AS r0 FROM rows_),
-        |db AS (SELECT *,
-        |    CASE WHEN r0 IS NULL AND
-        |      sum(CASE WHEN r0 IS NULL THEN 1 ELSE 0 END)
-        |        OVER (PARTITION BY b, k ORDER BY seq
-        |          ROWS UNBOUNDED PRECEDING) > 1
-        |      THEN 'dup_in_batch' ELSE r0 END AS r1 FROM scr),
-        |fin AS (SELECT *, CASE WHEN r1 IS NULL AND seq = 2
-        |    THEN 'dup_vs_store' ELSE r1 END AS reason FROM db)
-        |SELECT coalesce(reason, 'accepted') AS reason,
-        |  count(*)::BIGINT AS n, CAST(sum(cents) AS BIGINT) AS cents
-        |FROM fin GROUP BY 1""".stripMargin,
-    // q243: each side = the snapshot fold plus only its own
-    // post-fork batch (clone isolation is the claim; the reused
-    // batch id is fresh on the clone by contract)
-    "q243_deep_clone" ->
-      """WITH f AS (SELECT o_custkey % 128 AS g,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
-        |    o_orderkey
-        |  FROM orders),
-        |b AS (SELECT g, count(*)::BIGINT AS cnt,
-        |    CAST(sum(cents) AS BIGINT) AS cents FROM f GROUP BY 1),
-        |e5 AS (SELECT g, count(*)::BIGINT AS cnt,
-        |    CAST(sum(cents) AS BIGINT) AS cents FROM f
-        |  WHERE o_orderkey % 5 = 0 GROUP BY 1),
-        |e7 AS (SELECT g, count(*)::BIGINT AS cnt,
-        |    CAST(sum(cents) AS BIGINT) AS cents FROM f
-        |  WHERE o_orderkey % 7 = 0 GROUP BY 1)
-        |SELECT b.g, (b.cnt + coalesce(e5.cnt, 0))::BIGINT AS cnt,
-        |  CAST(b.cents + coalesce(e5.cents, 0) AS BIGINT) AS cents,
-        |  'src' AS side
-        |FROM b LEFT JOIN e5 USING (g)
-        |UNION ALL
-        |SELECT b.g, (b.cnt + coalesce(e7.cnt, 0))::BIGINT,
-        |  CAST(b.cents + coalesce(e7.cents, 0) AS BIGINT), 'clone'
-        |FROM b LEFT JOIN e7 USING (g)""".stripMargin,
-    // q244: the identical IEEE fold replayed by list_reduce over the
-    // identically-ordered list (unique (ts, event_id) tiebreak) — the
-    // operands and operation order match bit-for-bit, so NO rounding
-    // contract is needed; λ literals cast ::DOUBLE per rule 11
-    "q244_ewma" ->
-      """WITH e AS (SELECT user_id, strftime(ts, '%Y-%m-%d') AS day,
-        |    list(round(value * 100) ORDER BY ts, event_id) AS xs
-        |  FROM events GROUP BY 1, 2)
-        |SELECT user_id, day, len(xs)::BIGINT AS n,
-        |  list_reduce(list_prepend(0.0::DOUBLE, xs),
-        |    (a, x) -> a * 0.75::DOUBLE + x * 0.25::DOUBLE) AS ewma_cents
-        |FROM e WHERE len(xs) >= 3""".stripMargin,
-    // q239: delete-without-rewrite is pinned driver-side (file
-    // listing identical across deletes; purge touches only dirty
-    // units, drains the sidecar); the served aggregate answers the
-    // plain NOT-deleted filter, once per phase
-    "q239_deletion_vectors" ->
-      """WITH m AS (SELECT max(o_orderkey) AS mx FROM orders),
-        |t AS (SELECT o.*, (o.o_orderkey // (m.mx // 8 + 1))::INT AS unit
-        |  FROM orders o, m),
-        |live AS (SELECT * FROM t WHERE NOT (
-        |  (unit IN (2, 3) AND o_orderkey % 7 = 0)
-        |  OR (unit = 5 AND o_custkey % 5 = 0)
-        |  OR (unit = 2 AND o_orderkey % 11 = 3))),
-        |a AS (SELECT unit, count(*)::BIGINT AS cnt,
-        |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |      AS cents
-        |  FROM live GROUP BY 1)
-        |SELECT unit, cnt, cents, 'mor' AS phase FROM a
-        |UNION ALL
-        |SELECT unit, cnt, cents, 'purged' AS phase FROM a""".stripMargin,
-    "q238_multiwriter_store" ->
-      """SELECT o_custkey % 256 AS g, count(*)::BIGINT AS cnt,
-        |  CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-        |    AS cents
-        |FROM orders GROUP BY 1""".stripMargin,
-    // q237: the re-clustering benefit is pinned driver-side (the box
-    // reads at most half the rows under the new layout's index); the
-    // served lookup answers the plain box filter
-    "q237_optimize_zorder" ->
-      """WITH mx AS (SELECT max(o_custkey) AS ckmax,
-        |    max(datediff('day', DATE '1995-01-01', o_orderdate::DATE))
-        |      AS ddmax
-        |  FROM orders)
-        |SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders, mx
-        |WHERE o_custkey BETWEEN ckmax // 8 AND ckmax // 4
-        |  AND datediff('day', DATE '1995-01-01', o_orderdate::DATE)
-        |      BETWEEN ddmax // 2 AND 3 * ddmax // 4""".stripMargin,
-    // q236: conjunction pruning is pinned driver-side (strictly
-    // fewer units than either single predicate); the served box
-    // lookup answers the plain two-predicate filter
-    "q236_multicol_zonemap" ->
-      """WITH mx AS (SELECT max(o_custkey) AS ckmax,
-        |    max(datediff('day', DATE '1995-01-01', o_orderdate::DATE))
-        |      AS ddmax
-        |  FROM orders)
-        |SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders, mx
-        |WHERE o_custkey BETWEEN ckmax // 4 AND ckmax // 2
-        |  AND datediff('day', DATE '1995-01-01', o_orderdate::DATE)
-        |      BETWEEN ddmax // 4 AND ddmax // 2""".stripMargin,
-    // same contract as q192: the (incrementally-maintained) index
-    // only decides which shard directories are READ; the residual
-    // semi join makes the answer independent of false positives, so
-    // the oracle is the plain filter. Index == one-shot bit-exactness
-    // is pinned driver-side inside the query (a require, not SQL).
-    "q147_incr_bloom_index" ->
-      """WITH p AS (SELECT o_orderkey FROM orders WHERE o_orderkey % 11 = 4
-        |  ORDER BY o_orderkey LIMIT 5)
-        |SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-        |FROM orders o JOIN p USING (o_orderkey)""".stripMargin,
-    "q193_dedup_keep_best" -> keepBestSql,
-    "q194_jsonl_roundtrip" -> jsonlSql,
-    // register-wise max is associative + idempotent, so the
-    // incrementally-folded view equals the one-shot sketch — q176's
-    // register-rebuild SQL verbatim
-    "q195_hll_view" -> hllSql(includeExact = false),
-    "q196_shortest_paths" -> ssspSql,
-    "q197_changelog" -> changelogSql,
-    // exact integer counts; each ratio is a single division of exact
-    // longs — deterministic without rounding (the q122 contract)
-    "q198_skew_profile" ->
-      """WITH c AS (SELECT o_custkey AS key, count(*)::BIGINT AS cnt
-        |  FROM orders GROUP BY 1),
-        |t AS (SELECT sum(cnt)::BIGINT AS total, count(*)::BIGINT AS nkeys
-        |  FROM c)
-        |SELECT key, cnt, cnt::DOUBLE / total::DOUBLE AS share,
-        |  (cnt * nkeys)::DOUBLE / total::DOUBLE AS skew_x
-        |FROM c, t ORDER BY cnt DESC, key LIMIT 10""".stripMargin,
-    // count addition over any batch split == the one-shot sketch —
-    // q130's register-replay SQL verbatim
-    "q199_ddsketch_view" -> ddSketchSql(Seq(0.5, 0.9, 0.99)),
-    // the checksum aggregate over the ORIGINAL parquet — equality
-    // proves the ORC export/import value-lossless (q194's contract
-    // for binary columnar)
-    "q200_orc_roundtrip" ->
-      """SELECT l_returnflag, count(*)::BIGINT AS n,
-        |  sum(round(l_quantity)::BIGINT)::BIGINT AS sum_qty,
-        |  sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT
-        |    AS rev_cents,
-        |  sum((l_shipdate::DATE - DATE '1992-01-01'))::BIGINT
-        |    AS sum_ship_days
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
-        |GROUP BY 1""".stripMargin,
-    // Pearson from exact integer moments: the only float ops are one
-    // division and two correctly-rounded sqrts on identical integer
-    // inputs — no rounding contract (contrast corr() over doubles)
-    "q201_rolling_corr" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
-        |    sum(CASE WHEN event_type = 'click'
-        |      THEN round(value * 100, 0)::BIGINT ELSE 0 END)::BIGINT AS x,
-        |    sum(CASE WHEN event_type = 'purchase'
-        |      THEN round(value * 100, 0)::BIGINT ELSE 0 END)::BIGINT AS y
-        |  FROM events GROUP BY 1),
-        |w AS (SELECT day,
-        |    (count(*) OVER win)::BIGINT AS n,
-        |    (sum(x) OVER win)::BIGINT AS sx, (sum(y) OVER win)::BIGINT AS sy,
-        |    (sum(x * x) OVER win)::BIGINT AS sxx,
-        |    (sum(y * y) OVER win)::BIGINT AS syy,
-        |    (sum(x * y) OVER win)::BIGINT AS sxy,
-        |    row_number() OVER (ORDER BY day) AS rn
-        |  FROM d
-        |  WINDOW win AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
-        |SELECT strftime(day, '%Y-%m-%d') AS day,
-        |  (n * sxy - sx * sy)::DOUBLE
-        |    / (sqrt((n * sxx - sx * sx)::DOUBLE)
-        |       * sqrt((n * syy - sy * sy)::DOUBLE)) AS corr
-        |FROM w WHERE rn >= 7
-        |  AND (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0""".stripMargin,
-    // the 3-sigma test folded into pure integer algebra — zero floats
-    // anywhere in the query
-    "q202_anomaly_days" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS day,
-        |    sum(round(value * 100, 0)::BIGINT)::BIGINT AS x
-        |  FROM events GROUP BY 1),
-        |w AS (SELECT day, x,
-        |    (count(*) OVER win)::BIGINT AS n,
-        |    (sum(x) OVER win)::BIGINT AS sx,
-        |    (sum(x * x) OVER win)::BIGINT AS sxx,
-        |    row_number() OVER (ORDER BY day) AS rn
-        |  FROM d
-        |  WINDOW win AS (ORDER BY day ROWS BETWEEN 13 PRECEDING AND 1 PRECEDING))
-        |SELECT strftime(day, '%Y-%m-%d') AS day, x AS cents,
-        |  (n * x - sx) * (n * x - sx) > 9 * (n * sxx - sx * sx) AS is_anomaly
-        |FROM w WHERE rn >= 14""".stripMargin,
-    // md5-deal with integer ticket replication: selection probability
-    // strictly increasing in w, no RNG, unique (ticket, doc_id) order
-    "q203_weighted_sample" ->
-      """WITH wt AS (SELECT doc_id, (1 + n_chars // 500)::BIGINT AS w
-        |  FROM documents),
-        |tk AS (SELECT doc_id, w,
-        |    unnest(generate_series(1, w)) AS g FROM wt),
-        |best AS (SELECT doc_id, w,
-        |    min(md5(doc_id::VARCHAR || ':' || g::VARCHAR)) AS ticket
-        |  FROM tk GROUP BY doc_id, w)
-        |SELECT doc_id, w, ticket FROM best
-        |ORDER BY ticket, doc_id LIMIT 100""".stripMargin,
-    // quartile boundaries are exact rank-k values; bucket = 1 +
-    // |{boundary < v}| with identical left tie-breaking; stats exact
-    "q204_equidepth_bins" ->
-      """WITH v AS (SELECT l_extendedprice AS v FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL),
-        |n AS (SELECT count(*)::BIGINT AS n FROM v),
-        |q AS (SELECT * FROM (VALUES (1, 4), (1, 2), (3, 4))
-        |  AS t(num, den)),
-        |k AS (SELECT ((n.n * num + den - 1) // den)::BIGINT AS rank
-        |  FROM q, n),
-        |r AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM v),
-        |b AS (SELECT r.v AS bv FROM k JOIN r ON r.rn = k.rank)
-        |SELECT 1 + (SELECT count(*) FROM b WHERE bv < l.l_extendedprice)::BIGINT
-        |    AS bucket,
-        |  count(*)::BIGINT AS n, min(l_extendedprice) AS lo,
-        |  max(l_extendedprice) AS hi,
-        |  sum(round(l_extendedprice * 100, 0)::BIGINT)::BIGINT AS sum_cents
-        |FROM lineitem l WHERE l_extendedprice IS NOT NULL
-        |GROUP BY 1""".stripMargin,
-    // add-one-smoothed bigram LM trained and applied on the same
-    // corpus: probabilities are ratios of exact integer counts; V is
-    // re-derived (count DISTINCT cur) rather than passed, so both
-    // engines agree by construction; avg of ln-terms rounded (rule 9)
-    "q205_perplexity" ->
-      """WITH toks AS (SELECT doc_id,
-        |    list_filter(string_split(lower(text), ' '), x -> x <> '') AS t
-        |  FROM documents),
-        |bg AS MATERIALIZED (SELECT doc_id,
-        |    CASE WHEN i = 1 THEN '<S>' ELSE t[i-1] END AS prev,
-        |    t[i] AS cur
-        |  FROM toks, unnest(generate_series(1, len(t))) AS g(i)),
-        |cp AS (SELECT prev, count(*)::BIGINT AS c_prev FROM bg GROUP BY 1),
-        |cb AS (SELECT prev, cur, count(*)::BIGINT AS c_bg
-        |  FROM bg GROUP BY 1, 2),
-        |v AS (SELECT count(DISTINCT cur)::BIGINT AS v FROM bg)
-        |SELECT bg.doc_id, count(*)::BIGINT AS n_bigrams,
-        |  round(sum(ln((c_prev + v.v)::DOUBLE / (c_bg + 1)::DOUBLE))
-        |    / count(*), 6) AS nll
-        |FROM bg JOIN cb USING (prev, cur) JOIN cp USING (prev), v
-        |GROUP BY 1""".stripMargin,
-    // one md5 draw per (shard, doc); min_by over the 34-char
-    // h||lpad(s,2) key replays Spark's struct(h, s) tiebreak exactly;
-    // HRW property checked by the oracle itself: movers only on shard 8
-    "q206_hrw_sharding" ->
-      """WITH o AS (SELECT doc_id,
-        |    min_by(s, md5('v1:' || s::VARCHAR || ':' || doc_id::VARCHAR)
-        |      || lpad(s::VARCHAR, 2, '0')) AS shard_old
-        |  FROM documents, unnest(generate_series(0, 7)) AS g(s)
-        |  GROUP BY doc_id),
-        |n AS (SELECT doc_id,
-        |    min_by(s, md5('v1:' || s::VARCHAR || ':' || doc_id::VARCHAR)
-        |      || lpad(s::VARCHAR, 2, '0')) AS shard
-        |  FROM documents, unnest(generate_series(0, 8)) AS g(s)
-        |  GROUP BY doc_id)
-        |SELECT shard, count(*)::BIGINT AS n_docs,
-        |  sum(CASE WHEN shard_old <> shard THEN 1 ELSE 0 END)::BIGINT
-        |    AS n_moved
-        |FROM o JOIN n USING (doc_id) GROUP BY 1""".stripMargin,
-    // per-term float math written in the IDENTICAL op sequence as the
-    // Spark side (each IEEE op correctly rounded on identical integer
-    // inputs); only the vocab-order sums differ → round 6 (rule 9);
-    // out-of-vocab tails are closed-form from integer coverage sums
-    "q207_lang_jsd" -> langJsdSql,
-    // count addition is order-free, so the state-store snapshot after
-    // the two-batch replay equals the batch count table — the
-    // streaming gate answers q207's SQL verbatim
-    "q209_stream_lang_jsd" -> langJsdSql,
-    // probe + re-rank replayed from the PERSISTED index bytes alone
-    // (centroid parquet + hive-partitioned postings): c2 and every
-    // dot are index-ordered double folds on float32 values that
-    // round-trip parquet exactly — hash-exact, and it proves the
-    // stored postings equal the live assignment
-    "q210_ivf_index_table" ->
-      ivfIndexSql(operators.Similarity.scratchIvfIndexPath),
-    // the incrementally-appended index must answer the ONE-SHOT
-    // build's oracle — assignment with a fixed router is
-    // batching-free, so the same SQL replays from this gate's bytes
-    "q215_stream_ivf_append" ->
-      ivfIndexSql(s"${operators.Similarity.scratchIvfStreamPath}/idx"),
-    // slope is one division of exact integer moments; intercept is
-    // the IDENTICAL 3-op IEEE sequence on both engines — no rounding
-    "q216_trend_fit" -> trendFitSql,
-    // long addition is order-free, so the state-store daily snapshot
-    // equals the batch daily table — the gate answers q216 verbatim
-    "q219_stream_trend" -> trendFitSql,
-    // max over identical doubles is exact; only the 8-term qpos sum
-    // is order-sensitive → round 6 (rule 9), cand_doc tiebreak
-    "q220_maxsim" ->
-      """WITH t AS (SELECT vec_id // 8 AS doc, vec_id % 8 AS pos,
-        |    embedding::DOUBLE[] AS v FROM embeddings),
-        |n AS (SELECT doc, pos, v,
-        |    sqrt(list_dot_product(v, v)) AS nm FROM t),
-        |q AS (SELECT doc AS qd, pos AS qpos, v AS qv, nm AS qn
-        |  FROM n WHERE doc < 2),
-        |mx AS (SELECT q.qd, q.qpos, c.doc AS cd,
-        |    max(list_dot_product(q.qv, c.v) / (q.qn * c.nm)) AS m
-        |  FROM q JOIN n c ON q.qd <> c.doc
-        |  GROUP BY 1, 2, 3),
-        |sc AS (SELECT qd AS query_doc, cd AS cand_doc,
-        |    round(sum(m), 6) AS maxsim
-        |  FROM mx GROUP BY 1, 2)
-        |SELECT query_doc, cand_doc, maxsim, rank FROM (
-        |  SELECT query_doc, cand_doc, maxsim, row_number() OVER (
-        |    PARTITION BY query_doc ORDER BY maxsim DESC, cand_doc) AS rank
-        |  FROM sc) WHERE rank <= 5""".stripMargin,
-    // positions are 1-based here vs posexplode's 0-based — distances
-    // and counts are base-invariant; exact ints, one division
-    "q221_proximity" -> proximitySql,
-    // q242: the same proximity ranking answered from the stored
-    // POSITIONAL postings (min-dist is shift-invariant, so the
-    // store's 0-based positions and the SQL's 1-based agree)
-    "q242_stored_proximity" -> proximitySql,
-    // q133's register rebuild, merged per TRAILING 7-day window —
-    // register max is associative/idempotent, so the windowed merge
-    // equals sketching the raw window directly
-    "q222_rolling_distinct" -> rollingMauSql,
-    // register max is order-free across arrival batches, so the
-    // state-store daily registers equal the batch daily states and
-    // the same windowed-merge SQL grades the streaming gate
-    "q224_stream_rolling_mau" -> rollingMauSql,
-    // rank k = ceil(W*q) in exact integer math; the crossing value is
-    // tie-invariant, so one weighted cum-sum window replays the
-    // two-pass selection exactly
-    "q225_weighted_median" ->
-      """WITH src AS (SELECT l_extendedprice AS v,
-        |    CAST(round(l_quantity) AS BIGINT) AS w
-        |  FROM lineitem
-        |  WHERE l_extendedprice IS NOT NULL AND round(l_quantity) > 0),
-        |t AS (SELECT sum(w)::BIGINT AS tw FROM src),
-        |rk AS (SELECT label AS q_label,
-        |    ((tw * num + den - 1) // den)::BIGINT AS rank
-        |  FROM t, (VALUES ('p50', 1::BIGINT, 2::BIGINT),
-        |    ('p90', 9, 10)) q(label, num, den)),
-        |ord AS (SELECT v, sum(w) OVER (ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw
-        |  FROM src)
-        |SELECT rk.q_label, rk.rank, min(ord.v) AS value
-        |FROM rk JOIN ord ON ord.cw >= rk.rank
-        |GROUP BY 1, 2""".stripMargin,
-    // every term exact longs over the (cents, custkey)-tiebroken
-    // ascending order; gini is ONE division of exact ints
-    "q226_gini" ->
-      """WITH cust AS (SELECT o_custkey,
-        |    sum(round(o_totalprice * 100))::BIGINT AS x
-        |  FROM orders GROUP BY 1),
-        |r AS (SELECT x, row_number() OVER (ORDER BY x, o_custkey) AS i
-        |  FROM cust)
-        |SELECT count(*)::BIGINT AS n_customers,
-        |  sum(x)::BIGINT AS total_cents,
-        |  (2 * sum(i * x) - (count(*) + 1) * sum(x))::BIGINT::DOUBLE
-        |    / (count(*) * sum(x))::BIGINT::DOUBLE AS gini
-        |FROM r""".stripMargin,
-    // decile = (10*(i-1)) div n in exact integer math on both engines
-    // (Spark's double division is correctly rounded, so the cast
-    // truncation equals floor-div for these magnitudes); share is ONE
-    // division of exact cents
-    "q227_decile_share" ->
-      """WITH cust AS (SELECT o_custkey,
-        |    sum(round(o_totalprice * 100))::BIGINT AS x
-        |  FROM orders GROUP BY 1),
-        |r AS (SELECT x, row_number() OVER (ORDER BY x, o_custkey) AS i
-        |  FROM cust),
-        |t AS (SELECT count(*)::BIGINT AS n, sum(x)::BIGINT AS sx FROM cust)
-        |SELECT ((10 * (i - 1)) // t.n)::BIGINT AS decile,
-        |  count(*)::BIGINT AS n_cust, sum(x)::BIGINT AS cents,
-        |  sum(x)::BIGINT::DOUBLE / t.sx::DOUBLE AS share
-        |FROM r, t GROUP BY 1, t.n, t.sx""".stripMargin,
-    // the identical mul-add-div IEEE sequence on exact integer sums —
-    // deterministic with no rounding contract (rule 11 casts)
-    "q228_target_encoding" ->
-      """WITH g AS (SELECT sum(round(value * 100))::BIGINT AS gx,
-        |    count(*)::BIGINT AS gn FROM events),
-        |c AS (SELECT event_type,
-        |    sum(round(value * 100))::BIGINT AS cx,
-        |    count(*)::BIGINT AS n
-        |  FROM events GROUP BY 1)
-        |SELECT event_type, n, cx AS sum_cents,
-        |  (cx::DOUBLE + 10.0::DOUBLE * (g.gx::DOUBLE / g.gn::DOUBLE))
-        |    / (n::DOUBLE + 10.0::DOUBLE) AS enc_cents
-        |FROM c, g""".stripMargin,
-    // replica B re-derived from A by the same deterministic rules;
-    // digest folds are order-free, so both engines agree bucket-wise
-    "q229_repair_targets" ->
-      """WITH canon AS (SELECT event_id, event_id % 64 AS bucket,
-        |    md5(event_id::VARCHAR || '|' || user_id::VARCHAR || '|' ||
-        |      event_type || '|' || epoch_us(ts)::VARCHAR || '|' ||
-        |      CAST(round(value * 100, 0) AS BIGINT)::VARCHAR) AS m
-        |  FROM events),
-        |a AS (SELECT bucket, ('0x' || substr(m, 1, 15))::BIGINT AS hv
-        |  FROM canon),
-        |bsrc AS (SELECT event_id, user_id, event_type, ts,
-        |    CASE WHEN event_id % 503 = 0 THEN value + 1.0::DOUBLE
-        |         ELSE value END AS value
-        |  FROM events WHERE event_id % 499 <> 0),
-        |b AS (SELECT event_id % 64 AS bucket,
-        |    ('0x' || substr(md5(event_id::VARCHAR || '|' ||
-        |      user_id::VARCHAR || '|' || event_type || '|' ||
-        |      epoch_us(ts)::VARCHAR || '|' ||
-        |      CAST(round(value * 100, 0) AS BIGINT)::VARCHAR),
-        |      1, 15))::BIGINT AS hv
-        |  FROM bsrc),
-        |da AS (SELECT bucket, count(*)::BIGINT AS n_a, bit_xor(hv) AS xa,
-        |    CAST(sum(hv % 4294967296) AS BIGINT) AS sa FROM a GROUP BY 1),
-        |db AS (SELECT bucket, count(*)::BIGINT AS n_b, bit_xor(hv) AS xb,
-        |    CAST(sum(hv % 4294967296) AS BIGINT) AS sb FROM b GROUP BY 1),
-        |j AS (SELECT bucket::BIGINT AS bucket,
-        |    CASE WHEN n_b IS NULL THEN 'a_only'
-        |         WHEN n_a IS NULL THEN 'b_only'
-        |         WHEN n_a <> n_b OR xa <> xb OR sa <> sb THEN 'divergent'
-        |    END AS status,
-        |    COALESCE(n_a, 0) AS n_a, COALESCE(n_b, 0) AS n_b
-        |  FROM da FULL OUTER JOIN db USING (bucket))
-        |SELECT bucket, status, n_a, n_b FROM j
-        |WHERE status IS NOT NULL""".stripMargin,
-
-    // the merged-window DDSketch answer is the bucket of the window's
-    // rank-⌈qn⌉ element (the q130 contract, per sliding window)
-    "q223_rolling_p95" -> {
-      val bounds = graft.expressions.DdSketch.boundaries(0.01, 1.0, 2e5)
-      val bl = graft.expressions.DdSketch.sqlList(bounds)
-      val nb = bounds.length
-      s"""WITH vals AS (SELECT ts::DATE AS day, value AS x FROM events),
-         |days AS (SELECT DISTINCT day FROM vals),
-         |w AS MATERIALIZED (SELECT d.day, v.x
-         |  FROM days d JOIN vals v ON v.day BETWEEN d.day - 6 AND d.day),
-         |n AS (SELECT day, count(*) AS n FROM w GROUP BY 1),
-         |nd AS (SELECT d.day, count(*)::BIGINT AS n_days
-         |  FROM days d JOIN days m ON m.day BETWEEN d.day - 6 AND d.day
-         |  GROUP BY 1),
-         |rk AS (SELECT day, greatest(1, CAST(ceil(0.95 * n) AS BIGINT)) AS r
-         |  FROM n),
-         |ord AS (SELECT day, x,
-         |    row_number() OVER (PARTITION BY day ORDER BY x) AS rn FROM w),
-         |xr AS (SELECT rk.day, ord.x
-         |  FROM rk JOIN ord ON ord.day = rk.day AND ord.rn = rk.r),
-         |bl AS (SELECT $bl::DOUBLE[] AS bs),
-         |idx AS (SELECT day, len(list_filter(bs, b -> b <= x)) AS i
-         |  FROM xr CROSS JOIN bl)
-         |SELECT strftime(idx.day, '%Y-%m-%d') AS day, nd.n_days,
-         |  CASE WHEN i <= 0 THEN bs[1]
-         |       WHEN i >= $nb THEN bs[$nb]
-         |       ELSE 2.0 * bs[i] * bs[i + 1] / (bs[i] + bs[i + 1]) END AS p95
-         |FROM idx CROSS JOIN bl JOIN nd ON nd.day = idx.day""".stripMargin
-    },
-    // the max runs over exact integers (no division inside), so the
-    // argmax day is engine-independent; earliest-day tiebreak
-    "q217_cusum" ->
-      """WITH daily AS (SELECT user_id, ts::DATE AS day,
-        |    sum(round(value * 100))::BIGINT AS y
-        |  FROM events WHERE event_type = 'click' GROUP BY 1, 2),
-        |d AS (SELECT user_id, day,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY day)::BIGINT AS k,
-        |    sum(y) OVER (PARTITION BY user_id ORDER BY day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT AS sk,
-        |    count(*) OVER (PARTITION BY user_id)::BIGINT AS n,
-        |    sum(y) OVER (PARTITION BY user_id)::BIGINT AS sn
-        |  FROM daily),
-        |dev AS (SELECT user_id, day, n,
-        |    abs(n * sk - k * sn)::BIGINT AS dev FROM d)
-        |SELECT user_id, n AS n_days,
-        |  strftime(day, '%Y-%m-%d') AS cp_day, dev AS d_stat
-        |FROM (SELECT *, row_number() OVER (
-        |    PARTITION BY user_id ORDER BY dev DESC, day) AS rn FROM dev)
-        |WHERE rn = 1 AND n >= 2""".stripMargin,
-    // the q40 probe machinery swept over nProbe; cell ids differ
-    // (vec_id vs array index) but the mapping is monotone, so probe
-    // sets and tiebreaks match; hits exact ints, recall ONE division
-    "q218_ann_recall" ->
-      """WITH base AS MATERIALIZED (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |cells AS (SELECT vec_id AS cell, v AS cv, list_dot_product(v, v) AS c2
-        |  FROM (SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn
-        |    FROM base) WHERE rn <= 16),
-        |dist AS MATERIALIZED (SELECT b.vec_id, c.cell,
-        |    c.c2 - 2 * list_dot_product(b.v, c.cv) AS d
-        |  FROM base b CROSS JOIN cells c),
-        |assign AS (SELECT vec_id, cell FROM (
-        |  SELECT vec_id, cell, row_number() OVER (
-        |    PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dist)
-        |  WHERE rn = 1),
-        |qd AS (SELECT vec_id AS query_id, cell, row_number() OVER (
-        |    PARTITION BY vec_id ORDER BY d, cell) AS rn
-        |  FROM dist WHERE vec_id < 10),
-        |probes AS (SELECT qd.query_id, qd.cell, np.np
-        |  FROM qd, (VALUES (1), (2), (4), (8)) np(np) WHERE qd.rn <= np.np),
-        |qv AS (SELECT vec_id AS query_id, v AS qv,
-        |    sqrt(list_dot_product(v, v)) AS qn FROM base WHERE vec_id < 10),
-        |cand AS (SELECT b.vec_id AS cand_id, b.v AS cv2,
-        |    sqrt(list_dot_product(b.v, b.v)) AS cn, a.cell
-        |  FROM base b JOIN assign a USING (vec_id)),
-        |scored AS (SELECT p.np, p.query_id, c.cand_id,
-        |    list_dot_product(q.qv, c.cv2) / (q.qn * c.cn) AS cosine
-        |  FROM probes p JOIN cand c USING (cell)
-        |  JOIN qv q ON q.query_id = p.query_id
-        |  WHERE p.query_id <> c.cand_id),
-        |ivf AS (SELECT np, query_id, cand_id FROM (
-        |  SELECT np, query_id, cand_id, row_number() OVER (
-        |    PARTITION BY np, query_id ORDER BY cosine DESC, cand_id) AS rank
-        |  FROM scored) WHERE rank <= 5),
-        |ex_scored AS (SELECT q.query_id, b.vec_id AS cand_id,
-        |    list_dot_product(q.qv, b.v)
-        |      / (q.qn * sqrt(list_dot_product(b.v, b.v))) AS cosine
-        |  FROM base b, qv q WHERE q.query_id <> b.vec_id),
-        |exact AS (SELECT query_id, cand_id FROM (
-        |  SELECT query_id, cand_id, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
-        |  FROM ex_scored) WHERE rank <= 5),
-        |tot AS (SELECT count(*)::BIGINT AS total FROM exact)
-        |SELECT np::BIGINT AS n_probe, count(*)::BIGINT AS hits, tot.total,
-        |  count(*)::BIGINT::DOUBLE / tot.total::DOUBLE AS recall
-        |FROM ivf JOIN exact USING (query_id, cand_id), tot
-        |GROUP BY 1, 3""".stripMargin,
-    // 100*cum >= pct*tot is exact integer math (window sums stay
-    // integral); min_by replays Spark's min(struct(k, cum)) frontier
-    "q213_vocab_coverage" ->
-      """WITH c AS MATERIALIZED (SELECT w, count(*)::BIGINT AS c FROM (
-        |    SELECT unnest(list_filter(string_split(lower(text), ' '),
-        |      x -> x <> '')) AS w FROM documents)
-        |  GROUP BY 1),
-        |t AS (SELECT sum(c)::BIGINT AS tot FROM c),
-        |r AS (SELECT w, c, row_number() OVER (ORDER BY c DESC, w) AS k,
-        |    sum(c) OVER (ORDER BY c DESC, w
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM c)
-        |SELECT tp AS target_pct, min(k)::BIGINT AS k_words,
-        |  min_by(cum, k)::BIGINT AS cum_tokens,
-        |  min(tot)::BIGINT AS total_tokens
-        |FROM r, t, (VALUES (50::BIGINT), (75), (90), (95), (99)) v(tp)
-        |WHERE 100 * cum >= tp * tot
-        |GROUP BY 1""".stripMargin,
-    // directed pairs; rational threshold keeps the filter exact
-    // integer math; containment is ONE division of exact ints
-    "q214_containment" ->
-      s"""WITH toks AS ($toksCte),
-         |sh AS (SELECT DISTINCT doc_id, unnest(list_transform(generate_series(1, len(t) - 2),
-         |  i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS s FROM toks),
-         |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-         |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    count(*) AS inter
-         |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id <> b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT doc_a, doc_b, inter::BIGINT AS inter, sa.n::BIGINT AS n_a,
-         |  inter::DOUBLE / sa.n::DOUBLE AS containment
-         |FROM inter JOIN sizes sa ON doc_a = sa.doc_id
-         |WHERE inter * 10 >= sa.n * 7""".stripMargin,
-    // one row_number replays the two-phase range rank: md5 hex is
-    // ASCII so VARCHAR order == Spark's binary string order; doc_id
-    // tiebreak per hard rule 4; integer div/mod
-    "q208_epoch_shuffle" ->
-      """WITH r AS (SELECT doc_id,
-        |    row_number() OVER (
-        |      ORDER BY md5('ep:1:' || doc_id::VARCHAR), doc_id) AS rank
-        |  FROM documents)
-        |SELECT doc_id, ((rank - 1) // 64)::BIGINT AS batch,
-        |  ((rank - 1) % 64)::BIGINT AS pos
-        |FROM r""".stripMargin
-  )
-
-  /** q210's oracle shape, parameterized by the index root so q215's
-    * incrementally-built index replays the identical probe + re-rank
-    * from ITS persisted bytes: c2 and every dot are index-ordered
-    * double folds on float32 values that round-trip parquet exactly —
-    * hash-exact, and it proves stored postings == live assignment. */
-  private def ivfIndexSql(path: String): String =
-    s"""WITH cent AS (SELECT cell::INT AS cell,
-      |    centroid::DOUBLE[] AS cv,
-      |    list_dot_product(centroid::DOUBLE[], centroid::DOUBLE[]) AS c2
-      |  FROM read_parquet('$path/cent/*.parquet')),
-      |post AS (SELECT cell::INT AS cell, cand_id, cv::DOUBLE[] AS pv
-      |  FROM read_parquet('$path/post/*/*/*.parquet',
-      |    hive_partitioning=1)),
-      |q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-      |  FROM embeddings WHERE vec_id < 10),
-      |dist AS (SELECT q.query_id, c.cell,
-      |    c.c2 - 2 * list_dot_product(q.qv, c.cv) AS d, q.qv
-      |  FROM q CROSS JOIN cent c),
-      |probes AS (SELECT query_id, cell, qv FROM (
-      |  SELECT query_id, cell, qv, row_number() OVER (
-      |    PARTITION BY query_id ORDER BY d, cell) AS rn FROM dist)
-      |  WHERE rn <= 4),
-      |scored AS (SELECT p.query_id, t.cand_id,
-      |    list_dot_product(p.qv, t.pv)
-      |      / (sqrt(list_dot_product(p.qv, p.qv))
-      |        * sqrt(list_dot_product(t.pv, t.pv))) AS cosine
-      |  FROM probes p JOIN post t USING (cell)
-      |  WHERE p.query_id <> t.cand_id)
-      |SELECT query_id, cand_id, cosine, rank FROM (
-      |  SELECT query_id, cand_id, cosine, row_number() OVER (
-      |    PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
-      |  FROM scored) WHERE rank <= 5""".stripMargin
-
-  /** q222's oracle (and q224's — the streaming gate's state-store
-    * daily registers equal the batch daily states): q133's register
-    * rebuild merged per trailing 7-day window. */
-  private def rollingMauSql: String = {
-      val alpha =
-        java.lang.Double.toString(graft.expressions.HllSketch.alpha(512))
-      s"""WITH vals AS (SELECT ts::DATE AS day,
-         |    CAST(user_id AS VARCHAR) AS s FROM events),
-         |h AS (SELECT day, ('0x' || substr(md5(s), 1, 13))::BIGINT AS h
-         |  FROM vals),
-         |rr AS (SELECT day, h >> 43 AS b,
-         |    CASE WHEN (h & ((1::BIGINT << 43) - 1)) = 0 THEN 44
-         |         ELSE 43 - CAST(floor(log2(h & ((1::BIGINT << 43) - 1))) AS BIGINT)
-         |    END AS r
-         |  FROM h),
-         |mx AS (SELECT day, b, max(r) AS mr FROM rr GROUP BY 1, 2),
-         |days AS (SELECT DISTINCT day FROM vals),
-         |nd AS (SELECT d.day, count(*)::BIGINT AS n_days
-         |  FROM days d JOIN days m ON m.day BETWEEN d.day - 6 AND d.day
-         |  GROUP BY 1),
-         |win AS (SELECT d.day, mx.b, max(mx.mr) AS mr
-         |  FROM days d JOIN mx ON mx.day BETWEEN d.day - 6 AND d.day
-         |  GROUP BY 1, 2),
-         |grid AS (SELECT d.day, t.j
-         |  FROM days d CROSS JOIN generate_series(0, 511) t(j)),
-         |regs AS (SELECT grid.day, grid.j, coalesce(win.mr, 0) AS mr
-         |  FROM grid LEFT JOIN win ON win.day = grid.day AND win.b = grid.j),
-         |sm AS (SELECT day,
-         |    list_reduce(list_prepend(0.0, list(1.0 / (1::BIGINT << mr) ORDER BY j)),
-         |      (a, x) -> a + x) AS s,
-         |    sum(CASE WHEN mr = 0 THEN 1 ELSE 0 END) AS v
-         |  FROM regs GROUP BY 1),
-         |est AS (SELECT day,
-         |    $alpha::DOUBLE * 512.0 * 512.0 / s AS raw, v FROM sm)
-         |SELECT strftime(est.day, '%Y-%m-%d') AS day, nd.n_days,
-         |  round(CASE WHEN raw <= 1280.0 AND v > 0
-         |             THEN 512.0 * ln(512.0 / v) ELSE raw END, 4)
-         |    AS rolling_mau
-         |FROM est JOIN nd USING (day)""".stripMargin
-  }
-
-  /** q216's oracle (and q219's — the streaming gate's state-store
-    * daily snapshot equals the batch daily table, so the same SQL
-    * grades both): per-user OLS from exact integer moments. */
-  private def trendFitSql: String =
-      """WITH daily AS (SELECT user_id, ts::DATE AS day,
-        |    sum(round(value * 100))::BIGINT AS y,
-        |    (ts::DATE - DATE '2024-01-01')::BIGINT AS x
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2, 4),
-        |m AS (SELECT user_id, count(*)::BIGINT AS n,
-        |    sum(x)::BIGINT AS sx, sum(y)::BIGINT AS sy,
-        |    sum(x * x)::BIGINT AS sxx, sum(x * y)::BIGINT AS sxy
-        |  FROM daily GROUP BY 1)
-        |SELECT user_id, n AS n_days,
-        |  (n * sxy - sx * sy)::DOUBLE / (n * sxx - sx * sx)::DOUBLE
-        |    AS slope,
-        |  (sy::DOUBLE - ((n * sxy - sx * sy)::DOUBLE
-        |      / (n * sxx - sx * sx)::DOUBLE) * sx::DOUBLE) / n::DOUBLE
-        |    AS intercept
-        |FROM m WHERE n * sxx - sx * sx > 0""".stripMargin
-
-  /** q207's oracle (and q209's — the streaming gate's state-store
-    * snapshot equals the batch count table, so the same SQL grades
-    * both): pairwise Jensen–Shannon divergence from per-language
-    * unigram counts, out-of-vocab tails in closed form from integer
-    * coverage sums, term sums rounded at 6 dp (rule 9). */
-  private def langJsdSql: String =
-      """WITH c AS MATERIALIZED (SELECT lang, w, count(*)::BIGINT AS c
-        |  FROM (SELECT lang,
-        |      unnest(list_filter(string_split(lower(text), ' '),
-        |        x -> x <> '')) AS w
-        |    FROM documents)
-        |  GROUP BY 1, 2),
-        |t AS MATERIALIZED (SELECT lang, sum(c)::BIGINT AS n
-        |  FROM c GROUP BY 1),
-        |pr AS (SELECT ta.lang AS lang_a, tb.lang AS lang_b,
-        |    ta.n AS n_a, tb.n AS n_b
-        |  FROM t ta, t tb WHERE ta.lang < tb.lang),
-        |j AS (SELECT a.lang AS lang_a, b.lang AS lang_b,
-        |    a.c AS ca, b.c AS cb, ta.n AS n_a, tb.n AS n_b
-        |  FROM c a JOIN c b USING (w)
-        |  JOIN t ta ON ta.lang = a.lang JOIN t tb ON tb.lang = b.lang
-        |  WHERE a.lang < b.lang),
-        |g AS (SELECT lang_a, lang_b,
-        |    sum((ca::DOUBLE / n_a::DOUBLE)
-        |      * ln(2.0::DOUBLE * (ca::DOUBLE / n_a::DOUBLE)
-        |        / (ca::DOUBLE / n_a::DOUBLE + cb::DOUBLE / n_b::DOUBLE)))
-        |      AS sa,
-        |    sum((cb::DOUBLE / n_b::DOUBLE)
-        |      * ln(2.0::DOUBLE * (cb::DOUBLE / n_b::DOUBLE)
-        |        / (ca::DOUBLE / n_a::DOUBLE + cb::DOUBLE / n_b::DOUBLE)))
-        |      AS sb,
-        |    sum(ca)::BIGINT AS sca, sum(cb)::BIGINT AS scb
-        |  FROM j GROUP BY 1, 2)
-        |SELECT lang_a, lang_b,
-        |  round(0.5::DOUBLE * (coalesce(sa, 0.0::DOUBLE)
-        |      + (1.0::DOUBLE - coalesce(sca, 0)::DOUBLE / n_a::DOUBLE)
-        |        * ln(2.0::DOUBLE))
-        |    + 0.5::DOUBLE * (coalesce(sb, 0.0::DOUBLE)
-        |      + (1.0::DOUBLE - coalesce(scb, 0)::DOUBLE / n_b::DOUBLE)
-        |        * ln(2.0::DOUBLE)),
-        |    6) AS jsd,
-        |  n_a, n_b
-        |FROM pr LEFT JOIN g USING (lang_a, lang_b)""".stripMargin
+          withStatePartitions(s, 4)(g.build(s, dir)))
+      else g.build)
+    }.toMap
+
+  /** Each gate's DuckDB oracle SQL by name. */
+  def oracleSql: Map[String, String] =
+    gates.map(g => g.name -> g.oracle).toMap
 }

@@ -99,10 +99,8 @@ object CountMin {
     * `('0x' || substr(md5(item), 8*i + 1, 8))::BIGINT % width`
     * and the Spark Column twin uses the engine's own md5/conv, so all
     * three derivations agree bit-for-bit. */
-  private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
+  private[expressions] def digest(s: String): Array[Byte] =
+    Md5Hash.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** First 13 md5 hex chars of `s` as a 52-bit long — the one hash
     * primitive every md5-derived sketch shares ([[cell]],
@@ -110,18 +108,12 @@ object CountMin {
     * alike, so the SQL twin
     * `('0x' || substr(md5(s), 1, 13))::BIGINT` is bit-identical. */
   def hash52(s: String): Long = {
-    val md = mdLocal.get(); md.reset()
-    val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val d = digest(s)
     // first 13 hex chars = first 6 bytes + the high nibble of byte 6,
     // assembled directly (a hex-string round-trip per row is pure GC)
     var h = 0L; var i = 0
     while (i < 6) { h = (h << 8) | (d(i) & 0xffL); i += 1 }
     (h << 4) | ((d(6) & 0xf0L) >>> 4)
-  }
-
-  private[expressions] def digest(s: String): Array[Byte] = {
-    val md = mdLocal.get(); md.reset()
-    md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** 32-bit slice `row` of an md5 digest (hex chars [8·row+1, 8·row+8]

@@ -1,5 +1,6 @@
 package graft.expressions
 
+import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
@@ -31,11 +32,17 @@ object Md5Hash {
     override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
   }
 
-  private def digest(s: UTF8String): Array[Byte] = {
+  /** md5 of `bytes` through this thread's reused digest — the one
+    * MessageDigest every md5-derived hash in graft shares (these
+    * expressions, `CountMin`, the streaming signatures, the catalog's
+    * scratch-path suffix). */
+  private[graft] def digest(bytes: Array[Byte]): Array[Byte] = {
     val md = mdLocal.get()
     md.reset()
-    md.digest(s.getBytes)
+    md.digest(bytes)
   }
+
+  private def digest(s: UTF8String): Array[Byte] = digest(s.getBytes)
 
   /** Analysis-time string-input check shared by both expressions. */
   private[expressions] def requireString(e: UnaryExpression): TypeCheckResult =
@@ -46,6 +53,20 @@ object Md5Hash {
   private final val HexChars =
     Array[Byte]('0', '1', '2', '3', '4', '5', '6', '7', '8', '9',
       'a', 'b', 'c', 'd', 'e', 'f')
+
+  /** The 32-char lowercase md5 hex of the UTF-8 bytes of `s` (what
+    * Spark's and DuckDB's `md5(s)` return). */
+  private[graft] def hex(s: String): String = {
+    val d = digest(s.getBytes(StandardCharsets.UTF_8))
+    val out = new Array[Char](32)
+    var i = 0
+    while (i < 16) {
+      out(2 * i) = HexChars((d(i) >> 4) & 0xf).toChar
+      out(2 * i + 1) = HexChars(d(i) & 0xf).toChar
+      i += 1
+    }
+    new String(out)
+  }
 
   /** Values of the first 16 hex nibbles of md5(s) — i.e. the first 8
     * digest bytes, high nibble first. Called from generated code. */

@@ -30,9 +30,9 @@ import scala.collection.mutable
   * over binary string order — a total order, so the scan result is
   * independent of hash-map iteration order; merge application is the
   * greedy LEFT-TO-RIGHT non-overlapping pass. DuckDB replays training
-  * exactly ([[graft.SparkEntry]]'s generated k-block SQL shares these
-  * constants): in "aaa", merging (a,a) yields "aa"+"a", and only a
-  * later (aa,a) rule could join them.
+  * exactly ([[graft.catalog.TextDedup]]'s generated k-block SQL shares
+  * these constants): in "aaa", merging (a,a) yields "aa"+"a", and only
+  * a later (aa,a) rule could join them.
   *
   * Encoding runs DISTRIBUTED: the learned ranks broadcast (k rules —
   * KBs even at 32k) and each histogram word merges its own

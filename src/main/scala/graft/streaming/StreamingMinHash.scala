@@ -57,7 +57,7 @@ object StreamingMinHash {
       val sh = toks.slice(i, i + k).mkString(" ")
       var g = 0
       while (g < nGroups) {
-        val h = Md5Hex(sh + g.toString)
+        val h = graft.expressions.Md5Hash.hex(sh + g.toString)
         var j = 0
         while (j < 4) {
           val idx = g * 4 + j

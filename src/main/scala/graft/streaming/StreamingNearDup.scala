@@ -50,7 +50,7 @@ object StreamingNearDup {
     // on e.g. tr-TR hosts ("INDEX" -> dotless-i "ındex")
     text.toLowerCase(java.util.Locale.ROOT).split(" ", -1).foreach { tok =>
       if (tok.nonEmpty) {
-        val h = Md5Hex(tok)
+        val h = graft.expressions.Md5Hash.hex(tok)
         var b = 0
         while (b < 64) {
           val nib = Character.digit(h.charAt(b / 4), 16)

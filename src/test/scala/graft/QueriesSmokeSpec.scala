@@ -1,26 +1,50 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every catalog query runs at sf0.001 and the oracle map stays in
-  * sync with the catalog (the driver's correctness gate requires both
-  * entries per operator). */
+/** Every catalog gate runs at sf0.001, gate names are unique, and a
+  * gate's `streaming` flag says exactly whether it starts a streaming
+  * query (the flag decides which gates run under pinned state
+  * partitions). */
 class QueriesSmokeSpec extends AnyFunSuite with SparkTestBase {
 
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracle keys are a subset of query keys") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
+  test("gates: 263 with distinct names") {
+    val names = SparkEntry.gates.map(_.name)
+    assert(names.size == 263)
+    assert(names.distinct.size == names.size,
+      s"duplicate gate names: ${names.diff(names.distinct).distinct}")
   }
 
-  SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-    test(s"$name runs at sf0.001") {
-      val df = fn(spark, sf0001)
-      assert(df.columns.nonEmpty)
-      df.count() // materialize; row counts may legitimately vary per query
+  private val queries = SparkEntry.queries
+
+  SparkEntry.gates.sortBy(_.name).foreach { g =>
+    test(s"${g.name} runs at sf0.001") {
+      // QueryStartedEvent reaches session listeners synchronously,
+      // before the query's start() returns
+      val started = new AtomicInteger
+      val listener = new StreamingQueryListener {
+        override def onQueryStarted(e: QueryStartedEvent): Unit =
+          started.incrementAndGet()
+        override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      }
+      spark.streams.addListener(listener)
+      try {
+        val df = queries(g.name)(spark, sf0001)
+        assert(df.columns.nonEmpty)
+        df.count() // materialize; row counts may legitimately vary per query
+      } finally spark.streams.removeListener(listener)
+      assert(g.streaming == (started.get > 0),
+        s"streaming = ${g.streaming}, but the gate started ${started.get} " +
+          "streaming queries")
     }
   }
 }

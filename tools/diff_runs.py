@@ -25,7 +25,8 @@ def main():
     con = duckdb.connect()
     oracle = json.load(open(f"{a_dir}/oracle_sql.json"))
     names = sorted(oracle.keys())
-    # include rows-only queries too (q38/q58 live outside oracle_sql)
+    # also compare result dirs that have no oracle entry (every catalog
+    # gate has an oracle today, so this only picks up stray dirs)
     import os
     for d in sorted(os.listdir(a_dir)):
         if os.path.isdir(f"{a_dir}/{d}") and d not in names:
