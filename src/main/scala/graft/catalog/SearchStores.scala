@@ -1343,7 +1343,7 @@ object SearchStores {
       // silently swallow the others' batches) fold additive facts
       // into ONE store from three real threads, every commit racing
       // through optimistic concurrency with rebase-on-loss
-      // (applyBatchWithRetry: a lost race re-reads the winner's
+      // (BucketedLog.retrying: a lost race re-reads the winner's
       // state and re-merges — the merge is a pure function of what
       // it read, so the retry IS the rebase). After landing, each
       // writer crash-REPLAYS a batch with poisoned values (×999):
@@ -1378,13 +1378,16 @@ object SearchStores {
         new Thread(() => {
           try {
             (0 until 3).foreach { b =>
-              log.applyBatchWithRetry(batchOf(w, b), b.toLong,
-                s"w$w", maxAttempts = 64)(add)
+              graft.streaming.BucketedLog.retrying(64) {
+                log.applyBatch(batchOf(w, b), b.toLong, s"w$w")(add)
+              }
             }
             // poisoned crash-replay: the writer's own mark screens it
-            log.applyBatchWithRetry(
-              batchOf(w, 1).withColumn("cents", col("cents") * 999L),
-              1L, s"w$w", maxAttempts = 64)(add)
+            graft.streaming.BucketedLog.retrying(64) {
+              log.applyBatch(
+                batchOf(w, 1).withColumn("cents", col("cents") * 999L),
+                1L, s"w$w")(add)
+            }
           } catch { case e: Throwable => failures.add(e) }
         })
       }

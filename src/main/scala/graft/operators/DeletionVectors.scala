@@ -97,10 +97,12 @@ final case class DeletionVectors(tablePath: String, dvPath: String,
     * sidecar commit rebases (the fold is a pure set union of what it
     * re-reads) instead of dying. */
   def delete(keys: DataFrame, batchId: Long): Unit =
-    log.applyBatchWithRetry(
-      keys.select(col("unit").cast("int").as("unit"), col(keyCol)),
-      batchId) { (cur, b) =>
-      cur.map(_.unionByName(b)).getOrElse(b).distinct()
+    BucketedLog.retrying() {
+      log.applyBatch(
+        keys.select(col("unit").cast("int").as("unit"), col(keyCol)),
+        batchId) { (cur, b) =>
+        cur.map(_.unionByName(b)).getOrElse(b).distinct()
+      }
     }
 
   /** Units currently carrying deletes — bounded driver fold (≤ the

@@ -107,7 +107,7 @@ final case class InvertedIndex(path: String, buckets: Int = 64,
     // no manifest entries — the common no-tombstones case costs one
     // driver FS read, zero data IO (queries on an undeleted-from
     // index pay nothing for the tombstone feature)
-    val pending = tombLog.readManifestFull(spark).exists(_._3.nonEmpty)
+    val pending = tombLog.head(spark).exists(_.entries.nonEmpty)
     if (!pending) return slice
     // no checkpoint: the tombstone state is immutable parquet files,
     // so the count scans once and the anti-join re-scans the same
@@ -156,7 +156,9 @@ final case class InvertedIndex(path: String, buckets: Int = 64,
     // default writer keeps the single-stream fail-fast contract;
     // named writers retry (concurrent streams race by design)
     if (writerId.isEmpty) postLog.appendBatch(postings, batchId)
-    else postLog.appendBatchWithRetry(postings, batchId, writerId)
+    else BucketedLog.retrying() {
+      postLog.appendBatch(postings, batchId, writerId)
+    }
     if (withForward) {
       // the postings transposed + a zero-token SENTINEL row per
       // empty doc (term "", tf 0 — the tokenizer drops empties, so
@@ -178,7 +180,9 @@ final case class InvertedIndex(path: String, buckets: Int = 64,
       val fwdRows = postings.select("cand_id", "term", "dl", "tf")
         .unionByName(sentinels)
       if (writerId.isEmpty) fwdLog.appendBatch(fwdRows, batchId)
-      else fwdLog.appendBatchWithRetry(fwdRows, batchId, writerId)
+      else BucketedLog.retrying() {
+        fwdLog.appendBatch(fwdRows, batchId, writerId)
+      }
     }
     // one-row agg; the 1-bucket stats store needs no touched-set job
     // (BucketedLog's buckets==1 fast path), so this lineage runs once
@@ -192,7 +196,9 @@ final case class InvertedIndex(path: String, buckets: Int = 64,
         .agg(sum("n").cast("long").as("n"),
           sum("sumdl").cast("long").as("sumdl"))
     if (writerId.isEmpty) statsLog.applyBatch(stats, batchId)(addStats)
-    else statsLog.applyBatchWithRetry(stats, batchId, writerId)(addStats)
+    else BucketedLog.retrying() {
+      statsLog.applyBatch(stats, batchId, writerId)(addStats)
+    }
   }
 
   /** A named ingest stream's coverage receipt — the highest batch id
@@ -279,7 +285,9 @@ final case class InvertedIndex(path: String, buckets: Int = 64,
       (-count(lit(1))).as("n"),
       (-coalesce(sum(col("dl")), lit(0L))).as("sumdl"))
       .select(lit(1).as("one"), col("n"), col("sumdl"))
-    statsLog.applyBatchWithRetry(negStats, batchId, writerId)(addStatsFold)
+    BucketedLog.retrying() {
+      statsLog.applyBatch(negStats, batchId, writerId)(addStatsFold)
+    }
   }
 
   /** DEFERRED (tombstoned) DELETE — the merge-on-read dual of
@@ -347,7 +355,9 @@ final case class InvertedIndex(path: String, buckets: Int = 64,
       .withColumn("src_writer", lit(writerId))
       .withColumn("src_batch", lit(batchId))
       .localCheckpoint()
-    tombLog.applyBatchWithRetry(tagged, batchId, writerId)(claimFold)
+    BucketedLog.retrying() {
+      tombLog.applyBatch(tagged, batchId, writerId)(claimFold)
+    }
     commitClaimedStats(spark, writerId, batchId)
   }
 
@@ -391,7 +401,9 @@ final case class InvertedIndex(path: String, buckets: Int = 64,
       .withColumn("src_writer", lit(writerId))
       .withColumn("src_batch", lit(batchId))
       .localCheckpoint()
-    tombLog.applyBatchWithRetry(tagged, batchId, writerId)(claimFold)
+    BucketedLog.retrying() {
+      tombLog.applyBatch(tagged, batchId, writerId)(claimFold)
+    }
     commitClaimedStats(spark, writerId, batchId)
   }
 
@@ -606,7 +618,7 @@ final case class InvertedIndex(path: String, buckets: Int = 64,
 
   /** Un-purged tombstones (monitoring + spec pins). */
   def tombstoneCount(spark: SparkSession): Long =
-    tombLog.readManifestFull(spark).fold(0L)(_ => tombLog.read(spark).count())
+    tombLog.head(spark).fold(0L)(_ => tombLog.read(spark).count())
 
   /** Segment-aware OPTIMIZE: collapse every segmented bucket's
     * segment list to ONE dir (the q232 discipline for [[BucketedLog
@@ -631,14 +643,14 @@ final case class InvertedIndex(path: String, buckets: Int = 64,
     * the pass). */
   private[graft] def postingsSegmentCounts(
       spark: SparkSession): Map[Int, Int] =
-    postLog.readManifestFull(spark)
-      .fold(Map.empty[Int, Int])(_._3.map { case (b, ds) => b -> ds.size })
+    postLog.head(spark).fold(Map.empty[Int, Int])(
+      _.entries.map { case (b, ds) => b -> ds.size })
 
   /** [[postingsSegmentCounts]] for the forward state. */
   private[graft] def fwdSegmentCounts(
       spark: SparkSession): Map[Int, Int] =
-    fwdLog.readManifestFull(spark)
-      .fold(Map.empty[Int, Int])(_._3.map { case (b, ds) => b -> ds.size })
+    fwdLog.head(spark).fold(Map.empty[Int, Int])(
+      _.entries.map { case (b, ds) => b -> ds.size })
 
   /** The default delete stream's coverage receipt — see the named
     * overload. */
@@ -699,8 +711,8 @@ final case class InvertedIndex(path: String, buckets: Int = 64,
     * commits postings THEN stats, so the min is the sound fence: a
     * crash between the two leaves postings ahead, never claimed. */
   def coveredBatch(spark: SparkSession): Long = math.min(
-    postLog.readManifestFull(spark).fold(-1L)(_._2),
-    statsLog.readManifestFull(spark).fold(-1L)(_._2))
+    postLog.head(spark).fold(-1L)(_.lastBatch),
+    statsLog.head(spark).fold(-1L)(_.lastBatch))
 
   /** Phrase-proximity ranking FROM THE STORE — docs containing BOTH
     * terms, ranked by minimum token-position distance (the feature

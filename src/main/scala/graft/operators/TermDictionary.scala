@@ -80,7 +80,7 @@ final case class TermDictionary(path: String, buckets: Int = 32) {
         sum("__tf").cast("long").as("cf"))
       .select(substring(col("term"), 1, 1).as("pfx"), col("term"),
         col("df"), col("cf"))
-    dictLog.applyBatchWithRetry(counts, batchId)(addCountsFold)
+    BucketedLog.retrying()(dictLog.applyBatch(counts, batchId)(addCountsFold))
   }
 
   /** Shared additive (df, cf) fold; rows that reach zero on both
@@ -129,10 +129,12 @@ final case class TermDictionary(path: String, buckets: Int = 32) {
       .dropDuplicates("cand_id")
       .withColumn("src_writer", lit(writerId))
       .withColumn("src_batch", lit(batchId))
-    delLog.applyBatchWithRetry(tagged, batchId, writerId) { (cur, b) =>
-      cur.map(c => c.unionByName(
-          b.join(c.select("cand_id"), Seq("cand_id"), "left_anti")))
-        .getOrElse(b)
+    BucketedLog.retrying() {
+      delLog.applyBatch(tagged, batchId, writerId) { (cur, b) =>
+        cur.map(c => c.unionByName(
+            b.join(c.select("cand_id"), Seq("cand_id"), "left_anti")))
+          .getOrElse(b)
+      }
     }
     // the decrement this batch OWNS: its durable claim, joined back
     // to the caller's docs for the term counts (bounded by |batch|)
@@ -150,13 +152,14 @@ final case class TermDictionary(path: String, buckets: Int = 32) {
         (-sum("__tf")).cast("long").as("cf"))
       .select(substring(col("term"), 1, 1).as("pfx"), col("term"),
         col("df"), col("cf"))
-    dictLog.applyBatchWithRetry(negCounts, batchId, writerId)(
-      addCountsFold)
+    BucketedLog.retrying() {
+      dictLog.applyBatch(negCounts, batchId, writerId)(addCountsFold)
+    }
   }
 
   /** Coverage receipt (`#batch=`) — the ingest freshness fence. */
   def coveredBatch(spark: SparkSession): Long =
-    dictLog.readManifestFull(spark).fold(-1L)(_._2)
+    dictLog.head(spark).fold(-1L)(_.lastBatch)
 
   /** A delete stream's coverage receipt — min of its claim and
     * dictionary watermarks (claim commits first, so the min is the

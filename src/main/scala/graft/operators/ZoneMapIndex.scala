@@ -114,7 +114,7 @@ final case class ZoneMapIndex(dir: String, buckets: Int = 16) {
     * newer appends must be read unconditionally until their refresh
     * commits (the freshness fence in the class doc). */
   def coveredBatch(spark: SparkSession): Long =
-    log.readManifestFull(spark).map(_._2).getOrElse(-1L)
+    log.head(spark).fold(-1L)(_.lastBatch)
 
   /** Units whose [mn, mx] INTERSECTS [lo, hi] — the planner-side
     * probe (≤units rows scanned, unit ids collected, never data). */
@@ -189,7 +189,7 @@ final case class MultiColZoneMapIndex(dir: String, valCols: Seq[String],
 
   /** The coverage receipt (see [[ZoneMapIndex.coveredBatch]]). */
   def coveredBatch(spark: SparkSession): Long =
-    log.readManifestFull(spark).map(_._2).getOrElse(-1L)
+    log.head(spark).fold(-1L)(_.lastBatch)
 
   /** Units surviving EVERY `(column, lo, hi)` predicate — the
     * conjunction prune: intersection per column, AND across

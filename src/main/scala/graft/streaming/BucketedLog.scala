@@ -24,10 +24,13 @@ final class ConcurrentCommitException(msg: String)
 /** The ONE log-structured bucketed-state machine — manifest protocol,
   * hash-bucketed version dirs, touched-bucket rewrite, amortized
   * compaction — shared by every operator that maintains a large
-  * keyed state incrementally ([[SnapshotStore]] for CDC MERGE INTO,
-  * [[AggView]] for incremental aggregate views). Factored out per the
-  * BucketScreen discipline: the commit/eviction machinery lives in
-  * one place, operators supply only their merge semantics.
+  * keyed state incrementally: [[SnapshotStore]] (CDC MERGE INTO),
+  * [[AggView]] (incremental aggregate views), the zone-map and Bloom
+  * skipping indexes (`ZoneMapIndex`, `MultiColZoneMapIndex`,
+  * `IncrementalBloomIndex`), `DeletionVectors`, `InvertedIndex` and
+  * `TermDictionary`. Factored out per the BucketScreen discipline: the
+  * commit/eviction machinery lives in one place, operators supply
+  * only their merge semantics.
   *
   * == Layout ==
   *
@@ -65,8 +68,19 @@ final class ConcurrentCommitException(msg: String)
   * + atomic rename to a NEW name), then delete superseded manifests
   * and unreferenced version dirs. Readers take the highest manifest
   * present, so a crash leaves either the old or the new state fully
-  * intact. The manifest records the last APPLIED batch id
-  * (`#batch=`): a crash-replayed micro-batch whose commit already
+  * intact. The four writers ([[applyBatch]], [[appendBatch]],
+  * [[rewriteBuckets]], [[compactNow]]) share ONE implementation of
+  * this, the private `commit`: each supplies only the rows it writes
+  * into the new version dir and how the bucket → dirs map changes.
+  * Three publishes keep their own order and share only the manifest
+  * writer: [[init]] replaces the whole store (no base version to race
+  * or sweep), [[evolveSchema]] writes no data dir and publishes its
+  * manifest BEFORE its schema anchor (its doc says why), and
+  * [[cloneTo]] publishes version 0 of a different store after a
+  * distributed file copy.
+  *
+  * The manifest records the last APPLIED batch id (`#batch=`): a
+  * crash-replayed micro-batch whose commit already
   * landed is skipped by id, making every fold EXACTLY-ONCE under
   * at-least-once delivery — including non-idempotent merges
   * ([[AggView]]'s additive state, where a re-applied batch would
@@ -180,6 +194,7 @@ final class ConcurrentCommitException(msg: String)
 final case class BucketedLog(dir: String, hashCols: Seq[String],
     buckets: Int, compactAfter: Int = 16, retain: Boolean = false,
     checkpointEvery: Int = 64) {
+  import BucketedLog.Head
 
   private val BktCol = "__bkt"
   private val ManifestName = """_MANIFEST\.v(\d{19})""".r
@@ -283,29 +298,13 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     fold.foreach { case (_, p) => f.delete(p, false) }
   }
 
-  /** (last-applied batchId, bucket -> dirs). The `#batch=` header is
-    * the EXACTLY-ONCE guard: a crash-replayed micro-batch (foreachBatch
-    * re-runs a batch whose commit beat the engine checkpoint) is
-    * skipped by id, so even NON-idempotent merges (AggView's additive
-    * fold) stay exact under at-least-once delivery. */
-  private def parseManifest(f: FileSystem, path: Path)
-      : (Long, Map[Int, Seq[String]]) =
-    parseManifestText(new String(readBytes(f, path), "UTF-8"))
-
-  /** Full parse including per-writer txn watermarks
-    * (`#txn.<writerId>=<batchId>` lines, absent on pre-txn stores). */
-  private def parseManifestTxns(f: FileSystem, path: Path)
-      : (Long, Map[String, Long], Map[Int, Seq[String]]) =
-    parseManifestTextTxns(new String(readBytes(f, path), "UTF-8"))
-
-  private def parseManifestText(text: String)
-      : (Long, Map[Int, Seq[String]]) = {
-    val (lastBatch, _, entries) = parseManifestTextTxns(text)
-    (lastBatch, entries)
-  }
-
-  private def parseManifestTextTxns(text: String)
-      : (Long, Map[String, Long], Map[Int, Seq[String]]) = {
+  /** THE manifest parser. The `#batch=` header is the EXACTLY-ONCE
+    * guard: a crash-replayed micro-batch (foreachBatch re-runs a batch
+    * whose commit beat the engine checkpoint) is skipped by id, so
+    * even NON-idempotent merges (AggView's additive fold) stay exact
+    * under at-least-once delivery. `#txn.<writerId>=<batchId>` lines
+    * are the named writers' marks (absent on pre-txn stores). */
+  private def parse(version: Long, text: String): Head = {
     var lastBatch = -1L
     val txns = scala.collection.mutable.Map.empty[String, Long]
     val entries = text.linesIterator.map(_.trim).filter(_.nonEmpty)
@@ -324,29 +323,17 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
           Some((l.take(i).toInt, l.drop(i + 1).split(';').toSeq))
         }
       }.toMap
-    (lastBatch, txns.toMap, entries)
+    Head(version, lastBatch, txns.toMap, entries)
   }
 
-  /** (version, bucket -> version-dir-names). Highest manifest wins. */
-  private[graft] def readManifest(spark: SparkSession)
-      : Option[(Long, Map[Int, Seq[String]])] =
-    readManifestFull(spark).map { case (v, _, e) => (v, e) }
+  private def readHead(f: FileSystem, version: Long, path: Path): Head =
+    parse(version, new String(readBytes(f, path), "UTF-8"))
 
-  private[graft] def readManifestFull(spark: SparkSession)
-      : Option[(Long, Long, Map[Int, Seq[String]])] =
-    readManifestFullTxns(spark).map { case (v, b, _, e) => (v, b, e) }
-
-  /** (version, lastBatch, per-writer txns, entries) — the complete
-    * head-manifest state. `txns(writerId)` is that writer's
-    * last-applied batch id (its exactly-once watermark). */
-  private[graft] def readManifestFullTxns(spark: SparkSession)
-      : Option[(Long, Long, Map[String, Long], Map[Int, Seq[String]])] = {
+  /** The head manifest (highest version wins); None before the first
+    * commit. */
+  private[graft] def head(spark: SparkSession): Option[Head] = {
     val f = fs(spark)
-    val versions = allManifests(f)
-    if (versions.isEmpty) return None
-    val (version, path) = versions.maxBy(_._1)
-    val (lastBatch, txns, entries) = parseManifestTxns(f, path)
-    Some((version, lastBatch, txns, entries))
+    allManifests(f).maxByOption(_._1).map { case (v, p) => readHead(f, v, p) }
   }
 
   /** A named writer's exactly-once watermark: the highest batch id it
@@ -354,8 +341,7 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
   def txnWatermark(spark: SparkSession, writerId: String): Long = {
     require(writerId.nonEmpty, "txnWatermark: empty writerId")
     requireWriterId(writerId)
-    readManifestFullTxns(spark)
-      .fold(-1L)(_._3.getOrElse(writerId, -1L))
+    head(spark).fold(-1L)(_.txns.getOrElse(writerId, -1L))
   }
 
   /** Highest manifest with version ≤ `asOf` (time travel; requires
@@ -365,14 +351,13 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     * segment entirely below `asOf` (the union is exact even when a
     * crashed fold left overlapping segments — overlapping blocks are
     * byte-identical). */
-  private def readManifestAt(spark: SparkSession, asOf: Long)
-      : Option[(Long, Map[Int, Seq[String]])] = {
+  private def headAt(spark: SparkSession, asOf: Long): Option[Head] = {
     val f = fs(spark)
-    def resolve(): Option[(Long, Map[Int, Seq[String]])] = {
+    def resolve(): Option[Head] = {
       val top = allManifests(f).filter(_._1 <= asOf)
       if (top.nonEmpty) {
         val (version, path) = top.maxBy(_._1)
-        return Some((version, parseManifest(f, path)._2))
+        return Some(readHead(f, version, path))
       }
       val segs = allSegments(f).filter(_._1 <= asOf)
       val toParse = (segs.filter(_._2 >= asOf) ++
@@ -380,7 +365,7 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
       toParse.iterator
         .flatMap { case (_, _, p) => parseSegment(f, p) }
         .filter(_._1 <= asOf).maxByOption(_._1)
-        .map { case (v, text) => (v, parseManifestText(text)._2) }
+        .map { case (v, text) => parse(v, text) }
     }
     // a concurrent checkpoint fold can delete a manifest between this
     // reader's listing and its parse — the content is already in a
@@ -428,17 +413,16 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     } finally in.close()
   }
 
-  /** Optimistic-concurrency manifest publish (class doc): put-if-
-    * absent + post-rename byte-verify. Throws
-    * [[ConcurrentCommitException]] when another writer's
-    * `_MANIFEST.v<version>` wins — the caller's data dir is orphaned
-    * by construction (writer-unique name) and should be deleted. */
-  private def writeManifest(f: FileSystem, version: Long,
-      lastBatch: Long, entries: Map[Int, Seq[String]], nonce: String,
-      txns: Map[String, Long]): Unit = {
-    val body = (s"#batch=$lastBatch" +:
-      (txns.toSeq.sortBy(_._1).map { case (w, b) => s"#txn.$w=$b" } ++
-        entries.toSeq.sortBy(_._1).map { case (k, v) =>
+  /** Optimistic-concurrency publish of `h` as `_MANIFEST.v<h.version>`
+    * (class doc): put-if-absent + post-rename byte-verify. Throws
+    * [[ConcurrentCommitException]] when another writer's manifest of
+    * that version wins — the caller's data dir is orphaned by
+    * construction (writer-unique name) and should be deleted. */
+  private def writeManifest(f: FileSystem, h: Head, nonce: String): Unit = {
+    val version = h.version
+    val body = (s"#batch=${h.lastBatch}" +:
+      (h.txns.toSeq.sortBy(_._1).map { case (w, b) => s"#txn.$w=$b" } ++
+        h.entries.toSeq.sortBy(_._1).map { case (k, v) =>
           s"$k=${v.mkString(";")}" }))
       .mkString("\n").getBytes("UTF-8")
     val dst = new Path(s"$dir/${manifestFile(version)}")
@@ -600,9 +584,9 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     val segs = segNames.map { case (lo, hi, p) =>
       (lo, hi, p, parseSegment(f, p)) }
     val keptBlocks = segs.flatMap(_._4).filter(_._1 >= keepFrom)
-    val live = (keep.map { case (_, p) => parseManifest(f, p)._2 } ++
-      keptBlocks.map { case (_, t) => parseManifestText(t)._2 })
-      .flatMap(_.values.flatten).toSet
+    val live = (keep.map { case (v, p) => readHead(f, v, p) } ++
+      keptBlocks.map { case (v, t) => parse(v, t) })
+      .flatMap(_.entries.values.flatten).toSet
     drop.foreach { case (_, p) => f.delete(p, false) }
     segs.foreach { case (_, _, p, blocks) =>
       val (dead, alive) = blocks.partition(_._1 < keepFrom)
@@ -749,8 +733,9 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
       !srcQ.startsWith(dstQ + "/"),
       s"cloneTo: dst must not equal or nest with the source store " +
         s"(src=$srcQ, dst=$dstQ) — the clone starts by clearing dst")
-    val (curVer, _, entries) = readManifestFull(spark)
+    val src = head(spark)
       .getOrElse(sys.error(s"BucketedLog.cloneTo before init: $dir"))
+    val entries = src.entries
     val clone = BucketedLog(dst, hashCols, buckets, compactAfter,
       retain, checkpointEvery)
     f.delete(new Path(dst), true)
@@ -788,23 +773,18 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
           }
       }
     }
-    val anchor = allSchemaAnchors(f).filter(_._1 <= curVer)
+    val anchor = allSchemaAnchors(f).filter(_._1 <= src.version)
       .maxByOption(_._1)
       .getOrElse(sys.error(s"BucketedLog.cloneTo: no schema anchor ≤ " +
-        s"$curVer under $dir"))._2
+        s"${src.version} under $dir"))._2
     org.apache.hadoop.fs.FileUtil.copy(f, anchor,
       f, new Path(s"$dst/${schemaDir(0L)}"), false, false,
       spark.sparkContext.hadoopConfiguration)
-    clone.publishCloneManifest(f,
-      entries.map { case (b, dirs) => b -> dirs.map(cloneDirOf) })
+    clone.writeManifest(f, Head(0L, -1L, Map.empty,
+      entries.map { case (b, dirs) => b -> dirs.map(cloneDirOf) }),
+      newNonce())
     clone
   }
-
-  /** [[cloneTo]]'s target-side publish (fresh v0 manifest over the
-    * copied buckets, watermarks reset). */
-  private def publishCloneManifest(f: FileSystem,
-      entries: Map[Int, Seq[String]]): Unit =
-    writeManifest(f, 0L, -1L, entries, newNonce(), Map.empty)
 
   /** Seed version 0 from full initial state (full write — done once;
     * every later batch rewrites only touched buckets). Also anchors
@@ -817,12 +797,15 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     f.delete(new Path(dir), true)
     val vdir = "data/v0"
     writeBucketed(state, s"$dir/$vdir")
-    state.limit(0).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/${schemaDir(0L)}")
-    writeManifest(f, 0L, -1L,
-      writtenBuckets(f, vdir).map(_ -> Seq(vdir)).toMap, newNonce(),
-      Map.empty)
+    writeAnchor(state, 0L)
+    writeManifest(f, Head(0L, -1L, Map.empty,
+      writtenBuckets(f, vdir).map(_ -> Seq(vdir)).toMap), newNonce())
   }
+
+  /** Anchor `state`'s schema at `version` (a zero-row parquet dir). */
+  private def writeAnchor(state: DataFrame, version: Long): Unit =
+    state.limit(0).coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/${schemaDir(version)}")
 
   /** The typed EMPTY state as of `version` — the highest `schema.v*`
     * anchor ≤ `version` (underscore-prefixed: invisible to cleanup/
@@ -863,6 +846,104 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     }
   }
 
+  /** The head (version −1 with no watermarks before the first commit)
+    * with `batchId` recorded as its writer's last-applied batch
+    * (`#batch=` for the default writer "", `#txn.<writerId>=` for a
+    * named one), or None when that batch already landed: exactly-once
+    * by batch id — a crash-replayed micro-batch whose commit already
+    * landed is a no-op, required for NON-idempotent merges (additive
+    * AggView folds) under at-least-once delivery. */
+  private def advanced(spark: SparkSession, batchId: Long,
+      writerId: String): Option[Head] = {
+    val base = head(spark).getOrElse(Head(-1L, -1L, Map.empty, Map.empty))
+    if (writerId.isEmpty)
+      Option.when(batchId > base.lastBatch)(base.copy(lastBatch = batchId))
+    else Option.when(batchId > base.txns.getOrElse(writerId, -1L))(
+      base.copy(txns = base.txns.updated(writerId, batchId)))
+  }
+
+  /** Write `rows` into the version dir `vdir`'s in-flight `.tmp` twin
+    * and list the buckets they landed in. */
+  private def writeTmp(f: FileSystem, rows: DataFrame,
+      vdir: String): Set[Int] = {
+    writeBucketed(rows, s"$dir/$vdir.tmp")
+    writtenBuckets(f, s"$vdir.tmp").toSet
+  }
+
+  /** A touched-bucket rewrite's entries: the written buckets point at
+    * `vdir` alone, and a touched bucket ABSENT from the written set is
+    * DROPPED — the merge emitted zero rows for it (every group
+    * retracted), and a carried stale pointer would resurrect the
+    * retracted rows on the next read. */
+  private def rewritten(entries: Map[Int, Seq[String]], touched: Set[Int],
+      written: Set[Int], vdir: String): Map[Int, Seq[String]] =
+    (entries -- (touched -- written)) ++ written.map(_ -> Seq(vdir))
+
+  /** THE commit of [[applyBatch]], [[appendBatch]], [[rewriteBuckets]]
+    * and [[compactNow]] (class doc, "Commit protocol"): publishes
+    * version `base.version + 1` with `base`'s watermarks.
+    *
+    *   1. `write(vdir)` writes the new rows into `<vdir>.tmp` and
+    *      returns the buckets they landed in — or None when the writer
+    *      has no rows to publish (an empty batch);
+    *   2. the `.tmp` dir is renamed to `vdir`; a failure anywhere up
+    *      to here deletes the `.tmp` dir and rethrows
+    *      ([[raceOrRethrow]]);
+    *   3. the manifest maps buckets to `entriesOf(written, vdir)`; a
+    *      lost publish race deletes the orphaned `vdir`;
+    *   4. superseded manifests and dead dirs are swept, and a retained
+    *      store's manifests checkpointed.
+    *
+    * A None write still publishes `base`'s entries under the advanced
+    * watermarks: the `#batch=` mark is the coverage receipt
+    * downstream freshness fences read (ZoneMapIndex.coveredBatch),
+    * and a legitimately-empty ingest micro-batch IS fully covered —
+    * under-reporting it would fail a strict `coveredBatch == n` fence
+    * spuriously. Before the first manifest there is nothing to
+    * advance, so an empty write publishes nothing. */
+  private def commit(f: FileSystem, base: Head)(
+      write: String => Option[Set[Int]])(
+      entriesOf: (Set[Int], String) => Map[Int, Seq[String]]): Unit = {
+    // ALWAYS base + 1 — a batch-id-derived jump would let a
+    // concurrent named writer/compactNow land at a DIFFERENT version
+    // in the same race and silently shadow one commit (put-if-absent
+    // collides only on equal version names)
+    val version = base.version + 1
+    val nonce = newNonce()
+    // writer-unique dir: a concurrent writer at the same version can
+    // never overwrite this data, and no manifest can alias it; a
+    // crash-replay re-derives the same content under a FRESH name
+    // (the crashed attempt's dir is unreferenced — swept by cleanup).
+    // Under data/ so top-level discovery listings stay BOUNDED
+    // (manifest-checkpointing doc)
+    val vdir = s"data/v$version-$nonce"
+    val tmp = new Path(s"$dir/$vdir.tmp")
+    val written = try write(vdir).map { w =>
+      // write-then-rename: the dir carries its final name only once its
+      // content is complete, so a concurrent winner's sweep can never
+      // fail THIS writer's in-flight tasks (deleteDeadDataDirs doc)
+      require(f.rename(tmp, new Path(s"$dir/$vdir")),
+        s"BucketedLog: rename of $vdir.tmp failed — refusing to publish " +
+          "a manifest over a missing data dir")
+      w
+    } catch { case e: Throwable =>
+      f.delete(tmp, true)
+      raceOrRethrow(f, base.version, e)
+    }
+    if (written.isEmpty) {
+      f.delete(tmp, true)
+      if (base.version < 0L) return
+    }
+    val next = base.copy(version = version,
+      entries = written.fold(base.entries)(entriesOf(_, vdir)))
+    try writeManifest(f, next, nonce)
+    catch { case e: ConcurrentCommitException =>
+      f.delete(new Path(s"$dir/$vdir"), true); throw e
+    }
+    cleanup(f, version, next.entries)
+    maybeCheckpoint(f)
+  }
+
   /** Fold one batch into the store: read ONLY the buckets the batch's
     * keys hash to, `merge(currentStateOfThoseBuckets, batch)` (state
     * is None when no touched bucket has rows yet — all-new-key
@@ -884,31 +965,19 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     * writers' commits never advance it. Every commit — default and
     * named — targets `curVer + 1`, so concurrent writers always
     * collide loudly on the version name. `#batch=` advances only on
-    * default-writer commits. */
+    * default-writer commits. A commit that loses a race throws
+    * [[ConcurrentCommitException]]; wrap it in [[BucketedLog.retrying]]
+    * to rebase instead (the merge is a pure function of what it read,
+    * so a re-run against the winner's state IS the rebase). */
   def applyBatch(batch: DataFrame, batchId: Long, writerId: String)(
       merge: (Option[DataFrame], DataFrame) => DataFrame): Unit = {
     requireWriterId(writerId)
     val spark = batch.sparkSession
     val f = fs(spark)
-    val (curVer, lastBatch0, txns, entries) =
-      readManifestFullTxns(spark)
-        .getOrElse((-1L, -1L, Map.empty[String, Long],
-          Map.empty[Int, Seq[String]]))
-    // exactly-once by batch id: a crash-replayed micro-batch whose
-    // commit already landed is a no-op — required for NON-idempotent
-    // merges (additive AggView folds) under at-least-once delivery
-    val mark = if (writerId.isEmpty) lastBatch0
-      else txns.getOrElse(writerId, -1L)
-    if (batchId <= mark) return
-    val lastBatch = if (writerId.isEmpty) batchId else lastBatch0
-    val newTxns = if (writerId.isEmpty) txns
-      else txns.updated(writerId, batchId)
-    // ALWAYS curVer + 1 — a batch-id-derived jump would let a
-    // concurrent named writer/compactNow land at a DIFFERENT version
-    // in the same race and silently shadow one commit (put-if-absent
-    // collides only on equal version names); the batch id is already
-    // recorded in #batch=, it need not name the version
-    val version = curVer + 1
+    val base = advanced(spark, batchId, writerId) match {
+      case Some(h) => h
+      case None => return
+    }
     // NOTE (round-17 measurement): caching the batch across the
     // touched-set job and the merge's write was tried and REVERTED —
     // the touched pass is column-pruned to the hash columns and
@@ -925,82 +994,26 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
       if (buckets == 1) Set(0)
       else batch.select(bkt.cast("int").as("b")).distinct()
         .collect().map(_.getInt(0)).toSet
-    // an EMPTY batch still advances the `#batch=` high-water mark:
-    // the mark is the coverage receipt downstream freshness fences
-    // read (ZoneMapIndex.coveredBatch), and a legitimately-empty
-    // ingest micro-batch IS fully covered — under-reporting it would
-    // fail a strict `coveredBatch == n` fence spuriously
-    if (touched.isEmpty) {
-      if (curVer >= 0L) {
-        writeManifest(f, version, lastBatch, entries, newNonce(), newTxns)
-        cleanup(f, version, entries)
-        maybeCheckpoint(f)
-      }
-    } else {
     val compact =
-      !retain && entries.values.flatten.toSet.size > compactAfter
-    val scope = if (compact) None else Some(touched)
-    val nonce = newNonce()
-    // writer-unique dir: a concurrent writer at the same version can
-    // never overwrite this data, and no manifest can alias it; a
-    // crash-replay re-derives the same content under a FRESH name
-    // (the crashed attempt's dir is unreferenced — swept by cleanup).
-    // Under data/ so top-level discovery listings stay BOUNDED
-    // (manifest-checkpointing doc)
-    val vdir = s"data/v$version-$nonce"
-    val written = try {
-      val cur = if (curVer == -1L) None
-        else stateRows(spark, entries, scope,
-          anchorSchemaAt(spark, curVer))
-      val next = merge(cur, batch)
-      // a store seeded by its FIRST batch (no init) still needs the
-      // schema anchor for empty-state reads (anchored at version 0: it
-      // governs every version from the first commit on)
-      if (curVer == -1L)
-        next.limit(0).coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/${schemaDir(0L)}")
-      // write-then-rename: the dir carries its final name only once its
-      // content is complete, so a concurrent winner's sweep can never
-      // fail THIS writer's in-flight tasks (deleteDeadDataDirs doc)
-      writeBucketed(next, s"$dir/$vdir.tmp")
-      val w = writtenBuckets(f, s"$vdir.tmp").toSet
-      require(f.rename(new Path(s"$dir/$vdir.tmp"),
-        new Path(s"$dir/$vdir")),
-        s"BucketedLog: rename of $vdir.tmp failed — refusing to publish " +
-          "a manifest over a missing data dir")
-      w
-    } catch { case e: Throwable =>
-      f.delete(new Path(s"$dir/$vdir.tmp"), true)
-      raceOrRethrow(f, curVer, e)
-    }
-    // a touched bucket ABSENT from the written set means the merge
-    // emitted zero rows for it (every group retracted): its manifest
-    // entry must be DROPPED, not carried — a stale pointer would
-    // resurrect the retracted rows on the next read
-    val newEntries =
+      !retain && base.entries.values.flatten.toSet.size > compactAfter
+    commit(f, base) { vdir =>
+      Option.when(touched.nonEmpty) {
+        val cur = if (base.version == -1L) None
+          else stateRows(spark, base.entries,
+            if (compact) None else Some(touched),
+            anchorSchemaAt(spark, base.version))
+        val next = merge(cur, batch)
+        // a store seeded by its FIRST batch (no init) still needs the
+        // schema anchor for empty-state reads (anchored at version 0:
+        // it governs every version from the first commit on)
+        if (base.version == -1L) writeAnchor(next, 0L)
+        writeTmp(f, next, vdir)
+      }
+    } { (written, vdir) =>
       if (compact) written.map(_ -> Seq(vdir)).toMap
-      else (entries -- (touched -- written)) ++
-        written.map(_ -> Seq(vdir))
-    try writeManifest(f, version, lastBatch, newEntries, nonce, newTxns)
-    catch { case e: ConcurrentCommitException =>
-      f.delete(new Path(s"$dir/$vdir"), true); throw e
-    }
-    cleanup(f, version, newEntries)
-    maybeCheckpoint(f)
+      else rewritten(base.entries, touched, written, vdir)
     }
   }
-
-  /** [[applyBatch]] wrapped in [[BucketedLog.retrying]]: a lost
-    * optimistic-concurrency race re-reads the new base and re-merges
-    * (rebase — the merge is a pure function of what it read), so
-    * concurrent writers to one store all land without coordination;
-    * an already-landed replay exits via the batch/txn watermark. */
-  def applyBatchWithRetry(batch: DataFrame, batchId: Long,
-      writerId: String = "", maxAttempts: Int = 8)(
-      merge: (Option[DataFrame], DataFrame) => DataFrame): Unit =
-    BucketedLog.retrying(maxAttempts) {
-      applyBatch(batch, batchId, writerId)(merge)
-    }
 
   /** APPEND one batch's rows WITHOUT reading or rewriting current
     * state — the SEGMENT commit for append-only folds (inverted-index
@@ -1027,25 +1040,22 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     * size (the `inverted_ingest_batch` probe pins one fixed batch
     * ~flat against a 1×/2×/4× grown index). Row semantics are pure
     * multiset append: dedup or merge, if any is wanted, belongs to
-    * the reader or a [[rewriteBuckets]] maintenance pass. */
+    * the reader or a [[rewriteBuckets]] maintenance pass. A lost race
+    * re-run through [[BucketedLog.retrying]] simply re-appends (the
+    * batch's rows are version-independent). */
   def appendBatch(batch: DataFrame, batchId: Long,
       writerId: String = ""): Unit = {
     requireWriterId(writerId)
     val spark = batch.sparkSession
     val f = fs(spark)
-    val (curVer, lastBatch0, txns, entries) =
-      readManifestFullTxns(spark)
-        .getOrElse((-1L, -1L, Map.empty[String, Long],
-          Map.empty[Int, Seq[String]]))
-    val mark = if (writerId.isEmpty) lastBatch0
-      else txns.getOrElse(writerId, -1L)
-    if (batchId <= mark) return
-    val lastBatch = if (writerId.isEmpty) batchId else lastBatch0
-    val newTxns = if (writerId.isEmpty) txns
-      else txns.updated(writerId, batchId)
-    val version = curVer + 1
-    val nonce = newNonce()
-    val vdir = s"data/v$version-$nonce"
+    val base = advanced(spark, batchId, writerId) match {
+      case Some(h) => h
+      case None => return
+    }
+    // buckets whose segment list is full fold NOW (amortized): their
+    // current rows join this commit's dir and the entry collapses
+    def folds(b: Int): Boolean =
+      base.entries.getOrElse(b, Nil).size >= compactAfter
     // WRITE-FIRST (round-17): the segment write needs no current
     // state, so the batch is written before anything else and the
     // written dir's `__bkt=` listing IS the touched set — one
@@ -1057,84 +1067,39 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     // the segment dir before the rename — the dir's final content is
     // the same batch ∪ folding-state union as before, and a crash
     // anywhere pre-rename leaves only `.tmp` litter for the sweep.
-    val written = try {
-      if (curVer == -1L)
-        batch.limit(0).coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/${schemaDir(0L)}")
-      writeBucketed(batch, s"$dir/$vdir.tmp")
-      writtenBuckets(f, s"$vdir.tmp").toSet
-    } catch { case e: Throwable =>
-      f.delete(new Path(s"$dir/$vdir.tmp"), true)
-      raceOrRethrow(f, curVer, e)
-    }
-    if (written.isEmpty) {
-      // an EMPTY batch still advances the watermark (the coverage
-      // receipt downstream freshness fences read) — same contract as
-      // applyBatch's empty-touched branch
-      f.delete(new Path(s"$dir/$vdir.tmp"), true)
-      if (curVer >= 0L) {
-        writeManifest(f, version, lastBatch, entries, newNonce(), newTxns)
-        cleanup(f, version, entries)
-        maybeCheckpoint(f)
-      }
-      return
-    }
-    // buckets whose segment list is full fold NOW (amortized): their
-    // current rows join this commit's dir and the entry collapses
-    val folding = written.filter(b =>
-      entries.getOrElse(b, Nil).size >= compactAfter)
-    try {
+    commit(f, base) { vdir =>
+      if (base.version == -1L) writeAnchor(batch, 0L)
+      val written = writeTmp(f, batch, vdir)
+      val folding = written.filter(folds)
       if (folding.nonEmpty) {
         val foldTmp = s"$vdir.fold.tmp"
-        stateRows(spark, entries, Some(folding),
-            anchorSchemaAt(spark, curVer))
-          .foreach(writeBucketed(_, s"$dir/$foldTmp"))
-        // move the folded rows' files in with the batch's (writer-
-        // unique part names — no collision); folding ⊆ written, so
-        // every target bucket dir exists
-        writtenBuckets(f, foldTmp).foreach { b =>
-          f.listStatus(new Path(s"$dir/$foldTmp/$BktCol=$b"))
-            .foreach { st =>
-              require(f.rename(st.getPath, new Path(
-                s"$dir/$vdir.tmp/$BktCol=$b/${st.getPath.getName}")),
-                s"BucketedLog: fold-move into $vdir.tmp failed")
-            }
-        }
-        f.delete(new Path(s"$dir/$foldTmp"), true)
+        try {
+          stateRows(spark, base.entries, Some(folding),
+              anchorSchemaAt(spark, base.version))
+            .foreach(writeBucketed(_, s"$dir/$foldTmp"))
+          // move the folded rows' files in with the batch's (writer-
+          // unique part names — no collision); folding ⊆ written, so
+          // every target bucket dir exists
+          writtenBuckets(f, foldTmp).foreach { b =>
+            f.listStatus(new Path(s"$dir/$foldTmp/$BktCol=$b"))
+              .foreach { st =>
+                require(f.rename(st.getPath, new Path(
+                  s"$dir/$vdir.tmp/$BktCol=$b/${st.getPath.getName}")),
+                  s"BucketedLog: fold-move into $vdir.tmp failed")
+              }
+          }
+        } finally f.delete(new Path(s"$dir/$foldTmp"), true)
       }
-      require(f.rename(new Path(s"$dir/$vdir.tmp"),
-        new Path(s"$dir/$vdir")),
-        s"BucketedLog: rename of $vdir.tmp failed — refusing to publish " +
-          "a manifest over a missing data dir")
-    } catch { case e: Throwable =>
-      f.delete(new Path(s"$dir/$vdir.fold.tmp"), true)
-      f.delete(new Path(s"$dir/$vdir.tmp"), true)
-      raceOrRethrow(f, curVer, e)
+      Option.when(written.nonEmpty)(written)
+    } { (written, vdir) =>
+      // every touched bucket is written (the batch has rows for it by
+      // construction); untouched entries carry; folding buckets collapse
+      base.entries ++ written.map { b =>
+        b -> (if (folds(b)) Seq(vdir)
+              else base.entries.getOrElse(b, Nil) :+ vdir)
+      }
     }
-    // every touched bucket is written (the batch has rows for it by
-    // construction); untouched entries carry; folding buckets collapse
-    val newEntries = entries ++ written.map { b =>
-      b -> (if (folding(b)) Seq(vdir)
-            else entries.getOrElse(b, Nil) :+ vdir)
-    }
-    try writeManifest(f, version, lastBatch, newEntries, nonce, newTxns)
-    catch { case e: ConcurrentCommitException =>
-      f.delete(new Path(s"$dir/$vdir"), true); throw e
-    }
-    cleanup(f, version, newEntries)
-    maybeCheckpoint(f)
   }
-
-  /** [[appendBatch]] wrapped in [[BucketedLog.retrying]] — the
-    * segment commit for CONCURRENT writers: a lost race re-reads the
-    * new head and re-appends (the batch's rows are version-
-    * independent, so the re-run is trivially a rebase); an
-    * already-landed replay exits via the batch/txn watermark. */
-  def appendBatchWithRetry(batch: DataFrame, batchId: Long,
-      writerId: String = "", maxAttempts: Int = 8): Unit =
-    BucketedLog.retrying(maxAttempts) {
-      appendBatch(batch, batchId, writerId)
-    }
 
   /** Touched-bucket MAINTENANCE rewrite — [[applyBatch]]'s bounded
     * touched-set commit OUTSIDE the batch-id sequence: `keys` names
@@ -1152,37 +1117,16 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
       merge: (Option[DataFrame], DataFrame) => DataFrame): Unit = {
     val spark = keys.sparkSession
     val f = fs(spark)
-    val (curVer, lastBatch, txns, entries) = readManifestFullTxns(spark)
+    val base = head(spark)
       .getOrElse(sys.error(s"BucketedLog.rewriteBuckets before init: $dir"))
     val touched = keys.select(bkt.cast("int").as("b")).distinct()
       .collect().map(_.getInt(0)).toSet
-    if (touched.nonEmpty) {
-    val version = curVer + 1
-    val nonce = newNonce()
-    val vdir = s"data/v$version-$nonce"
-    val written = try {
-      val cur = stateRows(spark, entries, Some(touched),
-        anchorSchemaAt(spark, curVer))
-      writeBucketed(merge(cur, keys), s"$dir/$vdir.tmp")
-      val w = writtenBuckets(f, s"$vdir.tmp").toSet
-      require(f.rename(new Path(s"$dir/$vdir.tmp"),
-        new Path(s"$dir/$vdir")),
-        s"BucketedLog: rename of $vdir.tmp failed — refusing to publish " +
-          "a manifest over a missing data dir")
-      w
-    } catch { case e: Throwable =>
-      f.delete(new Path(s"$dir/$vdir.tmp"), true)
-      raceOrRethrow(f, curVer, e)
-    }
-    val newEntries =
-      (entries -- (touched -- written)) ++ written.map(_ -> Seq(vdir))
-    try writeManifest(f, version, lastBatch, newEntries, nonce, txns)
-    catch { case e: ConcurrentCommitException =>
-      f.delete(new Path(s"$dir/$vdir"), true); throw e
-    }
-    cleanup(f, version, newEntries)
-    maybeCheckpoint(f)
-    }
+    if (touched.isEmpty) return
+    commit(f, base) { vdir =>
+      val cur = stateRows(spark, base.entries, Some(touched),
+        anchorSchemaAt(spark, base.version))
+      Some(writeTmp(f, merge(cur, keys), vdir))
+    } { (written, vdir) => rewritten(base.entries, touched, written, vdir) }
   }
 
   /** Fold the WHOLE state into one fresh version, optionally
@@ -1193,49 +1137,33 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     * same, so a crash mid-pass leaves the old state fully readable;
     * the last-applied batch id is carried unchanged so the
     * exactly-once replay guard survives the rewrite. Buckets whose
-    * rows the transform drops entirely leave the manifest. */
+    * rows the transform drops entirely leave the manifest. A lost
+    * race (a live applyBatch published this version first) throws
+    * LOUDLY; re-run the pass from a fresh read. */
   def compactNow(spark: SparkSession)(
       transform: DataFrame => DataFrame): Unit = {
     val f = fs(spark)
-    val (curVer, lastBatch, txns, entries) = readManifestFullTxns(spark)
+    val base = head(spark)
       .getOrElse(sys.error(s"BucketedLog.compactNow before init: $dir"))
-    val version = curVer + 1
-    val nonce = newNonce()
-    val vdir = s"data/v$version-$nonce"
-    val written = try {
-      val empty = emptyStateAt(spark, curVer)
-      val cur = stateRows(spark, entries, None, empty.schema)
-        .getOrElse(empty)
-      writeBucketed(transform(cur), s"$dir/$vdir.tmp")
-      val w = writtenBuckets(f, s"$vdir.tmp")
-      require(f.rename(new Path(s"$dir/$vdir.tmp"),
-        new Path(s"$dir/$vdir")),
-        s"BucketedLog: rename of $vdir.tmp failed — refusing to publish " +
-          "a manifest over a missing data dir")
-      w
-    } catch { case e: Throwable =>
-      f.delete(new Path(s"$dir/$vdir.tmp"), true)
-      raceOrRethrow(f, curVer, e)
-    }
-    val newEntries = written.map(_ -> Seq(vdir)).toMap
-    // a lost race here (a live applyBatch published this version
-    // first) throws LOUDLY; re-run the pass from a fresh read
-    try writeManifest(f, version, lastBatch, newEntries, nonce, txns)
-    catch { case e: ConcurrentCommitException =>
-      f.delete(new Path(s"$dir/$vdir"), true); throw e
-    }
-    cleanup(f, version, newEntries)
-    maybeCheckpoint(f)
+    commit(f, base) { vdir =>
+      Some(writeTmp(f, transform(rowsOf(spark, base, None)), vdir))
+    } { (written, vdir) => written.map(_ -> Seq(vdir)).toMap }
   }
 
   /** Full current state (all buckets); the typed empty frame when
     * every bucket has emptied (a full retraction is a legitimate
     * state, not an error — only a missing manifest is). */
-  def read(spark: SparkSession): DataFrame = {
-    val (ver, _, entries) = readManifestFull(spark)
-      .getOrElse(sys.error(s"BucketedLog.read before init: $dir"))
-    val empty = emptyStateAt(spark, ver)
-    stateRows(spark, entries, None, empty.schema).getOrElse(empty)
+  def read(spark: SparkSession): DataFrame =
+    rowsOf(spark, head(spark)
+      .getOrElse(sys.error(s"BucketedLog.read before init: $dir")), None)
+
+  /** `which` buckets' rows (all if None) as of manifest `h`, in the
+    * schema anchored at its version; the typed empty frame when none
+    * has rows. */
+  private def rowsOf(spark: SparkSession, h: Head,
+      which: Option[Set[Int]]): DataFrame = {
+    val empty = emptyStateAt(spark, h.version)
+    stateRows(spark, h.entries, which, empty.schema).getOrElse(empty)
   }
 
   /** State rows of ONLY the buckets `keys` hash to — the directory-
@@ -1247,13 +1175,11 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     * distinct buckets are collected). */
   def readFor(keys: DataFrame): DataFrame = {
     val spark = keys.sparkSession
-    val (ver, _, entries) = readManifestFull(spark)
+    val h = head(spark)
       .getOrElse(sys.error(s"BucketedLog.readFor before init: $dir"))
     val touched = keys.select(bkt.cast("int").as("b")).distinct()
       .collect().map(_.getInt(0)).toSet
-    val empty = emptyStateAt(spark, ver)
-    stateRows(spark, entries, Some(touched), empty.schema)
-      .getOrElse(empty)
+    rowsOf(spark, h, Some(touched))
   }
 
   /** [[readFor]] for DRIVER-KNOWN keys of a single-hash-column store:
@@ -1261,7 +1187,7 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     * the same Catalyst expression the writers hash with
     * (`pmod(xxhash64(key), buckets)` — interpreted eval of the
     * identical expression tree, so the pruning can never diverge from
-    * the written layout; [[BucketedLogSpec]] pins equality against
+    * the written layout; `BucketedLogSegmentSpec` pins equality against
     * [[readFor]]), which saves the one Spark job [[readFor]] spends
     * collecting the touched set. Each value must be the hash
     * column's exact external type (String / Long / Int — xxhash64 is
@@ -1269,12 +1195,9 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
   def readForValues(spark: SparkSession, keys: Seq[Any]): DataFrame = {
     require(hashCols.size == 1,
       s"readForValues needs a single-hash-column store: $hashCols")
-    val (ver, _, entries) = readManifestFull(spark)
+    val h = head(spark)
       .getOrElse(sys.error(s"BucketedLog.readForValues before init: $dir"))
-    val touched = keys.map(bucketOfValue).toSet
-    val empty = emptyStateAt(spark, ver)
-    stateRows(spark, entries, Some(touched), empty.schema)
-      .getOrElse(empty)
+    rowsOf(spark, h, Some(keys.map(bucketOfValue).toSet))
   }
 
   /** Driver-side bucket of one key value — the [[bkt]] expression
@@ -1287,15 +1210,12 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
 
   /** Full state AS OF `version` — the snapshot the highest manifest
     * ≤ `version` published (requires `retain`). */
-  def readAt(spark: SparkSession, version: Long): DataFrame = {
-    val (actual, entries) = readManifestAt(spark, version).getOrElse(
-      sys.error(s"BucketedLog.readAt($version): no manifest ≤ $version " +
-        s"under $dir (vacuumed or never written)"))
+  def readAt(spark: SparkSession, version: Long): DataFrame =
     // the schema anchor in force AT that manifest: a read below an
     // add-column evolution serves the pre-evolution column set
-    val empty = emptyStateAt(spark, actual)
-    stateRows(spark, entries, None, empty.schema).getOrElse(empty)
-  }
+    rowsOf(spark, headAt(spark, version).getOrElse(
+      sys.error(s"BucketedLog.readAt($version): no manifest ≤ $version " +
+        s"under $dir (vacuumed or never written)")), None)
 
   /** ADD-COLUMN SCHEMA EVOLUTION: re-anchor the state schema with
     * `add` (name → Spark SQL type string) appended, as a zero-IO
@@ -1317,18 +1237,16 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     * (re-adding an existing column throws). */
   def evolveSchema(spark: SparkSession, add: Seq[(String, String)]): Unit = {
     val f = fs(spark)
-    val (curVer, lastBatch, txns, entries) = readManifestFullTxns(spark)
+    val base = head(spark)
       .getOrElse(sys.error(s"BucketedLog.evolveSchema before init: $dir"))
-    val old = emptyStateAt(spark, curVer)
+    val old = emptyStateAt(spark, base.version)
     val clash = add.map(_._1).toSet.intersect(old.columns.toSet)
     require(clash.isEmpty, s"evolveSchema: columns already present: $clash")
-    val version = curVer + 1
-    writeManifest(f, version, lastBatch, entries, newNonce(), txns)
-    old.select(old.columns.map(col).toSeq ++ add.map { case (n, t) =>
-      lit(null).cast(t).as(n) }: _*)
-      .limit(0).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/${schemaDir(version)}")
-    cleanup(f, version, entries)
+    val version = base.version + 1
+    writeManifest(f, base.copy(version = version), newNonce())
+    writeAnchor(old.select(old.columns.map(col).toSeq ++ add.map {
+      case (n, t) => lit(null).cast(t).as(n) }: _*), version)
+    cleanup(f, version, base.entries)
   }
 }
 
@@ -1342,6 +1260,13 @@ object BucketedLog {
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long),
       org.apache.spark.sql.types.StructType]()
 
+  /** One manifest's content: its `version`; `lastBatch`, the default
+    * writer's last-applied batch id (`#batch=`, −1 before its first
+    * commit); `txns`, each named writer's last-applied batch id
+    * (`#txn.<writerId>=`); and `entries`, bucket → the version dirs
+    * whose union is its rows. */
+  final case class Head(version: Long, lastBatch: Long,
+      txns: Map[String, Long], entries: Map[Int, Seq[String]])
 
   /** Age past which an in-flight `.tmp` data dir is presumed a
     * CRASHED writer's litter and swept by the next commit's cleanup

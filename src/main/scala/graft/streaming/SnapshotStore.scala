@@ -44,9 +44,6 @@ final case class SnapshotStore(dir: String, keyCol: String,
   private val stateCols = (keyCol +: payloadCols) ++ Seq(
     MergeInto.VersionTsCol, MergeInto.VersionIdCol, MergeInto.TombstoneCol)
 
-  private[graft] def readManifest(spark: SparkSession)
-      : Option[(Long, Map[Int, Seq[String]])] = log.readManifest(spark)
-
   /** Seed version 0 from a plain base snapshot (full write — done
     * once; every later batch rewrites only touched buckets). */
   def init(base: DataFrame, tsType: DataType, idType: DataType): Unit =

@@ -622,7 +622,9 @@ object ScaleProbe {
         new Thread(() => {
           val batch = spark.range(50)
             .select((col("id") * 4096L + w).as("g"), lit(7L).as("x"))
-          log.applyBatchWithRetry(batch, 0L, s"w$w", maxAttempts = 64)(add)
+          graft.streaming.BucketedLog.retrying(64) {
+            log.applyBatch(batch, 0L, s"w$w")(add)
+          }
         })
       }
       threads.foreach(_.start()); threads.foreach(_.join())
@@ -658,7 +660,7 @@ object ScaleProbe {
     // exercises discovery), trigger ONE real commit (folds all but
     // the newest into a `_history` segment on the checkpointing
     // store), then time the hot-path manifest discovery
-    // (readManifestFull, 50 reps). The folded store's top level is
+    // (BucketedLog.head, 50 reps). The folded store's top level is
     // BOUNDED (≤ checkpointEvery+1 manifests + data/ + _history/ +
     // anchors), so discovery must stay FLAT as versions grow
     // 10×/100×; the unfolded twin pays the O(versions) listing
@@ -689,7 +691,7 @@ object ScaleProbe {
       }
       def discoveryMs(log: graft.streaming.BucketedLog): Double = {
         val t0 = System.nanoTime()
-        (0 until 50).foreach(_ => log.readManifestFull(spark))
+        (0 until 50).foreach(_ => log.head(spark))
         (System.nanoTime() - t0) / 1e6 / 50
       }
       val folded = build(64, "fold")

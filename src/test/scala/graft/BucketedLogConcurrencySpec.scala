@@ -109,7 +109,7 @@ class BucketedLogConcurrencySpec extends AnyFunSuite with SparkTestBase {
     assert(state(log) === Map(1L -> 110L, 2L -> 20L, 3L -> 30L))
     // ...its exactly-once batch mark included (the maintenance loser
     // must not regress the replay guard)
-    assert(log.readManifestFull(spark).get._2 === 0L)
+    assert(log.head(spark).get.lastBatch === 0L)
     assertNoDanglingOrOrphan(dir)
     // a lost maintenance pass is safe to re-run from a fresh read
     log.compactNow(spark)(_.withColumn("v", col("v") * 2L))
@@ -151,7 +151,7 @@ class BucketedLogConcurrencySpec extends AnyFunSuite with SparkTestBase {
     assertNoDanglingOrOrphan(dir)
   }
 
-  test("applyBatchWithRetry rebases a lost race against the winner's state") {
+  test("retrying(applyBatch) rebases a lost race against the winner's state") {
     val dir = "/tmp/graft_blconc_d"
     val log = newLog(dir)
     val entered = new CountDownLatch(1)
@@ -161,8 +161,10 @@ class BucketedLogConcurrencySpec extends AnyFunSuite with SparkTestBase {
       // first attempt blocks inside merge targeting v1; the compactNow
       // below wins v1; the retry re-reads v1 as base and lands at v2 —
       // the batch is merged against the DOUBLED state, not the stale one
-      try log.applyBatchWithRetry(Seq((1L, 100L)).toDF("k", "v"), 0L) {
-        (cur, b) => entered.countDown(); proceed.await(); sumMerge(cur, b)
+      try BucketedLog.retrying() {
+        log.applyBatch(Seq((1L, 100L)).toDF("k", "v"), 0L) {
+          (cur, b) => entered.countDown(); proceed.await(); sumMerge(cur, b)
+        }
       } catch { case e: Throwable => failure = Some(e) }
     })
     t.start()
@@ -173,7 +175,7 @@ class BucketedLogConcurrencySpec extends AnyFunSuite with SparkTestBase {
     assert(failure.isEmpty, s"retry must land, got $failure")
     assert(state(log) === Map(1L -> 120L, 2L -> 40L, 3L -> 60L))
     // the rebase committed the batch watermark exactly once
-    assert(log.readManifestFull(spark).get._2 === 0L)
+    assert(log.head(spark).get.lastBatch === 0L)
     assertNoDanglingOrOrphan(dir)
   }
 
@@ -196,12 +198,12 @@ class BucketedLogConcurrencySpec extends AnyFunSuite with SparkTestBase {
     assert(log.txnWatermark(spark, "wB") === 0L)
     assert(log.txnWatermark(spark, "wC") === -1L)
     // named commits leave the default stream's #batch= receipt alone
-    assert(log.readManifestFull(spark).get._2 === -1L)
+    assert(log.head(spark).get.lastBatch === -1L)
     // ...and the default stream's own mark still works beside them
     log.applyBatch(Seq((3L, 7L)).toDF("k", "v"), 0L)(sumMerge)
     log.applyBatch(Seq((3L, 999L)).toDF("k", "v"), 0L)(sumMerge) // replay
     assert(state(log) === Map(1L -> 13L, 2L -> 25L, 3L -> 37L))
-    assert(log.readManifestFull(spark).get._2 === 0L)
+    assert(log.head(spark).get.lastBatch === 0L)
     assertNoDanglingOrOrphan(dir)
   }
 
@@ -231,9 +233,10 @@ class BucketedLogConcurrencySpec extends AnyFunSuite with SparkTestBase {
       new Thread(() => {
         start.await()
         try (0 until 3).foreach { b =>
-          log.applyBatchWithRetry(
-            Seq((1L, 1L), (2L + w, 10L)).toDF("k", "v"),
-            b.toLong, s"w$w", maxAttempts = 64)(sumMerge)
+          BucketedLog.retrying(64) {
+            log.applyBatch(Seq((1L, 1L), (2L + w, 10L)).toDF("k", "v"),
+              b.toLong, s"w$w")(sumMerge)
+          }
         } catch { case e: Throwable => failures.add(e) }
       })
     }
@@ -260,11 +263,11 @@ class BucketedLogConcurrencySpec extends AnyFunSuite with SparkTestBase {
     // still be curVer+1, or a concurrent writer targeting curVer+1
     // would land at a DIFFERENT name and silently shadow one commit
     log.applyBatch(Seq((1L, 1L)).toDF("k", "v"), 100L)(sumMerge)
-    assert(log.readManifest(spark).get._1 === 1L,
+    assert(log.head(spark).get.version === 1L,
       "default commit must land at curVer+1, not batchId+1")
-    assert(log.readManifestFull(spark).get._2 === 100L)
+    assert(log.head(spark).get.lastBatch === 100L)
     log.applyBatch(Seq((1L, 2L)).toDF("k", "v"), 0L, "wA")(sumMerge)
-    assert(log.readManifest(spark).get._1 === 2L)
+    assert(log.head(spark).get.version === 2L)
     assert(state(log) === Map(1L -> 13L, 2L -> 20L, 3L -> 30L))
   }
 
@@ -349,6 +352,6 @@ class BucketedLogConcurrencySpec extends AnyFunSuite with SparkTestBase {
     }
     // the store is untouched by the rejected attempts
     assert(state(log) === Map(1L -> 10L, 2L -> 20L, 3L -> 30L))
-    assert(log.readManifest(spark).get._1 === 0L)
+    assert(log.head(spark).get.version === 0L)
   }
 }

@@ -5,7 +5,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.streaming.AggView
+import graft.streaming.{AggView, BucketedLog}
 
 /** Randomized adversarial sequences against the flagship BucketedLog/
   * AggView machinery, checked against an in-memory reference fold:
@@ -299,7 +299,8 @@ class BucketedLogPropertySpec extends AnyFunSuite with SparkTestBase {
           if (replay(b % replay.size)) st.applyBatch(df, b.toLong)
         }
         (0 until evolveAt).foreach(deal(_, withTier = false))
-        val verBefore = st.readManifest(spark).get._1
+        val verBefore = BucketedLog(st.dir, Seq(st.keyCol), st.buckets)
+          .head(spark).get.version
         st = st.evolvePayload(spark, Seq("tier" -> "string"))
         (evolveAt until nBatches).foreach(deal(_, withTier = true))
         val got = st.read(spark).collect()
@@ -347,11 +348,13 @@ class BucketedLogPropertySpec extends AnyFunSuite with SparkTestBase {
           new Thread(() => {
             try (0 until nBatchesPer(w % nBatchesPer.size)).foreach { b =>
               val rows = batchRows(w, b).toDF("grp", "units")
-              log.applyBatchWithRetry(rows, b.toLong, s"w$w",
-                maxAttempts = 64)(add)
+              BucketedLog.retrying(64) {
+                log.applyBatch(rows, b.toLong, s"w$w")(add)
+              }
               if (replay((w + b) % replay.size))
-                log.applyBatchWithRetry(rows, b.toLong, s"w$w",
-                  maxAttempts = 64)(add) // replay: no-op by w's mark
+                BucketedLog.retrying(64) { // replay: no-op by w's mark
+                  log.applyBatch(rows, b.toLong, s"w$w")(add)
+                }
             } catch { case e: Throwable => failures.add(e) }
           })
         }

@@ -57,7 +57,7 @@ class BucketedLogSegmentSpec extends AnyFunSuite with SparkTestBase {
     log.init(batchDf(Seq.empty))
     batches.zipWithIndex.foreach { case (b, i) =>
       log.appendBatch(batchDf(b), i.toLong)
-      val entries = log.readManifest(spark).get._2
+      val entries = log.head(spark).get.entries
       assert(entries.values.forall(_.size <= ca),
         s"after batch $i a bucket's segment list exceeded $ca: $entries")
     }
@@ -70,7 +70,7 @@ class BucketedLogSegmentSpec extends AnyFunSuite with SparkTestBase {
     batches.zipWithIndex.foreach { case (b, i) =>
       wide.appendBatch(batchDf(b), i.toLong)
     }
-    val lists = wide.readManifest(spark).get._2.values
+    val lists = wide.head(spark).get.entries.values
     assert(lists.exists(_.size > 1),
       s"expected multi-segment buckets at compactAfter=16: $lists")
     assert(state(wide) === batches.flatten.sorted)
@@ -110,7 +110,7 @@ class BucketedLogSegmentSpec extends AnyFunSuite with SparkTestBase {
     log.appendBatch(batchDf(Seq((2L, 20L))), 0L, "wA") // replay by ITS mark
     assert(state(log) === Seq((1L, 10L), (2L, 20L)))
     assert(log.txnWatermark(spark, "wA") === 0L)
-    assert(log.readManifestFull(spark).get._2 === 0L)
+    assert(log.head(spark).get.lastBatch === 0L)
     // adversarial writer id rejected before any manifest write
     intercept[IllegalArgumentException] {
       log.appendBatch(batchDf(Seq((9L, 9L))), 1L, "w\nA")
@@ -140,7 +140,7 @@ class BucketedLogSegmentSpec extends AnyFunSuite with SparkTestBase {
     // the touched bucket's entry collapsed to ONE dir
     val bktOf1 = batchDf(Seq((1L, 0L)))
       .select(log.bkt.cast("int")).head().getInt(0)
-    val entries = log.readManifest(spark).get._2
+    val entries = log.head(spark).get.entries
     entries.get(bktOf1).foreach(ds =>
       assert(ds.size === 1, s"rewrite must collapse segments: $ds"))
   }

@@ -55,10 +55,10 @@ class IncrementalBloomIndexSpec extends AnyFunSuite with SparkTestBase {
     idx.init(spark)
     idx.applyBatch(table, "k", 0L)
     val log = graft.streaming.BucketedLog(dir, Seq("shard"), 16)
-    val before = log.readManifest(spark).get._2
+    val before = log.head(spark).get.entries
     // one-key append touches exactly one shard -> one log bucket
     idx.applyBatch(Seq(123456789L).toDF("k"), "k", 1L)
-    val after = log.readManifest(spark).get._2
+    val after = log.head(spark).get.entries
     val moved = after.filter { case (b, d) => before.get(b) != Some(d) }
     assert(moved.size === 1, s"expected one rewritten bucket: $moved")
   }
@@ -84,7 +84,7 @@ class IncrementalBloomIndexSpec extends AnyFunSuite with SparkTestBase {
     idx.applyBatch(table, "k", 0L)
     val log = graft.streaming.BucketedLog("/tmp/graft_incbloom_e",
       Seq("shard"), 16)
-    val receipt = log.readManifestFull(spark).get._2
+    val receipt = log.head(spark).get.lastBatch
     // DELETE every key divisible by 3, rebuild the touched shards
     // (all of them — every shard holds some deleted key)
     val alive = table.where(col("k") % 3 =!= 0)
@@ -104,6 +104,6 @@ class IncrementalBloomIndexSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(_.getLong(0)).toSet
     assert(trueShards.subsetOf(
       idx.matchingShards(spark, present, "k").toSet))
-    assert(log.readManifestFull(spark).get._2 === receipt)
+    assert(log.head(spark).get.lastBatch === receipt)
   }
 }

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.operators.MergeInto
-import graft.streaming.SnapshotStore
+import graft.streaming.{BucketedLog, SnapshotStore}
 
 /** Log-structured versioned CDC snapshot (q181's store): sequential
   * apply over ANY batch split — including adversarially out-of-order
@@ -40,6 +40,10 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkTestBase {
   private def store(dir: String, buckets: Int = 8, compactAfter: Int = 16) =
     SnapshotStore(dir, "k", "ts", "id", "op", Seq("seg", "bal"),
       buckets, compactAfter)
+
+  /** The store's head manifest, read through the BucketedLog under it. */
+  private def headOf(st: SnapshotStore): BucketedLog.Head =
+    BucketedLog(st.dir, Seq(st.keyCol), st.buckets).head(spark).get
 
   private def published(st: SnapshotStore): Map[Long, (String, Double)] =
     st.read(spark).collect()
@@ -91,12 +95,12 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkTestBase {
     val dir = "/tmp/graft_snapstore_u"
     val st = store(dir, buckets = 8)
     st.init(base, IntegerType, LongType)
-    val m0 = st.readManifest(spark).get._2
+    val m0 = headOf(st).entries
     assert(m0.values.toSet === Set(Seq("data/v0")))
     // one-key batch touches exactly one bucket
     val batch = Seq((1L, "U", "a1", 11.0, 1, 100L))
     st.applyBatch(changesDf(batch), 0L)
-    val m1 = st.readManifest(spark).get._2
+    val m1 = headOf(st).entries
     val moved = m1.filter(_._2 != Seq("data/v0"))
     assert(moved.size === 1, s"expected exactly one rewritten bucket: $m1")
     assert(m1.filter(_._2 == Seq("data/v0")).size === m0.size - (
@@ -113,7 +117,7 @@ class SnapshotStoreSpec extends AnyFunSuite with SparkTestBase {
     val st = applySplit("/tmp/graft_snapstore_k",
       changes.map(Seq(_)), buckets = 4, compactAfter = 3)
     assert(published(st) === expected)
-    val m = st.readManifest(spark).get._2
+    val m = headOf(st).entries
     assert(m.values.toSet.size <= 4,
       s"compaction should bound live dirs: ${m.values.toSet}")
   }

@@ -110,9 +110,9 @@ class ZoneMapIndexSpec extends AnyFunSuite with SparkTestBase {
     idx.init(spark, "int", "long")
     idx.applyBatch(table, "unit", "v", 0L)
     val log = graft.streaming.BucketedLog(dir, Seq("unit"), 16)
-    val before = log.readManifest(spark).get._2
+    val before = log.head(spark).get.entries
     idx.applyBatch(Seq((99, 99000L)).toDF("unit", "v"), "unit", "v", 1L)
-    val after = log.readManifest(spark).get._2
+    val after = log.head(spark).get.entries
     val moved = after.filter { case (b, d) => before.get(b) != Some(d) }
     assert(moved.size === 1, s"expected one rewritten bucket: $moved")
   }
