@@ -42,6 +42,11 @@ object OhlcAggregator {
   private def lt(ts1: Long, id1: Long, ts2: Long, id2: Long): Boolean =
     ts1 < ts2 || (ts1 == ts2 && id1 < id2)
 
+  // built once per JVM: `Encoders.product` derives through Scala
+  // reflection, and the planner and every task ask for the encoders
+  private val bufEncoder: Encoder[Buf] = Encoders.product[Buf]
+  private val ohlcEncoder: Encoder[Ohlc] = Encoders.product[Ohlc]
+
   val agg: Aggregator[In, Buf, Ohlc] = new Aggregator[In, Buf, Ohlc] {
     override def zero: Buf = empty
 
@@ -83,7 +88,7 @@ object OhlcAggregator {
     override def finish(b: Buf): Ohlc =
       Ohlc(b.open, b.high, b.low, b.close, b.volume, b.n)
 
-    override def bufferEncoder: Encoder[Buf] = Encoders.product[Buf]
-    override def outputEncoder: Encoder[Ohlc] = Encoders.product[Ohlc]
+    override def bufferEncoder: Encoder[Buf] = bufEncoder
+    override def outputEncoder: Encoder[Ohlc] = ohlcEncoder
   }
 }

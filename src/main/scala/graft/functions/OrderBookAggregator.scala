@@ -43,6 +43,12 @@ object OrderBookAggregator {
     (k.substring(0, i).toShort, k.substring(i + 1).toDouble)
   }
 
+  // built once per JVM: encoder derivation goes through Scala
+  // reflection, and the planner and every task ask for the encoders
+  private val bufEncoder: Encoder[Buf] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
+  private val bookTopEncoder: Encoder[BookTop] = Encoders.product[BookTop]
+
   val agg: Aggregator[Delta, Buf, BookTop] = new Aggregator[Delta, Buf, BookTop] {
     override def zero: Buf = Map.empty
 
@@ -73,8 +79,7 @@ object OrderBookAggregator {
         levels.size.toLong)
     }
 
-    override def bufferEncoder: Encoder[Buf] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
-    override def outputEncoder: Encoder[BookTop] = Encoders.product[BookTop]
+    override def bufferEncoder: Encoder[Buf] = bufEncoder
+    override def outputEncoder: Encoder[BookTop] = bookTopEncoder
   }
 }

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+
+import graft.plans.SortedMergeUnionStrategy
 
 /** As-of (most-recent-prior) join — the canonical market-data join the
   * reference lacks but its merged-stream consumers hand-roll inside
@@ -20,6 +23,15 @@ import org.apache.spark.sql.functions._
   * field-by-field. One shuffle by key, per-key sort — identical data
   * movement to a sort-merge as-of join, and skew-safe under AQE. Left
   * rows then filter back out with the matched right columns attached.
+  *
+  * A small union skips the shuffle: when its estimated size (from the
+  * analyzed plan, so no extra optimizer pass) fits the one-task bound
+  * of the sorted-merge planner (`SortedMergeUnionStrategy.fitsOneTask`,
+  * `-Dgraft.mergeSizeThreshold`, 256 MB by default), the window reads
+  * the union through `coalesce(1)`. One partition satisfies both the
+  * window's clustering and a keyless aggregate above it, so the as-of
+  * and a fold over it run as one job instead of a map stage plus one
+  * or two more exchanges.
   *
   * Ties (right.time == left.time) match, i.e. the join is "most recent
   * right event with rightTime <= leftTime" — DuckDB `ASOF JOIN`
@@ -70,7 +82,10 @@ object AsOfJoin {
       Seq(struct(rightVals.map { case (src, dst) => col(src).as(dst) }: _*)
         .as("__r"))
     val r = right.select(rSelect: _*)
-    val unioned = l.unionByName(r, allowMissingColumns = true)
+    val union = l.unionByName(r, allowMissingColumns = true)
+    val unioned =
+      if (SortedMergeUnionStrategy.fitsOneTask(Bridge.analyzed(union))) union.coalesce(1)
+      else union
     // Backward: ascending time; right rows sort before left rows at
     // equal time (__side 0 < 1) so an equal-time right row is visible
     // to the left row — ASOF <=. Among tied right rows, ascending tie

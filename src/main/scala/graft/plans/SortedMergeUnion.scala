@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.{OneToOneDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, SortOrder}
@@ -49,11 +50,19 @@ case class SortedMergeUnion(children: Seq[LogicalPlan], timeCol: String,
     copy(children = newChildren)
 }
 
+/** Plans the merge in one partition when every child [[fitsOneTask]];
+  * the same predicate sends a small `AsOfJoin` window to one partition. */
 object SortedMergeUnionStrategy extends SparkStrategy {
-  /** Per-child size bound for the single-partition merge path
-    * (overridable via -Dgraft.mergeSizeThreshold for tests/tuning). */
+  /** Size bound for a plan that runs in one task: each child of the
+    * single-partition merge, or the whole input of a single-partition
+    * as-of window (overridable via -Dgraft.mergeSizeThreshold for
+    * tests/tuning). */
   def mergeSizeThreshold: Long =
     java.lang.Long.getLong("graft.mergeSizeThreshold", 256L * 1024 * 1024)
+
+  /** Whether `plan`'s estimated size fits [[mergeSizeThreshold]]. */
+  private[graft] def fitsOneTask(plan: LogicalPlan): Boolean =
+    plan.stats.sizeInBytes <= BigInt(mergeSizeThreshold)
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case s @ SortedMergeUnion(children, _, _) =>
@@ -63,9 +72,7 @@ object SortedMergeUnionStrategy extends SparkStrategy {
             s"merge column $name not in ${s.output.map(_.name)}"))
         SortOrder(attr, Ascending)
       }
-      val smallEnough = children.forall(
-        _.stats.sizeInBytes <= BigInt(mergeSizeThreshold))
-      if (smallEnough) {
+      if (children.forall(fitsOneTask)) {
         SortedMergeUnionExec(children.map(planLater), orders) :: Nil
       } else {
         // distributed fallback: union + global sort (range partition);
@@ -113,9 +120,8 @@ case class SortedMergeUnionExec(children: Seq[SparkPlan], orders: Seq[SortOrder]
     val ordering =
       new org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering(
         orders, output)
-    children.map(_.execute()).reduce { (l, r) =>
-      l.zipPartitions(r)(SortedMergeUnionExec.mergeSorted(ordering))
-    }
+    new ZippedChildrenRDD(children.map(_.execute()),
+      SortedMergeUnionExec.mergeSorted(ordering))
   }
 
   override protected def withNewChildrenInternal(
@@ -124,22 +130,60 @@ case class SortedMergeUnionExec(children: Seq[SparkPlan], orders: Seq[SortOrder]
 }
 
 object SortedMergeUnionExec {
-  /** Two-way merge of sorted InternalRow iterators; generalizes to
-    * k-way by left-fold (merge tree). Heads are copied because
-    * operator output rows may be reused by the producer. */
-  def mergeSorted(ord: Ordering[InternalRow])(
-      a: Iterator[InternalRow], b: Iterator[InternalRow]): Iterator[InternalRow] =
+  /** k-way merge of sorted InternalRow iterators by min-head selection
+    * on a heap. Rows that compare equal leave in child order, then in
+    * their child's order: the output of a left fold of 2-way merges
+    * that take the left head on ties, with one comparison per heap
+    * level instead of one per child. Heads are copied because operator
+    * output rows may be reused by the producer. */
+  private[graft] def mergeSorted(ord: Ordering[InternalRow])(
+      inputs: Seq[Iterator[InternalRow]]): Iterator[InternalRow] = {
+    val its = inputs.toIndexedSeq
+    val heads = new Array[InternalRow](its.size)
+    val heap = new java.util.PriorityQueue[Integer](math.max(1, its.size),
+      (a: Integer, b: Integer) => {
+        val c = ord.compare(heads(a), heads(b))
+        if (c != 0) c else Integer.compare(a, b)
+      })
+    def pull(i: Int): Unit =
+      if (its(i).hasNext) { heads(i) = its(i).next().copy(); heap.add(i) }
+    its.indices.foreach(pull)
     new Iterator[InternalRow] {
-      private var headA: InternalRow = advance(a)
-      private var headB: InternalRow = advance(b)
-      private def advance(it: Iterator[InternalRow]): InternalRow =
-        if (it.hasNext) it.next().copy() else null
-      override def hasNext: Boolean = headA != null || headB != null
+      override def hasNext: Boolean = !heap.isEmpty
       override def next(): InternalRow = {
-        val takeA = headB == null ||
-          (headA != null && ord.compare(headA, headB) <= 0)
-        if (takeA) { val r = headA; headA = advance(a); r }
-        else { val r = headB; headB = advance(b); r }
+        val i: Int = heap.remove()
+        val r = heads(i)
+        pull(i)
+        r
       }
     }
+  }
 }
+
+/** A k-ary `zipPartitions`: partition i hands partition i of every
+  * child, in child order, to `f`. */
+private final class ZippedChildrenRDD(
+    private var rdds: Seq[RDD[InternalRow]],
+    f: Seq[Iterator[InternalRow]] => Iterator[InternalRow])
+    extends RDD[InternalRow](rdds.head.context, rdds.map(new OneToOneDependency(_))) {
+
+  override protected def getPartitions: Array[Partition] = {
+    val n = rdds.head.partitions.length
+    require(rdds.forall(_.partitions.length == n),
+      s"children must have equal partition counts: ${rdds.map(_.partitions.length)}")
+    Array.tabulate[Partition](n)(i => new ZippedChildrenPartition(i, rdds.map(_.partitions(i))))
+  }
+
+  override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
+    val parents = split.asInstanceOf[ZippedChildrenPartition].parents
+    f(rdds.zip(parents).map { case (rdd, p) => rdd.iterator(p, context) })
+  }
+
+  override def clearDependencies(): Unit = {
+    super.clearDependencies()
+    rdds = null
+  }
+}
+
+private final class ZippedChildrenPartition(val index: Int, val parents: Seq[Partition])
+    extends Partition

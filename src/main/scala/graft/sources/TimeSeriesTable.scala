@@ -1,7 +1,16 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetOptions, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Partitioned time-series table layout — the 100 TB answer to the
   * reference's row-key design.
@@ -52,7 +61,52 @@ object TimeSeriesTable {
   }
 
   /** Open the table; series/time predicates applied on top of this
-    * prune partitions (see SeriesScan.scan). */
+    * prune partitions (see SeriesScan.scan).
+    *
+    * An open costs one listing plus one driver-side footer read, and no
+    * Spark job: `spark.read.parquet` infers the data schema with a
+    * one-task job that reads a single footer; here the same footer is
+    * read on the driver (see [[DriverFooterParquet]]). Partition columns
+    * and their types are still inferred from the paths, and a missing
+    * path fails exactly as `spark.read.parquet(path)` does. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.format(classOf[DriverFooterParquet].getName).load(path)
+}
+
+/** Parquet whose schema inference reads, on the driver, the one footer
+  * Spark's own inference (`ParquetUtils.inferSchema`) would read in a
+  * job: `_common_metadata`, else `_metadata`, else the first data file
+  * in path order, converted as `ParquetFileFormat.mergeSchemasInParallel`
+  * converts it. Everything else — listing, partition inference, scan —
+  * is `ParquetFileFormat`'s. Schema merging, an empty listing and an
+  * unreadable footer go to Spark's inference, so their result or error
+  * is unchanged. No schema is cached: each open reads the footer of the
+  * files it listed. */
+private[sources] final class DriverFooterParquet extends ParquetFileFormat {
+  override def inferSchema(spark: SparkSession, options: Map[String, String],
+      files: Seq[FileStatus]): Option[StructType] = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val conf = state.conf
+    val leaves = files.sortBy(_.getPath.toString)
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    val footer = summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
+      .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
+    footer match {
+      case Some(f) if !new ParquetOptions(options, conf).mergeSchema =>
+        try {
+          val meta = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, state.newHadoopConfWithOptions(options)),
+            ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          val converter = new ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = conf.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+            nanosAsLong = conf.legacyParquetNanosAsLong,
+            respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+          Some(ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta), converter))
+        } catch { case NonFatal(_) => super.inferSchema(spark, options, files) }
+      case _ => super.inferSchema(spark, options, files)
+    }
+  }
 }

@@ -2,9 +2,11 @@ package graft
 
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import graft.model.Trade
 import graft.operators.OrderedMerge
+import graft.plans.SortedMergeUnionExec
 
 /** Custom physical operator: SortedMergeUnionExec must produce the
   * same rows as union+orderBy, in globally non-decreasing time, and
@@ -63,5 +65,47 @@ class SortedMergeUnionSpec extends AnyFunSuite with SparkTestBase {
     // outputOrdering is declared, so the planner must not re-sort
     assert(!plan.split("SortedMergeUnion ").head.contains("Sort "),
       s"unexpected re-sort above the merge:\n$plan")
+  }
+
+  /** The 2-way merge the k-way kernel replaced, left-folded over the
+    * children: on equal keys the left (lower-index) side goes first. */
+  private def foldMerge[T](ord: Ordering[T])(children: Seq[Seq[T]]): Seq[T] =
+    children.reduce { (a, b) =>
+      val out = Seq.newBuilder[T]
+      var (l, r) = (a, b)
+      while (l.nonEmpty || r.nonEmpty) {
+        if (r.isEmpty || (l.nonEmpty && ord.compare(l.head, r.head) <= 0)) {
+          out += l.head; l = l.tail
+        } else { out += r.head; r = r.tail }
+      }
+      out.result()
+    }
+
+  test("64-child k-way kernel equals the fold of 2-way merges, tie order included") {
+    val rnd = new scala.util.Random(64)
+    // (key, child, position): many equal keys within and across children
+    val children = (0 until 64).map { c =>
+      Seq.fill(rnd.nextInt(40))(rnd.nextInt(20).toLong).sorted.zipWithIndex
+        .map { case (k, i) => InternalRow(k, c, i) }
+    }
+    val byKey: Ordering[InternalRow] = Ordering.by[InternalRow, Long](_.getLong(0))
+    def ids(rows: Seq[InternalRow]) = rows.map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+    val got = SortedMergeUnionExec.mergeSorted(byKey)(children.map(_.iterator)).toSeq
+    assert(ids(got) === ids(foldMerge(byKey)(children)))
+    assert(SortedMergeUnionExec.mergeSorted(byKey)(Nil).isEmpty)
+  }
+
+  test("64-child merge exec equals the fold: equal times leave in child order") {
+    // every child holds the same 10 times, so each time ties 64 ways
+    val children = (0 until 64).map { c =>
+      (0 until 10).map(i => (ts(i * 10L), c, i)).toDF("time", "child", "pos")
+    }
+    val merged = OrderedMerge.mergeSorted("time", children: _*)
+    val plan = merged.queryExecution.executedPlan.toString
+    assert(plan.contains("SortedMergeUnion "), s"operator missing:\n$plan")
+    val got = merged.collect().map(r => (r.getTimestamp(0).getTime, r.getInt(1), r.getInt(2)))
+    val expected = foldMerge(Ordering.by[(Long, Int, Int), Long](_._1))(
+      children.map(_.collect().map(r => (r.getTimestamp(0).getTime, r.getInt(1), r.getInt(2))).toSeq))
+    assert(got.toSeq === expected)
   }
 }

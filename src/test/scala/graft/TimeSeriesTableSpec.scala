@@ -7,11 +7,14 @@ import org.apache.spark.sql.functions._
 import graft.model.Trade
 import graft.operators.SeriesScan
 import graft.sources.TimeSeriesTable
+import graft.streaming.IngestPipeline
 
 /** Partitioned layout: scans with series+interval predicates must hit
   * partition pruning (PartitionFilters) and parquet pushdown
   * (PushedFilters) — the rebuild of the reference's row-key range
-  * behavior, asserted on the actual physical plan. */
+  * behavior, asserted on the actual physical plan. The open reads its
+  * schema on the driver: the same schema as `spark.read.parquet`, and
+  * no Spark job. */
 class TimeSeriesTableSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
@@ -88,5 +91,87 @@ class TimeSeriesTableSpec extends AnyFunSuite with SparkTestBase {
     assert(!back.columns.contains("__bucket"))
     assert(back.count() === trades.size)
     assert(back.select("tradeId").distinct().count() === trades.size)
+  }
+
+  private def trades(days: Seq[Int]) = for {
+    m <- Seq("RTS", "FORTS"); d <- days; i <- 0 until 4
+  } yield Trade(m, s"SEC-${i % 2}", d * 100L + i, 100.0 + i, 1, ts(d, i),
+    nosystem = false)
+
+  private def sameSchemaAsSpark(p: String): Unit =
+    assert(TimeSeriesTable.read(spark, p).schema === spark.read.parquet(p).schema)
+
+  test("open: market=/date= layout has Spark's schema, partition types included") {
+    val dir = Files.createTempDirectory("tst").toString + "/trades"
+    TimeSeriesTable.write(trades(1 to 3).toDS.toDF, dir, "market", "time", "security")
+    sameSchemaAsSpark(dir)
+    val date = TimeSeriesTable.read(spark, dir).schema("date")
+    assert(date.dataType === org.apache.spark.sql.types.DateType)
+  }
+
+  test("open: IngestPipeline's __date layout has Spark's schema") {
+    val root = Files.createTempDirectory("tst").toString
+    val in = s"$root/in"; val out = s"$root/out"
+    trades(Seq(1)).toDS.write.mode("append").parquet(in)
+    trades(Seq(2)).toDS.write.mode("append").parquet(in)
+    IngestPipeline.startIngest(IngestPipeline.fileSource(spark,
+        trades(Seq(1)).toDS.schema, in), out, s"$root/ckpt", "tradeId", "time")
+      .awaitTermination()
+    assert(new java.io.File(out).list().exists(_.startsWith("__date=")))
+    sameSchemaAsSpark(out)
+  }
+
+  test("open: a _common_metadata summary wins over the data files") {
+    val root = Files.createTempDirectory("tst").toString
+    // the summary of a wider table, laid over a narrower one: the
+    // schema must come from the summary, as Spark's inference takes it
+    Seq((1L, "a", 2.0)).toDF("id", "name", "extra").write
+      .option("parquet.summary.metadata.level", "COMMON_ONLY")
+      .parquet(s"$root/wide")
+    val summary = new java.io.File(s"$root/wide/_common_metadata")
+    assert(summary.isFile, "no summary written")
+    Seq((1L, "a")).toDF("id", "name").write.parquet(s"$root/narrow")
+    Files.copy(summary.toPath, new java.io.File(s"$root/narrow/_common_metadata").toPath)
+    assert(spark.read.parquet(s"$root/narrow").columns.contains("extra"))
+    sameSchemaAsSpark(s"$root/narrow")
+  }
+
+  test("open: when files disagree, the file Spark picks wins") {
+    val dir = Files.createTempDirectory("tst").toString + "/mixed"
+    // written first but listed second: x=2 sorts after x=1
+    Seq((1L, "a")).toDF("id", "b").write.parquet(s"$dir/x=2")
+    Seq((2L, 3.0)).toDF("id", "c").write.parquet(s"$dir/x=1")
+    val schema = TimeSeriesTable.read(spark, dir).schema
+    assert(schema.fieldNames.toSeq === Seq("id", "c", "x"))
+    sameSchemaAsSpark(dir)
+  }
+
+  test("open: a missing path fails as spark.read.parquet does") {
+    val missing = Files.createTempDirectory("tst").toString + "/none"
+    val ours = intercept[Exception](TimeSeriesTable.read(spark, missing))
+    val theirs = intercept[Exception](spark.read.parquet(missing))
+    assert(ours.getClass === theirs.getClass)
+    assert(ours.getMessage === theirs.getMessage)
+  }
+
+  test("open runs no Spark job") {
+    val dir = Files.createTempDirectory("tst").toString + "/trades"
+    TimeSeriesTable.write(trades(1 to 3).toDS.toDF, dir, "market", "time", "security")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.sql.graft.Bridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val table = TimeSeriesTable.read(spark, dir)
+      org.apache.spark.sql.graft.Bridge.drainListeners(spark)
+      assert(jobs.get === 0, "the open ran a Spark job")
+      // the listener does see jobs: the scan runs one
+      assert(table.count() === trades(1 to 3).size)
+      org.apache.spark.sql.graft.Bridge.drainListeners(spark)
+      assert(jobs.get > 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
