@@ -34,6 +34,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.SortedMergeUnionStrategy)
     ext.injectOptimizerRule(_ => graft.plans.SortedMergeUnionLimitPushdown)
+    ext.injectOptimizerRule(_ => graft.plans.SortedMergeUnionPruning)
     ext.injectFunction(binary("sorted_intersect_count", SortedIntersectCount.apply))
     ext.injectFunction(binary("float_dot", FloatDotProduct.apply))
     ext.injectFunction(binary("bitmap_and_count", BitmapAndCount.apply))

@@ -180,40 +180,4 @@ object Components {
     e.unpersist()
     labels
   }
-
-  /** INCREMENTAL update: merge a batch of new edges into an existing
-    * (node, component) labeling without revisiting edge history. The
-    * prior labeling IS its components' star edge set (node →
-    * component-min), and CC(stars(CC(E₁)) ∪ E₂) = CC(E₁ ∪ E₂) — stars
-    * preserve exactly the connectivity of E₁ — so each batch contracts
-    * over |labels| + |batch| edges, not the accumulated pair stream.
-    * Min-label merging is MONOTONE (labels only ever decrease as edges
-    * arrive) and edge union is idempotent, so redelivered batches are
-    * absorbed without correction — the at-least-once property the
-    * streaming wrapper ([[graft.streaming.StreamingComponents]])
-    * relies on. Returns the new labeling over every node seen in
-    * either input (localCheckpoint-materialized, caller-owned). */
-  def incrementalUpdate(priorLabels: DataFrame, newEdges: DataFrame,
-      aCol: String, bCol: String, maxIter: Int = 25): DataFrame = {
-    val prior = priorLabels.select(col("node").cast("long").as("node"),
-      col("component").cast("long").as("component"))
-    val stars = prior
-      .select(col("node").as("a"), col("component").as("b"))
-      .where(col("a") =!= col("b"))
-    val batch = newEdges.select(col(aCol).cast("long").as("a"),
-      col(bCol).cast("long").as("b"))
-    val cc = connectedComponents(stars.unionByName(batch), "a", "b", maxIter)
-    // self-labeled SINGLETONS in the prior have no star edge and so
-    // no CC row; without this re-union they would silently vanish
-    // from the labeling ("every node seen in either input"). A
-    // singleton that gained an edge this batch is in `cc` and the
-    // anti-join drops its stale self-row.
-    val keptSingletons = prior
-      .where(col("node") === col("component"))
-      .join(cc.select(col("node")), Seq("node"), "left_anti")
-      .select(col("node"), col("component"))
-    val out = cc.unionByName(keptSingletons).localCheckpoint()
-    cc.unpersist()
-    out
-  }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** k-way time-ordered merge of multiple series — the reference's core
   * read-path operator: N sorted scanner streams interleaved by
@@ -10,25 +11,35 @@ import org.apache.spark.sql.functions._
   * pick at `:86-92`), including heterogeneous trades+orders merges
   * (`MultipleTimeSeriesEnumeratorTest.scala:262-311`).
   *
-  * Spark-first: `unionByName(allowMissingColumns)` + a global
-  * `orderBy(time)`. Catalyst plans the sort as range partitioning +
-  * per-partition sort — at cluster scale that is a k-way merge of
-  * pre-sorted runs per range, distributed across executors, which is
-  * exactly the reference algorithm generalized. The invariant carried
-  * over from the reference test suite
+  * Spark-first: one logical node, `graft.plans.SortedMergeUnion`, for
+  * every merge. The planner turns it into a one-task k-way heap merge of
+  * per-child sorted runs when each child fits one task, and into a
+  * global sort over the union (range partitioning + per-partition sort,
+  * the reference algorithm distributed across executors) otherwise. The
+  * invariant carried over from the reference test suite
   * (`MultipleTimeSeriesEnumeratorTest.scala:205-210`) is
   * *non-decreasing event time*; tie order between streams is
-  * unspecified there and stays unspecified here.
+  * unspecified there and stays unspecified here unless tiebreak columns
+  * are given (`mergeSortedTied`).
   */
 object OrderedMerge {
 
   /** Merge heterogeneous series into one globally time-ordered stream.
-    * Missing columns null-fill (superset schema, SURVEY §1.4). */
+    * Missing columns null-fill (superset schema, SURVEY §1.4): each
+    * stream is projected onto the columns, order and types that
+    * `unionByName(allowMissingColumns = true)` gives, then merged by
+    * `mergeSortedTied(timeCol, Nil, ...)`. */
   def merge(timeCol: String, streams: DataFrame*): DataFrame = {
     require(streams.nonEmpty, "need at least one stream")
-    streams
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-      .orderBy(col(timeCol))
+    val superset = streams.reduce(_.unionByName(_, allowMissingColumns = true)).schema
+    val resolver = SQLConf.get.resolver
+    val filled = streams.map { s =>
+      s.select(superset.fields.toSeq.map { f =>
+        s.columns.find(resolver(_, f.name)).map(col).getOrElse(lit(null))
+          .cast(f.dataType).as(f.name)
+      }: _*)
+    }
+    mergeSortedTied(timeCol, Nil, filled: _*)
   }
 
   /** Merge keeping a discriminator column naming the source stream —
@@ -39,12 +50,11 @@ object OrderedMerge {
       timeCol,
       tagged.map { case (tag, df) => df.withColumn("stream", lit(tag)) }: _*)
 
-  /** Merge via the custom `SortedMergeUnion` operator
-    * (`graft.plans`): k-way merge of pre-sorted series without a
-    * re-sort when sizes allow, Union+Sort fallback otherwise — the
-    * planner decides from stats. Children must share the schema;
-    * each is sorted by `timeCol` on the way in (a no-op for sources
-    * that already are, thanks to requiredChildOrdering). */
+  /** `merge` for streams that already share the schema (no null-fill):
+    * k-way merge of pre-sorted series without a re-sort when sizes
+    * allow, Union+Sort fallback otherwise — the planner decides from
+    * stats. Each stream is sorted by `timeCol` on the way in (a no-op
+    * for sources that already are, thanks to requiredChildOrdering). */
   def mergeSorted(timeCol: String, streams: DataFrame*): DataFrame =
     mergeSortedTied(timeCol, Nil, streams: _*)
 
@@ -64,10 +74,9 @@ object OrderedMerge {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.SortedMergeUnionStrategy
     }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.SortedMergeUnionLimitPushdown)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.SortedMergeUnionLimitPushdown
-    }
+    Seq(graft.plans.SortedMergeUnionLimitPushdown, graft.plans.SortedMergeUnionPruning)
+      .filterNot(spark.experimental.extraOptimizations.contains)
+      .foreach(r => spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ r)
     val cols = streams.head.columns.toSeq
     val aligned = streams.map(_.select(cols.map(col): _*))
     import org.apache.spark.sql.graft.Bridge

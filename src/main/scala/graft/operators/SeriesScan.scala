@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Time-series range scan — the reference's only query primitive:
@@ -12,9 +12,14 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first: the "plan" is a lazy filtered DataFrame. Catalyst
   * pushes the series and time predicates into the parquet scan
-  * (PushedFilters + row-group min/max pruning), which at 100 TB with a
-  * `partitionBy(market, date)` layout becomes partition pruning — the
-  * exact job the HBase key range did. The returned DataFrame is the
+  * (PushedFilters + row-group min/max pruning). On a
+  * `partitionBy(market, date)` layout a `market` key prunes `market=`
+  * directories, but the time interval does not prune `date=` (or
+  * `IngestPipeline`'s `__date=`) ones: the filter is on the time column
+  * only, so a one-day request lists and opens every date of its market
+  * unless the caller also passes the date partition column as a series
+  * key. Compiling the interval into a date-partition predicate, as the
+  * HBase key range did, is ROADMAP item 1. The returned DataFrame is the
   * `TimeSeries` handle: nothing executes until an action, matching the
   * reference's handle-then-enumerate split
   * (`TimeSeriesEnumerator.scala:114-124`).
@@ -42,12 +47,9 @@ object SeriesScan {
 
   /** Ordered enumeration of one series — batches arrive time-sorted in
     * the reference (`TimeSeriesEnumerator.scala:50-68`, sort at `:57`).
-    * A single series is one partition-pruned scan; `sortWithinPartitions`
+    * A single series is one filtered scan; `sortWithinPartitions`
     * keeps the sort shuffle-free when downstream only needs per-partition
     * order, `orderBy` when a global order is required. */
   def enumerate(scanned: DataFrame, timeCol: String = "time"): DataFrame =
     scanned.orderBy(col(timeCol))
-
-  def between(c: Column, from: Timestamp, to: Timestamp): Column =
-    c >= lit(from) && c <= lit(to)
 }

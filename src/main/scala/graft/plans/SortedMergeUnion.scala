@@ -4,8 +4,10 @@ import org.apache.spark.{OneToOneDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
 /** Sorted-merge union — the reference's core read-path algorithm as a
@@ -38,16 +40,46 @@ case class SortedMergeUnion(children: Seq[LogicalPlan], timeCol: String,
     * deterministic row set (hard rule 4); without them, tie order
     * between equal timestamps is unspecified (reference semantics). */
   def orderCols: Seq[String] = timeCol +: tieCols
-  override def output: Seq[Attribute] = children.head.output
-  // declare the merge keys as referenced in EVERY child, or column
-  // pruning (e.g. under a bare count()) strips them and the strategy
-  // can no longer resolve the ordering
+  override def output: Seq[Attribute] =
+    SortedMergeUnionExec.unionOutput(children.map(_.output))
+  // declare every column of EVERY child as referenced: Spark's column
+  // pruning matches columns by exprId, which only the first child
+  // shares with the output, so it would leave the children with
+  // different columns; SortedMergeUnionPruning prunes by position
   override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(
-      children.flatMap(_.output.filter(a => orderCols.contains(a.name))))
+    org.apache.spark.sql.catalyst.expressions.AttributeSet(children.flatMap(_.output))
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[LogicalPlan]): LogicalPlan =
     copy(children = newChildren)
+}
+
+/** Drops merge work that nothing reads, as Spark's `ColumnPruning` and
+  * `EliminateSorts` do for `Union` and `Sort`. Under a projection every
+  * child of a [[SortedMergeUnion]] keeps, by position, only the columns
+  * the projection or the merge keys use. Under a count, min or max,
+  * through deterministic projections and filters, nothing reads the
+  * merge order, so the merge is the plain `Union` of its children. */
+object SortedMergeUnionPruning extends Rule[LogicalPlan] {
+  private def orderFree(a: Aggregate): Boolean = a.aggregateExpressions
+    .flatMap(_.collect { case ae: AggregateExpression => ae.aggregateFunction })
+    .forall(f => f.isInstanceOf[Count] || f.isInstanceOf[Min] || f.isInstanceOf[Max])
+
+  private def unordered(p: LogicalPlan): LogicalPlan = p match {
+    case s: SortedMergeUnion => Union(s.children)
+    case _: Project | _: Filter if p.expressions.forall(_.deterministic) =>
+      p.withNewChildren(p.children.map(unordered))
+    case _ => p
+  }
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case p @ Project(_, s: SortedMergeUnion) =>
+      val keep = s.output.indices.filter { i =>
+        p.references.contains(s.output(i)) || s.orderCols.contains(s.output(i).name)
+      }
+      if (keep.size == s.output.size) p
+      else p.copy(child = s.copy(children = s.children.map(c => Project(keep.map(c.output), c))))
+    case a: Aggregate if orderFree(a) => a.withNewChildren(a.children.map(unordered))
+  }
 }
 
 /** Plans the merge in one partition when every child [[fitsOneTask]];
@@ -94,7 +126,8 @@ case class SortedMergeUnionExec(children: Seq[SparkPlan], orders: Seq[SortOrder]
     case other => other.sql
   })
 
-  override def output: Seq[Attribute] = children.head.output
+  override def output: Seq[Attribute] =
+    SortedMergeUnionExec.unionOutput(children.map(_.output))
   override def outputOrdering: Seq[SortOrder] = orders
   override def outputPartitioning: Partitioning = SinglePartition
   // one partition per child, each sorted: EnsureRequirements inserts
@@ -130,6 +163,12 @@ case class SortedMergeUnionExec(children: Seq[SparkPlan], orders: Seq[SortOrder]
 }
 
 object SortedMergeUnionExec {
+  /** The first child's attributes, nullable where any child's column
+    * is (as `Union` computes them), so a column that a later child
+    * null-fills reads back as null. */
+  private[plans] def unionOutput(outputs: Seq[Seq[Attribute]]): Seq[Attribute] =
+    outputs.transpose.map(as => as.head.withNullability(as.exists(_.nullable)))
+
   /** k-way merge of sorted InternalRow iterators by min-head selection
     * on a heap. Rows that compare equal leave in child order, then in
     * their child's order: the output of a left fold of 2-way merges

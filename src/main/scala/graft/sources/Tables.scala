@@ -56,9 +56,4 @@ object Tables {
   /** Fixed scratch base for q69's bucketed co-located join layout
     * (`li/` and `ord/` sub-dirs) — same fixed-path trade as q68. */
   val scratchBucketedBase: String = "/tmp/graft_q69_bucketed"
-
-  /** Register every table as a temp view so `spark.sql` mirrors the
-    * DuckDB oracle's naming. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

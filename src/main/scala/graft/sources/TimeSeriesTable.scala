@@ -21,8 +21,12 @@ import org.apache.spark.sql.types.StructType
   * range. The Spark-native equivalent:
   *
   *  - directory partitioning `market=<m>/date=<d>` → partition pruning
-  *    eliminates whole directories for series+interval predicates
-  *    before any I/O (the `PartitionFilters` entry in `.explain`);
+  *    eliminates whole directories before any I/O (the
+  *    `PartitionFilters` entry in `.explain`). A `market` predicate
+  *    prunes `market=`; `date=` is pruned only by a predicate on `date`
+  *    itself, which `SeriesScan.scan` does not derive from its time
+  *    interval (a caller can pass `date` as a series key). Deriving it
+  *    is ROADMAP item 1;
   *  - within each file, rows sorted by (security, time) →
   *    parquet row-group min/max statistics prune pages for the
   *    security/time predicates (`PushedFilters`);
@@ -60,8 +64,9 @@ object TimeSeriesTable {
       .parquet(path)
   }
 
-  /** Open the table; series/time predicates applied on top of this
-    * prune partitions (see SeriesScan.scan).
+  /** Open the table. A `market` or `date` predicate applied on top of
+    * this prunes partitions; a time predicate alone prunes only parquet
+    * row groups (see SeriesScan.scan).
     *
     * An open costs one listing plus one driver-side footer read, and no
     * Spark job: `spark.read.parquet` infers the data schema with a

@@ -8,9 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * would reuse it and skip extensions), so the SQL-surface check goes
   * through the same registry path `injectFunction` feeds, and the
   * extensions class itself is applied to a fresh
-  * `SparkSessionExtensions` to validate registration wiring. A
-  * from-scratch `withExtensions` session is driven end-to-end in
-  * `graft.tools.Demo` (own JVM). */
+  * `SparkSessionExtensions` to validate registration wiring. */
 class GraftExtensionsSpec extends AnyFunSuite with SparkTestBase {
 
   test("sorted_intersect_count is callable from SQL once registered") {

@@ -2,16 +2,20 @@ package graft
 
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.{SortExec, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.model.{MarketEvent, Trade}
 import graft.operators.OrderedMerge
+import graft.plans.{SortedMergeUnion, SortedMergeUnionExec}
 
 /** Reference-parity: k-way ordered merge invariants
   * (`MultipleTimeSeriesEnumeratorTest.scala:174-213` — 10 series × 10
   * events ⇒ 100 rows, globally non-decreasing time; `:262-311` —
   * heterogeneous trades+orders offset by 500 ms ⇒ strict
   * interleaving). */
-class OrderedMergeSpec extends AnyFunSuite with SparkTestBase {
+class OrderedMergeSpec extends AnyFunSuite with SparkTestBase
+    with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def ts(ms: Long) = new Timestamp(1330000000000L + ms)
@@ -86,5 +90,43 @@ class OrderedMergeSpec extends AnyFunSuite with SparkTestBase {
       .toDF("id", "time").repartitionByRange(2, col("id"))
       .sortWithinPartitions("id")
     assert(OrderedMerge.inversions(df, "time") === 1)
+  }
+
+  test("a merge keeps its children's columns by position and drops its order under a count") {
+    val trades = Seq((1L, ts(0), false)).toDF("id", "time", "nosystem")
+    val orders = Seq((2L, ts(1), 5)).toDF("id", "time", "status")
+    val merged = OrderedMerge.merge("time", trades, orders)
+    val projected = merged.select("status")
+    val merges = projected.queryExecution.optimizedPlan.collect { case s: SortedMergeUnion => s }
+    assert(merges.map(_.children.map(_.output.map(_.name))) ===
+      Seq(Seq(Seq("time", "status"), Seq("time", "status"))))
+    assert(projected.collect().map(r => Option(r.get(0))).toSeq === Seq(None, Some(5)))
+
+    val counted = merged.groupBy().count()
+    val plan = counted.queryExecution.optimizedPlan
+    assert(plan.collect { case s: SortedMergeUnion => s }.isEmpty, s"\n$plan")
+    assert(plan.collect { case u: org.apache.spark.sql.catalyst.plans.logical.Union => u }.size === 1)
+    assert(counted.head().getLong(0) === 2)
+  }
+
+  test("merge plans the k-way merge when small and a global sort over the union when not") {
+    val trades = Seq((1L, ts(0), false)).toDF("id", "time", "nosystem")
+    val orders = Seq((2L, ts(1), 5)).toDF("id", "time", "status")
+    def plan(): SparkPlan = stripAQEPlan(
+      OrderedMerge.merge("time", trades, orders).queryExecution.executedPlan)
+    def globalSorts(p: SparkPlan) = p.collect { case s: SortExec if s.global => s }
+
+    val small = plan()
+    assert(small.collect { case m: SortedMergeUnionExec => m }.size === 1, s"\n$small")
+    assert(globalSorts(small).isEmpty, s"\n$small")
+
+    System.setProperty("graft.mergeSizeThreshold", "1")
+    try {
+      val big = plan()
+      assert(big.collect { case m: SortedMergeUnionExec => m }.isEmpty, s"\n$big")
+      val sorts = globalSorts(big)
+      assert(sorts.size === 1, s"\n$big")
+      assert(sorts.head.collect { case u: UnionExec => u }.size === 1, s"\n$big")
+    } finally System.clearProperty("graft.mergeSizeThreshold")
   }
 }

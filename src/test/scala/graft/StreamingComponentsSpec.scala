@@ -58,23 +58,6 @@ class StreamingComponentsSpec extends AnyFunSuite with SparkTestBase {
     assert(want.values.toSet === Set(5L))
   }
 
-  test("prior self-labeled singletons survive an update; one that gains an edge relabels cleanly") {
-    val prior = Seq((7L, 7L), (1L, 1L), (2L, 1L)).toDF("node", "component")
-    val out = Components.incrementalUpdate(
-      prior, Seq((3L, 4L)).toDF("a", "b"), "a", "b")
-    val m = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    out.unpersist()
-    // node 7 (singleton) and the {1,2} cluster persist untouched
-    assert(m === Map(7L -> 7L, 1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
-
-    val out2 = Components.incrementalUpdate(
-      prior, Seq((7L, 9L)).toDF("a", "b"), "a", "b")
-    val m2 = out2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    out2.unpersist()
-    // the singleton joined a component: exactly one row for node 7
-    assert(m2 === Map(7L -> 7L, 9L -> 7L, 1L -> 1L, 2L -> 1L))
-  }
-
   test("compaction folds deltas+remap into a hash-partitioned base with identical labels") {
     val root = Files.createTempDirectory("scompact").toString
     val in = s"$root/in"; val labels = s"$root/labels"; val ckpt = s"$root/ckpt"
