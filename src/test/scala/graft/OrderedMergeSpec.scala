@@ -129,4 +129,63 @@ class OrderedMergeSpec extends AnyFunSuite with SparkTestBase
       assert(sorts.head.collect { case u: UnionExec => u }.size === 1, s"\n$big")
     } finally System.clearProperty("graft.mergeSizeThreshold")
   }
+
+  test("merge orders columns and widens types as unionByName does") {
+    val trades = Seq((1, ts(0), false)).toDF("id", "time", "nosystem")
+    val orders = Seq((ts(1), 2L, 5)).toDF("time", "id", "status")
+    val merged = OrderedMerge.merge("time", trades, orders)
+    assert(merged.columns.toSeq === Seq("id", "time", "nosystem", "status"))
+    assert(merged.schema("id").dataType === org.apache.spark.sql.types.LongType)
+    assert(merged.select("id").collect().map(_.getLong(0)).toSeq === Seq(1L, 2L))
+  }
+
+  test("a merged column is nullable where any stream's column is") {
+    val trades = Seq((1L, ts(0), false)).toDF("id", "time", "nosystem")
+    val orders = Seq((2L, ts(1), 5)).toDF("id", "time", "status")
+    // the first stream has every status, so only the second makes it nullable
+    val merged = OrderedMerge.merge("time", orders, trades)
+    assert(!merged.schema("id").nullable)
+    assert(merged.schema("nosystem").nullable)
+    assert(merged.schema("status").nullable)
+    val plan = stripAQEPlan(merged.queryExecution.executedPlan)
+    assert(plan.collect { case m: SortedMergeUnionExec => m }.size === 1, s"\n$plan")
+    assert(merged.select("status").collect().map(r => Option(r.get(0))).toSeq ===
+      Seq(None, Some(5)))
+  }
+
+  test("min and max over a merge read a plain union") {
+    val a = Seq((1L, ts(0)), (3L, ts(2))).toDF("id", "time")
+    val b = Seq((2L, ts(1)), (4L, ts(3))).toDF("id", "time")
+    val agg = OrderedMerge.merge("time", a, b)
+      .filter(col("id") > 1).agg(min("time"), max("id"))
+    val plan = agg.queryExecution.optimizedPlan
+    assert(plan.collect { case s: SortedMergeUnion => s }.isEmpty, s"\n$plan")
+    assert(plan.collect { case u: org.apache.spark.sql.catalyst.plans.logical.Union => u }.size === 1)
+    val row = agg.head()
+    assert(row.getTimestamp(0) === ts(1))
+    assert(row.getLong(1) === 4L)
+  }
+
+  test("the merge stays under an order-sensitive aggregate or a nondeterministic filter") {
+    val a = Seq((1L, ts(0))).toDF("id", "time")
+    val b = Seq((2L, ts(1))).toDF("id", "time")
+    val merged = OrderedMerge.merge("time", a, b)
+    def merges(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect { case s: SortedMergeUnion => s }.size
+
+    assert(merges(merged.agg(first("id"))) === 1)
+    // rand(7) >= 0 would fold to true; a half-sample stays in the plan
+    val sampled = merged.filter(rand(7) >= 0.5).groupBy().count()
+    assert(merges(sampled) === 1, s"\n${sampled.queryExecution.optimizedPlan}")
+    assert(Set(0L, 1L, 2L).contains(sampled.head().getLong(0)))
+  }
+
+  test("mergeTagged null-fills heterogeneous streams and keeps time order") {
+    val trades = Seq((1L, ts(0)), (3L, ts(2))).toDF("id", "time")
+    val orders = Seq((2L, ts(1), 5)).toDF("id", "time", "status")
+    val m = OrderedMerge.mergeTagged("time", "trade" -> trades, "order" -> orders)
+    assert(m.columns.toSeq === Seq("id", "time", "stream", "status"))
+    val rows = m.collect().map(r => (r.getLong(0), r.getString(2), Option(r.get(3))))
+    assert(rows.toSeq === Seq((1L, "trade", None), (2L, "order", Some(5)), (3L, "trade", None)))
+  }
 }
