@@ -6,10 +6,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.expressions.{BitmapAndCount, FloatDotProduct, Md5HexSlices, Md5Nibbles, RollingHashMin, SortedIntersectCount, WordShingles}
 
-/** Session extensions: registers the engine's custom Catalyst
-  * expressions as SQL functions, so `spark.sql` users get them too.
+/** Session extensions: the sorted-merge planner strategy, and the
+  * engine's custom Catalyst expressions as SQL functions, so
+  * `spark.sql` users get them too. No optimizer rule: a merge is
+  * Spark's own sort over a union, which Catalyst already optimizes.
   *
-  * Install via
+  * `GraftSession.builder` installs them; elsewhere use
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.GraftExtensions`.
   */
@@ -33,8 +35,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.SortedMergeUnionStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.SortedMergeUnionLimitPushdown)
-    ext.injectOptimizerRule(_ => graft.plans.SortedMergeUnionPruning)
     ext.injectFunction(binary("sorted_intersect_count", SortedIntersectCount.apply))
     ext.injectFunction(binary("float_dot", FloatDotProduct.apply))
     ext.injectFunction(binary("bitmap_and_count", BitmapAndCount.apply))

@@ -7,12 +7,15 @@ import org.apache.spark.sql.SparkSession
   * `Verify` oracle-checks are the plans `Bench` times:
   * `local[cpus]` with `cpus` shuffle partitions, UTC session time,
   * AQE coalescing toward the advisory partition size, UI off, log
-  * level WARN. `cpus` comes from `SPARK_GRAFT_CPUS` (default 4). */
+  * level WARN, and `GraftExtensions` installed, so a union under a
+  * global sort plans the same way whatever ran before it. `cpus`
+  * comes from `SPARK_GRAFT_CPUS` (default 4). */
 object GraftSession {
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
   def builder(cpus: Int = cpus): SparkSession.Builder =
     SparkSession.builder()
+      .withExtensions(new GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")

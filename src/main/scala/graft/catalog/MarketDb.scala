@@ -36,8 +36,8 @@ object MarketDb {
         |  AND ts >= TIMESTAMP '2024-01-01 00:00:00'
         |  AND ts <= TIMESTAMP '2024-01-31 00:00:00'""".stripMargin),
     Gate("q13_merge_streams", (s, dir) => {
-      // custom SortedMergeUnion operator: k-way merge of pre-sorted
-      // series, no re-sort (falls back to Union+Sort on big inputs)
+      // sort over union, planned as the one-task k-way merge of
+      // pre-sorted series (Spark's own sort on big inputs)
       val ev = tbl(s, dir, "events").where(col("user_id") < 20)
       def series(tpe: String) = ev.where(col("event_type") === tpe)
         .withColumn("stream", lit(tpe))
@@ -395,10 +395,10 @@ object MarketDb {
         |  'click' AS stream, json_extract(props, '$.k')::BIGINT AS k
         |FROM events WHERE event_type = 'click'""".stripMargin),
     Gate("q65_merge_limit", (s, dir) => {
-      // tied merge + limit: the custom SortedMergeUnion with explicit
-      // tiebreak columns — the pushed per-child top-n sorts by
-      // (ts, event_id), so the earliest-100 row SET is deterministic
-      // even where equal timestamps straddle the boundary (hard rule 4)
+      // tied merge + limit: the merge's sort by (ts, event_id) under a
+      // limit plans as one top-n over the union, so the earliest-100
+      // row SET is deterministic even where equal timestamps straddle
+      // the boundary (hard rule 4)
       val ev = tbl(s, dir, "events").where(col("user_id") < 40)
       def series(tpe: String) = ev.where(col("event_type") === tpe)
         .withColumn("stream", lit(tpe))

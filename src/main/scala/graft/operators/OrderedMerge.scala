@@ -11,12 +11,14 @@ import org.apache.spark.sql.internal.SQLConf
   * pick at `:86-92`), including heterogeneous trades+orders merges
   * (`MultipleTimeSeriesEnumeratorTest.scala:262-311`).
   *
-  * Spark-first: one logical node, `graft.plans.SortedMergeUnion`, for
-  * every merge. The planner turns it into a one-task k-way heap merge of
-  * per-child sorted runs when each child fits one task, and into a
-  * global sort over the union (range partitioning + per-partition sort,
-  * the reference algorithm distributed across executors) otherwise. The
-  * invariant carried over from the reference test suite
+  * Spark-first: every merge is Spark's own global sort over a union,
+  * so Catalyst prunes, pushes filters, drops the sort under
+  * order-free aggregates and plans a limit as a top-n by its own rules.
+  * `graft.plans.SortedMergeUnionStrategy` turns the sort into a
+  * one-task k-way heap merge of per-child sorted runs when each child
+  * fits one task; otherwise Spark plans it as usual (range partitioning
+  * + per-partition sort, the reference algorithm distributed across
+  * executors). The invariant carried over from the reference test suite
   * (`MultipleTimeSeriesEnumeratorTest.scala:205-210`) is
   * *non-decreasing event time*; tie order between streams is
   * unspecified there and stays unspecified here unless tiebreak columns
@@ -60,29 +62,23 @@ object OrderedMerge {
 
   /** `mergeSorted` with explicit tiebreak columns: (timeCol, tieCols)
     * should form a per-child total order, making merge + limit return a
-    * deterministic row set (hard rule 4) — the pushed per-child top-n
-    * sorts by the full key, so equal timestamps straddling row n can no
-    * longer flip the selection. Without tiebreaks, tie order stays
-    * unspecified (the reference's semantics). */
+    * deterministic row set (hard rule 4) — the top-n sorts by the full
+    * key, so equal timestamps straddling row n can no longer flip the
+    * selection. Without tiebreaks, tie order stays unspecified (the
+    * reference's semantics). */
   def mergeSortedTied(timeCol: String, tieCols: Seq[String],
       streams: DataFrame*): DataFrame = {
     require(streams.nonEmpty, "need at least one stream")
     val spark = streams.head.sparkSession
-    // idempotent strategy + optimizer-rule registration (also available
-    // via spark.sql.extensions=graft.GraftExtensions)
-    if (!spark.experimental.extraStrategies.contains(graft.plans.SortedMergeUnionStrategy)) {
+    // GraftSession installs GraftExtensions; a bare session gets the
+    // strategy here, once
+    if (!spark.sessionState.planner.strategies.contains(graft.plans.SortedMergeUnionStrategy)) {
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ graft.plans.SortedMergeUnionStrategy
     }
-    Seq(graft.plans.SortedMergeUnionLimitPushdown, graft.plans.SortedMergeUnionPruning)
-      .filterNot(spark.experimental.extraOptimizations.contains)
-      .foreach(r => spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ r)
     val cols = streams.head.columns.toSeq
     val aligned = streams.map(_.select(cols.map(col): _*))
-    import org.apache.spark.sql.graft.Bridge
-    Bridge.ofRows(spark,
-      graft.plans.SortedMergeUnion(aligned.map(Bridge.analyzed), timeCol,
-        tieCols))
+    aligned.reduce(_ union _).orderBy((timeCol +: tieCols).map(col): _*)
   }
 
   /** Order-invariant check (the reference's `sortedLogger` test fold,

@@ -3,87 +3,30 @@ package graft.plans
 import org.apache.spark.{OneToOneDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, SortOrder}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project, Union}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort, Union}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
 /** Sorted-merge union — the reference's core read-path algorithm as a
-  * first-class physical operator.
+  * physical operator.
   *
   * The reference interleaves N time-sorted scanner streams by
   * min-head selection (`marketdb-iteratee/.../TimeSeriesEnumerator.scala:70-98`).
-  * Catalyst's default plan for "union then global time order" is
-  * Union + Sort (full re-sort). When the inputs are already sorted —
-  * per-series scans of a `TimeSeriesTable` are — an O(n) k-way merge
-  * preserves the order without sorting.
-  *
-  * Pieces (SURVEY §2-custom preference (c)):
-  *  - `SortedMergeUnion` logical node,
-  *  - `SortedMergeUnionStrategy` plans it: the merge exec when every
-  *    child is small enough to sit in one partition (stats-based
-  *    decision, like broadcast-join planning); otherwise falls back to
-  *    Union + global Sort, which range-partitions across the cluster,
-  *  - `SortedMergeUnionExec` physical node declaring
-  *    `requiredChildOrdering` (children arrive sorted — a no-op if the
-  *    source already is) and `outputOrdering` (downstream operators
-  *    see the order for free, e.g. a subsequent limit or as-of probe).
+  * A merge is written as Spark's own global `Sort` over a `Union`, so
+  * Catalyst prunes its columns, pushes filters into every child, drops
+  * the sort where nothing reads the order and plans a limit over it as
+  * a top-n. Only the physical choice is ours:
+  *  - `SortedMergeUnionStrategy` plans a global sort over a union whose
+  *    children each fit one task (stats-based, like broadcast-join
+  *    planning) as the merge exec; anything else is left to Spark's own
+  *    range-partitioned sort,
+  *  - `SortedMergeUnionExec` declares `requiredChildOrdering` (children
+  *    arrive sorted — a no-op if the source already is) and
+  *    `outputOrdering` (downstream operators see the order for free),
+  *    and merges the sorted children in one task with an O(n) k-way
+  *    heap merge instead of re-sorting.
   */
-case class SortedMergeUnion(children: Seq[LogicalPlan], timeCol: String,
-    tieCols: Seq[String] = Nil)
-    extends LogicalPlan {
-  require(children.nonEmpty, "SortedMergeUnion needs at least one child")
-  /** Merge key columns: time first, then optional tiebreaks. With
-    * tiebreaks forming a per-child total order, merge + limit returns a
-    * deterministic row set (hard rule 4); without them, tie order
-    * between equal timestamps is unspecified (reference semantics). */
-  def orderCols: Seq[String] = timeCol +: tieCols
-  override def output: Seq[Attribute] =
-    SortedMergeUnionExec.unionOutput(children.map(_.output))
-  // declare every column of EVERY child as referenced: Spark's column
-  // pruning matches columns by exprId, which only the first child
-  // shares with the output, so it would leave the children with
-  // different columns; SortedMergeUnionPruning prunes by position
-  override def references: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(children.flatMap(_.output))
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[LogicalPlan]): LogicalPlan =
-    copy(children = newChildren)
-}
-
-/** Drops merge work that nothing reads, as Spark's `ColumnPruning` and
-  * `EliminateSorts` do for `Union` and `Sort`. Under a projection every
-  * child of a [[SortedMergeUnion]] keeps, by position, only the columns
-  * the projection or the merge keys use. Under a count, min or max,
-  * through deterministic projections and filters, nothing reads the
-  * merge order, so the merge is the plain `Union` of its children. */
-object SortedMergeUnionPruning extends Rule[LogicalPlan] {
-  private def orderFree(a: Aggregate): Boolean = a.aggregateExpressions
-    .flatMap(_.collect { case ae: AggregateExpression => ae.aggregateFunction })
-    .forall(f => f.isInstanceOf[Count] || f.isInstanceOf[Min] || f.isInstanceOf[Max])
-
-  private def unordered(p: LogicalPlan): LogicalPlan = p match {
-    case s: SortedMergeUnion => Union(s.children)
-    case _: Project | _: Filter if p.expressions.forall(_.deterministic) =>
-      p.withNewChildren(p.children.map(unordered))
-    case _ => p
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case p @ Project(_, s: SortedMergeUnion) =>
-      val keep = s.output.indices.filter { i =>
-        p.references.contains(s.output(i)) || s.orderCols.contains(s.output(i).name)
-      }
-      if (keep.size == s.output.size) p
-      else p.copy(child = s.copy(children = s.children.map(c => Project(keep.map(c.output), c))))
-    case a: Aggregate if orderFree(a) => a.withNewChildren(a.children.map(unordered))
-  }
-}
-
-/** Plans the merge in one partition when every child [[fitsOneTask]];
-  * the same predicate sends a small `AsOfJoin` window to one partition. */
 object SortedMergeUnionStrategy extends SparkStrategy {
   /** Size bound for a plan that runs in one task: each child of the
     * single-partition merge, or the whole input of a single-partition
@@ -97,34 +40,14 @@ object SortedMergeUnionStrategy extends SparkStrategy {
     plan.stats.sizeInBytes <= BigInt(mergeSizeThreshold)
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case s @ SortedMergeUnion(children, _, _) =>
-      val orders = s.orderCols.map { name =>
-        val attr = s.output.find(_.name == name).getOrElse(
-          throw new IllegalArgumentException(
-            s"merge column $name not in ${s.output.map(_.name)}"))
-        SortOrder(attr, Ascending)
-      }
-      if (children.forall(fitsOneTask)) {
-        SortedMergeUnionExec(children.map(planLater), orders) :: Nil
-      } else {
-        // distributed fallback: union + global sort (range partition);
-        // built from physical building blocks so the same logical node
-        // covers both scales
-        import org.apache.spark.sql.execution.{SortExec, UnionExec}
-        SortExec(orders, global = true,
-          UnionExec(children.map(planLater))) :: Nil
-      }
+    case Sort(order, true, u: Union, _) if !u.isStreaming && u.children.forall(fitsOneTask) =>
+      SortedMergeUnionExec(u.children.map(planLater), order) :: Nil
     case _ => Nil
   }
 }
 
 case class SortedMergeUnionExec(children: Seq[SparkPlan], orders: Seq[SortOrder])
     extends SparkPlan {
-
-  private val orderNames: Seq[String] = orders.map(_.child match {
-    case a: Attribute => a.name
-    case other => other.sql
-  })
 
   override def output: Seq[Attribute] =
     SortedMergeUnionExec.unionOutput(children.map(_.output))
@@ -134,15 +57,14 @@ case class SortedMergeUnionExec(children: Seq[SparkPlan], orders: Seq[SortOrder]
   // the coalescing exchange / sort only where the child isn't already
   override def requiredChildDistribution: Seq[Distribution] =
     children.map(_ => AllTuples)
-  // each child's ordering must reference THAT child's attributes
-  // (schemas are name-aligned, exprIds are not)
+  // each child's ordering must reference THAT child's attributes:
+  // the keys are written over the union's output, which shares exprIds
+  // with the first child only, so they map onto each child by position
   override def requiredChildOrdering: Seq[Seq[SortOrder]] =
     children.map { c =>
-      orderNames.map { name =>
-        val attr = c.output.find(_.name == name).getOrElse(
-          throw new IllegalStateException(s"$name missing in child output"))
-        SortOrder(attr, Ascending)
-      }
+      val byPosition = AttributeMap(output.zip(c.output))
+      orders.map(_.transform { case a: Attribute => byPosition.getOrElse(a, a) }
+        .asInstanceOf[SortOrder])
     }
 
   override protected def doExecute(): RDD[InternalRow] = {

@@ -2,12 +2,13 @@ package graft
 
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.execution.{SortExec, SparkPlan, UnionExec}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort, Union}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.model.{MarketEvent, Trade}
 import graft.operators.OrderedMerge
-import graft.plans.{SortedMergeUnion, SortedMergeUnionExec}
+import graft.plans.SortedMergeUnionExec
 
 /** Reference-parity: k-way ordered merge invariants
   * (`MultipleTimeSeriesEnumeratorTest.scala:174-213` — 10 series × 10
@@ -19,6 +20,11 @@ class OrderedMergeSpec extends AnyFunSuite with SparkTestBase
   import spark.implicits._
 
   private def ts(ms: Long) = new Timestamp(1330000000000L + ms)
+
+  private def unions(p: LogicalPlan) = p.collect { case u: Union => u }
+  private def sorts(p: LogicalPlan) = p.collect { case s: Sort => s }
+  private def mergeExecs(df: org.apache.spark.sql.DataFrame) =
+    collect(df.queryExecution.executedPlan) { case m: SortedMergeUnionExec => m }
 
   test("10 series x 10 events merge to 100 rows in non-decreasing time") {
     val streams = (0 until 10).map { s =>
@@ -97,15 +103,15 @@ class OrderedMergeSpec extends AnyFunSuite with SparkTestBase
     val orders = Seq((2L, ts(1), 5)).toDF("id", "time", "status")
     val merged = OrderedMerge.merge("time", trades, orders)
     val projected = merged.select("status")
-    val merges = projected.queryExecution.optimizedPlan.collect { case s: SortedMergeUnion => s }
-    assert(merges.map(_.children.map(_.output.map(_.name))) ===
+    assert(unions(projected.queryExecution.optimizedPlan)
+      .map(_.children.map(_.output.map(_.name))) ===
       Seq(Seq(Seq("time", "status"), Seq("time", "status"))))
     assert(projected.collect().map(r => Option(r.get(0))).toSeq === Seq(None, Some(5)))
 
     val counted = merged.groupBy().count()
     val plan = counted.queryExecution.optimizedPlan
-    assert(plan.collect { case s: SortedMergeUnion => s }.isEmpty, s"\n$plan")
-    assert(plan.collect { case u: org.apache.spark.sql.catalyst.plans.logical.Union => u }.size === 1)
+    assert(sorts(plan).isEmpty, s"\n$plan")
+    assert(unions(plan).size === 1)
     assert(counted.head().getLong(0) === 2)
   }
 
@@ -159,8 +165,8 @@ class OrderedMergeSpec extends AnyFunSuite with SparkTestBase
     val agg = OrderedMerge.merge("time", a, b)
       .filter(col("id") > 1).agg(min("time"), max("id"))
     val plan = agg.queryExecution.optimizedPlan
-    assert(plan.collect { case s: SortedMergeUnion => s }.isEmpty, s"\n$plan")
-    assert(plan.collect { case u: org.apache.spark.sql.catalyst.plans.logical.Union => u }.size === 1)
+    assert(sorts(plan).isEmpty, s"\n$plan")
+    assert(unions(plan).size === 1)
     val row = agg.head()
     assert(row.getTimestamp(0) === ts(1))
     assert(row.getLong(1) === 4L)
@@ -170,13 +176,11 @@ class OrderedMergeSpec extends AnyFunSuite with SparkTestBase
     val a = Seq((1L, ts(0))).toDF("id", "time")
     val b = Seq((2L, ts(1))).toDF("id", "time")
     val merged = OrderedMerge.merge("time", a, b)
-    def merges(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.optimizedPlan.collect { case s: SortedMergeUnion => s }.size
 
-    assert(merges(merged.agg(first("id"))) === 1)
+    assert(mergeExecs(merged.agg(first("id"))).size === 1)
     // rand(7) >= 0 would fold to true; a half-sample stays in the plan
     val sampled = merged.filter(rand(7) >= 0.5).groupBy().count()
-    assert(merges(sampled) === 1, s"\n${sampled.queryExecution.optimizedPlan}")
+    assert(mergeExecs(sampled).size === 1, s"\n${sampled.queryExecution.executedPlan}")
     assert(Set(0L, 1L, 2L).contains(sampled.head().getLong(0)))
   }
 
@@ -187,5 +191,28 @@ class OrderedMergeSpec extends AnyFunSuite with SparkTestBase
     assert(m.columns.toSeq === Seq("id", "time", "stream", "status"))
     val rows = m.collect().map(r => (r.getLong(0), r.getString(2), Option(r.get(3))))
     assert(rows.toSeq === Seq((1L, "trade", None), (2L, "order", Some(5)), (3L, "trade", None)))
+  }
+
+  test("a filter on a merged stream reaches every child scan") {
+    val dir = java.nio.file.Files.createTempDirectory("ordered-merge-filter").toString
+    def write(name: String, offset: Int): org.apache.spark.sql.DataFrame = {
+      (0 until 20).map(i => (if (i % 2 == 0) "A" else "B", ts(i * 100L + offset), i.toLong))
+        .toDF("security", "time", "seq")
+        .write.mode("overwrite").parquet(s"$dir/$name")
+      spark.read.parquet(s"$dir/$name")
+    }
+    val merged = OrderedMerge.mergeSortedTied("time", Seq("seq"), write("a", 0), write("b", 7))
+      .where(col("security") === "A")
+    val plan = merged.queryExecution.executedPlan
+    val scans = collect(plan) { case s: FileSourceScanExec => s }
+    assert(scans.size === 2, s"\n$plan")
+    scans.foreach { s =>
+      assert(s.metadata("PushedFilters").contains("EqualTo(security,A)"), s"\n$plan")
+    }
+    assert(mergeExecs(merged).size === 1, s"\n$plan")
+    val got = merged.collect().map(r => (r.getString(0), r.getTimestamp(1), r.getLong(2)))
+    val expected = (0 until 20 by 2).flatMap(i =>
+      Seq(("A", ts(i * 100L), i.toLong), ("A", ts(i * 100L + 7), i.toLong)))
+    assert(got.toSeq === expected)
   }
 }

@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.model.Trade
 import graft.operators.OrderedMerge
@@ -12,7 +13,8 @@ import graft.plans.SortedMergeUnionExec
   * same rows as union+orderBy, in globally non-decreasing time, and
   * actually appear in the plan for small inputs (fallback to
   * Union+Sort is stats-driven). */
-class SortedMergeUnionSpec extends AnyFunSuite with SparkTestBase {
+class SortedMergeUnionSpec extends AnyFunSuite with SparkTestBase
+    with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def ts(ms: Long) = new Timestamp(1700000000000L + ms)
@@ -107,5 +109,47 @@ class SortedMergeUnionSpec extends AnyFunSuite with SparkTestBase {
     val expected = foldMerge(Ordering.by[(Long, Int, Int), Long](_._1))(
       children.map(_.collect().map(r => (r.getTimestamp(0).getTime, r.getInt(1), r.getInt(2))).toSeq))
     assert(got.toSeq === expected)
+  }
+
+  private def mergeExecs(df: org.apache.spark.sql.DataFrame) =
+    collect(df.queryExecution.executedPlan) { case m: SortedMergeUnionExec => m }
+
+  /** Rows of `df` under the merge exec and under Spark's own sort. */
+  private def mergedAndFallback(df: => org.apache.spark.sql.DataFrame) = {
+    val merged = df
+    assert(mergeExecs(merged).size === 1, s"\n${merged.queryExecution.executedPlan}")
+    val rows = merged.collect().toSeq
+    System.setProperty("graft.mergeSizeThreshold", "1")
+    try {
+      val fallback = df
+      assert(mergeExecs(fallback).isEmpty, s"\n${fallback.queryExecution.executedPlan}")
+      (rows, fallback.collect().toSeq)
+    } finally System.clearProperty("graft.mergeSizeThreshold")
+  }
+
+  test("plain union + orderBy plans the merge for descending and expression keys") {
+    val a = (0 until 30).map(i => (ts(i * 10L), i.toLong)).toDF("t", "k")
+    val b = (0 until 30).map(i => (ts(i * 10L), 100L + i)).toDF("t", "k")
+    val (rows, fallback) =
+      mergedAndFallback(a.union(b).orderBy(desc("t"), col("k") + 1))
+    assert(rows.size === 60)
+    assert(rows === fallback)
+    assert(rows.take(2).map(_.getLong(1)) === Seq(29L, 129L))
+  }
+
+  test("plain union + orderBy plans the merge for a nulls-last key") {
+    val a = Seq((ts(0), Some(2L)), (ts(0), None), (ts(10), Some(1L))).toDF("t", "k")
+    val b = Seq((ts(0), Some(1L)), (ts(10), None), (ts(10), Some(0L))).toDF("t", "k")
+    val (rows, fallback) =
+      mergedAndFallback(a.union(b).orderBy(col("t"), col("k").asc_nulls_last))
+    assert(rows === fallback)
+    assert(rows.map(r => Option(r.get(1))) ===
+      Seq(Some(1L), Some(2L), None, Some(0L), Some(1L), None))
+  }
+
+  test("sortWithinPartitions over a union plans no merge exec") {
+    val df = series("A", 0).union(series("B", 7)).sortWithinPartitions("time")
+    assert(mergeExecs(df).isEmpty, s"\n${df.queryExecution.executedPlan}")
+    assert(df.count() === 100)
   }
 }
