@@ -1,7 +1,7 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{MarketEvent, Order, Trade}
 import graft.operators.{Dedup, OrderedMerge, SeriesScan}
@@ -31,23 +31,25 @@ object MarketDbApi {
   def trades(spark: SparkSession, path: String, market: String,
       security: String, from: Timestamp, to: Timestamp): Dataset[Trade] = {
     import spark.implicits._
-    SeriesScan.scan(TimeSeriesTable.read(spark, path),
-        Map("market" -> market, "security" -> security), "time", from, to)
-      .select("market", "security", "tradeId", "price", "amount", "time",
-        "nosystem")
-      .as[Trade]
+    series[Trade](spark, path, market, security, from, to)
   }
 
   /** Lazy orders series handle (`MarketDB.scala:87-106`). */
   def orders(spark: SparkSession, path: String, market: String,
       security: String, from: Timestamp, to: Timestamp): Dataset[Order] = {
     import spark.implicits._
+    series[Order](spark, path, market, security, from, to)
+  }
+
+  /** One (market, security) series of the table at `path` over the
+    * end-inclusive interval, as the columns of `T`. */
+  private def series[T: Encoder](spark: SparkSession, path: String,
+      market: String, security: String, from: Timestamp,
+      to: Timestamp): Dataset[T] =
     SeriesScan.scan(TimeSeriesTable.read(spark, path),
         Map("market" -> market, "security" -> security), "time", from, to)
-      .select("market", "security", "orderId", "time", "status", "action",
-        "dir", "price", "amount", "amountRest", "deal")
-      .as[Order]
-  }
+      .select(implicitly[Encoder[T]].schema.fieldNames.toSeq.map(col): _*)
+      .as[T]
 
   /** Heterogeneous multi-series scan: trades and orders of one series
     * merged into a single globally time-ordered `MarketEvent` stream —

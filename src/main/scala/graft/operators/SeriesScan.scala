@@ -3,6 +3,7 @@ package graft.operators
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.sources.SeriesLayout
 
 /** Time-series range scan — the reference's only query primitive:
   * resolve (market, security) and compile the interval into a physical
@@ -12,23 +13,27 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first: the "plan" is a lazy filtered DataFrame. Catalyst
   * pushes the series and time predicates into the parquet scan
-  * (PushedFilters + row-group min/max pruning). On a
-  * `partitionBy(market, date)` layout a `market` key prunes `market=`
-  * directories, but the time interval does not prune `date=` (or
-  * `IngestPipeline`'s `__date=`) ones: the filter is on the time column
-  * only, so a one-day request lists and opens every date of its market
-  * unless the caller also passes the date partition column as a series
-  * key. Compiling the interval into a date-partition predicate, as the
-  * HBase key range did, is ROADMAP item 1. The returned DataFrame is the
-  * `TimeSeries` handle: nothing executes until an action, matching the
-  * reference's handle-then-enumerate split
-  * (`TimeSeriesEnumerator.scala:114-124`).
+  * (PushedFilters + row-group min/max pruning). On a series table
+  * layout (`SeriesLayout`: `TimeSeriesTable`'s `market=/date=`,
+  * `IngestPipeline`'s `__date=`) a `market` key prunes `market=`
+  * directories and the interval is also compiled into a range of the
+  * date partition column, as the HBase key range spanned the key's
+  * `year ++ dayOfYear`: a one-day request opens one date directory. The
+  * returned DataFrame is the `TimeSeries` handle: nothing executes
+  * until an action, matching the reference's handle-then-enumerate
+  * split (`TimeSeriesEnumerator.scala:114-124`).
   */
 object SeriesScan {
 
   /** Generic series scan: equality predicates on the series key columns
     * plus an end-inclusive time interval (reference interval semantics:
-    * stop key padded to include the upper bound, `MarketDB.scala:79-82`). */
+    * stop key padded to include the upper bound, `MarketDB.scala:79-82`).
+    *
+    * When `table` is a scan of a series layout (`SeriesLayout.of`), the
+    * date partition column is bounded by the dates of `from` and `to`
+    * beside the time predicate. Every row inside the interval has its
+    * date inside those bounds, so the rows are the same and only
+    * directories that cannot hold one are skipped. */
   def scan(
       table: DataFrame,
       seriesKey: Map[String, Any],
@@ -41,8 +46,10 @@ object SeriesScan {
       .getOrElse(lit(true))
     // cast bounds to the column's type (TIMESTAMP vs TIMESTAMP_NTZ)
     val dt = table.schema(timeCol).dataType
-    table.where(keyPred &&
-      col(timeCol) >= lit(from).cast(dt) && col(timeCol) <= lit(to).cast(dt))
+    val (lo, hi) = (lit(from).cast(dt), lit(to).cast(dt))
+    val pred = SeriesLayout.of(table, timeCol).fold(keyPred)(l => keyPred &&
+      col(l.dateCol).between(SeriesLayout.dateOf(lo), SeriesLayout.dateOf(hi)))
+    table.where(pred && col(timeCol) >= lo && col(timeCol) <= hi)
   }
 
   /** Ordered enumeration of one series — batches arrive time-sorted in

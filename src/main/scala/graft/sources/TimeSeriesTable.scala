@@ -20,13 +20,13 @@ import org.apache.spark.sql.types.StructType
   * exists to make a series+interval scan touch only the relevant byte
   * range. The Spark-native equivalent:
   *
-  *  - directory partitioning `market=<m>/date=<d>` → partition pruning
-  *    eliminates whole directories before any I/O (the
-  *    `PartitionFilters` entry in `.explain`). A `market` predicate
-  *    prunes `market=`; `date=` is pruned only by a predicate on `date`
-  *    itself, which `SeriesScan.scan` does not derive from its time
-  *    interval (a caller can pass `date` as a series key). Deriving it
-  *    is ROADMAP item 1;
+  *  - directory partitioning `market=<m>/date=<d>` ([[SeriesLayout]])
+  *    → partition pruning eliminates whole directories before any I/O
+  *    (the `PartitionFilters` entry in `.explain`). A `market` predicate
+  *    prunes `market=`; `SeriesScan.scan` compiles its time interval
+  *    into a `date` range, as the reference compiled it into the key's
+  *    `year ++ dayOfYear`, so an interval opens only its own `date=`
+  *    directories;
   *  - within each file, rows sorted by (security, time) →
   *    parquet row-group min/max statistics prune pages for the
   *    security/time predicates (`PushedFilters`);
@@ -48,25 +48,27 @@ object TimeSeriesTable {
   def write(df: DataFrame, path: String, marketCol: String, timeCol: String,
       securityCol: String, filesPerDate: Int = 1): Unit = {
     require(filesPerDate > 0, "filesPerDate must be positive")
-    val dated = df.withColumn("date", to_date(col(timeCol)))
-    val (bucketed, partCols) =
-      if (filesPerDate == 1) (dated, Seq(col(marketCol), col("date")))
+    val layout = SeriesLayout.table(marketCol, timeCol)
+    val dated = layout.withDate(df)
+    val partCols = layout.partitionCols.map(col)
+    val (bucketed, shuffleCols) =
+      if (filesPerDate == 1) (dated, partCols)
       else (dated.withColumn("__bucket",
         pmod(hash(col(securityCol)), lit(filesPerDate))),
-        Seq(col(marketCol), col("date"), col("__bucket")))
+        partCols :+ col("__bucket"))
     bucketed
-      .repartition(partCols: _*)
-      .sortWithinPartitions(col(marketCol), col("date"), col(securityCol), col(timeCol))
+      .repartition(shuffleCols: _*)
+      .sortWithinPartitions(partCols ++ Seq(col(securityCol), col(timeCol)): _*)
       .drop("__bucket")
       .write
       .mode("overwrite")
-      .partitionBy(marketCol, "date")
+      .partitionBy(layout.partitionCols: _*)
       .parquet(path)
   }
 
   /** Open the table. A `market` or `date` predicate applied on top of
-    * this prunes partitions; a time predicate alone prunes only parquet
-    * row groups (see SeriesScan.scan).
+    * this prunes partitions; `SeriesScan.scan` adds the `date` one for
+    * its time interval.
     *
     * An open costs one listing plus one driver-side footer read, and no
     * Spark job: `spark.read.parquet` infers the data schema with a

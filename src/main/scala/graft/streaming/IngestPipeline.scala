@@ -111,12 +111,14 @@ object IngestPipeline {
 
   /** Start the idempotent append sink: per micro-batch, drop in-batch
     * duplicate event ids (keeping the earliest by `timeCol`) and append
-    * partitioned by event date — the layout that makes the 100 TB
-    * table partition-prunable on time, like the reference's
-    * time-bucketed row keys (`model/Trade.scala:22-30`). */
+    * partitioned by event date (`SeriesLayout.ingest`'s `__date=`), so
+    * a `SeriesScan.scan` of the table opens only the dates its interval
+    * names, like the reference's time-bucketed row keys
+    * (`model/Trade.scala:22-30`). */
   def startIngest(stream: DataFrame, outDir: String, checkpointDir: String,
       idCol: String, timeCol: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val layout = graft.sources.SeriesLayout.ingest(timeCol)
     stream.writeStream
       .outputMode("append")
       .trigger(trigger)
@@ -124,15 +126,15 @@ object IngestPipeline {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // deterministic in-batch dedup: earliest event wins (not
         // dropDuplicates, whose survivor is partition-order dependent)
-        graft.operators.Dedup
-          .firstByKey(batch, Seq(idCol), Seq(timeCol))
-          .withColumn("__date", to_date(col(timeCol)))
+        layout.withDate(graft.operators.Dedup
+            .firstByKey(batch, Seq(idCol), Seq(timeCol)))
           .write
           .mode("append")
-          .partitionBy("__date")
+          .partitionBy(layout.partitionCols: _*)
           .parquet(outDir)
       }
       .start()
+  }
 
   /** Compact the append-only table to one row per event id — the
     * reference's storage-level idempotency (same row+qualifier

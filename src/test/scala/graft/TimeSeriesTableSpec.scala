@@ -44,28 +44,20 @@ class TimeSeriesTableSpec extends AnyFunSuite with SparkTestBase {
     assert(plan.contains("market"), "market predicate missing from scan")
     assert(plan.contains("PushedFilters"), "no pushed filters in plan")
     assert(plan.contains("isnotnull(security"), "security filter not pushed")
-
-    // the pruned scan must actually read fewer files: execute the
-    // physical plan directly (AQE off so the scan node is inspectable)
-    // and read its numFiles metric
+    // both partition columns are bounded before any file is listed
     import org.apache.spark.sql.execution.FileSourceScanExec
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      def filesRead(df: org.apache.spark.sql.DataFrame): Long = {
-        val plan = df.queryExecution.executedPlan
-        plan.execute().count()
-        plan.collectLeaves().collectFirst {
-          case f: FileSourceScanExec => f.metrics("numFiles").value
-        }.getOrElse(-1L)
-      }
-      val allFiles = filesRead(table.select("market"))
-      val prunedFiles = filesRead(
-        SeriesScan.scan(TimeSeriesTable.read(spark, dir),
-          Map("market" -> "RTS", "security" -> "SEC-1"), "time",
-          ts(2, 0), ts(3, 59)))
-      assert(prunedFiles > 0 && prunedFiles < allFiles,
-        s"expected pruning: 0 < $prunedFiles < $allFiles")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val partFilters = scanned.queryExecution.sparkPlan.collectFirst {
+      case f: FileSourceScanExec => f.partitionFilters
+    }.getOrElse(Nil)
+    assert(partFilters.flatMap(_.references.map(_.name)).toSet === Set("market", "date"),
+      s"PartitionFilters: $partFilters")
+
+    // the pruned scan opens only the RTS files of days 2 and 3: one
+    // file per (market, date) directory
+    val allFiles = filesRead(table.select("market"))
+    val prunedFiles = filesRead(scanned)
+    assert(allFiles === 10 && prunedFiles === 2,
+      s"expected 2 of 10 files, read $prunedFiles of $allFiles")
   }
 
   test("filesPerDate > 1 salts into multiple files per partition, data intact") {
