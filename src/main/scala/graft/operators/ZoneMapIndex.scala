@@ -47,16 +47,20 @@ final case class ZoneMapIndex(dir: String, buckets: Int = 16) {
 
   private val log = BucketedLog(dir, Seq("unit"), buckets)
 
-  /** ≤ one (unit, mn, mx, rows) partial per unit present in the
-    * batch (map-side partial aggregation before the tiny shuffle). */
-  private def partial(batch: DataFrame, unitCol: String,
+  /** One (unit, mn, mx, rows) row per unit present in `rows`. */
+  private def partial(rows: DataFrame, unitCol: String,
       valCol: String): DataFrame =
-    batch.groupBy(col(unitCol).as("unit"))
-      .agg(min(col(valCol)).as("mn"), max(col(valCol)).as("mx"),
-        count(lit(1)).as("rows"))
+    refold(None, stats(rows, unitCol, valCol))
 
-  /** Fold stored unit stats with a batch's partials: min/max are
-    * idempotent folds, rows is additive (exact under the log's
+  /** One index-shaped row per table row: (unit, v, v, 1). */
+  private def stats(rows: DataFrame, unitCol: String,
+      valCol: String): DataFrame =
+    rows.select(col(unitCol).as("unit"), col(valCol).as("mn"),
+      col(valCol).as("mx"), lit(1L).as("rows"))
+
+  /** Fold stored unit stats with a batch's rows in one aggregation
+    * (Spark's partial aggregate pre-reduces each map task): min/max
+    * are idempotent folds, rows is additive (exact under the log's
     * `#batch=` replay guard). */
   private def refold(cur: Option[DataFrame], p: DataFrame): DataFrame =
     cur.map(_.unionByName(p)).getOrElse(p)
@@ -73,9 +77,7 @@ final case class ZoneMapIndex(dir: String, buckets: Int = 16) {
   /** Fold one appended batch of table rows into the index. */
   def applyBatch(batch: DataFrame, unitCol: String, valCol: String,
       batchId: Long): Unit =
-    log.applyBatch(partial(batch, unitCol, valCol), batchId) {
-      (cur, p) => refold(cur, p)
-    }
+    log.applyBatch(stats(batch, unitCol, valCol), batchId)(refold)
 
   /** DELETE-path re-tightening (the OPTIMIZE hook): recompute the
     * given units' stats from the CURRENT table rows and REPLACE their
@@ -152,14 +154,16 @@ final case class MultiColZoneMapIndex(dir: String, valCols: Seq[String],
   private def statCols: Seq[String] =
     valCols.flatMap(c => Seq(s"mn_$c", s"mx_$c"))
 
-  /** ≤ one stats partial per unit present in the batch. */
-  private def partial(batch: DataFrame, unitCol: String): DataFrame = {
-    val aggs = count(lit(1)).as("rows") +:
-      valCols.flatMap(c =>
-        Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c")))
-    batch.groupBy(col(unitCol).as("unit")).agg(aggs.head, aggs.tail: _*)
-  }
+  /** One stats row per unit present in `rows`. */
+  private def partial(rows: DataFrame, unitCol: String): DataFrame =
+    refold(None, stats(rows, unitCol))
 
+  /** One index-shaped row per table row: (unit, 1, v_c, v_c, ...). */
+  private def stats(rows: DataFrame, unitCol: String): DataFrame =
+    rows.select(col(unitCol).as("unit") +: lit(1L).as("rows") +:
+      valCols.flatMap(c => Seq(col(c).as(s"mn_$c"), col(c).as(s"mx_$c"))): _*)
+
+  /** Fold stored stats with a batch's rows in one aggregation. */
   private def refold(cur: Option[DataFrame], p: DataFrame): DataFrame = {
     val aggs = sum(col("rows")).cast("long").as("rows") +:
       valCols.flatMap(c =>
@@ -180,9 +184,7 @@ final case class MultiColZoneMapIndex(dir: String, valCols: Seq[String],
   }
 
   def applyBatch(batch: DataFrame, unitCol: String, batchId: Long): Unit =
-    log.applyBatch(partial(batch, unitCol), batchId) {
-      (cur, p) => refold(cur, p)
-    }
+    log.applyBatch(stats(batch, unitCol), batchId)(refold)
 
   def read(spark: SparkSession): DataFrame =
     log.read(spark).select(("unit" +: "rows" +: statCols).map(col): _*)

@@ -30,9 +30,11 @@ import org.apache.spark.sql.functions._
   *
   * == Why this shape at 100 TB ==
   *
-  * A batch pre-reduces map-side to ≤ one row per touched group
-  * BEFORE the shuffle (partial aggregation), then touches only the
-  * buckets those groups hash to: O(|batch| + touched-bucket rows)
+  * A commit is ONE aggregation over the touched buckets' stored rows
+  * ∪ the batch's signed fact rows: Spark's partial aggregate reduces
+  * each map task's rows to ≤ one row per group BEFORE the one shuffle
+  * (LONG sums are exact under any split), and only the buckets the
+  * batch's groups hash to are read: O(|batch| + touched-bucket rows)
   * per commit, never O(fact history). The alternative — recomputing
   * the GROUP BY over the full fact table per refresh — is the
   * O(corpus)-per-batch term this engine eliminates everywhere else
@@ -57,16 +59,22 @@ final case class AggView(dir: String, groupCols: Seq[String],
   private def viewCols: Seq[Column] =
     groupCols.map(col) ++ (cntCol +: measures.map(_._1)).map(col)
 
-  /** Map-side partial aggregate of one fact batch: ≤ one row per
-    * touched group crosses the shuffle. */
-  private def partial(batch: DataFrame): DataFrame =
-    batch.groupBy(groupCols.map(col): _*)
+  /** The view of a fact set: one row per group ([[init]]'s seed). */
+  private def partial(facts: DataFrame): DataFrame =
+    facts.groupBy(groupCols.map(col): _*)
       .agg(sum(sign).cast("long").as(cntCol),
         measures.map { case (n, e) =>
           sum(sign * e).cast("long").as(n)
         }: _*)
 
-  /** Re-fold stored group rows with a batch's partials — LONG sums,
+  /** One view-shaped row per fact: its group columns, its sign as the
+    * count and each measure times the sign (exact: measures are
+    * integer-valued, so the per-row LONG cast loses nothing). */
+  private def signed(facts: DataFrame): DataFrame =
+    facts.select(groupCols.map(col) ++ (sign.as(cntCol) +:
+      measures.map { case (n, e) => (sign * e).cast("long").as(n) }): _*)
+
+  /** Re-fold stored group rows with a batch's signed rows — LONG sums,
     * exact. A group leaves the state only when its ENTIRE row is
     * zero (count and every measure): under out-of-order delivery a
     * group can transiently sit at count 0 with nonzero sums (its
@@ -96,8 +104,8 @@ final case class AggView(dir: String, groupCols: Seq[String],
   /** Fold one fact batch into the view. `batchId` must be monotone
     * (the streaming engine's) — it names the version. */
   def applyBatch(facts: DataFrame, batchId: Long): Unit =
-    log.applyBatch(facts, batchId) { (cur, batch) =>
-      refold(cur, partial(batch)).select(viewCols: _*)
+    log.applyBatch(signed(facts), batchId) { (cur, rows) =>
+      refold(cur, rows).select(viewCols: _*)
     }
 
   /** The current view: group columns + count + measure sums.

@@ -676,12 +676,16 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     * the repartition every shuffle task of a large batch opens a
     * writer into every bucket dir it sees (N tasks × buckets files
     * per commit, the many-small-files trap; the Iceberg hash
-    * write-distribution argument), and (b) locally the file creation
+    * write-distribution argument), and (b) the file creation
     * parallelizes across tasks instead of one AQE-coalesced task
-    * writing every bucket file sequentially (WriteProbe: 1.35 s →
-    * 1.05 s warm for one postings commit). REPARTITION_BY_NUM is
-    * exempt from AQE coalescing, so the layout holds under
-    * `parallelismFirst=false`. */
+    * writing every bucket file sequentially. In traced perfbench
+    * `tick_ingest` (seed 31, `local[2]` on a 4-core box, an 8-bucket
+    * AggView) this write is ~540 ms of a ~770 ms commit: its jobs
+    * take ~350 ms, planning and AQE re-planning between them ~250 ms.
+    * A one-task write (`n = 1`) measured no better than two tasks at
+    * `local[2]` (ratio 0.946 over 4 paired runs, 3 wins: noise).
+    * REPARTITION_BY_NUM is exempt from AQE coalescing, so the layout
+    * holds under `parallelismFirst=false`. */
   private def writeBucketed(df: DataFrame, dest: String): Unit = {
     val n = math.max(1, math.min(buckets,
       df.sparkSession.sparkContext.defaultParallelism))
@@ -980,20 +984,16 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     }
     // NOTE (round-17 measurement): caching the batch across the
     // touched-set job and the merge's write was tried and REVERTED —
-    // the touched pass is column-pruned to the hash columns and
-    // AQE-coalesced, so it is far cheaper than a full materialization
-    // (persist forces every column and pins the pre-AQE partitioning;
-    // ingest gates measured ~2× slower with the cache).
-    // Distinct buckets of the batch's keys — bounded by |batch|. A
-    // 1-bucket store (single-row stats folds) needs no job at all:
-    // every key hashes to bucket 0, and treating an empty batch as
-    // touching it merely rewrites the bucket's identical rows under
-    // the advanced watermark (same observable state as the
+    // the touched pass reads only the hash columns and runs map-only
+    // (touchedBuckets), so it is far cheaper than a full
+    // materialization (persist forces every column and pins the
+    // pre-AQE partitioning; ingest gates measured ~2× slower with the
+    // cache). A 1-bucket store (single-row stats folds) needs no job
+    // at all: every key hashes to bucket 0, and treating an empty
+    // batch as touching it merely rewrites the bucket's identical rows
+    // under the advanced watermark (same observable state as the
     // empty-touched branch, minus a full batch evaluation per commit)
-    val touched =
-      if (buckets == 1) Set(0)
-      else batch.select(bkt.cast("int").as("b")).distinct()
-        .collect().map(_.getInt(0)).toSet
+    val touched = if (buckets == 1) Set(0) else touchedBuckets(batch)
     val compact =
       !retain && base.entries.values.flatten.toSet.size > compactAfter
     commit(f, base) { vdir =>
@@ -1119,8 +1119,7 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     val f = fs(spark)
     val base = head(spark)
       .getOrElse(sys.error(s"BucketedLog.rewriteBuckets before init: $dir"))
-    val touched = keys.select(bkt.cast("int").as("b")).distinct()
-      .collect().map(_.getInt(0)).toSet
+    val touched = touchedBuckets(keys)
     if (touched.isEmpty) return
     commit(f, base) { vdir =>
       val cur = stateRows(spark, base.entries, Some(touched),
@@ -1171,15 +1170,13 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     * lookups): O(touched buckets) IO, never O(state). Returns the
     * touched buckets' FULL rows (the bucket is the unit of pruning,
     * like every skipping index here) — the caller applies its exact
-    * key predicate as the residual. `keys` must be bounded (its
-    * distinct buckets are collected). */
+    * key predicate as the residual. One map-only job over `keys`
+    * finds their buckets ([[touchedBuckets]]). */
   def readFor(keys: DataFrame): DataFrame = {
     val spark = keys.sparkSession
     val h = head(spark)
       .getOrElse(sys.error(s"BucketedLog.readFor before init: $dir"))
-    val touched = keys.select(bkt.cast("int").as("b")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    rowsOf(spark, h, Some(touched))
+    rowsOf(spark, h, Some(touchedBuckets(keys)))
   }
 
   /** [[readFor]] for DRIVER-KNOWN keys of a single-hash-column store:
@@ -1188,8 +1185,8 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     * (`pmod(xxhash64(key), buckets)` — interpreted eval of the
     * identical expression tree, so the pruning can never diverge from
     * the written layout; `BucketedLogSegmentSpec` pins equality against
-    * [[readFor]]), which saves the one Spark job [[readFor]] spends
-    * collecting the touched set. Each value must be the hash
+    * [[readFor]]), which saves the map-only job [[readFor]] spends
+    * on the touched set. Each value must be the hash
     * column's exact external type (String / Long / Int — xxhash64 is
     * type-sensitive, a Long and an Int of equal value hash apart). */
   def readForValues(spark: SparkSession, keys: Seq[Any]): DataFrame = {
@@ -1198,6 +1195,22 @@ final case class BucketedLog(dir: String, hashCols: Seq[String],
     val h = head(spark)
       .getOrElse(sys.error(s"BucketedLog.readForValues before init: $dir"))
     rowsOf(spark, h, Some(keys.map(bucketOfValue).toSet))
+  }
+
+  /** The buckets `df`'s keys hash to, in ONE map-only Spark job: each
+    * task sets its rows' buckets in a `buckets`-bit set and the driver
+    * ORs the tasks' words. A `distinct()` would shuffle, and under AQE
+    * run its two stages as two jobs. The empty frame touches nothing. */
+  private[graft] def touchedBuckets(df: DataFrame): Set[Int] = {
+    val n = buckets
+    val words = df.select(bkt.cast("int")).rdd.mapPartitions { rows =>
+      val bits = new java.util.BitSet(n)
+      rows.foreach(r => bits.set(r.getInt(0)))
+      Iterator.single(bits.toLongArray)
+    }.collect()
+    val all = new java.util.BitSet(n)
+    words.foreach(w => all.or(java.util.BitSet.valueOf(w)))
+    all.stream().toArray.toSet
   }
 
   /** Driver-side bucket of one key value — the [[bkt]] expression

@@ -14,6 +14,9 @@ import graft.streaming.AggView
 class AggViewSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 
+  // facts: (grp, units INT, wt integer-valued DOUBLE, note nullable, sig)
+  private type F = (String, Int, Double, Option[Long], Long)
+
   // facts: (grp, units, sig) — sig +1 insert / -1 retract
   private val inserts = Seq(
     ("a", 3L), ("a", 5L), ("a", 7L), ("b", 2L), ("b", 4L),
@@ -242,5 +245,111 @@ class AggViewSpec extends AnyFunSuite with SparkTestBase {
       "c" -> (2L, 11L), "d" -> (3L, 18L)))
     assert(v.readAt(spark, 99L).collect().length === expected.size)
     assert(read(v) === expected)
+  }
+
+  test("one-aggregation fold equals the one-shot GROUP BY: INT, nullable and DOUBLE measures, retractions, a sparse 64-bucket batch") {
+    def facts(rows: Seq[F]): DataFrame =
+      rows.toDF("grp", "units", "wt", "note", "sig")
+    val b0: Seq[F] = for (g <- 0 until 200; j <- 0 until 3) yield {
+      // g0-g9: note always null; g % 5 == 0: null on every other row
+      val note = if (g < 10 || (g % 5 == 0 && j % 2 == 0)) None
+        else Some((g * 7 + j).toLong)
+      (s"g$g", g % 17 + j, (g * 3 + j).toDouble, note, 1L)
+    }
+    val b1: Seq[F] = Seq(
+      ("g3", 5, 6.0, Some(40L), 1L),  // existing group, first non-null note
+      ("g11", 1, 2.0, None, 1L),      // existing group, null note
+      ("new1", 9, 8.0, None, 1L),     // new group, null note
+      ("new2", 4, 12.0, Some(5L), 1L))
+    // retractions: all of g20, one g21 row and new2's one row
+    val b2: Seq[F] = (b0.filter(_._1 == "g20") ++
+      b0.filter(_._1 == "g21").take(1) ++ b1.filter(_._1 == "new2"))
+      .map(_.copy(_5 = -1L))
+    val measures = Seq("sum_units" -> col("units"), "sum_wt" -> col("wt"),
+      "sum_note" -> col("note"))
+    val dir = "/tmp/graft_aggview_spec_oneagg"
+    val v = AggView(dir, Seq("grp"), measures, signCol = Some("sig"),
+      buckets = 64)
+    def oneShot(rows: Seq[F]) = facts(rows).groupBy("grp")
+      .agg(sum("sig").cast("long").as("cnt"),
+        measures.map { case (n, e) =>
+          sum(col("sig") * e).cast("long").as(n) }: _*)
+      .where(col("cnt") =!= 0L || col("sum_units") =!= 0L ||
+        col("sum_wt") =!= 0L || col("sum_note") =!= 0L)
+    def tuples(d: DataFrame) = d.select("grp", "cnt", "sum_units", "sum_wt",
+        "sum_note").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        Option(r.get(4)).map(_ => r.getLong(4))))
+      .toSeq.sortBy(_._1)
+    val log = graft.streaming.BucketedLog(dir, Seq("grp"), 64)
+    v.init(facts(Nil))
+    v.applyBatch(facts(b0), 0L)
+    assert(tuples(v.read(spark)) === tuples(oneShot(b0)))
+    // the sparse batch rewrites only its own buckets
+    val before = log.head(spark).get.entries
+    v.applyBatch(facts(b1), 1L)
+    val moved = log.head(spark).get.entries
+      .filter { case (b, d) => before.get(b) != Some(d) }.keySet
+    assert(moved === log.touchedBuckets(facts(b1)))
+    assert(moved.size < before.size, s"$moved of ${before.size} buckets")
+    assert(tuples(v.read(spark)) === tuples(oneShot(b0 ++ b1)))
+    v.applyBatch(facts(b2), 2L)
+    val got = tuples(v.read(spark))
+    assert(got === tuples(oneShot(b0 ++ b1 ++ b2)))
+    assert(!got.exists(g => g._1 == "g20" || g._1 == "new2"),
+      "fully retracted groups leave the view")
+    assert(got.find(_._1 == "g0").get._5 === None)
+    assert(got.find(_._1 == "g3").get._5.isDefined)
+  }
+
+  test("a commit plans exactly one aggregate exchange below the bucket repartition") {
+    import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution,
+      SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS,
+      REPARTITION_BY_NUM, ShuffleExchangeLike}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.sql.graft.Bridge
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+      case o => o.children.flatMap(nodes)
+    })
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeLike] =
+      nodes(p).collect { case s: ShuffleExchangeLike => s }
+    val v = view("/tmp/graft_aggview_spec_plan")
+    v.init(df(inserts, 1L))
+    v.applyBatch(df(inserts.take(2), 1L), 0L)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    Bridge.drainListeners(spark)
+    spark.listenerManager.register(listener)
+    try {
+      v.applyBatch(df(retracts, -1L), 1L)
+      Bridge.drainListeners(spark)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val writes = plans.asScala.toSeq
+      .filter(p => nodes(p).exists(_.isInstanceOf[DataWritingCommandExec]))
+    assert(writes.nonEmpty, "the commit's write was not seen")
+    writes.foreach { p =>
+      val all = shuffles(p)
+      val byBucket = all.filter(_.shuffleOrigin == REPARTITION_BY_NUM)
+      assert(byBucket.size === 1, all.map(_.shuffleOrigin))
+      val below = byBucket.head.children.flatMap(shuffles)
+      assert(below.map(_.shuffleOrigin) === Seq(ENSURE_REQUIREMENTS), p.treeString)
+      assert(all.size === 2, p.treeString)
+      assert(below.head.children.flatMap(nodes)
+        .exists(_.isInstanceOf[HashAggregateExec]),
+        "no partial aggregate below the exchange")
+    }
   }
 }

@@ -138,4 +138,41 @@ class ZoneMapIndexSpec extends AnyFunSuite with SparkTestBase {
     // a rebuild rewrites covered state — it is NOT new coverage
     assert(idx.coveredBatch(spark) === receipt)
   }
+
+  test("one-aggregation fold with null values, new and existing units equals the one-shot stats") {
+    import graft.operators.MultiColZoneMapIndex
+    // v null on every 5th row (counted, never a bound); unit 3's and
+    // unit 9's rows are all null; batches 1 and 2 add to existing units
+    // and open new ones
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi, 1, 5).select(
+      (col("id") % 10L).cast("int").as("unit"),
+      when(col("id") % 5L === 0L || col("id") % 10L === 3L ||
+        col("id") % 10L === 9L, lit(null).cast("long")).otherwise(col("id")).as("v"),
+      (-col("id")).as("w"))
+    val batches = Seq(rows(0, 300).where(col("unit") < 6),
+      rows(300, 500), rows(500, 520).where(col("unit") =!= 0))
+    val all = batches.reduce(_ unionByName _)
+    val idx = ZoneMapIndex("/tmp/graft_zmidx_nulls", buckets = 4)
+    idx.init(spark, "int", "long")
+    val multi = MultiColZoneMapIndex("/tmp/graft_zmidx_nulls_multi",
+      Seq("v", "w"), buckets = 4)
+    multi.init(spark, "int", Seq("long", "long"))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      idx.applyBatch(b, "unit", "v", i.toLong)
+      multi.applyBatch(b, "unit", i.toLong)
+    }
+    def opt(r: org.apache.spark.sql.Row, i: Int) =
+      Option(r.get(i)).map(_ => r.getLong(i))
+    val want = all.groupBy("unit")
+      .agg(min("v"), max("v"), count(lit(1)), min("w"), max("w"))
+      .collect().map(r => r.getInt(0) ->
+        (opt(r, 1), opt(r, 2), r.getLong(3), opt(r, 4), opt(r, 5))).toMap
+    assert(want(3)._1.isEmpty && want(3)._3 > 0, "unit 3 must be all-null")
+    assert(idx.read(spark).collect().map(r => r.getInt(0) ->
+      (opt(r, 1), opt(r, 2), r.getLong(3))).toMap ===
+      want.map { case (u, w) => u -> (w._1, w._2, w._3) })
+    assert(multi.read(spark).select("unit", "rows", "mn_v", "mx_v", "mn_w",
+        "mx_w").collect().map(r => r.getInt(0) ->
+      (opt(r, 2), opt(r, 3), r.getLong(1), opt(r, 4), opt(r, 5))).toMap === want)
+  }
 }
