@@ -31,7 +31,11 @@ import graft.plans.SortedMergeUnionStrategy
   * the union through `coalesce(1)`. One partition satisfies both the
   * window's clustering and a keyless aggregate above it, so the as-of
   * and a fold over it run as one job instead of a map stage plus one
-  * or two more exchanges.
+  * or two more exchanges. Sides cut from one opened table by an
+  * equality on one column (several securities of one handle) are read
+  * by one scan per table (`graft.plans.SharedSliceScan`, installed on
+  * the session here), so a two-table as-of is one job over two file
+  * scans.
   *
   * Ties (right.time == left.time) match, i.e. the join is "most recent
   * right event with rightTime <= leftTime" — DuckDB `ASOF JOIN`
@@ -72,6 +76,7 @@ object AsOfJoin {
       rightVals: Seq[(String, String)],
       rightTie: Seq[String] = Nil,
       forward: Boolean = false): DataFrame = {
+    graft.GraftExtensions.install(left.sparkSession)
     val leftCols = left.columns.toSeq
     val l = left
       .withColumn("__t", col(leftTime))

@@ -110,12 +110,20 @@ final case class IncrementalBloomIndex(dir: String, nShards: Int,
   def shardOf(key: Column): Column =
     pmod(xxhash64(key), lit(nShards.toLong))
 
+  /** One (shard, h) row per table row: its key's shard and hash. */
+  private def hashes(batch: DataFrame, keyCol: String): DataFrame =
+    batch.select(shardOf(col(keyCol)).as("shard"), xxhash64(col(keyCol)).as("h"))
+
+  /** ≤ one (shard, bloom_bits) row per shard of `hashes` rows
+    * (map-side partial aggregation before the tiny shuffle). */
+  private def blooms(hashed: DataFrame): DataFrame =
+    hashed.groupBy(col("shard"))
+      .agg(BloomAggregate(col("h"), words, numHashes).as("bloom_bits"))
+
   /** ≤ one (shard, bloom_bits) partial row per shard present in the
-    * batch (map-side partial aggregation before the tiny shuffle). */
+    * batch. */
   private def partial(batch: DataFrame, keyCol: String): DataFrame =
-    batch.groupBy(shardOf(col(keyCol)).as("shard"))
-      .agg(BloomAggregate(xxhash64(col(keyCol)), words, numHashes)
-        .as("bloom_bits"))
+    blooms(hashes(batch, keyCol))
 
   /** OR-merge stored shard bitsets with a batch's partials: a
     * full-outer join of two ≤nShards-row frames, word-wise `|`.
@@ -141,10 +149,12 @@ final case class IncrementalBloomIndex(dir: String, nShards: Int,
     log.init(Seq.empty[(Long, Array[Long])].toDF("shard", "bloom_bits"))
   }
 
-  /** Fold one appended batch of table rows into the index. */
+  /** Fold one appended batch of table rows into the index. The store
+    * gets the batch's (shard, h) rows, so its touched-shard set is one
+    * map-only job; the merge aggregates them once before the OR. */
   def applyBatch(batch: DataFrame, keyCol: String, batchId: Long): Unit =
-    log.applyBatch(partial(batch, keyCol), batchId) { (cur, p) =>
-      orMerge(cur, p)
+    log.applyBatch(hashes(batch, keyCol), batchId) { (cur, rows) =>
+      orMerge(cur, blooms(rows))
     }
 
   /** DELETE-path rebuild (the OPTIMIZE hook): Bloom bits cannot

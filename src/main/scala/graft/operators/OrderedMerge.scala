@@ -22,7 +22,11 @@ import org.apache.spark.sql.internal.SQLConf
   * (`MultipleTimeSeriesEnumeratorTest.scala:205-210`) is
   * *non-decreasing event time*; tie order between streams is
   * unspecified there and stays unspecified here unless tiebreak columns
-  * are given (`mergeSortedTied`).
+  * are given (`mergeSortedTied`). Streams cut from one opened table by
+  * an equality on one column (`SeriesScan.scan(t, security = s_i)`)
+  * are read by one scan (`graft.plans.SharedSliceScan`), so rows of
+  * those streams with equal merge keys leave in that scan's sorted
+  * order, not in the caller's stream order.
   */
 object OrderedMerge {
 
@@ -69,13 +73,7 @@ object OrderedMerge {
   def mergeSortedTied(timeCol: String, tieCols: Seq[String],
       streams: DataFrame*): DataFrame = {
     require(streams.nonEmpty, "need at least one stream")
-    val spark = streams.head.sparkSession
-    // GraftSession installs GraftExtensions; a bare session gets the
-    // strategy here, once
-    if (!spark.sessionState.planner.strategies.contains(graft.plans.SortedMergeUnionStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.SortedMergeUnionStrategy
-    }
+    graft.GraftExtensions.install(streams.head.sparkSession)
     val cols = streams.head.columns.toSeq
     val aligned = streams.map(_.select(cols.map(col): _*))
     aligned.reduce(_ union _).orderBy((timeCol +: tieCols).map(col): _*)

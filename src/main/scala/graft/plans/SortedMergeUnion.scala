@@ -2,11 +2,12 @@ package graft.plans
 
 import org.apache.spark.{OneToOneDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort, Union}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan, SparkStrategy}
 
 /** Sorted-merge union — the reference's core read-path algorithm as a
   * physical operator.
@@ -20,7 +21,10 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
   *  - `SortedMergeUnionStrategy` plans a global sort over a union whose
   *    children each fit one task (stats-based, like broadcast-join
   *    planning) as the merge exec; anything else is left to Spark's own
-  *    range-partitioned sort,
+  *    range-partitioned sort. With no more children than cores, each
+  *    child is read under a one-task `CoalesceExec`, so the scans and
+  *    the merge run as one stage with no exchange; `SharedSliceScan`
+  *    has by then fused slices of one opened table into one child,
   *  - `SortedMergeUnionExec` declares `requiredChildOrdering` (children
   *    arrive sorted — a no-op if the source already is) and
   *    `outputOrdering` (downstream operators see the order for free),
@@ -41,7 +45,16 @@ object SortedMergeUnionStrategy extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Sort(order, true, u: Union, _) if !u.isStreaming && u.children.forall(fitsOneTask) =>
-      SortedMergeUnionExec(u.children.map(planLater), order) :: Nil
+      // up to one child per core, each child is read under a one-task
+      // coalesce: the merge and its scans are one stage, with no
+      // exchange. One task prepares and reads the children one after
+      // another, so past the cores the exchanges' parallel reads win
+      // (a merge of 16 one-file handles at local[2] on a 4-core box:
+      // 1.45-1.54 s coalesced, 1.35-1.38 s exchanged)
+      val oneStage = u.children.size <= SparkSession.active.sparkContext.defaultParallelism
+      val children = u.children.map(planLater)
+      SortedMergeUnionExec(
+        if (oneStage) children.map(CoalesceExec(1, _)) else children, order) :: Nil
     case _ => Nil
   }
 }
@@ -95,8 +108,11 @@ object SortedMergeUnionExec {
     * on a heap. Rows that compare equal leave in child order, then in
     * their child's order: the output of a left fold of 2-way merges
     * that take the left head on ties, with one comparison per heap
-    * level instead of one per child. Heads are copied because operator
-    * output rows may be reused by the producer. */
+    * level instead of one per child. A child that `SharedSliceScan`
+    * fused from several slices is one input here, so its tied rows
+    * leave in its (deterministic) sorted scan order, not slice by
+    * slice. Heads are copied because operator output rows may be
+    * reused by the producer. */
   private[graft] def mergeSorted(ord: Ordering[InternalRow])(
       inputs: Seq[Iterator[InternalRow]]): Iterator[InternalRow] = {
     val its = inputs.toIndexedSeq

@@ -30,6 +30,11 @@ import org.apache.spark.sql.types.StructType
   *  - within each file, rows sorted by (security, time) →
   *    parquet row-group min/max statistics prune pages for the
   *    security/time predicates (`PushedFilters`);
+  *  - one opened handle sliced many ways is one scan: series cut from
+  *    one `read` by an equality on `security` and merged or unioned
+  *    are read as `security IN (...)` (`graft.plans.SharedSliceScan`),
+  *    where the reference ran one row-key range scanner per series;
+  *    open the table once per request to get this;
   *  - one file per (partition, bucket) via `repartition` keeps file
   *    count bounded at 1000-executor scale (no small-files explosion);
   *  - statistics-friendly: timestamps and dictionary-encoded strings,

@@ -106,4 +106,9 @@ object Bridge {
     * read right after an action sees exactly that action's events. */
   def drainListeners(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Whether SQL equality on strings of type `t` is byte equality (the
+    * collation is neither case- nor trim-insensitive). */
+  def binaryEquality(t: org.apache.spark.sql.types.StringType): Boolean =
+    t.supportsBinaryEquality
 }

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -186,5 +186,26 @@ class AsOfJoinSpec extends AnyFunSuite with SparkTestBase
         Seq(("A", ts(95), 1.0), ("A", ts(105), 2.0)).toDF("sym", "qts", "px"),
         Seq("sym"), "ts", "qts", Seq("px" -> "near_px")))
     assert(tie(0).getAs[Double]("near_px") === 1.0)
+  }
+
+  test("a replay request's as-of and OHLC fold is one job over one scan per table") {
+    val fold = ReplayRequest.asOfFold(spark)
+    var row: Row = null
+    val js = jobs { row = fold.head() }
+    val plan = fold.queryExecution.executedPlan
+    assert(js.map(_.size) === Seq(1), s"\n$plan")
+    assert(collect(plan) { case s: FileSourceScanExec => s }.size === 2, s"\n$plan")
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, s"\n$plan")
+    // each security's first order shares its first trade's time, so
+    // all 2 x 40 trades match
+    assert(row.getLong(5) === 80L)
+    // the key shuffle, forced, keeps its exchange and the same answer
+    val forced = forcedShuffle {
+      val f = ReplayRequest.asOfFold(spark)
+      (exchangesUnderWindow(f), f.head())
+    }
+    assert(forced._1.map(_.outputPartitioning.toString.takeWhile(_ != '(')) ===
+      Seq("hashpartitioning"))
+    assert(forced._2 === row)
   }
 }

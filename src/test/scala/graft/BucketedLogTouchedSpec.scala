@@ -1,10 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageInfo}
+import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
 import graft.streaming.BucketedLog
 
 /** The touched-bucket set every touched-bucket commit and probe starts
@@ -31,31 +30,6 @@ class BucketedLogTouchedSpec extends AnyFunSuite with SparkTestBase {
   private def rows(df: DataFrame): Seq[(Long, Long)] =
     df.select("k", "v").collect().map(r => (r.getLong(0), r.getLong(1)))
       .toSeq.sorted
-
-  private val Tag = "graft.test.touchedSpec"
-
-  /** Stages of each Spark job this thread starts inside `body`, where
-    * `body` gets a `mark()` that returns the jobs started so far. */
-  private def jobsOf[T](body: (() => Seq[Seq[StageInfo]]) => T): T = {
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[StageInfo]]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(Tag) != null))
-          jobs.add(e.stageInfos)
-    }
-    Bridge.drainListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setLocalProperty(Tag, "on")
-    def mark(): Seq[Seq[StageInfo]] = {
-      Bridge.drainListeners(spark)
-      jobs.toArray(Array.empty[Seq[StageInfo]]).toSeq
-    }
-    try body(() => mark())
-    finally {
-      spark.sparkContext.setLocalProperty(Tag, null)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
 
   /** Jobs `applyBatch` spends before it hands the batch to the merge:
     * a merge that records them and then merges as usual. */

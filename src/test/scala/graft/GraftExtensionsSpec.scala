@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.graft.Injected
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.OrderedMerge
-import graft.plans.SortedMergeUnionStrategy
+import graft.operators.{AsOfJoin, OrderedMerge}
+import graft.plans.{SharedSliceScan, SortedMergeUnionStrategy}
 
 /** Extension registration: the shared test session is built by
   * `GraftSession`, which installs `GraftExtensions`, so the custom
@@ -20,16 +20,19 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkTestBase {
     assert(got === 2)
   }
 
-  test("GraftExtensions injects the merge strategy and no optimizer rule") {
+  test("GraftExtensions injects the merge strategy and the shared slice scan rule") {
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext)
     assert(Injected.plannerStrategies(ext, spark) === Seq(SortedMergeUnionStrategy))
-    assert(Injected.optimizerRules(ext, spark).isEmpty)
-    // the session's planner carries it, so a merge adds no extra strategy
+    assert(Injected.optimizerRules(ext, spark) === Seq(SharedSliceScan))
+    // the session carries both, so a merge or an as-of adds neither again
     assert(spark.sessionState.planner.extraPlanningStrategies === Seq(SortedMergeUnionStrategy))
     import spark.implicits._
     OrderedMerge.mergeSorted("t", Seq(1L).toDF("t"), Seq(2L).toDF("t"))
+    AsOfJoin.asOf(Seq((1L, "a")).toDF("t", "k"), Seq((0L, "a", 1.0)).toDF("t", "k", "v"),
+      Seq("k"), "t", "t", Seq("v" -> "v"))
     assert(spark.experimental.extraStrategies.isEmpty)
+    assert(spark.experimental.extraOptimizations.isEmpty)
   }
 
   test("md5_nibbles and md5_hex_slices callable from SQL once registered") {

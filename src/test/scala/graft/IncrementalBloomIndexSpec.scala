@@ -17,9 +17,9 @@ class IncrementalBloomIndexSpec extends AnyFunSuite with SparkTestBase {
   private val N = 5000L
   private def table = spark.range(N).select((col("id") * 37L % 99991L).as("k"))
 
-  private def oneShot(idx: IncrementalBloomIndex)
-      : Map[Long, Seq[Long]] =
-    table.groupBy(idx.shardOf(col("k")).as("shard"))
+  private def oneShot(idx: IncrementalBloomIndex,
+      rows: org.apache.spark.sql.DataFrame = table): Map[Long, Seq[Long]] =
+    rows.groupBy(idx.shardOf(col("k")).as("shard"))
       .agg(BloomAggregate(xxhash64(col("k")), 1024, 7).as("bloom_bits"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
@@ -105,5 +105,33 @@ class IncrementalBloomIndexSpec extends AnyFunSuite with SparkTestBase {
     assert(trueShards.subsetOf(
       idx.matchingShards(spark, present, "k").toSet))
     assert(log.head(spark).get.lastBatch === receipt)
+  }
+
+  test("the stored bitsets equal the one-shot build after every batch, an empty one included") {
+    val idx = IncrementalBloomIndex("/tmp/graft_incbloom_f", nShards = 32)
+    idx.init(spark)
+    val batches = Seq(table.where(col("k") % 3 === 0), table.where(lit(false)),
+      table.where(col("k") % 3 === 1), table.limit(100), table.where(col("k") % 3 === 2))
+    batches.zipWithIndex.foldLeft(table.where(lit(false))) { case (seen, (b, i)) =>
+      idx.applyBatch(b, "k", i.toLong)
+      val all = seen.union(b)
+      assert(stored(idx) === oneShot(idx, all), s"after batch $i")
+      all
+    }
+  }
+
+  test("a batch's touched shards cost one map-only job before the merge") {
+    val idx = IncrementalBloomIndex("/tmp/graft_incbloom_g", nShards = 64)
+    idx.init(spark)
+    idx.applyBatch(table, "k", 0L)
+    // with AQE off each job runs all of its stages, so the touched-set
+    // job shows whether it aggregates (a shuffle stage) or not
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val js = try jobs(idx.applyBatch(Seq(3L, 77L, 123456789L).toDF("k"), "k", 1L))
+      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert(js.nonEmpty)
+    assert(js.head.size === 1, s"touched-set job stages: ${js.map(_.map(_.name))}")
+    assert(js.head.head.parentIds.isEmpty)
+    assert(stored(idx) === oneShot(idx, table.union(Seq(3L, 77L, 123456789L).toDF("k"))))
   }
 }

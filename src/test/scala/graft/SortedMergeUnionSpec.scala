@@ -3,7 +3,9 @@ package graft
 import java.sql.Timestamp
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import graft.model.Trade
 import graft.operators.OrderedMerge
@@ -151,5 +153,45 @@ class SortedMergeUnionSpec extends AnyFunSuite with SparkTestBase
     val df = series("A", 0).union(series("B", 7)).sortWithinPartitions("time")
     assert(mergeExecs(df).isEmpty, s"\n${df.queryExecution.executedPlan}")
     assert(df.count() === 100)
+  }
+
+  private def ordered(rows: Seq[org.apache.spark.sql.Row]) =
+    rows.map(r => (r.getTimestamp(5).getTime, r.getLong(2)))
+
+  test("a replay request's merge is one job over one scan per table, with no exchange") {
+    val merged = ReplayRequest.merged(spark)
+    var rows = Seq.empty[org.apache.spark.sql.Row]
+    val js = jobs { rows = merged.collect().toSeq }
+    val plan = merged.queryExecution.executedPlan
+    assert(js.map(_.size) === Seq(1), s"\n$plan")
+    assert(collect(plan) { case s: FileSourceScanExec => s }.size === 2, s"\n$plan")
+    assert(collect(plan) { case e: Exchange => e }.isEmpty, s"\n$plan")
+    assert(mergeExecs(merged).size === 1)
+    // 2 securities x (trades + orders) x 40 events, in (time, eventId) order
+    assert(rows.size === 160)
+    val keys = ordered(rows)
+    assert(keys === keys.sorted)
+    // above the one-task bound, Spark's range sort returns the same rows
+    System.setProperty("graft.mergeSizeThreshold", "1")
+    try {
+      val big = ReplayRequest.merged(spark)
+      val bigPlan = stripAQEPlan(big.queryExecution.executedPlan)
+      assert(mergeExecs(big).isEmpty, s"\n$bigPlan")
+      assert(bigPlan.collect { case e: ShuffleExchangeExec => e.outputPartitioning.toString }
+        .exists(_.startsWith("rangepartitioning")), s"\n$bigPlan")
+      assert(ordered(big.collect().toSeq) === keys)
+    } finally System.clearProperty("graft.mergeSizeThreshold")
+  }
+
+  test("up to one child per core reads under a one-task coalesce; more keep an exchange each") {
+    val cores = spark.sparkContext.defaultParallelism
+    def plan(k: Int) = stripAQEPlan(OrderedMerge.mergeSorted("time",
+      (0 until k).map(i => series(s"S$i", i)): _*).queryExecution.executedPlan)
+    val few = plan(cores)
+    assert(few.collect { case c: CoalesceExec => c }.size === cores, s"\n$few")
+    assert(few.collect { case e: Exchange => e }.isEmpty, s"\n$few")
+    val many = plan(cores + 1)
+    assert(many.collect { case c: CoalesceExec => c }.isEmpty, s"\n$many")
+    assert(many.collect { case e: ShuffleExchangeExec => e }.size === cores + 1, s"\n$many")
   }
 }

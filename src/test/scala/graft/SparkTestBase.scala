@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM, getOrCreate dedups). */
@@ -13,7 +15,6 @@ trait SparkTestBase { self: AnyFunSuite =>
     * scan's `numFiles` metric is read back. */
   def filesRead(df: DataFrame): Long = {
     import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.graft.Bridge
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val plan = Bridge.ofRows(spark, Bridge.analyzed(df)).queryExecution.executedPlan
@@ -23,6 +24,37 @@ trait SparkTestBase { self: AnyFunSuite =>
       }.getOrElse(-1L)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
+
+  private val JobTag = "graft.test.jobsOf"
+
+  /** Stages of each Spark job this thread starts inside `body`, where
+    * `body` gets a `mark()` that returns the jobs started so far. Jobs
+    * are told apart by a thread-local property, which AQE's exchange
+    * threads inherit, and read after `Bridge.drainListeners`. */
+  def jobsOf[T](body: (() => Seq[Seq[StageInfo]]) => T): T = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[StageInfo]]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(JobTag) != null))
+          jobs.add(e.stageInfos)
+    }
+    Bridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty(JobTag, "on")
+    def mark(): Seq[Seq[StageInfo]] = {
+      Bridge.drainListeners(spark)
+      jobs.toArray(Array.empty[Seq[StageInfo]]).toSeq
+    }
+    try body(() => mark())
+    finally {
+      spark.sparkContext.setLocalProperty(JobTag, null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  /** Stages of each Spark job `body` starts. */
+  def jobs(body: => Any): Seq[Seq[StageInfo]] =
+    jobsOf { mark => body; mark() }
 }
 
 object SparkTestBase {
