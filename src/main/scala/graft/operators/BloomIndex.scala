@@ -120,11 +120,6 @@ final case class IncrementalBloomIndex(dir: String, nShards: Int,
     hashed.groupBy(col("shard"))
       .agg(BloomAggregate(col("h"), words, numHashes).as("bloom_bits"))
 
-  /** ≤ one (shard, bloom_bits) partial row per shard present in the
-    * batch. */
-  private def partial(batch: DataFrame, keyCol: String): DataFrame =
-    blooms(hashes(batch, keyCol))
-
   /** OR-merge stored shard bitsets with a batch's partials: a
     * full-outer join of two ≤nShards-row frames, word-wise `|`.
     * Absent sides contribute the empty bitset. */
@@ -172,10 +167,10 @@ final case class IncrementalBloomIndex(dir: String, nShards: Int,
   def rebuildShards(tableRows: DataFrame, keyCol: String,
       shards: DataFrame): Unit = {
     val sh = shards.toDF("shard")
-    val fresh = partial(
+    val fresh = blooms(hashes(
       tableRows.join(broadcast(sh), shardOf(col(keyCol)) === sh("shard"),
         "left_semi"),
-      keyCol)
+      keyCol))
     log.rewriteBuckets(sh) { (cur, _) =>
       cur.map(_.join(broadcast(sh), Seq("shard"), "left_anti")
           .unionByName(fresh))

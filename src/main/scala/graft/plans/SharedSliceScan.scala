@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, BoundReference, EqualTo, Expression, In, Literal, NamedExpression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.catalyst.trees.TreePattern.UNION
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.graft.Bridge
@@ -39,18 +40,26 @@ import org.apache.spark.sql.types._
   *  - the union is not streaming.
   * The fused child's rows leave in the relation's scan order, not
   * slice by slice. A union whose children all fuse becomes the one
-  * fused child, so a global sort over it is Spark's own sort of one
-  * scan rather than the k-way merge.
+  * fused child, tagged (see `fused`) so that `SortedMergeUnionStrategy`
+  * still plans a global sort over it as a one-task merge.
   */
 object SharedSliceScan extends Rule[LogicalPlan] with PredicateHelper {
+
+  /** Marks the one child that a fully fused union became. */
+  private val Fused = TreeNodeTag[Unit]("graft.sharedSliceScan")
+
+  /** Whether `plan` is the one child that a union of slices fused into. */
+  def fused(plan: LogicalPlan): Boolean = plan.getTagValue(Fused).isDefined
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUpWithPruning(_.containsPattern(UNION)) {
       case u: Union if !u.isStreaming && u.children.size > 1 =>
         fuse(u.children.toList) match {
-          // a one-child union is not a valid plan; the fused child has
-          // the union's output (the first child's projection)
-          case one :: Nil => one
+          // a one-child union is not a valid plan; the fused child (a
+          // new node) has the union's output, the first child's projection
+          case one :: Nil =>
+            one.setTagValue(Fused, ())
+            one
           case fused if fused.size < u.children.size => u.copy(children = fused)
           case _ => u
         }

@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.{OneToOneDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort, Union}
@@ -21,10 +20,10 @@ import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan, SparkStrategy}
   *  - `SortedMergeUnionStrategy` plans a global sort over a union whose
   *    children each fit one task (stats-based, like broadcast-join
   *    planning) as the merge exec; anything else is left to Spark's own
-  *    range-partitioned sort. With no more children than cores, each
-  *    child is read under a one-task `CoalesceExec`, so the scans and
-  *    the merge run as one stage with no exchange; `SharedSliceScan`
-  *    has by then fused slices of one opened table into one child,
+  *    range-partitioned sort. Each child is read under a one-task
+  *    `CoalesceExec`, so the scans and the merge run as one stage with
+  *    no exchange; `SharedSliceScan` has by then fused slices of one
+  *    opened table into one child (all of them: a one-child merge),
   *  - `SortedMergeUnionExec` declares `requiredChildOrdering` (children
   *    arrive sorted — a no-op if the source already is) and
   *    `outputOrdering` (downstream operators see the order for free),
@@ -45,18 +44,16 @@ object SortedMergeUnionStrategy extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Sort(order, true, u: Union, _) if !u.isStreaming && u.children.forall(fitsOneTask) =>
-      // up to one child per core, each child is read under a one-task
-      // coalesce: the merge and its scans are one stage, with no
-      // exchange. One task prepares and reads the children one after
-      // another, so past the cores the exchanges' parallel reads win
-      // (a merge of 16 one-file handles at local[2] on a 4-core box:
-      // 1.45-1.54 s coalesced, 1.35-1.38 s exchanged)
-      val oneStage = u.children.size <= SparkSession.active.sparkContext.defaultParallelism
-      val children = u.children.map(planLater)
-      SortedMergeUnionExec(
-        if (oneStage) children.map(CoalesceExec(1, _)) else children, order) :: Nil
+      oneTask(u.children, order)
+    case Sort(order, true, c, _) if SharedSliceScan.fused(c) && fitsOneTask(c) =>
+      oneTask(Seq(c), order)
     case _ => Nil
   }
+
+  /** The merge of `children`, each read under a one-task coalesce: the
+    * scans and the merge are one stage, with no exchange. */
+  private def oneTask(children: Seq[LogicalPlan], order: Seq[SortOrder]): Seq[SparkPlan] =
+    SortedMergeUnionExec(children.map(c => CoalesceExec(1, planLater(c))), order) :: Nil
 }
 
 case class SortedMergeUnionExec(children: Seq[SparkPlan], orders: Seq[SortOrder])

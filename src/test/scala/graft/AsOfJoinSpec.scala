@@ -202,10 +202,11 @@ class AsOfJoinSpec extends AnyFunSuite with SparkTestBase
     // the key shuffle, forced, keeps its exchange and the same answer
     val forced = forcedShuffle {
       val f = ReplayRequest.asOfFold(spark)
-      (exchangesUnderWindow(f), f.head())
+      (exchangesUnderWindow(f), f.head(), f.queryExecution.executedPlan)
     }
     assert(forced._1.map(_.outputPartitioning.toString.takeWhile(_ != '(')) ===
       Seq("hashpartitioning"))
+    assert(collect(forced._3) { case s: FileSourceScanExec => s }.size === 2, s"\n${forced._3}")
     assert(forced._2 === row)
   }
 }

@@ -505,24 +505,4 @@ class PlanPropertiesSpec extends AnyFunSuite with SparkTestBase {
         .findFirstIn(p).isDefined),
       s"bracket not pushed to the scan:\n$p")
   }
-
-  test("a replay request reads one scan per table; a lowered one-task bound keeps its exchanges") {
-    def plan(df: org.apache.spark.sql.DataFrame): String = {
-      df.queryExecution.executedPlan.execute().count()
-      df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    }
-    def scans(p: String) = "FileScan ".r.findAllIn(p).length
-    def request() = Seq(ReplayRequest.merged(spark), ReplayRequest.asOfFold(spark)).map(plan)
-    val Seq(merge, asOf) = request()
-    assert(scans(merge) === 2 && !merge.contains("Exchange"), s"merge:\n$merge")
-    assert(scans(asOf) === 2 && !asOf.contains("Exchange"), s"as-of:\n$asOf")
-    System.setProperty("graft.mergeSizeThreshold", "1")
-    try {
-      val Seq(bigMerge, bigAsOf) = request()
-      assert(scans(bigMerge) === 2 && bigMerge.contains("Exchange rangepartitioning"),
-        s"merge:\n$bigMerge")
-      assert(scans(bigAsOf) === 2 && bigAsOf.contains("Exchange hashpartitioning(security"),
-        s"as-of:\n$bigAsOf")
-    } finally System.clearProperty("graft.mergeSizeThreshold")
-  }
 }

@@ -8,12 +8,13 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical.Union
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StringType
 
-import graft.plans.SharedSliceScan
+import graft.plans.{SharedSliceScan, SortedMergeUnionExec}
 
 /** The shared slice scan rule: adjacent union children that are
   * disjoint equality slices of one opened relation read it once, and
@@ -75,13 +76,22 @@ class SharedSliceScanSpec extends AnyFunSuite with SparkTestBase
     }
   }
 
-  test("a merge of slices of one handle reads one scan and keeps every row") {
+  test("a merge of slices of one handle is a one-task merge of one scan and keeps every row") {
     val t = open()
-    val (rows, n, off) = withAndWithout(graft.operators.OrderedMerge.mergeSortedTied(
-      "ts", Seq("v"), (0 until 4).map(i => t.where(col("sec") === s"S$i")): _*))
+    def merged = graft.operators.OrderedMerge.mergeSortedTied(
+      "ts", Seq("v"), (0 until 4).map(i => t.where(col("sec") === s"S$i")): _*)
+    val (rows, n, off) = withAndWithout(merged)
     assert(n === 1)
     assert(rows === off)
     assert(rows.size === 80)
+    val m = merged
+    var ordered = Seq.empty[(Long, Long)]
+    val js = jobs { ordered = m.collect().map(r => (r.getTimestamp(2).getTime, r.getLong(4))).toSeq }
+    val plan = m.queryExecution.executedPlan
+    assert(js.map(_.size) === Seq(1), s"\n$plan")
+    assert(collect(plan) { case e: SortedMergeUnionExec => e.children.size } === Seq(1), s"\n$plan")
+    assert(collect(plan) { case e: Exchange => e }.isEmpty, s"\n$plan")
+    assert(ordered === ordered.sorted)
   }
 
   test("a repeated literal is not fused: both copies keep their rows") {

@@ -177,21 +177,20 @@ class SortedMergeUnionSpec extends AnyFunSuite with SparkTestBase
       val big = ReplayRequest.merged(spark)
       val bigPlan = stripAQEPlan(big.queryExecution.executedPlan)
       assert(mergeExecs(big).isEmpty, s"\n$bigPlan")
+      assert(bigPlan.collect { case s: FileSourceScanExec => s }.size === 2, s"\n$bigPlan")
       assert(bigPlan.collect { case e: ShuffleExchangeExec => e.outputPartitioning.toString }
         .exists(_.startsWith("rangepartitioning")), s"\n$bigPlan")
       assert(ordered(big.collect().toSeq) === keys)
     } finally System.clearProperty("graft.mergeSizeThreshold")
   }
 
-  test("up to one child per core reads under a one-task coalesce; more keep an exchange each") {
-    val cores = spark.sparkContext.defaultParallelism
-    def plan(k: Int) = stripAQEPlan(OrderedMerge.mergeSorted("time",
-      (0 until k).map(i => series(s"S$i", i)): _*).queryExecution.executedPlan)
-    val few = plan(cores)
-    assert(few.collect { case c: CoalesceExec => c }.size === cores, s"\n$few")
-    assert(few.collect { case e: Exchange => e }.isEmpty, s"\n$few")
-    val many = plan(cores + 1)
-    assert(many.collect { case c: CoalesceExec => c }.isEmpty, s"\n$many")
-    assert(many.collect { case e: ShuffleExchangeExec => e }.size === cores + 1, s"\n$many")
+  test("every child reads under a one-task coalesce, more children than cores too") {
+    val k = spark.sparkContext.defaultParallelism + 1
+    val merged = OrderedMerge.mergeSorted("time", (0 until k).map(i => series(s"S$i", i)): _*)
+    val plan = stripAQEPlan(merged.queryExecution.executedPlan)
+    assert(plan.collect { case c: CoalesceExec => c }.size === k, s"\n$plan")
+    assert(plan.collect { case e: Exchange => e }.isEmpty, s"\n$plan")
+    val times = merged.collect().map(_.getAs[Timestamp]("time").getTime).toSeq
+    assert(times.size === 50 * k && times === times.sorted)
   }
 }
